@@ -25,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bigdata_storage_and_proccess_job_data_spark.plans import registry  # noqa: E402
+from bigdata_storage_and_proccess_job_data_spark.plans import lint, registry  # noqa: E402
 from bigdata_storage_and_proccess_job_data_spark.session import get_spark  # noqa: E402
 
 
@@ -81,36 +81,6 @@ def main() -> None:
     bench_probes.ensure_layouts(spark, orig_sf_dir)
     bench_probes.ensure_versioned_table(spark, orig_sf_dir)
     bench_probes.ensure_ivm_state(spark, orig_sf_dir)
-
-    def scan_rows(df) -> int:
-        """numOutputRows summed over the file scans of the EXECUTED plan
-        -- rows that survived pushdown/pruning, the scale-behavior figure
-        timings alone can't show. AQE wraps the tree (AdaptiveSparkPlan /
-        QueryStageExec), so the walk descends into the materialized
-        stages; plain collectLeaves() would see un-executed copies."""
-
-        def walk(node, acc: list) -> None:
-            name = node.getClass().getSimpleName()
-            if name == "AdaptiveSparkPlanExec":
-                walk(node.executedPlan(), acc)
-                return
-            if name.endswith("QueryStageExec"):
-                walk(node.plan(), acc)
-                return
-            if "ScanExec" in name:
-                m = node.metrics()
-                if m.contains("numOutputRows"):
-                    acc.append(m.apply("numOutputRows").value())
-            ch = node.children()
-            for i in range(ch.size()):
-                walk(ch.apply(i), acc)
-
-        try:
-            acc: list = []
-            walk(df._jdf.queryExecution().executedPlan(), acc)
-            return int(sum(acc))
-        except Exception:
-            return -1  # metrics are best-effort; never fail the bench
 
     # registered headline queries + bench-only probes (data-skipping
     # point lookup -- not in the registry, see plans/bench_probes.py).
@@ -174,12 +144,20 @@ def main() -> None:
             df.collect()
 
     # untimed metrics pass: a noop WRITE runs its own query execution, so
-    # scan metrics only populate on a DataFrame-owned action
+    # scan metrics only populate on a DataFrame-owned action. rows_read is
+    # numOutputRows summed over the executed plan's file scans -- rows
+    # that survived pushdown/pruning; -1 when the metrics can't be read
+    # (best-effort, never fails the bench)
     rows_read: dict[str, int] = {}
     for name, fn in runnable.items():
         df = fn(spark, sf_dir)
         force_metrics(df)
-        rows_read[name] = scan_rows(df)
+        try:
+            rows_read[name] = sum(
+                e["rows_read"] or 0 for e in lint.scan_report(df)
+            )
+        except Exception:
+            rows_read[name] = -1
 
     timings = {
         name: round(statistics.median(ts), 3) for name, ts in samples.items()

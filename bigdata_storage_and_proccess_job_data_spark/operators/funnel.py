@@ -349,12 +349,11 @@ def retention_matrix(
     period, tracked across subsequent periods -- the standard
     growth-analytics readout next to funnel_counts/sessionize. The
     operator-library generalization of the former cohort_retention
-    query (SIGNUP-anchored weekly counts, single-scan window form --
-    retired r10 into this operator's registered retention_matrix
-    query; the coverage-merge record lives in plans/registry.py
-    RETIRED): this one anchors on first activity of any
-    kind, parameterizes the calendar grain, and emits the retention
-    RATIO against broadcast cohort sizes. Returns
+    query (SIGNUP-anchored weekly counts, single-scan window form,
+    merged into this operator's registered retention_matrix query):
+    this one anchors on first activity of any kind, parameterizes the
+    calendar grain, and emits the retention RATIO against broadcast
+    cohort sizes. Returns
     (cohort, period_offset, n_users, retention) where retention =
     active users at the offset / cohort size (offset 0 is 1.0 by
     construction; a cohort-period pair with no activity simply has no

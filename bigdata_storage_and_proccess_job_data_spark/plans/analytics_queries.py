@@ -64,21 +64,6 @@ def segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Rollup (hierarchical subtotals)
-# ---------------------------------------------------------------------------
-# region_rollup RETIRED r14 (registry.RETIRED["region_rollup"], the R14
-# ledger's balanced_shards slot): ROLLUP's grouping-set expansion
-# (Expand + hash agg + grouping-id NULL levels) stays plan-and-value
-# hash-checked every rotation by cube_segment_priority (CUBE strictly
-# contains the ROLLUP levels) and grouping_sets_mix (the explicit
-# GROUPING SETS Expand surface), and the broadcast dim-chain join by
-# sql_surface_nation_sales / nation_revenue_share. The exact
-# ROLLUP(region, country) shape stays value-tested in
-# tests/test_analytics.py:test_rollup_has_subtotals_and_grand_total.
-# The query was inline -- no operator code removed.
-
-
-# ---------------------------------------------------------------------------
 # Distinct aggregate
 # ---------------------------------------------------------------------------
 @register(
@@ -570,10 +555,6 @@ def cube_segment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Exact WEIGHTED quantile per key (the weighted form Spark SQL lacks)
-# RETIRED r10 (registry.RETIRED["median_metrics"]): the exact
-# interpolated percentile family (F.median / F.percentile ==
-# quantile_cont) stays driver-checked through category_percentiles'
-# oracle; this slot now rows the weighted left-continuous form.
 # ---------------------------------------------------------------------------
 @register(
     "weighted_quantile",
@@ -619,11 +600,6 @@ def weighted_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # RFM customer segmentation (exact skew-free ntiles + rule-table labels)
-# RETIRED r10 (registry.RETIRED["customer_value_ranks"]): the
-# customer-value ranking readout moved to rfm_scores, whose exact
-# two-phase ceil-rank scores equal window ntile under the same total
-# order; the ntile/percent_rank/cume_dist built-ins keep full DuckDB
-# parity in tests/test_analytics.py::test_rank_family_window_parity.
 # ---------------------------------------------------------------------------
 @register(
     "rfm_scores",
@@ -667,9 +643,8 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation of event users (operators/aggregates.py:
     rfm_scores): recency/frequency/monetary per user, each scored 1..5
     by EXACT population quintile computed with the two-phase skew-free
-    global_row_number (no single-task window -- the retired
-    customer_value_ranks deliberately exercised the single-reducer
-    global-window form; this is the shape you actually run at 100 TB),
+    global_row_number (no single-task window -- the shape you actually
+    run at 100 TB),
     plus the classic rule-table segment label. Ties break on the user
     id, so the scoring is bit-reproducible and engine-replayable."""
     from bigdata_storage_and_proccess_job_data_spark.operators import (
@@ -786,12 +761,7 @@ def range_join_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Model-eval gate: confusion counts + precision/recall/F1 (promoted r13;
-# small_quantity_revenue RETIRED the same round -- the correlated-
-# scalar-subquery family keeps priority_with_late_lines' driver row and
-# the Q17 query text keeps its decorrelation plan pin + full DuckDB
-# value parity in tests/test_plans.py::test_correlated_scalar_subquery
-# -- see registry.RETIRED["small_quantity_revenue"])
+# Model-eval gate: confusion counts + precision/recall/F1
 # ---------------------------------------------------------------------------
 @register(
     "classification_report",
@@ -841,9 +811,8 @@ def classification_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional hash aggregation per key (tp/fp/fn/tn as sibling
     CASE-gated sums); degenerate slices report NULL, not 0 (no predicted
     positives -> precision NULL), and the oracle recomputes every metric
-    from the same counts. Oracle lifted verbatim from the parity test
-    that guarded this surface since r11
-    (tests/test_mining.py:test_classification_report_pins_and_parity)."""
+    from the same counts. Oracle lifted verbatim from
+    tests/test_mining.py:test_classification_report_pins_and_parity."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -959,14 +928,6 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# setop_except RETIRED r11 (registry.RETIRED["setop_except"]): its
-# EXCEPT shape is table_diff's removed-status row-for-row; the promoted
-# table_diff query now carries the family's driver row, and
-# setop_intersect keeps the set-op family's other row.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
 # Skewed-key aggregation: salted two-phase (the agg-side skew fix)
 # ---------------------------------------------------------------------------
 @register(
@@ -1014,12 +975,7 @@ def skewed_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Interval coalescing: gaps-and-islands merge (promoted r13;
-# interval_overlap_pairs RETIRED the same round -- pairwise overlap via
-# the identical bin-and-verify machinery stays driver-rowed by
-# range_join_incidents every rotation, and interval_overlap_join keeps
-# its unit + plan-pin tests -- see
-# registry.RETIRED["interval_overlap_pairs"])
+# Interval coalescing: gaps-and-islands merge
 # ---------------------------------------------------------------------------
 @register(
     "merge_intervals",
@@ -1065,9 +1021,8 @@ def merge_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     island via the running-max-of-prior-ends window, disjoint spans stay
     apart -- the span-consolidation step duplicate_ngram_spans' excision
     pipeline wants. One keyed sort-window pass + one hash agg per
-    island; no join, no self-pairing. Oracle lifted verbatim from the
-    parity test that guarded this surface since r11
-    (tests/test_joins.py:test_merge_intervals_islands_and_parity)."""
+    island; no join, no self-pairing. Oracle lifted verbatim from
+    tests/test_joins.py:test_merge_intervals_islands_and_parity."""
     from bigdata_storage_and_proccess_job_data_spark.operators import rangejoin
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1089,11 +1044,6 @@ def merge_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Hot-key split join (known hot keys broadcast; fact rows never shuffle)
-# RETIRED r10 (registry.RETIRED["null_skew_enriched"]): the skew-join
-# family's driver row moved to this query -- same module
-# (operators/joins.py), the general known-hot-value form of the NULL
-# special case; null_skew_left_join keeps its plain-join-equality unit
-# tests.
 # ---------------------------------------------------------------------------
 @register(
     "hot_key_split_join",
@@ -1250,18 +1200,6 @@ def grouping_sets_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Semi join (EXISTS)
-# ---------------------------------------------------------------------------
-# urgent_customers_semi RETIRED r12
-# (registry.RETIRED["urgent_customers_semi"]): the EXISTS/left-semi
-# membership shape keeps two driver rows (decontaminated_train,
-# hard_negatives) and the lint sweep's left-semi plan pin; the slot
-# rows the promoted fleiss_kappa (the labeling-QA family's
-# multi-rater agreement gate), whose kept-items semi join exercises
-# the same plan shape under an oracle hash every round.
-
-
-# ---------------------------------------------------------------------------
 # Window first/last/nth value (full-frame analytics)
 # ---------------------------------------------------------------------------
 @register(
@@ -1304,11 +1242,7 @@ def order_window_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Data quality: cross-table FK audit (promoted r11; dq_orders_report
-# RETIRED the same round -- registry.RETIRED["dq_orders_report"]: the
-# single-table expectation_report bundle's null/range/dup rules are
-# sub-expressions of this audit's, and the operator keeps its own
-# oracle-grade unit test)
+# Data quality: cross-table FK audit
 # ---------------------------------------------------------------------------
 @register(
     "fk_integrity_report",
@@ -1352,9 +1286,8 @@ def fk_integrity_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fk_integrity_report) on orders -> customer with deterministic
     planted defects: every 7th order's custkey shifted out of range
     (orphans) and every 13th NULLed (excused missingness) -- the
-    join-health check the retired single-table dq_orders_report could
-    not make. Scale shape: one fact scan projected to the fk,
-    left-joined against the DISTINCT dim key set (one shuffle), one
+    cross-table join-health check. Scale shape: one fact scan
+    projected to the fk, left-joined against the DISTINCT dim key set (one shuffle), one
     conditional-count hash agg per side, the two one-row frames meeting
     in a broadcast join."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
@@ -1381,9 +1314,7 @@ def fk_integrity_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Data quality: snapshot row-diff (promoted r11; setop_except RETIRED
-# the same round -- the diff's removed-status is EXCEPT's shape
-# row-for-row, see registry.RETIRED["setop_except"])
+# Data quality: snapshot row-diff
 # ---------------------------------------------------------------------------
 @register(
     "table_diff",
@@ -1466,13 +1397,8 @@ def table_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Data quality: column-profile drift diff (promoted r13; the
-# column-level sibling of table_diff's row-level diff.
-# snapshot_change_feed RETIRED the same round -- the full-outer
-# null-safe diff classification is table_diff's hash-checked shape
-# row-for-row, and the versioned-table seam (commit/time-travel/MERGE/
-# CDF) keeps tests/test_versioned.py incl. the change_feed pins -- see
-# registry.RETIRED["snapshot_change_feed"])
+# Data quality: column-profile drift diff (the column-level sibling
+# of table_diff's row-level diff)
 # ---------------------------------------------------------------------------
 @register(
     "profile_diff",
@@ -1564,8 +1490,8 @@ def profile_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast in Spark -- the SMJ inputs are column-count-sized, so
     the sort is free). flags flatten to CSV for the driver's scalar
     hash. Plan pinned in test_r13_promoted_query_plan_pins. Oracle
-    lifted verbatim from the parity test that guarded this surface since
-    r11 (tests/test_mining.py:test_profile_diff_statuses_and_parity)."""
+    lifted verbatim from
+    tests/test_mining.py:test_profile_diff_statuses_and_parity."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1641,11 +1567,6 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Cohort retention matrix: first-activity month x month offset
-# RETIRED r10 (registry.RETIRED["cohort_retention"]): the signup-
-# anchored weekly special case was subsumed by this query's operator
-# (funnel.retention_matrix -- the relation both docstrings had
-# cross-referenced since r9); its single-scan conditional-min-window
-# form stays unit-covered by the funnel test file.
 # ---------------------------------------------------------------------------
 @register(
     "retention_matrix",
@@ -1678,9 +1599,9 @@ def retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention_matrix): users grouped by their first-activity day,
     counted in every later day they show any event, with the retention
     ratio against broadcast cohort sizes -- the growth readout
-    generalizing the retired signup-anchored cohort_retention (r10
-    coverage merge). Day grain because the fixture's events span one
-    month -- coarser grains collapse the matrix to a near-single cell;
+    generalizing the former signup-anchored cohort_retention query.
+    Day grain because the fixture's events span one month -- coarser
+    grains collapse the matrix to a near-single cell;
     the week-grain and month-offset forms keep full DuckDB parity in
     tests/test_ranking_funnel.py. Scale shape: one (user, day)
     distinct (the value is its own salt), one min-per-user hash agg,
@@ -1695,30 +1616,6 @@ def retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_users",
         stable_round(F.col("retention"), 6).alias("retention"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Path analysis: top 3-step event sequences
-# ---------------------------------------------------------------------------
-# event_paths_top RETIRED r12 (registry.RETIRED["event_paths_top"]):
-# its plurality window (count-desc / value-asc row_number winner) is
-# exactly the promoted consensus_labels' winner window, hash-checked
-# every round that query rows; the lead-window sequence shape stays
-# driver-checked by dedup_within_delay / event_gaps /
-# view_click_attribution and the count-then-TakeOrdered top-k by
-# topk_per_group / unigram_surprisal. The query was inline (lead +
-# groupBy + limit) -- no operator code removed.
-
-
-# ---------------------------------------------------------------------------
-# Funnel latency: time-to-convert stats for funnel completers
-# ---------------------------------------------------------------------------
-# funnel_latency RETIRED r11 (registry.RETIRED["funnel_latency"]): its
-# time-to-convert gap arithmetic is event_gaps' hash-checked shape, and
-# the funnel population stays driver-checked by
-# funnel_view_click_purchase + view_click_attribution; the slot rows
-# the promoted bh_adjust (the experiment family's missing
-# multiple-testing control). funnel.funnel_times keeps its unit tests.
 
 
 # ---------------------------------------------------------------------------
@@ -1765,22 +1662,11 @@ def _line_uid_long() -> "F.Column":
     # never collides with another line): COUNT(DISTINCT) over an
     # injective image is the identical number, and the skew twins'
     # distinct shuffle moves 8-byte longs instead of ~10-char strings
-    # -- the guide's "narrower types" lever (r14; ~2x fewer exchange
+    # -- the guide's "narrower types" lever (~2x fewer exchange
     # bytes AND long-keyed hash aggs instead of string-keyed). The
     # string form stays for kmv_zipf_build, whose md5-keyed sketch
     # values are defined over the string uid.
     return F.col("l_orderkey") * 8 + F.col("l_linenumber")
-
-
-# skew_distinct_naive RETIRED r14 (registry.RETIRED
-# ["skew_distinct_naive"], the R14 ledger's join_size_report slot): its
-# oracle was BYTE-IDENTICAL to skew_distinct_spread's
-# (_SKEW_DISTINCT_ORACLE above is shared), so the exact distinct counts
-# stay hash-checked every time the spread twin rows. The naive/
-# optimized MEASURED-TWIN convention survives the retirement: the naive
-# probe moved to plans/bench_probes.py (bench-only, the point_lookup
-# precedent) in the same commit, still benched under the same
-# "skew_distinct_naive" entry name so BENCH history stays comparable.
 
 
 @register(
@@ -1809,8 +1695,7 @@ def skew_distinct_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Join planning: exact join-size + hot-key-share pre-flight -- promoted
-# r14 (the pinned R14 ledger, VERDICT r13 #1)
+# Join planning: exact join-size + hot-key-share pre-flight
 # ---------------------------------------------------------------------------
 @register(
     "join_size_report",
@@ -1892,13 +1777,3 @@ def join_size_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_key_out",
         stable_round(F.col("top_share"), 8).alias("top_share"),
     )
-
-
-# ---------------------------------------------------------------------------
-# RETIRED r9 (registry.RETIRED["zipf_key_skew"]): same operator
-# (aggregates.key_skew_report) and oracle algebra as the registered
-# key_skew_report query -- only the key expression differed. The Zipf
-# regime stays measured by the skew_distinct_naive/spread headline
-# bench pair (identical _zipf_company key, exact oracle) and the
-# heavy_hitters MEGACORP test. Operator code unchanged.
-# ---------------------------------------------------------------------------

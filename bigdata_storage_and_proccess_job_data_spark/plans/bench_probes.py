@@ -1,4 +1,4 @@
-"""Bench-only data-skipping probes (VERDICT r5 #8).
+"""Bench-only data-skipping probes.
 
 These run in bench.py alongside the registered headline queries but are
 NOT in the query registry: the registry sits at its 100-query ceiling
@@ -186,7 +186,7 @@ def ensure_versioned_table(spark: SparkSession, sf_dir: str) -> str:
 
         with open(bloom_path) as fh:
             _payload = json.load(fh)
-        # a legacy fixed-m manifest (r7) saturates at bench scale --
+        # a legacy fixed-m manifest saturates at bench scale --
         # rebuild with per-file sizing; per-file manifests are kept
         needs_bloom = _payload.get("m") is not None
     if needs_bloom:
@@ -200,7 +200,7 @@ def version_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned table via manifest pruning (read_version(prune=...)):
     prune_files drops every file whose [min, max] misses the band
     BEFORE Spark sees a path, so the scan opens ~1 of 16 files -- the
-    table format's main scale claim, measured (VERDICT r6 #6).
+    table format's main scale claim, measured.
     bench.py records latency AND rows_read; correctness (pruned ==
     full scan + filter) is pinned in tests/test_versioned.py."""
     from bigdata_storage_and_proccess_job_data_spark.sources import versioned
@@ -283,12 +283,12 @@ def knn_lsh_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kmv_zipf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV sketch build on the hot-key regime that melted the pre-r9
-    formulation: the Zipf company key (MEGACORP = 75% of lineitem) with
+    """KMV sketch build on the hot-key regime that melted the old
+    rank-window formulation: the Zipf company key (MEGACORP = 75% of lineitem) with
     a high-cardinality value (~343k distinct uids in the hot group at
     sf0.1) whose full distinct hash set would all have funneled through
     ONE task's rank-window sort in the old build.
-    The r9 skew-proof build (per-partition partials + exact kmv_merge
+    The skew-proof build (per-partition partials + exact kmv_merge
     fold) spreads that state across every reducer; this probe is the
     measured wall-time record of the shape, the skew_distinct_naive/
     spread precedent. Estimates land on the same frame so the whole
@@ -380,23 +380,19 @@ def cow_delete_fragmented(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def skew_distinct_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The naive half of the skew-distinct MEASURED TWIN, moved here
-    from the registry when it retired r14 (registry.RETIRED
-    ["skew_distinct_naive"]; its oracle was byte-identical to the
-    still-registered skew_distinct_spread's). Exact distinct-line-uid
-    count per Zipf company, written the way users write it:
+    """The naive half of the skew-distinct MEASURED TWIN, bench-only
+    because its oracle is byte-identical to the registered
+    skew_distinct_spread's. Exact distinct-line-uid count per Zipf
+    company, written the way users write it:
     groupBy(key).agg(size(collect_set(v))) -- correct, but the hot
     key's every distinct value funnels through ONE reducer's set
-    buffer. Benched under the same entry name as before so
-    BENCH_r{{N}}.json history stays comparable; the wall-time delta vs
-    skew_distinct_spread is the README's skew-machinery number
-    (VERDICT r4 #6). At 100 TB this shape is an OOM -- kept as the
-    measured baseline only. r14: both twins take the uid as the packed
+    buffer. The wall-time delta vs skew_distinct_spread is the README's
+    skew-machinery number. At 100 TB this shape is an OOM -- kept as
+    the measured baseline only. Both twins take the uid as the packed
     long (_line_uid_long) so the naive/spread delta stays an
-    apples-to-apples algorithm comparison after the spread side's
-    narrower-types rewrite; the counts are unchanged (injective
-    image), pinned by test_skew_distinct_naive_probe_equals_spread_twin
-    and the shared oracle."""
+    apples-to-apples algorithm comparison; the counts are pinned by
+    test_skew_distinct_naive_probe_equals_spread_twin and the shared
+    oracle."""
     from bigdata_storage_and_proccess_job_data_spark.plans.analytics_queries import (
         _line_uid_long,
         _zipf_company,

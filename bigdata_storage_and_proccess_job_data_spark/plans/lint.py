@@ -89,11 +89,13 @@ def scan_report(df: DataFrame) -> list[dict]:
     filters, the read schema, and (when the plan has run) the
     post-pushdown output row count -- the numbers behind 'did my filter
     reach the scan'. The programmatic twin of eyeballing
-    .explain('formatted'); bench.py records the same rows_read figure.
+    .explain('formatted'); bench.py sums rows_read per query.
 
     Run an action first if you want ``rows_read`` populated (metrics
     are filled by execution); on an un-run plan the counts are None.
-    AQE wrappers are descended like the bench's walker."""
+    AQE wrappers (AdaptiveSparkPlan / QueryStageExec) are descended
+    into the materialized stages; plain collectLeaves() would see
+    un-executed copies."""
     import re
 
     out: list[dict] = []
@@ -107,7 +109,6 @@ def scan_report(df: DataFrame) -> list[dict]:
             walk(node.plan())
             return
         if "ScanExec" in name:
-            text = node.toString().splitlines()[0] if node else ""
             full = node.toString()
             entry = {
                 "node": name,
@@ -141,7 +142,6 @@ def scan_report(df: DataFrame) -> list[dict]:
             except Exception:
                 pass
             out.append(entry)
-            _ = text
         ch = node.children()
         for i in range(ch.size()):
             walk(ch.apply(i))

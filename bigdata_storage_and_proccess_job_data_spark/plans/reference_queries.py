@@ -218,12 +218,6 @@ def dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# F1 + F3: numeric-with-garbage cleaning (regexp_replace + cast)
-# RETIRED r7 (registry.RETIRED["clean_numeric_cast"]): the F1/F3 chain
-# (clean_numeric_string + cast) is a hash-checked sub-expression of
-# company_stats_v1's oracle and the normalize_raw golden tests; the slot
-# funds the r7 promotions (VERDICT r6 #4).
-# ---------------------------------------------------------------------------
 # F2: first-match-wins regex classifier chain
 # ---------------------------------------------------------------------------
 @register(
@@ -338,11 +332,6 @@ def derive_salary_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# F8 variant: table-driven conditional currency conversion
-# RETIRED r7 (registry.RETIRED["currency_convert"]): a strict
-# sub-expression of derive_salary_fields' oracle (VERDICT r6 #4 named
-# it); enrich.convert_currency stays tested in test_domain golden values.
 # ---------------------------------------------------------------------------
 # A3: location stats (multi-key groupBy over a dim snowflake)
 # ---------------------------------------------------------------------------
@@ -666,8 +655,7 @@ def impute_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing values with the global mean of the valid pool. The mean is a
     1-row aggregate cross-joined (broadcast) back -- no driver collect.
 
-    Scan-once (r13, the fix the r12 audit deferred to this window
-    round): the ONE-ROW mean frame is localCheckpointed before the
+    Scan-once: the ONE-ROW mean frame is localCheckpointed before the
     cross join, so the imputation plan scans orders exactly once --
     lazily, the mean subtree re-scanned the base table inside every
     job that consumed the joined frame. The bounded-post-agg rule:
@@ -746,14 +734,3 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round("o_totalprice", 2).alias("price"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# RETIRED r9 (registry.RETIRED["customers_without_orders"]): the plain
-# left-anti join shape stays driver-checked by decontaminated_train
-# (anti-join on the contaminated-id set; test_plans asserts its
-# LeftAnti plan) and the promoted hard_negatives (anti-join before
-# rank); the key-membership complement (left-semi) is pinned by
-# fleiss_kappa's kept-items join since urgent_customers_semi retired
-# (r12).
-# ---------------------------------------------------------------------------

@@ -29,454 +29,11 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QueryDef"] = {}
 
-# Registry-saturation mechanics (VERDICT r5 #2). 100 registered queries is
-# the HARD ceiling: the driver writes rows for exactly the first 50
-# registry entries per round, and the two-round coverage rule (every
-# query re-rowed within 2 rounds) makes 2 x 50 the most the rotation can
-# carry. Any new registration therefore RETIRES or MERGES an existing
-# query, recorded here: name -> (round retired, where its coverage
-# moved). register() refuses a retired name (a retirement is permanent --
-# resurrecting a name would silently orphan the coverage note), and
-# test_plans.py pins ceiling + partition invariants against this table.
+# The driver contract: the correctness driver checks exactly the first 50
+# entries of queries(), in registry (dict) order, and plans.DRIVER_WINDOW
+# sets them through set_driver_order. MAX_REGISTERED is the hard ceiling
+# on registered queries; register() refuses one more.
 MAX_REGISTERED = 100
-RETIRED: dict[str, dict[str, str]] = {
-    "embedding_norms": {
-        "round": "r6",
-        "replaced_by": "snapshot_change_feed",
-        "coverage": (
-            "per-vector L2 norm / HOF fold: the same norm computation is "
-            "a hash-checked sub-expression of the knn_brute_force, "
-            "embedding_neardup_pairs and hybrid_search oracles (cosine = "
-            "dot / (norm * norm) on both engines); the narrow-projection "
-            "hygiene-scan shape stays exercised by text_stats / "
-            "token_repetition. No operator code was removed -- "
-            "functions/vectors.py norm/dot are unchanged and tested."
-        ),
-    },
-    "media_features_knn": {
-        "round": "r7",
-        "replaced_by": "(window slot freed, VERDICT r6 #3)",
-        "coverage": (
-            "the blake2b+IVF tail is not SQL-expressible, so this row "
-            "was rows-only by construction every round it ran. Unique "
-            "surface covered by: media_features_exact (exact oracle over "
-            "the same binary assembly + Arrow mapInPandas extraction), "
-            "knn_ivf (rows-only row + test_ivf_topk_recall), and "
-            "tests/test_multimodal.py:test_media_features_knn_query_recall, "
-            "which now drives the identical pipeline via _media_knn_lazy. "
-            "Operator code unchanged."
-        ),
-    },
-    "currency_convert": {
-        "round": "r7",
-        "replaced_by": "weighted_take_k",
-        "coverage": (
-            "strict sub-expression of derive_salary_fields' oracle "
-            "(CASE-rate conversion over a broadcast dim; VERDICT r6 #4 "
-            "named the subsumption); enrich.convert_currency keeps its "
-            "test_domain golden-value tests."
-        ),
-    },
-    "clean_numeric_cast": {
-        "round": "r7",
-        "replaced_by": "hashed_doc_vector",
-        "coverage": (
-            "the F1/F3 regexp_replace+cast chain is a hash-checked "
-            "sub-expression of company_stats_v1's oracle pipeline and "
-            "the domain normalize_raw golden tests; "
-            "cleaning.clean_numeric_string unchanged and tested."
-        ),
-    },
-    "sample_deterministic": {
-        "round": "r7",
-        "replaced_by": "cms_point_estimates",
-        "coverage": (
-            "md5-bucket membership sampling is strictly weaker than the "
-            "registered samplers sharing the same md5 coin: "
-            "stratified_sample_k (group-window md5 order, exact oracle) "
-            "and weighted_take_k (A-ES priorities from the identical "
-            "52-bit uniform, exact set parity). "
-            "corpus.deterministic_sample keeps its stability/"
-            "monotonicity tests."
-        ),
-    },
-    "doc_length_histogram": {
-        "round": "r7",
-        "replaced_by": "knn_pq",
-        "coverage": (
-            "fixed-width bucket counting is value_distribution's "
-            "hash-checked shape applied to token_count, itself "
-            "hash-checked inside text_stats and corpus_token_budget; "
-            "corpus.length_histogram keeps its bucket tests."
-        ),
-    },
-    "word_frequencies": {
-        "round": "r8",
-        "replaced_by": "unigram_surprisal",
-        "coverage": (
-            "tokenize -> explode -> hash-agg -> ordered top-V count is "
-            "exactly the FIT stage of unigram_surprisal's oracle (its "
-            "`top` CTE), hash-checked every time that query rows; the "
-            "explode+topk plan shape stays driver-checked by "
-            "chunk_documents and lang_distribution. No operator code "
-            "removed (functions/text.tokens unchanged and tested)."
-        ),
-    },
-    "dedup_exact_docs": {
-        "round": "r8",
-        "replaced_by": "leakage_safe_split",
-        "coverage": (
-            "the md5(lower(trim(text))) content hash and min-doc_id "
-            "keeper rule are a hash-checked sub-expression of "
-            "clean_corpus's oracle (its keeper window), and grouped "
-            "dedup with winners stays driver-checked by dedup_latest / "
-            "dedup_within_delay; operators/dedup.duplicate_groups "
-            "keeps its unit tests."
-        ),
-    },
-    "ngram_jaccard_pairs": {
-        "round": "r9",
-        "replaced_by": "semantic_dedup",
-        "coverage": (
-            "its oracle SQL was BYTE-IDENTICAL to minhash_near_dups' "
-            "(the exact inverted-index bigram-Jaccard pipeline), and "
-            "minhash's LSH output is pinned equal to the exact output "
-            "(tests/test_neardup.py), so the entire result set stays "
-            "hash-checked every time minhash_near_dups rows. "
-            "operators/neardup.jaccard_pairs unchanged, unit-tested, "
-            "and still the verify stage inside minhash_dedup_pairs."
-        ),
-    },
-    "contamination_check": {
-        "round": "r9",
-        "replaced_by": "bootstrap_ci",
-        "coverage": (
-            "the identical corpus.contamination_pairs call (same ngram, "
-            "min_shared, train/bench residue split) is the "
-            "`contaminated` CTE of decontaminated_train's oracle -- the "
-            "pair generation and >= 3 threshold are hash-checked "
-            "through the anti-join result every time that query rows; "
-            "the per-pair n_shared values keep full DuckDB parity in "
-            "tests/test_corpus.py (contamination_pairs + "
-            "contamination_fraction tests). Operator code unchanged."
-        ),
-    },
-    "zipf_key_skew": {
-        "round": "r9",
-        "replaced_by": "cuped_adjust",
-        "coverage": (
-            "same operator (aggregates.key_skew_report) and same oracle "
-            "algebra as the registered key_skew_report query -- only "
-            "the key expression differed (Zipf company vs o_custkey). "
-            "The Zipf-regime behavior stays measured by the "
-            "skew_distinct_naive/skew_distinct_spread headline bench "
-            "pair (identical _zipf_company key, exact oracle) and the "
-            "heavy_hitters MEGACORP test. Operator code unchanged."
-        ),
-    },
-    "customers_without_orders": {
-        "round": "r9",
-        "replaced_by": "hard_negatives",
-        "coverage": (
-            "the left-anti-join shape stays driver-checked twice: "
-            "decontaminated_train (anti-join on the contaminated-id "
-            "set) and the promoted hard_negatives (anti-join BEFORE "
-            "rank on (query, neighbor) pairs); the key-membership "
-            "complement is urgent_customers_semi's hash-checked twin. "
-            "test_plans' LeftAnti plan assert now reads "
-            "decontaminated_train's plan. No operator code involved "
-            "(plain DataFrame join)."
-        ),
-    },
-    "cohort_retention": {
-        "round": "r10",
-        "replaced_by": "retention_matrix",
-        "coverage": (
-            "the signup-anchored weekly cohort counts are the special "
-            "case of funnel.retention_matrix (first-activity anchor, "
-            "parameterized grain, adds the retention ratio) -- the "
-            "relation both docstrings have cross-referenced since r9. "
-            "The registered retention_matrix query rows the DAY grain "
-            "(the fixture's events span one month, so coarser grains "
-            "collapse to a near-single cell); the week grain and the "
-            "month-offset calendar arithmetic keep full DuckDB replay "
-            "parity in "
-            "tests/test_ranking_funnel.py::"
-            "test_retention_matrix_hand_pins_and_parity. The retired "
-            "query's one unique piece -- a conditional min over "
-            "signup-typed events inside a user window -- is the same "
-            "min-when window shape hash-checked by dedup_within_delay "
-            "and event_paths_top every round. No operator code "
-            "involved (the query was inline DataFrame composition)."
-        ),
-    },
-    "null_skew_enriched": {
-        "round": "r10",
-        "replaced_by": "hot_key_split_join",
-        "coverage": (
-            "the skew-join family's driver row moved within the same "
-            "module (operators/joins.py) to the general known-hot-key "
-            "split; null_skew_left_join keeps its plain-left-join "
-            "equality tests (tests/test_joins.py: matches_plain, "
-            "same_key_name, collision rejection), and the NULL-key "
-            "routing it special-cases is also the hot_key_split_join "
-            "left-mode path pinned in test_hot_key_split_join_"
-            "duckdb_parity. Operator code unchanged."
-        ),
-    },
-    "median_metrics": {
-        "round": "r10",
-        "replaced_by": "weighted_quantile",
-        "coverage": (
-            "exact interpolated percentiles (F.median / F.percentile "
-            "== DuckDB median / quantile_cont) stay hash-checked every "
-            "round through category_percentiles' oracle (p25/p50/p75 "
-            "on the same lineitem measures) and the MAD pipeline test "
-            "in test_rollup.py; the slot now rows the WEIGHTED "
-            "left-continuous quantile, the form Spark SQL lacks "
-            "entirely. No operator code involved (inline aggregates)."
-        ),
-    },
-    "funnel_latency": {
-        "round": "r11",
-        "replaced_by": "bh_adjust",
-        "coverage": (
-            "one-row time-to-convert stats whose microsecond gap "
-            "arithmetic (unix_micros difference / 1e6) is event_gaps' "
-            "hash-checked shape, and whose funnel population stays "
-            "driver-checked by funnel_view_click_purchase + "
-            "view_click_attribution (the same funnel_times window "
-            "cascade feeds all three); the count/mean/median/max "
-            "readout over a bounded per-user frame is stat_moments' / "
-            "pricing_summary's hash-checked form. funnel.funnel_times "
-            "keeps its unit tests (tests/test_ranking_funnel.py). The "
-            "slot rows bh_adjust -- the experiment family's missing "
-            "multiple-testing control."
-        ),
-    },
-    "key_skew_report": {
-        "round": "r11",
-        "replaced_by": "ks_test",
-        "coverage": (
-            "its max/mean key-count algebra is a strict sub-shape of "
-            "the skew bench pair's oracle (skew_distinct_naive/spread "
-            "share the count-per-key CTE) and the heavy_hitters "
-            "MEGACORP tests; the skew family keeps THREE driver rows "
-            "(skewed_hot_key_agg, skew_distinct_naive, "
-            "skew_distinct_spread) plus the hot_key_split_join row. "
-            "operators/aggregates.key_skew_report is unchanged, "
-            "unit-tested, and still feeds detect-then-rewrite examples. "
-            "The slot rows ks_test -- the binning-free drift gate."
-        ),
-    },
-    "setop_except": {
-        "round": "r11",
-        "replaced_by": "table_diff",
-        "coverage": (
-            "EXCEPT (distinct set difference, planned as left-anti "
-            "after per-side distinct) is table_diff's removed-status "
-            "row-for-row: a key present in old and absent in new is "
-            "exactly the EXCEPT membership, hash-checked every time "
-            "the promoted table_diff rows; setop_intersect keeps the "
-            "set-op family's other driver row and the left-anti plan "
-            "shape stays driver-checked by decontaminated_train and "
-            "hard_negatives. No operator code involved (the query was "
-            "a plain DataFrame.subtract)."
-        ),
-    },
-    "dq_orders_report": {
-        "round": "r11",
-        "replaced_by": "fk_integrity_report",
-        "coverage": (
-            "same quality-gate operator family: the single-table "
-            "expectation_report rule bundle (null / range / duplicate "
-            "counts folded in one conditional-count hash agg) is a "
-            "sub-expression of fk_integrity_report's audit (null-fk, "
-            "dup-pk and null-pk counts use the identical "
-            "sum-of-cast-bool form, hash-checked every time the "
-            "promoted query rows). expectation_report keeps its own "
-            "DuckDB-parity unit tests (tests/test_mining.py) and its "
-            "freshness_report / psi_bins siblings keep theirs."
-        ),
-    },
-    "customer_value_ranks": {
-        "round": "r10",
-        "replaced_by": "rfm_scores",
-        "coverage": (
-            "the customer-value ranking readout moved to rfm_scores, "
-            "whose exact two-phase ceil-rank quintiles equal window "
-            "ntile under the same total order (pinned in "
-            "test_rfm_scores_semantics_and_parity) and which ranks "
-            "skew-free (global_row_number) instead of the retired "
-            "query's deliberate single-reducer global window; the "
-            "ntile/percent_rank/cume_dist built-ins keep full DuckDB "
-            "parity in tests/test_analytics.py::"
-            "test_rank_family_window_parity (the retired oracle moved "
-            "there verbatim). No operator code involved."
-        ),
-    },
-    "event_paths_top": {
-        "round": "r12",
-        "replaced_by": "consensus_labels",
-        "coverage": (
-            "its plurality-per-group window (top path per count with a "
-            "deterministic count-desc/value-asc row_number tiebreak) is "
-            "exactly consensus_labels' winner window, hash-checked "
-            "every time the promoted query rows; the lead-window "
-            "event-sequence shape stays driver-checked by "
-            "dedup_within_delay (lag gaps), event_gaps (lead deltas) "
-            "and view_click_attribution (ordered per-user pairing), "
-            "and the count-then-TakeOrdered top-k plan stays "
-            "driver-checked by topk_per_group / unigram_surprisal. No "
-            "operator code involved (the query was inline lead + "
-            "groupBy + limit)."
-        ),
-    },
-    "urgent_customers_semi": {
-        "round": "r12",
-        "replaced_by": "fleiss_kappa",
-        "coverage": (
-            "EXISTS-as-left-semi membership keeps TWO driver rows "
-            "(decontaminated_train's anti/semi contamination split and "
-            "hard_negatives' anti-before-rank), and the left-semi plan "
-            "shape itself stays pinned by the test_plans lint sweep "
-            "over those rows plus fleiss_kappa's own kept-items semi "
-            "join (cell-vs-kept, hash-checked every time the promoted "
-            "query rows). No operator code involved (the query was a "
-            "plain filter + left_semi join)."
-        ),
-    },
-    "snapshot_change_feed": {
-        "round": "r13",
-        "replaced_by": "profile_diff",
-        "coverage": (
-            "the full-outer null-safe key join + whole-row IS DISTINCT "
-            "FROM change classification is table_diff's hash-checked "
-            "shape row-for-row (both oracles share the FULL OUTER JOIN "
-            "+ struct-inequality form; table_diff stays driver-rowed "
-            "every rotation), and the versioned-table seam the query "
-            "exercised (commit_version / time travel / diff_versions -> "
-            "change_feed / MERGE) keeps the full tests/test_versioned.py "
-            "suite including the change_feed classification pins. "
-            "CORRECTION recorded at execution time: the pinned r12 "
-            "ledger cited an 'orders_merge_upsert' driver row for the "
-            "versioned seam -- no such query was ever registered; the "
-            "seam's coverage is the test suite plus table_diff's "
-            "row-diff shape, as stated here. sources/versioned.py "
-            "unchanged."
-        ),
-    },
-    "interval_overlap_pairs": {
-        "round": "r13",
-        "replaced_by": "merge_intervals",
-        "coverage": (
-            "pairwise interval overlap via bin-and-verify stays "
-            "driver-rowed by range_join_incidents every rotation (the "
-            "two queries share the binning equi-join machinery in "
-            "operators/rangejoin.py -- point-in-span is the same bin "
-            "join with a degenerate probe span), and "
-            "interval_overlap_join keeps its unit tests plus the "
-            "no-nested-loop plan pin "
-            "(tests/test_joins.py). The promoted merge_intervals is "
-            "the islands half of the same interval family with the "
-            "richer oracle (running-max window + island agg)."
-        ),
-    },
-    "small_quantity_revenue": {
-        "round": "r13",
-        "replaced_by": "classification_report",
-        "coverage": (
-            "the correlated-subquery family keeps "
-            "priority_with_late_lines' driver row (correlated EXISTS, "
-            "TPC-H Q4 shape, de-correlated to a left-semi join), and "
-            "the retired Q17 scalar-subquery query text moved VERBATIM "
-            "into tests/test_plans.py::"
-            "test_correlated_scalar_subquery_decorrelates_and_values, "
-            "which now asserts BOTH the decorrelation plan shape (no "
-            "NestedLoop) and full DuckDB value parity every suite run. "
-            "CORRECTION recorded at execution time: the pinned r12 "
-            "ledger described this query as a single-table conditional-"
-            "sum readout -- it was the registry's correlated SCALAR "
-            "subquery row; the retirement stands on the EXISTS row + "
-            "the upgraded oracle-grade test, as stated here. No "
-            "operator code involved (the query was inline spark.sql)."
-        ),
-    },
-    "knn_pq": {
-        "round": "r14",
-        "replaced_by": "knn_ivfpq",
-        "coverage": (
-            "the promoted knn_ivfpq runs the SAME md5 codebooks "
-            "(m=8, n_codes=16, seed=42, scale=0.35) and the same "
-            "ADC scoring on its cell-pruned candidate side, and full "
-            "probe with residual=False degenerates to EXACTLY "
-            "pq_topk_from_codes (tests/test_similarity.py:"
-            "test_ivfpq_full_probe_equals_pq), so the PQ encode + LUT "
-            "sum + rank path stays value-hashed every time knn_ivfpq "
-            "rows. _PQ_TOPK_SQL stays in plans/scale_queries.py as the "
-            "flat-PQ half of the IVF-PQ oracle; the flat-PQ quality "
-            "floor moved to a direct-operator test "
-            "(test_similarity.py:test_pq_quality_and_md5_codebooks). "
-            "encode_pq / pq_topk_from_codes operator code unchanged."
-        ),
-    },
-    "knn_brute_force": {
-        "round": "r14",
-        "replaced_by": "knn_sq8",
-        "coverage": (
-            "its oracle was BYTE-IDENTICAL to knn_arrow's (_KNN_ORACLE "
-            "in plans/scale_queries.py is shared; the "
-            "ngram_jaccard_pairs precedent), so the exact cosine top-5 "
-            "result set stays hash-checked every time knn_arrow rows. "
-            "brute_force_topk itself stays the exact stage INSIDE "
-            "ann_recall's driver row (called directly there) and keeps "
-            "its operator tests. CORRECTION recorded at execution "
-            "time: the pinned r13 ledger also called brute_force_topk "
-            "'the rerank stage of hard_negatives/knn_sq8' -- those "
-            "paths share its broadcast-scorer SHAPE and _rank_topk "
-            "ranking tail but do not call the function; the function-"
-            "level coverage is knn_arrow + ann_recall, as stated here. "
-            "Operator code unchanged."
-        ),
-    },
-    "skew_distinct_naive": {
-        "round": "r14",
-        "replaced_by": "join_size_report",
-        "coverage": (
-            "its oracle was BYTE-IDENTICAL to skew_distinct_spread's "
-            "(_SKEW_DISTINCT_ORACLE in plans/analytics_queries.py is "
-            "shared), so the exact Zipf-key distinct counts stay "
-            "hash-checked every time the spread twin rows. The "
-            "naive/optimized MEASURED-TWIN convention survives: the "
-            "naive probe moved to plans/bench_probes.py in the same "
-            "commit, benched under the same entry name, so "
-            "BENCH_r{N}.json keeps the skew-machinery delta."
-        ),
-    },
-    "region_rollup": {
-        "round": "r14",
-        "replaced_by": "balanced_shards",
-        "coverage": (
-            "ROLLUP's grouping-set expansion (Expand + hash agg + "
-            "grouping-id NULL levels) stays plan-and-value hash-checked "
-            "every rotation by cube_segment_priority (CUBE strictly "
-            "contains the ROLLUP levels of the same two-dim lattice) "
-            "plus grouping_sets_mix (the explicit GROUPING SETS Expand "
-            "surface), and the broadcast dim-chain join by "
-            "sql_surface_nation_sales / nation_revenue_share. "
-            "CORRECTION recorded at execution time: the pinned r13 "
-            "ledger said grouping_sets_mix's sets include 'the rollup "
-            "chain' -- its sets are the two DISJOINT margins "
-            "((segment),(priority)), not the chain; the chain "
-            "containment comes from CUBE, as stated here. The exact "
-            "ROLLUP(region, country) query body moved VERBATIM into "
-            "tests/test_analytics.py:"
-            "test_rollup_has_subtotals_and_grand_total, which keeps "
-            "the subtotal/grand-total value pins every suite run. The "
-            "query was inline -- no operator code removed."
-        ),
-    },
-}
 
 
 @dataclass
@@ -508,16 +65,11 @@ def register(
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        if name in RETIRED:
-            raise ValueError(
-                f"query name {name!r} was retired in {RETIRED[name]['round']}"
-                " -- pick a new name and record the old coverage note"
-            )
         if len(_REGISTRY) >= MAX_REGISTERED:
             raise ValueError(
                 f"registry is at the {MAX_REGISTERED}-query ceiling; "
-                f"registering {name!r} requires retiring or merging an "
-                "existing query first (registry.RETIRED)"
+                f"registering {name!r} requires deleting or merging an "
+                "existing query first"
             )
         _REGISTRY[name] = QueryDef(
             name=name,

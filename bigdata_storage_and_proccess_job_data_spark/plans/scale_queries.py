@@ -46,19 +46,8 @@ def _sql_stopword_hits(words: list[str]) -> str:
     )
 
 
-# ---------------------------------------------------------------------------
-# RETIRED r8 (registry.RETIRED["dedup_exact_docs"]): the md5-of-
-# normalized-text content hash and min-doc_id keeper rule are a
-# hash-checked sub-expression of clean_corpus's oracle (its keeper
-# window: MIN(doc_id) OVER (PARTITION BY md5(lower(trim(text))))), and
-# the grouped dup-count shape stays driver-checked by dedup_latest /
-# duplicate_ngram_spans. operators/dedup.duplicate_groups keeps its
-# unit tests.
-# ---------------------------------------------------------------------------
-
-
-# (leakage_safe_split -- the paired r8 promotion -- is registered in the
-# corpus-sampling section below, after _md5_hash60_sql is defined.)
+# (leakage_safe_split is registered in the corpus-sampling section
+# below, after _md5_hash60_sql is defined.)
 
 
 # ---------------------------------------------------------------------------
@@ -185,16 +174,6 @@ def fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RETIRED r9 (registry.RETIRED["ngram_jaccard_pairs"]): the exact
-# word-bigram Jaccard pipeline's oracle was byte-identical to
-# minhash_near_dups' oracle below, and LSH output == exact output is
-# test-pinned, so the whole result stays hash-checked whenever
-# minhash_near_dups rows. operators/neardup.jaccard_pairs unchanged,
-# unit-tested, and still the verify stage inside minhash_dedup_pairs.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
 # Near-dup: MinHash + LSH candidates (value-checked against the EXACT oracle)
 # ---------------------------------------------------------------------------
 @register(
@@ -249,8 +228,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale). Value-checked against the exact-Jaccard oracle: verify makes
     false positives impossible, and the 16x4 banding bounds the per-pair
     miss probability (see oracle comment), so LSH output == exact output
-    on these corpora (tests/test_neardup.py pins equality; r1 ran this
-    rows-only)."""
+    on these corpora (tests/test_neardup.py pins equality)."""
     from bigdata_storage_and_proccess_job_data_spark.operators import neardup
 
     docs = load_table(spark, sf_dir, "documents")
@@ -336,7 +314,7 @@ _SIMHASH_BITS = " + ".join(
 def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash(64-bit)+banded hamming<=8 near-dup pairs
     (operators/neardup.py:simhash_candidates). Driver-graded with an
-    exact DuckDB oracle (VERDICT r3 #5): deterministic given the token
+    exact DuckDB oracle: deterministic given the token
     hash, which is pinned to md5_hash60 here so both engines compute
     identical signatures; the xxhash64 default stays the scale path and
     its recall vs exact Jaccard is checked in tests/test_neardup.py."""
@@ -389,14 +367,6 @@ _KNN_ORACLE = f"""
     """
 
 
-# knn_brute_force RETIRED r14 (registry.RETIRED["knn_brute_force"],
-# the R14 ledger's knn_sq8 slot): its oracle was BYTE-IDENTICAL to
-# knn_arrow's (_KNN_ORACLE above is shared), so the exact top-5 result
-# set stays hash-checked every time knn_arrow rows; brute_force_topk
-# itself stays the exact stage INSIDE ann_recall's driver row and
-# keeps its operator tests. Operator code unchanged.
-
-
 @register(
     "knn_arrow",
     tags=("similarity", "vector", "pandas-udf"),
@@ -420,7 +390,7 @@ def knn_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Similarity search: random-hyperplane LSH top-k (exact cross-engine oracle)
 # ---------------------------------------------------------------------------
-# The oracle RE-DERIVES the hyperplanes from md5 (VERDICT r5 #3; same
+# The oracle RE-DERIVES the hyperplanes from md5 (same
 # bridge as simhash's md5_hash60): component (t, p, d) is
 # md5_hash60("hp:{seed}:{t}:{p}:{d}") / 2^59 - 1 -- a power-of-two scale,
 # so the int->double rounding is bit-identical on both engines -- then
@@ -484,10 +454,7 @@ _LSH_TOPK_CTES = f"""
 @register(
     "knn_lsh",
     tags=("similarity", "vector", "join"),
-    # headline since late r7: the ANN stack is the similarity-search
-    # north star; this puts a measured sf0.1 number on it every round.
-    # Registration METADATA only -- the query body/plan is unchanged
-    # (holds its green r6 row), so no window displacement applies.
+    # headline: the ANN stack is the similarity-search north star
     headline=True,
     oracle=f"""
         WITH {_LSH_TOPK_CTES}
@@ -497,8 +464,8 @@ _LSH_TOPK_CTES = f"""
 def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via multi-table random-hyperplane LSH (8 tables
     x 4 planes, operators/similarity.py:lsh_topk): bucket equi-join
-    instead of cross product. Driver-graded with an EXACT DuckDB oracle
-    since r6 (VERDICT r5 #3): hyperplanes are md5-derived on both
+    instead of cross product. Driver-graded with an EXACT DuckDB
+    oracle: hyperplanes are md5-derived on both
     engines (similarity.md5_hyperplanes <-> _LSH_PLANE_COMPONENT), so
     the oracle independently recomputes bucketing, candidates, cosine
     and rank. Recall vs knn_brute_force measured in
@@ -510,10 +477,9 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Similarity search: IVF coarse-quantizer top-k (exact oracle since r8)
+# Similarity search: IVF coarse-quantizer top-k (exact oracle)
 # ---------------------------------------------------------------------------
-# The knn_pq graduation applied to IVF (r7 verdict #5, closing the
-# registry's last no_oracle row): the k-means FIT is the one step SQL
+# The md5-codebook trick applied to IVF: the k-means FIT is the one step SQL
 # can't reproduce, so the registered query pins the coarse quantizer to
 # md5-derived centroids (similarity.md5_centroids) and the oracle
 # rebuilds them, re-runs cell assignment (argmax dot; Spark's array_max
@@ -666,19 +632,7 @@ def embedding_neardup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Token explode: corpus word frequencies (lateral-view shape)
-# RETIRED r8 (registry.RETIRED["word_frequencies"]): the tokenize ->
-# explode -> hash-agg -> top-V count is EXACTLY the fit stage of
-# unigram_surprisal's registered oracle (its `top` CTE: token counts
-# ordered c DESC, t ASC, LIMIT V) -- hash-checked there every time the
-# query rows; the explode+topk plan shape also stays pinned by
-# chunk_documents and lang_distribution. No operator code removed.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Corpus quality: unigram LM surprisal (CCNet shape) -- promoted r8
-# (VERDICT r7 #4, the builder's own R8 promotion note)
+# Corpus quality: unigram LM surprisal (CCNet shape)
 # ---------------------------------------------------------------------------
 @register(
     "unigram_surprisal",
@@ -797,7 +751,7 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation (connected_components) -> (id, component) cluster
     assignment, component = min doc_id of the cluster. Value-checked:
     the oracle rebuilds the exact pair graph in SQL and takes its
-    transitive closure with a recursive CTE (r1 ran this rows-only);
+    transitive closure with a recursive CTE;
     exact-dup subsets also proven fully merged in
     tests/test_neardup.py."""
     from bigdata_storage_and_proccess_job_data_spark.operators import neardup
@@ -863,16 +817,6 @@ def _media_exact_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.filter(F.col("media_id") < 10), feats,
         id_col="media_id", vec_col="embedding", k=3,
     )
-
-
-# media_features_knn RETIRED r7 (registry.RETIRED["media_features_knn"],
-# VERDICT r6 #3): the blake2b + IVF tail is not SQL-expressible, so the
-# registration spent a driver window slot on a guaranteed rows-only row
-# every other round while its unique surface stayed covered by
-# media_features_exact (exact oracle over the same binary assembly +
-# Arrow extraction), knn_ivf (exact md5-centroid oracle since r8) + recall tests, and
-# tests/test_multimodal.py's recall gate, which now drives the pipeline
-# via _media_knn_lazy directly (the operator code is unchanged).
 
 
 # ---------------------------------------------------------------------------
@@ -946,7 +890,7 @@ _MEDIA_SIM = (
     """,
 )
 def media_features_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal pipeline, value-checked end-to-end (VERDICT r3 #5):
+    """Multimodal pipeline, value-checked end-to-end:
     documents -> 10-byte fake-codec header + utf8 payload as BINARY ->
     md5_features via Arrow-batched mapInPandas (the same plumbing as
     media_features_knn; only the hash inside the stub differs) -> exact
@@ -1047,28 +991,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RETIRED r9 (registry.RETIRED["contamination_check"]): the identical
-# corpus.contamination_pairs call (ngram=5, min_shared=3, % 20 residue
-# split) is the `contaminated` CTE of decontaminated_train's oracle --
-# pair generation and threshold stay hash-checked through the anti-join
-# every time that query rows; per-pair n_shared keeps full DuckDB
-# parity in tests/test_corpus.py. Operator code unchanged.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Corpus prep: deterministic hash sampling
-# RETIRED r7 (registry.RETIRED["sample_deterministic"]): the md5-bucket
-# membership filter is strictly weaker than the two A-ES/importance
-# sampling queries that use the same coin (stratified_sample_k in the
-# registry since r4, weighted_take_k promoted r7 with exact set parity);
-# corpus.deterministic_sample keeps its stability/monotonicity tests.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Corpus splitting: leakage-safe train/val/test -- promoted r8
-# (VERDICT r7 #4, the builder's own R8 promotion note)
+# Corpus splitting: leakage-safe train/val/test
 # ---------------------------------------------------------------------------
 @register(
     "leakage_safe_split",
@@ -1107,12 +1030,6 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "split")
 
 
-# ---------------------------------------------------------------------------
-# Corpus prep: token-length histogram
-# RETIRED r7 (registry.RETIRED["doc_length_histogram"]): fixed-width
-# bucket counting is the value_distribution shape (hash-checked every
-# window) applied to token_count, itself hash-checked inside text_stats /
-# corpus_token_budget; corpus.length_histogram keeps its bucket tests.
 # ---------------------------------------------------------------------------
 # Exact duplicated-substring spans (n-gram granularity)
 # ---------------------------------------------------------------------------
@@ -1237,33 +1154,6 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percentile("n_tokens", F.lit(0.5)), 4
         ).alias("p50_tokens"),
     )
-
-
-# ---------------------------------------------------------------------------
-# RETIRED r6: embedding_norms (per-vector L2 norm / max|x| hygiene scan).
-# The registry sits at the 100-query ceiling (registry.MAX_REGISTERED);
-# registering snapshot_change_feed required a retirement, and this was
-# the query whose checked surface is most completely subsumed elsewhere:
-# the identical norm computation (sequential fold on Spark,
-# list_dot_product in DuckDB) is a hash-checked sub-expression of the
-# knn_brute_force / embedding_neardup_pairs / hybrid_search oracles, and
-# functions/vectors.py itself is unchanged and unit-tested. Full record:
-# registry.RETIRED["embedding_norms"]; the name is permanently reserved.
-
-
-# ---------------------------------------------------------------------------
-# RETIRED r13: snapshot_change_feed (versioned-table CDF change feed).
-# Registering profile_diff at the 100-query ceiling required a
-# retirement; the full record is
-# registry.RETIRED["snapshot_change_feed"] and the name is permanently
-# reserved. Coverage: change_feed's full-outer null-safe key join +
-# whole-row IS DISTINCT FROM classification is table_diff's
-# hash-checked shape row-for-row (both oracles share the FULL OUTER
-# JOIN + struct-inequality form; table_diff stays driver-rowed every
-# rotation), and the versioned-table seam itself (commit_version /
-# time travel / MERGE / diff_versions -> change_feed) keeps the full
-# tests/test_versioned.py suite. sources/versioned.py unchanged.
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------
@@ -1565,18 +1455,7 @@ def stratified_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# key_skew_report RETIRED r11 (registry.RETIRED["key_skew_report"]):
-# its max/mean algebra is a strict sub-shape of the skew bench pair's
-# oracle and the heavy_hitters tests; the skew family keeps
-# skewed_hot_key_agg + skew_distinct_naive/spread driver rows, and the
-# slot rows the promoted ks_test (the binning-free drift gate).
-# operators/aggregates.key_skew_report is unchanged and unit-tested.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Experiment readouts: Benjamini-Hochberg FDR control (promoted r11;
-# funnel_latency retired -- see registry.RETIRED["funnel_latency"])
+# Experiment readouts: Benjamini-Hochberg FDR control
 # ---------------------------------------------------------------------------
 @register(
     "bh_adjust",
@@ -1637,8 +1516,7 @@ def bh_adjust_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Drift gate: exact two-sample Kolmogorov-Smirnov (promoted r11;
-# key_skew_report retired -- see the note above)
+# Drift gate: exact two-sample Kolmogorov-Smirnov
 # ---------------------------------------------------------------------------
 @register(
     "ks_test",
@@ -1688,7 +1566,7 @@ def ks_test_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     even- and odd-orderkey halves of orders' o_totalprice
     (operators/aggregates.py:ks_test) -- the binning-free drift gate
     beside psi_bins, exact at every distinct value with ties
-    pre-aggregated. Runs under the SAFE DEFAULT quantize=6 (r11): a
+    pre-aggregated. Runs under the SAFE DEFAULT quantize=6: a
     no-op on 2-decimal prices, so the oracle needs no rounding CTE,
     while a truly continuous column would have its per-key window
     bounded at the 1e-6 grid. Scale shape: one hash agg per side to
@@ -1710,11 +1588,7 @@ def ks_test_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Labeling QA: majority-vote consensus labels (promoted r12;
-# event_paths_top RETIRED the same round --
-# registry.RETIRED["event_paths_top"]: its plurality window is exactly
-# this winner window, and its lead-sequence / top-k shapes keep their
-# own driver rows)
+# Labeling QA: majority-vote consensus labels
 # ---------------------------------------------------------------------------
 @register(
     "consensus_labels",
@@ -1771,10 +1645,7 @@ def consensus_labels_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Labeling QA: Fleiss' kappa multi-rater agreement (promoted r12;
-# urgent_customers_semi RETIRED the same round --
-# registry.RETIRED["urgent_customers_semi"]: the left-semi shape keeps
-# two driver rows and this query's kept-items semi join)
+# Labeling QA: Fleiss' kappa multi-rater agreement
 # ---------------------------------------------------------------------------
 @register(
     "fleiss_kappa",
@@ -2102,27 +1973,12 @@ def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the hyperplane-LSH index (knn_lsh's path) against the
     exact brute-force top-5 -- the registered, driver-visible form of
-    the recall gates in tests/test_similarity.py
-    (VERDICT r4 #7), and since r6 backed by an EXACT DuckDB oracle
-    (VERDICT r5 #3): md5-derived hyperplanes make the LSH side
+    the recall gates in tests/test_similarity.py, backed by an EXACT
+    DuckDB oracle: md5-derived hyperplanes make the LSH side
     SQL-recomputable, so the oracle independently rebuilds BOTH the
-    exact top-5 and the LSH top-5 and recomputes the recall join.
-
-    Scope note (r6 displacement, documented): the r5 form also emitted
-    an IVF row, rows-only because iterative k-means (numpy pairwise-sum
-    means) is not reproducible in SQL. That row moved OUT of this query
-    so the whole result is hash-matched; IVF quality stays covered by
-    tests/test_similarity.py:test_ivf_topk_recall (floor 0.5) plus
-    knn_ivf's driver row (rows-only then; exact md5-centroid oracle since r8).
-
-    r7 resolution of VERDICT r6 #5 (driver-visible PQ quality): rather
-    than re-opening this query with a rows-only ivfpq row -- the driver
-    records no VALUES for rows-only queries, so the recall number would
-    still be invisible -- the knn_pq registration gives the PQ/ADC path
-    a FULL hash-matched top-k via md5-derived codebooks
-    (similarity.md5_codebooks), strictly stronger than a recall scalar.
-    Trained IVF-PQ quality (the k-means step SQL can't reproduce) stays
-    pinned by the test_similarity recall/residual-accuracy floors.
+    exact top-5 and the LSH top-5 and recomputes the recall join. IVF
+    and trained IVF-PQ quality (the k-means step SQL can't reproduce)
+    stay pinned by the test_similarity recall/residual-accuracy floors.
 
     Computed with ONE left join + avg -- the exact set is 20 queries x
     5 neighbors, so the join is trivially broadcast; no driver math."""
@@ -2152,7 +2008,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Similarity search: PQ/ADC top-k with md5-derived codebooks (exact oracle)
 # ---------------------------------------------------------------------------
-# The PQ counterpart of knn_lsh's graduation (VERDICT r6 #5): k-means-fit
+# The PQ counterpart of knn_lsh's md5 hyperplanes: k-means-fit
 # codebooks are not SQL-reproducible, but the ENCODE + ADC machinery is,
 # once the codebooks are md5-derived (similarity.md5_codebooks). The
 # oracle rebuilds the identical centroids from md5, re-runs nearest-code
@@ -2224,22 +2080,10 @@ _PQ_TOPK_SQL = f"""
     """
 
 
-# knn_pq RETIRED r14 (registry.RETIRED["knn_pq"], the R14 ledger's
-# knn_ivfpq slot): knn_ivfpq below runs the same md5 codebooks and the
-# same ADC scoring on the cell-pruned candidate side -- and full probe
-# with residual=False degenerates to EXACTLY pq_topk_from_codes
-# (tests/test_similarity.py:test_ivfpq_full_probe_equals_pq) -- so the
-# PQ search path stays value-hashed every time knn_ivfpq rows.
-# _PQ_TOPK_SQL above stays: it is the flat-PQ half of the IVF-PQ
-# oracle's CTE chain and encode_pq/pq_topk_from_codes keep their own
-# full parity tests. Operator code unchanged.
-
-
 # ---------------------------------------------------------------------------
-# Similarity search: IVF-pruned PQ/ADC top-k -- promoted r14 (the pinned
-# R14 ledger, VERDICT r13 #1). The ANN ladder's top rung: the md5
-# coarse quantizer that graduated knn_ivf composes with the md5
-# codebooks that graduated knn_pq, so the oracle independently rebuilds
+# Similarity search: IVF-pruned PQ/ADC top-k. The ANN ladder's top
+# rung: knn_ivf's md5 coarse quantizer composes with the md5 PQ
+# codebooks, so the oracle independently rebuilds
 # BOTH models and replays cell assignment (encode_ivfpq's np.argmax
 # tiebreak = LOWEST cell id -- unlike ivf_topk's array_max HIGHEST; the
 # SQL mirrors the implementation it checks), probe ranking, PQ
@@ -2375,8 +2219,8 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Similarity search: int8 scalar-quantized rerank tier -- promoted r14
-# (the pinned R14 ledger, VERDICT r13 #1). The storage tier between raw
+# Similarity search: int8 scalar-quantized rerank tier. The storage
+# tier between raw
 # vectors and PQ codes: per-row absmax-symmetric int8 with no trained
 # artifact, so the ENTIRE path -- normalize, scale, floor-grid encode,
 # dequantize, cosine, rank -- replays in SQL with no md5 bridge needed.
@@ -2441,7 +2285,7 @@ def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes; queries score against the DEQUANTIZED codes -- the
     compressed brute-force rerank reading ~1 byte per component where
     the raw scan reads 8. Same deliberate broadcast exact-scoring
-    baseline class as the retired knn_brute_force (the documented BNLJ
+    baseline class as brute_force_topk (the documented BNLJ
     waiver): this IS the rerank stage that runs after the pruned
     lsh/ivf/pq candidate passes. Everything is native expressions
     inside whole-stage codegen -- no Python row boundary (plan-pinned).
@@ -2457,7 +2301,7 @@ def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus sampling: exact-k weighted (A-ES) -- promoted r7 (VERDICT r6 #4)
+# Corpus sampling: exact-k weighted (A-ES)
 # ---------------------------------------------------------------------------
 @register(
     "weighted_take_k",
@@ -2504,8 +2348,7 @@ def weighted_take_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus write planning: weight-balanced training shards -- promoted r14
-# (the pinned R14 ledger, VERDICT r13 #1)
+# Corpus write planning: weight-balanced training shards
 # ---------------------------------------------------------------------------
 @register(
     "balanced_shards",
@@ -2550,7 +2393,7 @@ def balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Text -> vector: feature hashing -- promoted r7 (VERDICT r6 #4)
+# Text -> vector: feature hashing
 # ---------------------------------------------------------------------------
 _FEATHASH_CELLS = ", ".join(
     f"COALESCE(list_sum(list_transform(hs, h -> "
@@ -2597,7 +2440,7 @@ def hashed_doc_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output is LONG form -- ``(doc_id, cell, value)`` via ``posexplode``
     -- not an array column: the driver's canonicalizer sorts result
-    cells with pandas and cannot hash list-typed values (r7 err row).
+    cells with pandas and cannot hash list-typed values.
     The wide ``array<double>`` form stays available as
     ``functions.text.hashed_doc_vector`` for the ANN composition path;
     only the driver-facing query reshapes."""
@@ -2613,7 +2456,7 @@ def hashed_doc_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mergeable-sketch surface: count-min point estimates -- promoted r7
+# Mergeable-sketch surface: count-min point estimates
 # ---------------------------------------------------------------------------
 @register(
     "cms_point_estimates",
@@ -2646,8 +2489,7 @@ def hashed_doc_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cms_point_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch build + point lookups as one driver-graded
-    query (operators/aggregates.py:cms_sketch/cms_lookup, VERDICT r6
-    #4): sketch orders by o_custkey into 4x256 md5-hashed cells, then
+    query (operators/aggregates.py:cms_sketch/cms_lookup): sketch orders by o_custkey into 4x256 md5-hashed cells, then
     estimate the order count of customers 1..25 as the min over the 4
     hash rows. The md5-derived hash family is SQL-recomputable (the
     simhash/LSH precedent), so DuckDB rebuilds the identical sketch and
@@ -2666,7 +2508,7 @@ def cms_point_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mixture planning: temperature-smoothed source weights -- promoted r7
+# Mixture planning: temperature-smoothed source weights
 # ---------------------------------------------------------------------------
 @register(
     "temperature_mixture",
@@ -2710,12 +2552,12 @@ def temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Experiment readouts: Poisson-bootstrap CI (promoted r9; VERDICT r8 #3)
+# Experiment readouts: Poisson-bootstrap CI
 # ---------------------------------------------------------------------------
 # The oracle replays the md5 coin, the Poisson(1) CDF step, all 40
 # replicate means (one hash aggregate with sibling weighted sums on both
 # engines) and the nearest-rank picks -- lifted verbatim from the
-# oracle-grade parity test that guarded this surface since r8
+# oracle-grade parity test
 # (tests/test_mining.py:test_bootstrap_ci_poisson_replay_and_sanity).
 def _pois1_case_duckdb() -> str:
     from bigdata_storage_and_proccess_job_data_spark.operators.aggregates import (
@@ -2789,7 +2631,7 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Experiment readouts: CUPED variance reduction (promoted r9)
+# Experiment readouts: CUPED variance reduction
 # ---------------------------------------------------------------------------
 @register(
     "cuped_adjust",
@@ -2846,8 +2688,8 @@ def cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Similarity: hard-negative mining (promoted r9; closes the contrastive-
-# training loop on the similarity stack)
+# Similarity: hard-negative mining (closes the contrastive-training
+# loop on the similarity stack)
 # ---------------------------------------------------------------------------
 @register(
     "hard_negatives",
@@ -2897,8 +2739,8 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Semantic dedup: SemDeDup cluster-blocked near-dup (promoted r9;
-# VERDICT r8 #6 -- the flagship LLM-curation operator)
+# Semantic dedup: SemDeDup cluster-blocked near-dup (the flagship
+# LLM-curation operator)
 # ---------------------------------------------------------------------------
 _SEMDEDUP_CENT = _md5_hash60_sql("'ivf:3:' || i::VARCHAR || ':' || d::VARCHAR")
 
@@ -2906,10 +2748,9 @@ _SEMDEDUP_CENT = _md5_hash60_sql("'ivf:3:' || i::VARCHAR || ':' || d::VARCHAR")
 @register(
     "semantic_dedup",
     # not headline: the iterative closure's per-round scheduling
-    # overhead (~15 log-bounded rounds after the r9 pointer-jumping
-    # fix) would add ~25 s at sf0.1 -- a fixed-cost artifact of tiny
-    # per-round frames on local[32], not a scan/shuffle figure worth
-    # benching; wall-time honesty per the IVM precedent (README).
+    # overhead (~15 log-bounded rounds with pointer jumping) would add
+    # ~25 s at sf0.1 -- a fixed-cost artifact of tiny per-round frames
+    # on local[32], not a scan/shuffle figure worth benching.
     tags=("dedup", "similarity", "vector", "graph"),
     oracle=f"""
         WITH RECURSIVE e AS (

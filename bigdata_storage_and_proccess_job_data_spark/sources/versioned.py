@@ -530,18 +530,24 @@ def _bloom_words(spark: SparkSession, pairs: DataFrame, m_by_file: dict, k: int)
     )
 
 
-def _bloom_entry_d_bound(entry: dict, k: int, target_fpp: float) -> int:
+def _bloom_entry_d_bound(
+    entry: dict, k: int, target_fpp: float | None
+) -> int | None:
     """Distinct-count upper bound for an existing per-file bloom entry:
     the stored ``d`` when present (r15+ manifests record the bound the
-    bitmap was sized from), else inverted from ``m`` -- _bloom_bits
-    only ever rounds m UP from k*d / -ln(1-fpp^(1/k)), so
-    d <= m * -ln(1-fpp^(1/k)) / k holds and its floor is a valid
-    integer bound."""
+    bitmap was sized from), else inverted from ``m`` at the manifest's
+    recorded ``target_fpp`` -- _bloom_bits only ever rounds m UP from
+    k*d / -ln(1-fpp^(1/k)), so d <= m * -ln(1-fpp^(1/k)) / k holds and
+    its floor is a valid integer bound. None (no bound) when neither is
+    recorded: inverting at an assumed fpp under-estimates d whenever
+    the bitmap was built at a looser one."""
     import math
 
     d = entry.get("d")
     if d is not None:
         return int(d)
+    if target_fpp is None:
+        return None
     return int(
         entry["m"] * (-math.log(1.0 - target_fpp ** (1.0 / k))) / k
     )
@@ -579,13 +585,16 @@ def _bloom_rebuild_spliced(
     FP rate only ever improves vs target; pruning correctness is
     m-independent because every entry stores its own ``m``. The sizing
     target_fpp comes from the manifest payload when recorded (r15+;
-    older manifests sized at the 0.01 default)."""
+    older manifests size new bitmaps at the 0.01 default, and a column
+    with an old entry that records neither ``d`` nor the payload's
+    target_fpp is sized from the footer row count alone)."""
     import glob as _glob
 
     import pyarrow.parquet as _pq
 
     k = old_payload.get("k", 5)
-    target_fpp = old_payload.get("target_fpp") or 0.01
+    recorded_fpp = old_payload.get("target_fpp")
+    target_fpp = recorded_fpp or 0.01
     old_files = old_payload.get("files", {})
     cols = sorted({cname for per in old_files.values() for cname in per})
     out: dict[str, dict] = {
@@ -595,18 +604,23 @@ def _bloom_rebuild_spliced(
     }
     # distinct-count budget per column: what the rewritten-away files'
     # entries claimed, summed (absent entry == all-NULL col in that
-    # file == zero distinct values)
+    # file == zero distinct values); None == uncapped (changed values,
+    # or an entry with no recoverable bound)
     rewritten_away = [
         per for fname, per in old_files.items() if fname not in linked_names
     ]
-    cap_by_col = {
-        col: sum(
-            _bloom_entry_d_bound(per[col], k, target_fpp)
+
+    def _cap(col: str) -> int | None:
+        if col in changed_cols:
+            return None
+        bounds = [
+            _bloom_entry_d_bound(per[col], k, recorded_fpp)
             for per in rewritten_away
             if col in per
-        )
-        for col in cols
-    }
+        ]
+        return None if None in bounds else sum(bounds)
+
+    cap_by_col = {col: _cap(col) for col in cols}
     new_paths = [
         p
         for p in sorted(_glob.glob(os.path.join(new_snap, "*.parquet")))
@@ -619,12 +633,9 @@ def _bloom_rebuild_spliced(
         }
         df = spark.read.parquet(*new_paths)
         for col in cols:
+            cap = cap_by_col[col]
             d_by_file = {
-                f: (
-                    rows
-                    if col in changed_cols
-                    else min(rows, cap_by_col[col])
-                )
+                f: rows if cap is None else min(rows, cap)
                 for f, rows in rows_by_file.items()
             }
             m_by_file = {
@@ -943,11 +954,9 @@ def change_feed(
     any two same-schema keyed frames, independent of where the snapshots
     came from (versioned table, two parquet dirs, two query results).
     diff_versions = change_feed over two committed versions. (The
-    snapshot_change_feed query drove this operator under a driver hash
-    until its r13 retirement; the full-outer + struct-compare semantics
-    stay driver-checked row-for-row through table_diff's oracle and
-    pinned by this module's tests -- registry.RETIRED records the
-    merge. VERDICT r5 #6 originated the exact-oracle form.)
+    full-outer + struct-compare semantics stay driver-checked
+    row-for-row through table_diff's oracle and pinned by this module's
+    tests.)
 
     ``align_additive=True`` lets the feed span an ADDITIVE schema
     evolution (apply_changes(merge_schema=True)): a column present on

@@ -19,11 +19,10 @@ def test_approx_distinct_within_tolerance(spark, oracle_sf_dir):
 
 
 def test_rollup_has_subtotals_and_grand_total(spark, oracle_sf_dir):
-    """The exact ROLLUP(region, country) body of the r14-retired
-    region_rollup query (registry.RETIRED["region_rollup"] -- the
-    grouping-set Expand shape stays driver-rowed by
-    cube_segment_priority / grouping_sets_mix; this test keeps the
-    rollup level semantics value-pinned)."""
+    """The exact ROLLUP(region, country) body of the former
+    region_rollup query (the grouping-set Expand shape stays
+    driver-rowed by cube_segment_priority / grouping_sets_mix; this
+    test keeps the rollup level semantics value-pinned)."""
     from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
         stable_round,
     )
@@ -1009,9 +1008,8 @@ def test_script_profile_hand_pins_and_parity(spark, oracle_sf_dir):
 
 def test_rank_family_window_parity(spark, oracle_sf_dir):
     """ntile / percent_rank / cume_dist over one shared ordered window
-    replay value-for-value in DuckDB -- the retired customer_value_ranks
-    query's oracle, carried here verbatim as its r10 coverage merge
-    (registry.RETIRED): the registered rank row is now rfm_scores'
+    replay value-for-value in DuckDB -- the former customer_value_ranks
+    query's oracle, carried here verbatim: the registered rank row is now rfm_scores'
     skew-free two-phase form, and this pins the window built-ins it no
     longer exercises."""
     from pyspark.sql import Window

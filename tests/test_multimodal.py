@@ -76,10 +76,9 @@ def test_resize_then_decode_roundtrip(spark, media_df):
 
 
 def test_media_features_knn_query_recall(spark, sf_dir):
-    """The media->IVF pipeline (registry entry RETIRED r7 -- the blake2b
-    + IVF tail is not SQL-expressible, so its driver row was rows-only
-    by construction; this test IS the retirement's coverage note): IVF
-    ANN over fake-codec features must rank sanely and reach decent
+    """The media->IVF pipeline (the blake2b + IVF tail is not
+    SQL-expressible, so it has no registry entry and this test is its
+    coverage): IVF ANN over fake-codec features must rank sanely and reach decent
     recall vs exact brute force over the same feature frame."""
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         multimodal,

@@ -136,10 +136,9 @@ def test_embedding_neardup_is_bucketed_not_nested_loop(spark, oracle_sf_dir):
 def test_correlated_scalar_subquery_decorrelates_and_values(
     spark, oracle_sf_dir
 ):
-    """The r13-retired small_quantity_revenue query text, verbatim (the
-    registry.RETIRED coverage contract): Catalyst must rewrite the
-    correlated scalar subquery (TPC-H Q17 shape) into an aggregate +
-    join -- never a per-row subquery or nested loop -- AND the values
+    """The former small_quantity_revenue query text, verbatim:
+    Catalyst must rewrite the correlated scalar subquery (TPC-H Q17
+    shape) into an aggregate + join -- never a per-row subquery or nested loop -- AND the values
     must keep full DuckDB parity. The correlated-EXISTS family keeps
     its driver row via priority_with_late_lines."""
     from bigdata_storage_and_proccess_job_data_spark.catalog import (
@@ -292,84 +291,30 @@ def test_lint_plan_api(spark, oracle_sf_dir):
     assert "sourceless-plan" in lint.lint_plan(local)
     assert lint.lint_plan(local, require_source=False) == []
 
-    import pytest
-
     with pytest.raises(lint.ScalePlanError, match="BatchEvalPython"):
         lint.assert_scalable(slow)
 
 
 def test_driver_window_is_first_50():
-    """The driver checks exactly the first 50 registry entries; the curated
-    window (plans/__init__.py) must BE those 50, with no duplicates and no
-    names that drifted out of the registry."""
+    """The driver checks exactly the first 50 registry entries; the
+    window (plans.DRIVER_WINDOW) must BE those 50, with no duplicates."""
     from bigdata_storage_and_proccess_job_data_spark import plans
 
-    window = plans.DRIVER_WINDOW_R15
-    assert len(window) == 50
-    assert len(set(window)) == 50
+    window = plans.DRIVER_WINDOW
+    assert len(window) == len(set(window)) == 50
     assert list(QS)[:50] == window
-    # r15 executes the pinned plan verbatim (optimization rounds run no
-    # ledger swaps)
-    assert window == list(plans.DRIVER_WINDOW_R15_PLAN)
 
 
 def test_windows_partition_registry():
-    """Registry-saturation mechanics as invariants, not prose (VERDICT
-    r5 #2): at the 100-query ceiling the current window and the pinned
-    next-round plan must PARTITION the registry -- disjoint, exhaustive,
-    50 each -- so every registered query is re-rowed within two rounds
-    and a displacement can never silently strand one. Also pins the
-    ceiling itself and that retired names really left the registry."""
+    """The window and its complement partition the 100-query registry,
+    50 each; register() refuses a query past that ceiling."""
     from bigdata_storage_and_proccess_job_data_spark import plans
     from bigdata_storage_and_proccess_job_data_spark.plans import registry
 
-    r14, r15 = set(plans.DRIVER_WINDOW_R14), set(plans.DRIVER_WINDOW_R15_PLAN)
-    names = set(QS)
+    window, names = set(plans.DRIVER_WINDOW), set(QS)
+    assert len(window) == len(names - window) == 50
+    assert window | (names - window) == names, sorted(window - names)
     assert len(names) == registry.MAX_REGISTERED == 100
-    assert r14 & r15 == set(), sorted(r14 & r15)
-    assert r14 | r15 == names, {
-        "unscheduled": sorted(names - (r14 | r15)),
-        "unknown": sorted((r14 | r15) - names),
-    }
-    assert len(r14) == len(r15) == 50
-    # the r13 displacement promise was kept: every query pinned into
-    # DRIVER_WINDOW_R14_PLAN is in the r14 window unless it was retired
-    # this round with a recorded coverage merge (the executed R14
-    # ledger's four retirees were all IN-plan, so the four swaps are
-    # 1:1 and nothing was displaced further)
-    for obligated in plans.DRIVER_WINDOW_R14_PLAN:
-        assert obligated in r14 or obligated in registry.RETIRED, obligated
-    # the executed R14 ledger: all four promotions row THIS round (new
-    # registrations never ship without a row), all four retirees are
-    # recorded with coverage merges
-    assert {
-        "knn_ivfpq",
-        "knn_sq8",
-        "join_size_report",
-        "balanced_shards",
-    } <= r14
-    assert "knn_pq" in registry.RETIRED
-    assert "knn_brute_force" in registry.RETIRED
-    assert "skew_distinct_naive" in registry.RETIRED
-    assert "region_rollup" in registry.RETIRED
-    # the r15 complement is the r13 window carried forward unchanged
-    assert r15 == set(plans.DRIVER_WINDOW_R13)
-    # retirement is real: retired names are out of the registry, out of
-    # both windows, and re-registration is refused
-    for retired in registry.RETIRED:
-        assert retired not in names
-        assert retired not in r14 and retired not in r15
-    import pytest
-
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("embedding_norms")(lambda s, d: None)
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("word_frequencies")(lambda s, d: None)
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("ngram_jaccard_pairs")(lambda s, d: None)
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("customers_without_orders")(lambda s, d: None)
-    # the ceiling is enforced at registration time
     with pytest.raises(ValueError, match="ceiling"):
         registry.register("one_query_too_many")(lambda s, d: None)
 

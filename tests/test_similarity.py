@@ -715,9 +715,8 @@ def test_ann_recall_registered_query(spark, oracle_sf_dir):
 
 
 def test_pq_quality_and_md5_codebooks(spark, oracle_sf_dir):
-    """Flat-PQ quality floor (was the knn_pq registered-query test
-    until that row retired r14 into knn_ivfpq -- registry.RETIRED
-    ["knn_pq"] names this test as the kept floor): md5-derived
+    """Flat-PQ quality floor (the flat-PQ search path is value-hashed
+    through knn_ivfpq's oracle; this test keeps its floor): md5-derived
     codebooks are deterministic and in [-scale, scale); the ADC top-5
     reaches a real recall floor against the exact top-5 -- random
     codebooks quantize worse than k-means-fit ones, but the search must

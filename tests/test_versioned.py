@@ -306,10 +306,8 @@ def test_change_feed_rejects_map_columns(spark):
 def test_change_feed_frame_level_matches_diff_versions(spark, tmp_path):
     """change_feed over two in-memory frames must equal diff_versions
     over the same frames committed as snapshots -- this pins that both
-    forms are the same operator (the snapshot_change_feed query drove
-    the frame form until its r13 retirement; table_diff keeps the
-    full-outer-diff shape's driver row, registry.RETIRED has the
-    merge)."""
+    forms are the same operator (table_diff keeps the full-outer-diff
+    shape's driver row)."""
     old = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "id LONG, name STRING"
     )
@@ -2152,6 +2150,20 @@ def test_cow_rewrite_rejects_misrouted_observation(spark, tmp_path):
     assert versioned.read_version(spark, table).count() == 989
 
 
+def _rewritten_files(old_snap: str, new_snap: str) -> list[str]:
+    """Data files of ``new_snap`` that a COW commit rewrote (not
+    hard-linked from ``old_snap``), by basename."""
+    import glob
+    import os
+
+    old_inodes = {os.stat(p).st_ino for p in glob.glob(f"{old_snap}/*.parquet")}
+    return [
+        os.path.basename(p)
+        for p in glob.glob(f"{new_snap}/*.parquet")
+        if os.stat(p).st_ino not in old_inodes
+    ]
+
+
 def test_bloom_splice_caps_low_ndv_columns(spark, tmp_path):
     """VERDICT r14 #3/#4: after a COW delete, a duplicate-heavy
     column's rebuilt bloom bitmaps are sized from the old entries'
@@ -2183,15 +2195,7 @@ def test_bloom_splice_caps_low_ndv_columns(spark, tmp_path):
     new_snap = f"{table}/v={report['version']}"
     with open(os.path.join(new_snap, "_bloom.json")) as fh:
         new = json.load(fh)
-    old_inodes = {
-        os.stat(p).st_ino
-        for p in glob.glob(f"{table}/v={v1}/*.parquet")
-    }
-    rewritten = [
-        os.path.basename(p)
-        for p in glob.glob(f"{new_snap}/*.parquet")
-        if os.stat(p).st_ino not in old_inodes
-    ]
+    rewritten = _rewritten_files(f"{table}/v={v1}", new_snap)
     assert rewritten
     for fname in rewritten:
         st = new["files"][fname]["status"]
@@ -2226,7 +2230,6 @@ def test_bloom_splice_does_not_cap_updated_columns(spark, tmp_path):
     files, so the splice sizes them from footer row counts (no cap) --
     a tombstone update that INCREASES a column's distinct count must
     not saturate its bitmap."""
-    import glob
     import json
     import os
 
@@ -2256,15 +2259,7 @@ def test_bloom_splice_does_not_cap_updated_columns(spark, tmp_path):
     new_snap = f"{table}/v={report['version']}"
     with open(os.path.join(new_snap, "_bloom.json")) as fh:
         new = json.load(fh)
-    old_inodes = {
-        os.stat(p).st_ino
-        for p in glob.glob(f"{table}/v={v1}/*.parquet")
-    }
-    rewritten = [
-        os.path.basename(p)
-        for p in glob.glob(f"{new_snap}/*.parquet")
-        if os.stat(p).st_ino not in old_inodes
-    ]
+    rewritten = _rewritten_files(f"{table}/v={v1}", new_snap)
     assert rewritten
     for fname in rewritten:
         st = new["files"][fname]["status"]
@@ -2275,6 +2270,55 @@ def test_bloom_splice_does_not_cap_updated_columns(spark, tmp_path):
         versioned.read_version(
             spark, table, prune_eq=("status", "u150")
         ).count()
+        == 1
+    )
+
+
+def test_bloom_splice_legacy_manifest_without_bounds_is_uncapped(
+    spark, tmp_path
+):
+    """A legacy bloom manifest that records neither the payload's
+    target_fpp nor per-entry ``d`` gives the splice no sound distinct
+    bound: inverting ``m`` at an assumed 0.01 under-estimates ``d`` for a
+    manifest built at a looser fpp, undersizing the spliced bitmaps. Such
+    columns are sized from the footer row count instead."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "legacy_bloom")
+    df = spark.range(0, 4000).selectExpr(
+        "id AS k", "CAST(id AS STRING) AS key"
+    )
+    v1 = versioned.commit_version(
+        df.repartitionByRange(6, "k").sortWithinPartitions("k"),
+        table,
+        stats_cols=["k"],
+    )
+    snap = f"{table}/v={v1}"
+    versioned.write_bloom_manifest(spark, snap, ["key"], target_fpp=0.1)
+    manifest = os.path.join(snap, "_bloom.json")
+    with open(manifest) as fh:
+        payload = json.load(fh)
+    del payload["target_fpp"]
+    for per in payload["files"].values():
+        for entry in per.values():
+            entry.pop("d", None)
+    with open(manifest, "w") as fh:
+        json.dump(payload, fh)
+    report = versioned.delete_where(spark, table, "k", 100, 199)
+    new_snap = f"{table}/v={report['version']}"
+    with open(os.path.join(new_snap, "_bloom.json")) as fh:
+        new = json.load(fh)
+    rewritten = _rewritten_files(snap, new_snap)
+    assert rewritten
+    for fname in rewritten:
+        footer = pq.ParquetFile(os.path.join(new_snap, fname)).metadata
+        assert new["files"][fname]["key"]["d"] == footer.num_rows
+    assert (
+        versioned.read_version(spark, table, prune_eq=("key", "3000"))
+        .count()
         == 1
     )
 

@@ -10,8 +10,8 @@ enough. This module automates the insurance:
 
 1. ``python -m tools.op_index`` regenerates ``OP_INDEX.md`` -- ONE
    greppable line per public function in the engine package (module,
-   name, first docstring sentence). Writing a new operator starts with
-   a grep of that file.
+   name, reachability, first docstring sentence). Writing a new
+   operator starts with a grep of that file.
 2. ``tests/test_op_index.py`` fails when the index is stale (a new
    public function exists without a regenerated index -- forcing the
    author through the file) and when two public functions' keyword
@@ -24,17 +24,33 @@ paragraphs describe edge cases and scale shape, which legitimately
 repeat across the package). Stopwords common to every operator
 docstring (row/column/agg/shuffle/...) are dropped so the overlap
 measures semantics, not house style.
+
+The reachability column records which non-test roots reach each public
+function through a name-based static walk (see ``reachability``): the query
+registry (registered queries and their plan probes), ``bench.py``,
+``examples/`` and ``perfbench/``. It is a report -- a function no root
+reaches is a deletion candidate, not a deletion.
 """
 
 from __future__ import annotations
 
+import ast
 import importlib
 import inspect
 import itertools
+import pathlib
 import pkgutil
 import re
 
 PKG = "bigdata_storage_and_proccess_job_data_spark"
+REPO = pathlib.Path(__file__).resolve().parent.parent
+# non-test roots of the reachability walk: name -> script glob (the
+# registry root is the registered query functions themselves)
+SCRIPT_ROOTS = {
+    "bench": "bench.py",
+    "examples": "examples/*.py",
+    "perfbench": "perfbench/*.py",
+}
 
 # plans/ is the registry surface (driver queries over the operators),
 # not the operator inventory itself -- its duplicate guard is the
@@ -148,6 +164,74 @@ def discover() -> list[tuple[str, str, str, frozenset]]:
     return out
 
 
+Node = tuple[str, str]  # (dotted module, top-level name)
+
+
+def _names(tree: ast.AST) -> set[str]:
+    """Every identifier a subtree names: bare names, attributes and
+    imported names."""
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
+def reachability() -> dict[Node, tuple[str, ...]]:
+    """Top-level package definition -> the non-test roots (registry,
+    bench, examples, perfbench) that reach it. The walk is by name: a
+    definition is reached when a reached body names it, so a shared name
+    over-approximates reach and ``unreached`` errs on the safe side."""
+    from bigdata_storage_and_proccess_job_data_spark.plans import registry
+
+    by_name: dict[str, set[Node]] = {}
+    refs: dict[Node, set[str]] = {}
+    pkg = importlib.import_module(PKG)
+    for mi in pkgutil.walk_packages(pkg.__path__, PKG + "."):
+        tree = ast.parse(inspect.getsource(importlib.import_module(mi.name)))
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                defined = [stmt.name]
+            elif isinstance(stmt, ast.Assign):
+                defined = [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+            elif isinstance(stmt, ast.AnnAssign) and isinstance(
+                stmt.target, ast.Name
+            ):
+                defined = [stmt.target.id]
+            else:
+                continue
+            for name in defined:
+                by_name.setdefault(name, set()).add((mi.name, name))
+                refs[mi.name, name] = _names(stmt)
+    roots = {
+        "registry": {
+            (fn.__module__, fn.__name__)
+            for qd in registry.all_queries().values()
+            for fn in (qd.fn, *qd.plan_probes)
+        }
+    }
+    for root, pattern in SCRIPT_ROOTS.items():
+        for path in REPO.glob(pattern):
+            for name in _names(ast.parse(path.read_text())):
+                roots.setdefault(root, set()).update(by_name.get(name, ()))
+    reached: dict[Node, list[str]] = {}
+    for root, start in roots.items():
+        seen: set[Node] = set()
+        stack = list(start)
+        while stack:
+            node = stack.pop()
+            if node not in seen and node in refs:
+                seen.add(node)
+                stack.extend(n for nm in refs[node] for n in by_name.get(nm, ()))
+        for node in seen:
+            reached.setdefault(node, []).append(root)
+    return {node: tuple(rs) for node, rs in reached.items()}
+
+
 def jaccard(a: frozenset, b: frozenset) -> float:
     u = a | b
     return len(a & b) / len(u) if u else 0.0
@@ -171,6 +255,20 @@ def collisions(
 
 
 def render(entries: list[tuple[str, str, str, frozenset]]) -> str:
+    reach = reachability()
+    tags = {
+        (rel, nm): ", ".join(reach.get((f"{PKG}.{rel}", nm), ())) or "unreached"
+        for rel, nm, _, _ in entries
+    }
+    unreached = [key for key, tag in tags.items() if tag == "unreached"]
+    unreached_lines = sum(
+        len(
+            inspect.getsourcelines(
+                getattr(importlib.import_module(f"{PKG}.{rel}"), nm)
+            )[0]
+        )
+        for rel, nm in unreached
+    )
     lines = [
         "# Operator index (generated -- do not edit)",
         "",
@@ -181,19 +279,24 @@ def render(entries: list[tuple[str, str, str, frozenset]]) -> str:
         "have in mind. Regenerate: `python -m tools.op_index`.",
         "Freshness + duplicate-overlap guard: tests/test_op_index.py.",
         "",
-        f"{len(entries)} public functions.",
+        "The bracketed column names the non-test roots that reach each",
+        "function through a name-based static walk: `registry` (registered",
+        "queries and plan probes), `bench` (bench.py), `examples`,",
+        "`perfbench`; `unreached` means none does (tests may still call",
+        "it). A report, not a deletion list.",
+        "",
+        f"{len(entries)} public functions; {len(unreached)} unreached "
+        f"({unreached_lines} source lines).",
         "",
     ]
     for rel, nm, sent, _ in entries:
-        lines.append(f"- `{rel}.{nm}` — {sent}")
+        lines.append(f"- `{rel}.{nm}` [{tags[rel, nm]}] — {sent}")
     return "\n".join(lines) + "\n"
 
 
 def main() -> None:
-    import pathlib
-
     entries = discover()
-    path = pathlib.Path(__file__).resolve().parent.parent / "OP_INDEX.md"
+    path = REPO / "OP_INDEX.md"
     path.write_text(render(entries))
     bad = collisions(entries)
     print(f"wrote {path} ({len(entries)} functions)")

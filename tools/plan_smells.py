@@ -25,6 +25,7 @@ sys.path.insert(
 )
 
 from bigdata_storage_and_proccess_job_data_spark.plans import (  # noqa: E402
+    lint,
     registry,
 )
 from bigdata_storage_and_proccess_job_data_spark.session import (  # noqa: E402
@@ -48,7 +49,7 @@ def main() -> None:
     for name, qd in registry.all_queries().items():
         try:
             df = qd.fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = lint.plan_string(df)
         except Exception as exc:  # pragma: no cover - diagnostic tool
             print(f"{name}: BUILD-ERROR {type(exc).__name__}: {exc}")
             continue

@@ -1,13 +1,13 @@
-"""Duplicate-scan audit over the full query registry (r12 origin).
+"""Duplicate-scan audit over the full query registry.
 
 For every registered query, greps the EXECUTED plan for repeated
 parquet scans of the same table. A table appearing N >= 2 times means
 one of:
 
 1. A branching dataflow that recomputes its shared frame once per
-   consumer (the defect class fixed in r12: fleiss_kappa re-aggregated
-   the raw ratings 5x, unigram_logprob_table re-tokenized the corpus
-   ~9x, retention_matrix re-deduped events 3x). The fix: checkpoint
+   consumer (fleiss_kappa re-aggregated the raw ratings 5x,
+   unigram_logprob_table re-tokenized the corpus ~9x, retention_matrix
+   re-deduped events 3x, before the fix). The fix: checkpoint
    the shared POST-AGGREGATION frame (the bh_adjust localCheckpoint
    convention) -- the base scan then runs exactly once.
 2. A two-sided computation (self-join, query-vs-corpus, A/B split,
@@ -24,17 +24,11 @@ Run: ``python -m tools.scan_audit [sf_dir]`` (default
 /root/testdata/sf0.01). Regression pins for the fixed queries live in
 tests/test_plans.py::test_scan_once_pins.
 
-Scope decision (r13, VERDICT r12 #7): the audit covers the QUERY
-REGISTRY only, not examples/. The examples are eager end-to-end
-scripts -- they interleave actions with writes, so there is no single
-returned frame whose executed plan represents the run; auditing them
-would mean refactoring each into plan-returning stages, changing the
-thing being documented. Their one recompute-prone shared frame
-(corpus_pipeline's `scored`) already localCheckpoints eagerly with the
-per-consumer lineage printed at run time (commit bd67ab3), and
-examples are demo surface, not graded contract surface. If an example
-ever grows a branching LAZY dataflow, register the shape as a query
-(or a plan probe) and the audit covers it for free.
+Scope: the QUERY REGISTRY only, not examples/. The examples are eager
+end-to-end scripts that interleave actions with writes, so no single
+returned frame's executed plan represents the run. If an example grows
+a branching LAZY dataflow, register the shape as a query (or a plan
+probe) and the audit covers it.
 """
 
 from __future__ import annotations
@@ -48,6 +42,7 @@ def audit(sf_dir: str) -> list[tuple[str, dict]]:
     from pyspark.sql import SparkSession
 
     from bigdata_storage_and_proccess_job_data_spark import plans
+    from bigdata_storage_and_proccess_job_data_spark.plans import lint
 
     spark = (
         SparkSession.builder.master("local[4]")
@@ -60,12 +55,7 @@ def audit(sf_dir: str) -> list[tuple[str, dict]]:
     )
     out = []
     for name, qd in plans.all_queries().items():
-        plan = (
-            qd.fn(spark, sf_dir)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        plan = lint.plan_string(qd.fn(spark, sf_dir))
         counts = Counter(re.findall(r"(\w+)\.parquet", plan))
         dups = {t: n for t, n in counts.items() if n >= 2}
         if dups:
