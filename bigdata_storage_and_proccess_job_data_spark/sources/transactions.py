@@ -13,15 +13,16 @@ catalog-pointer idea reduced to one directory:
       _latest         text file holding the committed txn id
 
 Commit protocol (txn_commit):
-  1. STAGE: each written table gets a new ``v=N`` snapshot via the same
-     O_EXCL number claim as versioned.commit_version -- but its
-     per-table ``_latest`` is NOT flipped, so nothing is visible yet;
+  1. STAGE: each written table gets a new ``v=N`` snapshot via
+     versioned._stage (see its docstring) -- but its per-table
+     ``_latest`` is NOT flipped, so nothing is visible yet;
   2. PIN: tables in scope but not written this time carry their current
      committed version into the manifest (the txn is a COMPLETE picture
      of the scope, so txn_read never mixes epochs);
   3. COMMIT: write the manifest json, then atomically replace the txn
-     ``_latest`` (os.replace) -- the single commit point: before it no
-     staged snapshot is reachable, after it the whole set is;
+     ``_latest`` (versioned._atomic_write) -- the single commit point:
+     before it no staged snapshot is reachable, after it the whole set
+     is;
   4. ROLL FORWARD: flip each staged table's own ``_latest`` so plain
      per-table readers (read_version with no pinned version) see the
      new data too. A crash inside step 4 leaves the txn committed but
@@ -48,26 +49,23 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 from bigdata_storage_and_proccess_job_data_spark.sources.versioned import (
     ConcurrentCommitError,
+    _atomic_write,
     _claim,
+    _pointer_path,
+    _rm_quiet,
+    _stage,
 )
-
-_POINTER = "_latest"
 
 
 def txn_current(txn_dir: str) -> int | None:
     """Committed transaction id, or None before the first commit."""
-    try:
-        with open(os.path.join(txn_dir, _POINTER)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
+    return versioned.current_version(txn_dir)
 
 
 def txn_manifest(txn_dir: str, txn: int | None = None) -> dict:
@@ -82,23 +80,12 @@ def txn_manifest(txn_dir: str, txn: int | None = None) -> dict:
 
 def _stage_snapshot(df: DataFrame, table_dir: str) -> int:
     """versioned.commit_version's write half WITHOUT the pointer swap:
-    claim the next free snapshot number (O_EXCL, so concurrent stagers
-    never collide), write the immutable ``v=N`` dir, return N. The
-    snapshot stays unreachable until a manifest (or a later per-table
-    commit) names it."""
-    os.makedirs(table_dir, exist_ok=True)
-    nxt = (max(versioned.versions(table_dir), default=0)) + 1
-    while not _claim(table_dir, f"._claim_v{nxt}"):
-        nxt += 1
-    df.write.mode("error").parquet(os.path.join(table_dir, f"v={nxt}"))
+    claim the next free snapshot number (_stage), write the
+    immutable ``v=N`` dir, return N. The snapshot stays unreachable
+    until a manifest (or a later per-table commit) names it."""
+    nxt, snap = _stage(table_dir, None)
+    df.write.mode("error").parquet(snap)
     return nxt
-
-
-def _flip_pointer(table_dir: str, version: int) -> None:
-    fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="._latest_")
-    with os.fdopen(fd, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(table_dir, _POINTER))
 
 
 def txn_commit(
@@ -155,15 +142,12 @@ def txn_commit(
         # unreachable data, cleared by the tables' own vacuum like any
         # orphaned claim); a crash before this cleanup leaves the
         # orphan until txn_vacuum ages it out
-        try:
-            os.remove(os.path.join(txn_dir, f"t={nxt}.json"))
-        except FileNotFoundError:
-            pass
+        _rm_quiet(os.path.join(txn_dir, f"t={nxt}.json"))
         raise ConcurrentCommitError(
             f"{txn_dir}: another writer already committed the "
             f"transition out of txn {expected}"
         )
-    _flip_pointer(txn_dir, nxt)  # the atomic commit point
+    _atomic_write(_pointer_path(txn_dir), str(nxt))  # the commit point
     if roll_forward:
         txn_recover(txn_dir)
     return nxt
@@ -176,7 +160,7 @@ def txn_recover(txn_dir: str) -> list[str]:
     check is never rewound. Returns the table dirs whose pointers
     moved.
 
-    Concurrency contract (review finding): the check-then-flip is NOT
+    Concurrency contract: the check-then-flip is NOT
     atomic against a scope writer committing between the read and the
     flip -- run recovery while scope writers are quiesced, which is the
     crash-recovery setting it exists for (writers restart AFTER
@@ -196,7 +180,9 @@ def txn_recover(txn_dir: str) -> list[str]:
                 "version"
             ]:
                 continue
-            _flip_pointer(entry["dir"], entry["version"])
+            _atomic_write(
+                _pointer_path(entry["dir"]), str(entry["version"])
+            )
             moved.append(entry["dir"])
     return moved
 
@@ -248,17 +234,11 @@ def txn_vacuum(txn_dir: str, keep: int = 1) -> list[int]:
     drop = [t for t in ids[: max(0, len(ids) - keep)] if t != committed]
     for t in drop:
         os.remove(os.path.join(txn_dir, f"t={t}.json"))
-        try:
-            os.remove(os.path.join(txn_dir, f"._txn_claim_{t}"))
-        except FileNotFoundError:
-            pass
+        _rm_quiet(os.path.join(txn_dir, f"._txn_claim_{t}"))
     if committed is not None:
         for name in os.listdir(txn_dir):
             if name.startswith("._txn_from_"):
                 tail = name[len("._txn_from_"):]
                 if tail.isdigit() and int(tail) < committed:
-                    try:
-                        os.remove(os.path.join(txn_dir, name))
-                    except FileNotFoundError:
-                        pass
+                    _rm_quiet(os.path.join(txn_dir, name))
     return drop

@@ -13,15 +13,15 @@ pointer:
       _latest                  text file holding the committed version
 
 - writers produce a NEW snapshot dir (distributed write, any size),
-  then commit by atomically replacing ``_latest`` (os.replace -- POSIX
-  rename, also atomic on object stores with a metadata layer);
+  then commit by atomically replacing ``_latest``;
 - readers resolve ``_latest`` once and only ever list files inside an
   immutable snapshot => no torn reads, writers never block readers;
 - history stays until vacuum(), so any version is time-travel readable.
 
-Commit races: last-committer-wins on the pointer (fine for the
-single-writer compaction/ETL cadence here; a CAS on the pointer object
-is the multi-writer upgrade).
+Every writer runs the same commit protocol: _stage claims the snapshot
+number, _publish attaches the meta sidecar, takes the transition CAS
+and swaps the pointer (their docstrings are the protocol's one
+description).
 """
 
 from __future__ import annotations
@@ -34,10 +34,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _POINTER = "_latest"
+_META = "_commit_meta.json"
 
 
 def _pointer_path(table_dir: str) -> str:
     return os.path.join(table_dir, _POINTER)
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` all-or-nothing: write a temp file
+    in the same directory, then rename it over the target (POSIX
+    rename within one filesystem is atomic, so a reader sees the old
+    content or the new, never a torn file). The package's one writer
+    of pointers, manifests and meta sidecars."""
+    d, name = os.path.split(path)
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=f".{name}_")
+    with os.fdopen(fd, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def current_version(table_dir: str) -> int | None:
@@ -65,9 +79,8 @@ class ConcurrentCommitError(RuntimeError):
 
 
 def _claim(table_dir: str, name: str) -> bool:
-    """Atomically create an empty marker file; False if it exists.
-    O_EXCL is the local-fs compare-and-set primitive (atomic on POSIX;
-    the object-store equivalent is a conditional put)."""
+    """Atomically create an empty marker file (O_EXCL, the local-fs
+    compare-and-set); False if it exists."""
     try:
         fd = os.open(
             os.path.join(table_dir, name),
@@ -77,6 +90,72 @@ def _claim(table_dir: str, name: str) -> bool:
         return False
     os.close(fd)
     return True
+
+
+def _stage(table_dir: str, expected: int | None) -> tuple[int, str]:
+    """Steps 1-2 of the snapshot commit protocol; returns the claimed
+    number N and the ``v=N`` path for the caller to write into.
+
+    1. EXPECTED-VERSION CHECK: with ``expected`` set, refuse
+       (ConcurrentCommitError) unless the committed version still is
+       ``expected`` (an uninitialized table counts as 0) -- the cheap
+       early exit before any data is written;
+    2. NUMBER CLAIM: create ``._claim_v{N}`` with O_EXCL for the next
+       free N, so two in-flight writers never write into the same
+       ``v=N`` dir (a late writer just claims the next number).
+
+    The staged snapshot is unreachable until _publish moves the
+    pointer; a writer that dies before that leaves an unreachable
+    claimed dir, and later writers claim past it."""
+    os.makedirs(table_dir, exist_ok=True)
+    if expected is not None:
+        cur = current_version(table_dir) or 0
+        if cur != expected:
+            raise ConcurrentCommitError(
+                f"{table_dir}: expected v{expected}, found v{cur}"
+            )
+    n = max(versions(table_dir), default=0) + 1
+    while not _claim(table_dir, f"._claim_v{n}"):
+        n += 1  # number taken by an in-flight writer; take the next
+    return n, os.path.join(table_dir, f"v={n}")
+
+
+def _publish(
+    table_dir: str, n: int, expected: int | None, meta: dict | None
+) -> None:
+    """Steps 3-5 of the snapshot commit protocol, run after the data
+    (and any manifests) of the staged ``v=n`` are written:
+
+    3. META SIDECAR: ``meta`` lands as ``_commit_meta.json`` inside the
+       snapshot BEFORE the pointer swap, so a published version always
+       carries it (commit_meta reads it back);
+    4. TRANSITION CAS: with ``expected`` set, create
+       ``._commit_from_v{expected}`` with O_EXCL -- only ONE writer
+       ever moves the table out of a version, and because the marker is
+       taken after the data write, the race loser gets
+       ConcurrentCommitError however two commits interleave.
+       ``expected=None`` takes no marker: last committer wins;
+    5. POINTER SWAP: _atomic_write of ``_latest`` -- the commit point.
+
+    Crash recovery: a writer dying between steps 4 and 5 leaves
+    ``._commit_from_v{E}`` with the pointer still at E; further
+    ``expected=E`` commits then fail closed (never torn). vacuum()
+    clears markers from completed transitions; clear a stale one by
+    hand (or commit with ``expected=None``) after confirming the writer
+    is dead. On an object store without atomic exclusive creation,
+    _claim becomes a conditional put -- the structure is unchanged."""
+    if meta is not None:
+        _atomic_write(
+            os.path.join(table_dir, f"v={n}", _META), json.dumps(meta)
+        )
+    if expected is not None and not _claim(
+        table_dir, f"._commit_from_v{expected}"
+    ):
+        raise ConcurrentCommitError(
+            f"{table_dir}: another writer already committed the "
+            f"transition out of v{expected}"
+        )
+    _atomic_write(_pointer_path(table_dir), str(n))
 
 
 def commit_version(
@@ -94,28 +173,14 @@ def commit_version(
     ``expected`` enables optimistic concurrency: pass the version your
     read was based on and the commit refuses (ConcurrentCommitError) if
     someone else committed meanwhile -- the read-modify-write pattern
-    for derived tables.
+    for derived tables. The protocol (number claim, transition CAS,
+    crash recovery) is described on _stage and _publish.
 
     ``stats_cols`` writes the snapshot's per-file min/max manifest
     (write_stats_manifest) before publishing, enabling manifest-based
     file pruning at read time (read_version(prune=...)). Pair with
     repartitionByRange on the stats column so files carry disjoint
     ranges worth skipping.
-
-    Concurrency control is two O_EXCL markers (VERDICT r5 #7 -- the old
-    check-then-replace window is closed at local-fs level):
-
-    - ``._claim_v{N}`` reserves the snapshot NUMBER, so two in-flight
-      writers never write into the same ``v=N`` dir (a late writer just
-      claims the next free number);
-    - ``._commit_from_v{E}`` is the CAS on the pointer transition: only
-      ONE expected-mode writer ever moves the table out of version E --
-      created AFTER the data write, immediately before the pointer
-      swap, so the race loser always gets ConcurrentCommitError no
-      matter how the two commits interleave (tests pin a real
-      two-thread race). The guarantee covers expected-mode writers;
-      ``expected=None`` stays documented last-committer-wins and takes
-      no transition marker.
 
     ``meta`` attaches a small JSON document to the snapshot, written
     BEFORE the pointer swap so a published version always carries it
@@ -133,15 +198,7 @@ def commit_version(
     partition pruning applies per snapshot. Mutually exclusive with
     ``stats_cols`` (the file-manifest pruners hand Spark bare file
     paths, which would drop hive partition values; partitioned
-    snapshots get their pruning from partition pruning itself).
-
-    Crash recovery: a writer dying between marker and pointer swap
-    leaves ``._commit_from_v{E}`` with the pointer still at E; further
-    expected=E commits then fail closed (never torn). vacuum() clears
-    markers from completed transitions; clear a stale one manually (or
-    re-commit with expected=None) after confirming the writer is dead.
-    On an object store without atomic-exclusive creation, replace
-    _claim with a conditional put -- the structure is unchanged."""
+    snapshots get their pruning from partition pruning itself)."""
     if partition_by and stats_cols:
         raise ValueError(
             "partition_by and stats_cols are mutually exclusive: "
@@ -149,17 +206,7 @@ def commit_version(
             "hive partition values -- partitioned snapshots prune via "
             "partition pruning instead"
         )
-    os.makedirs(table_dir, exist_ok=True)
-    if expected is not None:
-        cur = current_version(table_dir) or 0
-        if cur != expected:
-            raise ConcurrentCommitError(
-                f"{table_dir}: expected v{expected}, found v{cur}"
-            )
-    nxt = (max(versions(table_dir), default=0)) + 1
-    while not _claim(table_dir, f"._claim_v{nxt}"):
-        nxt += 1  # number taken by an in-flight writer; take the next
-    snap = os.path.join(table_dir, f"v={nxt}")
+    nxt, snap = _stage(table_dir, expected)
     writer = df.write.mode("error")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -169,20 +216,7 @@ def commit_version(
         # always carries its manifest (readers never race a half-built
         # one -- the snapshot isn't visible until the swap below)
         write_stats_manifest(snap, stats_cols)
-    if meta is not None:
-        with open(os.path.join(snap, _META), "w") as fh:
-            json.dump(meta, fh)
-    if expected is not None and not _claim(
-        table_dir, f"._commit_from_v{expected}"
-    ):
-        raise ConcurrentCommitError(
-            f"{table_dir}: another writer already committed the "
-            f"transition out of v{expected}"
-        )
-    fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="._latest_")
-    with os.fdopen(fd, "w") as f:
-        f.write(str(nxt))
-    os.replace(tmp, _pointer_path(table_dir))  # the atomic commit point
+    _publish(table_dir, nxt, expected, meta)
     return nxt
 
 
@@ -263,9 +297,6 @@ def read_version(
     return spark.read.parquet(*sorted(files)).filter(cond)
 
 
-_META = "_commit_meta.json"
-
-
 def commit_meta(table_dir: str, version: int | None = None) -> dict | None:
     """The JSON document attached to a snapshot at commit time
     (commit_version(meta=...)), or None if the snapshot has none.
@@ -300,7 +331,6 @@ def write_stats_manifest(
     the footer walk itself would be distributed; driver-side is the
     right shape for the per-snapshot file counts this format targets."""
     import glob
-    import json
 
     import pyarrow.parquet as pq
 
@@ -340,10 +370,7 @@ def write_stats_manifest(
         f: {c: _stats_ser(v) for c, v in cs.items()}
         for f, cs in manifest.items()
     }
-    tmp = os.path.join(snapshot_dir, f".{_STATS}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(ser, fh)
-    os.replace(tmp, os.path.join(snapshot_dir, _STATS))
+    _atomic_write(os.path.join(snapshot_dir, _STATS), json.dumps(ser))
     return manifest
 
 
@@ -380,8 +407,6 @@ def _stats_de(v):
 
 def read_stats_manifest(snapshot_dir: str) -> dict | None:
     """The snapshot's stats manifest, or None if it wasn't written."""
-    import json
-
     try:
         with open(os.path.join(snapshot_dir, _STATS)) as fh:
             raw = json.load(fh)
@@ -484,12 +509,11 @@ def _bloom_words(spark: SparkSession, pairs: DataFrame, m_by_file: dict, k: int)
     no join (measured -30% on the rebuild job at a few dozen files);
     but GetMapValue on a literal map is a LINEAR key scan per row, so
     the boundary is where per-row compares overtake the join's fixed
-    cost. Measured (r15, 2M value rows, interleaved A/B): literal
-    wins at <=100 files (1.11 s vs 1.23 s min), loses at 200
-    (1.30 vs 1.14) and degrades linearly past it (1000 files: 2.97 vs
-    1.17; 2000: 5.11 vs 1.09) -- the r14 1,000-file boundary was a
-    guess and sat ~2.5x past the crossover. 128 splits the bracketed
-    [100, 200) crossover; identical output either way."""
+    cost. Measured (2M value rows, interleaved A/B): literal wins at
+    <=100 files (1.11 s vs 1.23 s min), loses at 200 (1.30 vs 1.14)
+    and degrades linearly past it (1000 files: 2.97 vs 1.17; 2000:
+    5.11 vs 1.09). 128 splits the bracketed [100, 200) crossover;
+    identical output either way."""
     from itertools import chain
 
     if len(m_by_file) <= 128:
@@ -534,7 +558,7 @@ def _bloom_entry_d_bound(
     entry: dict, k: int, target_fpp: float | None
 ) -> int | None:
     """Distinct-count upper bound for an existing per-file bloom entry:
-    the stored ``d`` when present (r15+ manifests record the bound the
+    the stored ``d`` when present (manifests record the bound the
     bitmap was sized from), else inverted from ``m`` at the manifest's
     recorded ``target_fpp`` -- _bloom_bits only ever rounds m UP from
     k*d / -ln(1-fpp^(1/k)), so d <= m * -ln(1-fpp^(1/k)) / k holds and
@@ -578,14 +602,14 @@ def _bloom_rebuild_spliced(
     old entries are all-NULL files contributing zero values) -- UNLESS
     the rewrite may have CHANGED the column's values (update_where
     set_exprs; passed as ``changed_cols``), in which case only the
-    footer row count bounds it. r14 sized from the row count alone,
-    which inflated low-NDV columns' bitmaps ~rows/NDV-fold per rewrite
-    (VERDICT r14 #3); the cap keeps them near the exact build's size
+    footer row count bounds it. Sizing from the row count alone would
+    inflate low-NDV columns' bitmaps ~rows/NDV-fold per rewrite; the
+    cap keeps them near the exact build's size
     while the unique-key case stays bit-identical (bound == row count).
     FP rate only ever improves vs target; pruning correctness is
     m-independent because every entry stores its own ``m``. The sizing
-    target_fpp comes from the manifest payload when recorded (r15+;
-    older manifests size new bitmaps at the 0.01 default, and a column
+    target_fpp comes from the manifest payload when recorded (older
+    manifests without it size new bitmaps at the 0.01 default, and a column
     with an old entry that records neither ``d`` nor the payload's
     target_fpp is sized from the footer row count alone)."""
     import glob as _glob
@@ -665,10 +689,7 @@ def _bloom_rebuild_spliced(
         "target_fpp": target_fpp,
         "files": out,
     }
-    tmp = os.path.join(new_snap, f".{_BLOOM}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, os.path.join(new_snap, _BLOOM))
+    _atomic_write(os.path.join(new_snap, _BLOOM), json.dumps(payload))
 
 
 def write_bloom_manifest(
@@ -699,8 +720,8 @@ def write_bloom_manifest(
     membership probe recomputes the identical cast for those types).
     NULLs are not indexed -- equality pruning never matches NULL anyway.
 
-    Sizing (r7 verdict #2 -- the fixed default saturated at bench
-    scale): with d distinct keys in a file, FP rate = (1-e^(-k*d/m))^k,
+    Sizing (one fixed size for every file saturates at scale): with d
+    distinct keys in a file, FP rate = (1-e^(-k*d/m))^k,
     so ``m`` is derived PER FILE from that file's own distinct count
     for ``target_fpp`` (_bloom_bits; ~9.9 bits/key at the 1% default)
     and stored per (file, col) in the manifest. Passing an explicit
@@ -710,7 +731,7 @@ def write_bloom_manifest(
     saturation warning naming the file and its fill. A false positive
     only ever costs a kept file, never correctness.
 
-    ``sizing`` (r15, VERDICT r14 #6): the default ``"exact"`` sizes
+    ``sizing``: the default ``"exact"`` sizes
     each bitmap from its file's exact distinct count -- one distinct
     exchange + a persisted intermediate + two collect jobs per column,
     the right spend for a long-lived layout. ``sizing="footer"`` is
@@ -726,7 +747,6 @@ def write_bloom_manifest(
     from and the payload records ``target_fpp`` -- COW splice rebuilds
     (_bloom_rebuild_spliced) reuse both to cap rewritten files' sizes
     and keep the original FP target."""
-    import json
     import warnings
 
     if sizing not in ("exact", "footer"):
@@ -778,10 +798,9 @@ def write_bloom_manifest(
             "target_fpp": target_fpp,
             "files": out,
         }
-        tmp = os.path.join(snapshot_dir, f".{_BLOOM}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, os.path.join(snapshot_dir, _BLOOM))
+        _atomic_write(
+            os.path.join(snapshot_dir, _BLOOM), json.dumps(payload)
+        )
         return payload
     for col in cols:
         pairs = (
@@ -836,10 +855,7 @@ def write_bloom_manifest(
                 "words": wmap,
             }
     payload = {"m": m, "k": k, "target_fpp": target_fpp, "files": out}
-    tmp = os.path.join(snapshot_dir, f".{_BLOOM}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, os.path.join(snapshot_dir, _BLOOM))
+    _atomic_write(os.path.join(snapshot_dir, _BLOOM), json.dumps(payload))
     return payload
 
 
@@ -851,12 +867,11 @@ def prune_files_bloom(snapshot_dir: str, col: str, value) -> list[str]:
     manifest with a bitmap for ``col`` and missing bits is provably
     excluded (no false negatives by bloom construction).
 
-    Bitmap sizes are PER FILE (r7 verdict #2): each (file, col) entry
-    carries its own ``m`` next to its words, so the probe positions are
-    recomputed per file; pre-r8 manifests (flat word maps, one global
-    ``m``) still read correctly."""
+    Bitmap sizes are PER FILE: each (file, col) entry carries its own
+    ``m`` next to its words, so the probe positions are recomputed per
+    file; legacy manifests (flat word maps, one global ``m``) still
+    read correctly."""
     import glob
-    import json
 
     if value is None:
         raise ValueError("bloom pruning is for non-NULL equality probes")
@@ -874,7 +889,7 @@ def prune_files_bloom(snapshot_dir: str, col: str, value) -> list[str]:
         if entry is None:
             keep.append(path)  # no evidence recorded: conservative
             continue
-        if "words" in entry:  # per-file-sized format (r8+)
+        if "words" in entry:  # per-file-sized format
             m, words = entry["m"], entry["words"]
         else:  # legacy flat map with one global m
             m, words = payload["m"], entry
@@ -987,7 +1002,7 @@ def change_feed(
         raise ValueError(f"schema changed between snapshots: {changed}")
     # non-comparable columns fail struct equality at ANALYSIS time with
     # an opaque AnalysisException -- surface the contract error instead,
-    # naming the offending columns (ADVICE r5)
+    # naming the offending columns
     bad = sorted(
         name for name, dt in old_schema.items() if _uncomparable_fields(dt)
     )
@@ -1163,8 +1178,8 @@ def apply_changes(
                 # MERGE rewrites union NEW upsert rows into the
                 # rewritten files, so no column's value set is bounded
                 # by the old affected entries -- the bloom splice must
-                # size every column from footer row counts (r14
-                # behavior), never the old-entry distinct cap
+                # size every column from footer row counts, never the
+                # old-entry distinct cap
                 changed_cols=frozenset(upserts.columns),
             )
             return report["version"]
@@ -1255,7 +1270,7 @@ def optimize_table(
             stats_cols = [cluster_by]
     else:
         df = df.coalesce(target_files)
-    # carry the commit-meta sidecar forward (ADVICE r7): meta contents
+    # carry the commit-meta sidecar forward: meta contents
     # (e.g. maintain_view_stream's applied-batch-id replay marker) are
     # layout-independent, and losing them across maintenance would
     # reset exactly-once tracking -- a replayed micro-batch after an
@@ -1314,18 +1329,9 @@ def compact_small_files(
     large = [p for p in parts if p not in set(small)]
     if len(small) < 2:
         return pinned
-    if expected is not None:
-        cur = current_version(table_dir) or 0
-        if cur != expected:
-            raise ConcurrentCommitError(
-                f"{table_dir}: expected v{expected}, found v{cur}"
-            )
     small_total = sum(os.path.getsize(p) for p in small)
     n_out = max(1, math.ceil(small_total / target_file_bytes))
-    nxt = (max(versions(table_dir), default=0)) + 1
-    while not _claim(table_dir, f"._claim_v{nxt}"):
-        nxt += 1
-    new_snap = os.path.join(table_dir, f"v={nxt}")
+    nxt, new_snap = _stage(table_dir, expected)
     spark.read.parquet(*small).coalesce(n_out).write.mode("error").parquet(
         new_snap
     )
@@ -1333,22 +1339,8 @@ def compact_small_files(
         os.link(p, os.path.join(new_snap, os.path.basename(p)))
     if stats_cols:
         write_stats_manifest(new_snap, stats_cols)
-    # carry the commit-meta sidecar forward (ADVICE r7; see
-    # optimize_table): replay markers must survive maintenance commits
-    old_meta = os.path.join(snap, _META)
-    if os.path.exists(old_meta):
-        os.link(old_meta, os.path.join(new_snap, _META))
-    if expected is not None and not _claim(
-        table_dir, f"._commit_from_v{expected}"
-    ):
-        raise ConcurrentCommitError(
-            f"{table_dir}: another writer already committed the "
-            f"transition out of v{expected}"
-        )
-    fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="._latest_")
-    with os.fdopen(fd, "w") as f:
-        f.write(str(nxt))
-    os.replace(tmp, _pointer_path(table_dir))
+    # replay markers must survive maintenance commits (see optimize_table)
+    _publish(table_dir, nxt, expected, commit_meta(table_dir, pinned))
     return nxt
 
 
@@ -1397,10 +1389,7 @@ def clone_table(
             os.link(
                 os.path.join(root, name), os.path.join(target, name)
             )
-    fd, tmp = tempfile.mkstemp(dir=dst_dir, prefix="._latest_")
-    with os.fdopen(fd, "w") as f:
-        f.write("1")
-    os.replace(tmp, _pointer_path(dst_dir))
+    _atomic_write(_pointer_path(dst_dir), "1")
     return 1
 
 
@@ -1540,8 +1529,8 @@ def scd2_join(
     Facts with no valid version (or NULL keys) keep NULL dimension
     columns under the default left join.
 
-    Fact and non-key dimension column names must be disjoint (ADVICE
-    r7: a shared audit-ish column would otherwise produce DUPLICATE
+    Fact and non-key dimension column names must be disjoint (a
+    shared audit-ish column would otherwise produce DUPLICATE
     output column names, breaking downstream selects ambiguously far
     from the cause) -- collisions raise here, at the join; rename or
     drop on the dimension side first."""
@@ -1578,9 +1567,13 @@ def scd2_join(
 
 def _collect_metrics_count(df: DataFrame, name: str) -> int:
     """Number of CollectMetrics nodes named ``name`` in ``df``'s
-    analyzed logical plan -- the enforcement walk for _cow_rewrite's
-    observe-exactly-once contract. Walks the JVM tree directly (no
-    plan-string grep, which maxPlanStringLength could truncate)."""
+    OPTIMIZED logical plan -- the enforcement walk for _cow_rewrite's
+    observe-exactly-once contract. The optimized plan, not the analyzed
+    one, because that is what runs: a branch the optimizer prunes (a
+    union arm under ``filter(lit(False))``) loses its CollectMetrics,
+    and an observation that never fires cannot be read. Walks the JVM
+    tree directly (no plan-string grep, which maxPlanStringLength could
+    truncate)."""
 
     def walk(jnode) -> int:
         n = (
@@ -1596,7 +1589,7 @@ def _collect_metrics_count(df: DataFrame, name: str) -> int:
             n += walk(ch.apply(i))
         return n
 
-    return walk(df._jdf.queryExecution().analyzed())
+    return walk(df._jdf.queryExecution().optimizedPlan())
 
 
 def _cow_rewrite(
@@ -1636,9 +1629,7 @@ def _cow_rewrite(
     snap = os.path.join(table_dir, f"v={pinned}")
     all_files = sorted(_glob.glob(os.path.join(snap, "*.parquet")))
     if not all_files:
-        import glob as _g
-
-        if _g.glob(os.path.join(snap, "*", "")):
+        if _glob.glob(os.path.join(snap, "*", "")):
             raise ValueError(
                 f"{snap} is a hive-partitioned snapshot: the COW "
                 "file-reuse core works on flat stats-manifested "
@@ -1686,12 +1677,12 @@ def _cow_rewrite(
     # the match count rides the rewrite job as an observed metric
     # (CollectMetrics above the affected-file scan) instead of a
     # separate count pass -- the affected files are scanned ONCE per
-    # commit (r14). CONTRACT (r15, enforced below): the rewrite
-    # callback must route ``aff`` into its output EXACTLY ONCE -- zero
-    # routes would make obs.get block forever (the metric never
-    # fires), two routes (a union / self-join of ``aff``) would
-    # double-count matches and silently corrupt rows_deleted /
-    # rows_updated and the zero-match rollback decision. The analyzed
+    # commit. CONTRACT (enforced below): the rewrite callback must
+    # route ``aff`` into its output EXACTLY ONCE -- zero routes (or a
+    # route the optimizer prunes) would leave the metric unfired and
+    # obs.get unreadable, two routes (a union / self-join of ``aff``)
+    # would double-count matches and silently corrupt rows_deleted /
+    # rows_updated and the zero-match rollback decision. The optimized
     # plan of the callback's output is checked for exactly one
     # CollectMetrics node carrying this commit's unique observation
     # name BEFORE any side effect (no claim, no dir, no job), so a
@@ -1710,22 +1701,16 @@ def _cow_rewrite(
             f"_cow_rewrite: the rewrite callback must route the "
             f"observed affected-file frame into its output exactly "
             f"once (found {n_obs} CollectMetrics node(s) for "
-            f"{obs_name!r}); zero routes would hang the match-count "
-            f"observation, multiple routes would double-count matches. "
-            f"Derive the output from ``aff`` by filter/withColumns/"
-            f"join -- a pure-insert callback must still reference it "
-            f"once (e.g. union an aff.filter(lit(False)) branch)."
+            f"{obs_name!r} in the optimized plan); zero routes would "
+            f"leave the match-count observation unfired, multiple "
+            f"routes would double-count matches. Derive the output "
+            f"from ``aff`` by filter/withColumns/join -- a pure-insert "
+            f"callback must still reference it once, e.g. "
+            f"aff.join(inserts, key, 'left_anti').unionByName(inserts) "
+            f"(the apply_changes shape); a branch the optimizer prunes, "
+            f"such as aff.filter(lit(False)), does not count."
         )
-    if expected is not None:
-        cur = current_version(table_dir) or 0
-        if cur != expected:
-            raise ConcurrentCommitError(
-                f"{table_dir}: expected v{expected}, found v{cur}"
-            )
-    nxt = (max(versions(table_dir), default=0)) + 1
-    while not _claim(table_dir, f"._claim_v{nxt}"):
-        nxt += 1
-    new_snap = os.path.join(table_dir, f"v={nxt}")
+    nxt, new_snap = _stage(table_dir, expected)
     os.makedirs(new_snap)
     for path in survivors:
         os.link(
@@ -1746,10 +1731,7 @@ def _cow_rewrite(
         import shutil
 
         shutil.rmtree(new_snap)
-        try:
-            os.remove(os.path.join(table_dir, f"._claim_v{nxt}"))
-        except FileNotFoundError:
-            pass
+        _rm_quiet(os.path.join(table_dir, f"._claim_v{nxt}"))
         return {
             "version": None,
             "files_linked": 0,
@@ -1774,7 +1756,7 @@ def _cow_rewrite(
         with open(bloom_path) as fh:
             payload = json.load(fh)
         if payload.get("m") is None:
-            # per-file-sized manifest (the r8+ default): splice linked
+            # per-file-sized manifest (the default): splice linked
             # files' entries verbatim, rescan only the rewritten files
             # (one job per column -- see _bloom_rebuild_spliced)
             _bloom_rebuild_spliced(
@@ -1797,21 +1779,7 @@ def _cow_rewrite(
                 write_bloom_manifest(
                     spark, new_snap, bloom_cols, k=payload.get("k", 5)
                 )
-    meta = commit_meta(table_dir, version=pinned)
-    if meta is not None:
-        with open(os.path.join(new_snap, _META), "w") as fh:
-            json.dump(meta, fh)
-    if expected is not None and not _claim(
-        table_dir, f"._commit_from_v{expected}"
-    ):
-        raise ConcurrentCommitError(
-            f"{table_dir}: another writer already committed the "
-            f"transition out of v{expected}"
-        )
-    fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="._latest_")
-    with os.fdopen(fd, "w") as f:
-        f.write(str(nxt))
-    os.replace(tmp, _pointer_path(table_dir))
+    _publish(table_dir, nxt, expected, commit_meta(table_dir, pinned))
     return {
         "version": nxt,
         "files_linked": len(survivors),
@@ -1848,7 +1816,7 @@ def delete_where(
     is committed (report says so); when the stats manifest already
     proves zero matches, not a single job runs, and when matches only
     vanish inside a stats-intersecting band the staged snapshot is
-    discarded before the pointer moves (r14 -- the match count rides
+    discarded before the pointer moves (the match count rides
     the rewrite job as an observed metric, so affected files are
     scanned once, not twice). The new snapshot's stats manifest is
     rebuilt from parquet footers (KB-priced metadata walk); a bloom
@@ -1989,7 +1957,7 @@ def verify_absent(
     remains.
 
     Degenerate snapshots certify vacuously instead of crashing the
-    audit (review finding -- forget_value would otherwise raise AFTER
+    audit (forget_value would otherwise raise AFTER
     the erasure already ran and lose its report): a claimed-but-empty
     dir (writer crashed mid-write) holds no data files and therefore
     no rows; a pre-schema-evolution snapshot that never HAD ``col``

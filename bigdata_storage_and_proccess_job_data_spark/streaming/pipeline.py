@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.functions.eventtime import interval_expr
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 from bigdata_storage_and_proccess_job_data_spark.functions.eventtime import ensure_ltz
@@ -52,7 +52,7 @@ def kafka_stream(
     flatten. Requires the spark-sql-kafka package on the classpath (not
     installed in the test container -- covered by construct-only tests);
     when absent, the load() failure is re-raised naming the EXACT
-    --packages coordinate for this Spark build (VERDICT r6 #8)."""
+    --packages coordinate for this Spark build."""
     try:
         raw = (
             spark.readStream.format("kafka")
@@ -78,6 +78,24 @@ def kafka_stream(
     return raw.selectExpr("CAST(value AS STRING) AS _json").select(
         F.from_json(F.col("_json"), value_schema).alias("data")
     ).select("data.*")
+
+
+def _start(
+    writer: DataStreamWriter,
+    checkpoint_dir: str,
+    available_now: bool,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Start a sink: checkpoint at ``checkpoint_dir``, then the
+    availableNow trigger (drain what is there, stop), else a
+    ``processing_time`` trigger, else Spark's default micro-batch
+    cadence."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 def fan_out_foreach_batch(
@@ -107,14 +125,12 @@ def fan_out_foreach_batch(
         finally:
             batch_df.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream_df.writeStream.foreachBatch(process),
+        checkpoint_dir,
+        trigger_available_now,
+        processing_time,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def memory_sink(
@@ -211,12 +227,11 @@ def exactly_once_append(
             f"{path}/batch_id={batch_id}"
         )
 
-    writer = deduped.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        deduped.writeStream.foreachBatch(write_batch),
+        checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merge_stream(
@@ -274,12 +289,9 @@ def merge_stream(
                 small_bytes=compact_small_bytes,
             )
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_ingest_stream(
@@ -406,12 +418,48 @@ def dedup_ingest_stream(
             except NameError:
                 pass
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _fold_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    table_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> bool:
+    """The exactly-once fold every maintained-state sink shares: build
+    ``partial(batch_df)`` and commit ``merge(state, partial)`` over the
+    current version (the partial alone on an empty table). Returns
+    True if the batch was applied, False on an empty batch or a
+    recognized replay.
+
+    The sink records the batch id IN the snapshot it publishes
+    (commit_version(meta={"last_batch": id}) -- the marker and the
+    fold share one atomic pointer swap), so a replayed foreachBatch
+    call after a crash either sees its own marker (skip) or the
+    pre-batch state (apply) -- never half. The commit carries
+    expected=<read version>, so an unrelated writer racing the table
+    fails the sink loudly instead of losing either update."""
+    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
+
+    if batch_df.isEmpty():
+        return False
+    cur = versioned.current_version(table_dir)
+    if cur is None:
+        new_state = partial(batch_df)
+    else:
+        meta = versioned.commit_meta(table_dir, cur) or {}
+        if meta.get("last_batch", -1) >= batch_id:
+            return False  # replay of an already-folded batch
+        state = versioned.read_version(batch_df.sparkSession, table_dir, cur)
+        new_state = merge(state, partial(batch_df))
+    versioned.commit_version(
+        new_state, table_dir, expected=cur, meta={"last_batch": batch_id}
+    )
+    return True
 
 
 def _apply_view_batch(
@@ -422,44 +470,18 @@ def _apply_view_batch(
     measures: list[str],
 ) -> bool:
     """One micro-batch of the maintained-view sink, factored out so the
-    exactly-once guard is directly testable. Returns True if the batch
-    was applied, False if it was recognized as a replay and skipped.
+    exactly-once guard is directly testable (see _fold_batch).
 
     Exactly-once without content-idempotence: folding the same rows
-    into count/sum state twice double-counts, so the sink records the
-    batch id IN the snapshot it publishes (commit_version(meta=...) --
-    the marker and the fold share one atomic pointer swap) and a
-    replayed batch sees its own marker and no-ops. Concurrency: the
-    commit carries expected=<read version>, so an unrelated writer
-    racing the view table fails the sink loudly instead of losing
-    either update."""
+    into count/sum state twice double-counts, so the batch-id marker
+    is what makes a replayed batch no-op."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(table_dir)
-    if cur is not None:
-        meta = versioned.commit_meta(table_dir, cur) or {}
-        if meta.get("last_batch", -1) >= batch_id:
-            return False  # replay of an already-folded batch
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.agg_state_merge(
-            state,
-            aggregates.agg_state_init(batch_df, keys, measures),
-            keys,
-            measures,
-        )
-    else:
-        new_state = aggregates.agg_state_init(batch_df, keys, measures)
-    versioned.commit_version(
-        new_state,
-        table_dir,
-        expected=cur,
-        meta={"last_batch": batch_id},
+    return _fold_batch(
+        batch_df, batch_id, table_dir,
+        lambda b: aggregates.agg_state_init(b, keys, measures),
+        lambda state, p: aggregates.agg_state_merge(state, p, keys, measures),
     )
-    return True
 
 
 def maintain_view_stream(
@@ -487,12 +509,9 @@ def maintain_view_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _apply_view_batch(batch_df, batch_id, table_dir, keys, measures)
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _apply_sketch_batch(
@@ -503,9 +522,8 @@ def _apply_sketch_batch(
     dims: list[str] | None,
     k: int,
 ) -> bool:
-    """One micro-batch of the maintained-sketch sink (factored out so
-    the exactly-once guard is directly testable, the _apply_view_batch
-    shape). Returns False on empty batches and recognized replays.
+    """One micro-batch of the maintained-sketch sink (the _fold_batch
+    shape, directly testable like _apply_view_batch).
 
     Unlike count/sum state, the KMV fold is CONTENT-idempotent (merge
     is a set union: folding the same batch twice cannot change the
@@ -514,30 +532,12 @@ def _apply_sketch_batch(
     it. Still recorded: an exactly-once audit trail costs one meta
     field."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(table_dir)
-    partial = aggregates.kmv_sketch(batch_df, key, dims=dims, k=k)
-    if cur is not None:
-        meta = versioned.commit_meta(table_dir, cur) or {}
-        if meta.get("last_batch", -1) >= batch_id:
-            return False
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.kmv_merge(
-            state.unionByName(partial), dims=dims, k=k
-        )
-    else:
-        new_state = partial
-    versioned.commit_version(
-        new_state,
-        table_dir,
-        expected=cur,
-        meta={"last_batch": batch_id},
+    return _fold_batch(
+        batch_df, batch_id, table_dir,
+        lambda b: aggregates.kmv_sketch(b, key, dims=dims, k=k),
+        lambda state, p: aggregates.kmv_merge(state.unionByName(p), dims=dims, k=k),
     )
-    return True
 
 
 def maintain_sketch_stream(
@@ -570,12 +570,9 @@ def maintain_sketch_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _apply_sketch_batch(batch_df, batch_id, table_dir, key, dims, k)
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _apply_dd_batch(
@@ -586,43 +583,20 @@ def _apply_dd_batch(
     dims: list[str] | None,
     gamma: float,
 ) -> bool:
-    """One micro-batch of the maintained-quantile sink (the
-    _apply_sketch_batch shape). Returns False on empty batches and
-    recognized replays.
+    """One micro-batch of the maintained-quantile sink (the _fold_batch
+    shape).
 
     CONTRAST with the KMV sink: DDSketch merge is ADDITIVE (bin counts
     SUM), not a set union -- folding the same batch twice double-counts
     every bin and silently skews every quantile. The batch-id marker is
-    therefore correctness-critical here, not just a wasted-work saver:
-    the marker is written in the SAME atomic commit as the merged state
-    (commit_version meta), so a replayed foreachBatch call after a
-    crash either sees its own marker (skip) or the pre-batch state
-    (apply) -- never half."""
+    therefore correctness-critical here, not just a wasted-work saver."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(table_dir)
-    partial = aggregates.dd_sketch(batch_df, col, gamma=gamma, dims=dims)
-    if cur is not None:
-        meta = versioned.commit_meta(table_dir, cur) or {}
-        if meta.get("last_batch", -1) >= batch_id:
-            return False
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.dd_merge(
-            state.unionByName(partial), dims=dims
-        )
-    else:
-        new_state = partial
-    versioned.commit_version(
-        new_state,
-        table_dir,
-        expected=cur,
-        meta={"last_batch": batch_id},
+    return _fold_batch(
+        batch_df, batch_id, table_dir,
+        lambda b: aggregates.dd_sketch(b, col, gamma=gamma, dims=dims),
+        lambda state, p: aggregates.dd_merge(state.unionByName(p), dims=dims),
     )
-    return True
 
 
 def maintain_quantile_stream(
@@ -656,12 +630,9 @@ def maintain_quantile_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _apply_dd_batch(batch_df, batch_id, table_dir, col, dims, gamma)
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _apply_cms_batch(
@@ -673,36 +644,19 @@ def _apply_cms_batch(
     depth: int,
     weight_col: str | None,
 ) -> bool:
-    """One micro-batch of the maintained-frequency sink (the
-    _apply_dd_batch shape; CMS merge is ADDITIVE like DDSketch, so the
-    atomically-committed batch-id marker is correctness-critical --
-    a replay would inflate every cell and CMS's one-sided guarantee
-    would silently widen)."""
+    """One micro-batch of the maintained-frequency sink (the _fold_batch
+    shape; CMS merge is ADDITIVE like DDSketch, so the batch-id marker
+    is correctness-critical -- a replay would inflate every cell and
+    CMS's one-sided guarantee would silently widen)."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(table_dir)
-    partial = aggregates.cms_sketch(
-        batch_df, key, width=width, depth=depth, weight_col=weight_col
+    return _fold_batch(
+        batch_df, batch_id, table_dir,
+        lambda b: aggregates.cms_sketch(
+            b, key, width=width, depth=depth, weight_col=weight_col
+        ),
+        lambda state, p: aggregates.cms_merge(state.unionByName(p)),
     )
-    if cur is not None:
-        meta = versioned.commit_meta(table_dir, cur) or {}
-        if meta.get("last_batch", -1) >= batch_id:
-            return False
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.cms_merge(state.unionByName(partial))
-    else:
-        new_state = partial
-    versioned.commit_version(
-        new_state,
-        table_dir,
-        expected=cur,
-        meta={"last_batch": batch_id},
-    )
-    return True
 
 
 def maintain_frequency_stream(
@@ -731,9 +685,6 @@ def maintain_frequency_stream(
             batch_df, batch_id, table_dir, key, width, depth, weight_col
         )
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bigdata_storage_and_proccess_job_data_spark.sources import lake
-from bigdata_storage_and_proccess_job_data_spark.streaming import windows
+from bigdata_storage_and_proccess_job_data_spark.streaming import pipeline, windows
 
 
 def continuous_rollup(
@@ -62,16 +62,12 @@ def continuous_rollup(
         ).withColumn("_version", F.lit(batch_id).cast("long"))
         lake.upsert_by_key(batch_df.sparkSession, out, log_path, "_key", "_version")
 
-    writer = (
-        agg.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    query = pipeline._start(
+        agg.writeStream.foreachBatch(upsert).outputMode("update"),
+        checkpoint_dir,
+        trigger_available_now,
+        processing_time,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    query = writer.start()
     query._rollup_key_cols = key_cols  # introspection for tests
     return query
 
@@ -88,6 +84,6 @@ def compact_rollup(spark: SparkSession, log_path: str, table_dir: str) -> int:
     previous snapshot unaffected); returns the new version."""
     from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    return versioned.commit_version(
-        lake.read_upserted(spark, log_path, "_key", "_version"), table_dir
+    return versioned.compact_log_versioned(
+        spark, log_path, table_dir, "_key", "_version"
     )

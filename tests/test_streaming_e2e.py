@@ -304,11 +304,11 @@ def test_maintain_view_stream_folds_and_survives_replay(spark, tmp_path):
     }
     assert after["a"] == 107
 
-    # maintenance must not reset the replay guard (ADVICE r7 medium):
-    # optimize_table / compact_small_files publish a NEW version -- if
-    # the _commit_meta sidecar didn't travel, last_batch would read -1
-    # and a replayed micro-batch would double-fold. Both maintenance
-    # ops carry it; the already-applied batch id still no-ops after.
+    # maintenance must not reset the replay guard: optimize_table /
+    # compact_small_files / the COW delete_where publish a NEW version
+    # -- if the _commit_meta sidecar didn't travel, last_batch would
+    # read -1 and a replayed micro-batch would double-fold. All three
+    # carry it; the already-applied batch id still no-ops after.
     marker = meta["last_batch"] + 1
     versioned.optimize_table(spark, view_dir, target_files=1)
     assert versioned.commit_meta(view_dir)["last_batch"] == marker
@@ -330,6 +330,21 @@ def test_maintain_view_stream_folds_and_survives_replay(spark, tmp_path):
     )
     versioned.compact_small_files(spark, view_dir, small_bytes=1 << 30)
     assert versioned.commit_meta(view_dir)["last_batch"] == marker
+    # COW path: delete a group the fold never touches again
+    v_cow = versioned.delete_where(spark, view_dir, "k", eq="c")["version"]
+    assert v_cow == versioned.current_version(view_dir)
+    assert versioned.commit_meta(view_dir)["last_batch"] == marker
+    assert (
+        pipeline._apply_view_batch(
+            spark.createDataFrame([("a", 999)], schema),
+            marker,
+            view_dir,
+            keys,
+            measures,
+        )
+        is False
+    )
+    assert versioned.current_version(view_dir) == v_cow
     still = {
         r.k: r.sum_v
         for r in aggregates.agg_state_result(

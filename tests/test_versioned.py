@@ -2114,11 +2114,12 @@ def test_forget_value_erases_history_and_verifies(spark, tmp_path):
 
 
 def test_cow_rewrite_rejects_misrouted_observation(spark, tmp_path):
-    """r15 observe-contract enforcement: a rewrite callback that drops
+    """Observe-contract enforcement: a rewrite callback that drops
     the observed affected-file frame (the match count could never
-    fire -- obs.get would hang) or routes it twice (the count would
-    double) raises BEFORE any side effect: no new version dir, no
-    claim marker, pointer unchanged."""
+    fire), routes it through a branch the optimizer prunes (same, but
+    the analyzed plan still shows the node), or routes it twice (the
+    count would double) raises BEFORE any side effect: no new version
+    dir, no claim marker, pointer unchanged."""
     import os
 
     table = str(tmp_path / "obs_contract")
@@ -2132,6 +2133,8 @@ def test_cow_rewrite_rejects_misrouted_observation(spark, tmp_path):
     for bad in (
         lambda aff, pred: fresh.filter(F.lit(True)),  # zero routes
         lambda aff, pred: aff.unionByName(aff),  # double route
+        # pruned route: PruneFilters drops the branch's CollectMetrics
+        lambda aff, pred: aff.filter(F.lit(False)).unionByName(fresh),
     ):
         with pytest.raises(ValueError, match="exactly once"):
             versioned._cow_rewrite(
@@ -2374,3 +2377,35 @@ def test_bloom_manifest_footer_sizing_fast_path(spark, tmp_path):
     # the JSON on disk is the fast payload (last write wins)
     with open(os.path.join(snap, "_bloom.json")) as fh:
         assert json.load(fh)["target_fpp"] == 0.01
+
+
+def test_atomic_write_is_the_only_rename_in_sources():
+    """The snapshot commit protocol has one home: every pointer swap,
+    manifest write and meta sidecar goes through
+    versioned._atomic_write, so ``tempfile.mkstemp`` and ``os.replace``
+    may be called nowhere else under sources/ (a hand-rolled copy is
+    how a protocol fix misses a writer)."""
+    import ast
+    import os
+
+    root = os.path.dirname(versioned.__file__)
+    offenders = []
+    for name in sorted(os.listdir(root)):
+        if not name.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(root, name)).read())
+        allowed = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "_atomic_write":
+                allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and isinstance(node.func.value, ast.Name)
+                and (node.func.value.id, node.func.attr)
+                in {("tempfile", "mkstemp"), ("os", "replace")}
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{name}:{node.lineno}")
+    assert offenders == []
