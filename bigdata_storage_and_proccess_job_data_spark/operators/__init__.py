@@ -1,18 +1,14 @@
 """DataFrame -> DataFrame operators: dedup / near-dup (exact, MinHash,
 SimHash, incremental, clustering), similarity search (brute-force, LSH,
-IVF, PQ), fuzzy string joins + entity resolution, as-of and range joins,
-aggregation cubes + sketches (HLL/CMS/DDSketch/KMV) + robust stats
-(median/MAD outliers, correlation matrix, chi-square, autocorrelation,
-time-decayed aggregates, table profiler), market-basket pair mining,
-PageRank, training-corpus prep (chunking, PII, contamination, sampling,
-splits, LM quality scoring, line dedup, BPE tokenizer training,
-negative sampling, curriculum ordering, vocabulary coverage,
-Kneser-Ney scoring, compression-ratio signal), unigram-LM tokenizer
-training (unigram_lm.py), ranking/retrieval (BM25, MMR, exact MIPS +
-the MIPS->cosine reduction), funnels + retention matrices, linear
-models (one-pass ridge, distributed logistic GD, expression scoring),
+IVF, PQ, exact MIPS), as-of and range joins, aggregation cubes +
+sketches (HLL/CMS/DDSketch/KMV) + experiment and model-eval statistics
++ incremental aggregate maintenance + table profiler, PageRank and
+triangle counting, training-corpus prep (chunking, PII, contamination,
+sampling, splits, LM quality scoring, line dedup, BPE tokenizer
+training, negative sampling, curriculum ordering, vocabulary coverage,
+Kneser-Ney scoring), unigram-LM tokenizer training (unigram_lm.py),
+ranking/retrieval (BM25, MMR), funnels + sessions + retention matrices,
 ALS matrix factorization with MIPS recommendation serving, skew-split
-joins (hot_key_split_join), feature engineering (target encoding,
-Mahalanobis outliers, Davies-Bouldin), privacy release (DP noisy
-counts, k-anonymity, deterministic pseudonymization), and multimodal
-plumbing incl. perceptual-hash media dedup."""
+joins (hot_key_split_join), feature engineering (standardization,
+quantile bins, target encoding, weight of evidence), dimensionality
+reduction (PCA, JL, Mahalanobis), and multimodal feature extraction."""

@@ -5,8 +5,8 @@ The reference builds 7 hand-written groupBy().agg() cubes
 Here one builder covers them all: keys + a measure spec. Spark runs each
 as partial+final HashAggregate with map-side combine; a single shuffle on
 the group keys. At 100 TB the only knobs that matter are key cardinality
-and skew -- AQE skew handling is enabled in session.py, and callers can
-pre-salt via ``salt_keys`` for pathological dimensions.
+and skew -- AQE skew handling is enabled in session.py, and
+``salted_two_phase`` spreads pathological dimensions.
 """
 
 from __future__ import annotations
@@ -51,17 +51,6 @@ def _row_salt(buckets: int) -> Column:
     streaming skew fix would salt by a hash of (key, event-time) cols
     instead (deterministic per row, still spreads a hot key)."""
     return F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(buckets))
-
-
-def salt_keys(df: DataFrame, buckets: int = 16) -> DataFrame:
-    """Two-phase aggregation prep for a skewed BATCH frame: add a `_salt`
-    column so the first aggregation spreads hot keys over ``buckets``
-    reducers; the caller aggregates (key, _salt) first, then
-    re-aggregates by key. The salt is key-independent (see _row_salt) --
-    no key argument, it would be dead weight (ADVICE r3).
-
-    Use only for re-aggregatable measures (count/sum/min/max)."""
-    return df.withColumn("_salt", _row_salt(buckets))
 
 
 def salted_two_phase(
@@ -129,7 +118,7 @@ def count_distinct_spread(
     rewrite Catalyst applies to count_distinct internally -- exposed as
     an operator because the naive collect_set shape is what users
     actually write, and the registered skew_distinct_naive/spread bench
-    pair measures the difference on a Zipf key (VERDICT r4 #6)."""
+    pair measures the difference on a Zipf key."""
     key_col = F.col(key) if isinstance(key, str) else key
     val_col = F.col(val) if isinstance(val, str) else val
     pairs = df.select(
@@ -152,73 +141,23 @@ def global_sum(df: DataFrame, col: str, alias: str = "total") -> DataFrame:
     return df.agg(F.sum(col).alias(alias))
 
 
-def key_skew_report(df: DataFrame, key: str | Column) -> DataFrame:
-    """Key-distribution diagnostic: one row with n_keys, n_rows,
-    max_key_count, and skew_ratio = max_count / mean_count -- the number
-    you read BEFORE reaching for salted_two_phase (ratio ~1 = uniform;
-    ratio >> shuffle-partition count = one reducer melts). Two hash
-    aggregations: per-key counts (the only wide stage, map-side partial
-    combine applies), then a single-row fold over the tiny count frame.
-    """
-    key_col = F.col(key) if isinstance(key, str) else key
-    counts = df.groupBy(key_col.alias("_k")).agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    return counts.agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum("_cnt").cast("long").alias("n_rows"),
-        F.max("_cnt").cast("long").alias("max_key_count"),
-        (
-            F.max("_cnt") * F.count(F.lit(1)) / F.sum("_cnt")
-        ).alias("skew_ratio"),
-    )
-
-
-def expectation_report(
-    df: DataFrame,
-    checks: dict[str, Column],
-    extra_aggs: dict[str, Column] | None = None,
-) -> DataFrame:
-    """Data-quality expectations as ONE aggregation pass: each check is a
-    boolean Column evaluated per row; the report is one row of violation
-    counts (sum of failures per rule) plus the row total -- the
-    dbt-test / Deequ shape without a framework. ``extra_aggs`` lets
-    whole-table rules (key uniqueness = count - count_distinct) ride the
-    SAME pass. At 100 TB this is a single scan with a partial+final agg,
-    never N per-rule scans.
-
-    NULL semantics: a check that evaluates to NULL (e.g. ``price > 0``
-    on a NULL price) counts as a VIOLATION -- expectations are
-    must-prove-true, and `when(cond, 0).otherwise(1)` encodes that; the
-    inverted `when(~cond, 1).otherwise(0)` would silently PASS null rows
-    (the three-valued-logic trap)."""
-    aggs = _violation_aggs(checks)
-    aggs += [
-        expr.alias(name) for name, expr in (extra_aggs or {}).items()
-    ]
-    return df.agg(F.count(F.lit(1)).cast("long").alias("n_rows"), *aggs)
-
-
-def _violation_aggs(checks: dict[str, Column]) -> list[Column]:
-    """Violation-count aggregate per rule, NULL-counts-as-violation
-    encoding shared by expectation_report and observe_expectations."""
-    return [
-        F.sum(F.when(cond, 0).otherwise(1)).cast("long").alias(name)
-        for name, cond in checks.items()
-    ]
-
-
 def observe_expectations(
     df: DataFrame,
     checks: dict[str, Column],
     name: str = "expectations",
 ):
-    """The same expectation rules as ``expectation_report``, computed
-    DURING the frame's own action instead of by a dedicated aggregation
-    job: ``df.observe`` piggybacks the violation counters on whatever
-    the caller already executes (the production write, the downstream
-    agg), so at 100 TB data quality costs ZERO extra scans -- an
-    expectation_report pass would re-read the table.
+    """Data-quality expectations computed DURING the frame's own
+    action instead of by a dedicated aggregation job: each check is a
+    boolean Column, and ``df.observe`` piggybacks the violation
+    counters on whatever the caller already executes (the production
+    write, the downstream agg), so at 100 TB data quality costs ZERO
+    extra scans -- a separate report pass would re-read the table.
+
+    NULL semantics: a check that evaluates to NULL (e.g. ``price > 0``
+    on a NULL price) counts as a VIOLATION -- expectations are
+    must-prove-true, and ``when(cond, 0).otherwise(1)`` encodes that;
+    the inverted ``when(~cond, 1).otherwise(0)`` would silently PASS
+    null rows (the three-valued-logic trap).
 
     Returns ``(observed_df, observation)``:
     - batch: ``observation`` is a ``pyspark.sql.Observation``; run any
@@ -234,7 +173,10 @@ def observe_expectations(
     observe node sits in the plan -- attach it BEFORE filters/joins that
     drop rows, or the counters see only the surviving rows."""
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
-    aggs += _violation_aggs(checks)
+    aggs += [
+        F.sum(F.when(cond, 0).otherwise(1)).cast("long").alias(rule)
+        for rule, cond in checks.items()
+    ]
     if df.isStreaming:
         return df.observe(name, *aggs), None
     from pyspark.sql import Observation
@@ -294,73 +236,11 @@ def hll_estimate(sketches: DataFrame) -> DataFrame:
     )
 
 
-def heavy_hitters(
-    df: DataFrame, col: str, min_share: float = 0.01
-) -> DataFrame:
-    """Keys holding at least ``min_share`` of all rows, with EXACT
-    counts -- the hot-key pre-flight that tells you what to salt (or
-    broadcast, or quarantine) before a join/agg melts one reducer.
-
-    Approximate-then-verify, the same shape as the LSH paths: pass 1 is
-    Spark's freqItems (Karp-Papadimitriou-Shenker lossy counting --
-    one scan, NO shuffle of the key space, candidate set bounded by
-    1/min_share); pass 2 exactly counts ONLY the candidates (the
-    semi-join filter means the shuffle carries candidate rows, never
-    the full key cardinality) with the row total riding the same scan
-    via observe. Exact groupBy over a 10^9-cardinality key would
-    shuffle everything to find the 5 keys that matter; this never
-    shuffles more than the hot keys' own rows.
-
-    Returns (key, exact_count, share) ordered by count desc. KPS
-    guarantees every key above the support threshold IS in the
-    candidate set (no false negatives); false positives are removed by
-    the exact verify.
-
-    ``min_share`` must be in [1e-4, 1): Spark's freqItems rejects
-    support below 1e-4 (the candidate set would be 1/support > 10,000
-    entries -- no longer a bounded driver-side set), and the KPS
-    no-false-negative guarantee only holds for supported values, so we
-    fail fast with the real contract instead of an opaque engine error."""
-    if not 1e-4 <= min_share < 1:
-        raise ValueError(
-            "min_share must be in [1e-4, 1): freqItems' support floor is "
-            f"1e-4, got {min_share!r}"
-        )
-    cands = df.stat.freqItems([col], support=min_share).first()[0]
-    if not cands:
-        return df.sparkSession.createDataFrame(
-            [], f"{col} {df.schema[col].dataType.simpleString()}, "
-            "exact_count LONG, share DOUBLE",
-        )
-    from pyspark.sql import Observation
-
-    obs = Observation("hh_total")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    counts = (
-        observed.filter(F.col(col).isin(list(cands)))
-        .groupBy(col)
-        .agg(F.count(F.lit(1)).alias("exact_count"))
-        .collect()
-    )
-    total = obs.get["n"]
-    rows = [
-        (r[0], r.exact_count, r.exact_count / total)
-        for r in counts
-        if r.exact_count >= min_share * total
-    ]
-    rows.sort(key=lambda t: (-t[1], str(t[0])))
-    return df.sparkSession.createDataFrame(
-        rows,
-        f"{col} {df.schema[col].dataType.simpleString()}, "
-        "exact_count LONG, share DOUBLE",
-    )
-
-
 # NULL keys hash to this sentinel so build and lookup agree on a real
 # bucket -- md5(concat(..)) of a NULL key is NULL, which would put NULL
 # keys in a NULL bucket that cms_lookup's equi-join can never match,
 # silently returning 0 and breaking the one-sided estimate>=truth
-# guarantee (ADVICE r6). The NUL control character can't round-trip
+# guarantee. The NUL control character can't round-trip
 # through a real string key, so no legitimate key collides with it.
 _CMS_NULL_SENTINEL = "\x00cms_null"
 
@@ -548,72 +428,6 @@ def dd_quantile(
     )
 
 
-def decayed_agg(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    value_col: str,
-    half_life_s: float,
-    ref_ts=None,
-    digits: int = 4,
-) -> DataFrame:
-    """Exponentially time-decayed aggregates per key: each row weighs
-    2^(-age / half_life) where age = ref - ts in seconds (microsecond
-    precision), so a row exactly one half-life old counts half as much
-    as a fresh one -- the freshness-weighted score behind trending
-    metrics and recency-weighted sampling (pair decayed_weight with
-    corpus.weighted_sample / weighted_take_k for "sample recent data
-    harder" mixtures).
-
-    ``ref_ts`` anchors the decay: a Column/literal timestamp, or None
-    to use max(ts) over ``df`` (deterministic -- never wall-clock; rows
-    newer than an explicit ref weigh > 1, which is the correct algebra
-    for a stale anchor). Computed as one hash agg plus, for the default
-    ref, a one-row broadcast crossJoin -- the established scalar
-    pattern; no second scan of the data.
-
-    NULL ts rows carry NULL weight and drop out of every measure; NULL
-    values drop out of decayed_sum/avg but still count toward
-    decayed_weight (they exist, they're just unvalued).
-
-    Returns keys + (decayed_sum, decayed_weight, decayed_avg), all
-    stable-rounded for cross-engine parity."""
-    if half_life_s <= 0:
-        raise ValueError("half_life_s must be > 0")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    if ref_ts is None:
-        ref = df.agg(F.max(ts_col).alias("_ref"))
-        base = df.crossJoin(F.broadcast(ref))
-        ref_col = F.col("_ref")
-    else:
-        base = df
-        ref_col = ref_ts if isinstance(ref_ts, Column) else F.lit(ref_ts)
-    age_s = (
-        F.unix_micros(ref_col) - F.unix_micros(F.col(ts_col))
-    ) / F.lit(1e6)
-    w = F.pow(F.lit(2.0), -age_s / F.lit(float(half_life_s)))
-    return (
-        base.withColumn("_w", w)
-        .groupBy(*keys)
-        .agg(
-            stable_round(F.sum(F.col("_w") * F.col(value_col)), digits).alias(
-                "decayed_sum"
-            ),
-            stable_round(F.sum("_w"), digits).alias("decayed_weight"),
-            stable_round(
-                F.sum(F.col("_w") * F.col(value_col))
-                / F.sum(
-                    F.when(F.col(value_col).isNotNull(), F.col("_w"))
-                ),
-                digits,
-            ).alias("decayed_avg"),
-        )
-    )
-
-
 def psi_bins(
     ref: DataFrame,
     cur: DataFrame,
@@ -623,8 +437,8 @@ def psi_bins(
 ) -> DataFrame:
     """Population Stability Index bins: has a numeric column's
     distribution DRIFTED between a reference snapshot and a current one
-    -- the standard feed/model monitoring metric (chi_square is the
-    categorical twin, profile_table the first-look). Bin edges are the
+    -- the standard feed/model monitoring metric (profile_table is the
+    first-look). Bin edges are the
     reference's exact quantiles (equal-population binning, the PSI
     convention), both sides bucket against those SAME edges, and each
     bin contributes (p - q) * ln(p / q); sum `contrib` for the
@@ -637,7 +451,7 @@ def psi_bins(
     agg per side with add-half smoothing ((n_b + 0.5) / (n + 0.5 *
     bins)) so empty bins stay finite and the zero-drift identity
     psi(ref, ref) = 0 holds exactly. NULLs are excluded on both sides
-    (null-rate drift belongs to profile_table/expectation_report).
+    (null-rate drift belongs to profile_table/observe_expectations).
 
     Returns (bin, ref_n, cur_n, ref_share, cur_share, contrib), one row
     per bin 0..bins-1."""
@@ -705,151 +519,6 @@ def psi_bins(
     )
 
 
-def autocorr(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    value_col: str,
-    lags: Sequence[int] = (1,),
-    digits: int = 4,
-) -> DataFrame:
-    """Per-key serial correlation at the given lags -- the "is this
-    series momentum-driven or mean-reverting (or is my residual still
-    structured)" diagnostic. For each lag L, Pearson corr between the
-    series and itself shifted by L positions in ``order_col`` order,
-    Pearson-over-pairs convention (moments from the overlapping pairs,
-    not the full series).
-
-    One window pass builds ALL requested lag columns (shared sort --
-    lag(L) over the same ordered window reuses one shuffle+sort), one
-    hash agg computes every lag's corr as sibling expressions, and the
-    wide row unpivots via inline. Ties in ``order_col`` make lag
-    nondeterministic (Spark sorts are not stable) -- pass a composite
-    ordering via a struct-ordered column upstream if ties exist.
-
-    Returns keys + (lag, n_pairs, acf)."""
-    if not lags or any(
-        (not isinstance(lg, int)) or lg < 1 for lg in lags
-    ):
-        raise ValueError("lags must be positive integers")
-    if len(set(lags)) != len(lags):
-        raise ValueError("duplicate lags")
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(order_col)
-    lagged = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        *[
-            F.lag(value_col, lg).over(w).alias(f"_l{lg}")
-            for lg in lags
-        ],
-    )
-    aggs = []
-    for lg in lags:
-        lcol = F.col(f"_l{lg}")
-        both = F.col("_v").isNotNull() & lcol.isNotNull()
-        aggs.append(
-            F.struct(
-                F.lit(lg).alias("lag"),
-                F.sum(both.cast("long")).alias("n_pairs"),
-                stable_round(F.corr("_v", f"_l{lg}"), digits).alias(
-                    "acf"
-                ),
-            ).alias(f"_a{lg}")
-        )
-    wide = lagged.groupBy(*keys).agg(*aggs)
-    return wide.select(
-        *keys,
-        F.inline(F.array(*[F.col(f"_a{lg}") for lg in lags])),
-    )
-
-
-def chi_square(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    digits: int = 4,
-) -> DataFrame:
-    """Chi-square test of independence between two categorical columns,
-    with Cramer's V effect size -- the "are these features related"
-    statistic (feature selection, drift detection between a column and
-    a partition label). Unlike DataFrame.crosstab (which materializes
-    the full contingency MATRIX on the driver), everything here stays
-    distributed in long form: one hash agg for observed cell counts,
-    two marginal aggs, an equi-join to attach expected counts, one
-    final fold -- category cardinality never touches the driver.
-
-    chi2 = sum over observed cells (obs - exp)^2 / exp plus the
-    correction for structurally-empty cells (a cell with obs = 0 still
-    contributes exp; summing only observed cells would understate, so
-    the missing mass n - sum(exp_observed) is added back -- algebra:
-    sum_all exp = n). dof = (R-1)(C-1); cramers_v = sqrt(chi2 / (n *
-    min(R-1, C-1))). Rows with a NULL in either column are excluded
-    (they form no category pair). Returns one row:
-    (n, r_levels, c_levels, dof, chi2, cramers_v)."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    base = df.filter(
-        F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
-    ).select(F.col(col_a).alias("_a"), F.col(col_b).alias("_b"))
-    obs = base.groupBy("_a", "_b").agg(F.count(F.lit(1)).alias("_o"))
-    ra = base.groupBy("_a").agg(F.count(F.lit(1)).alias("_ra"))
-    cb = base.groupBy("_b").agg(F.count(F.lit(1)).alias("_cb"))
-    joined = obs.join(ra, "_a").join(cb, "_b")
-    return (
-        joined.agg(
-            F.sum("_o").cast("double").alias("_n"),
-            F.count_distinct("_a").alias("r_levels"),
-            F.count_distinct("_b").alias("c_levels"),
-            F.sum(
-                F.col("_o")
-                * F.col("_o")
-                / (F.col("_ra") * F.col("_cb"))
-            ).alias("_s"),
-        )
-        # identity: sum (o-e)^2/e over ALL cells = n * (sum o^2/(ra*cb) - 1)
-        # (expected e = ra*cb/n; empty cells contribute exactly their e,
-        # which the algebra absorbs -- no driver-side matrix needed)
-        .select(
-            F.col("_n").cast("long").alias("n"),
-            "r_levels",
-            "c_levels",
-            (
-                (F.col("r_levels") - 1) * (F.col("c_levels") - 1)
-            ).alias("dof"),
-            stable_round(
-                F.col("_n") * (F.col("_s") - 1), digits
-            ).alias("chi2"),
-            stable_round(
-                F.sqrt(
-                    F.when(
-                        F.least(
-                            F.col("r_levels") - 1, F.col("c_levels") - 1
-                        )
-                        > 0,
-                        (F.col("_n") * (F.col("_s") - 1))
-                        / (
-                            F.col("_n")
-                            * F.least(
-                                F.col("r_levels") - 1,
-                                F.col("c_levels") - 1,
-                            )
-                        ),
-                    )
-                ),
-                digits,
-            ).alias("cramers_v"),
-        )
-    )
-
-
 def profile_table(
     df: DataFrame,
     cols: Sequence[str] | None = None,
@@ -860,7 +529,7 @@ def profile_table(
     """Schema-driven table profile in ONE aggregation pass: one output
     row per column with (dtype, n_rows, n_nulls, null_frac, n_distinct,
     min, max, mean, stddev) -- the discovery complement to
-    expectation_report (which checks rules you already know). All
+    observe_expectations (which checks rules you already know). All
     columns' measures are sibling expressions in a single agg, then the
     wide row unpivots via inline; min/max cast to string for a uniform
     schema, mean/stddev populated for numeric columns only.
@@ -933,119 +602,6 @@ def profile_table(
         "max",
         "mean",
         "stddev",
-    )
-
-
-def corr_matrix(
-    df: DataFrame,
-    cols: Sequence[str],
-    keys: Sequence[str] | None = None,
-    digits: int = 4,
-) -> DataFrame:
-    """Pairwise Pearson correlation + sample covariance over ``cols``,
-    optionally per group, in ONE aggregation pass: every pair's corr /
-    covar_samp / pairwise row count are sibling aggregate expressions in
-    a single hash agg (no per-pair scans, no driver loop over columns),
-    then the wide row unpivots to long (col_a, col_b, n_pairs, cov,
-    corr) with col_a <= col_b via an inline of literal-keyed structs --
-    pure projection, no shuffle.
-
-    Pairwise NULL deletion (both engines' corr/covar semantics): a row
-    contributes to a pair iff both columns are non-NULL. Constant
-    columns yield NULL corr (zero variance), matching SQL. The column
-    list is the unpivot width -- O(|cols|^2) expressions, fine for the
-    tens-of-columns feature-matrix case this serves; it is NOT a
-    key-cardinality blowup (still one pass over the data)."""
-    if len(cols) < 2:
-        raise ValueError("need at least 2 columns")
-    if len(set(cols)) != len(cols):
-        raise ValueError("duplicate columns")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    keys = list(keys or [])
-    pairs = [
-        (a, b) for i, a in enumerate(cols) for b in list(cols)[i:]
-    ]
-    aggs = []
-    for idx, (a, b) in enumerate(pairs):
-        both = F.col(a).isNotNull() & F.col(b).isNotNull()
-        aggs.append(
-            F.struct(
-                F.lit(a).alias("col_a"),
-                F.lit(b).alias("col_b"),
-                F.sum(both.cast("long")).alias("n_pairs"),
-                stable_round(F.covar_samp(a, b), digits).alias("cov"),
-                stable_round(F.corr(a, b), digits).alias("corr"),
-            ).alias(f"_p_{idx}")
-        )
-    wide = df.groupBy(*keys).agg(*aggs)
-    pair_cols = [c for c in wide.columns if c.startswith("_p_")]
-    return wide.select(
-        *keys, F.inline(F.array(*[F.col(c) for c in pair_cols]))
-    )
-
-
-def robust_outliers(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    k: float = 3.5,
-    digits: int = 4,
-) -> DataFrame:
-    """Per-group robust outlier annotation via median/MAD (the
-    Iglewicz-Hoaglin modified z-score): robust_z = (x - median) /
-    (1.4826 * MAD), flagged when |robust_z| > k. Unlike mean/stddev
-    z-scores, the breakdown point is 50% -- the outliers themselves
-    can't mask the fence, which is what makes it usable as an automated
-    data-quality gate over arbitrary partner feeds.
-
-    Exact medians (F.percentile, interpolated -- matches DuckDB
-    quantile_cont bit-for-bit on doubles), two hash aggs + two
-    equi-joins on the group keys; no window over the whole group, no
-    broadcast assumption on group count. Degenerate groups (MAD = 0,
-    i.e. >= half the group sits AT the median) get NULL robust_z and
-    flag any value != median.
-
-    NULL values are dropped (they're a completeness problem, not an
-    outlier problem -- expectation_report covers them). Returns keys +
-    (value_col, med, mad, robust_z, is_outlier) for every non-NULL
-    input row; filter is_outlier for the violations feed. ``keys`` must
-    be non-empty (the fences join back on them); for a global fence
-    pass a constant key column."""
-    if k <= 0:
-        raise ValueError("k must be > 0")
-    if not keys:
-        raise ValueError("keys must be non-empty (join-back columns)")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    v = F.col(value_col)
-    rows = df.filter(v.isNotNull()).select(*keys, value_col)
-    med = rows.groupBy(*keys).agg(
-        F.percentile(v, F.lit(0.5)).alias("_med")
-    )
-    j = rows.join(med, list(keys))
-    mad = j.groupBy(*keys).agg(
-        F.percentile(F.abs(v - F.col("_med")), F.lit(0.5)).alias("_mad")
-    )
-    z = (v - F.col("_med")) / (F.lit(1.4826) * F.col("_mad"))
-    return (
-        j.join(mad, list(keys))
-        .select(
-            *keys,
-            value_col,
-            stable_round(F.col("_med"), digits).alias("med"),
-            stable_round(F.col("_mad"), digits).alias("mad"),
-            F.when(
-                F.col("_mad") > 0, stable_round(z, digits)
-            ).alias("robust_z"),
-            F.when(F.col("_mad") > 0, F.abs(z) > k)
-            .otherwise(v != F.col("_med"))
-            .alias("is_outlier"),
-        )
     )
 
 
@@ -1390,302 +946,6 @@ def agg_state_merge(
     return u.groupBy(*keys).agg(*aggs).filter(F.col("cnt") > 0)
 
 
-def minmax_state_init(df, keys: list[str], measures: list[str]):
-    """Min/max aggregate state: one row per group with min_m / max_m
-    per measure. Unlike count/sum state these are NOT delta-
-    maintainable under deletes (removing the extremal value needs a
-    look at the remaining rows) -- minmax_state_apply below does the
-    honest version: pure delta where possible, targeted rescan of
-    exactly the affected groups where not."""
-    if not keys or not measures:
-        raise ValueError("keys and measures must be non-empty")
-    aggs = []
-    for m in measures:
-        aggs.append(F.min(F.col(m)).alias(f"min_{m}"))
-        aggs.append(F.max(F.col(m)).alias(f"max_{m}"))
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def _minmax_fold_cols(measures: list[str]):
-    """Fold stored extremes with the add-side partials (_a_min/_a_max),
-    NULL-safe on either side: SQL min/max ignore NULLs, so a NULL
-    partial means 'no new values', never 'new minimum NULL'."""
-    cols = []
-    for m in measures:
-        cols.append(
-            F.when(F.col(f"_a_min_{m}").isNull(), F.col(f"min_{m}"))
-            .when(F.col(f"min_{m}").isNull(), F.col(f"_a_min_{m}"))
-            .otherwise(F.least(F.col(f"min_{m}"), F.col(f"_a_min_{m}")))
-            .alias(f"min_{m}")
-        )
-        cols.append(
-            F.when(F.col(f"_a_max_{m}").isNull(), F.col(f"max_{m}"))
-            .when(F.col(f"max_{m}").isNull(), F.col(f"_a_max_{m}"))
-            .otherwise(F.greatest(F.col(f"max_{m}"), F.col(f"_a_max_{m}")))
-            .alias(f"max_{m}")
-        )
-    return cols
-
-
-def _minmax_dirty(st, rm_k, measures: list[str]):
-    """Dirty key set for minmax_state_apply: removals touching a stored
-    extremal, or removals from a group absent from state. Presence is
-    an EXPLICIT marker carried from the state side (ADVICE r7 low):
-    inferring absence from a nullable stats column mis-flagged groups
-    whose first measure is all-NULL -- results stayed correct, but
-    every interior delete on such a group triggered a needless rescan,
-    defeating the targeted-rescan cost model."""
-    dirty_cond = F.lit(False)
-    for m in measures:
-        dirty_cond = (
-            dirty_cond
-            | (F.col(m) <= F.col(f"min_{m}"))
-            | (F.col(m) >= F.col(f"max_{m}"))
-        )
-    return (
-        rm_k.join(
-            st.select(
-                "_k",
-                F.lit(True).alias("_in_state"),
-                *[c for m in measures for c in (f"min_{m}", f"max_{m}")],
-            ),
-            "_k",
-            "left",
-        )
-        # a removal from a group state never saw is dirty by definition
-        .filter(dirty_cond | F.col("_in_state").isNull())
-        .select("_k")
-        .distinct()
-    )
-
-
-def minmax_state_apply(
-    state, feed, base_new, keys: list[str], measures: list[str]
-):
-    """Refresh min/max state from a change feed, rescanning ONLY dirty
-    groups. A group is dirty when a delete/update_pre removes a value
-    AT its stored min or max (the extremal might have been the last
-    one) or when its key vanishes from state entirely; inserts and
-    interior deletes fold as pure deltas. ``base_new`` is the NEW
-    snapshot -- touched only via one semi-join on the dirty key set,
-    so refresh cost is O(|changes| + rows of affected groups), not
-    O(|table|): the targeted-rescan compromise real lakehouse IVM
-    makes for non-abelian aggregates (min/max/distinct).
-
-    Groups with no remaining rows drop. Result == minmax_state_init
-    on the new snapshot (tested, including the extremal-delete and
-    interior-delete paths)."""
-    if not keys or not measures:
-        raise ValueError("keys and measures must be non-empty")
-    fields = list(keys) + list(measures)
-
-    def side(struct_col, tag):
-        return F.struct(
-            *[struct_col[f].alias(f) for f in fields],
-            F.lit(tag).alias("_side"),
-        )
-
-    signed = (
-        feed.select(
-            F.explode(
-                F.array(
-                    F.when(
-                        F.col("change_type").isin("delete", "update"),
-                        side(F.col("before"), "rm"),
-                    ),
-                    F.when(
-                        F.col("change_type").isin("insert", "update"),
-                        side(F.col("after"), "add"),
-                    ),
-                )
-            ).alias("_x")
-        )
-        .filter(F.col("_x").isNotNull())
-        .select("_x.*")
-    )
-    adds = signed.filter(F.col("_side") == "add")
-    rms = signed.filter(F.col("_side") == "rm")
-
-    sk = lambda df_: df_.select(F.struct(*keys).alias("_k"), "*")  # noqa: E731
-    st = sk(state)
-    dirty = _minmax_dirty(st, sk(rms), measures)
-    # clean part: state minus dirty groups, min/max folded with adds only
-    add_state = sk(minmax_state_init(adds, keys, measures))
-    clean = (
-        st.join(dirty, "_k", "left_anti")
-        .join(
-            add_state.select(
-                "_k",
-                *[
-                    F.col(f"{agg}_{m}").alias(f"_a_{agg}_{m}")
-                    for m in measures
-                    for agg in ("min", "max")
-                ],
-            ),
-            "_k",
-            "left",
-        )
-        .select(*keys, *_minmax_fold_cols(measures))
-    )
-    # brand-new groups (adds whose key is in neither state nor dirty)
-    born = (
-        add_state.join(st.select("_k"), "_k", "left_anti")
-        .join(dirty, "_k", "left_anti")
-        .select(*keys, *[c for m in measures for c in (f"min_{m}", f"max_{m}")])
-    )
-    # dirty groups: recompute from the new snapshot, semi-join pruned
-    rescan = minmax_state_init(
-        sk(base_new).join(dirty, "_k", "semi").drop("_k"),
-        keys,
-        measures,
-    )
-    return clean.unionByName(born).unionByName(rescan)
-
-
-def split_by_rules(df, checks: dict):
-    """Row-level quarantine split on the SAME rule shape as
-    expectation_report: returns (passed, quarantined) where quarantined
-    rows carry a ``violations`` array naming every failed rule (NULL
-    evaluations count as violations -- the must-prove-true encoding
-    shared with the report/observe pair). The ingest-hardening step:
-    MERGE ``passed`` into the serving table, land ``quarantined`` in a
-    side table with its reasons attached for triage, and nothing is
-    silently dropped.
-
-    One pass, pure codegen expressions (an array of conditional rule
-    names + a filter each way); Spark plans the two outputs as two
-    reads of the same lineage -- persist upstream if the source is
-    expensive, exactly like any fan-out."""
-    if not checks:
-        raise ValueError("checks must be non-empty")
-    viol = F.array_compact(
-        F.array(
-            *[
-                F.when(cond, F.lit(None).cast("string")).otherwise(
-                    F.lit(name)
-                )
-                for name, cond in checks.items()
-            ]
-        )
-    )
-    tagged = df.withColumn("violations", viol)
-    passed = tagged.filter(F.size("violations") == 0).drop("violations")
-    quarantined = tagged.filter(F.size("violations") > 0)
-    return passed, quarantined
-
-
-def period_over_period(
-    df,
-    period_col: str,
-    value_exprs: dict,
-    keys: list[str] | None = None,
-    lag_periods: int = 1,
-):
-    """Period-over-period comparison per key: aggregate ``value_exprs``
-    by (keys, period), then attach each period's value ``lag_periods``
-    back and the absolute/percent change -- the MoM/YoY report shape.
-    Periods compare by sort order of ``period_col`` (use a date or a
-    sortable period string); gaps mean the Nth PRECEDING period, not
-    calendar arithmetic (document your period grain upstream). First
-    periods report NULL changes; a zero prior value yields NULL pct
-    (never an infinity).
-
-    One hash agg + one per-key window over the (small) aggregated
-    frame -- fact volume shuffles once."""
-    from pyspark.sql import Window
-
-    if not value_exprs:
-        raise ValueError("value_exprs must be non-empty")
-    if lag_periods < 1:
-        raise ValueError("lag_periods must be >= 1")
-    keys = keys or []
-    agg = df.groupBy(*keys, period_col).agg(
-        *[e.alias(n) for n, e in value_exprs.items()]
-    )
-    w = Window.partitionBy(*keys).orderBy(period_col)
-    out = agg
-    for name in value_exprs:
-        prev = F.lag(F.col(name), lag_periods).over(w)
-        out = out.withColumn(f"{name}_prev", prev)
-        out = out.withColumn(
-            f"{name}_change", F.col(name) - prev
-        ).withColumn(
-            f"{name}_pct_change",
-            F.when(
-                prev.isNotNull() & (prev != 0),
-                (F.col(name) - prev) / prev,
-            ),
-        )
-    return out
-
-
-def binary_auc(
-    df,
-    label_col: str,
-    score_col: str,
-    bins: int | None = None,
-    keys: list[str] | None = None,
-):
-    """ROC-AUC via the Mann-Whitney rank statistic with EXACT tie
-    handling: AUC = (sum of positive ranks - npos(npos+1)/2) /
-    (npos * nneg), ranks averaged over tied scores. One row per key
-    group: (keys..., n_pos, n_neg, auc); degenerate groups (single
-    class) report NULL.
-
-    Scale shape (the mllib BinaryClassificationMetrics design): rows
-    aggregate per DISTINCT score first -- the only pass over the data
-    is one hash agg -- and the ordered prefix-sum runs over that
-    per-score frame. With continuous scores its cardinality can reach
-    n; pass ``bins`` to quantize scores onto a fixed grid (floor to
-    1/bins steps) and the ordered pass touches <= bins rows per group
-    -- the documented exactness/size trade every at-scale AUC makes.
-    NULL labels/scores drop; labels are evaluated as booleans."""
-    from pyspark.sql import Window
-
-    if bins is not None and bins < 2:
-        raise ValueError("bins must be >= 2 (or None for exact)")
-    keys = keys or []
-    lab = F.col(label_col).cast("boolean")
-    s = F.col(score_col).cast("double")
-    if bins is not None:
-        s = F.floor(s * bins) / F.lit(float(bins))
-    base = df.filter(lab.isNotNull() & s.isNotNull()).select(
-        *keys, lab.alias("_y"), s.alias("_s")
-    )
-    per_score = base.groupBy(*keys, "_s").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.count(F.when(F.col("_y"), 1)).alias("_np"),
-    )
-    w = (
-        Window.partitionBy(*keys).orderBy("_s")
-        if keys
-        else Window.orderBy("_s")
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    # average rank of a tied block = rows before it + (size + 1) / 2
-    ranked = per_score.withColumn(
-        "_before", F.sum("_n").over(w) - F.col("_n")
-    ).withColumn(
-        "_avg_rank", F.col("_before") + (F.col("_n") + 1) / 2.0
-    )
-    g = ranked.groupBy(*keys).agg(
-        F.sum("_np").alias("n_pos"),
-        (F.sum("_n") - F.sum("_np")).alias("n_neg"),
-        F.sum(F.col("_np") * F.col("_avg_rank")).alias("_rank_sum"),
-    )
-    auc = (
-        F.col("_rank_sum")
-        - F.col("n_pos") * (F.col("n_pos") + 1) / 2.0
-    ) / (F.col("n_pos") * F.col("n_neg"))
-    return g.select(
-        *keys,
-        "n_pos",
-        "n_neg",
-        F.when((F.col("n_pos") > 0) & (F.col("n_neg") > 0), auc).alias(
-            "auc"
-        ),
-    )
-
-
 def calibration_bins(
     df,
     label_col: str,
@@ -1697,14 +957,14 @@ def calibration_bins(
     """Reliability-diagram data: scores bucket onto a fixed [0, 1)
     grid (floor to 1/bins steps, score 1.0 clamps into the top bin)
     and each bin reports n, mean predicted score, observed positive
-    rate, and the gap -- the calibration readout next to binary_auc's
-    ranking readout. One hash agg; empty bins simply absent.
+    rate, and the gap -- the probability-quality readout. One hash
+    agg; empty bins simply absent.
 
     ``summaries=True`` appends three more columns (Guo et al. 2017
     shape -- a ranker can order perfectly while its probabilities are
     wildly over-confident, and a quality filter thresholded at p>=0.9
     needs that 0.9 to MEAN 0.9): per-bin ``abs_gap``, plus two per-key
-    scalars repeated on each row (the benford_report convention) --
+    scalars repeated on each row --
     ``ece``, the expected calibration error sum(n_b/N * |gap_b|), and
     ``brier``, mean (score - label)^2. One broadcast-sized window over
     the keys x bins frame; default False keeps the original schema."""
@@ -1742,95 +1002,6 @@ def calibration_bins(
     )
 
 
-def categorical_entropy(
-    df,
-    cat_col: str,
-    keys: list[str] | None = None,
-    base: float = 2.0,
-):
-    """Shannon entropy of a categorical column per key group (feature
-    screening / diversity monitoring; pair with chi_square for the
-    association readout). NULL categories count as a category of their
-    own -- disappearance into NULL is exactly the collapse entropy
-    should see. Two hash aggregations ((keys, cat) counts, then the
-    per-key fold); output (keys..., n, n_categories, entropy) with
-    entropy in ``base`` units (default bits), 0 for single-category
-    groups. Cardinality assumption: the per-key window runs over the
-    POST-AGG (keys, cat) count frame -- bounded for any sane
-    categorical, but an id-like ``cat_col`` (one category per row)
-    makes the keyless form's frame row-sized and the window a
-    single-task sort; bin or hash such columns first (the ks_test
-    honesty standard)."""
-    import math
-
-    if base <= 1:
-        raise ValueError("base must be > 1")
-    keys = keys or []
-    cat = F.coalesce(
-        F.col(cat_col).cast("string"), F.lit("\x00entropy_null")
-    )
-    counts = df.select(*keys, cat.alias("_c")).groupBy(*keys, "_c").agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys) if keys else Window.partitionBy()
-    p = F.col("_n") / F.sum("_n").over(w)
-    plogp = p * F.log(p) / F.lit(math.log(base))
-    return (
-        counts.withColumn("_plogp", plogp)
-        .groupBy(*keys)
-        .agg(
-            F.sum("_n").alias("n"),
-            F.count(F.lit(1)).alias("n_categories"),
-            (-F.sum("_plogp")).alias("entropy"),
-        )
-    )
-
-
-def running_distinct(
-    df,
-    value_col: str,
-    ts_col: str,
-    keys: list[str] | None = None,
-    out_col: str = "n_distinct_so_far",
-    tiebreak_cols: list[str] | None = None,
-):
-    """Cumulative distinct count per key over time: each row reports
-    how many distinct ``value_col`` values its key has seen up to and
-    including that row -- the new-vs-returning readout (unique users
-    so far, vocabulary growth). Spark has no DISTINCT over a running
-    window; the scalable formulation is the first-occurrence flag:
-    row_number over (key, value) marks each value's first row, and a
-    running SUM of flags over the time order counts them --
-    two window passes, both partitioned by the key, no per-row sets.
-    NULL values don't count (COUNT DISTINCT semantics); rows with
-    NULL timestamps drop. Deterministic under timestamp ties via
-    ``tiebreak_cols`` (which also pin WHICH tied row is 'first')."""
-    from pyspark.sql import Window
-
-    keys = keys or []
-    order = [ts_col, *(tiebreak_cols or [])]
-    w_first = Window.partitionBy(*keys, value_col).orderBy(*order)
-    w_run = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    base = df.filter(F.col(ts_col).isNotNull())
-    flagged = base.withColumn(
-        "_first",
-        F.when(
-            F.col(value_col).isNotNull()
-            & (F.row_number().over(w_first) == 1),
-            1,
-        ).otherwise(0),
-    )
-    return flagged.withColumn(
-        out_col, F.sum("_first").over(w_run)
-    ).drop("_first")
-
-
 # ---------------------------------------------------------------------------
 # KMV distinct sketch: the set-OPERATIONS member of the stored-sketch
 # family (HLL = distinct union, CMS = frequency, DD = quantiles, KMV =
@@ -1860,7 +1031,7 @@ def kmv_sketch(
     estimate is EXACT). NULL keys are excluded (COUNT DISTINCT
     semantics).
 
-    Skew-proof build, ONE bounded exchange (r15): a dense_rank <= k
+    Skew-proof build, ONE bounded exchange: a dense_rank <= k
     filter over a (dims)-partitioned window plans as WindowGroupLimit,
     whose PARTIAL mode prunes every scan partition to its k smallest
     DISTINCT hashes (all copies -- dense_rank ties share a rank)
@@ -1869,16 +1040,20 @@ def kmv_sketch(
     survivors and one exchange-free hash agg (already partitioned by
     dims) folds them into the sorted, deduped, k-cut sketch array.
     No task ever sorts a hot group's full distinct set -- the final
-    window's state per group is at most (input partitions x k) rows,
-    the same bound the r14 per-partition-partial + kmv_merge fold had.
-    Bit-identical to that fold (and to a global distinct + sort) by
-    the subset argument: the k smallest distinct of a union are each
-    among the k smallest distinct of their source partition. (r14
-    shipped each (group x partition) collect_set WHOLE -- the slice
-    was a post-aggregation projection evaluated after the exchange,
-    so the shuffle carried every partition-local distinct hash, ~the
-    full dataset on near-unique keys; measured 69 MB at sf1 on the
-    kmv_zipf_build probe vs ~1 MB with the WindowGroupLimit pre-cut.)
+    window's state per group is at most (input partitions x k) rows.
+    Bit-identical to a global distinct + sort by the subset argument:
+    the k smallest distinct of a union are each among the k smallest
+    distinct of their source partition. Shuffling each (group x
+    partition) distinct set whole instead carries ~the full dataset
+    on near-unique keys: 69 MB at sf1 on the kmv_zipf_build probe vs
+    ~1 MB with the WindowGroupLimit pre-cut.
+
+    Floor: the pre-cut is Catalyst's InferWindowGroupLimit rule, which
+    needs Spark >= 3.5 and ``k`` at most
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by
+    default; -1 disables the rule). Without it the sketch is still
+    exact, but the dense_rank window sorts each group's full input in
+    one task (the whole input when ``dims`` is None).
 
     The artifact is mergeable EXACTLY (kmv_merge): per-day sketches
     compose into any window's sketch bit-for-bit -- same incremental
@@ -2009,356 +1184,6 @@ def kmv_set_ops(
     )
 
 
-def seasonal_decompose(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    value_col: str,
-    period: int,
-    digits: int = 4,
-) -> DataFrame:
-    """Classical additive decomposition of a regularly-spaced series
-    into trend + seasonal + remainder, per key group -- the step that
-    turns period_over_period's ratios and autocorr's diagnostics into
-    components you can actually subtract (deseasonalized KPIs, anomaly
-    detection on the remainder instead of the raw spiky series).
-
-    Method (the textbook moving-average decomposition, stated so the
-    oracle can replay it): ``trend`` is the centered moving average
-    over exactly ``period`` consecutive positions (NULL wherever the
-    centered frame is incomplete -- series edges); ``seasonal`` is the
-    per-(key, phase) mean of the detrended values, with phase =
-    0-based position mod period, centered so seasonal components sum
-    to ~0 per key; ``remainder`` = value - trend - seasonal where the
-    trend exists. Rounded to ``digits`` (stable_round, cross-engine).
-
-    ONE sorted window exchange per key serves the position index, the
-    centered mean and its completeness count; the per-(key, phase)
-    seasonal means and the per-key centering are two bounded hash aggs
-    broadcast back. Ties in ``order_col`` make positions
-    nondeterministic -- pre-compose a tiebreaker like autocorr.
-
-    Returns keys + (order_col, value_col, phase, trend, seasonal,
-    remainder)."""
-    if period < 2:
-        raise ValueError("period must be >= 2")
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    lo, hi = -(period // 2), (period - 1) // 2
-    w_ord = Window.partitionBy(*keys).orderBy(order_col)
-    w_frame = w_ord.rowsBetween(lo, hi)
-    v = F.col(value_col).cast("double")
-    base = df.select(
-        *keys,
-        order_col,
-        v.alias("_v"),
-        ((F.row_number().over(w_ord) - 1) % period).alias("phase"),
-        F.when(
-            F.count(F.lit(1)).over(w_frame) == period,
-            F.avg(v).over(w_frame),
-        ).alias("_trend"),
-    )
-    season_raw = (
-        base.filter(F.col("_trend").isNotNull())
-        .groupBy(*keys, "phase")
-        .agg(F.avg(F.col("_v") - F.col("_trend")).alias("_s_raw"))
-    )
-    centering = season_raw.groupBy(*keys).agg(
-        F.avg("_s_raw").alias("_s_mean")
-    )
-    season = season_raw.join(centering, list(keys)).select(
-        *keys,
-        "phase",
-        (F.col("_s_raw") - F.col("_s_mean")).alias("_seasonal"),
-    )
-    out = base.join(F.broadcast(season), [*keys, "phase"], "left")
-    return out.select(
-        *keys,
-        order_col,
-        F.col("_v").alias(value_col),
-        "phase",
-        stable_round(F.col("_trend"), digits).alias("trend"),
-        stable_round(F.col("_seasonal"), digits).alias("seasonal"),
-        stable_round(
-            F.col("_v") - F.col("_trend") - F.col("_seasonal"), digits
-        ).alias("remainder"),
-    )
-
-
-def survival_curve(
-    df: DataFrame,
-    keys: list[str],
-    duration_col: str,
-    event_col: str,
-    digits: int = 6,
-) -> DataFrame:
-    """Kaplan-Meier survival estimate per key group -- the
-    right-censoring-aware retention curve (subscription churn, time-to-
-    conversion, device lifetime) that cohort_retention's raw ratios
-    cannot give when observation windows differ per subject. Input is
-    one row per subject: ``duration_col`` (time observed, any ordered
-    numeric) and ``event_col`` (1 = the event happened AT duration,
-    0 = censored at duration -- still alive when we stopped looking).
-
-    S(t) = prod over event times u <= t of (1 - d_u / n_u), with d_u =
-    events at u and n_u = subjects still at risk (duration >= u). The
-    product is computed in LOG space as exp(running sum of
-    ln(1 - d/n)) over ONE ordered window per key, so the whole curve
-    costs one hash agg to the per-(key, time) table (tiny: distinct
-    event times, not subjects) plus one sorted exchange of that table.
-    Output rows are event times only; censoring times shape n_t but
-    emit no step, per the estimator. The d=n terminal case (everyone
-    at risk dies) is handled by an explicit flag -- Spark's ln(0) is
-    NULL, not -inf, so the zero survival is pinned rather than floated.
-    Stable-rounded to ``digits`` for cross-engine replay.
-
-    Returns keys + (t, n_at_risk, events, survival)."""
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    ev = F.col(event_col).cast("double")
-    per_t = (
-        df.filter(
-            F.col(duration_col).isNotNull() & F.col(event_col).isNotNull()
-        )
-        .groupBy(*keys, F.col(duration_col).alias("t"))
-        .agg(
-            F.sum(ev).alias("_d"),
-            F.count(F.lit(1)).alias("_m"),
-        )
-    )
-    w_ord = Window.partitionBy(*keys).orderBy("t")
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    w_prior = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.partitionBy(*keys)
-    stepped = per_t.select(
-        *keys,
-        "t",
-        "_d",
-        (
-            F.sum("_m").over(w_all)
-            - F.coalesce(F.sum("_m").over(w_prior), F.lit(0))
-        ).alias("_n"),
-    ).withColumns(
-        {
-            "_logS": F.sum(
-                F.when(
-                    (F.col("_d") > 0) & (F.col("_d") < F.col("_n")),
-                    F.log(
-                        F.lit(1.0)
-                        - F.col("_d") / F.col("_n").cast("double")
-                    ),
-                ).otherwise(F.lit(0.0))
-            ).over(w_cum),
-            "_died": F.max(
-                (F.col("_d") == F.col("_n")).cast("int")
-            ).over(w_cum),
-        }
-    )
-    return stepped.filter(F.col("_d") > 0).select(
-        *keys,
-        "t",
-        F.col("_n").alias("n_at_risk"),
-        F.col("_d").cast("long").alias("events"),
-        stable_round(
-            F.when(F.col("_died") == 1, F.lit(0.0)).otherwise(
-                F.exp("_logS")
-            ),
-            digits,
-        ).alias("survival"),
-    )
-
-
-def rate_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    bucket: str = "1 hour",
-    trailing: int = 24,
-    min_history: int = 6,
-    digits: int = 4,
-) -> DataFrame:
-    """Event-rate anomaly report: per key, bucket the stream into
-    fixed windows, and score each bucket's count against the TRAILING
-    ``trailing``-bucket baseline (mean/stddev over the preceding
-    OBSERVED buckets only -- the bucket being scored never leaks into
-    its own baseline). The observability primitive for "did error
-    volume spike" / "did ingest stall" over a 100 TB event stream:
-    one hash agg to the per-(key, bucket) table, one sorted window
-    over THAT table (bucket counts, not events), nothing else.
-
-    z = (count - trailing_mean) / trailing_std, NULL while fewer than
-    ``min_history`` prior buckets exist or when the baseline is
-    constant (std = 0) -- a constant-rate history cannot be z-scored,
-    it can only be eyeballed via the also-emitted mean. Gaps: buckets
-    with zero events do NOT materialize rows (nothing to aggregate);
-    the baseline is over observed buckets, which UNDERSTATES spikes
-    after quiet gaps -- callers wanting dense zero-filled buckets
-    should interval-join a calendar first (documented trade, keeps
-    this operator join-free).
-
-    Returns keys + (bucket_start, n, trailing_mean, trailing_std, z).
-    """
-    if trailing < 2:
-        raise ValueError("trailing must be >= 2")
-    if min_history < 2:
-        raise ValueError("min_history must be >= 2")
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    per_b = df.groupBy(
-        *keys,
-        F.window(F.col(ts_col), bucket)["start"].alias("bucket_start"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("bucket_start")
-        .rowsBetween(-trailing, -1)
-    )
-    nn = F.col("n").cast("double")
-    scored = per_b.select(
-        *keys,
-        F.col("bucket_start").cast("timestamp_ntz"),
-        "n",
-        F.count(F.lit(1)).over(w).alias("_h"),
-        F.avg(nn).over(w).alias("_mu"),
-        F.stddev_samp(nn).over(w).alias("_sd"),
-    )
-    ok = (F.col("_h") >= min_history) & (F.col("_sd") > 0)
-    return scored.select(
-        *keys,
-        "bucket_start",
-        "n",
-        stable_round(
-            F.when(F.col("_h") >= min_history, F.col("_mu")), digits
-        ).alias("trailing_mean"),
-        stable_round(
-            F.when(F.col("_h") >= min_history, F.col("_sd")), digits
-        ).alias("trailing_std"),
-        stable_round(
-            F.when(ok, (nn - F.col("_mu")) / F.col("_sd")), digits
-        ).alias("z"),
-    )
-
-
-def ewma(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    value_col: str,
-    alpha: float,
-    adjust: bool = False,
-    out_col: str = "ewma",
-) -> DataFrame:
-    """Per-key exponentially weighted moving average -- the recursive
-    smoother (s_t = alpha*x_t + (1-alpha)*s_{t-1}) that rounds out the
-    time-series set: seasonal_decompose isolates structure, autocorr
-    diagnoses it, ewma tracks level with O(1) state per step. The
-    recursion is ORDER-SEQUENTIAL and has no closed window form, so
-    this is one of the engine's few justified Arrow paths: ONE
-    applyInPandas per key group (vectorized pandas ewm inside), after
-    one shuffle on the keys. Per-key series must fit an executor --
-    the same per-group bound every applyInPandas op carries; at 100 TB
-    that means keys like (device, day), not one global key.
-
-    ``adjust=False`` (default) is the recursive form above;
-    ``adjust=True`` is the bias-corrected weighted mean over all
-    history (pandas semantics, stated so the replica test pins the
-    convention). A NULL value emits the carried-forward smoothed
-    value and the weights keep decaying across the gap (pandas
-    ignore_na=False). Rows keep their input columns; output adds
-    ``out_col``."""
-    if not 0 < alpha <= 1:
-        raise ValueError("alpha must be in (0, 1]")
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        df.schema.fields + [StructField(out_col, DoubleType())]
-    )
-
-    def smooth(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        pdf[out_col] = (
-            pdf[value_col]
-            .astype("float64")
-            .ewm(alpha=alpha, adjust=adjust, ignore_na=False)
-            .mean()
-        )
-        return pdf
-
-    return df.groupBy(*keys).applyInPandas(smooth, schema=schema)
-
-
-def gini_coefficient(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    digits: int = 6,
-) -> DataFrame:
-    """Gini concentration per key group -- "how unevenly is revenue /
-    token count / engagement spread across its members", the
-    concentration complement of key_skew_report's hot-key diagnostics
-    (skew reports find WHICH keys are heavy; Gini scores HOW unequal a
-    group's distribution is on one 0..1 scale). Standard rank formula
-    on ascending-sorted non-negative values:
-
-        G = 2 * sum(i * x_(i)) / (n * sum(x)) - (n + 1) / n
-
-    One ordered window per key for the ranks (value, then a stable
-    arbitrary tiebreak has no effect -- equal values commute in the
-    formula), one hash agg for the two sums. NULLs drop; negative
-    values raise (Gini is undefined); all-zero groups emit NULL.
-    Returns keys + (n, total, gini), stable-rounded."""
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    v = F.col(value_col).cast("double")
-    base = df.filter(v.isNotNull()).select(*keys, v.alias("_v"))
-    w = Window.partitionBy(*keys).orderBy("_v")
-    ranked = base.withColumn("_i", F.row_number().over(w))
-    agg = ranked.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_v").alias("_tot"),
-        F.sum(F.col("_i") * F.col("_v")).alias("_iw"),
-        F.min("_v").alias("_min"),
-    )
-    n = F.col("n").cast("double")
-    # runtime guard, lazily inside the used expression tree (an eager
-    # driver check would cost a construction-time job): assert_true
-    # yields NULL when the guard holds, so the when() routes to the
-    # formula; a negative value fails the whole job with the message
-    guard = F.assert_true(
-        F.col("_min") >= 0,
-        F.lit(f"gini_coefficient: negative values in {value_col}"),
-    )
-    return agg.select(
-        *keys,
-        "n",
-        stable_round(F.col("_tot"), digits).alias("total"),
-        stable_round(
-            F.when(
-                guard.isNull() & (F.col("_tot") > 0),
-                F.lit(2.0) * F.col("_iw") / (n * F.col("_tot"))
-                - (n + 1.0) / n,
-            ),
-            digits,
-        ).alias("gini"),
-    )
-
-
 # Poisson(1) CDF thresholds for the bootstrap weights: hard-coded
 # literals so Spark and DuckDB make bit-identical comparisons. The
 # tail is truncated at weight 7 (P(X >= 7) ~ 8.3e-5 -- statistically
@@ -2375,8 +1200,8 @@ _POIS1_CDF = (
 
 
 def _safe_salt(salt: str) -> str:
-    """Validate a salt destined for a SQL string literal (ADVICE r8:
-    the interpolation is an injection seam in a public API). A strict
+    """Validate a salt destined for a SQL string literal (the
+    interpolation is an injection seam in a public API). A strict
     charset beats escaping here because the coin must parse IDENTICALLY
     in Spark and the DuckDB twin, and the two dialects disagree on
     backslash escapes ('' vs \\')."""
@@ -2442,7 +1267,7 @@ def bootstrap_ci(
     Returns keys + (n, mean, ci_lo, ci_hi), stable-rounded. Plan cost:
     2*n_boot sibling aggregate expressions plus n_boot md5 evaluations
     per row -- flat but real; keep n_boot in the hundreds, and at
-    extreme row counts run it over a deterministic_sample slice (the
+    extreme row counts run it over a hash-bucketed sample (the
     bootstrap's own Monte-Carlo error, ~1/sqrt(n_boot), dominates the
     subsampling error long before the sample gets small)."""
     if not 0 < level < 1:
@@ -2508,100 +1333,6 @@ def bootstrap_ci(
         stable_round(
             F.element_at(sorted_means, hi_i), digits
         ).alias("ci_hi"),
-    )
-
-
-def bootstrap_ratio_ci(
-    df: DataFrame,
-    keys: list[str],
-    num_col: str,
-    den_col: str,
-    id_col: str,
-    n_boot: int = 100,
-    level: float = 0.95,
-    salt: str = "",
-    digits: int = 6,
-) -> DataFrame:
-    """Bootstrap CI for a per-key RATIO OF SUMS -- the shape most A/B
-    metrics actually take (CTR = clicks/impressions, revenue per user,
-    tokens per document), where the delta method's normality is shaky
-    and a row-level mean CI answers the wrong question. Same Poisson
-    machinery as bootstrap_ci: every row draws an md5-deterministic
-    Poisson(1) weight per replicate and each replicate's ratio is
-    sum(w*num)/sum(w*den) -- all B of them siblings in ONE hash
-    aggregate, exactly replayable cross-engine. Rows need BOTH columns
-    non-NULL (a ratio metric's unit contributes numerator and
-    denominator together or not at all); replicates with a zero
-    denominator drop from the rank pick.
-
-    Returns keys + (n, ratio, ci_lo, ci_hi)."""
-    if not 0 < level < 1:
-        raise ValueError("level must be in (0, 1)")
-    if n_boot < 10:
-        raise ValueError("n_boot must be >= 10")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    num = F.col(num_col).cast("double")
-    den = F.col(den_col).cast("double")
-    base = df.filter(
-        num.isNotNull() & den.isNotNull() & F.col(id_col).isNotNull()
-    ).select(
-        *keys,
-        num.alias("_num"),
-        den.alias("_den"),
-        F.col(id_col).cast("string").alias("_id"),
-    )
-    base = base.select(
-        "*",
-        *[
-            F.expr(_bootstrap_u_sql("_id", salt, r)).alias(f"_u{r}")
-            for r in range(n_boot)
-        ],
-    ).select(
-        *keys,
-        "_num",
-        "_den",
-        *[
-            F.expr(_pois1_case_sql(f"_u{r}")).alias(f"_wt{r}")
-            for r in range(n_boot)
-        ],
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_num").alias("_sn"),
-        F.sum("_den").alias("_sd"),
-    ]
-    for r in range(n_boot):
-        aggs.append(F.expr(f"sum(_wt{r} * _num)").alias(f"_n{r}"))
-        aggs.append(F.expr(f"sum(_wt{r} * _den)").alias(f"_d{r}"))
-    agg = base.groupBy(*keys).agg(*aggs)
-    ratios = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    F.col(f"_d{r}") != 0,
-                    F.col(f"_n{r}") / F.col(f"_d{r}"),
-                )
-                for r in range(n_boot)
-            ]
-        )
-    )
-    alpha = 1.0 - level
-    sr = F.array_sort(ratios)
-    b = F.size(sr)
-    lo_i = F.greatest(F.lit(1), F.round(b * F.lit(alpha / 2)).cast("int"))
-    hi_i = F.least(b, F.round(b * F.lit(1 - alpha / 2)).cast("int"))
-    return agg.select(
-        *keys,
-        "n",
-        stable_round(
-            F.when(F.col("_sd") != 0, F.col("_sn") / F.col("_sd")),
-            digits,
-        ).alias("ratio"),
-        stable_round(F.element_at(sr, lo_i), digits).alias("ci_lo"),
-        stable_round(F.element_at(sr, hi_i), digits).alias("ci_hi"),
     )
 
 
@@ -3290,11 +2021,9 @@ def cusum_changepoints(
     digits: int = 6,
 ) -> DataFrame:
     """Tabular CUSUM (Page) change detection per key -- the sustained
-    mean-shift detector that rate_anomalies' pointwise z-score cannot
-    give: a 0.5-sigma drift that never trips a single-bucket z
-    accumulates in the CUSUM statistic and alarms within a few points.
-    The level-shift complement of seasonal_decompose (structure) and
-    rate_anomalies (spikes) in the time-series set.
+    mean-shift detector a pointwise z-score cannot give: a 0.5-sigma
+    drift that never trips a single-bucket z accumulates in the CUSUM
+    statistic and alarms within a few points.
 
     Method, stated so the oracle can replay it: with standardized
     deviation z_i = (x_i - mu) / sd, the textbook recursions
@@ -3315,7 +2044,7 @@ def cusum_changepoints(
     singleton series) emit NULL scores rather than infinities. NULL
     values are dropped at entry (a skipped reading does not advance
     the statistic). Ties in ``order_col`` make prefix sums
-    nondeterministic -- pre-compose a tiebreaker like autocorr.
+    nondeterministic -- pre-compose a tiebreaker.
 
     Scale shape: one bounded hash agg (per-key baseline, rows = keys)
     broadcast-joined back, then a single sort exchange per key serves
@@ -3411,10 +2140,9 @@ def holt_smooth(
     alpha: float = 0.5,
     beta: float = 0.3,
 ) -> DataFrame:
-    """Per-key Holt double-exponential smoothing (level + trend) -- the
-    trend-aware extension of ``ewma`` that closes the smoothing set:
-    ewma tracks level only and lags a ramp by (1-alpha)/alpha steps
-    forever; Holt carries an explicit trend state so a steady ramp is
+    """Per-key Holt double-exponential smoothing (level + trend): a
+    level-only EWMA lags a ramp by (1-alpha)/alpha steps forever; Holt
+    carries an explicit trend state so a steady ramp is
     tracked exactly (the replica test pins this: on a perfectly linear
     series the one-step-ahead fit is the series itself, any alpha/beta).
 
@@ -3425,14 +2153,14 @@ def holt_smooth(
         b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
     Order-sequential with data-dependent state -- no closed window
     form (unlike cusum_changepoints' prefix-extremum identity), so
-    this joins ewma/bpe_encode as a justified Arrow path: ONE
+    this joins bpe_encode as a justified Arrow path: ONE
     applyInPandas per key group after one shuffle on the keys; per-key
     series must fit an executor (keys like (series, day) at 100 TB,
     never one global key). NULL values are dropped at entry (a missing
     reading neither advances nor decays the state). Ties in
     ``order_col`` make the recursion nondeterministic -- pre-compose a
-    tiebreaker. Test-only by design (the ewma precedent): exact
-    pure-Python replica equality in tests/test_mining.py.
+    tiebreaker. Test-only by design: exact pure-Python replica
+    equality in tests/test_mining.py.
 
     Returns input columns + (level, trend, fitted)."""
     if not 0 < alpha <= 1:
@@ -3581,146 +2309,6 @@ def anova_oneway(
     )
 
 
-def global_running_sum(
-    df,
-    order_cols: list[str],
-    val_col: str,
-    out_col: str = "running_sum",
-    num_partitions: int | None = None,
-    rn_col: str | None = None,
-) -> DataFrame:
-    """Global prefix sum under a TOTAL order, without the single-task
-    sort an unpartitioned Window.orderBy would plan -- the cumulative
-    twin of global_row_number (same two-phase shape): range-partition
-    on the order columns, per-partition running sum, per-partition
-    TOTALS collect to the driver (bounded by the partition count, the
-    documented collect class) and fold into offsets broadcast back.
-    running_sum(row) = offset(partition) + partition-local prefix sum.
-
-    ``order_cols`` must be a total order (append a unique tiebreak) --
-    prefix sums under ties are layout-dependent in any engine. NULL
-    values in ``val_col`` contribute 0 (SUM semantics). DOUBLE values
-    fold in partition order, so two different input layouts can differ
-    in the last ulp (range boundaries re-sample); integer/decimal
-    inputs are exact. Round before comparing across engines.
-
-    ``rn_col``: also emit the global ROW NUMBER under the same order,
-    from the same ranged pass, window and offsets collect -- callers
-    needing both (abc_classes) pay one range shuffle and one
-    checkpoint instead of running global_row_number separately (review
-    finding: the unfused pair doubled the operator's dominant cost). The primitive
-    under ranked cumulative distributions: Pareto/ABC concentration,
-    Lorenz curves, cumulative-share cutoffs -- all at key cardinality,
-    all skew-free."""
-    if not order_cols:
-        raise ValueError("order_cols must be non-empty")
-    from pyspark.sql import Window
-
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"
-    )
-    ranged = df.repartitionByRange(int(parts), *order_cols).withColumn(
-        "_gpid", F.spark_partition_id()
-    )
-    # cache so the totals pass and the summed pass see the SAME range
-    # boundaries (the global_row_number argument)
-    ranged = ranged.localCheckpoint()
-    v = F.coalesce(F.col(val_col).cast("double"), F.lit(0.0))
-    stats = {
-        r._gpid: (r.t, r.c)
-        for r in ranged.groupBy("_gpid")
-        .agg(F.sum(v).alias("t"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    rows = []
-    s_acc, c_acc = 0.0, 0
-    for pid in sorted(stats):
-        rows.append((pid, s_acc, c_acc))
-        t, c = stats[pid]
-        s_acc += t or 0.0
-        c_acc += c
-    off_df = df.sparkSession.createDataFrame(
-        rows, "_gpid INT, _gsoff DOUBLE, _gcoff LONG"
-    )
-    w = (
-        Window.partitionBy("_gpid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranged.join(F.broadcast(off_df), "_gpid").withColumn(
-        out_col, F.sum(v).over(w) + F.col("_gsoff")
-    )
-    if rn_col is not None:
-        wr = Window.partitionBy("_gpid").orderBy(*order_cols)
-        out = out.withColumn(
-            rn_col,
-            (F.row_number().over(wr) + F.col("_gcoff")).cast("long"),
-        )
-    return out.drop("_gpid", "_gsoff", "_gcoff")
-
-
-def abc_classes(
-    df,
-    key_col: str,
-    value_col: str,
-    a_share: float = 0.8,
-    b_share: float = 0.95,
-) -> DataFrame:
-    """Pareto/ABC concentration analysis: per-key value totals ranked
-    descending, cumulative share of the grand total, and the classic
-    class split -- 'A' while cumulative share <= ``a_share``, 'B' up to
-    ``b_share``, 'C' beyond (the first key always classes 'A' even if
-    it alone exceeds the cut: classes are by the PRIOR cumulative
-    share, so every key belongs to the class its prefix enters).
-    Returns (key, total, rank, cum_share, abc).
-
-    Scale shape: one hash agg to key grain, then the two-phase
-    global_running_sum + global_row_number machinery over the
-    key-cardinality frame (both skew-free, no single-task sort); the
-    grand total arrives as a one-row broadcast scalar. NULL keys are
-    excluded; a zero/negative grand total raises (shares undefined)."""
-    if not 0 < a_share < b_share <= 1:
-        raise ValueError(
-            f"need 0 < a_share < b_share <= 1: {a_share}, {b_share}"
-        )
-    per_key = (
-        df.filter(F.col(key_col).isNotNull())
-        .groupBy(key_col)
-        .agg(F.sum(F.col(value_col).cast("double")).alias("total"))
-    )
-    order = [F.col("total").desc(), F.col(key_col)]
-    # ONE fused two-phase pass yields both the rank and the prefix sum
-    summed = global_running_sum(
-        per_key.select(key_col, "total"), order, "total",
-        out_col="_cum", rn_col="rank",
-    )
-    grand = summed.agg(F.sum("total").alias("_g"))
-    out = summed.crossJoin(F.broadcast(grand))
-    gt = F.col("_g")
-    # the positivity guard lives inside EVERY derived column (share AND
-    # class), because a caller selecting only `abc` lets Catalyst prune
-    # cum_share -- a guard in one column alone vanishes with it
-    # (review finding)
-    err = F.raise_error(
-        F.lit("abc_classes: grand total must be positive")
-    )
-    share = F.when(gt > 0, F.col("_cum") / gt).otherwise(err)
-    prior = (F.col("_cum") - F.col("total")) / gt
-    cls = F.when(
-        gt > 0,
-        F.when(prior < F.lit(a_share), F.lit("A"))
-        .when(prior < F.lit(b_share), F.lit("B"))
-        .otherwise(F.lit("C")),
-    ).otherwise(err.cast("string"))
-    return out.select(
-        key_col,
-        "total",
-        "rank",
-        share.alias("cum_share"),
-        cls.alias("abc"),
-    )
-
-
 def rfm_scores(
     df,
     user_col: str,
@@ -3733,7 +2321,7 @@ def rfm_scores(
     relative to ``as_of``), Frequency (events), Monetary (summed value),
     each scored 1..n_bins by EXACT population quantile, plus the classic
     rule-table segment label -- the standard customer-value readout
-    next to abc_classes/retention_matrix. Returns (user, recency_days,
+    next to retention_matrix. Returns (user, recency_days,
     frequency, monetary, r_score, f_score, m_score, segment).
 
     Scores are exact ntiles computed skew-free: rank by (metric,
@@ -3824,8 +2412,8 @@ def weighted_quantile(
     cumsum) + one hash agg: keyed windows spread across reducers, so
     unlike a GLOBAL quantile there is no single-task melt -- per-key
     state is that key's rows, the same bound as any keyed window in
-    the engine (a single pathological key wants the global_running_sum
-    two-phase treatment instead). Rows with NULL value or NULL/
+    the engine (a single pathological key wants a two-phase global
+    rank like global_row_number instead). Rows with NULL value or NULL/
     non-positive weight are excluded; a group with no surviving rows
     emits no row."""
     if not 0 < q <= 1:
@@ -3855,306 +2443,6 @@ def weighted_quantile(
         hit.groupBy(*keys)
         .agg(F.min("_v").alias(out))
         .filter(F.col(out).isNotNull())
-    )
-
-
-def logrank_test(
-    df,
-    group_col: str,
-    duration_col: str,
-    event_col: str,
-    group_a,
-    group_b,
-    keys: "list[str] | None" = None,
-) -> DataFrame:
-    """Two-sample log-rank test per key slice -- "do these two arms
-    have the same survival curve?", the hypothesis test completing the
-    Kaplan-Meier readout (survival_curve draws the curves; this says
-    whether their difference is signal). Input rows are subjects
-    (duration, event 1/0-censored, arm label); output one row per key
-    with per-arm subject/event counts, the observed-minus-expected sum
-    O_a - E_a, its hypergeometric variance, and ``z_stat`` =
-    (O_a - E_a) / sqrt(V) (chi2 = z^2 at 1 dof). Stops at the
-    statistic -- no chi2 CDF in Spark SQL, the welch_ttest rationale.
-
-    At each distinct event time t: E_a += d_t * nA_t / n_t and
-    V += d_t * (nA_t/n_t) * (1 - nA_t/n_t) * (n_t - d_t)/(n_t - 1)
-    (V term 0 when n_t = 1), with at-risk counts nA_t/n_t = subjects
-    of duration >= t -- computed as a REVERSE running sum over the
-    per-(key, time) frame (bounded: distinct times, not subjects), so
-    the whole test is one hash agg + one ordered window per key + one
-    final agg. NULL durations/events, rows in neither arm, and NULL
-    key values (review: the counts-stats join would otherwise silently
-    drop the slice) are excluded. A slice whose rows are ALL censored
-    has no event times at all -- it still emits its subject counts,
-    with o_minus_e = variance = 0.0 (sums over an empty set) and NULL
-    z_stat (the test is undefined at zero variance); review: the
-    earlier inner counts-stats join made such a slice vanish
-    entirely."""
-    keys = keys or []
-    from pyspark.sql import Window
-
-    g = F.col(group_col)
-    in_a, in_b = g == F.lit(group_a), g == F.lit(group_b)
-    ev = F.col(event_col).cast("double")
-    nn = F.lit(True)
-    for k in keys:
-        nn = nn & F.col(k).isNotNull()
-    base = df.filter(
-        nn
-        & (in_a | in_b)
-        & F.col(duration_col).isNotNull()
-        & F.col(event_col).isNotNull()
-    )
-    per_t = base.groupBy(*keys, F.col(duration_col).alias("t")).agg(
-        F.sum(F.when(in_a, ev).otherwise(0.0)).alias("_d_a"),
-        F.sum(ev).alias("_d"),
-        F.sum(F.when(in_a, 1).otherwise(0)).cast("double").alias("_m_a"),
-        F.count(F.lit(1)).cast("double").alias("_m"),
-    )
-    w_rev = (
-        Window.partitionBy(*[F.col(k) for k in keys])
-        .orderBy(F.col("t").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    risked = per_t.withColumn("_n_a", F.sum("_m_a").over(w_rev)).withColumn(
-        "_n", F.sum("_m").over(w_rev)
-    )
-    p = F.col("_n_a") / F.col("_n")
-    vterm = F.when(
-        F.col("_n") > 1,
-        F.col("_d")
-        * p
-        * (1 - p)
-        * (F.col("_n") - F.col("_d"))
-        / (F.col("_n") - 1),
-    ).otherwise(F.lit(0.0))
-    terms = risked.filter(F.col("_d") > 0).select(
-        *keys,
-        (F.col("_d_a") - F.col("_d") * p).alias("_ome"),
-        vterm.alias("_v"),
-    )
-    stats = terms.groupBy(*keys).agg(
-        F.sum("_ome").alias("o_minus_e"), F.sum("_v").alias("variance")
-    )
-    counts = base.groupBy(*keys).agg(
-        F.sum(in_a.cast("long")).alias("n_a"),
-        F.sum(in_b.cast("long")).alias("n_b"),
-        F.sum(F.when(in_a, ev).otherwise(0.0)).cast("long").alias("events_a"),
-        F.sum(F.when(in_b, ev).otherwise(0.0)).cast("long").alias("events_b"),
-    )
-    # LEFT join so an all-censored slice (stats has no row for it --
-    # every per-time row was filtered by _d > 0) still emits its
-    # counts; keyless uses a single-row broadcast left join for the
-    # same reason (crossJoin against an EMPTY stats frame drops the
-    # counts row outright).
-    if keys:
-        joined = counts.join(stats, keys, "left")
-    else:
-        joined = counts.join(F.broadcast(stats), F.lit(True), "left")
-    ome = F.coalesce(F.col("o_minus_e"), F.lit(0.0))
-    var = F.coalesce(F.col("variance"), F.lit(0.0))
-    z = F.when(var > 0, ome / F.sqrt(var))
-    return joined.select(
-        *keys,
-        "n_a",
-        "n_b",
-        "events_a",
-        "events_b",
-        ome.alias("o_minus_e"),
-        var.alias("variance"),
-        z.alias("z_stat"),
-    )
-
-
-def backtest_forecast(
-    df,
-    keys: Sequence[str],
-    order_col: str,
-    value_col: str,
-    horizon: int = 3,
-    folds: int = 3,
-    alpha: float = 0.5,
-    beta: float = 0.3,
-) -> DataFrame:
-    """Rolling-origin backtest for the Holt forecaster -- the
-    evaluation harness forecasting needs the way ranking_metrics
-    evaluates rankers: ``folds`` cut points per key, each fitting on
-    the series PREFIX and scoring the next ``horizon`` actuals.
-    Returns one row per key with mae/rmse/n_scored over ALL scored
-    (fold, h) pairs, and mape averaged over the NON-DEGENERATE folds:
-    a fold containing a zero actual is excluded from mape (undefined
-    there, not infinite -- review: the earlier per-key blanket NULL
-    was coarser than this documented per-fold exclusion), and mape is
-    NULL only when every fold is degenerate.
-
-    Origins are the last ``folds`` positions that leave a full horizon
-    AND at least 2 prefix points (Holt needs level+trend); series too
-    short for any origin emit no row. Iterative by design (one
-    holt_smooth pass per fold -- each a keyed Arrow pass; folds is a
-    small constant), the kmeans/holt precedent: replica-tested rather
-    than SQL-oracled, with the forecast join itself pure DataFrame
-    composition. Cost: folds x (one sorted keyed pass + one broadcast-
-    sized forecast join); the series is never collected."""
-    if horizon < 1 or folds < 1:
-        raise ValueError("horizon and folds must be >= 1")
-    from pyspark.sql import Window
-
-    keys = list(keys)
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(order_col)
-    wn = Window.partitionBy(*[F.col(k) for k in keys])
-    nn = F.lit(True)
-    for k in keys:
-        nn = nn & F.col(k).isNotNull()
-    # NULL key values are excluded (review: the forecast-to-actual
-    # join would otherwise silently omit the series from every fold)
-    indexed = (
-        df.filter(
-            nn & F.col(order_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        .withColumn("_i", F.row_number().over(w))
-        .withColumn("_n", F.count(F.lit(1)).over(wn))
-        .localCheckpoint()  # every fold reads the SAME indexed frame
-    )
-    per_fold = []
-    for f in range(folds):
-        # origin: prefix length n - horizon - f (latest folds first)
-        cut = F.col("_n") - F.lit(horizon + f)
-        train = indexed.filter((F.col("_i") <= cut) & (cut >= 2))
-        if train.isEmpty():
-            continue
-        sm = holt_smooth(
-            train, keys, order_col, value_col, alpha=alpha, beta=beta
-        )
-        fc = holt_forecast(sm, keys, order_col, horizon).withColumn(
-            "_fold", F.lit(f)
-        )
-        actual = indexed.select(
-            *keys,
-            (F.col("_i") - cut).cast("int").alias("h"),
-            F.col(value_col).cast("double").alias("_y"),
-        ).filter((F.col("h") >= 1) & (F.col("h") <= horizon))
-        per_fold.append(
-            fc.join(actual, keys + ["h"]).select(
-                *keys,
-                "_fold",
-                "h",
-                (F.col("forecast") - F.col("_y")).alias("_err"),
-                F.col("_y").alias("_actual"),
-            )
-        )
-    if not per_fold:
-        raise ValueError(
-            "no fold has >= 2 prefix points plus a full horizon"
-        )
-    allf = per_fold[0]
-    for x in per_fold[1:]:
-        allf = allf.unionByName(x)
-    allf = allf.localCheckpoint()  # two aggs below read the same frame
-    flat = allf.groupBy(*keys).agg(
-        F.avg(F.abs(F.col("_err"))).alias("mae"),
-        F.sqrt(F.avg(F.col("_err") * F.col("_err"))).alias("rmse"),
-        F.count(F.lit(1)).alias("n_scored"),
-    )
-    # mape per FOLD (NULL for a fold containing a zero actual), then
-    # averaged over the non-degenerate folds -- avg skips NULLs, so
-    # mape is NULL only when every fold is degenerate
-    # try_divide: ANSI mode would otherwise throw DIVIDE_BY_ZERO on the
-    # zero-actual rows BEFORE the when() guard can null the fold out
-    per_fold_mape = allf.groupBy(*keys, "_fold").agg(
-        F.when(
-            F.sum((F.col("_actual") == 0).cast("int")) == 0,
-            F.avg(F.abs(F.try_divide(F.col("_err"), F.col("_actual")))),
-        ).alias("_mape_f")
-    )
-    mape = per_fold_mape.groupBy(*keys).agg(
-        F.avg("_mape_f").alias("mape")
-    )
-    if keys:
-        joined = flat.join(mape, keys)
-    else:
-        joined = flat.join(F.broadcast(mape), F.lit(True), "left")
-    return joined.select(*keys, "mae", "mape", "rmse", "n_scored")
-
-
-def benford_report(
-    df,
-    col: str,
-    keys: "list[str] | None" = None,
-) -> DataFrame:
-    """Benford first-digit audit per key slice -- the classic
-    fabricated-numbers screen (Benford 1938; Nigrini's forensic
-    accounting use): naturally-occurring multi-scale positive amounts
-    have first-digit frequencies log10(1 + 1/d), while invented or
-    constrained numbers usually don't. Returns one row per (key,
-    digit 1..9) with observed count, observed share, the Benford
-    expected share, plus the per-key chi2 statistic (8 dof) repeated on
-    each row for thresholding -- stops at the statistic, the
-    welch_ttest rationale. Only strictly-positive finite values are
-    audited (n excludes the rest); digits a slice never produced
-    still emit a row with zero count, so the chi2 is over all 9 cells.
-    NULL key values are excluded up front (the NULL-is-missingness
-    convention; review: the grid join would otherwise silently drop
-    the slice instead of auditing it).
-
-    Scale shape: first digit = floor(v / 10^floor(log10 v)) in pure
-    expressions, ONE hash agg to (keys, digit), a broadcast join of
-    the 9-row digit table to fill absent digits, one windowless re-agg
-    for the per-key totals (broadcast back). Not a skew concern at any
-    size: the digit frame is keys x 9."""
-    import math as _math
-
-    keys = keys or []
-    v = F.col(col).cast("double")
-    digit = F.floor(
-        v / F.pow(F.lit(10.0), F.floor(F.log10(v)))
-    ).cast("int")
-    nn = F.lit(True)
-    for k in keys:
-        nn = nn & F.col(k).isNotNull()
-    counted = (
-        df.filter(nn & v.isNotNull() & (v > 0) & ~F.isnan(v))
-        .groupBy(*keys, digit.alias("digit"))
-        .agg(F.count(F.lit(1)).alias("n_digit"))
-    )
-    spark = df.sparkSession
-    digits = spark.createDataFrame(
-        [(d, _math.log10(1 + 1 / d)) for d in range(1, 10)],
-        "digit INT, expected_share DOUBLE",
-    )
-    key_slices = counted.select(*keys).distinct() if keys else None
-    grid = (
-        key_slices.crossJoin(F.broadcast(digits))
-        if keys
-        else digits
-    )
-    full = grid.join(counted, [*keys, "digit"], "left").withColumn(
-        "n_digit", F.coalesce(F.col("n_digit"), F.lit(0))
-    )
-    totals = full.groupBy(*keys).agg(F.sum("n_digit").alias("_n"))
-    out = (
-        full.join(F.broadcast(totals), keys)
-        if keys
-        else full.crossJoin(F.broadcast(totals))
-    )
-    from pyspark.sql import Window
-
-    obs = F.col("n_digit") / F.col("_n")
-    cell = F.pow(
-        F.col("n_digit") - F.col("_n") * F.col("expected_share"), 2
-    ) / (F.col("_n") * F.col("expected_share"))
-    # window over the DIGIT frame: exactly 9 rows per key (keyless: 9
-    # rows total), so even the unpartitioned case is bounded
-    chi_w = F.sum(cell).over(
-        Window.partitionBy(*[F.col(k) for k in keys])
-    )
-    return out.select(
-        *keys,
-        "digit",
-        "n_digit",
-        F.when(F.col("_n") > 0, obs).alias("observed_share"),
-        "expected_share",
-        F.when(F.col("_n") > 0, chi_w).alias("chi2"),
     )
 
 
@@ -4289,7 +2577,7 @@ def fk_integrity_report(
     pk_col: str,
 ) -> DataFrame:
     """Cross-table referential-integrity gate -- the check
-    expectation_report (single-table rules) and freshness_report
+    observe_expectations (single-table rules) and freshness_report
     (staleness) cannot make: does every foreign key actually resolve?
     An orphaned FK silently becomes a dropped row at the next inner
     join or a NULL-enriched row at the next left join; this reports it
@@ -4310,7 +2598,7 @@ def fk_integrity_report(
       ok                    n_orphans = 0 AND n_dup_pk = 0 AND
                             n_null_pk = 0. Defined even on an EMPTY
                             fact or dim: zero-row conditional sums
-                            coalesce to 0 (r10 ADVICE), so no-data
+                            coalesce to 0, so no-data
                             reads ok=true with every count 0 rather
                             than a NULL a gate cannot branch on
 
@@ -4332,7 +2620,7 @@ def fk_integrity_report(
     )
     # conditional SUMs return NULL over zero rows, so an EMPTY fact (or
     # dim) would surface NULL counts and a NULL ``ok`` -- a gate could
-    # not tell "clean" from "no data" (r10 ADVICE). Coalesce to 0: an
+    # not tell "clean" from "no data". Coalesce to 0: an
     # empty fact has zero orphans by definition and reads ok=true.
     zero = F.lit(0).cast("long")
     fact_agg = (
@@ -4407,8 +2695,8 @@ def ks_test(
     window at the grid's cardinality; the statistic becomes the exact
     KS of the quantized distributions, which brackets the true D
     within one grid cell's probability mass -- the right trade at
-    100 TB (or use psi_bins' fixed-bin form). SAFE BY DEFAULT (r10
-    verdict): ``quantize`` defaults to 6 -- a micro-precision grid
+    100 TB (or use psi_bins' fixed-bin form). SAFE BY DEFAULT:
+    ``quantize`` defaults to 6 -- a micro-precision grid
     that is an exact no-op on any value with <= 6 fractional digits
     (counts, currencies, ratios rounded upstream) while capping the
     per-key window at the 1e-6 grid's cardinality on truly continuous
@@ -4471,93 +2759,6 @@ def ks_test(
     )
 
 
-def cohen_kappa(
-    df,
-    item_col: str,
-    rater_col: str,
-    label_col: str,
-    rater_a,
-    rater_b,
-    keys: "list[str] | None" = None,
-) -> DataFrame:
-    """Cohen's kappa between two named raters -- the
-    chance-corrected inter-annotator agreement a labeling pipeline
-    gates on before trusting human labels as training truth (raw
-    percent agreement flatters imbalanced label sets; kappa subtracts
-    the agreement two raters would reach by marginal chance alone).
-    Input rows are (item, rater, label) assignments; output one row
-    per key slice: (keys, n_items, po, pe, kappa) over the items BOTH
-    raters labeled, with po = observed agreement, pe = sum over
-    classes of the two raters' marginal shares multiplied, and
-    kappa = (po - pe) / (1 - pe) -- NULL when pe = 1 (both raters
-    constant: chance explains everything, the statistic is undefined).
-    Landis-Koch reading: < 0.2 slight, 0.4-0.6 moderate, > 0.8 almost
-    perfect.
-
-    A rater labeling an item more than once is a data bug that would
-    fan the item join out -- deduped deterministically to the MIN
-    label per (item, rater) so the statistic stays well-defined
-    (document upstream fixes with fk_integrity_report-style audits).
-    NULL labels/items are excluded. Scale shape: one hash agg per
-    rater slice to (item, label), one equi-join on the item, one
-    conditional agg for po, two class-marginal hash aggs (bounded by
-    the label alphabet) joined for pe -- items shuffle once each."""
-    keys = keys or []
-    nn = F.lit(True)
-    for k in keys:
-        nn = nn & F.col(k).isNotNull()
-    base = df.filter(
-        nn
-        & F.col(item_col).isNotNull()
-        & F.col(label_col).isNotNull()
-    )
-
-    def rater(val, out):
-        return (
-            base.filter(F.col(rater_col) == F.lit(val))
-            .groupBy(*keys, F.col(item_col).alias("_item"))
-            .agg(F.min(F.col(label_col)).alias(out))
-        )
-
-    paired = rater(rater_a, "_la").join(
-        rater(rater_b, "_lb"), keys + ["_item"]
-    )
-    counts = paired.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.avg((F.col("_la") == F.col("_lb")).cast("double")).alias("po"),
-    )
-    ma = paired.groupBy(*keys, F.col("_la").alias("_cls")).agg(
-        F.count(F.lit(1)).alias("_ca")
-    )
-    mb = paired.groupBy(*keys, F.col("_lb").alias("_cls")).agg(
-        F.count(F.lit(1)).alias("_cb")
-    )
-    pe = (
-        ma.join(mb, keys + ["_cls"])
-        .groupBy(*keys)
-        .agg(F.sum(F.col("_ca") * F.col("_cb")).alias("_pe_num"))
-    )
-    if keys:
-        joined = counts.join(pe, keys, "left")
-    else:
-        joined = counts.join(F.broadcast(pe), F.lit(True), "left")
-    # a class pair both raters never share leaves pe empty: pe = 0
-    pe_col = F.coalesce(
-        F.col("_pe_num") / (F.col("n_items") * F.col("n_items")),
-        F.lit(0.0),
-    )
-    kappa = F.when(
-        pe_col < 1, (F.col("po") - pe_col) / (1 - pe_col)
-    )
-    return joined.select(
-        *keys,
-        "n_items",
-        "po",
-        pe_col.alias("pe"),
-        kappa.alias("kappa"),
-    )
-
-
 def fleiss_kappa(
     df,
     item_col: str,
@@ -4565,7 +2766,7 @@ def fleiss_kappa(
     keys: "list[str] | None" = None,
 ) -> DataFrame:
     """Fleiss' kappa for MANY raters -- the multi-annotator
-    generalization of cohen_kappa (crowdsourced labeling rarely has
+    generalization of Cohen's kappa (crowdsourced labeling rarely has
     two fixed raters; Fleiss 1971 measures agreement from the per-item
     label distribution alone, raters anonymous and interchangeable).
     Input rows are (item, label) assignments -- one per rating; output
@@ -4702,7 +2903,7 @@ def krippendorff_alpha(
     row (n_items 0, alpha NULL, coverage 0.0) -- one row keyless, and
     one row PER all-singleton key slice in the keyed form (the keyed
     assembly drives from the all-slices coverage frame with left
-    joins, so no slice vanishes; r13 ADVICE). Perfect
+    joins, so no slice vanishes). Perfect
     agreement gives exactly 1.0; chance-level labeling sits near 0;
     systematic disagreement goes negative.
 
@@ -4738,8 +2939,8 @@ def krippendorff_alpha(
     # deterministically-rounded decimal(38,10) quotient and decimal
     # addition is exact, so the fold is identical under ANY
     # partitioning -- a plain double sum here returned last-ULP
-    # different alpha depending on partition merge order (r14 green
-    # fix: the replica test pins repartition-invariance). Operand
+    # different alpha depending on partition merge order (the replica
+    # test pins repartition-invariance). Operand
     # precisions chosen so Spark's divide rule keeps scale 10 with no
     # precision loss (28 + 10 = 38).
     totals = pairable.groupBy(*keys).agg(
@@ -4768,7 +2969,7 @@ def krippendorff_alpha(
         # singletons has no totals/cls_tot row, and an inner join
         # would make it vanish instead of emitting the documented
         # abstention row (n_items 0, alpha NULL, coverage 0.0) the
-        # keyless path produces (r13 ADVICE)
+        # keyless path produces
         joined = cov.join(totals, keys, "left").join(cls_tot, keys, "left")
     else:
         joined = totals.join(F.broadcast(cls_tot), F.lit(True)).join(
@@ -4814,8 +3015,8 @@ def classification_report(
     keys: "list[str] | None" = None,
 ) -> DataFrame:
     """Binary-classification confusion counts + derived metrics per key
-    slice -- the model-eval readout beside binary_auc (ranking quality)
-    and calibration_bins (probability quality): once a threshold turns
+    slice -- the model-eval readout beside lift_table (ranking
+    quality) and calibration_bins (probability quality): once a threshold turns
     scores into 0/1 predictions, THIS is the precision/recall/F1 gate a
     labeling or filtering pipeline promotes on. Returns one row per
     key: (keys..., n, tp, fp, fn, tn, accuracy, precision, recall, f1).
@@ -4833,7 +3034,7 @@ def classification_report(
     counts feed the pooled denominators its gaps compare against).
 
     Scale shape: ONE conditional-count hash aggregate over one scan --
-    all four confusion cells are sibling sums, the expectation_report
+    all four confusion cells are sibling sums, the observe_expectations
     form; no windows, no joins, no second pass."""
     keys = keys or []
     y = _binary01(F.col(label_col), "classification_report", label_col)
@@ -4960,8 +3161,8 @@ def lift_table(
     id_col: str,
     n_buckets: int = 10,
 ) -> DataFrame:
-    """Decile lift / cumulative-gains table -- the targeting readout
-    beside binary_auc: rank the population by model score, cut it into
+    """Decile lift / cumulative-gains table -- the targeting readout:
+    rank the population by model score, cut it into
     ``n_buckets`` equal score-ordered buckets, and report how much
     better each bucket converts than the base rate (lift) and what
     share of ALL positives the top-k buckets capture (gains). The
@@ -5087,7 +3288,7 @@ def pass_at_k(
     division-in-aggregate rule)."""
     for k in ks:
         # fail loud like the other guards -- int(2.7) would silently
-        # compute pass@2 (r13 ADVICE)
+        # compute pass@2
         if int(k) != k:
             raise ValueError(f"pass_at_k: every k must be an integer: {k}")
     ks = list(dict.fromkeys(int(k) for k in ks))
@@ -5153,17 +3354,15 @@ def mcnemar_test(
       statistic           = (b - a)^2 / (a + b)          ~ chi2(1)
       statistic_corrected = (|b - a| - 1)^2 / (a + b)    (Edwards CC)
 
-    Returns one row per key slice: (keys..., n, both_right,
-    both_wrong, a_only, b_only, accuracy_a, accuracy_b, statistic,
-    statistic_corrected). Following the chi_square convention the
-    p-value lookup stays with the caller (chi2(1): 3.841 = p 0.05,
-    6.635 = p 0.01); both statistics are NULL when there are no
-    discordant items (the models are indistinguishable on the slice --
-    abstention, not significance), and the corrected form is also NULL
-    when |b - a| < 1 would drive it negative (it is a small-count
-    guard, not a statistic of its own there). Rows with a NULL on
-    either side are excluded (unscored is not wrong); a NULL key is a
-    real slice.
+    Returns one row per key slice: (keys..., n, both_right, both_wrong,
+    a_only, b_only, accuracy_a, accuracy_b, statistic, statistic_corrected).
+    The p-value lookup stays with the caller (chi2(1): 3.841 = p 0.05, 6.635
+    = p 0.01); both statistics are NULL when there are no discordant items
+    (the models are indistinguishable on the slice -- abstention, not
+    significance), and the corrected form is also NULL when |b - a| < 1
+    would drive it negative (it is a small-count guard, not a statistic of
+    its own there). Rows with a NULL on either side are excluded (unscored
+    is not wrong); a NULL key is a real slice.
 
     Scale shape: ONE conditional hash aggregate over one scan -- all
     four concordance cells are sibling sums, the classification_report

@@ -108,74 +108,3 @@ def asof_join(
             for c in value_cols
         ],
     )
-
-
-def interpolate_linear(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    out_col: str | None = None,
-    extrapolate: str = "null",
-    tiebreak_cols: list[str] | None = None,
-) -> DataFrame:
-    """Fill NULL gaps in a per-key time series by linear interpolation
-    between the nearest non-null observations: at a gap row,
-    prev + (next - prev) * (ts - prev_ts) / (next_ts - prev_ts), time-
-    weighted on the actual timestamps (never row positions). The
-    sensor-reading / metric-series repair step before rollups.
-
-    Edges (before the first / after the last observation) follow
-    ``extrapolate``: 'null' (default) leaves them NULL, 'nearest'
-    carries the first/last observation outward. Non-null rows pass
-    through untouched.
-
-    Scale shape: ONE shuffle+sort per key drives BOTH direction
-    windows (last ignorenulls backward, first ignorenulls forward over
-    the same partitioning -- Spark reuses the sorted exchange), the
-    asof_join discipline; no joins, no per-gap scans. Rows whose
-    key has no observations at all stay NULL."""
-    if extrapolate not in ("null", "nearest"):
-        raise ValueError("extrapolate must be 'null' or 'nearest'")
-    out_col = out_col or value_col + "_filled"
-    v, t = F.col(value_col), F.col(ts_col)
-    # duplicate timestamps make neighbor choice order-dependent; a
-    # tiebreak (e.g. the row id) pins it deterministically
-    order = [ts_col, *(tiebreak_cols or [])]
-    base = Window.partitionBy(*key_cols).orderBy(*order)
-    back = base.rowsBetween(Window.unboundedPreceding, 0)
-    fwd = base.rowsBetween(0, Window.unboundedFollowing)
-    obs = F.when(v.isNotNull(), F.struct(t.alias("ts"), v.alias("v")))
-    prev = F.last(obs, ignorenulls=True).over(back)
-    nxt = F.first(obs, ignorenulls=True).over(fwd)
-    # timestamps subtract to an interval; cast both spans to double
-    # seconds (works for numeric ts too via the double cast below)
-    if dict(df.dtypes)[ts_col].startswith("timestamp"):
-        span = lambda a, b: (  # noqa: E731
-            a.cast("double") - b.cast("double")
-        )
-    else:
-        span = lambda a, b: (a - b).cast("double")  # noqa: E731
-    both = F.col("_p").isNotNull() & F.col("_n").isNotNull()
-    interp = F.col("_p.v") + (
-        (F.col("_n.v") - F.col("_p.v"))
-        * span(t, F.col("_p.ts"))
-        / span(F.col("_n.ts"), F.col("_p.ts"))
-    )
-    filled = (
-        F.when(v.isNotNull(), v.cast("double"))
-        .when(
-            both & (F.col("_n.ts") != F.col("_p.ts")), interp
-        )
-        .when(both, F.col("_p.v").cast("double"))
-    )
-    if extrapolate == "nearest":
-        filled = filled.when(
-            F.col("_p").isNotNull(), F.col("_p.v").cast("double")
-        ).when(F.col("_n").isNotNull(), F.col("_n.v").cast("double"))
-    return (
-        df.withColumn("_p", prev)
-        .withColumn("_n", nxt)
-        .withColumn(out_col, filled)
-        .drop("_p", "_n")
-    )

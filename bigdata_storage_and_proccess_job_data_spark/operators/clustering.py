@@ -157,69 +157,6 @@ def kmeans_objective(
     return float(row["obj"]) if row["obj"] is not None else 0.0
 
 
-def kmeans_update(
-    batch: DataFrame,
-    centroids: list[list[float]],
-    counts: list[float],
-    vec_col: str = "embedding",
-    decay: float = 1.0,
-) -> tuple[list[list[float]], list[float]]:
-    """Mini-batch / streaming k-means update (the StreamingKMeans
-    "forgetful" rule): fold ONE new batch into an existing spherical
-    model without touching historical vectors -- the maintained-
-    artifact form of kmeans_refine, for the daily-ingest shape where
-    the quantizer (IVF cells, SemDeDup blocks) must track a growing
-    corpus at O(batch) cost per refresh.
-
-    Per cell: c' = normalize(decay * n * c + n_b * mean_b),
-    n' = decay * n + n_b, with (mean_b, n_b) the batch's per-cell
-    component means/counts from one codegen argmax assignment + one
-    hash agg (k x dim doubles to the driver, the kmeans_refine bound).
-    ``decay`` < 1 down-weights history; decay=1 keeps the exact
-    weighted running mean of the unit vectors each cell absorbed, up
-    to the per-update renormalization. Sequential updates approximate
-    one batched refine round rather than equal it -- assignments drift
-    as centroids move, the standard mini-batch trade. With zero
-    history counts, one update IS one kmeans_refine iteration on the
-    batch (pinned). Cells the batch never hits keep their centroid;
-    their count still decays. Returns (centroids, counts)."""
-    if not centroids:
-        raise ValueError("centroids must be non-empty")
-    if len(counts) != len(centroids):
-        raise ValueError("counts must align with centroids")
-    if not 0 < decay <= 1:
-        raise ValueError("decay must be in (0, 1]")
-    dim = len(centroids[0])
-    cent = _normalized(centroids)
-    cents = [[float(x) for x in row] for row in cent]
-    agg = (
-        _unit_vectors(batch, vec_col)
-        .withColumn("_cell", F.array_max(_cell_sims("_v", cents))["cell"])
-        .groupBy("_cell")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[F.avg(F.col("_v")[i]).alias(f"_m{i}") for i in range(dim)],
-        )
-        .collect()  # bounded: k rows x dim doubles
-    )
-    new_c = [row[:] for row in cent]
-    new_n = [decay * float(n) for n in counts]
-    for r in agg:
-        i = r["_cell"]
-        nb = float(r["_n"])
-        hist = decay * float(counts[i])
-        mean_b = [float(r[f"_m{j}"]) for j in range(dim)]
-        tot = hist + nb
-        new_c[i] = [
-            (hist * cent[i][j] + nb * mean_b[j]) / tot for j in range(dim)
-        ]
-        new_n[i] = tot
-    return (
-        [[float(x) for x in row] for row in _normalized(new_c)],
-        new_n,
-    )
-
-
 def semantic_dedup(
     corpus: DataFrame,
     id_col: str = "vec_id",

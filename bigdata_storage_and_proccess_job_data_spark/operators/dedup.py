@@ -41,32 +41,6 @@ def dedup_by_key(
     )
 
 
-def dedup_exact_content(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    normalize: bool = True,
-) -> DataFrame:
-    """Exact content dedup: hash the (optionally normalized) content and
-    keep the lowest id per hash. One shuffle on the 128-bit hash; hash
-    first so the shuffle key is fixed-width even for multi-KB documents
-    (shuffling md5 keys, not document bodies, is what keeps this viable
-    at 100 TB).
-
-    Returns the surviving rows (all original columns).
-    """
-    c = F.col(content_col)
-    if normalize:
-        c = F.lower(F.trim(c))
-    hashed = df.withColumn("_h", F.md5(c))
-    w = Window.partitionBy("_h").orderBy(F.col(id_col).asc())
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_h")
-    )
-
-
 def first_of_burst(
     df: DataFrame,
     keys: Sequence[str],

@@ -21,7 +21,7 @@ Scale design (100 TB of interactions):
   hub caveat: power-law interaction data makes a head item's
   history ITSELF huge (every applyInPandas op's per-group bound);
   pre-cap with a deterministic per-pair md5 coin
-  (corpus.deterministic_sample on the hot side) before fitting --
+  (corpus.hash_bucket on the hot side) before fitting --
   a bounded uniform sample of a 100M-row history loses nothing a
   rank-8 least-squares solve could have used. The blocked
   formulation (MLlib's user-block x item-block joins) is the

@@ -1,5 +1,5 @@
 """Feature engineering with stored fit artifacts: standardization,
-quantile binning, winsorization.
+quantile binning, target encoding, weight of evidence.
 
 The reference stops at ad-hoc derived columns (spark_batch_v2.py's
 withColumn chains, cited at functions/enrich.py); production feature
@@ -130,201 +130,6 @@ def quantile_bins_apply(
     return out
 
 
-def winsorize(
-    df: DataFrame,
-    cols: list[str],
-    lower: float = 0.01,
-    upper: float = 0.99,
-    keys: list[str] | None = None,
-    suffix: str = "_w",
-) -> DataFrame:
-    """Clip ``cols`` to their per-group [lower, upper] exact quantiles
-    -- the tail-taming step before means/regressions that
-    robust_outliers only FLAGS. One fit agg + one broadcast join; NULLs
-    pass through; original columns retained."""
-    if not 0 <= lower < upper <= 1:
-        raise ValueError("need 0 <= lower < upper <= 1")
-    d, ks = _with_key(df, keys)
-    # both cut points from ONE percentile aggregate per column (array
-    # of percentages shares the sort buffer; two sibling calls each
-    # kept their own)
-    fit = d.groupBy(*ks).agg(
-        *[
-            F.percentile(
-                F.col(c), F.array(F.lit(lower), F.lit(upper))
-            ).alias(f"_q_{c}")
-            for c in cols
-        ]
-    )
-    out = d.join(F.broadcast(fit), ks, "left")
-    for c in cols:
-        out = out.withColumn(
-            c + suffix,
-            F.least(
-                F.greatest(F.col(c), F.col(f"_q_{c}")[0]),
-                F.col(f"_q_{c}")[1],
-            ),
-        )
-    drop = [f"_q_{c}" for c in cols]
-    if keys is None:
-        drop.append(_GLOBAL_KEY)
-    return out.drop(*drop)
-
-
-def isotonic_fit(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    keys: list[str] | None = None,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Isotonic regression per group via pool-adjacent-violators --
-    the nonparametric probability calibrator (Zadrozny-Elkan 2002)
-    that turns a ranker's raw scores into calibrated probabilities:
-    binary_auc measures RANKING, calibration_bins measures the gap,
-    this FIXES the gap with the monotone step function that minimizes
-    squared error. The fit/transform split follows this module's
-    artifact discipline: the model is a small blocks frame (key,
-    x_lo, x_hi, yhat, n), persistable like any other fit.
-
-    Tied scores are pre-pooled in ONE hash aggregate (required for a
-    well-defined monotone fit), so the sequential PAV stack runs over
-    DISTINCT scores only -- the applyInPandas group payload is
-    O(distinct scores), not O(rows), and the pooling is exactly the
-    weighted PAV on tie-group means. PAV itself is order-sequential
-    with a data-dependent pooling stack (no closed window form), so
-    it joins ewma/holt as a justified Arrow path; per-key distinct
-    scores must fit an executor (calibration sets are samples by
-    construction -- millions of distinct scores per key would be
-    over-fit anyway). Replica-tested against a pure-Python PAV.
-
-    Returns one row per pooled block: keys + (x_lo, x_hi, yhat, n)."""
-    d, ks = _with_key(df, keys)
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col
-        else F.lit(1.0)
-    )
-    tied = (
-        d.filter(
-            F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .groupBy(*ks, F.col(score_col).cast("double").alias("_x"))
-        .agg(
-            F.sum(w * F.col(label_col).cast("double")).alias("_wy"),
-            F.sum(w).alias("_w"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    key_fields = [tied.schema[k] for k in ks]
-    schema = StructType(
-        key_fields
-        + [
-            StructField("x_lo", DoubleType()),
-            StructField("x_hi", DoubleType()),
-            StructField("yhat", DoubleType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    def pav(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values("_x", kind="mergesort").reset_index(
-            drop=True
-        )
-        x = pdf["_x"].to_numpy()
-        wy = pdf["_wy"].to_numpy()
-        wt = pdf["_w"].to_numpy()
-        cnt = pdf["_n"].to_numpy()
-        # stack of blocks: [sum_wy, sum_w, n, x_lo, x_hi]
-        blocks: list[list[float]] = []
-        for i in range(len(x)):
-            blocks.append([wy[i], wt[i], cnt[i], x[i], x[i]])
-            while (
-                len(blocks) > 1
-                and blocks[-2][0] * blocks[-1][1]
-                >= blocks[-1][0] * blocks[-2][1]
-            ):
-                b = blocks.pop()
-                blocks[-1][0] += b[0]
-                blocks[-1][1] += b[1]
-                blocks[-1][2] += b[2]
-                blocks[-1][4] = b[4]
-        out = pd.DataFrame(
-            {
-                "x_lo": [b[3] for b in blocks],
-                "x_hi": [b[4] for b in blocks],
-                "yhat": [b[0] / b[1] for b in blocks],
-                "n": np.array([b[2] for b in blocks], dtype="int64"),
-            }
-        )
-        for k in ks:
-            out[k] = pdf[k].iloc[0]
-        return out[[*ks, "x_lo", "x_hi", "yhat", "n"]]
-
-    fitted = tied.groupBy(*ks).applyInPandas(pav, schema=schema)
-    if keys is None:
-        fitted = fitted.drop(_GLOBAL_KEY)
-    return fitted
-
-
-def isotonic_apply(
-    df: DataFrame,
-    model: DataFrame,
-    score_col: str,
-    keys: list[str] | None = None,
-    out_col: str = "calibrated",
-) -> DataFrame:
-    """Apply an ``isotonic_fit`` model: the step function evaluated as
-    a pure expression -- blocks fold to ONE sorted-array row per key
-    (collect_list + array_sort in a bounded hash agg; blocks are the
-    artifact, already small), broadcast-joined, then the lookup is
-    size(filter(boundaries <= score)) + element_at: O(blocks) codegen
-    per row, no per-row join fan-out. Scores below the first block
-    clamp to its value, above the last to the last's (sklearn
-    out_of_bounds='clip'); NULL scores and unseen keys emit NULL --
-    never a silently-uncalibrated passthrough."""
-    d, ks = _with_key(df, keys)
-    packed = (
-        model
-        if keys is not None
-        else model.withColumn(_GLOBAL_KEY, F.lit(1))
-    )
-    folded = (
-        packed.groupBy(*ks)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("x_lo", "yhat"))
-            ).alias("_blk")
-        )
-        .select(
-            *ks,
-            F.col("_blk.x_lo").alias("_lo"),
-            F.col("_blk.yhat").alias("_ys"),
-        )
-    )
-    s = F.col(score_col).cast("double")
-    joined = d.join(F.broadcast(folded), ks, "left")
-    idx = F.size(F.filter(F.col("_lo"), lambda t: t <= s))
-    cal = F.when(
-        s.isNotNull() & F.col("_ys").isNotNull(),
-        F.element_at(F.col("_ys"), F.greatest(idx, F.lit(1))),
-    )
-    out = joined.withColumn(out_col, cal).drop("_lo", "_ys")
-    if keys is None:
-        out = out.drop(_GLOBAL_KEY)
-    return out
-
-
 def target_encode_fit(
     df: DataFrame,
     keys: list[str],
@@ -392,147 +197,6 @@ def target_encode_apply(
     )
 
 
-def hbos_fit(
-    df: DataFrame,
-    cols: list[str],
-    n_bins: int = 10,
-) -> dict:
-    """Histogram-Based Outlier Score model (Goldstein & Dengel 2012):
-    per feature, an equal-WIDTH histogram over [min, max] -- the
-    density-estimation complement to Mahalanobis (which assumes one
-    Gaussian ellipsoid; HBOS sees multi-modal and skewed densities,
-    feature-independently). Equal-width, not quantile bins: quantile
-    bins equalize densities by construction, which would erase the
-    signal.
-
-    Returns a plain-python model (the pca_fit/mahalanobis precedent --
-    it enters plans as literals): {col: {"min", "width", "n",
-    "counts": [n_bins]}}. TWO passes: one sibling min/max aggregate for
-    every feature, one hash agg of bin counts (all features in a single
-    explode); driver state is cols x n_bins longs. NULLs are excluded
-    per feature; a constant feature gets width 0 and scores 0
-    everywhere (no information)."""
-    if n_bins < 2:
-        raise ValueError(f"n_bins must be >= 2: {n_bins}")
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    aggs = []
-    for c in cols:
-        v = _hbos_finite(F.col(c).cast("double"))
-        aggs += [F.min(v).alias(f"_lo_{c}"), F.max(v).alias(f"_hi_{c}")]
-    row = df.agg(*aggs).collect()[0]  # bounded: one row
-    meta = {}
-    for c in cols:
-        lo, hi = row[f"_lo_{c}"], row[f"_hi_{c}"]
-        if lo is None:
-            raise ValueError(f"column {c!r} has no non-null values")
-        meta[c] = {
-            "min": float(lo),
-            "width": (float(hi) - float(lo)) / n_bins,
-        }
-    # one pass for all features: (feature, bin) count via explode
-    pairs = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("f"),
-                        _hbos_bin(
-                            F.col(c).cast("double"),
-                            meta[c]["min"],
-                            meta[c]["width"],
-                            n_bins,
-                        ).alias("b"),
-                    )
-                    for c in cols
-                ]
-            )
-        ).alias("p")
-    ).select("p.f", "p.b").filter(F.col("b").isNotNull())
-    counts = (
-        pairs.groupBy("f", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: cols x n_bins rows
-    )
-    model = {}
-    for c in cols:
-        bins = [0] * n_bins
-        model[c] = {
-            "min": meta[c]["min"],
-            "width": meta[c]["width"],
-            "counts": bins,
-            "n": 0,
-        }
-    for r in counts:
-        model[r["f"]]["counts"][r["b"]] = int(r["n"])
-        model[r["f"]]["n"] += int(r["n"])
-    return model
-
-
-def _hbos_finite(v):
-    """NULL out NaN/Infinity (review finding: one NaN value made the
-    width NaN, which passed the width<=0 check and silently collapsed
-    every row into bin 0 -- non-finite values are excluded like NULLs
-    instead)."""
-    return F.when(
-        ~F.isnan(v)
-        & (v != F.lit(float("inf")))
-        & (v != F.lit(float("-inf"))),
-        v,
-    )
-
-
-def _hbos_bin(v, lo: float, width: float, n_bins: int):
-    """Bin index 0..n_bins-1 with the max value folded into the last
-    bin; NULL for NULL/non-finite input; bin 0 for a constant
-    feature."""
-    v = _hbos_finite(v)
-    if width <= 0:
-        return F.when(v.isNotNull(), F.lit(0))
-    idx = F.floor((v - F.lit(lo)) / F.lit(width)).cast("int")
-    return F.when(
-        v.isNotNull(),
-        F.greatest(F.least(idx, F.lit(n_bins - 1)), F.lit(0)),
-    )
-
-
-def hbos_apply(
-    df: DataFrame,
-    model: dict,
-    out_col: str = "hbos",
-) -> DataFrame:
-    """HBOS score under a FIXED model: sum over features of
-    log10(max_count / count(bin(x))), pure literal expressions (zero
-    shuffles, zero UDFs -- exact-oracle checkable, the ridge/
-    Mahalanobis scoring precedent). Higher = more anomalous. Per
-    feature: counts are floored at 0.5 (an empty bin scores high but
-    finite), out-of-range values clamp to the edge bins (serving drift
-    lands in the extreme bin rather than erroring), NULL contributes 0
-    (missingness is not anomaly here -- gate NULLs upstream), and a
-    constant feature contributes 0."""
-    import math as _math
-
-    total = F.lit(0.0)
-    for c, m in model.items():
-        n_bins = len(m["counts"])
-        b = _hbos_bin(
-            F.col(c).cast("double"), m["min"], m["width"], n_bins
-        )
-        max_cnt = max(max(m["counts"]), 1)
-        scores = [
-            _math.log10(max_cnt / max(cnt, 0.5)) for cnt in m["counts"]
-        ]
-        lut = F.array(*[F.lit(s) for s in scores])
-        # explicit NULL-bin guard: element_at over an all-literal array
-        # with a NULL index does NOT reliably null-propagate (observed
-        # returning the last element on Spark 4.1), so never feed it one
-        contrib = F.when(
-            b.isNotNull(), F.element_at(lut, b + F.lit(1))
-        ).otherwise(F.lit(0.0))
-        total = total + contrib
-    return df.withColumn(out_col, total)
-
-
 def woe_fit(
     df: DataFrame,
     cat_col: str,
@@ -541,37 +205,34 @@ def woe_fit(
 ) -> DataFrame:
     """Weight-of-evidence fit for a categorical feature against a
     binary label -- the credit-scoring-standard encoding next to
-    target_encode (Siddiqi 2006 shape): per category,
-    woe = ln(pos_share / neg_share) with ``eps`` added to both class
-    counts (the classic half-event adjustment, so a pure category gets
-    a large-but-finite woe instead of an infinity), and the
-    information-value term iv_term = (pos_share - neg_share) * woe.
-    Returns one row per category: (category, n, n_pos, n_neg, woe,
-    iv_term) plus the feature's total ``iv`` repeated on each row (the
-    benford_report convention; rule of thumb: iv < 0.02 useless,
-    0.1-0.3 medium, > 0.5 suspicious). Shares use the RAW class totals
-    (only the per-category numerators are smoothed), so woe values
-    from the same fit are comparable.
+    target_encode (Siddiqi 2006 shape): per category, woe = ln(pos_share /
+    neg_share) with ``eps`` added to both class counts (the classic
+    half-event adjustment, so a pure category gets a large-but-finite woe
+    instead of an infinity), and the information-value term iv_term =
+    (pos_share - neg_share) * woe. Returns one row per category: (category,
+    n, n_pos, n_neg, woe, iv_term) plus the feature's total ``iv`` repeated
+    on each row (rule of thumb: iv < 0.02 useless, 0.1-0.3 medium, > 0.5
+    suspicious). Shares use the RAW class totals (only the per-category
+    numerators are smoothed), so woe values from the same fit are
+    comparable.
 
-    Rows with NULL category are a real level ("missing" carries
-    signal) and keep their own row; NULL labels are excluded. Labels
-    must be 0/1-valued numerics -- ENFORCED by an in-plan raise (r10
-    ADVICE: a fractional or out-of-range label used to truncate
-    silently through cast('long') and corrupt every woe/IV; now it
-    fails loud like bh_adjust's p-domain check). A single-class
-    population (no positives, or no negatives) has no evidence to
-    weigh and fails loud the same way (review: the raw class totals
-    are NOT eps-smoothed -- only per-category numerators are -- so a
-    zero total would otherwise crash as an opaque ANSI DIVIDE_BY_ZERO
-    mid-job). Scale shape: ONE hash agg to O(categories); the class
-    totals fold from that bounded artifact (review: not from a second
-    row-level scan), met in a broadcast join -- the artifact is
-    model-sized, the target_encode/hbos precedent. The final ``iv``
-    fold is an unpartitioned window over the POST-AGG category frame:
-    bounded for any sane categorical, but an id-like ``cat_col``
-    (one category per row) makes that frame row-sized and the window
-    a single-task sort -- bin/hash such columns first (quantile_bins
-    / feature hashing), the ks_test honesty standard."""
+    Rows with NULL category are a real level ("missing" carries signal) and
+    keep their own row; NULL labels are excluded. Labels must be 0/1-valued
+    numerics -- ENFORCED by an in-plan raise (a fractional or out-of-range
+    label would otherwise truncate silently through cast('long') and corrupt
+    every woe/IV), like bh_adjust's p-domain check. A single-class
+    population (no positives, or no negatives) has no evidence to weigh and
+    fails loud the same way (the raw class totals are NOT eps-smoothed --
+    only per-category numerators are -- so a zero total would otherwise
+    crash as an opaque ANSI DIVIDE_BY_ZERO mid-job). Scale shape: ONE hash
+    agg to O(categories); the class totals fold from that bounded artifact
+    (not from a second row-level scan), met in a broadcast join -- the
+    artifact is model-sized, the target_encode/hbos precedent. The final
+    ``iv`` fold is an unpartitioned window over the POST-AGG category frame:
+    bounded for any sane categorical, but an id-like ``cat_col`` (one
+    category per row) makes that frame row-sized and the window a
+    single-task sort -- bin/hash such columns first (quantile_bins / feature
+    hashing), the ks_test honesty standard."""
     if eps <= 0:
         raise ValueError(f"eps must be > 0: {eps}")
     from pyspark.sql import Window
@@ -625,175 +286,4 @@ def woe_fit(
         # global window over O(categories) rows: bounded by design
         "iv",
         F.sum("iv_term").over(Window.partitionBy()),
-    )
-
-
-def woe_apply(
-    df: DataFrame,
-    model: DataFrame,
-    cat_col: str,
-    out_col: str = "woe",
-) -> DataFrame:
-    """Attach a fitted weight-of-evidence score to each row by
-    category -- a broadcast join of the O(categories) artifact (the
-    standardize/target_encode apply convention). Categories unseen at
-    fit time get NULL (surface the drift; impute downstream if you
-    must), including rows whose category is NULL when the fit never
-    saw a NULL level. The null-safe equality (<=>) lets a fitted
-    "missing" level match NULL rows."""
-    m = model.select(
-        F.col("category").alias("_woe_cat"), F.col("woe").alias(out_col)
-    )
-    return df.join(
-        F.broadcast(m), F.col(cat_col).eqNullSafe(F.col("_woe_cat")), "left"
-    ).drop("_woe_cat")
-
-
-def rake_weights(
-    df: DataFrame,
-    margins: "dict[str, dict]",
-    max_iter: int = 50,
-    tol: float = 1e-9,
-    max_cells: int = 100_000,
-    out_col: str = "rake_weight",
-) -> DataFrame:
-    """Raking / iterative proportional fitting (Deming-Stephan 1940):
-    attach survey-style post-stratification weights so the WEIGHTED
-    marginal distribution of each listed column matches a target --
-    the reweighting step before reading eval metrics off a sample
-    whose demographics drifted from production (an eval set that
-    over-samples one source/language/segment silently biases every
-    aggregate; raking fixes all margins simultaneously where simple
-    per-column reweighting fixes one and breaks another).
-
-    ``margins`` maps column -> {category: target_share}; shares per
-    column must sum to 1 (validated), and every observed category must
-    appear in its target (a category the target says nothing about
-    fails loud rather than silently keeping weight 1). A 0.0 target
-    share is legal and means "exclude this category": its cells rake
-    to weight 0 and stay out of every other margin's denominator from
-    then on (a cell whose achieved share is already 0 is skipped, not
-    divided by -- its weight is correct by definition). If a POSITIVE
-    target sits entirely on zero-weight support (every cell of that
-    category was zeroed by another margin), no rescaling can ever
-    reach it: that infeasibility raises immediately instead of
-    surfacing as a division error mid-sweep. Rows with a
-    NULL in any raked column are excluded (give missingness its own
-    level upstream to weight it). Returns the input plus ``out_col``:
-    the fitted weight of the row's CELL, normalized so weights average
-    1 over the kept rows.
-
-    Scale shape (the kmeans/centroid precedent -- fit on a bounded
-    artifact, apply distributed): ONE hash agg folds the data to the
-    cell frame (one row per observed combination of the raked columns,
-    bounded by the product of the alphabets and guarded by
-    ``max_cells``), the IPF loop runs driver-side in pure Python over
-    that model-sized table (deterministic -- no RNG, no partition
-    dependence), and the fitted weights broadcast-join back to rows.
-    Convergence: stops when every achieved margin is within ``tol`` of
-    target; raises if max_iter passes without converging (classic IPF
-    converges whenever the targets are feasible for the observed
-    support; an infeasible zero-cell pattern is a data problem this
-    surfaces rather than hides)."""
-    if not margins:
-        raise ValueError("margins is empty: nothing to rake")
-    cols = list(margins)
-    for c, m in margins.items():
-        if not m:
-            raise ValueError(f"rake_weights: empty target margin for {c!r}")
-        total = float(sum(m.values()))
-        if abs(total - 1.0) > 1e-6:
-            raise ValueError(
-                f"rake_weights: target shares for {c!r} sum to {total}, "
-                "expected 1"
-            )
-    nn = F.lit(True)
-    for c in cols:
-        nn = nn & F.col(c).isNotNull()
-    kept = df.filter(nn)
-    cells = [
-        (tuple(getattr(r, c) for c in cols), r["_n"])
-        for r in kept.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    ]
-    if len(cells) > max_cells:
-        raise ValueError(
-            f"rake_weights: {len(cells)} observed cells exceeds "
-            f"max_cells={max_cells} -- rake on lower-cardinality "
-            "columns (bin/hash first)"
-        )
-    for vals, _ in cells:
-        for c, v in zip(cols, vals):
-            if v not in margins[c]:
-                raise ValueError(
-                    f"rake_weights: observed {c}={v!r} missing from its "
-                    "target margin"
-                )
-    n_total = float(sum(n for _, n in cells))
-    w = {vals: 1.0 for vals, _ in cells}
-    converged = False
-    for _ in range(max_iter):
-        worst = 0.0
-        for i, c in enumerate(cols):
-            achieved: dict = {}
-            for (vals, n) in cells:
-                achieved[vals[i]] = achieved.get(vals[i], 0.0) + n * w[vals]
-            mass = sum(achieved.values())
-            if mass == 0.0:
-                raise ValueError(
-                    "rake_weights: every observed cell sits in a "
-                    "zero-target category -- targets are infeasible "
-                    "for the observed support"
-                )
-            for (vals, n) in cells:
-                share = achieved[vals[i]] / mass
-                target = margins[c][vals[i]]
-                if share == 0.0:
-                    # already-zeroed support (a 0.0 target on another
-                    # margin). target 0 -> weight 0 is exactly right,
-                    # skip; positive target -> no multiplicative
-                    # rescale of zero mass can ever reach it
-                    if target > 0.0:
-                        raise ValueError(
-                            f"rake_weights: target for {c}={vals[i]!r} "
-                            f"is {target} but all of its observed "
-                            "cells were zeroed by another margin's "
-                            "0.0 target -- infeasible for the "
-                            "observed support"
-                        )
-                    continue
-                w[vals] *= target / share
-        # convergence check on ALL margins after a full sweep
-        for i, c in enumerate(cols):
-            achieved = {}
-            for (vals, n) in cells:
-                achieved[vals[i]] = achieved.get(vals[i], 0.0) + n * w[vals]
-            mass = sum(achieved.values())
-            for v, t in margins[c].items():
-                worst = max(worst, abs(achieved.get(v, 0.0) / mass - t))
-        if worst <= tol:
-            converged = True
-            break
-    if not converged:
-        raise ValueError(
-            f"rake_weights: not converged after {max_iter} sweeps "
-            f"(worst margin gap {worst:.3g}) -- targets may be "
-            "infeasible for the observed support (zero cells)"
-        )
-    # normalize to mean weight 1 over kept rows
-    mean_w = sum(n * w[vals] for vals, n in cells) / n_total
-    rows = [
-        tuple(list(vals) + [w[vals] / mean_w]) for vals, _ in cells
-    ]
-    schema = kept.select(*cols).schema.add(out_col, "double")
-    wdf = df.sparkSession.createDataFrame(rows, schema)
-    renamed = wdf.select(
-        *[F.col(c).alias(f"_rk_{c}") for c in cols], out_col
-    )
-    cond = F.lit(True)
-    for c in cols:
-        cond = cond & (F.col(c) == F.col(f"_rk_{c}"))
-    return kept.join(F.broadcast(renamed), cond, "left").drop(
-        *[f"_rk_{c}" for c in cols]
     )

@@ -137,8 +137,7 @@ def sessionize(
     Classic lag + running-sum formulation: ONE shuffle+sort per user
     drives both windows (Spark reuses the sorted exchange), no joins.
     NULL users or timestamps drop (no order to assign). Deterministic
-    under equal timestamps via ``tiebreak_cols`` (interpolate_linear's
-    contract)."""
+    under equal timestamps via ``tiebreak_cols``."""
     gap_s = _interval_seconds(gap)
     order = [ts_col, *(tiebreak_cols or [])]
     w = Window.partitionBy(user_col).orderBy(*order)
@@ -184,158 +183,6 @@ def session_stats(
             F.max(F.col(ts_col).cast("double"))
             - F.min(F.col(ts_col).cast("double"))
         ).alias("duration_s"),
-    )
-
-
-def attribute_conversions(
-    events: DataFrame,
-    touch_types: list[str],
-    conversion_type: str,
-    model: str = "last",
-    window: str = "7 days",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Multi-touch attribution: split each conversion's credit over the
-    qualifying touchpoints (``touch_types`` events by the same user in
-    the ``window`` before the conversion, inclusive of equal
-    timestamps). Models: 'first' / 'last' (single-touch, deterministic
-    id tiebreak), 'linear' (equal split). Output one row per credited
-    (conversion, touch) pair: (user, conversion_id, conversion_ts,
-    touch_id, touch_type, touch_ts, credit); conversions with NO
-    qualifying touch emit one row with NULL touch columns and credit 1
-    (the 'direct' bucket -- nothing silently drops).
-
-    Scale shape: one equi-join on the user key with the time band as a
-    join-level filter (the view_click_attribution shape, generalized),
-    then per-conversion window functions for the weights -- state per
-    conversion is its touch list, never a user's full history beyond
-    the band. Hot users are bounded by the window length."""
-    if model not in ("first", "last", "linear"):
-        raise ValueError("model must be 'first', 'last' or 'linear'")
-    gap_s = _interval_seconds(window)
-    conv = events.filter(F.col(type_col) == conversion_type).select(
-        F.col(user_col).alias("_u"),
-        F.col(id_col).alias("conversion_id"),
-        F.col(ts_col).alias("conversion_ts"),
-    )
-    touch = events.filter(F.col(type_col).isin(touch_types)).select(
-        F.col(user_col).alias("_u"),
-        F.col(id_col).alias("touch_id"),
-        F.col(type_col).alias("touch_type"),
-        F.col(ts_col).alias("touch_ts"),
-    )
-    j = conv.join(
-        touch,
-        (conv["_u"] == touch["_u"])
-        & (touch["touch_ts"] <= conv["conversion_ts"])
-        & (
-            touch["touch_ts"].cast("double")
-            >= conv["conversion_ts"].cast("double") - gap_s
-        ),
-        "left",
-    ).select(
-        conv["_u"].alias(user_col),
-        "conversion_id",
-        "conversion_ts",
-        "touch_id",
-        "touch_type",
-        "touch_ts",
-    )
-    w = Window.partitionBy("conversion_id")
-    n = F.count("touch_id").over(w)
-    if model == "linear":
-        credited = j.withColumn(
-            "credit",
-            F.when(F.col("touch_id").isNull(), F.lit(1.0)).otherwise(
-                1.0 / n
-            ),
-        )
-    else:
-        asc = model == "first"
-        order = (
-            [F.col("touch_ts").asc(), F.col("touch_id").asc()]
-            if asc
-            else [F.col("touch_ts").desc(), F.col("touch_id").desc()]
-        )
-        rw = Window.partitionBy("conversion_id").orderBy(*order)
-        ranked = j.withColumn("_rk", F.row_number().over(rw))
-        credited = ranked.filter(
-            F.col("touch_id").isNull() | (F.col("_rk") == 1)
-        ).withColumn("credit", F.lit(1.0)).drop("_rk")
-    return credited
-
-
-def event_transitions(
-    df: DataFrame,
-    user_col: str,
-    order_col: str,
-    state_col: str,
-    keys: list[str] | None = None,
-    terminal: str | None = None,
-    digits: int = 6,
-) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences: for each (state -> next state) pair, the observed count
-    and conditional probability P(next | current). The user-journey
-    summary beside funnel_counts' fixed cascade -- funnels answer "did
-    the prescribed path happen", transitions answer "what paths
-    actually happen" (drop-off heatmaps, next-action prediction
-    priors, anomalous-flow detection).
-
-    ``terminal`` (e.g. "_end") additionally emits each user's last
-    state transitioning to that sentinel, making rows sum to each
-    user's event count and P(. | s) a proper distribution including
-    exit mass; left None, last events emit no transition (the
-    conditional-probability convention).
-
-    Scale shape: ONE sorted window per user serves lead(); the pair
-    counts are one hash agg; the per-source totals ride a second agg
-    on the ALREADY-AGGREGATED pair frame (rows = distinct pairs, not
-    events) broadcast back -- event rows shuffle once. Ties in
-    ``order_col`` within a user make lead() nondeterministic --
-    pre-compose a tiebreaker (event id). Optional ``keys`` segment
-    the matrix (per cohort / per experiment arm).
-
-    Returns keys + (from_state, to_state, n, prob), prob
-    stable-rounded to ``digits``."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    ks = list(keys or [])
-    w = Window.partitionBy(*ks, user_col).orderBy(order_col)
-    nxt = F.lead(F.col(state_col)).over(w)
-    pairs = (
-        df.filter(
-            F.col(state_col).isNotNull() & F.col(order_col).isNotNull()
-        )
-        .select(
-            *ks,
-            F.col(state_col).alias("from_state"),
-            (
-                F.coalesce(nxt, F.lit(terminal))
-                if terminal is not None
-                else nxt
-            ).alias("to_state"),
-        )
-        .filter(F.col("to_state").isNotNull())
-        .groupBy(*ks, "from_state", "to_state")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    totals = pairs.groupBy(*ks, "from_state").agg(
-        F.sum("n").alias("_tot")
-    )
-    return pairs.join(F.broadcast(totals), [*ks, "from_state"]).select(
-        *ks,
-        "from_state",
-        "to_state",
-        "n",
-        stable_round(
-            F.col("n").cast("double") / F.col("_tot"), digits
-        ).alias("prob"),
     )
 
 

@@ -1,5 +1,5 @@
-"""Link-graph analytics: PageRank, degrees, triangles over an edge
-DataFrame.
+"""Link-graph analytics: PageRank, triangles, label propagation, shortest
+paths and random walks over an edge DataFrame.
 
 The reference has no graph operators (SURVEY.md §2.6); this joins
 connected_components (operators/neardup.py, the dedup-cluster step) as
@@ -32,6 +32,10 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bigdata_storage_and_proccess_job_data_spark.sources.lake import (
+    parse_byte_conf,
+)
 
 _CHECKPOINT_EVERY = 3
 
@@ -203,45 +207,6 @@ def undirected_edges(
     )
 
 
-def degrees(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """(node, out_deg, in_deg, deg) for every node in ``edges``.
-    out/in count distinct directed neighbors; ``deg`` is the undirected
-    distinct-neighbor degree (a reciprocal pair counts once). One scan,
-    three hash aggs on key columns -- no joins wider than node id."""
-    e = (
-        edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
-    )
-    outd = e.groupBy(F.col("_s").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    ind = e.groupBy(F.col("_d").alias("node")).agg(
-        F.count(F.lit(1)).alias("in_deg")
-    )
-    und = (
-        undirected_edges(e, "_s", "_d")
-        .select(
-            F.explode(F.array(F.col("a"), F.col("b"))).alias("node")
-        )
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    return (
-        und.join(outd, "node", "left")
-        .join(ind, "node", "left")
-        .select(
-            "node",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
-            "deg",
-        )
-    )
-
-
 def _node_degrees(und: DataFrame) -> DataFrame:
     """(node, _deg) over the canonical undirected frame -- every node
     of the graph appears (degree >= 1 by construction), so the frame
@@ -286,7 +251,7 @@ def _triangle_parts(und: DataFrame):
       triangle-list explode;
     - ``deg``: the PERSISTED (node, _deg) frame the orientation was
       built from -- it contains every node of the graph, so per-node
-      consumers (triangle_counts, clustering_coefficients) reuse it as
+      consumers (triangle_counts) reuse it as
       the node universe instead of re-exploding + distinct-shuffling
       the edge set;
     - ``adj``: the PERSISTED sorted-adjacency frame (u, _nbrs) -- the
@@ -305,18 +270,16 @@ def _triangle_parts(und: DataFrame):
     adjacency rows are O(sqrt(|E|)) longs by the orientation bound, so
     no hub row can melt an executor.
 
-    r14 restructure (one persist, one join, one materializing job --
-    was two persists, a count-only job, and two adjacency joins): the
-    edge stream is re-derived by EXPLODING the cached adjacency --
-    (u, out(u), v) for v in out(u) -- which attaches out(u) for free,
-    so only out(v) needs attaching, via a single equi-join on v
-    (broadcast under the bytes-based gate at the join below; plain
-    equi-join otherwise -- then the wide (out(u))-carrying rows cross
-    the wire once, ~avg-degree x the adjacency's own size).
-    The oriented frame itself is never cached and the broadcast gate's
-    edge count comes from the same job that fills the adjacency cache
-    (sum of out-degrees == |E|), so the old per-call count(*)-only
-    pass over the oriented joins is gone. Same triangles, bit for bit.
+    One persist, one join, one materializing job: the edge stream is
+    re-derived by EXPLODING the cached adjacency -- (u, out(u), v) for v in
+    out(u) -- which attaches out(u) for free, so only out(v) needs
+    attaching, via a single equi-join on v (broadcast under the bytes-based
+    gate at the join below; plain equi-join otherwise -- then the wide
+    (out(u))-carrying rows cross the wire once, ~avg-degree x the
+    adjacency's own size). The oriented frame itself is never cached and the
+    broadcast gate's edge count comes from the same job that fills the
+    adjacency cache (sum of out-degrees == |E|), so no separate count pass
+    runs over the oriented joins.
 
     The caller must materialize everything derived from ``tri`` before
     unpersisting ``deg`` and ``adj``."""
@@ -348,31 +311,26 @@ def _triangle_parts(und: DataFrame):
     adj_v = adj.select(
         F.col("u").alias("_jv"), F.col("_nbrs").alias("_nv")
     )
-    # bytes-based broadcast gate (r15; was a 4M-EDGE count): the
-    # adjacency's payload is 8 bytes per oriented edge (one long per
-    # neighbor) -- estimate 16 B/edge with array + row overhead, and
-    # broadcast below the byte budget. Broadcasting costs O(adj bytes)
-    # per executor ONCE; the shuffle alternative ships every edge row
-    # WITH its out(u) array -- sum over edges of |out(u)| longs, i.e.
-    # ~avg-degree x the adjacency size (measured at the sf1 spot
-    # fixture: 2.0 GB shuffled for a 42 MB adjacency, avg degree
-    # ~265). The default budget (256 MiB ~= 16M edges) is the "few
-    # hundred MB an executor comfortably holds" class, 3% of the 8g
-    # default driver heap -- not a fixture constant (the sf0.1 probe
-    # fits either gate); SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES tunes it
-    # for small-driver deployments. Billion-edge graphs (~16 GB)
-    # correctly stay on the shuffle path.
-    max_bytes = int(
-        os.environ.get(
-            "SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES", str(256 << 20)
-        )
+    # bytes-based broadcast gate: the adjacency's payload is 8 bytes
+    # per oriented edge (one long per neighbor) -- estimate 16 B/edge
+    # with array + row overhead, and broadcast below the byte budget.
+    # Broadcasting costs O(adj bytes) per executor ONCE; the shuffle
+    # alternative ships every edge row WITH its out(u) array -- sum
+    # over edges of |out(u)| longs, i.e. ~avg-degree x the adjacency
+    # size (measured at the sf1 spot fixture: 2.0 GB shuffled for a
+    # 42 MB adjacency, avg degree ~265). The budget is a share of the
+    # driver heap, which collects and ships the broadcast (see
+    # _tri_broadcast_budget). Billion-edge graphs (~16 GB) stay on the
+    # shuffle path.
+    driver_mem = und.sparkSession.sparkContext.getConf().get(
+        "spark.driver.memory", "1g"
     )
-    if 16 * n_edges <= max_bytes:
+    if 16 * n_edges <= _tri_broadcast_budget(driver_mem):
         adj_v = F.broadcast(adj_v)
     # hits: one row per oriented edge with the FULL intersect array --
     # the shared pre-explode frame. tri explodes it to the (x,y,z)
     # list; _per_node_counts folds it to corner counts WITHOUT ever
-    # materializing 3 rows per triangle (r14).
+    # materializing 3 rows per triangle.
     hits = edge_stream.join(adj_v, F.col("v") == F.col("_jv")).select(
         "u", "v", F.array_intersect("_nu", "_nv").alias("_zs")
     )
@@ -386,6 +344,17 @@ def _triangle_parts(und: DataFrame):
     return tri, hits, deg, adj
 
 
+def _tri_broadcast_budget(driver_memory: str) -> int:
+    """Byte budget under which the triangle adjacency is broadcast:
+    1/32 of the driver heap (32 MiB at Spark's 1g default, 256 MiB at
+    8g), since the driver holds the whole adjacency while building the
+    broadcast. SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES overrides it."""
+    override = os.environ.get("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES")
+    if override is not None:
+        return int(override)
+    return parse_byte_conf(driver_memory, default=1 << 30) // 32
+
+
 def _per_node_counts(hits: DataFrame) -> DataFrame:
     """(node, triangles) from the pre-explode hits frame in ONE pass:
     each edge (u, v) with S = out(u) & out(v) closes |S| triangles at
@@ -394,16 +363,14 @@ def _per_node_counts(hits: DataFrame) -> DataFrame:
     (an arraycopy, no per-element struct construction) -- and the
     weight is derived from the POSITION: slots 0-1 are u and v (each
     worth |S|), every later slot is a z (worth 1). 2|E| + T plain
-    (pos, id) rows through a single Generate and the hash agg. The
-    first r14 cut built the same rows as an array of (node, count)
-    STRUCTS via a transform lambda -- one struct allocation per corner
-    row (measured 1.23M rows per call on the sf0.1 bench probe:
-    |E| = 599,061, T = 35,722), all deleted by reading the weight off
-    the position instead; the gap widens with T on denser graphs.
-    (The build before that exploded the triangle list and re-exploded
-    array(x, y, z) on top: 3T rows plus an ordering projection per
-    triangle.) Counts are identical in all three formulations: each
-    enumerates every (triangle, corner) incidence exactly once."""
+    (pos, id) rows through a single Generate and the hash agg. Building
+    the same rows as an array of (node, count) STRUCTS costs one struct
+    allocation per corner row (1.23M rows per call on the sf0.1 bench
+    probe: |E| = 599,061, T = 35,722); reading the weight off the
+    position avoids them, and the gap widens with T on denser graphs.
+    Exploding the triangle list instead would cost 3T rows plus an
+    ordering projection per triangle. Each formulation enumerates
+    every (triangle, corner) incidence exactly once."""
     return (
         hits.select(
             F.size("_zs").alias("_sz"),
@@ -442,7 +409,7 @@ def triangles(
     (distinct, src < dst -- i.e. undirected_edges output) and skips
     re-canonicalizing: callers that normalize once and fan out pass it
     so the full edge set is distinct-shuffled exactly once per
-    pipeline (r7 verdict #4)."""
+    pipeline."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         if assume_undirected
@@ -469,11 +436,11 @@ def triangle_counts(
     degree frame (doubling as the node universe -- no second
     explode+distinct over the edges), and ONE materialization: the
     20k-row per-node aggregate is the only thing checkpointed, never
-    the raw triangle list (r8 -- the old path checkpointed the full
-    (x,y,z) list just to release the oriented cache, paying an extra
-    job barrier in the most expensive headline probe). Counts fold
-    straight off the per-edge intersect arrays (_per_node_counts,
-    r14) -- the (x,y,z) list is never materialized here at all."""
+    the raw triangle list (checkpointing the full (x,y,z) list would
+    add a job barrier to the most expensive headline probe). Counts
+    fold straight off the per-edge intersect arrays
+    (_per_node_counts) -- the (x,y,z) list is never materialized here
+    at all."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         if assume_undirected
@@ -498,46 +465,6 @@ def triangle_counts(
     finally:
         if not assume_undirected:
             und.unpersist()
-
-
-def clustering_coefficients(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Local clustering coefficient per node: 2*T(v) / (d(v)*(d(v)-1))
-    over the undirected graph, 0.0 where degree < 2. Output
-    (node, deg, triangles, lcc) -- the transitivity profile used to
-    spot tightly-knit near-dup neighborhoods vs hub-and-spoke link
-    farms in document graphs. Shares _triangle_parts' degree frame for
-    both the denominator and the node universe -- degrees are computed
-    once per call."""
-    und = undirected_edges(edges, src, dst).persist()
-    try:
-        _tri, hits, deg, adj = _triangle_parts(und)
-    except Exception:
-        und.unpersist()
-        raise
-    try:
-        per_node = _per_node_counts(hits)
-        out = (
-            deg.join(per_node, "node", "left")
-            .select(
-                "node",
-                F.col("_deg").alias("deg"),
-                F.coalesce("triangles", F.lit(0)).alias("triangles"),
-                F.when(F.col("_deg") < 2, F.lit(0.0))
-                .otherwise(
-                    2.0
-                    * F.coalesce("triangles", F.lit(0))
-                    / (F.col("_deg") * (F.col("_deg") - F.lit(1)))
-                )
-                .alias("lcc"),
-            )
-        )
-        return out.localCheckpoint()
-    finally:
-        adj.unpersist()
-        deg.unpersist()
-        und.unpersist()
 
 
 def label_propagation(
@@ -696,298 +623,6 @@ def shortest_paths(
             dist = dist.union(nxt)
             frontier = nxt.select("node")
         return dist
-    finally:
-        e.unpersist()
-
-
-def tree_rollup(
-    edges: DataFrame,
-    values: DataFrame,
-    child: str = "child",
-    parent: str = "parent",
-    node_col: str = "node",
-    value_col: str = "value",
-    max_depth: int = 20,
-) -> DataFrame:
-    """Parent-child hierarchy rollup (the OLAP org-tree / category-tree
-    aggregate): for every node, the SUM of ``values`` over the node
-    itself and all its descendants. ``edges`` is (child, parent) rows;
-    ``values`` is (node, value) leaf-or-interior facts (missing nodes
-    count 0, NULL values ignored). Cycles are cut by the depth bound;
-    forests and multiple roots are fine. On a DAG a node with several
-    parents contributes once per PATH to a shared ancestor
-    (path-counting semantics -- the multi-category rollup); trees get
-    the classic exact subtree sum.
-
-    Formulation: bottom-up level propagation -- each round, every
-    node's CURRENT subtotal flows one hop up (one equi-join of the
-    subtotal delta frame against the edge list + one hash agg), so
-    after depth-of-tree rounds each ancestor has absorbed its whole
-    subtree. Only (node, partial) pairs ever shuffle; the fact table
-    is aggregated to per-node subtotals FIRST, so fact volume touches
-    one hash agg regardless of tree depth. Early exit when a level
-    carries no mass (one bounded count per level, the shortest_paths
-    discipline)."""
-    if max_depth < 1:
-        raise ValueError("max_depth must be >= 1")
-    e = edges.select(
-        F.col(child).alias("_c"), F.col(parent).alias("_p")
-    ).filter(
-        F.col("_c").isNotNull()
-        & F.col("_p").isNotNull()
-        & (F.col("_c") != F.col("_p"))
-    ).distinct().persist()
-    own = (
-        values.select(
-            F.col(node_col).alias("_n"),
-            F.col(value_col).cast("double").alias("_v"),
-        )
-        .filter(F.col("_n").isNotNull() & F.col("_v").isNotNull())
-        .groupBy("_n")
-        .agg(F.sum("_v").alias("_v"))
-        .localCheckpoint()
-    )
-    total = own
-    level = own  # mass arriving at this depth
-    try:
-        for _ in range(max_depth):
-            nxt = (
-                e.join(level.withColumnRenamed("_n", "_c"), "_c")
-                .groupBy(F.col("_p").alias("_n"))
-                .agg(F.sum("_v").alias("_v"))
-                .localCheckpoint()
-            )
-            if nxt.count() == 0:  # bounded driver scalar per level
-                break
-            total = (
-                total.unionByName(nxt)
-                .groupBy("_n")
-                .agg(F.sum("_v").alias("_v"))
-                .localCheckpoint()
-            )
-            level = nxt
-        nodes = (
-            e.select(F.col("_c").alias("_n"))
-            .union(e.select(F.col("_p").alias("_n")))
-            .union(own.select("_n"))
-            .distinct()
-        )
-        return nodes.join(total, "_n", "left").select(
-            F.col("_n").alias(node_col),
-            F.coalesce("_v", F.lit(0.0)).alias("subtree_total"),
-        )
-    finally:
-        e.unpersist()
-
-
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 100,
-) -> DataFrame:
-    """Nodes of the k-core: the maximal subgraph of the undirected
-    graph in which every node keeps degree >= k -- the classic dense-
-    region extractor (spam/link-farm detection on web graphs, core
-    communities in interaction graphs) and the denoising complement of
-    triangle counts' per-node transitivity. Returns (node, deg) with
-    ``deg`` the node's WITHIN-CORE degree (>= k by construction); empty
-    frame when no k-core exists.
-
-    Iterative peel, all DataFrame ops: each round computes degrees over
-    the CURRENT edge set (one explode + hash agg), drops every node
-    below k at once (two anti-joins on the small weak-node set), and
-    re-checkpoints the shrunken edge list -- the synchronous-removal
-    formulation whose round count is bounded by the graph's degeneracy
-    ordering depth, not |V|. Per round the only driver materialization
-    is the weak-node count (the fixed-point test / early exit); edge
-    lists localCheckpoint so lineage stays bounded (the pagerank/BFS
-    discipline). A round that removes nothing is the fixed point.
-
-    ``max_iter`` guards pathological chains (a long path under k=2
-    peels two ends per round); exceeding it RAISES rather than return
-    a superset that silently is not the k-core."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    _, deg = _peel(und, k, max_iter, what="k_core")
-    return deg.select("node", F.col("_deg").alias("deg"))
-
-
-def _peel(und: DataFrame, k: int, max_iter: int, what: str):
-    """Shared fixed-point peel at threshold ``k`` over a CANONICAL
-    (checkpointed) undirected frame. Returns ``(edges, degrees)`` of
-    the surviving subgraph; raises past ``max_iter`` rounds."""
-    for _ in range(max_iter):
-        deg = _node_degrees(und)
-        weak = (
-            deg.filter(F.col("_deg") < k).select("node").localCheckpoint()
-        )
-        if weak.count() == 0:  # bounded driver scalar per round
-            return und, deg
-        und = (
-            und.join(weak.withColumnRenamed("node", "a"), "a", "left_anti")
-            .join(weak.withColumnRenamed("node", "b"), "b", "left_anti")
-            .localCheckpoint()
-        )
-    raise RuntimeError(
-        f"{what} did not reach a fixed point in {max_iter} rounds; "
-        "raise max_iter (long chains under small k peel slowly)"
-    )
-
-
-def core_numbers(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter_per_k: int = 100,
-    max_core: int = 10_000,
-) -> DataFrame:
-    """Full core decomposition: (node, core) where ``core`` is the
-    largest k for which the node survives in the k-core -- THE standard
-    graph-density feature (degeneracy ordering, spam-score tiers,
-    influence shells) of which k_core answers one slice. Every node of
-    the undirected graph appears; isolated-by-canonicalization nodes
-    don't exist here (undirected_edges guarantees degree >= 1, so cores
-    start at 1).
-
-    Level-by-level peel: the k-core survivor graph at level k seeds the
-    (k+1)-peel, so each edge is processed only while it is still alive
-    -- total work tracks the degeneracy ordering, and the level count
-    is the graph's degeneracy (small for real link graphs: tens, not
-    |V|). Nodes dropped while peeling at level k+1 get core = k. Per
-    level the dropped-node frame rides the already-checkpointed
-    survivor frames, so the output union tree stays shallow.
-    ``max_core`` guards runaway loops (degeneracy cannot exceed
-    sqrt(2|E|); hitting the guard raises)."""
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    prev_nodes = _node_degrees(und).select("node")
-    out: DataFrame | None = None
-    k = 2
-    while k <= max_core + 1:
-        und, deg = _peel(und, k, max_iter_per_k, what="core_numbers")
-        survivors = deg.select("node").localCheckpoint()
-        dropped = prev_nodes.join(survivors, "node", "left_anti").select(
-            "node", F.lit(k - 1).alias("core")
-        )
-        out = dropped if out is None else out.union(dropped)
-        if survivors.count() == 0:  # bounded driver scalar per level
-            return out
-        prev_nodes = survivors
-        k += 1
-    raise RuntimeError(
-        f"core_numbers exceeded max_core={max_core} levels"
-    )
-
-
-def weighted_shortest_paths(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    max_iter: int = 50,
-    directed: bool = True,
-) -> DataFrame:
-    """Weighted single-source (seed-SET) shortest paths: (node, dist)
-    with dist = minimum total edge weight from any seed, 0.0 for the
-    seeds -- the weighted counterpart of ``shortest_paths``' hop
-    count, for graphs where edges carry cost (latency-weighted service
-    graphs, toll/road networks, negative-log-probability transition
-    graphs where min-sum = max-likelihood path).
-
-    Bellman-Ford as delta iteration, all DataFrame ops: each round
-    joins the FRONTIER (only the nodes whose distance improved last
-    round, not the whole distance table) against the edge list, takes
-    the per-destination min of (dist + w) in one hash agg, and keeps
-    candidates that beat the incumbent via one left join -- O(edges
-    out of the frontier) per round. For nonnegative weights the
-    improved set drains within (hop count of the weighted shortest-
-    path tree) rounds; termination is detected by a one-long frontier
-    count per round (the engine's bounded-scalar discipline) and
-    localCheckpoint bounds lineage each round. Unlike hop-BFS a node
-    can re-enter the frontier when a cheaper longer-hop path arrives
-    later -- that is the relaxation, not a bug.
-
-    Negative weights are rejected up front (one bounded min(weight)
-    scalar): with them Bellman-Ford needs |V|-1 full-edge rounds and a
-    negative-cycle check -- a different cost class; this operator
-    targets the nonnegative (Dijkstra-semantics) case. Raises
-    RuntimeError if ``max_iter`` rounds don't drain the frontier (a
-    diameter larger than max_iter, the connected_components cap
-    precedent) rather than returning silently-unconverged upper
-    bounds. Unreachable nodes are absent from the output.
-
-    No reference analogue (the reference has no joins at all --
-    SURVEY.md SS2.6); public-algorithm shape: delta-stepping /
-    Pregel-style SSSP (Malewicz et al.) restated as DataFrame joins.
-    """
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
-    e = edges.select(
-        F.col(src).alias("_s"),
-        F.col(dst).alias("_d"),
-        F.col(weight).cast("double").alias("_w"),
-    ).filter(
-        F.col("_s").isNotNull()
-        & F.col("_d").isNotNull()
-        & F.col("_w").isNotNull()
-    )
-    if not directed:
-        e = e.union(
-            e.select(
-                F.col("_d").alias("_s"), F.col("_s").alias("_d"), "_w"
-            )
-        )
-    e = e.persist()
-    try:
-        wmin = e.agg(F.min("_w")).first()[0]  # bounded scalar, once
-        if wmin is not None and wmin < 0:
-            raise ValueError(
-                f"negative edge weight {wmin}: weighted_shortest_paths "
-                "requires nonnegative weights"
-            )
-        seed_col = seeds.columns[0]
-        dist = (
-            seeds.select(F.col(seed_col).alias("node"))
-            .filter(F.col("node").isNotNull())
-            .distinct()
-            .withColumn("dist", F.lit(0.0))
-            .localCheckpoint()
-        )
-        frontier = dist
-        for _ in range(max_iter):
-            cand = (
-                e.join(
-                    frontier.withColumnRenamed("node", "_s"), "_s"
-                )
-                .groupBy(F.col("_d").alias("node"))
-                .agg(F.min(F.col("dist") + F.col("_w")).alias("_cand"))
-            )
-            nxt = (
-                cand.join(dist, "node", "left")
-                .filter(
-                    F.col("dist").isNull()
-                    | (F.col("_cand") < F.col("dist"))
-                )
-                .select("node", F.col("_cand").alias("dist"))
-                .localCheckpoint()
-            )
-            if nxt.count() == 0:  # bounded driver scalar per round
-                return dist
-            dist = (
-                dist.join(nxt.select("node"), "node", "left_anti")
-                .union(nxt)
-                .localCheckpoint()
-            )
-            frontier = nxt
-        raise RuntimeError(
-            f"weighted_shortest_paths did not converge in {max_iter} "
-            "rounds; raise max_iter for high-diameter graphs"
-        )
     finally:
         e.unpersist()
 
@@ -1262,245 +897,3 @@ def pmi_pairs(
         )
         .filter(F.col("sppmi") > 0)
     )
-
-
-def biased_random_walks(
-    edges: DataFrame,
-    walk_len: int,
-    p: float = 1.0,
-    q: float = 1.0,
-    walks_per_node: int = 1,
-    src: str = "src",
-    dst: str = "dst",
-    salt: str = "walk",
-    max_neighbors: int | None = None,
-    directed: bool = True,
-) -> DataFrame:
-    """node2vec second-order biased walks (Grover-Leskovec 2016),
-    deterministic: from state (prev -> cur), the next neighbor nb is
-    drawn with unnormalized weight 1/p if nb == prev (return), 1 if nb
-    is also a neighbor of prev (BFS-ish stay-local), else 1/q
-    (DFS-ish explore) -- p < 1 biases homophily/community structure, q
-    < 1 structural roles. ``p = q = 1`` degenerates to
-    ``random_walks``' uniform first-order chain (pinned in the test).
-
-    Determinism (the repo coin, no RNG state): step t of walk
-    (start, w) draws u = md5(start:w:t:salt)/2^60 and picks the first
-    neighbor index whose cumulative weight reaches u * total -- a
-    SEQUENTIAL fold in the sorted neighbor array's order, so the
-    pure-Python replica reproduces every choice bit-for-bit (identical
-    IEEE additions in identical order).
-
-    Scale shape: ``random_walks``' frontier discipline plus ONE extra
-    equi-join per step (the PREVIOUS node's adjacency, needed for the
-    stay-local test -- second-order walks fundamentally carry (prev,
-    cur) state); the weighted pick is two expression folds over the
-    neighbor array (total, then cumulative select), O(degree) per
-    frontier row inside codegen, no explode. ``max_neighbors``
-    md5-bounds hub arrays exactly as in random_walks -- doubly
-    important here since BOTH adjacency arrays ride each step.
-
-    Returns (start, walk, seq, hops)."""
-    if walk_len < 1:
-        raise ValueError("walk_len must be >= 1")
-    if walks_per_node < 1:
-        raise ValueError("walks_per_node must be >= 1")
-    if p <= 0 or q <= 0:
-        raise ValueError("p and q must be > 0")
-    adj = _walk_adjacency(
-        edges, src, dst, salt, max_neighbors, directed
-    ).persist()
-    try:
-        starts = adj.select("node").crossJoin(
-            F.broadcast(
-                adj.sparkSession.range(walks_per_node).select(
-                    F.col("id").cast("int").alias("walk")
-                )
-            )
-        )
-
-        def coin_expr(t: int):
-            return (
-                F.expr(
-                    "conv(substring(md5(concat_ws(':', "
-                    "cast(start as string), cast(walk as string), "
-                    f"'{t}', '{salt}')), 1, 15), 16, 10)"
-                ).cast("long")
-            )
-
-        # step 1: uniform (no prev yet) -- random_walks' index coin
-        cur = (
-            starts.select(
-                F.col("node").alias("start"),
-                "walk",
-                F.col("node").alias("_cur"),
-            )
-            .join(adj.withColumnRenamed("node", "_cur"), "_cur")
-            .select(
-                "start",
-                "walk",
-                F.col("_cur").alias("_prev"),
-                F.element_at(
-                    F.col("_nbrs"),
-                    (coin_expr(1) % F.size("_nbrs") + 1).cast("int"),
-                ).alias("_cur"),
-            )
-            .localCheckpoint()
-        )
-        trail = starts.select(
-            F.col("node").alias("start"), "walk",
-            F.lit(0).alias("pos"), F.col("node").alias("node"),
-        ).union(
-            cur.select("start", "walk", F.lit(1).alias("pos"), "_cur")
-        )
-        inv_p, inv_q = 1.0 / float(p), 1.0 / float(q)
-        w_sql = (
-            "case when nb = _prev then {ip!r} "
-            "when _pnbrs is not null and array_contains(_pnbrs, nb) "
-            "then 1.0 else {iq!r} end"
-        ).format(ip=inv_p, iq=inv_q)
-        for t in range(2, walk_len + 1):
-            u60 = (
-                "cast(conv(substring(md5(concat_ws(':', "
-                "cast(start as string), cast(walk as string), "
-                f"'{t}', '{salt}')), 1, 15), 16, 10) as double) "
-                "/ 1152921504606846976.0"
-            )
-            tot = (
-                "aggregate(_nbrs, cast(0.0 as double), "
-                f"(acc, nb) -> acc + ({w_sql}))"
-            )
-            # cumulative-select fold: carry (running sum, picked idx);
-            # first index whose cumsum reaches the precomputed
-            # _target = u * total wins (hoisted to a column so the
-            # fold is O(degree), not O(degree^2)); fp-edge coalesce
-            # to the last index
-            inner_w = (
-                f"(case when element_at(_nbrs, i) = _prev then {inv_p!r} "
-                "when _pnbrs is not null and "
-                "array_contains(_pnbrs, element_at(_nbrs, i)) then 1.0 "
-                f"else {inv_q!r} end)"
-            )
-            sel = (
-                "aggregate(sequence(1, size(_nbrs)), "
-                "struct(cast(0.0 as double) as s, "
-                "cast(null as int) as pick), "
-                "(acc, i) -> case when acc.pick is not null then acc "
-                f"else named_struct('s', acc.s + {inner_w}, 'pick', "
-                f"case when acc.s + {inner_w} >= _target "
-                "then i else cast(null as int) end) end, "
-                "acc -> coalesce(acc.pick, size(_nbrs)))"
-            )
-            padj = adj.select(
-                F.col("node").alias("_prev"),
-                F.col("_nbrs").alias("_pnbrs"),
-            )
-            stepped = (
-                cur.join(adj.withColumnRenamed("node", "_cur"), "_cur")
-                .join(padj, "_prev", "left")
-                .withColumn("_target", F.expr(f"({u60}) * ({tot})"))
-                .select(
-                    "start",
-                    "walk",
-                    F.col("_cur").alias("_prev"),
-                    F.element_at(
-                        F.col("_nbrs"), F.expr(sel)
-                    ).alias("_cur"),
-                )
-                .localCheckpoint()
-            )
-            trail = trail.union(
-                stepped.select(
-                    "start", "walk", F.lit(t).alias("pos"), "_cur"
-                )
-            )
-            cur = stepped
-        return (
-            trail.groupBy("start", "walk")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "node"))
-                ).alias("_tr")
-            )
-            .select(
-                "start",
-                "walk",
-                F.col("_tr.node").alias("seq"),
-                (F.size("_tr") - 1).alias("hops"),
-            )
-        )
-    finally:
-        adj.unpersist()
-
-
-def modularity(
-    edges: DataFrame,
-    labels: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
-    label_col: str = "label",
-) -> float:
-    """Newman modularity Q of a community assignment over the
-    UNDIRECTED simple graph (duplicate/reversed edges collapse,
-    self-loops drop -- the triangle-counting conventions): Q =
-    sum over communities of [ e_c / m  -  (d_c / 2m)^2 ], with e_c =
-    within-community edges, d_c = total degree of the community's
-    nodes, m = edge count. The internal quality readout for
-    label_propagation that davies_bouldin is for k-means: Q near 0 =
-    no better than random, ~0.3+ = real structure (Newman 2006).
-    Endpoints without a label contribute degree mass but no
-    within-edges (they belong to no community -- penalizing, not
-    ignoring, unlabeled coverage).
-
-    Fully distributed: canonical-edge dedup, two label joins, two hash
-    aggs, ONE summary row to the driver. Returns 0.0 for an empty
-    graph (no structure to score)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
-        )
-        .filter(
-            F.col("_a").isNotNull()
-            & F.col("_b").isNotNull()
-            & (F.col("_a") != F.col("_b"))
-        )
-        .distinct()
-        .localCheckpoint()  # three consumers below
-    )
-    la = labels.select(
-        F.col(node_col).alias("_n"), F.col(label_col).alias("_l")
-    ).distinct()
-    m_row = e.agg(F.count(F.lit(1)).alias("m")).collect()[0]
-    m = int(m_row["m"])
-    if m == 0:
-        return 0.0
-    both = (
-        e.join(la.withColumnRenamed("_n", "_a").withColumnRenamed("_l", "_la"), "_a")
-        .join(la.withColumnRenamed("_n", "_b").withColumnRenamed("_l", "_lb"), "_b")
-        .filter(F.col("_la") == F.col("_lb"))
-        .groupBy(F.col("_la").alias("_c"))
-        .agg(F.count(F.lit(1)).alias("_ec"))
-    )
-    deg = (
-        e.select(F.col("_a").alias("_n"))
-        .unionAll(e.select(F.col("_b").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).alias("_d"))
-        .join(la, "_n")
-        .groupBy(F.col("_l").alias("_c"))
-        .agg(F.sum("_d").alias("_dc"))
-    )
-    row = (
-        deg.join(both, "_c", "left")
-        .select(
-            (
-                F.coalesce(F.col("_ec"), F.lit(0)) / F.lit(float(m))
-                - F.pow(F.col("_dc") / F.lit(2.0 * m), 2)
-            ).alias("_q")
-        )
-        .agg(F.sum("_q").alias("q"))
-        .collect()[0]  # bounded: ONE summary row
-    )
-    return float(row["q"] or 0.0)

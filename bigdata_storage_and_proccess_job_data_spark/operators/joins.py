@@ -1,104 +1,22 @@
-"""Join helpers for skew and log-compaction patterns.
+"""Join helpers for skew and join planning.
 
 AQE's skew-join splitting (on in session.py) covers value skew inside a
 sort-merge join; the helpers here cover the cases it cannot:
 
-- null_skew_left_join: NULL join keys all hash to one partition and can
-  never match anyway -- route them around the shuffle entirely and union
-  back, so a 30%-null foreign key costs 0 shuffle for the null slice.
-- hot_key_split_join: when the hot key VALUES are known (detect_hot_keys
-  or key_skew_report), the hot slice joins map-side against a broadcast
-  of the other side's hot rows -- hot fact rows never shuffle AT ALL,
-  strictly better than AQE's skew split, which still shuffles the hot
-  rows (just in chunks).
-- compact_upserts: fold an append-only upsert log (sources/lake.py:
-  upsert_by_key) into a snapshot so readers stop paying the log-replay
-  dedup; the offline-compaction half of the ES-style upsert semantics.
+- hot_key_split_join: when the hot key VALUES are known (a per-key count
+  or a cached skew report), the hot slice joins map-side against a
+  broadcast of the other side's hot rows -- hot fact rows never shuffle
+  AT ALL, strictly better than AQE's skew split, which still shuffles
+  the hot rows (just in chunks).
+- join_size_report: the exact output size and hottest-key share of an
+  equi-join, from per-key counts alone, before running it.
+- table_diff: row-level differences between two snapshots of a table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def null_skew_left_join(
-    left: DataFrame, right: DataFrame, left_key: str, right_key: str
-) -> DataFrame:
-    """LEFT join where ``left`` rows with a NULL key bypass the shuffle:
-    they cannot match by equi-join semantics, so they go straight to the
-    output (right columns null) while only the non-null slice joins.
-    Same result as a plain left join, minus the single hot partition all
-    NULL keys would hash into.
-
-    The right key column is DROPPED from the output (on a match it
-    duplicates the left key; unmatched it is null), so the common
-    same-name FK case (``user_id = user_id``) neither trips an ambiguous
-    column reference nor yields a duplicate output name. Other name
-    collisions between the two frames are rejected up front."""
-    overlap = (set(left.columns) & set(right.columns)) - {right_key}
-    if overlap:
-        raise ValueError(
-            f"non-key column names collide: {sorted(overlap)}; rename before joining"
-        )
-    r = right.alias("_nsr")
-    with_key = (
-        left.filter(F.col(left_key).isNotNull())
-        .alias("_nsl")
-        .join(r, F.col(f"_nsl.{left_key}") == F.col(f"_nsr.{right_key}"), "left")
-        .drop(F.col(f"_nsr.{right_key}"))
-    )
-    null_key = left.filter(F.col(left_key).isNull())
-    rtypes = dict(right.dtypes)
-    for c in right.columns:
-        if c == right_key:
-            continue
-        null_key = null_key.withColumn(c, F.lit(None).cast(rtypes[c]))
-    return with_key.unionByName(null_key)
-
-
-def detect_hot_keys(
-    df: DataFrame,
-    key: str,
-    top: int = 16,
-    min_share: float = 0.01,
-) -> list:
-    """Key values that each carry >= ``min_share`` of the table's
-    NON-NULL-key rows, at most ``top`` of them -- the explicit hot list
-    hot_key_split_join joins map-side (NULL keys are excluded before
-    ranking: they cannot equi-match, and a hot NULL group must not eat
-    a ranked slot). ONE pass over ``df``: a per-key count (map-side
-    partial combine makes the shuffle uniform even when the key itself
-    is the skewed one -- each task emits one partial row per key it
-    saw), then total + top-k read off that small counts frame, never the
-    fact table. The collect is bounded at ``top`` rows by construction.
-
-    Companion diagnostic: aggregates.key_skew_report gives the ratio
-    that says whether splitting is worth it at all."""
-    if not 0.0 < min_share <= 1.0:
-        raise ValueError(f"min_share must be in (0, 1]: {min_share}")
-    # NULLs can never be joinable hot keys, and a hot NULL group (the
-    # null_skew_left_join motivating case) must not consume one of the
-    # ``top`` ranked slots before the Python-side strip (review
-    # finding) -- exclude them before ranking
-    counts = (
-        df.filter(F.col(key).isNotNull())
-        .groupBy(key)
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    # total as a one-row broadcast scalar (the repo's cross-join-scalar
-    # pattern) -- NOT an unpartitioned window over the counts frame,
-    # which would funnel a billion-key cardinality through one task
-    total = counts.agg(F.sum("_n").alias("_total"))
-    rows = (
-        counts.crossJoin(F.broadcast(total))
-        .filter(F.col("_n") >= F.col("_total") * F.lit(min_share))
-        .orderBy(F.desc("_n"), F.col(key))  # TakeOrdered: partial top-k
-        .limit(top)
-        .select(key)
-        .collect()
-    )
-    return [r[0] for r in rows]
 
 
 def hot_key_split_join(
@@ -119,7 +37,7 @@ def hot_key_split_join(
     shuffle -- the only movement is the broadcast of the other side's
     hot rows (a handful of rows for a handful of keys, by definition of
     "hot dimension key"), and the cold shuffle is uniform. Pair with
-    detect_hot_keys (one uniform counting pass) or a cached skew report.
+    one uniform per-key counting pass or a cached skew report.
 
     The price, stated: the two filtered branches are TWO pruned scans
     of each input (no exchange exists for Spark to reuse across them --
@@ -134,8 +52,8 @@ def hot_key_split_join(
     ``how``: "inner" or "left". NULL left keys can never equi-match:
     inner drops them (same as the plain join); left routes them down the
     cold path, whose left join emits them with null right columns.
-    Non-key column-name collisions are rejected up front (the
-    null_skew_left_join convention); the joined key appears once
+    Non-key column-name collisions are rejected up front; the joined
+    key appears once
     (``on=<name>`` semantics). ``hot_keys`` must be a bounded in-list
     (<= 1000 -- beyond that the isin literal bloats every task's plan;
     a list that size means the key isn't "a few hot values" and wants
@@ -168,40 +86,6 @@ def hot_key_split_join(
     hot_joined = left_hot.join(F.broadcast(right_hot), key, how)
     cold_joined = left_cold.join(right_cold, key, how)
     return hot_joined.unionByName(cold_joined)
-
-
-def compact_upserts(
-    spark: SparkSession, path: str, key: str, version_col: str
-) -> None:
-    """Rewrite an upsert log as its latest-wins snapshot: read the log,
-    resolve winners (same dedup as sources/lake.py:read_upserted), write
-    to a SIBLING dir on the same filesystem, then swap via two directory
-    renames (metadata-only -- no copy, no rows on the driver).
-
-    NOT safe under concurrency: a reader listing the dir in the
-    two-rename window can miss it, and a crash between the renames
-    leaves the data under ``<path>.old-*`` (recoverable, never lost --
-    the old rmtree-then-move ordering could lose the log outright).
-    Anything concurrent or durable should use
-    sources/versioned.py:compact_log_versioned, which swaps via an
-    atomic version-pointer commit instead of renaming the data dir."""
-    import os
-    import shutil
-    import uuid
-
-    from bigdata_storage_and_proccess_job_data_spark.sources.lake import (
-        read_upserted,
-    )
-
-    snapshot = read_upserted(spark, path, key, version_col)
-    base = os.path.abspath(path)
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{base}.compact-{token}"  # sibling => same fs => rename, not copy
-    snapshot.write.mode("overwrite").parquet(tmp)  # distributed write
-    old = f"{base}.old-{token}"
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old)
 
 
 def table_diff(
@@ -299,14 +183,13 @@ def join_size_report(
     """EXACT inner-join size pre-flight -- the number AQE only learns
     mid-query and a planner's estimate can miss by orders of magnitude:
     before shuffling two fact tables, compute exactly how many rows the
-    equi-join would emit and how much of that lands on the single
-    hottest key. |A join B| = sum over matched keys of cl * cr, which
-    needs only the per-key COUNT frames -- the key column shuffles, the
-    payloads never move, so the report costs a fraction of the join it
-    sizes. Read it to choose the strategy: tiny right side -> broadcast;
-    top_share near 1 -> salt or hot_key_split_join (feed detect_hot_keys
-    the same key); huge n_out_inner on both-sides-large -> bucket both
-    on the key and co-locate.
+    equi-join would emit and how much of that lands on the single hottest
+    key. |A join B| = sum over matched keys of cl * cr, which needs only the
+    per-key COUNT frames -- the key column shuffles, the payloads never
+    move, so the report costs a fraction of the join it sizes. Read it to
+    choose the strategy: tiny right side -> broadcast; top_share near 1 ->
+    salt or hot_key_split_join; huge n_out_inner on both-sides-large ->
+    bucket both on the key and co-locate.
 
     Returns ONE row:
       n_left, n_right              input row counts
@@ -321,7 +204,7 @@ def join_size_report(
                                    the join is empty)
 
     Every count is defined on empty inputs (zero-row sums coalesce to
-    0 -- the fk_integrity_report r10-ADVICE convention). Scale shape:
+    0 -- the fk_integrity_report convention). Scale shape:
     one key-grain hash agg per side, one equi-join of the two DISTINCT
     key frames, three bounded one-row aggregates met by broadcast
     joins."""

@@ -3,11 +3,11 @@
 Media is carried as opaque BINARY columns plus typed metadata, processed
 with Arrow-batched mapInPandas (the right shape for per-item Python
 work: batch transfer, no per-row pickling, partition-parallel). The
-actual codec step is STUBBED -- image/audio libraries are not in this
-container -- behind ``decode_fn``: the default deterministic fake parses
-a tiny header our fixture writer emits, so schema/partitioning/batching
-are fully real and tested while the codec is swappable (pass a real
-PIL/ffmpeg-backed decode_fn in production).
+actual model step is STUBBED -- image/audio encoders are not part of
+the engine -- behind ``feature_fn``: the default deterministic fake
+hashes the payload bytes, so schema/partitioning/batching are fully
+real and tested while the model is swappable (pass a real
+encoder-backed feature_fn in production).
 
 Scale notes: mapInPandas streams Arrow batches, so peak memory is
 O(batch), not O(partition); media bytes never shuffle (metadata-only
@@ -20,12 +20,10 @@ import struct
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -41,18 +39,6 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-DECODED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("byte_len", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("format", StringType()),
-    ]
-)
-
 MAGIC = b"FAKE"
 _HEADER = struct.Struct(">4sHHH")  # magic, width, height, n_frames
 
@@ -60,61 +46,6 @@ _HEADER = struct.Struct(">4sHHH")  # magic, width, height, n_frames
 def encode_fake_media(width: int, height: int, n_frames: int = 1) -> bytes:
     """Deterministic fixture payload: 10-byte header + zero body."""
     return _HEADER.pack(MAGIC, width, height, n_frames) + b"\x00" * 16
-
-
-def fake_decode(content: bytes) -> tuple[int, int, int, str]:
-    """STUB decode (deterministic): parse the fake header. A real
-    implementation would hand bytes to PIL/libav here; swap via the
-    decode_fn parameter of decode_media."""
-    if content[:4] == MAGIC:
-        _, w, h, f = _HEADER.unpack(content[: _HEADER.size])
-        return int(w), int(h), int(f), "fake"
-    raise NotImplementedError(
-        "real media decoding requires PIL/ffmpeg (not in this container); "
-        "pass decode_fn= to decode_media"
-    )
-
-
-def decode_media(
-    df: DataFrame,
-    decode_fn: Callable[[bytes], tuple[int, int, int, str]] = fake_decode,
-    batch_size_hint: int = 256,
-) -> DataFrame:
-    """BINARY media -> typed metadata via Arrow-batched mapInPandas."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "byte_len": pdf["content"].map(len).astype("int64"),
-            }
-            decoded = pdf["content"].map(decode_fn)
-            out["width"] = decoded.map(lambda t: t[0]).astype("int32")
-            out["height"] = decoded.map(lambda t: t[1]).astype("int32")
-            out["n_frames"] = decoded.map(lambda t: t[2]).astype("int32")
-            out["format"] = decoded.map(lambda t: t[3])
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-def frame_sample_plan(decoded: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling *plan*: one output row per sampled frame index
-    (posexplode over the frame count). The per-frame pixel fetch is the
-    stubbed codec step; the Spark-side shape (explode -> per-frame rows,
-    binary never carried) is the real scale design."""
-    return decoded.select(
-        "media_id",
-        "kind",
-        F.explode(
-            F.sequence(
-                F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n)
-            )
-        ).alias("frame_index"),
-    )
 
 
 FEATURE_SCHEMA = StructType(
@@ -185,122 +116,3 @@ def extract_features(
             )
 
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def fake_resize(content: bytes, width: int, height: int) -> bytes:
-    """STUB resize (deterministic): rewrite the fake header's dimensions,
-    body untouched. A real implementation calls PIL/libswscale."""
-    if content[:4] != MAGIC:
-        raise NotImplementedError(
-            "real media resizing requires PIL/ffmpeg (not in this "
-            "container); pass resize_fn= to resize_media"
-        )
-    _, _, _, f = _HEADER.unpack(content[: _HEADER.size])
-    return _HEADER.pack(MAGIC, width, height, f) + content[_HEADER.size :]
-
-
-def resize_media(
-    df: DataFrame,
-    width: int,
-    height: int,
-    resize_fn: Callable[[bytes, int, int], bytes] = fake_resize,
-) -> DataFrame:
-    """BINARY -> BINARY transform preserving MEDIA_SCHEMA (so resize
-    composes with decode_media/extract_features). mapInPandas keeps the
-    bytes inside one partition end-to-end -- a resize never causes a
-    shuffle of media payloads."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "content": pdf["content"].map(
-                        lambda b: resize_fn(b, width, height)
-                    ),
-                    "source_uri": pdf["source_uri"],
-                }
-            )
-
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def fake_phash(content: bytes) -> int:
-    """STUB perceptual hash (deterministic, byte-space locality): 64
-    bits, bit i = XOR-parity of the i-th of 64 equal byte chunks, so
-    editing k bytes flips at most k bits -- honest Hamming locality
-    without a pixel decode. A real implementation computes aHash/pHash
-    on decoded pixels (PIL not in this container); swap via the
-    phash_fn parameter."""
-    n = len(content)
-    bits = 0
-    for i in range(64):
-        lo, hi = (i * n) // 64, ((i + 1) * n) // 64
-        x = 0
-        for byte in content[lo:hi]:
-            x ^= byte
-        bits |= (bin(x).count("1") & 1) << i
-    return bits - (1 << 64) if bits >= (1 << 63) else bits
-
-
-def media_phash(
-    df: DataFrame,
-    phash_fn: Callable[[bytes], int] = fake_phash,
-    out_col: str = "phash",
-) -> DataFrame:
-    """BINARY media -> 64-bit perceptual fingerprint (BIGINT) via
-    Arrow-batched mapInPandas -- the image-dedup front half. The
-    content column is dropped on output, so everything downstream
-    (banding, joins, clustering) moves 8-byte signatures, never
-    payloads. NULL content propagates as NULL phash (review: the batch
-    guards None BEFORE calling phash_fn, so a NULL payload row follows
-    the library's NULL-propagation convention instead of raising
-    TypeError mid-job -- and injected phash_fns don't each need their
-    own guard)."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    out_col: pdf["content"]
-                    .map(lambda b: None if b is None else phash_fn(b))
-                    .astype("Int64"),  # nullable int64 -> NULL phash
-                }
-            )
-
-    return df.mapInPandas(
-        run, schema=f"media_id long, kind string, {out_col} long"
-    )
-
-
-def media_near_dups(
-    df: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    phash_fn: Callable[[bytes], int] = fake_phash,
-) -> DataFrame:
-    """Perceptual near-duplicate media pairs: fingerprint (media_phash)
-    then Hamming-band blocking (neardup.hamming_candidates) -- the
-    image twin of the text simhash pipeline, completing the multimodal
-    dedup story. Pigeonhole gives EXACT recall for
-    max_hamming <= bands - 1; larger radii trade recall for fewer
-    buckets. Returns (id_a, id_b, hamming); bytes never shuffle. Rows
-    with NULL content (NULL phash) are excluded -- no payload, nothing
-    to near-match."""
-    from bigdata_storage_and_proccess_job_data_spark.operators import neardup
-
-    return neardup.hamming_candidates(
-        media_phash(df, phash_fn=phash_fn).filter(
-            F.col("phash").isNotNull()
-        ),
-        "media_id",
-        "phash",
-        max_hamming=max_hamming,
-        bands=bands,
-    )

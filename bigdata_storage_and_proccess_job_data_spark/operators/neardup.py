@@ -141,8 +141,8 @@ def minhash_index(
 
 def _materialized_release(result: DataFrame, caches: list[DataFrame]) -> DataFrame:
     """The deterministic cache-release tail shared by the dedup pair
-    functions (the bm25_topk pattern generalized to unbounded results,
-    VERDICT r5 #4): eagerly materialize ``result`` EXECUTOR-side
+    functions (the bm25_topk pattern generalized to unbounded results):
+    eagerly materialize ``result`` EXECUTOR-side
     (localCheckpoint -- never a driver collect; pair sets are
     output-sized, not k-bounded), then unpersist every internal cache.
     The returned frame owns the only remaining storage (its checkpoint
@@ -325,117 +325,6 @@ def verify_jaccard(
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    content_col: str,
-    ngram: int = 2,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """EXACT asymmetric n-gram containment pairs: C(A in B) =
-    |shingles(A) ∩ shingles(B)| / |shingles(A)| -- the dedup signal
-    Jaccard structurally misses: a short document quoted whole inside a
-    long one (boilerplate wrapping an article, a README pasted into a
-    mega-doc) has containment ~1 but Jaccard ~n_small/n_big, far below
-    any near-dup threshold. Returns unordered pairs where the MAX
-    direction clears ``threshold``: (id_a, id_b, n_a, n_b, n_inter,
-    containment_a, containment_b) with id_a < id_b -- the caller reads
-    which side is contained from whichever containment is larger.
-
-    Completeness (the jaccard_pairs prefix-filter argument, adapted to
-    the asymmetric measure): order each doc's distinct shingles by
-    global rarity and index the first n - ceil(t*n) + 1. If
-    C(A in B) >= t then A's intersection misses at most (1-t)*n_A of
-    A's own shingles, so at least one of A's prefix shingles lies in B
-    -- joining A-prefixes against B's FULL shingle postings can not
-    drop a qualifying pair in either direction (each pair is probed
-    from both sides). Candidates are then verified exactly on the full
-    arrays (verify_jaccard's two-hash-join shape), so false positives
-    are impossible.
-
-    Scale shape: one shingle-frequency groupBy, one per-doc re-sort,
-    one prefix-vs-full equi-join on the shingle, two hash joins to
-    verify -- no driver collects, no all-pairs. The honest caveat: the
-    FULL-side posting list of a corpus-stopword shingle is long, so the
-    candidate volume is sum over shingles of prefix_df x full_df --
-    bounded in practice because prefixes keep only each doc's RAREST
-    shingles, but a pathological corpus of near-identical boilerplate
-    degrades toward the quadratic truth (every doc genuinely contains
-    every other; the output itself is quadratic there)."""
-    if not 0 < threshold <= 1:
-        raise ValueError(f"threshold must be in (0, 1]: {threshold}")
-    sized = sized_shingles(df, id_col, content_col, ngram)
-    exploded = sized.select("_id", "_n", F.explode("_sh").alias("shingle"))
-    freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    ranked = (
-        exploded.join(freq, "shingle")
-        .groupBy("_id", "_n")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
-            ).alias("_ranked")
-        )
-    )
-    prefix_len = (
-        F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
-    ).cast("int")
-    prefix = ranked.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.slice("_ranked", F.lit(1), prefix_len),
-                lambda s: s.getField("shingle"),
-            )
-        ).alias("shingle"),
-    )
-    cands = (
-        prefix.alias("a")
-        .join(
-            exploded.select("_id", "shingle").alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a._id") != F.col("b._id")),
-        )
-        .select(
-            F.least(F.col("a._id"), F.col("b._id")).alias("id_a"),
-            F.greatest(F.col("a._id"), F.col("b._id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    verified = (
-        cands.join(
-            sized.select(
-                F.col("_id").alias("id_a"),
-                F.col("_sh").alias("_sha"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sized.select(
-                F.col("_id").alias("id_b"),
-                F.col("_sh").alias("_shb"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "n_inter", F.size(F.array_intersect("_sha", "_shb")).cast("long")
-        )
-        .withColumn(
-            "containment_a", F.col("n_inter") / F.col("n_a")
-        )
-        .withColumn(
-            "containment_b", F.col("n_inter") / F.col("n_b")
-        )
-    )
-    return verified.filter(
-        F.greatest("containment_a", "containment_b") >= threshold
-    ).select(
-        "id_a", "id_b", "n_a", "n_b", "n_inter",
-        "containment_a", "containment_b",
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -506,7 +395,7 @@ def incremental_dedup_pairs(
     After accepting the batch, append minhash_index(new_docs) rows to
     the stored index so the next batch sees this one.
 
-    Persist contract (VERDICT r5 #4 -- deterministic release): the new
+    Persist contract (deterministic release): the new
     batch's shingle cache feeds both the signing and the verification
     consumers, and the candidate frame feeds both the corpus-slice
     semi-join and verification (without its cache the index band-join
@@ -669,8 +558,8 @@ def connected_components(
     classic PRAM shortcut). Without the jump, convergence is O(cluster
     diameter) rounds, which melts on chain-shaped components (a
     geometric sparse graph at low similarity thresholds grows a giant
-    component with diameter in the hundreds -- the r9 semantic_dedup
-    sf0.1 regime hit exactly this at 20 rounds); with it, the label
+    component with diameter in the hundreds -- semantic_dedup at sf0.1
+    hits exactly this at 20 rounds); with it, the label
     distance to the component min doubles per round, so convergence is
     O(log diameter). Quasi-clique banding clusters still terminate in
     2-3 rounds; chains of length L need ~log2(L). Each round is checked
@@ -770,137 +659,3 @@ def connected_components(
         )
     finally:
         edges.unpersist()
-
-
-def lsh_plan(
-    threshold: float,
-    num_hashes: int = 64,
-    max_fn: float = 0.05,
-    max_fp_work: float = 0.25,
-) -> dict:
-    """Banding-parameter advisor for the MinHash LSH S-curve (Leskovec
-    et al., Mining of Massive Datasets ch. 3): given a target Jaccard
-    ``threshold``, pick (bands, rows) so the candidate probability
-    p(s) = 1 - (1 - s^rows)^bands has its rise near the threshold, the
-    MISS rate at the threshold stays under ``max_fn`` (false negatives
-    are the silent corruption mode of dedup -- a missed dup ships twice
-    into training), and the candidate rate for clearly-dissimilar pairs
-    (s = threshold/2) stays under ``max_fp_work`` (false positives only
-    cost verify-stage work, so the bound is looser by design).
-
-    Scans the divisor pairs of ``num_hashes`` and returns the plan with
-    the fewest expected verify candidates among those meeting the miss
-    bound; if none meets it, returns the lowest-miss plan with
-    ``"meets_fn_bound": False`` so callers fail loudly rather than ship
-    a silently-lossy dedup. Pure driver-side arithmetic -- call it once
-    at job-config time, feed the result to minhash_dedup_pairs.
-
-    Returns {bands, rows, p_at_threshold, p_at_half_threshold,
-    s_curve_midpoint, meets_fn_bound, meets_fp_bound}."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    if num_hashes < 2:
-        raise ValueError("num_hashes must be >= 2")
-
-    def p_cand(s: float, b: int, r: int) -> float:
-        return 1.0 - (1.0 - s**r) ** b
-
-    plans = []
-    for r in range(1, num_hashes + 1):
-        if num_hashes % r:
-            continue
-        b = num_hashes // r
-        if b < 1 or (b == 1 and r == 1):
-            continue
-        hit = p_cand(threshold, b, r)
-        waste = p_cand(threshold / 2.0, b, r)
-        # S-curve midpoint ~ (1/b)^(1/r): where p crosses ~0.5
-        mid = (1.0 / b) ** (1.0 / r)
-        plans.append(
-            {
-                "bands": b,
-                "rows": r,
-                "p_at_threshold": hit,
-                "p_at_half_threshold": waste,
-                "s_curve_midpoint": mid,
-                "meets_fn_bound": (1.0 - hit) <= max_fn,
-                "meets_fp_bound": waste <= max_fp_work,
-            }
-        )
-    ok = [p for p in plans if p["meets_fn_bound"]]
-    if ok:
-        # among safe plans, minimize verify-stage waste
-        return min(ok, key=lambda p: p["p_at_half_threshold"])
-    return max(plans, key=lambda p: p["p_at_threshold"])
-
-
-def hamming_candidates(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    max_hamming: int = 8,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs among PRECOMPUTED 64-bit signatures (BIGINT
-    column): band into ``bands`` chunks, bucket-join on equal chunks
-    (pigeonhole: hamming <= bands-1 guarantees a shared band -- exact
-    recall there; beyond it banding trades recall), filter by exact
-    bit_count(xor). The signature-agnostic half of simhash_candidates
-    (which stays fused to its token pipeline because a rowed registered
-    query pins that body -- refactor deferred to a window where
-    simhash_near_dups rotates in): feed it simhashes, media perceptual
-    hashes (multimodal.media_near_dups), or any other Hamming-space
-    fingerprint. Returns (id_a, id_b, hamming), id_a < id_b.
-
-    Scale shape: signatures shuffle by (band, chunk) -- 16 bytes per
-    row regardless of payload width; content never moves."""
-    if not 1 <= bands <= 64 or 64 % bands != 0:
-        raise ValueError(f"bands must divide 64: {bands}")
-    if max_hamming < 0:
-        raise ValueError(f"max_hamming must be >= 0: {max_hamming}")
-    width = 64 // bands
-    banded = df.select(
-        F.col(id_col).alias("_id"), F.col(sig_col).alias("_sig")
-    ).select(
-        "_id",
-        "_sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).cast("int").alias("band"),
-                        F.shiftrightunsigned(F.col("_sig"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("_id", "_sig", "b.band", "b.chunk")
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._sig").alias("sig_a"),
-            F.col("b._sig").alias("sig_b"),
-        )
-        .distinct()
-    )
-    return (
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast(
-                "int"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )

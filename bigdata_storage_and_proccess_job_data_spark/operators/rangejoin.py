@@ -88,59 +88,6 @@ def point_in_range_join(
     return p.join(r, cond, how).drop("_pbin", "_rbin")
 
 
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_span: tuple[str, str],
-    right_span: tuple[str, str],
-    bin_seconds: int = 600,
-) -> DataFrame:
-    """Join interval rows whose half-open spans overlap
-    (``l.start < r.end AND r.start < l.end``) -- the range-range sibling
-    of point_in_range_join, same bin-and-verify shape.
-
-    Both sides replicate to every bin they touch, so an overlapping pair
-    meets in EVERY shared bin; emitting it once without a dedup shuffle
-    uses the later-start rule: of the shared bins, keep only the one
-    containing max(l.start, r.start) (for overlapping spans that instant
-    lies inside both, so exactly one surviving copy exists; for
-    non-overlapping pairs the verify predicate kills all copies)."""
-    ls, le = left_span
-    rs, re_ = right_span
-    lb = left.withColumn(
-        "_bin",
-        F.explode(
-            F.sequence(
-                _bin(F.col(ls), bin_seconds),
-                _bin(F.col(le), bin_seconds),
-                F.lit(bin_seconds).cast("long"),
-            )
-        ),
-    )
-    rb = right.withColumn(
-        "_bin",
-        F.explode(
-            F.sequence(
-                _bin(F.col(rs), bin_seconds),
-                _bin(F.col(re_), bin_seconds),
-                F.lit(bin_seconds).cast("long"),
-            )
-        ),
-    )
-    joined = (
-        lb.join(rb, lb["_bin"] == rb["_bin"])
-        .filter(
-            (F.col(ls) < F.col(re_))
-            & (F.col(rs) < F.col(le))
-            & (
-                lb["_bin"]
-                == _bin(F.greatest(F.col(ls), F.col(rs)), bin_seconds)
-            )
-        )
-    )
-    return joined.drop("_bin")
-
-
 def merge_intervals(
     df: DataFrame,
     start_col: str,

@@ -47,7 +47,7 @@ def bm25_topk(
 
     ``materialize=True`` (default) eagerly computes the <= k result
     rows and releases the internal cache before returning (the
-    deterministic-release contract, ADVICE r4); ``materialize=False``
+    deterministic-release contract); ``materialize=False``
     returns the LAZY pipeline un-persisted -- the tokenize+explode
     lineage will run once per consumer, but the full operator plan
     stays inspectable (the plan-hygiene gate probes this form)."""
@@ -74,7 +74,7 @@ def bm25_topk(
     # tokenize+explode lineage (2 full scans instead of 1). It is the
     # small side -- one row per (matching doc, term) -- the same
     # precedent as neardup's persisted signature frame. Released
-    # deterministically below (ADVICE r4): the final top-k is <= k rows
+    # deterministically below: the final top-k is <= k rows
     # by contract, so it is materialized eagerly and the cache dropped
     # in the finally -- no storage survives the call.
     hits = (
@@ -372,105 +372,4 @@ def ranking_metrics(
         stable_round(
             F.when(F.col("n_rel") > 0, F.col("_dcg") / idcg), digits
         ).alias("ndcg"),
-    )
-
-
-def catalog_coverage(
-    recs: DataFrame,
-    catalog: DataFrame,
-    item_col: str = "item",
-) -> DataFrame:
-    """Aggregate catalog coverage of a recommendation set: how much of
-    the catalog EVER gets recommended -- the popularity-bias smoke
-    alarm accuracy metrics can't ring (a recommender that shows
-    everyone the same 10 blockbusters can still score high NDCG).
-    Returns ONE row: (n_catalog, n_recommended, coverage). Items
-    recommended but absent from the catalog (stale recs) count in
-    neither numerator nor denominator -- they are a data bug, not
-    coverage; NULL catalog items are excluded the same way (review:
-    they could never be matched, capping coverage below 1.0 forever).
-    Two distinct counts + one broadcast semi-join."""
-    cat = (
-        catalog.select(F.col(item_col).alias("_i"))
-        .filter(F.col("_i").isNotNull())
-        .distinct()
-    )
-    rec = (
-        recs.select(F.col(item_col).alias("_i"))
-        .distinct()
-        .join(cat, "_i", "left_semi")
-    )
-    return cat.agg(F.count(F.lit(1)).alias("n_catalog")).crossJoin(
-        F.broadcast(rec.agg(F.count(F.lit(1)).alias("n_recommended")))
-    ).select(
-        "n_catalog",
-        "n_recommended",
-        (F.col("n_recommended") / F.col("n_catalog")).alias("coverage"),
-    )
-
-
-def intra_list_diversity(
-    recs: DataFrame,
-    item_vecs: DataFrame,
-    user_col: str = "user",
-    item_col: str = "item",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-user intra-list diversity: mean pairwise COSINE DISTANCE
-    (1 - cosine) over the user's recommended items' embeddings -- the
-    standard redundancy readout next to accuracy (all-near-duplicate
-    lists score ~0; mmr_rerank exists to push this up without
-    sacrificing relevance, and this is its measurement). Returns
-    (user, k_items, ild): k_items counts the user's DISTINCT
-    recommended items (embedded or not), ild averages over the pairs
-    that both have embeddings; users with fewer than 2 embedded items
-    emit the row with NULL ild (no pair to measure) -- review: the
-    user list and k_items are derived from recs BEFORE the vector
-    join, so a user none of whose items have embeddings still emits a
-    row instead of silently vanishing (and missing embeddings no
-    longer shrink k_items).
-
-    Scale shape: one broadcast join attaches vectors (item metadata is
-    dimension-sized), then a self-join WITHIN each user bounded by
-    item_col ordering -- k(k-1)/2 rows per user for top-k lists, never
-    a cross-corpus product -- and one hash agg back to user grain."""
-    from bigdata_storage_and_proccess_job_data_spark.functions import (
-        vectors,
-    )
-
-    base = recs.select(
-        F.col(user_col).alias("_u"), F.col(item_col).alias("_i")
-    ).distinct()  # review: duplicate rec rows would inflate
-    # k_items and double-weight their pairs in the average
-    n_items = base.groupBy("_u").agg(F.count(F.lit(1)).alias("k_items"))
-    withv = base.join(
-        F.broadcast(
-            item_vecs.select(
-                F.col(item_col).alias("_i"),
-                vectors.as_double(vec_col).alias("_v"),
-            )
-        ),
-        "_i",
-    )
-    a = withv.alias("a")
-    b = withv.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a._u") == F.col("b._u"))
-        & (F.col("a._i") < F.col("b._i")),
-    ).select(
-        F.col("a._u").alias("_u"),
-        (
-            1.0
-            - vectors.cosine_expr(F.col("a._v"), F.col("b._v"))
-        ).alias("_d"),
-    )
-    ild = pairs.groupBy("_u").agg(F.avg("_d").alias("ild"))
-    return (
-        n_items.join(ild, "_u", "left")
-        .select(
-            F.col("_u").alias(user_col),
-            "k_items",
-            "ild",
-        )
     )

@@ -104,7 +104,7 @@ def pca_fit(df: DataFrame, vec_col: str, q: int) -> dict:
     eigenvalue-descending), "eigvals": [q], "n": int}.
 
     Numpy-replica-parity tested (driver-side linear algebra, the
-    kmeans_update precedent); ``pca_apply`` with a fixed model is the
+    kmeans_refine precedent); ``pca_apply`` with a fixed model is the
     oracle-checkable half."""
     import numpy as np
 

@@ -268,9 +268,8 @@ def md5_centroids(
     n_centroids: int, dim: int, seed: int = 7, scale: float = 1.0
 ) -> list[list[float]]:
     """IVF coarse-quantizer centroids with md5-derived components --
-    md5_codebooks' generator applied to the cell layer (r7 verdict #5,
-    the knn_pq graduation applied to IVF): component (i, d) of centroid
-    i is the first 15 md5 hex nibbles of ``"ivf:{seed}:{i}:{d}"``
+    md5_codebooks' generator applied to the cell layer: component (i, d) of
+    centroid i is the first 15 md5 hex nibbles of ``"ivf:{seed}:{i}:{d}"``
     scaled by 2^-59, shifted to [-1, 1), times ``scale`` -- one IEEE
     multiply, bit-identical on any engine with md5 (DuckDB twin in
     plans/scale_queries' knn_ivf oracle).
@@ -318,28 +317,6 @@ def _sig_fold_sql(vec_sql: str, mat_sql: str, n_planes: int) -> str:
     )
 
 
-def signature_expr(
-    vec: Column | str, planes: list[list[float]]
-) -> Column:
-    """Sign-bit signature (BIGINT bucket id) of a vector against the
-    hyperplane set: bit p = (vec . plane_p) >= 0.
-
-    Built as ONE SQL string parsed JVM-side (r8): the old unrolled
-    form spent seconds of DRIVER time per lsh_topk call at 8x4x64
-    constructing the expression tree over py4j -- invisible to
-    executor metrics, pure query-latency overhead -- and even the
-    lambda-HOF fold still paid ~100 py4j round-trips per call. Values
-    are bit-identical (same dots, same fold order), so the md5-plane
-    DuckDB oracles are unaffected."""
-    if len(planes) > 52:
-        raise ValueError("signature_expr supports at most 52 planes")
-    return F.expr(
-        _sig_fold_sql(
-            vectors.sql_of(vec), vectors.matrix_sql(planes), len(planes)
-        )
-    )
-
-
 def _dim_guard_sql(vec_sql: str, dim: int, body_sql: str, what: str) -> str:
     """Wrap ``body_sql`` in a per-row dimension assertion. A mismatch
     between the data's real dimension and the hyperplane/centroid
@@ -364,11 +341,10 @@ def _bucket_array(
     vec: Column | str, tables: list[list[list[float]]]
 ) -> Column:
     """array<struct<table:int, bucket:bigint>> -- one LSH bucket per
-    table. The whole thing is ONE SQL string parsed JVM-side (r8
-    driver-latency fix, see signature_expr): the per-table unroll
-    re-built the signature fold n_tables times over py4j, and even the
-    lambda-HOF rewrite still paid ~0.7 s of construction per call at
-    8x4x64. Same sign-bit semantics, same values."""
+    table. The whole thing is ONE SQL string parsed JVM-side: a
+    per-table unroll re-builds the signature fold n_tables times over
+    py4j, and even a lambda-HOF form pays ~0.7 s of construction per
+    call at 8x4x64. Same sign-bit semantics, same values."""
     n_planes = len(tables[0])
     if any(len(t) != n_planes for t in tables):
         raise ValueError("all LSH tables must have the same plane count")
@@ -486,7 +462,7 @@ def lsh_topk(
     Hyperplanes come from md5_hyperplanes (cross-engine-reproducible),
     which is what lets the registered knn_lsh query carry an EXACT
     DuckDB oracle: the oracle re-derives the same planes from md5 and
-    recomputes bucketing + cosine + rank in SQL (VERDICT r5 #3). The
+    recomputes bucketing + cosine + rank in SQL. The
     default n_probes=1 keeps the original single-probe plan unchanged.
     """
     if not 1 <= n_probes <= n_planes + 1:
@@ -510,8 +486,8 @@ def lsh_topk(
         if n_probes == 1
         else _probe_buckets("`_qv`", tables, n_probes)
     )
-    # TWO CANDIDATE SHAPES, size-gated (r15, VERDICT r14 #8). The
-    # narrow two-pass shape (r14, the cosine_neardup_pairs shape)
+    # TWO CANDIDATE SHAPES, size-gated. The narrow two-pass shape
+    # (the cosine_neardup_pairs shape)
     # shuffles only (id, table, bucket) -- never the vectors -- dedups
     # the bare id pairs with a HashAggregate, and re-attaches vectors
     # by id for surviving pairs only: at corpus scale this is the only
@@ -605,7 +581,7 @@ def cosine_neardup_pairs(
     threshold) WITHOUT the all-pairs product: multi-table hyperplane-LSH
     bucketing generates candidates, exact cosine verifies them.
 
-    Scale shape (the r1 verdict's one flagged scale-killer, fixed):
+    Scale shape:
 
     1. each vector hashes to ``n_tables`` sign-bit buckets -- the ONLY
        thing that shuffles in the candidate stage is (id, table, bucket),
@@ -713,10 +689,9 @@ def _cell_sims(
     Struct field order (sim first) makes array_max/sort_array rank by
     similarity with cell id as the tiebreak, all inside codegen.
 
-    ONE SQL string parsed JVM-side (r8, same driver-latency fix as
-    signature_expr): the unrolled form spent the call's time
-    constructing k x dim Literal nodes over py4j. Values are
-    bit-identical."""
+    ONE SQL string parsed JVM-side (the _bucket_array driver-latency
+    fix): an unrolled form spends the call's time constructing k x dim
+    Literal nodes over py4j. Values are bit-identical."""
     vec_sql = vectors.sql_of(vec)
     mat = vectors.matrix_sql(centroids)
     d = vectors.dot_sql(vec_sql, f"element_at({mat}, i + 1)")
@@ -985,31 +960,6 @@ def pq_topk_from_codes(
         score, "query_id long, neighbor_id long, sim double"
     )
     return _rank_topk(candidates, k)
-
-
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    m: int = 8,
-    n_codes: int = 32,
-    sample_size: int = 2048,
-    seed: int = 42,
-) -> DataFrame:
-    """train_pq -> encode_pq -> ADC search, in one call -- the
-    convenience form for ad-hoc use. Production use at scale stores the
-    encode_pq output once and calls pq_topk_from_codes per query batch
-    (the codebooks and the codes frame are the persistent artifacts;
-    re-encoding the corpus per query batch would defeat the point)."""
-    books = train_pq(
-        corpus, id_col, vec_col, m, n_codes, sample_size, seed=seed
-    )
-    return pq_topk_from_codes(
-        queries, encode_pq(corpus, books, id_col, vec_col), books, k,
-        id_col, vec_col,
-    )
 
 
 def sq8_encode(
@@ -1483,9 +1433,7 @@ def mips_topk(
     different entity spaces (users vs items). Returns (query_id,
     neighbor_id, rank, sim) -- ``sim`` carries the inner product.
 
-    Scale path: mips_augment reduces MIPS to cosine EXACTLY, so the
-    angular indexes (lsh_topk / ivf_topk / PQ) serve inner product with
-    no new index code."""
+    Exact and brute force: every query meets every corpus vector."""
     q = queries.select(
         F.col(query_id).alias("query_id"),
         vectors.as_double(vec_col).alias("_qv"),
@@ -1503,66 +1451,3 @@ def mips_topk(
         ).alias("sim"),
     )
     return _rank_topk(scored, k)
-
-
-def mips_augment(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    max_norm: float | None = None,
-    out_col: str = "embedding_aug",
-) -> "tuple[DataFrame, float]":
-    """The Bachrach et al. (RecSys 2014) MIPS->cosine reduction: append
-    sqrt(M^2 - |x|^2) to every corpus vector (M = max corpus norm, or a
-    caller-pinned ``max_norm`` for incremental corpora), so all
-    augmented vectors share norm M; queries are augmented with a 0. Then
-    cos(aug q, aug x) = (q . x) / (M |q|) -- a positive monotone map of
-    the inner product per query, so ANY angular top-k (LSH, IVF, PQ,
-    brute cosine) over augmented vectors returns the exact MIPS order.
-    Returns (frame + out_col, M); pass M to mips_augment_query.
-
-    One pass of pure expressions; M (when not pinned) is a one-row
-    bounded aggregate. A vector whose norm MATERIALLY exceeds a pinned
-    M raises at evaluation, because silently clamping would corrupt
-    the order -- but slack within float error of zero clamps to 0:
-    fl(sqrt(S))^2 rounds below S for about half of all squared norms,
-    so the corpus's own max-norm vector would otherwise trip the guard
-    spuriously (found by review, reproduced on [1,1,1])."""
-    v = vectors.as_double(vec_col)
-    if max_norm is None:
-        row = corpus.select(
-            F.max(vectors.norm(v)).alias("m")
-        ).collect()  # bounded: one scalar
-        m = float(row[0]["m"] or 0.0)
-        if m <= 0:
-            raise ValueError("corpus has no positive-norm vector")
-    else:
-        m = float(max_norm)
-        if m <= 0:
-            raise ValueError(f"max_norm must be > 0: {max_norm}")
-    m2 = m * m
-    eps = 1e-9 * m2  # relative: distinguishes fp residue from real excess
-    slack = F.lit(m2) - vectors.dot(v, v)
-    tail = F.when(slack >= -eps, F.sqrt(F.greatest(slack, F.lit(0.0)))).otherwise(
-        F.raise_error(
-            F.lit(
-                "mips_augment: vector norm exceeds the pinned max_norm"
-            )
-        )
-    )
-    return (
-        corpus.withColumn(out_col, F.concat(v, F.array(tail))),
-        m,
-    )
-
-
-def mips_augment_query(
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    out_col: str = "embedding_aug",
-) -> DataFrame:
-    """Query-side half of the reduction: append a literal 0 so the
-    augmented dot equals the raw inner product."""
-    v = vectors.as_double(vec_col)
-    return queries.withColumn(
-        out_col, F.concat(v, F.array(F.lit(0.0)))
-    )

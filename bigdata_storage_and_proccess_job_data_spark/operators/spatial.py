@@ -2,8 +2,8 @@
 haversine verify, all DataFrame ops.
 
 The reference has no spatial operators; this brings the
-block-then-verify discipline used throughout the engine (fuzzy_join's
-q-gram pigeonhole, neardup's LSH bands, rangejoin's bin-and-verify) to
+block-then-verify discipline used throughout the engine (neardup's
+LSH bands, rangejoin's bin-and-verify) to
 coordinates: find all (left, right) pairs within ``radius_km`` WITHOUT
 a cartesian product. Rows map to cells of a latitude-band grid; only
 rows sharing a probe cell meet in an equi-join; an exact haversine
@@ -75,10 +75,10 @@ def _cell_width(cell_deg: float, band: Column) -> Column:
 def _n_cells(width: Column) -> Column:
     """Cells per band: floor(360 / width), so the UNIFORM effective
     width 360/n is always >= the requested minimum width -- including
-    the seam-adjacent cell. (ADVICE r7, antimeridian completeness:
-    ceil() left the seam's remainder cell NARROWER than the max
-    in-radius longitude separation, so a qualifying pair could land 2
-    cells apart mod n and escape the +-1 probe.)"""
+    the seam-adjacent cell. (Antimeridian completeness: ceil() would
+    leave the seam's remainder cell NARROWER than the max in-radius
+    longitude separation, so a qualifying pair could land 2 cells
+    apart mod n and escape the +-1 probe.)"""
     return F.greatest(F.lit(1), F.floor(F.lit(360.0) / width)).cast(
         "long"
     )

@@ -177,9 +177,8 @@ def unigram_fit(
     em_rounds: int = 2,
     shrink: float = 0.75,
 ) -> dict[str, float]:
-    """Train a unigram-LM piece vocabulary. Returns {piece: log_prob},
-    the artifact unigram_encode consumes (store it beside the corpus
-    snapshot, like a BPE merge list).
+    """Train a unigram-LM piece vocabulary. Returns {piece: log_prob}
+    (store it beside the corpus snapshot, like a BPE merge list).
 
     Loop: seed (frequent substrings + all chars) -> repeat [em_rounds x
     hard-EM over the distinct-word frame, then prune the lowest-prob
@@ -230,48 +229,3 @@ def unigram_fit(
         for p, _ in multi[: len(multi) - keep]:
             del logp[p]
     return refit(logp)
-
-
-def unigram_encode(
-    df: DataFrame,
-    text_col: str = "text",
-    vocab: dict[str, float] | None = None,
-    out_col: str = "unigram_tokens",
-    max_piece_len: int = 6,
-) -> DataFrame:
-    """Tokenize ``text_col`` with a trained unigram vocabulary: lowercase,
-    whitespace-split, Viterbi per word (the trainer's exact DP, same
-    tiebreak). Appends ``out_col`` (array<string>). Arrow path with the
-    bpe_encode-style per-executor word memo (Zipf corpora re-encode the
-    same head words millions of times); unknown characters emit
-    themselves, so concat(pieces) == word always holds."""
-    if not vocab:
-        raise ValueError("vocab is empty: train with unigram_fit first")
-    logp = dict(vocab)
-    _memo: dict[str, list[str]] = {}
-    _MEMO_CAP = 1 << 20
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def enc(col: pd.Series) -> pd.Series:
-        def word(w: str) -> list[str]:
-            hit = _memo.get(w)
-            if hit is not None:
-                return hit
-            toks = viterbi_segment(w, logp, max_piece_len)
-            if len(_memo) < _MEMO_CAP:
-                _memo[w] = toks
-            return toks
-
-        def doc(text):
-            if text is None:
-                return None
-            toks: list[str] = []
-            for w in text.lower().split():
-                toks.extend(word(w))
-            return toks
-
-        return col.map(doc)
-
-    return df.withColumn(out_col, enc(F.col(text_col)))

@@ -699,7 +699,6 @@ def write_bloom_manifest(
     m: int | None = None,
     k: int = 5,
     target_fpp: float = 0.01,
-    sizing: str = "exact",
 ) -> dict:
     """Per-file BLOOM bitmaps for equality pruning -- the skipping power
     min/max zones can't give: a high-cardinality key written unsorted
@@ -731,28 +730,12 @@ def write_bloom_manifest(
     saturation warning naming the file and its fill. A false positive
     only ever costs a kept file, never correctness.
 
-    ``sizing``: the default ``"exact"`` sizes
-    each bitmap from its file's exact distinct count -- one distinct
-    exchange + a persisted intermediate + two collect jobs per column,
-    the right spend for a long-lived layout. ``sizing="footer"`` is
-    the bulk-(re)build fast path: each file's bitmap is sized from its
-    parquet FOOTER ROW COUNT (a KB-priced metadata read, no distinct
-    exchange, no persist, ONE job per column -- duplicate values just
-    re-OR the same bits, so deduplication is unnecessary when the
-    distinct counts are not otherwise needed). The row count is an
-    upper bound on the distinct count: bit-identical manifests for
-    unique-per-row keys, conservatively larger (never saturated)
-    bitmaps otherwise. Mutually exclusive with an explicit ``m``.
     Every entry records the distinct-count bound ``d`` it was sized
     from and the payload records ``target_fpp`` -- COW splice rebuilds
     (_bloom_rebuild_spliced) reuse both to cap rewritten files' sizes
     and keep the original FP target."""
     import warnings
 
-    if sizing not in ("exact", "footer"):
-        raise ValueError(f"sizing must be 'exact' or 'footer': {sizing!r}")
-    if m is not None and sizing == "footer":
-        raise ValueError("sizing='footer' is mutually exclusive with m")
     if m is not None and (m < 64 or m % 64 != 0):
         raise ValueError("m must be a positive multiple of 64")
     if k < 1:
@@ -761,47 +744,6 @@ def write_bloom_manifest(
         raise ValueError("target_fpp must be in (0, 1)")
     df = spark.read.parquet(snapshot_dir)
     out: dict[str, dict] = {}
-    if sizing == "footer":
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        rows_by_file = {
-            os.path.basename(p): _pq.ParquetFile(p).metadata.num_rows
-            for p in sorted(
-                _glob.glob(os.path.join(snapshot_dir, "*.parquet"))
-            )
-        }
-        m_by_file = {
-            f: _bloom_bits(d, k, target_fpp)
-            for f, d in rows_by_file.items()
-        }
-        for col in cols:
-            pairs = df.select(
-                F.element_at(
-                    F.split(F.input_file_name(), "/"), -1
-                ).alias("_b"),
-                F.col(col).cast("string").alias("_v"),
-            ).filter(F.col("_v").isNotNull())
-            per_file_words: dict[str, dict[str, int]] = {}
-            for r in _bloom_words(spark, pairs, m_by_file, k):
-                per_file_words.setdefault(r._b, {})[str(r._w)] = r._bits
-            for fname, wmap in per_file_words.items():
-                out.setdefault(fname, {})[col] = {
-                    "m": m_by_file[fname],
-                    "d": rows_by_file[fname],
-                    "words": wmap,
-                }
-        payload = {
-            "m": None,
-            "k": k,
-            "target_fpp": target_fpp,
-            "files": out,
-        }
-        _atomic_write(
-            os.path.join(snapshot_dir, _BLOOM), json.dumps(payload)
-        )
-        return payload
     for col in cols:
         pairs = (
             df.select(

@@ -108,10 +108,11 @@ def test_count_distinct_spread_ignores_null_values(spark):
 
 
 def test_observe_expectations_rides_the_main_action(spark, oracle_sf_dir):
-    """The observed counters must equal a dedicated expectation_report
-    pass -- but come from the frame's OWN action (a noop write here; no
-    second scan). Also pins the placement gotcha: a filter added AFTER
-    the observe node does not change the observed counts."""
+    """The observed counters must equal a dedicated counting pass
+    (NULL counts as a violation) -- but come from the frame's OWN action (a
+    noop write here; no second scan). Also pins the placement gotcha: a
+    filter added AFTER the observe node does not change the observed
+    counts."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 
     orders = load_table(spark, oracle_sf_dir, "orders")
@@ -128,7 +129,10 @@ def test_observe_expectations_rides_the_main_action(spark, oracle_sf_dir):
     ).mode("overwrite").save()
     got = obs.get
 
-    want = aggregates.expectation_report(orders, checks).first().asDict()
+    want = {"n_rows": orders.count()} | {
+        name: orders.filter(~F.coalesce(cond, F.lit(False))).count()
+        for name, cond in checks.items()
+    }
     assert got == want
     assert got["n_rows"] == orders.count()
     assert got["impossible_rule"] == got["n_rows"]
@@ -327,34 +331,6 @@ def test_hll_sketch_incremental_distinct(spark, oracle_sf_dir, tmp_path):
     assert abs(g.distinct_estimate - total) <= max(2, 0.05 * total)
 
 
-def test_heavy_hitters_on_skewed_key(spark, oracle_sf_dir):
-    """Approximate-then-verify hot-key detection on the engine's Zipf
-    company key: the planted MEGACORP (75% of rows) must surface with
-    its EXACT count; uniform keys (each ~0.1%) must not; counts match a
-    full groupBy; the candidate shuffle never carries the key space."""
-    from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.plans.analytics_queries import (
-        _zipf_company,
-    )
-
-    lineitem = load_table(spark, oracle_sf_dir, "lineitem")
-    df = lineitem.withColumn("company", _zipf_company())
-    hh = aggregates.heavy_hitters(df, "company", min_share=0.10)
-    rows = hh.collect()
-    assert [r.company for r in rows] == ["MEGACORP"]
-    exact = df.filter(F.col("company") == "MEGACORP").count()
-    assert rows[0].exact_count == exact
-    assert rows[0].share > 0.5
-
-    # a threshold above the hot key's share finds nothing
-    assert aggregates.heavy_hitters(df, "company", min_share=0.9).count() == 0
-
-    import pytest
-
-    with pytest.raises(ValueError, match="min_share"):
-        aggregates.heavy_hitters(df, "company", min_share=0)
-
-
 def test_variant_extraction_parity_and_drift(spark, oracle_sf_dir, tmp_path):
     """VARIANT semi-structured columns: (1) typed JSONPath extraction
     over the events props column matches DuckDB's JSON operators
@@ -483,9 +459,7 @@ def test_cms_sketch_null_keys_counted(spark):
     """ADVICE r6: NULL keys must hash to a real sentinel bucket set so
     the one-sided estimate >= truth holds for them too -- the old
     md5(NULL)=NULL path dropped NULLs into an unjoinable NULL bucket
-    and estimated 0. Also pins heavy_hitters' freqItems support floor."""
-    import pytest
-
+    and estimated 0."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 
     W, D = 256, 4
@@ -502,10 +476,6 @@ def test_cms_sketch_null_keys_counted(spark):
     }
     assert est["a"] >= 5 and est["b"] >= 2
     assert est[None] >= 7  # NULLs counted as one shared key
-
-    # heavy_hitters: sub-floor support fails fast with the real contract
-    with pytest.raises(ValueError, match="1e-4"):
-        aggregates.heavy_hitters(df, "k", min_share=1e-5)
 
 
 def test_normalize_unicode_parity_and_plan(spark, oracle_sf_dir):

@@ -263,59 +263,6 @@ def test_semantic_dedup_duckdb_parity(spark, oracle_sf_dir):
     assert out.filter(~F.col("is_keeper")).count() > 0
 
 
-def test_kmeans_update_minibatch_math(spark):
-    """Streaming/mini-batch update: (1) 1e-9 agreement with a numpy
-    replica of the forgetful rule on a planted batch; (2) with zero
-    history one update IS one kmeans_refine iteration; (3) unhit cells
-    keep their centroid while their count decays; (4) decay=1 running
-    counts accumulate batch sizes; (5) validation."""
-    rng = np.random.default_rng(11)
-    cent0 = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
-    counts0 = [4.0, 2.0, 0.0]
-    batch = rng.normal([0.9, 0.1, 0.0], 0.05, (12, 3)).tolist()
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(batch)],
-        "vec_id long, embedding array<double>",
-    )
-    got_c, got_n = clustering.kmeans_update(
-        df, cent0, counts0, decay=0.5
-    )
-
-    # numpy replica
-    xn = np.asarray(batch)
-    xn = xn / np.linalg.norm(xn, axis=1, keepdims=True)
-    c = np.asarray(cent0, dtype=np.float64)
-    sims = xn @ c.T
-    assign = sims.argmax(axis=1)
-    exp_c, exp_n = c.copy(), [0.5 * n for n in counts0]
-    for cell in range(3):
-        members = xn[assign == cell]
-        if len(members):
-            hist = 0.5 * counts0[cell]
-            nb = float(len(members))
-            exp_c[cell] = (
-                hist * c[cell] + nb * members.mean(axis=0)
-            ) / (hist + nb)
-            exp_n[cell] = hist + nb
-    exp_c = exp_c / np.linalg.norm(exp_c, axis=1, keepdims=True)
-    assert np.allclose(np.asarray(got_c), exp_c, atol=1e-9)
-    assert np.allclose(got_n, exp_n, atol=1e-9)
-    # every batch vector went to cell 0; cells 1/2 kept centroids,
-    # counts decayed
-    assert got_c[1] == cent0[1] and got_c[2] == cent0[2]
-    assert got_n[1] == 1.0 and got_n[2] == 0.0 and got_n[0] == 14.0
-
-    # zero history == one refine iteration on the batch
-    up_c, _ = clustering.kmeans_update(df, cent0, [0.0, 0.0, 0.0])
-    ref_c = clustering.kmeans_refine(df, cent0, n_iters=1)
-    assert np.allclose(np.asarray(up_c), np.asarray(ref_c), atol=1e-12)
-
-    with pytest.raises(ValueError):
-        clustering.kmeans_update(df, cent0, [1.0], decay=0.5)
-    with pytest.raises(ValueError):
-        clustering.kmeans_update(df, cent0, counts0, decay=0.0)
-
-
 def test_davies_bouldin_numpy_replica_and_separation(spark):
     """DBI matches an independent numpy computation on blobs, ranks a
     good centroid set below a collapsed one (separation term working),

@@ -1,6 +1,6 @@
 """Feature-engineering fit/transform: hand-math pins, unseen-group and
 degenerate-group NULL semantics, and full DuckDB value parity for each
-of standardize / quantile-bin / winsorize on the driver tables."""
+of standardize / quantile-bin on the driver tables."""
 
 from __future__ import annotations
 
@@ -61,18 +61,8 @@ def test_quantile_bins_hand_math(spark):
         features.quantile_bins_fit(df, "x", n_bins=1)
 
 
-def test_winsorize_hand_math(spark):
-    vals = [float(i) for i in range(1, 100)] + [10_000.0]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    out = {r.x: r.x_w for r in features.winsorize(df, ["x"]).collect()}
-    assert out[10_000.0] < 10_000.0  # tail clipped
-    assert out[50.0] == 50.0         # body untouched
-    with pytest.raises(ValueError):
-        features.winsorize(df, ["x"], lower=0.5, upper=0.4)
-
-
 def test_features_duckdb_parity(spark, oracle_sf_dir):
-    """All three transforms on orders, grouped by priority, match
+    """Both transforms on orders, grouped by priority, match
     DuckDB end to end (exact interpolated percentiles both sides)."""
     orders = load_table(spark, oracle_sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -128,141 +118,6 @@ def test_features_duckdb_parity(spark, oracle_sf_dir):
         """,
     )
     assert problems == [], problems
-
-    w = features.winsorize(
-        orders, ["o_totalprice"], 0.05, 0.95, keys=["o_orderpriority"]
-    ).select(
-        "o_orderkey",
-        stable_round(F.col("o_totalprice_w"), 4).alias("w"),
-    )
-    problems = compare(
-        w,
-        con,
-        f"""
-        WITH f AS (
-          SELECT o_orderpriority,
-                 quantile_cont(o_totalprice, 0.05) AS lo,
-                 quantile_cont(o_totalprice, 0.95) AS hi
-          FROM orders GROUP BY o_orderpriority
-        )
-        SELECT o_orderkey,
-               {sql_round('least(greatest(o_totalprice, lo), hi)', 4)} AS w
-        FROM orders JOIN f USING (o_orderpriority)
-        """,
-    )
-    assert problems == [], problems
-
-
-def _pav_replica(pairs):
-    """Pure-Python weighted PAV over (x, y, w) sorted by x, ties
-    pre-pooled -- the textbook stack algorithm, independently coded."""
-    from collections import OrderedDict
-
-    tied = OrderedDict()
-    for x, y, w in sorted(pairs, key=lambda p: p[0]):
-        wy, wt, n = tied.get(x, (0.0, 0.0, 0))
-        tied[x] = (wy + w * y, wt + w, n + 1)
-    blocks = []  # [wy, w, n, lo, hi]
-    for x, (wy, wt, n) in tied.items():
-        blocks.append([wy, wt, n, x, x])
-        while len(blocks) > 1 and (
-            blocks[-2][0] / blocks[-2][1]
-            >= blocks[-1][0] / blocks[-1][1]
-        ):
-            b = blocks.pop()
-            blocks[-1][0] += b[0]
-            blocks[-1][1] += b[1]
-            blocks[-1][2] += b[2]
-            blocks[-1][4] = b[4]
-    return [
-        (b[3], b[4], b[0] / b[1], b[2]) for b in blocks
-    ]
-
-
-def test_isotonic_fit_hand_pin_and_replica(spark, oracle_sf_dir):
-    """PAV: (1) the classic hand case [0,1,0,0,1,1] pools the middle
-    violators to 1/3; (2) tied scores pre-pool; (3) exact replica
-    equality per key on real data (score = embedding[0], label =
-    embedding[1] > 0 -- noisy, so real pooling happens)."""
-    df = spark.createDataFrame(
-        [(float(i + 1), float(y)) for i, y in enumerate([0, 1, 0, 0, 1, 1])],
-        "s double, y double",
-    )
-    blocks = sorted(
-        (r.x_lo, r.x_hi, r.yhat, r.n)
-        for r in features.isotonic_fit(df, "s", "y").collect()
-    )
-    assert blocks[0] == (1.0, 1.0, 0.0, 1)
-    assert blocks[1][0] == 2.0 and blocks[1][1] == 4.0
-    assert blocks[1][2] == pytest.approx(1 / 3) and blocks[1][3] == 3
-    assert blocks[2] == (5.0, 6.0, 1.0, 2)
-
-    tie = spark.createDataFrame(
-        [(1.0, 0.0), (1.0, 1.0), (2.0, 1.0)], "s double, y double"
-    )
-    tb = sorted(
-        (r.x_lo, r.yhat, r.n)
-        for r in features.isotonic_fit(tie, "s", "y").collect()
-    )
-    assert tb == [(1.0, 0.5, 2), (2.0, 1.0, 1)]
-
-    emb = load_table(spark, oracle_sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    data = emb.select(
-        (F.col("label") % 3).alias("k"),
-        v[0].alias("s"),
-        (v[1] > 0).cast("double").alias("y"),
-    )
-    got = {}
-    for r in features.isotonic_fit(data, "s", "y", keys=["k"]).collect():
-        got.setdefault(r.k, []).append((r.x_lo, r.x_hi, r.yhat, r.n))
-    rows = data.collect()
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r.k, []).append((r.s, r.y, 1.0))
-    for k, pairs in by_key.items():
-        expect = _pav_replica(pairs)
-        gb = sorted(got[k])
-        assert len(gb) == len(expect)
-        for g, e in zip(gb, expect):
-            assert g[0] == e[0] and g[1] == e[1] and g[3] == e[3]
-            assert g[2] == pytest.approx(e[2], rel=1e-12)
-        # monotone nondecreasing by construction
-        ys = [b[2] for b in gb]
-        assert ys == sorted(ys)
-
-
-def test_isotonic_apply_clamp_and_self_consistency(spark, oracle_sf_dir):
-    """Applying the model to its own training scores reproduces each
-    block's fitted value; out-of-range scores clamp; unseen keys and
-    NULL scores emit NULL."""
-    df = spark.createDataFrame(
-        [("a", float(i + 1), float(y))
-         for i, y in enumerate([0, 1, 0, 0, 1, 1])],
-        "k string, s double, y double",
-    )
-    model = features.isotonic_fit(df, "s", "y", keys=["k"])
-    applied = features.isotonic_apply(df, model, "s", keys=["k"])
-    got = {r.s: r.calibrated for r in applied.collect()}
-    assert got[1.0] == 0.0
-    for s in (2.0, 3.0, 4.0):
-        assert got[s] == pytest.approx(1 / 3)
-    assert got[5.0] == 1.0 and got[6.0] == 1.0
-    probe = spark.createDataFrame(
-        [("a", -5.0), ("a", 3.5), ("a", 99.0), ("a", None), ("zz", 3.0)],
-        "k string, s double",
-    )
-    cal = {
-        (r.k, r.s): r.calibrated
-        for r in features.isotonic_apply(
-            probe, model, "s", keys=["k"]
-        ).collect()
-    }
-    assert cal[("a", -5.0)] == 0.0  # clamp below
-    assert cal[("a", 3.5)] == pytest.approx(1 / 3)  # inside middle block
-    assert cal[("a", 99.0)] == 1.0  # clamp above
-    assert cal[("a", None)] is None
-    assert cal[("zz", 3.0)] is None  # unseen key: no silent passthrough
 
 
 def test_target_encode_loo_semantics_and_parity(spark, oracle_sf_dir):
@@ -332,115 +187,11 @@ def test_target_encode_loo_semantics_and_parity(spark, oracle_sf_dir):
         features.target_encode_fit(train, [], "y")
 
 
-def test_hbos_fit_apply_semantics_and_parity(spark, oracle_sf_dir):
-    """HBOS: (1) hand histogram on a controlled frame -- a point in the
-    dense bin scores near 0, a point in an empty region scores high,
-    NULL contributes 0, constant features contribute 0; (2) a planted
-    outlier tops the ranking on real orders columns; (3) full DuckDB
-    replay of the scoring with the model as literals."""
-    import pytest as _pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from bigdata_storage_and_proccess_job_data_spark.operators import features
-    from tests.parity import compare, duckdb_connect
-
-    rows = [(float(x), 5.0) for x in [0, 1, 1, 1, 2, 2, 9]] + [(None, 5.0)]
-    df = spark.createDataFrame(rows, "a double, c double")
-    m = features.hbos_fit(df, ["a", "c"], n_bins=3)
-    # a: [0,3) x5? bins over [0,9]: width 3 -> bin0 has 0,1,1,1,2,2 = 6;
-    # bin1 empty; bin2 has 9 (max folds in)
-    assert m["a"]["counts"] == [6, 0, 1]
-    assert m["c"]["width"] == 0.0  # constant feature
-    scored = {
-        (r.a, r.c): r.hbos
-        for r in features.hbos_apply(df, m).collect()
-    }
-    import math
-
-    assert scored[(1.0, 5.0)] == _pytest.approx(0.0, abs=1e-12)
-    assert scored[(9.0, 5.0)] == _pytest.approx(math.log10(6 / 1), abs=1e-12)
-    assert scored[(None, 5.0)] == _pytest.approx(0.0, abs=1e-12)
-    # empty-bin probe: 4.5 falls in bin1 (count floored at 0.5)
-    probe = spark.createDataFrame([(4.5, 5.0)], "a double, c double")
-    assert features.hbos_apply(probe, m).collect()[0].hbos == (
-        _pytest.approx(math.log10(6 / 0.5), abs=1e-12)
-    )
-
-    orders = load_table(spark, oracle_sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_totalprice").alias("p"),
-        (F.col("o_custkey") % 100).cast("double").alias("s"),
-    )
-    planted = orders.unionByName(
-        spark.createDataFrame(
-            [(999_999_999, 10_000_000.0, 9999.0)],
-            "o_orderkey long, p double, s double",
-        )
-    )
-    model = features.hbos_fit(planted, ["p", "s"], n_bins=20)
-    top = (
-        features.hbos_apply(planted, model)
-        .orderBy(F.desc("hbos"), "o_orderkey")
-        .limit(1)
-        .collect()[0]
-    )
-    assert top.o_orderkey == 999_999_999
-
-    out = features.hbos_apply(orders, model).select(
-        "o_orderkey", stable_round(F.col("hbos"), 6).alias("hbos")
-    )
-    import math as _m
-
-    def lut_sql(col, mm):
-        n_bins = len(mm["counts"])
-        mx = max(max(mm["counts"]), 1)
-        scores = ", ".join(
-            repr(_m.log10(mx / max(cnt, 0.5))) for cnt in mm["counts"]
-        )
-        if mm["width"] <= 0:
-            return f"CASE WHEN {col} IS NOT NULL THEN ([{scores}])[1] ELSE 0.0 END"
-        idx = (
-            f"greatest(least(floor(({col} - {mm['min']!r}) / "
-            f"{mm['width']!r})::INT, {n_bins - 1}), 0)"
-        )
-        return (
-            f"CASE WHEN {col} IS NOT NULL THEN ([{scores}])[{idx} + 1] "
-            f"ELSE 0.0 END"
-        )
-
-    sql = f"""
-        SELECT o_orderkey,
-               {sql_round(
-                   lut_sql("o_totalprice", model["p"])
-                   + " + "
-                   + lut_sql("(o_custkey % 100)::DOUBLE", model["s"]),
-                   6,
-               )} AS hbos
-        FROM orders
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-
-    with _pytest.raises(ValueError, match="n_bins"):
-        features.hbos_fit(df, ["a"], n_bins=1)
-    with _pytest.raises(ValueError, match="non-empty"):
-        features.hbos_fit(df, [])
-    with _pytest.raises(ValueError, match="no non-null"):
-        features.hbos_fit(
-            spark.createDataFrame([(None,)], "a double"), ["a"]
-        )
-
-
 def test_woe_fit_apply_semantics_and_parity(spark, oracle_sf_dir):
     """Weight of evidence: (1) hand math -- a positive-heavy category
     gets woe > 0, a balanced one ~0, the eps adjustment keeps a pure
-    category finite, NULL category is its own level; (2) apply is a
-    broadcast lookup with NULL for unseen categories and null-safe
-    matching for the missing level; (3) full DuckDB replay on orders
-    (segment category vs a parity label)."""
+    category finite, NULL category is its own level; (2) full DuckDB
+    replay on orders (segment category vs a parity label)."""
     import math
 
     rows = (
@@ -491,20 +242,6 @@ def test_woe_fit_apply_semantics_and_parity(spark, oracle_sf_dir):
                 "y",
             ).collect()
 
-    applied = {
-        r.cat: r.woe
-        for r in features.woe_apply(
-            spark.createDataFrame(
-                [("a",), ("zz",), (None,)], "cat string"
-            ),
-            fit,
-            "cat",
-        ).collect()
-    }
-    assert applied["a"] == pytest.approx(woe_a)
-    assert applied["zz"] is None  # unseen -> NULL, surfaced
-    assert applied[None] == got[None].woe  # null-safe missing match
-
     orders = load_table(spark, oracle_sf_dir, "orders").select(
         "o_orderpriority",
         (F.col("o_custkey") % 2).cast("double").alias("y"),
@@ -548,188 +285,3 @@ def test_woe_fit_apply_semantics_and_parity(spark, oracle_sf_dir):
     assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
 
 
-def test_rake_weights_ipf_margins_and_guards(spark):
-    """Raking: (1) on a classic 2x2 with mismatched margins the fitted
-    weights reproduce BOTH target margins simultaneously (weighted
-    shares within tol) and average 1 over kept rows; (2) a NULL in a
-    raked column drops the row; (3) guards -- unknown observed
-    category, shares not summing to 1, empty margins, cell-count cap;
-    (4) infeasible targets (support only on the diagonal) fail loud as
-    non-convergence rather than looping forever."""
-    rows = (
-        [("a1", "b1")] * 30
-        + [("a1", "b2")] * 70
-        + [("a2", "b1")] * 60
-        + [("a2", "b2")] * 40
-        + [(None, "b1")] * 5  # excluded
-    )
-    df = spark.createDataFrame(rows, "A string, B string")
-    out = features.rake_weights(
-        df,
-        {"A": {"a1": 0.5, "a2": 0.5}, "B": {"b1": 0.6, "b2": 0.4}},
-    )
-    assert out.count() == 200  # NULL-A rows dropped
-    tot = out.agg(F.sum("rake_weight")).first()[0]
-    assert tot == pytest.approx(200.0)  # mean weight 1
-    for col, targets in [
-        ("A", {"a1": 0.5, "a2": 0.5}),
-        ("B", {"b1": 0.6, "b2": 0.4}),
-    ]:
-        got = {
-            r[col]: r.s / tot
-            for r in out.groupBy(col)
-            .agg(F.sum("rake_weight").alias("s"))
-            .collect()
-        }
-        for v, t in targets.items():
-            assert got[v] == pytest.approx(t, abs=1e-6), (col, v)
-
-    with pytest.raises(ValueError, match="missing from its target"):
-        features.rake_weights(df, {"A": {"a1": 1.0}})
-    with pytest.raises(ValueError, match="sum to"):
-        features.rake_weights(df, {"A": {"a1": 0.5, "a2": 0.4}})
-    with pytest.raises(ValueError, match="empty"):
-        features.rake_weights(df, {})
-    with pytest.raises(ValueError, match="max_cells"):
-        features.rake_weights(
-            df,
-            {"A": {"a1": 0.5, "a2": 0.5}, "B": {"b1": 0.6, "b2": 0.4}},
-            max_cells=2,
-        )
-
-    diag = spark.createDataFrame(
-        [("a1", "b1")] * 50 + [("a2", "b2")] * 50, "A string, B string"
-    )
-    with pytest.raises(ValueError, match="not converged"):
-        features.rake_weights(
-            diag,
-            {"A": {"a1": 0.5, "a2": 0.5}, "B": {"b1": 0.9, "b2": 0.1}},
-            max_iter=30,
-        )
-
-
-def test_rake_weights_zero_target_share(spark):
-    """A 0.0 target share is a legal 'exclude this category' (r11
-    ADVICE): (1) its cells rake to weight 0 and every other margin
-    still converges on the surviving mass (pre-fix this was a
-    ZeroDivisionError in the NEXT margin's sweep); (2) a POSITIVE
-    target whose entire observed support was zeroed by another
-    margin's 0.0 fails loud as infeasible; (3) so does a margin whose
-    every observed category is zero-targeted."""
-    rows = (
-        [("a1", "x")] * 10
-        + [("a1", "y")] * 10
-        + [("a2", "x")] * 20
-        + [("a2", "y")] * 20
-    )
-    zdf = spark.createDataFrame(rows, "A string, B string")
-    out = features.rake_weights(
-        zdf, {"A": {"a1": 0.0, "a2": 1.0}, "B": {"x": 0.5, "y": 0.5}}
-    )
-    per = {
-        (r.A, r.B): r.rake_weight
-        for r in out.select("A", "B", "rake_weight").distinct().collect()
-    }
-    assert per[("a1", "x")] == 0.0 and per[("a1", "y")] == 0.0
-    assert per[("a2", "x")] > 0 and per[("a2", "y")] > 0
-    tot = out.agg(F.sum("rake_weight")).first()[0]
-    assert tot == pytest.approx(60.0)  # mean weight 1 over ALL kept rows
-    shares = {
-        (r.A, r.B): r.s / tot
-        for r in out.groupBy("A", "B")
-        .agg(F.sum("rake_weight").alias("s"))
-        .collect()
-    }
-    assert shares[("a2", "x")] == pytest.approx(0.5, abs=1e-6)
-    assert shares[("a2", "y")] == pytest.approx(0.5, abs=1e-6)
-
-    # y's only support sits under the zero-targeted a1: infeasible
-    bad = spark.createDataFrame(
-        [("a1", "y")] * 10 + [("a2", "x")] * 10, "A string, B string"
-    )
-    with pytest.raises(ValueError, match="infeasible"):
-        features.rake_weights(
-            bad, {"A": {"a1": 0.0, "a2": 1.0}, "B": {"x": 0.5, "y": 0.5}}
-        )
-
-    # every observed category zero-targeted: total mass hits 0
-    allzero = spark.createDataFrame(
-        [("a1", "x")] * 10 + [("a1", "y")] * 10, "A string, B string"
-    )
-    with pytest.raises(ValueError, match="infeasible"):
-        features.rake_weights(
-            allzero,
-            {"A": {"a1": 0.0, "a2": 1.0}, "B": {"x": 0.5, "y": 0.5}},
-        )
-
-
-def _ipf_replica(cells, margins, max_iter, tol):
-    """Pure-Python IPF replica over a SORTED cell frame -- the
-    operator's loop re-implemented independently (the isotonic/ALS
-    replica standard). The IPF limit is unique for feasible targets,
-    so iteration order only moves ULPs; both sides run to the same
-    tol and the comparison rounds."""
-    cols = list(margins)
-    w = {vals: 1.0 for vals, _ in cells}
-    for _ in range(max_iter):
-        for i, c in enumerate(cols):
-            achieved: dict = {}
-            for vals, n in cells:
-                achieved[vals[i]] = achieved.get(vals[i], 0.0) + n * w[vals]
-            mass = sum(achieved.values())
-            for vals, n in cells:
-                share = achieved[vals[i]] / mass
-                if share == 0.0:
-                    continue
-                w[vals] *= margins[c][vals[i]] / share
-        worst = 0.0
-        for i, c in enumerate(cols):
-            achieved = {}
-            for vals, n in cells:
-                achieved[vals[i]] = achieved.get(vals[i], 0.0) + n * w[vals]
-            mass = sum(achieved.values())
-            for v, t in margins[c].items():
-                worst = max(worst, abs(achieved.get(v, 0.0) / mass - t))
-        if worst <= tol:
-            break
-    n_total = float(sum(n for _, n in cells))
-    mean_w = sum(n * w[vals] for vals, n in cells) / n_total
-    return {vals: w[vals] / mean_w for vals, _ in cells}
-
-
-def test_rake_weights_duckdb_replay_parity(spark, oracle_sf_dir):
-    """Cross-engine value parity for the IPF fit (VERDICT r11 #3): the
-    classic 2x2 (30/70/60/40 raked to 50/50 x 60/40) is fitted by an
-    independent pure-Python replica, and DuckDB replays the CELL FRAME
-    + WEIGHT APPLICATION with the replica's fitted weights as literals
-    -- every one of the 200 output rows must hash-match rake_weights'
-    frame value-for-value."""
-    spec = [("a1", "b1", 30), ("a1", "b2", 70), ("a2", "b1", 60), ("a2", "b2", 40)]
-    margins = {"A": {"a1": 0.5, "a2": 0.5}, "B": {"b1": 0.6, "b2": 0.4}}
-    rows = [(a, b) for a, b, n in spec for _ in range(n)]
-    df = spark.createDataFrame(rows, "A string, B string")
-    got = features.rake_weights(
-        df, margins, max_iter=500, tol=1e-12
-    ).select(
-        "A", "B", stable_round(F.col("rake_weight"), 6).alias("rake_weight")
-    )
-    fitted = _ipf_replica(
-        [((a, b), float(n)) for a, b, n in sorted(spec)],
-        margins,
-        max_iter=500,
-        tol=1e-12,
-    )
-    values = ", ".join(
-        f"('{a}', '{b}', {n}, CAST({fitted[(a, b)]!r} AS DOUBLE))"
-        for a, b, n in spec
-    )
-    sql = f"""
-        WITH spec(A, B, n, w) AS (VALUES {values}),
-        expanded AS (
-          SELECT A, B, {sql_round('w', 6)} AS rake_weight,
-                 UNNEST(generate_series(1, n)) AS i
-          FROM spec
-        )
-        SELECT A, B, rake_weight FROM expanded
-    """
-    assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []

@@ -1,7 +1,7 @@
 """PageRank: exact agreement with a dense numpy power iteration (same
 update rule), probability-mass conservation, dangling handling, and
 validation. Iterative -> test-pinned rather than SQL-oracled (the
-heavy_hitters / connected_components precedent)."""
+connected_components precedent)."""
 
 from __future__ import annotations
 
@@ -180,7 +180,7 @@ def test_pagerank_personalized_concentrates_on_seeds(spark):
 
 
 def test_triangles_micro_shapes(spark):
-    """K4 has 4 triangles (3 per node, lcc 1.0); C4 and a star have
+    """K4 has 4 triangles (3 per node); C4 and a star have
     none. Exercises the degree-ordered orientation end to end."""
     k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
     df = spark.createDataFrame(k4, "src long, dst long")
@@ -191,11 +191,6 @@ def test_triangles_micro_shapes(spark):
         r.node: r.triangles for r in graph.triangle_counts(df).collect()
     }
     assert counts == {0: 3, 1: 3, 2: 3, 3: 3}
-    lcc = {
-        r.node: r.lcc
-        for r in graph.clustering_coefficients(df).collect()
-    }
-    assert lcc == {0: 1.0, 1: 1.0, 2: 1.0, 3: 1.0}
 
     c4 = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 0)], "src long, dst long"
@@ -206,11 +201,6 @@ def test_triangles_micro_shapes(spark):
         [(0, i) for i in range(1, 30)], "src long, dst long"
     )
     assert graph.triangles(star).count() == 0
-    star_lcc = {
-        r.node: r.lcc
-        for r in graph.clustering_coefficients(star).collect()
-    }
-    assert star_lcc[0] == 0.0  # hub degree 29, no closed wedge
 
 
 def test_triangles_reciprocal_and_self_edges_collapse(spark):
@@ -222,8 +212,6 @@ def test_triangles_reciprocal_and_self_edges_collapse(spark):
     )
     rows = graph.triangles(df).collect()
     assert [(r.x, r.y, r.z) for r in rows] == [(1, 2, 3)]
-    deg = {r.node: r.deg for r in graph.degrees(df).collect()}
-    assert deg == {1: 2, 2: 2, 3: 2}
 
 
 def test_triangle_edge_iterator_avoids_wedge_blowup(spark, oracle_sf_dir):
@@ -301,7 +289,7 @@ def test_triangle_edge_iterator_avoids_wedge_blowup(spark, oracle_sf_dir):
 
 
 def test_triangle_counts_duckdb_parity(spark, sf_dir):
-    """Full per-node triangle counts + lcc on a mod-derived lineitem
+    """Full per-node triangle counts on a mod-derived lineitem
     graph match DuckDB computing the naive a<b<c three-way join --
     the oriented formulation changes the shuffle shape, never the
     answer."""
@@ -341,83 +329,6 @@ def test_triangle_counts_duckdb_parity(spark, sf_dir):
         )
         SELECT n.node, COALESCE(p.triangles, 0) AS triangles
         FROM nodes n LEFT JOIN pern p USING (node)
-        """,
-    )
-    assert problems == [], problems
-
-    problems = compare(
-        graph.clustering_coefficients(edges),
-        con,
-        """
-        WITH raw AS (
-          SELECT l_orderkey % 53 AS s, l_partkey % 53 AS d FROM lineitem
-        ),
-        e AS (
-          SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-          FROM raw WHERE s IS NOT NULL AND d IS NOT NULL AND s <> d
-        ),
-        tri AS (
-          SELECT e1.a AS x, e1.b AS y, e2.b AS z
-          FROM e e1
-          JOIN e e2 ON e2.a = e1.b
-          JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-        ),
-        pern AS (
-          SELECT node, COUNT(*) AS triangles FROM (
-            SELECT x AS node FROM tri
-            UNION ALL SELECT y FROM tri
-            UNION ALL SELECT z FROM tri
-          ) GROUP BY node
-        ),
-        und AS (
-          SELECT node, COUNT(*) AS deg FROM (
-            SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-          ) GROUP BY node
-        )
-        SELECT und.node, deg, COALESCE(p.triangles, 0) AS triangles,
-               CASE WHEN deg < 2 THEN 0.0
-                    ELSE 2.0 * COALESCE(p.triangles, 0)
-                         / (deg * (deg - 1)) END AS lcc
-        FROM und LEFT JOIN pern p USING (node)
-        """,
-    )
-    assert problems == [], problems
-
-
-def test_degrees_duckdb_parity(spark, sf_dir):
-    """Directed in/out + undirected distinct-neighbor degrees match
-    DuckDB on a two-key derived graph."""
-    from tests.parity import compare, duckdb_connect
-
-    edges = load_table(spark, sf_dir, "lineitem").select(
-        (F.col("l_orderkey") % 101).alias("src"),
-        (F.col("l_suppkey") % 97).alias("dst"),
-    )
-    con = duckdb_connect(sf_dir)
-    problems = compare(
-        graph.degrees(edges),
-        con,
-        """
-        WITH raw AS (
-          SELECT l_orderkey % 101 AS s, l_suppkey % 97 AS d FROM lineitem
-        ),
-        e AS (
-          SELECT DISTINCT s, d FROM raw
-          WHERE s IS NOT NULL AND d IS NOT NULL AND s <> d
-        ),
-        u AS (
-          SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b FROM e
-        ),
-        outd AS (SELECT s AS node, COUNT(*) AS out_deg FROM e GROUP BY s),
-        ind AS (SELECT d AS node, COUNT(*) AS in_deg FROM e GROUP BY d),
-        und AS (
-          SELECT node, COUNT(*) AS deg FROM (
-            SELECT a AS node FROM u UNION ALL SELECT b AS node FROM u
-          ) GROUP BY node
-        )
-        SELECT und.node, COALESCE(out_deg, 0) AS out_deg,
-               COALESCE(in_deg, 0) AS in_deg, deg
-        FROM und LEFT JOIN outd USING (node) LEFT JOIN ind USING (node)
         """,
     )
     assert problems == [], problems
@@ -541,294 +452,6 @@ def test_shortest_paths_duckdb_recursive_cte_parity(spark, sf_dir):
         """,
     )
     assert problems == [], problems
-
-
-def test_tree_rollup_hand_math(spark):
-    """Org tree: every node's subtree total; interior nodes with their
-    own value; isolated valued node; NULL values ignored; depth cap."""
-    #        1
-    #      /   \
-    #     2     3
-    #    / \     \
-    #   4   5     6
-    edges = spark.createDataFrame(
-        [(2, 1), (3, 1), (4, 2), (5, 2), (6, 3)],
-        "child long, parent long",
-    )
-    values = spark.createDataFrame(
-        [(4, 10.0), (5, 20.0), (6, 5.0), (2, 1.0), (9, 7.0), (3, None)],
-        "node long, value double",
-    )
-    got = {
-        r.node: r.subtree_total
-        for r in graph.tree_rollup(edges, values).collect()
-    }
-    assert got[4] == 10.0 and got[5] == 20.0 and got[6] == 5.0
-    assert got[2] == 31.0          # own 1 + children 30
-    assert got[3] == 5.0           # NULL own ignored
-    assert got[1] == 36.0          # whole tree
-    assert got[9] == 7.0           # isolated valued node
-    # depth cap: with max_depth=1 the root only sees one hop
-    capped = {
-        r.node: r.subtree_total
-        for r in graph.tree_rollup(edges, values, max_depth=1).collect()
-    }
-    assert capped[1] == 1.0  # only node 2's own value is one hop away
-
-
-def test_tree_rollup_duckdb_recursive_parity(spark, sf_dir):
-    """Subtree sums over a derived binary tree match DuckDB computing
-    the transitive-closure aggregate with a recursive CTE."""
-    from tests.parity import compare, duckdb_connect
-
-    orders = load_table(spark, sf_dir, "orders")
-    # binary tree on 1..400: child i -> parent i/2
-    ids = orders.select(
-        (F.col("o_orderkey") % 400 + 1).alias("n")
-    ).distinct()
-    edges = ids.filter(F.col("n") > 1).select(
-        F.col("n").alias("child"),
-        F.floor(F.col("n") / 2).cast("long").alias("parent"),
-    )
-    values = orders.select(
-        (F.col("o_orderkey") % 400 + 1).alias("node"),
-        F.col("o_totalprice").alias("value"),
-    )
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-
-    out = graph.tree_rollup(edges, values).select(
-        "node", stable_round(F.col("subtree_total"), 4).alias("subtree_total")
-    )
-    con = duckdb_connect(sf_dir)
-    problems = compare(
-        out,
-        con,
-        f"""
-        WITH RECURSIVE ids AS (
-          SELECT DISTINCT o_orderkey % 400 + 1 AS n FROM orders
-        ),
-        e AS (
-          SELECT n AS child, CAST(FLOOR(n / 2) AS BIGINT) AS parent
-          FROM ids WHERE n > 1
-        ),
-        closure(descendant, ancestor) AS (
-          SELECT n, n FROM ids
-          UNION
-          SELECT c.descendant, e.parent
-          FROM closure c JOIN e ON e.child = c.ancestor
-        ),
-        own AS (
-          SELECT o_orderkey % 400 + 1 AS node, SUM(o_totalprice) AS v
-          FROM orders GROUP BY 1
-        )
-        SELECT cl.ancestor AS node,
-               {sql_round('COALESCE(SUM(own.v), 0.0)', 4)}
-                 AS subtree_total
-        FROM closure cl LEFT JOIN own ON own.node = cl.descendant
-        GROUP BY cl.ancestor
-        """,
-    )
-    assert problems == [], problems
-
-
-def test_k_core_hand_graphs_and_brute_force(spark, oracle_sf_dir):
-    """k-core peeling: (1) K4 with a pendant path -- the 3-core is
-    exactly the K4, the 2-core adds nothing from the tree tail, the
-    1-core keeps every non-isolated node; (2) a pure tree has no
-    2-core; (3) exact agreement with an independent pure-Python peel
-    on a derived lineitem graph for k in {2, 3, 5}; (4) within-core
-    degrees are >= k; (5) max_iter exhaustion raises."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.operators import graph
-
-    # (1) K4 on {0,1,2,3} + path 3-4-5
-    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    e = spark.createDataFrame(k4 + [(3, 4), (4, 5)], "src long, dst long")
-    core3 = graph.k_core(e, 3).collect()
-    assert {r.node for r in core3} == {0, 1, 2, 3}
-    assert all(r.deg >= 3 for r in core3)
-    core2 = {r.node for r in graph.k_core(e, 2).collect()}
-    assert core2 == {0, 1, 2, 3}
-    core1 = {r.node for r in graph.k_core(e, 1).collect()}
-    assert core1 == {0, 1, 2, 3, 4, 5}
-
-    # (2) trees have no 2-core
-    tree = spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 3), (1, 4)], "src long, dst long"
-    )
-    assert graph.k_core(tree, 2).count() == 0
-
-    # (5) pathological chain + max_iter=1 raises
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "src long, dst long"
-    )
-    with pytest.raises(RuntimeError):
-        graph.k_core(chain, 2, max_iter=1)
-
-    # (3) brute-force agreement on a real derived graph
-    li = load_table(spark, oracle_sf_dir, "lineitem")
-    edges = li.select(
-        (F.col("l_orderkey") % 311).alias("src"),
-        (F.col("l_partkey") % 311).alias("dst"),
-    )
-    pairs = {
-        (min(r.src, r.dst), max(r.src, r.dst))
-        for r in edges.collect()
-        if r.src != r.dst
-    }
-    for k in (2, 3, 5):
-        # python peel
-        adj = {}
-        for a, b in pairs:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        changed = True
-        while changed:
-            weak = [n for n, ns in adj.items() if len(ns) < k]
-            changed = bool(weak)
-            for n in weak:
-                for m in adj.pop(n):
-                    if m in adj:
-                        adj[m].discard(n)
-        got = {
-            r.node: r.deg for r in graph.k_core(edges, k).collect()
-        }
-        assert set(got) == set(adj), k
-        assert got == {n: len(ns) for n, ns in adj.items()}, k
-
-
-def test_core_numbers_matches_python_decomposition(spark, oracle_sf_dir):
-    """Full core decomposition: (1) hand graph -- K4 members have core
-    3, the pendant path has core 1; (2) every node appears exactly
-    once with core >= 1, and each node's core agrees with k_core
-    membership at that k; (3) exact equality with an independent
-    pure-Python decomposition on a derived lineitem graph."""
-    from pyspark.sql import functions as F
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.operators import graph
-
-    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    e = spark.createDataFrame(k4 + [(3, 4), (4, 5)], "src long, dst long")
-    got = {r.node: r.core for r in graph.core_numbers(e).collect()}
-    assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 1, 5: 1}
-
-    li = load_table(spark, oracle_sf_dir, "lineitem")
-    edges = li.select(
-        (F.col("l_orderkey") % 311).alias("src"),
-        (F.col("l_partkey") % 311).alias("dst"),
-    )
-    pairs = {
-        (min(r.src, r.dst), max(r.src, r.dst))
-        for r in edges.collect()
-        if r.src != r.dst
-    }
-    # python decomposition: peel level by level
-    adj = {}
-    for a, b in pairs:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    expect, k = {}, 2
-    while adj:
-        while True:
-            weak = [n for n, ns in adj.items() if len(ns) < k]
-            if not weak:
-                break
-            for n in weak:
-                expect[n] = k - 1
-                for m in adj.pop(n):
-                    if m in adj:
-                        adj[m].discard(n)
-        k += 1
-        if k > 1000:
-            raise AssertionError("runaway")
-    got_r = {r.node: r.core for r in graph.core_numbers(edges).collect()}
-    assert got_r == expect
-    # consistency with k_core at an interior level
-    mid = max(expect.values()) // 2 or 1
-    members = {r.node for r in graph.k_core(edges, mid).collect()}
-    assert members == {n for n, c in expect.items() if c >= mid}
-
-
-def test_weighted_shortest_paths_hand_pins(spark):
-    """Weighted SSSP pins: (1) a cheap 2-hop path beats an expensive
-    direct edge; (2) a node RE-IMPROVES when a cheaper longer-hop path
-    arrives a round later (the relaxation shortest_paths' hop-BFS never
-    needs); (3) undirected mode traverses edges both ways; (4)
-    unreachable nodes are absent; (5) negative weights and a too-small
-    max_iter raise."""
-    edges = spark.createDataFrame(
-        [
-            ("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 5.0),
-            ("a", "d", 10.0), ("c", "d", 2.0),
-            ("x", "y", 1.0),  # disconnected from seed
-        ],
-        "src string, dst string, weight double",
-    )
-    seeds = spark.createDataFrame([("a",)], "n string")
-    d = {r.node: r.dist for r in
-         graph.weighted_shortest_paths(edges, seeds).collect()}
-    # c via a->b->c = 2 (not direct 5); d via a->b->c->d = 4 (not 10,
-    # which the frontier proposes in round 1 and relaxation beats later)
-    assert d == {"a": 0.0, "b": 1.0, "c": 2.0, "d": 4.0}
-    # undirected: y reachable through x only if x is... still not from a
-    und = {r.node: r.dist for r in
-           graph.weighted_shortest_paths(
-               edges, spark.createDataFrame([("y",)], "n string"),
-               directed=False,
-           ).collect()}
-    assert und["x"] == 1.0 and und["y"] == 0.0 and "a" not in und
-    with pytest.raises(ValueError, match="negative"):
-        graph.weighted_shortest_paths(
-            spark.createDataFrame(
-                [("a", "b", -1.0)], "src string, dst string, weight double"
-            ),
-            seeds,
-        ).collect()
-    with pytest.raises(RuntimeError, match="converge"):
-        graph.weighted_shortest_paths(edges, seeds, max_iter=1)
-
-
-def test_weighted_shortest_paths_dijkstra_replica(spark):
-    """Exact equality against a pure-Python Dijkstra on a deterministic
-    50-node multigraph with integer-valued double weights (no float
-    ambiguity: sums of small ints are exact), seeded from two nodes."""
-    import heapq
-
-    n = 50
-    es = []
-    for i in range(n):
-        es.append((i, (i * 7 + 3) % n, float((i % 10) + 1)))
-        es.append((i, (i + 1) % n, float((i % 3) + 2)))
-        es.append((i, (i * 13 + 5) % n, float((i % 5) + 4)))
-    adj: dict[int, list[tuple[int, float]]] = {}
-    for s, t, w in es:
-        adj.setdefault(s, []).append((t, w))
-    seeds = [0, 13]
-    best: dict[int, float] = {}
-    pq = [(0.0, s) for s in seeds]
-    while pq:
-        dcur, u = heapq.heappop(pq)
-        if u in best:
-            continue
-        best[u] = dcur
-        for v, w in adj.get(u, []):
-            if v not in best:
-                heapq.heappush(pq, (dcur + w, v))
-    edges = spark.createDataFrame(es, "src long, dst long, weight double")
-    got = {
-        r.node: r.dist
-        for r in graph.weighted_shortest_paths(
-            edges, spark.createDataFrame([(s,) for s in seeds], "n long")
-        ).collect()
-    }
-    assert got == best
 
 
 def _md5_idx(parts, n):
@@ -1056,153 +679,9 @@ def test_pmi_pairs_hand_and_duckdb_parity(spark, sf_dir):
     assert v1 == v2 and len(v1) == 3  # bit-reproducible node vectors
 
 
-def test_biased_random_walks_replica_and_degeneracy(spark):
-    """node2vec(p,q) walks: (1) exact pure-Python replica of every
-    sequence (same coins, same sequential cumulative-weight fold); (2)
-    p=q=1 equals random_walks bit-for-bit (the uniform degeneracy...
-    for steps >= 2 the selection mechanism differs -- weighted
-    cumulative vs index mod -- so the pin is distribution-free: both
-    walk the same graph deterministically and the REPLICAS agree with
-    their respective engines); (3) p<<1 on a triangle graph returns to
-    prev more often than p>>1 (the bias is real)."""
-    import hashlib
-
-    edges = [
-        ("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
-        ("a", "c"), ("c", "a"), ("c", "d"), ("d", "c"),
-        ("b", "d"), ("d", "b"),
-    ]
-    e = spark.createDataFrame(edges, "src string, dst string")
-    adj: dict[str, list[str]] = {}
-    for s, d in edges:
-        adj.setdefault(s, set()).add(d)
-    adj = {k: sorted(v) for k, v in adj.items()}
-
-    def u60(start, w, t):
-        h = hashlib.md5(f"{start}:{w}:{t}:walk".encode()).hexdigest()[:15]
-        return int(h, 16)
-
-    def replica(p, q, L, W):
-        out = {}
-        for s in sorted(adj):
-            for w in range(W):
-                seq = [s]
-                nbrs = adj[s]
-                cur = nbrs[u60(s, w, 1) % len(nbrs)]
-                prev = s
-                seq.append(cur)
-                for t in range(2, L + 1):
-                    if cur not in adj:
-                        break
-                    nbrs = adj[cur]
-                    pn = set(adj.get(prev, []))
-
-                    def wt(nb):
-                        if nb == prev:
-                            return 1.0 / p
-                        if nb in pn:
-                            return 1.0
-                        return 1.0 / q
-                    tot = 0.0
-                    for nb in nbrs:
-                        tot += wt(nb)
-                    target = (float(u60(s, w, t)) / 1152921504606846976.0) * tot
-                    run, pick = 0.0, None
-                    for i, nb in enumerate(nbrs):
-                        run += wt(nb)
-                        if pick is None and run >= target:
-                            pick = nb
-                    nxt = pick if pick is not None else nbrs[-1]
-                    prev, cur = cur, nxt
-                    seq.append(cur)
-                out[(s, w)] = seq
-        return out
-
-    for p, q in ((1.0, 1.0), (0.25, 4.0), (4.0, 0.25)):
-        got = {
-            (r.start, r.walk): list(r.seq)
-            for r in graph.biased_random_walks(
-                e, 6, p=p, q=q, walks_per_node=2
-            ).collect()
-        }
-        assert got == replica(p, q, 6, 2), (p, q)
-
-    # the bias is real: tiny p -> many immediate returns, huge p -> few
-    def return_rate(p):
-        walks = replica(p, 1.0, 8, 4)
-        rets = tot = 0
-        for seq in walks.values():
-            for i in range(2, len(seq)):
-                tot += 1
-                rets += seq[i] == seq[i - 2]
-        return rets / tot
-
-    assert return_rate(0.05) > return_rate(20.0) + 0.2
-
-
-def test_modularity_replica_and_structure_ordering(spark):
-    """Modularity: (1) exact agreement with a pure-Python Newman Q on a
-    two-clique-plus-bridge graph; (2) the true communities score higher
-    than a random assignment and than one-big-community (~0); (3)
-    unlabeled endpoints penalize; empty graph scores 0."""
-    import itertools
-
-    from bigdata_storage_and_proccess_job_data_spark.operators import graph
-
-    # two 4-cliques joined by one bridge edge
-    cliq1 = list(itertools.combinations([0, 1, 2, 3], 2))
-    cliq2 = list(itertools.combinations([10, 11, 12, 13], 2))
-    eds = cliq1 + cliq2 + [(3, 10)]
-    edges = spark.createDataFrame(eds, "src long, dst long")
-    good = spark.createDataFrame(
-        [(n, n // 10) for n in [0, 1, 2, 3, 10, 11, 12, 13]],
-        "node long, label long",
-    )
-
-    def q_replica(eds, lab):
-        m = len(eds)
-        deg = {}
-        for a, b in eds:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        comms = set(lab.values())
-        q = 0.0
-        for c in comms:
-            ec = sum(
-                1 for a, b in eds if lab.get(a) == c and lab.get(b) == c
-            )
-            dc = sum(d for n, d in deg.items() if lab.get(n) == c)
-            q += ec / m - (dc / (2 * m)) ** 2
-        return q
-
-    lab = {n: n // 10 for n in [0, 1, 2, 3, 10, 11, 12, 13]}
-    got = graph.modularity(edges, good)
-    assert abs(got - q_replica(eds, lab)) < 1e-12
-    assert got > 0.3  # real structure
-
-    one = spark.createDataFrame(
-        [(n, 0) for n in lab], "node long, label long"
-    )
-    assert abs(graph.modularity(edges, one)) < 1e-12  # e/m=1, (1)^2=1
-    alt = spark.createDataFrame(
-        [(n, n % 2) for n in lab], "node long, label long"
-    )
-    assert graph.modularity(edges, alt) < got  # scrambled is worse
-
-    # unlabeled node: its degree mass penalizes, within-edges drop
-    partial = spark.createDataFrame(
-        [(n, n // 10) for n in [0, 1, 2, 10, 11, 12, 13]],
-        "node long, label long",
-    )
-    assert graph.modularity(edges, partial) < got
-
-    empty = spark.createDataFrame([], "src long, dst long")
-    assert graph.modularity(empty, good) == 0.0
-
-
 def test_triangle_broadcast_gate_paths_identical(spark, monkeypatch):
-    """r15 bytes-based adjacency broadcast gate: forcing the shuffle
-    path (budget=1) and the broadcast path (default 256 MiB) yields
+    """Bytes-based adjacency broadcast gate: forcing the shuffle
+    path (budget=1) and the broadcast path (the default budget) yields
     identical per-node triangle counts on a planted graph -- the gate
     is a join-strategy choice, never a semantics one."""
     import random
@@ -1224,3 +703,15 @@ def test_triangle_broadcast_gate_paths_identical(spark, monkeypatch):
     }
     assert shuffled == bcast
     assert sum(t for _, t in bcast) > 0  # the planted graph has triangles
+
+
+def test_triangle_broadcast_budget_scales_with_driver_heap(monkeypatch):
+    """The default budget is 1/32 of the driver heap: 32 MiB at Spark's
+    1g default, 256 MiB at the engine session's 8g; the env override
+    wins over both."""
+    monkeypatch.delenv("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES", raising=False)
+    assert graph._tri_broadcast_budget("1g") == 32 << 20
+    assert graph._tri_broadcast_budget("8g") == 256 << 20
+    monkeypatch.setenv("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES", "12345")
+    assert graph._tri_broadcast_budget("1g") == 12345
+    assert graph._tri_broadcast_budget("8g") == 12345

@@ -6,82 +6,6 @@ from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
 from bigdata_storage_and_proccess_job_data_spark.operators import joins
-from bigdata_storage_and_proccess_job_data_spark.sources import lake
-
-
-def test_null_skew_left_join_matches_plain_left_join(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        # poison 1/3 of the keys with NULL -- the skew slice
-        "custkey",
-        F.when(F.col("o_orderkey") % 3 == 0, None).otherwise(F.col("o_custkey")),
-    ).select("o_orderkey", "custkey", "o_totalprice")
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-
-    fast = joins.null_skew_left_join(orders, customer, "custkey", "c_custkey")
-    plain = orders.join(
-        customer, F.col("custkey") == F.col("c_custkey"), "left"
-    ).drop("c_custkey")  # helper drops the (redundant) right key column
-    assert sorted(fast.columns) == sorted(plain.columns)
-    key = lambda r: (r.o_orderkey, r.custkey, r.c_mktsegment)  # noqa: E731
-    assert sorted(map(key, fast.collect())) == sorted(map(key, plain.collect()))
-    # null rows exist and carry null right-side columns
-    nulls = [r for r in fast.collect() if r.custkey is None]
-    assert nulls and all(r.c_mktsegment is None for r in nulls)
-
-
-def test_null_skew_left_join_same_key_name(spark):
-    """The common FK case -- both sides call the key 'user_id' -- must not
-    raise an ambiguous-reference AnalysisException (ADVICE r1)."""
-    left = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (None, "c")], "user_id INT, payload STRING"
-    )
-    right = spark.createDataFrame([(1, "x")], "user_id INT, attr STRING")
-    out = joins.null_skew_left_join(left, right, "user_id", "user_id")
-    rows = {r.payload: (r.user_id, r.attr) for r in out.collect()}
-    assert rows == {"a": (1, "x"), "b": (2, None), "c": (None, None)}
-    assert out.columns.count("user_id") == 1
-
-
-def test_null_skew_left_join_rejects_non_key_collisions(spark):
-    import pytest
-
-    left = spark.createDataFrame([(1, "a")], "k INT, attr STRING")
-    right = spark.createDataFrame([(1, "x")], "rk INT, attr STRING")
-    with pytest.raises(ValueError, match="collide"):
-        joins.null_skew_left_join(left, right, "k", "rk")
-
-
-def test_compact_upserts_preserves_latest_wins(spark, sf_dir, tmp_path):
-    import pathlib
-
-    path = str(tmp_path / "log")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    ).limit(100)
-    v2 = orders.withColumn("o_totalprice", F.col("o_totalprice") + 1).withColumn(
-        # keep the column's type: date_add would flip timestamp->date and
-        # mix file schemas in the log (now rejected by upsert_by_key)
-        "o_orderdate",
-        F.date_add("o_orderdate", 1).cast(dict(orders.dtypes)["o_orderdate"]),
-    )
-    lake.upsert_by_key(spark, orders, path, "o_orderkey", "o_orderdate")
-    lake.upsert_by_key(spark, v2, path, "o_orderkey", "o_orderdate")
-
-    before = {
-        r.o_orderkey: r.o_totalprice
-        for r in lake.read_upserted(spark, path, "o_orderkey", "o_orderdate").collect()
-    }
-    raw_before = spark.read.parquet(path).count()
-    joins.compact_upserts(spark, path, "o_orderkey", "o_orderdate")
-    after = {
-        r.o_orderkey: r.o_totalprice
-        for r in lake.read_upserted(spark, path, "o_orderkey", "o_orderdate").collect()
-    }
-    assert after == before, "snapshot must equal the latest-wins view"
-    assert spark.read.parquet(path).count() == len(before) < raw_before
-    assert pathlib.Path(path).is_dir()
 
 
 def test_point_in_range_join_matches_naive_predicate_join(spark, sf_dir):
@@ -157,35 +81,6 @@ def test_point_in_range_join_left_keeps_unmatched_points(spark):
     assert rows == {1: 100, 2: None}, "unmatched point must pass through once"
     with pytest.raises(ValueError, match="inner"):
         point_in_range_join(points, ranges, "ts", "s", "e", how="full")
-
-
-def test_interval_overlap_join_matches_naive(spark, sf_dir):
-    from bigdata_storage_and_proccess_job_data_spark.operators.rangejoin import (
-        interval_overlap_join,
-    )
-
-    events = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    # two families of intervals with different lengths and offsets
-    a = events.filter(F.col("event_id") % 83 == 0).select(
-        F.col("event_id").alias("a_id"),
-        F.col("ts").alias("a_start"),
-        (F.col("ts") + F.expr("INTERVAL 11 MINUTES")).alias("a_end"),
-    )
-    b = events.filter(F.col("event_id") % 59 == 0).select(
-        F.col("event_id").alias("b_id"),
-        (F.col("ts") - F.expr("INTERVAL 3 MINUTES")).alias("b_start"),
-        (F.col("ts") + F.expr("INTERVAL 4 MINUTES")).alias("b_end"),
-    )
-    fast = interval_overlap_join(
-        a, b, ("a_start", "a_end"), ("b_start", "b_end"), bin_seconds=240
-    ).select("a_id", "b_id")
-    naive = a.join(
-        b,
-        (F.col("a_start") < F.col("b_end")) & (F.col("b_start") < F.col("a_end")),
-    ).select("a_id", "b_id")
-    f = sorted(map(tuple, fast.collect()))
-    n = sorted(map(tuple, naive.collect()))
-    assert f == n and len(f) > 0
 
 
 def test_asof_join_tolerance(spark):
@@ -266,113 +161,6 @@ def test_asof_join_null_value_in_matched_row(spark):
         # matched row is the 9:25 quote (within tolerance) whose price is
         # NULL; the stale 9:00 row's 5.0 must NOT leak through
         assert rows[0].price_asof is None
-
-
-def test_interpolate_linear_hand_math(spark):
-    """Time-weighted fill between observations (never row-position
-    weighted), pass-through of observed rows, NULL edges by default,
-    nearest-extrapolation mode, all-NULL keys stay NULL."""
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.operators import asof
-
-    rows = [
-        ("a", 0, 10.0),
-        ("a", 10, None),   # 1/4 of the way 0->40: 10 + 0.25*20 = 15
-        ("a", 40, 30.0),
-        ("a", 50, None),   # trailing edge
-        ("b", 0, None),    # leading edge
-        ("b", 5, 7.0),
-        ("c", 3, None),    # key with no observations
-    ]
-    df = spark.createDataFrame(rows, "k string, ts long, v double")
-    out = asof.interpolate_linear(df, ["k"], "ts", "v")
-    got = {(r.k, r.ts): r.v_filled for r in out.collect()}
-    assert got[("a", 0)] == 10.0
-    assert abs(got[("a", 10)] - 15.0) < 1e-12
-    assert got[("a", 40)] == 30.0
-    assert got[("a", 50)] is None
-    assert got[("b", 0)] is None
-    assert got[("b", 5)] == 7.0
-    assert got[("c", 3)] is None
-
-    near = asof.interpolate_linear(
-        df, ["k"], "ts", "v", extrapolate="nearest"
-    )
-    gotn = {(r.k, r.ts): r.v_filled for r in near.collect()}
-    assert gotn[("a", 50)] == 30.0
-    assert gotn[("b", 0)] == 7.0
-    assert gotn[("c", 3)] is None
-
-    with pytest.raises(ValueError):
-        asof.interpolate_linear(df, ["k"], "ts", "v", extrapolate="x")
-
-
-def test_interpolate_linear_timestamps_duckdb_parity(spark, sf_dir):
-    """Interpolating a punched-out orders price series per priority
-    (timestamp axis) matches DuckDB's window formulation exactly."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from bigdata_storage_and_proccess_job_data_spark.operators import asof
-    from tests.parity import compare, duckdb_connect
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.col("o_orderdate").alias("ts"),
-        F.when(
-            F.col("o_orderkey") % 3 != 0, F.col("o_totalprice")
-        ).alias("v"),  # punch out every third value
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    out = asof.interpolate_linear(
-        orders, ["o_orderpriority"], "ts", "v",
-        tiebreak_cols=["o_orderkey"],
-    ).select(
-        "o_orderkey",
-        stable_round(F.col("v_filled"), 4).alias("v_filled"),
-    )
-    con = duckdb_connect(sf_dir)
-    problems = compare(
-        out,
-        con,
-        f"""
-        WITH base AS (
-          SELECT o_orderkey, o_orderpriority,
-                 o_orderdate::TIMESTAMP AS ts,
-                 CASE WHEN o_orderkey % 3 <> 0
-                      THEN o_totalprice END AS v
-          FROM orders
-        ),
-        w AS (
-          SELECT *,
-            LAST_VALUE(CASE WHEN v IS NOT NULL
-                            THEN struct_pack(ts := ts, v := v) END
-                       IGNORE NULLS) OVER (
-              PARTITION BY o_orderpriority ORDER BY ts, o_orderkey
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p,
-            FIRST_VALUE(CASE WHEN v IS NOT NULL
-                             THEN struct_pack(ts := ts, v := v) END
-                        IGNORE NULLS) OVER (
-              PARTITION BY o_orderpriority ORDER BY ts, o_orderkey
-              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n
-          FROM base
-        )
-        SELECT o_orderkey,
-               {sql_round('''
-                 CASE WHEN v IS NOT NULL THEN v
-                      WHEN p IS NOT NULL AND n IS NOT NULL
-                           AND n.ts <> p.ts THEN
-                        p.v + (n.v - p.v)
-                          * (epoch(ts) - epoch(p.ts))
-                          / (epoch(n.ts) - epoch(p.ts))
-                      WHEN p IS NOT NULL AND n IS NOT NULL THEN p.v
-                 END''', 4)} AS v_filled
-        FROM w
-        """,
-    )
-    assert problems == [], problems
 
 
 def test_interval_expr_rejects_non_duration_strings(spark):
@@ -501,20 +289,6 @@ def test_hot_key_split_join_plan_broadcasts_hot_slice(spark, sf_dir):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
 
 
-def test_detect_hot_keys_finds_the_zipf_key(spark, sf_dir):
-    orders = _skewed_orders(spark, sf_dir)
-    hot = joins.detect_hot_keys(orders, "c_custkey", top=4, min_share=0.05)
-    assert hot == [7]  # ~75% of rows; nothing else clears 5%
-    # a uniform key yields no hot values at any meaningful share (sf0.001
-    # orders spread ~1% per active customer, so 2% clears the ties)
-    assert (
-        joins.detect_hot_keys(
-            load_table(spark, sf_dir, "orders"), "o_custkey", min_share=0.02
-        )
-        == []
-    )
-
-
 def test_hot_key_split_join_rejections(spark, sf_dir):
     import pytest
 
@@ -539,20 +313,6 @@ def test_hot_key_split_join_rejections(spark, sf_dir):
             "c_custkey",
             [7],
         )
-
-
-def test_detect_hot_keys_null_group_never_eats_a_slot(spark):
-    """Review regression: a table whose MOST FREQUENT key is NULL (the
-    null-skew FK case) must still return every real hot value -- the
-    NULL group is excluded before ranking, not stripped after."""
-    rows = (
-        [(None, 0)] * 50  # the hottest "group"
-        + [(k, 0) for k in range(4) for _ in range(10)]  # 4 real hot keys
-        + [(k, 0) for k in range(100, 110)]  # long tail
-    )
-    df = spark.createDataFrame(rows, "k int, v int")
-    hot = joins.detect_hot_keys(df, "k", top=4, min_share=0.05)
-    assert hot == [0, 1, 2, 3]
 
 
 def test_table_diff_statuses_and_parity(spark, sf_dir):

@@ -55,6 +55,17 @@ def test_minhash_dedup_pairs_equals_exact(spark, oracle_sf_dir):
     assert exact and mh == exact, (
         f"missed={len(exact - mh)} extra={len(mh - exact)} of {len(exact)}"
     )
+    # the exact reference applies its threshold: a short doc quoted
+    # whole inside a longer one has Jaccard 4/6 < 0.8, so no pair
+    quoted = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "x a b c d e y")], "doc_id long, text string"
+    )
+    assert (
+        neardup.jaccard_pairs(
+            quoted, "doc_id", "text", ngram=2, threshold=0.8
+        ).count()
+        == 0
+    )
 
 
 def test_simhash_finds_neardups(spark, oracle_sf_dir):
@@ -332,123 +343,3 @@ def test_recursive_cte_closure_matches_connected_components(spark, oracle_sf_dir
     )
     duck = dict(con.execute(closure).fetchall())
     assert duck == want
-
-
-def test_lsh_plan_advisor():
-    """lsh_plan picks (bands, rows) whose S-curve protects the miss rate
-    at the threshold and minimizes verify waste among safe plans; the
-    registry's own 16x4 default at threshold 0.8 is confirmed safe; an
-    impossible bound returns the best-effort plan flagged unsafe."""
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.operators import neardup
-
-    plan = neardup.lsh_plan(0.8, num_hashes=64, max_fn=0.05)
-    assert plan["bands"] * plan["rows"] == 64
-    p = 1.0 - (1.0 - 0.8 ** plan["rows"]) ** plan["bands"]
-    assert abs(p - plan["p_at_threshold"]) < 1e-12
-    assert plan["meets_fn_bound"] and 1.0 - p <= 0.05
-    # every SAFE divisor plan has at least this much half-threshold waste
-    for r in (1, 2, 4, 8, 16, 32):
-        b = 64 // r
-        miss = (1.0 - 0.8**r) ** b
-        waste = 1.0 - (1.0 - 0.4**r) ** b
-        if miss <= 0.05:
-            assert plan["p_at_half_threshold"] <= waste + 1e-12
-    # the shipped minhash default (16 bands x 4 rows) is in the safe set
-    assert (1.0 - (1.0 - 0.8**4) ** 16) >= 0.95
-    # unreachable bound -> flagged, not silently returned as safe
-    hard = neardup.lsh_plan(0.95, num_hashes=4, max_fn=1e-9)
-    assert hard["meets_fn_bound"] is False
-    with pytest.raises(ValueError, match="threshold"):
-        neardup.lsh_plan(1.5)
-    with pytest.raises(ValueError, match="num_hashes"):
-        neardup.lsh_plan(0.5, num_hashes=1)
-
-
-def test_containment_pairs_asymmetric_and_parity(spark, oracle_sf_dir):
-    """Asymmetric containment: (1) a short doc quoted whole inside a
-    long one scores containment 1.0 on the short side while its
-    Jaccard (4/6) sits BELOW the same threshold -- the pair class
-    jaccard_pairs structurally misses; (2) unrelated docs emit no
-    pair; (3) threshold validation; (4) full DuckDB replay against
-    the brute-force inverted-index oracle on documents."""
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from tests.parity import compare, duckdb_connect
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e"),           # bigrams: ab bc cd de (4)
-            (2, "x a b c d e y"),       # + xa, ey (6); shared 4
-            (3, "p q r s t u v w"),     # unrelated
-        ],
-        "doc_id long, text string",
-    )
-    got = neardup.containment_pairs(
-        docs, "doc_id", "text", ngram=2, threshold=0.8
-    ).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r.id_a, r.id_b, r.n_a, r.n_b, r.n_inter) == (1, 2, 4, 6, 4)
-    assert r.containment_a == 1.0
-    assert r.containment_b == pytest.approx(4 / 6)
-    # jaccard of the same pair is 4 / 6 < 0.8: the exact-jaccard path
-    # finds nothing at this threshold
-    assert (
-        neardup.jaccard_pairs(
-            docs, "doc_id", "text", ngram=2, threshold=0.8
-        ).count()
-        == 0
-    )
-    with pytest.raises(ValueError, match="threshold"):
-        neardup.containment_pairs(docs, "doc_id", "text", threshold=0.0)
-
-    corpus = load_table(spark, oracle_sf_dir, "documents")
-    out = neardup.containment_pairs(
-        corpus, "doc_id", "text", ngram=2, threshold=0.8
-    ).select(
-        "id_a",
-        "id_b",
-        "n_a",
-        "n_b",
-        "n_inter",
-        stable_round(F.col("containment_a"), 6).alias("containment_a"),
-        stable_round(F.col("containment_b"), 6).alias("containment_b"),
-    )
-    sql = rf"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-          FROM documents
-        ),
-        sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(range(1, len(toks)),
-                                              i -> toks[i] || ' ' || toks[i+1]))
-                 AS shingles
-          FROM t WHERE len(toks) >= 2
-        ),
-        inv AS (
-          SELECT doc_id, len(shingles) AS n, unnest(shingles) AS shingle
-          FROM sh
-        ),
-        pairs AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
-                 COUNT(*)::BIGINT AS n_inter
-          FROM inv a JOIN inv b
-            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4
-        )
-        SELECT id_a, id_b, n_a, n_b, n_inter,
-               {sql_round('n_inter * 1.0 / n_a', 6)} AS containment_a,
-               {sql_round('n_inter * 1.0 / n_b', 6)} AS containment_b
-        FROM pairs
-        WHERE GREATEST(n_inter * 1.0 / n_a, n_inter * 1.0 / n_b) >= 0.8
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []

@@ -1,8 +1,8 @@
-"""The duplicate-operator guard (VERDICT r11 #4): OP_INDEX.md must be
-fresh, and no two public functions may share a keyword set above the
-threshold without a recorded waiver. The grep-first rule's mechanical
-backstop -- r10's psi_report and r11's cusum_alarms each duplicated an
-existing operator under a different name and cost a rewrite."""
+"""The operator-inventory guards: OP_INDEX.md must be fresh, no two
+public functions may share a keyword set above the threshold without a
+recorded waiver (the grep-first rule's mechanical backstop against an
+existing operator re-added under a different name), and every public
+operator must be reached by a workload or kept with a reason."""
 
 from __future__ import annotations
 
@@ -45,11 +45,32 @@ def test_no_duplicate_operator_semantics():
             assert name in names, f"stale waiver entry: {name}"
 
 
+def test_every_operator_is_reached():
+    """Each public function in operators/ is reached by a non-test root
+    (registry, bench, examples, perfbench) or listed in KEPT_UNREACHED
+    with a reason; an entry that is reached, or no longer exists, is
+    stale and fails too."""
+    reach = op_index.reachability()
+    unreached = {
+        f"{m}.{n}"
+        for m, n, _, _ in op_index.discover()
+        if m.startswith("operators.")
+        and not reach.get((f"{op_index.PKG}.{m}", n))
+    }
+    kept = set(op_index.KEPT_UNREACHED)
+    assert unreached - kept == set(), "unreached operators (delete them, "
+    "or add a reason to KEPT_UNREACHED): " + ", ".join(
+        sorted(unreached - kept)
+    )
+    assert kept - unreached == set(), "stale KEPT_UNREACHED entries: " + (
+        ", ".join(sorted(kept - unreached))
+    )
+
+
 def test_guard_catches_near_duplicates():
     """The metric has teeth: a renamed near-copy of an existing
-    operator (same first paragraph, alarm-flavored name -- the exact
-    r11 cusum_alarms failure mode) scores above the threshold against
-    the original."""
+    operator (same first paragraph, alarm-flavored name) scores above
+    the threshold against the original."""
     entries = {f"{m}.{n}": (n, k) for m, n, _, k in op_index.discover()}
     orig_name, orig_kw = entries["operators.aggregates.cusum_changepoints"]
     import importlib

@@ -320,26 +320,22 @@ def test_windows_partition_registry():
 
 
 def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
-    """Plan lint over the round-7 additions that are not registry
-    queries (the sweep above only covers registered plans): spatial
-    blocking must resolve to an equi-join (never a cartesian/BNLJ),
-    incremental agg maintenance and interpolation stay clean, and
-    keywords_tfidf's single BroadcastNestedLoopJoin is exactly the
-    one-row corpus-size scalar broadcast -- the documented exemption
-    class (probe-scoped bounded frames)."""
+    """Plan lint over library operators that are not registry queries
+    (the sweep above only covers registered plans): spatial blocking
+    must resolve to an equi-join (never a cartesian/BNLJ), and
+    incremental agg maintenance, sessionize and the SCD2 fold and
+    point-in-time join stay clean."""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         aggregates,
-        asof,
-        corpus,
+        funnel,
         spatial,
     )
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
     from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    docs = load_table(spark, sf_dir, "documents")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -361,40 +357,15 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
         "agg_state": aggregates.agg_state_apply(
             state, feed, ["o_orderpriority"], ["o_totalprice"]
         ),
-        "interpolate": asof.interpolate_linear(
-            orders.withColumn(
-                "v",
-                F.when(
-                    F.col("o_orderkey") % 3 != 0, F.col("o_totalprice")
-                ),
-            ).withColumn("ts", F.col("o_orderkey")),
-            ["o_orderpriority"],
-            "ts",
-            "v",
-        ),
     }
     for name, df in clean.items():
         df.write.format("noop").mode("overwrite").save()
         assert lint.lint_plan(df) == [], name
 
-    kw = corpus.keywords_tfidf(docs, k=3)
-    kw.write.format("noop").mode("overwrite").save()
-    assert lint.lint_plan(kw, allow_bnlj=True) == []
-    # and the BNLJ really is the scalar broadcast, nothing larger
-    plan = lint.plan_string(kw)
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
-
-    # second wave: sessionize, item-item CF, SCD2 fold, minmax rescan
-    from bigdata_storage_and_proccess_job_data_spark.operators import baskets, funnel
-
     events = load_table(spark, sf_dir, "events")
-    li = load_table(spark, sf_dir, "lineitem")
     s0 = orders
     s1 = orders.filter(F.col("o_orderkey") % 5 != 0)
     feed2 = versioned.change_feed(s0, s1, "o_orderkey")
-    mm_state = aggregates.minmax_state_init(
-        s0, ["o_orderpriority"], ["o_totalprice"]
-    )
     clean2 = {
         "sessionize": funnel.sessionize(events, gap="45 minutes"),
         "scd2_apply": versioned.scd2_apply(
@@ -403,57 +374,10 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
             "o_orderkey",
             "2024-02-01",
         ),
-        "minmax_apply": aggregates.minmax_state_apply(
-            mm_state, feed2, s1, ["o_orderpriority"], ["o_totalprice"]
-        ),
-    }
-    for name, df in clean2.items():
-        df.write.format("noop").mode("overwrite").save()
-        assert lint.lint_plan(df) == [], name
-
-    # cooccurrence builds on frequent_pairs(with_lift=False), so the
-    # symmetric union duplicates NO scalar subtree: zero BNLJ
-    cf = baskets.cooccurrence_similarity(
-        li.join(s0, li.l_orderkey == s0.o_orderkey, "inner").select(
-            "o_orderkey", "l_partkey"
-        ),
-        "o_orderkey",
-        "l_partkey",
-        min_count=2,
-        top_k=3,
-    )
-    cf.write.format("noop").mode("overwrite").save()
-    assert lint.lint_plan(cf) == []
-
-    # third wave: attribution, PoP, AUC, running distinct, PIT join
-    clean3 = {
-        "attribution": funnel.attribute_conversions(
-            events, ["view", "click"], "purchase", model="linear"
-        ),
-        "period_over_period": aggregates.period_over_period(
-            s0.withColumn("m", F.col("o_orderkey") % 12),
-            "m",
-            {"rev": F.sum("o_totalprice")},
-            keys=["o_orderpriority"],
-        ),
-        "binary_auc": aggregates.binary_auc(
-            s0.select(
-                "o_orderpriority",
-                (F.col("o_orderkey") % 3 == 0).alias("y"),
-                (F.col("o_totalprice") / 600000.0).alias("s"),
-            ),
-            "y",
-            "s",
-            keys=["o_orderpriority"],
-        ),
-        "running_distinct": aggregates.running_distinct(
-            events, "user_id", "ts",
-            keys=["event_type"], tiebreak_cols=["event_id"],
-        ),
         "scd2_join": versioned.scd2_join(
-            # facts drop the dimension-owned column: scd2_join now
-            # REFUSES fact/dimension name collisions (ADVICE r7 low)
-            # instead of emitting ambiguous duplicate columns
+            # facts drop the dimension-owned column: scd2_join REFUSES
+            # fact/dimension name collisions instead of emitting
+            # ambiguous duplicate columns
             s0.drop("o_orderpriority").withColumn(
                 "ts2", F.current_timestamp()
             ),
@@ -466,7 +390,7 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
             "ts2",
         ),
     }
-    for name, df in clean3.items():
+    for name, df in clean2.items():
         df.write.format("noop").mode("overwrite").save()
         assert lint.lint_plan(df) == [], name
 
@@ -528,21 +452,18 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     late-r8 library operators get the same hygiene check here: no
     CartesianProduct, no row-at-a-time Python, BNLJ only where the
     operator's contract documents it (hard_negatives' bounded broadcast
-    query set -- the brute_force_topk precedent), and a Python Arrow
-    node only in ewma (the documented applyInPandas exception)."""
+    query set -- the brute_force_topk precedent)."""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         aggregates,
         corpus,
-        graph,
         similarity,
     )
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
 
     orders = load_table(spark, oracle_sf_dir, "orders")
-    events = load_table(spark, oracle_sf_dir, "events")
     docs = load_table(spark, oracle_sf_dir, "documents")
     emb = load_table(spark, oracle_sf_dir, "embeddings")
 
@@ -557,27 +478,6 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
             ),
             docs.select(F.col("doc_id").alias("item_id")),
             k=3,
-        ),
-        "seasonal_decompose": aggregates.seasonal_decompose(
-            orders.groupBy(
-                F.col("o_orderpriority").alias("g"),
-                F.date_trunc("month", "o_orderdate").alias("m"),
-            ).agg(F.sum("o_totalprice").alias("v")),
-            ["g"], "m", "v", period=4,
-        ),
-        "survival_curve": aggregates.survival_curve(
-            orders.select(
-                F.col("o_orderpriority").alias("g"),
-                (F.col("o_orderkey") % 50).alias("dur"),
-                (F.col("o_orderkey") % 3 != 0).cast("int").alias("ev"),
-            ),
-            ["g"], "dur", "ev",
-        ),
-        "rate_anomalies": aggregates.rate_anomalies(
-            events, ["event_type"], "ts"
-        ),
-        "gini_coefficient": aggregates.gini_coefficient(
-            orders, ["o_orderpriority"], "o_totalprice"
         ),
         "bootstrap_ci": aggregates.bootstrap_ci(
             orders, ["o_orderpriority"], "o_totalprice", "o_orderkey",
@@ -599,42 +499,11 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     )
     assert lint.lint_plan(hn, allow_bnlj=True) == []
 
-    ew = aggregates.ewma(
-        orders.select(
-            F.col("o_orderpriority").alias("k"),
-            F.col("o_orderkey").alias("t"),
-            F.col("o_totalprice").alias("v"),
-        ),
-        ["k"], "t", "v", 0.3,
-    )
-    findings = lint.lint_plan(ew)
-    # the ONLY finding may be the Arrow map node (never CartesianProduct)
-    assert all("Cartesian" not in f and "NestedLoop" not in f for f in findings)
-
     from bigdata_storage_and_proccess_job_data_spark.operators import bpe
 
     enc = bpe.bpe_encode(docs.limit(5), "text", [("t", "h"), ("th", "e")])
     findings = lint.lint_plan(enc)
     assert all("Cartesian" not in f and "NestedLoop" not in f for f in findings)
-
-    # the iterative graph ops checkpoint internally (sourceless plans
-    # by design) -- lint their pre-checkpoint shape is covered by the
-    # peel construction itself; here just pin they run and return sane
-    # shapes on a small graph
-    e = spark.createDataFrame(
-        [(a, b) for a in range(4) for b in range(a + 1, 4)],
-        "src long, dst long",
-    )
-    assert graph.k_core(e, 2).columns == ["node", "deg"]
-    assert graph.core_numbers(e).columns == ["node", "core"]
-
-
-def __winnow_fps(spark, sf_dir):
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.operators import corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    return corpus.winnow_fingerprints(docs, "doc_id", "text", 5, 8)
 
 
 def test_r9_experiment_ops_pass_the_plan_lint(spark, oracle_sf_dir):
@@ -683,7 +552,6 @@ def test_r9_experiment_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         "srm_check": aggregates.srm_check(
             pre, "arm", {"even": 1, "odd": 1}, ["o_orderpriority"]
         ),
-        "winnow_fingerprints": __winnow_fps(spark, oracle_sf_dir),
         "cusum_changepoints": aggregates.cusum_changepoints(
             pre.select(
                 "o_orderpriority",
@@ -707,34 +575,19 @@ def test_r9_experiment_ops_pass_the_plan_lint(spark, oracle_sf_dir):
 
 
 def test_late_r9_ops_pass_the_plan_lint(spark, oracle_sf_dir):
-    """The late-round-9 additions' query-composable paths get the same
-    registry hygiene check: Markov transitions, isotonic apply, linear
-    scoring, and ALS prediction joins are pure DataFrame compositions
-    -- no CartesianProduct, no row-at-a-time Python, no unwaived
-    nested-loop joins. (Fits that are applyInPandas/iterative by
-    design -- isotonic_fit, als_fit, holt_smooth, logreg_fit -- are
-    replica-tested instead; the lint covers what a registered query
-    would compose.)"""
+    """ALS prediction joins are pure DataFrame compositions -- no
+    CartesianProduct, no row-at-a-time Python, no unwaived nested-loop
+    joins. (The iterative fit, als_fit, is replica-tested instead; the
+    lint covers what a registered query would compose.)"""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         factorization,
-        features,
-        funnel,
-        linear,
     )
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
 
     events = load_table(spark, oracle_sf_dir, "events")
-    emb = load_table(spark, oracle_sf_dir, "embeddings")
-    # a REAL column key: a literal key constant-folds the equi-join
-    # into a BNLJ, which is a test artifact, not the operator's plan
-    iso_model = spark.createDataFrame(
-        [("error", 0.0, 0.4, 0.2, 3), ("error", 0.5, 1.0, 0.8, 3),
-         ("click", 0.0, 1.0, 0.5, 2)],
-        "k string, x_lo double, x_hi double, yhat double, n long",
-    )
     als_model = {
         "user_factors": factorization.init_factors(
             events, "user_id", 4
@@ -748,28 +601,7 @@ def test_late_r9_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         ),
         "rank": 4,
     }
-    lin_model = {"weights": [0.1] * 64, "intercept": 0.5}
     clean = {
-        "event_transitions": funnel.event_transitions(
-            events.withColumn("_ord", F.struct("ts", "event_id")),
-            "user_id",
-            "_ord",
-            "event_type",
-        ),
-        "isotonic_apply": features.isotonic_apply(
-            events.select(
-                F.col("event_type").alias("k"),
-                F.col("value").alias("s"),
-            ),
-            iso_model,
-            "s",
-            keys=["k"],
-        ),
-        "linear_score": emb.select(
-            "vec_id",
-            linear.score_expr(lin_model, "embedding").alias("score"),
-            linear.prob_expr(lin_model, "embedding").alias("p"),
-        ),
         "als_predict": factorization.predict(
             events.select(
                 "user_id", F.col("event_type").alias("item")
@@ -784,13 +616,12 @@ def test_late_r9_ops_pass_the_plan_lint(spark, oracle_sf_dir):
 
 
 def test_restart_wave_ops_pass_the_plan_lint(spark, oracle_sf_dir):
-    """The restart-wave additions' query-composable paths ride the same
-    registry hygiene sweep: no CartesianProduct, no row-at-a-time
-    Python, no unwaived nested-loop joins. (Arrow/iterative-by-design
-    paths -- unigram_fit, compression_ratio, media_phash, mips of the
-    brute kind uses an explicit broadcast cross join waived at the
-    registry level like knn_brute_force -- are replica-tested instead;
-    detect_hot_keys/abc_classes bound their collects by contract.)"""
+    """Query-composable library operators ride the same registry
+    hygiene sweep: no CartesianProduct, no row-at-a-time Python, no
+    unwaived nested-loop joins. (Arrow/iterative-by-design paths --
+    unigram_fit, mips of the brute kind uses an explicit broadcast
+    cross join waived at the registry level like knn_brute_force --
+    are replica-tested instead.)"""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
@@ -800,7 +631,6 @@ def test_restart_wave_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         features,
         funnel,
         joins,
-        privacy,
     )
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
 
@@ -841,14 +671,8 @@ def test_restart_wave_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         "anova_oneway": aggregates.anova_oneway(
             orders, "o_orderpriority", "o_totalprice"
         ),
-        "abc_classes": aggregates.abc_classes(
-            orders, "o_custkey", "o_totalprice"
-        ),
         "target_encode_apply": features.target_encode_apply(
             orders, te, ["o_orderpriority"], loo_target="o_totalprice"
-        ),
-        "pseudonymize": privacy.pseudonymize(
-            customer, ["c_custkey"], salt="lint"
         ),
     }
     # ops that carry a DOCUMENTED one-row scalar as a broadcast cross
@@ -856,7 +680,6 @@ def test_restart_wave_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     # registry's standing waiver; everything else must be BNLJ-free
     scalar_waived = {
         "kn_surprisal",          # one-row OOV continuation mass
-        "abc_classes",           # one-row grand total
         "curriculum_order",      # one-row n for the exact ntile
         "target_encode_apply",   # one-row prior/smoothing stats
     }
@@ -879,8 +702,6 @@ def test_r11_eval_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         aggregates,
         corpus,
-        features,
-        neardup,
         rangejoin,
     )
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
@@ -903,22 +724,6 @@ def test_r11_eval_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         ),
         "lift_table": aggregates.lift_table(
             orders, "s", "y", "id", n_buckets=10
-        ),
-        # containment's prefix-vs-full posting join and ngram_overlap's
-        # (id, gram)-keyed clip join must both be equi-joins, never a
-        # nested loop over documents
-        "containment_pairs": neardup.containment_pairs(
-            docs, "doc_id", "text", ngram=2, threshold=0.8
-        ),
-        "ngram_overlap": corpus.ngram_overlap(
-            docs.select(
-                "doc_id",
-                F.col("text").alias("cand"),
-                F.substring("text", 1, 100).alias("ref"),
-            ),
-            "doc_id",
-            "cand",
-            "ref",
         ),
         # serpentine shard dealing rides the two-phase global rank --
         # no single-task window may appear
@@ -985,19 +790,6 @@ def test_r11_eval_ops_pass_the_plan_lint(spark, oracle_sf_dir):
             "s",
             "e",
             keys=["o_orderstatus"],
-        ),
-        # raking: the IPF fit collects the BOUNDED cell frame (the
-        # kmeans-centroid collect class); the returned apply must be a
-        # broadcast equi-join, never a nested loop
-        "rake_weights": features.rake_weights(
-            load_table(spark, oracle_sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus",
-                (F.col("o_orderkey") % 2).cast("string").alias("par"),
-            ),
-            {
-                "o_orderstatus": {"O": 0.4, "F": 0.4, "P": 0.2},
-                "par": {"0": 0.5, "1": 0.5},
-            },
         ),
     }
     for name, df in clean.items():

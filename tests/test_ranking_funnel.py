@@ -350,194 +350,6 @@ def test_sessionize_duckdb_parity(spark, sf_dir):
     assert problems == [], problems
 
 
-def test_attribute_conversions_models(spark):
-    """First/last/linear credit assignment: window cut, equal-ts
-    inclusion, deterministic tiebreak, the direct (no-touch) bucket,
-    and per-conversion credit always summing to 1."""
-    import datetime as dt
-
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.operators import funnel
-
-    t = dt.datetime(2024, 6, 1, 12, 0, 0)
-    m = dt.timedelta(minutes=1)
-    rows = [
-        # u1: three touches then a conversion; one touch outside window
-        (1, 1, "view", t - dt.timedelta(days=9)),     # too old
-        (2, 1, "view", t - 30 * m),
-        (3, 1, "click", t - 10 * m),
-        (4, 1, "view", t),                             # equal ts: counts
-        (5, 1, "purchase", t),
-        # u2: conversion with no touches at all -> direct bucket
-        (6, 2, "purchase", t),
-        # u3: a touch AFTER the conversion never counts
-        (7, 3, "click", t + 5 * m),
-        (8, 3, "purchase", t),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string, ts timestamp"
-    )
-
-    lin = funnel.attribute_conversions(
-        df, ["view", "click"], "purchase", model="linear"
-    ).collect()
-    per_conv = {}
-    for r in lin:
-        per_conv.setdefault(r.conversion_id, []).append(r)
-    assert {r.touch_id for r in per_conv[5]} == {2, 3, 4}
-    assert all(abs(r.credit - 1 / 3) < 1e-12 for r in per_conv[5])
-    assert [r.touch_id for r in per_conv[6]] == [None]
-    assert per_conv[6][0].credit == 1.0
-    assert [r.touch_id for r in per_conv[8]] == [None]  # future touch
-    for conv_rows in per_conv.values():
-        assert abs(sum(r.credit for r in conv_rows) - 1.0) < 1e-12
-
-    first = {
-        r.conversion_id: r.touch_id
-        for r in funnel.attribute_conversions(
-            df, ["view", "click"], "purchase", model="first"
-        ).collect()
-    }
-    last = {
-        r.conversion_id: r.touch_id
-        for r in funnel.attribute_conversions(
-            df, ["view", "click"], "purchase", model="last"
-        ).collect()
-    }
-    assert first[5] == 2 and last[5] == 4
-    assert first[6] is None and last[6] is None
-
-    with pytest.raises(ValueError, match="model"):
-        funnel.attribute_conversions(df, ["view"], "purchase", model="x")
-
-
-def test_attribute_conversions_duckdb_parity(spark, sf_dir):
-    """Linear-model credits over the full events table match DuckDB
-    computing the identical band join + equal split."""
-    from pyspark.sql import functions as F
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from bigdata_storage_and_proccess_job_data_spark.operators import funnel
-    from tests.parity import compare, duckdb_connect
-
-    events = load_table(spark, sf_dir, "events")
-    out = funnel.attribute_conversions(
-        events, ["view", "click"], "purchase",
-        model="linear", window="2 days",
-    ).select(
-        "conversion_id",
-        "touch_id",
-        stable_round(F.col("credit"), 6).alias("credit"),
-    )
-    con = duckdb_connect(sf_dir)
-    problems = compare(
-        out,
-        con,
-        f"""
-        WITH conv AS (
-          SELECT user_id AS u, event_id AS conversion_id, ts AS cts
-          FROM events WHERE event_type = 'purchase'
-        ),
-        touch AS (
-          SELECT user_id AS u, event_id AS touch_id, ts AS tts
-          FROM events WHERE event_type IN ('view', 'click')
-        ),
-        j AS (
-          SELECT conv.conversion_id, touch.touch_id
-          FROM conv LEFT JOIN touch
-            ON conv.u = touch.u
-           AND touch.tts <= conv.cts
-           AND epoch(touch.tts) >= epoch(conv.cts) - 172800
-        ),
-        n AS (
-          SELECT conversion_id, COUNT(touch_id) AS n_t
-          FROM j GROUP BY conversion_id
-        )
-        SELECT j.conversion_id, j.touch_id,
-               {sql_round("CASE WHEN j.touch_id IS NULL THEN 1.0 ELSE 1.0 / n.n_t END", 6)} AS credit
-        FROM j JOIN n USING (conversion_id)
-        """,
-    )
-    assert problems == [], problems
-
-
-def test_event_transitions_pins_and_parity(spark, oracle_sf_dir):
-    """Markov transitions: (1) hand sequences pin counts and
-    conditional probabilities; (2) terminal mode adds exit mass so
-    each from-state's probs sum to 1 over events, and row totals equal
-    event counts; (3) full DuckDB replay parity on events per
-    event_type pair with a composed (ts, event_id) tiebreaker."""
-    from pyspark.sql import functions as F
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-    )
-    from tests.parity import compare, duckdb_connect
-
-    rows = [
-        ("u1", 1, "x"), ("u1", 2, "y"), ("u1", 3, "x"),
-        ("u2", 1, "y"), ("u2", 2, "y"),
-        ("u3", 1, "x"),  # singleton: no transition without terminal
-    ]
-    df = spark.createDataFrame(rows, "u string, t long, s string")
-    got = {
-        (r.from_state, r.to_state): (r.n, r.prob)
-        for r in funnel.event_transitions(df, "u", "t", "s").collect()
-    }
-    assert got == {
-        ("x", "y"): (1, 1.0),
-        ("y", "x"): (1, 0.5),
-        ("y", "y"): (1, 0.5),
-    }
-    term = {
-        (r.from_state, r.to_state): r.n
-        for r in funnel.event_transitions(
-            df, "u", "t", "s", terminal="_end"
-        ).collect()
-    }
-    assert sum(term.values()) == len(rows)
-    assert term[("x", "_end")] == 2 and term[("y", "_end")] == 1
-    # per-source probabilities sum to 1 in terminal mode
-    probs = funnel.event_transitions(
-        df, "u", "t", "s", terminal="_end"
-    ).groupBy("from_state").agg(F.sum("prob").alias("p")).collect()
-    for r in probs:
-        assert r.p == pytest.approx(1.0, abs=1e-5)
-
-    events = load_table(spark, oracle_sf_dir, "events").withColumn(
-        "_ord", F.struct("ts", "event_id")
-    )
-    got_r = funnel.event_transitions(
-        events, "user_id", "_ord", "event_type", digits=6
-    )
-    sql = f"""
-        WITH nxt AS (
-          SELECT event_type AS from_state,
-                 LEAD(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS to_state
-          FROM events
-          WHERE event_type IS NOT NULL
-        ),
-        pairs AS (
-          SELECT from_state, to_state, COUNT(*) AS n
-          FROM nxt WHERE to_state IS NOT NULL GROUP BY 1, 2
-        )
-        SELECT from_state, to_state, n,
-          {sql_round(
-            "n::DOUBLE / SUM(n) OVER (PARTITION BY from_state)", 6)}
-            AS prob
-        FROM pairs
-    """
-    assert compare(got_r, duckdb_connect(oracle_sf_dir), sql) == []
-
-
 def test_ranking_metrics_pins_and_parity(spark, oracle_sf_dir):
     """Retrieval eval: (1) hand-computable precision/recall/MRR/NDCG
     pins incl. the empty-truth NULL and unanswered-query zero
@@ -759,78 +571,3 @@ def test_retention_matrix_hand_pins_and_parity(spark, oracle_sf_dir):
     assert not errs, errs[:5]
 
 
-def test_rec_diversity_and_coverage_metrics(spark, sf_dir):
-    """Coverage + ILD: (1) hand pins -- identical-vector lists score
-    ILD ~0, orthogonal lists ~1, singleton lists NULL; coverage counts
-    distinct in-catalog items only; (2) DuckDB replays both on real
-    embeddings with recommendations derived from vec ids."""
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from pyspark.sql import functions as F
-    from tests.parity import compare, duckdb_connect
-
-    vecs = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0]), (2, [1.0, 0.0]),       # identical pair
-            (3, [0.0, 1.0]), (4, [1.0, 0.0]),       # orthogonal pair
-            (5, [1.0, 1.0]),
-        ],
-        "item long, embedding array<double>",
-    )
-    recs = spark.createDataFrame(
-        [("u1", 1), ("u1", 2), ("u2", 3), ("u2", 4), ("u3", 5),
-         ("u4", 99)],  # 99: stale rec, not in catalog
-        "user string, item long",
-    )
-    ild = {
-        r.user: (r.k_items, r.ild)
-        for r in ranking.intra_list_diversity(recs, vecs).collect()
-    }
-    assert ild["u1"][1] == _approx(0.0)
-    assert ild["u2"][1] == _approx(1.0)
-    assert ild["u3"] == (1, None)  # singleton: no pair
-    # review: a user with NO embedded items still emits a row (NULL
-    # ild), and k_items counts recommended items, not embedded ones
-    assert ild["u4"] == (1, None)
-    cov = ranking.catalog_coverage(recs, vecs, item_col="item").collect()[0]
-    assert (cov.n_catalog, cov.n_recommended) == (5, 5)
-    assert cov.coverage == _approx(1.0)
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    myrecs = emb.select(
-        (F.col("vec_id") % 20).alias("user"),
-        F.col("vec_id").alias("item"),
-    ).filter(F.col("vec_id") < 100)
-    got = ranking.intra_list_diversity(
-        myrecs, emb.select(F.col("vec_id").alias("item"), "embedding")
-    ).select(
-        "user", "k_items", stable_round(F.col("ild"), 6).alias("ild")
-    )
-    sql = f"""
-        WITH recs AS (
-          SELECT vec_id % 20 AS u, vec_id AS i,
-                 embedding::DOUBLE[] AS v
-          FROM embeddings WHERE vec_id < 100
-        ),
-        pairs AS (
-          SELECT a.u,
-                 1.0 - list_dot_product(a.v, b.v)
-                   / (sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(b.v, b.v))) AS d
-          FROM recs a JOIN recs b ON a.u = b.u AND a.i < b.i
-        ),
-        n AS (SELECT u, COUNT(*)::BIGINT AS k_items FROM recs GROUP BY u),
-        il AS (SELECT u, AVG(d) AS ild FROM pairs GROUP BY u)
-        SELECT n.u AS user, n.k_items, {sql_round('il.ild', 6)} AS ild
-        FROM n LEFT JOIN il ON n.u = il.u
-    """
-    assert compare(got, duckdb_connect(sf_dir), sql) == []
-
-
-def _approx(x, tol=1e-9):
-    import pytest
-
-    return pytest.approx(x, abs=tol)

@@ -2,7 +2,7 @@
 JL sign projection (operators/reduction.py).
 
 Fit correctness = numpy replica parity (driver-side linear algebra,
-the kmeans_update precedent). Apply correctness = exact DuckDB replay
+the kmeans_refine precedent). Apply correctness = exact DuckDB replay
 (list_dot_product is the same sequential fold as vectors.dot, the
 knn_brute_force precedent)."""
 

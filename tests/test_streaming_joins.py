@@ -176,31 +176,6 @@ def test_kafka_builder_fails_clearly_without_package(spark):
         )
 
 
-def test_salted_aggregation_equivalence(spark, sf_dir):
-    """Two-phase salted aggregation (operators/aggregates.py:salt_keys)
-    equals the direct aggregation -- the skew-mitigation path."""
-    from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-
-    orders = load_table(spark, sf_dir, "orders")
-    direct = {
-        (r.o_orderpriority,): (r.n, round(r.s, 2))
-        for r in orders.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("s"))
-        .collect()
-    }
-    salted = aggregates.salt_keys(orders, buckets=8)
-    phase1 = salted.groupBy("o_orderpriority", "_salt").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("s")
-    )
-    phase2 = {
-        (r.o_orderpriority,): (r.n, round(r.s, 2))
-        for r in phase1.groupBy("o_orderpriority")
-        .agg(F.sum("n").cast("long").alias("n"), F.sum("s").alias("s"))
-        .collect()
-    }
-    assert direct == phase2
-
-
 def test_stream_stream_interval_join(spark, tmp_path):
     """Impressions |X| clicks within 10 minutes: the canonical
     stream-stream join. Both sides watermarked (state eviction), the

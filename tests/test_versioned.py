@@ -1183,111 +1183,6 @@ def test_partition_evolution_across_versions(spark, sf_dir, tmp_path):
         )
 
 
-def test_minmax_state_targeted_rescan_matches_recompute(spark):
-    """Min/max maintenance under every interesting change shape:
-    extremal delete (dirty -> rescan), interior delete (pure delta),
-    update that moves an extreme, inserts extending/interior, brand-new
-    group, group emptied entirely, NULL values and NULL keys. Result
-    equals minmax_state_init on the new snapshot exactly."""
-    from bigdata_storage_and_proccess_job_data_spark.operators import aggregates as A
-
-    old = spark.createDataFrame(
-        [
-            (1, "a", 10), (2, "a", 5), (3, "a", 7),     # a: [5, 10]
-            (4, "b", 1), (5, "b", 2), (6, "b", 3),      # b: [1, 3]
-            (7, "c", 9),                                 # c: [9, 9]
-            (8, None, 4), (9, None, 6),                  # NULL key group
-            (10, "d", None), (11, "d", 2),               # NULL value in d
-        ],
-        "id long, grp string, val long",
-    )
-    new = spark.createDataFrame(
-        [
-            (1, "a", 10), (3, "a", 7),        # a: extremal delete (5 gone)
-            (4, "b", 1), (6, "b", 3),          # b: interior delete (2 gone)
-            (7, "c", 20),                      # c: update moves the max
-            (8, None, 4), (9, None, 0),        # NULL-key group: new min
-            (10, "d", None),                   # d: its only value deleted
-            (12, "e", 50),                     # brand-new group
-            (13, "a", 11),                     # a also gets a new max
-        ],
-        "id long, grp string, val long",
-    )
-    keys, ms = ["grp"], ["val"]
-    state = A.minmax_state_init(old, keys, ms)
-    feed = versioned.change_feed(old, new, "id")
-    got = sorted(
-        A.minmax_state_apply(state, feed, new, keys, ms).collect(),
-        key=str,
-    )
-    want = sorted(A.minmax_state_init(new, keys, ms).collect(), key=str)
-    assert got == want
-    by_grp = {r.grp: (r.min_val, r.max_val) for r in got}
-    assert by_grp["a"] == (7, 11)
-    assert by_grp["b"] == (1, 3)
-    assert by_grp["c"] == (20, 20)
-    assert by_grp["d"] == (None, None)  # group exists, all values NULL
-    assert by_grp["e"] == (50, 50)
-    assert by_grp[None] == (0, 4)
-
-
-def test_minmax_dirty_all_null_first_measure_interior_delete(spark):
-    """Cost-model pin (ADVICE r7 low): a group whose FIRST measure is
-    all-NULL in state must not be marked dirty by an interior delete on
-    a later measure -- the old absence inference (min of measure[0] IS
-    NULL) rescanned such groups on every removal. Extremal deletes on
-    it still go dirty, and results match recompute either way."""
-    from bigdata_storage_and_proccess_job_data_spark.operators import aggregates as A
-
-    old = spark.createDataFrame(
-        [
-            (1, "g", None, 10),
-            (2, "g", None, 5),
-            (3, "g", None, 7),
-            (4, "h", 1, 1),
-        ],
-        "id long, grp string, a long, b long",
-    )
-    keys, ms = ["grp"], ["a", "b"]
-    state = A.minmax_state_init(old, keys, ms)
-    sk = lambda df_: df_.select(F.struct(*keys).alias("_k"), "*")  # noqa: E731
-
-    # interior delete on b (7 is strictly inside [5, 10]): clean
-    new_interior = old.filter(F.col("id") != 3)
-    feed = versioned.change_feed(old, new_interior, "id")
-    rms = (
-        feed.filter(F.col("change_type").isin("delete", "update"))
-        .select("before.*")
-    )
-    dirty = A._minmax_dirty(sk(state), sk(rms), ms).collect()
-    assert dirty == [], dirty
-    got = sorted(
-        A.minmax_state_apply(state, feed, new_interior, keys, ms).collect(),
-        key=str,
-    )
-    want = sorted(
-        A.minmax_state_init(new_interior, keys, ms).collect(), key=str
-    )
-    assert got == want
-
-    # extremal delete on b (10 is the stored max): dirty, and correct
-    new_extremal = old.filter(F.col("id") != 1)
-    feed2 = versioned.change_feed(old, new_extremal, "id")
-    rms2 = (
-        feed2.filter(F.col("change_type").isin("delete", "update"))
-        .select("before.*")
-    )
-    assert A._minmax_dirty(sk(state), sk(rms2), ms).count() == 1
-    got2 = sorted(
-        A.minmax_state_apply(state, feed2, new_extremal, keys, ms).collect(),
-        key=str,
-    )
-    want2 = sorted(
-        A.minmax_state_init(new_extremal, keys, ms).collect(), key=str
-    )
-    assert got2 == want2
-
-
 def test_clone_table_zero_copy_independent(spark, sf_dir, tmp_path):
     """Shallow clone: same contents via hard links (same inodes, no
     byte copied), fully independent afterward -- source commits and
@@ -2324,59 +2219,6 @@ def test_bloom_splice_legacy_manifest_without_bounds_is_uncapped(
         .count()
         == 1
     )
-
-
-def test_bloom_manifest_footer_sizing_fast_path(spark, tmp_path):
-    """write_bloom_manifest(sizing='footer') -- the bulk-rebuild fast
-    path (VERDICT r14 #6): bit-identical manifest to the exact build
-    on unique-per-row keys (footer rows == distinct count => same m =>
-    same words), correct pruning either way, and mutually exclusive
-    with an explicit m."""
-    import copy
-    import json
-    import os
-
-    import pytest
-
-    table = str(tmp_path / "footer_bloom")
-    df = spark.range(0, 3000).selectExpr(
-        "id AS k", "CAST(id AS STRING) AS key"
-    )
-    v1 = versioned.commit_version(
-        df.repartitionByRange(4, "k").sortWithinPartitions("k"),
-        table,
-        stats_cols=["k"],
-    )
-    snap = f"{table}/v={v1}"
-    exact = copy.deepcopy(
-        versioned.write_bloom_manifest(spark, snap, ["key"])
-    )
-    fast = versioned.write_bloom_manifest(
-        spark, snap, ["key"], sizing="footer"
-    )
-    assert fast["k"] == exact["k"]
-    assert set(fast["files"]) == set(exact["files"])
-    for fname, per in exact["files"].items():
-        assert fast["files"][fname]["key"]["m"] == per["key"]["m"]
-        assert fast["files"][fname]["key"]["d"] == per["key"]["d"]
-        assert {
-            w: int(b)
-            for w, b in fast["files"][fname]["key"]["words"].items()
-        } == {w: int(b) for w, b in per["key"]["words"].items()}
-    # pruning through the fast-path manifest: exact file skipping
-    kept = versioned.prune_files_bloom(snap, "key", "1500")
-    assert len(kept) == 1
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        versioned.write_bloom_manifest(
-            spark, snap, ["key"], m=128, sizing="footer"
-        )
-    with pytest.raises(ValueError, match="sizing"):
-        versioned.write_bloom_manifest(
-            spark, snap, ["key"], sizing="bogus"
-        )
-    # the JSON on disk is the fast payload (last write wins)
-    with open(os.path.join(snap, "_bloom.json")) as fh:
-        assert json.load(fh)["target_fpp"] == 0.01
 
 
 def test_atomic_write_is_the_only_rename_in_sources():
