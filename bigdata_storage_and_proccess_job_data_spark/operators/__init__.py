@@ -1,14 +1,18 @@
 """DataFrame -> DataFrame operators: dedup / near-dup (exact, MinHash,
 SimHash, incremental, clustering), similarity search (brute-force, LSH,
-IVF, PQ, exact MIPS), as-of and range joins, aggregation cubes +
-sketches (HLL/CMS/DDSketch/KMV) + experiment and model-eval statistics
-+ incremental aggregate maintenance + table profiler, PageRank and
-triangle counting, training-corpus prep (chunking, PII, contamination,
-sampling, splits, LM quality scoring, line dedup, BPE tokenizer
-training, negative sampling, curriculum ordering, vocabulary coverage,
-Kneser-Ney scoring), unigram-LM tokenizer training (unigram_lm.py),
-ranking/retrieval (BM25, MMR), funnels + sessions + retention matrices,
-ALS matrix factorization with MIPS recommendation serving, skew-split
-joins (hot_key_split_join), feature engineering (standardization,
-quantile bins, target encoding, weight of evidence), dimensionality
-reduction (PCA, JL, Mahalanobis), and multimodal feature extraction."""
+IVF, PQ, exact MIPS), fuzzy string joins + entity resolution, as-of and
+range joins, aggregation cubes + sketches (HLL/CMS/DDSketch/KMV) +
+robust stats (median/MAD outliers, correlation matrix, chi-square,
+autocorrelation, time-decayed aggregates) + experiment and model-eval
+statistics + incremental aggregate maintenance + table profiler,
+market-basket pair mining, PageRank and triangle counting,
+training-corpus prep (chunking, PII, contamination, sampling, splits,
+LM quality scoring, line dedup, BPE tokenizer training, negative
+sampling, curriculum ordering, vocabulary coverage, Kneser-Ney scoring,
+compression-ratio signal), unigram-LM tokenizer training
+(unigram_lm.py), ranking/retrieval (BM25, MMR), funnels + sessions +
+retention matrices, ALS matrix factorization with MIPS recommendation
+serving, skew-split joins (hot_key_split_join), feature engineering
+(standardization, quantile bins, target encoding, weight of evidence),
+dimensionality reduction (PCA, JL, Mahalanobis), and multimodal feature
+extraction."""

@@ -73,6 +73,34 @@ def test_contamination_pairs_finds_planted_overlap(spark):
     assert out[0].n_shared >= 3  # the shared sentence yields 6 5-grams
 
 
+def test_deterministic_sample_is_stable_and_bounded(spark):
+    df = spark.createDataFrame([(i,) for i in range(2000)], "id LONG")
+    a = {r.id for r in corpus.deterministic_sample(df, "id", 20, "s").collect()}
+    b = {r.id for r in corpus.deterministic_sample(df, "id", 20, "s").collect()}
+    assert a == b, "same salt => identical sample"
+    assert 0.15 <= len(a) / 2000 <= 0.25, f"rate off: {len(a)/2000:.3f}"
+    # membership is monotone in the rate: 20% sample contains the 10% one
+    c = {r.id for r in corpus.deterministic_sample(df, "id", 10, "s").collect()}
+    assert c <= a
+    # a different salt draws a different sample
+    d = {r.id for r in corpus.deterministic_sample(df, "id", 20, "t").collect()}
+    assert d != a
+    with pytest.raises(ValueError):
+        corpus.deterministic_sample(df, "id", 101)
+
+
+def test_length_histogram_buckets(spark):
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "x " * 14), (3, "y " * 500), (4, "")],
+        "doc_id LONG, text STRING",
+    )
+    out = {r.bucket: (r.lo_tokens, r.doc_count) for r in
+           corpus.length_histogram(df, "text", 10, 20).collect()}
+    assert out[0] == (0, 2)    # 3 tokens and empty doc
+    assert out[1] == (10, 1)   # 14 tokens
+    assert out[20] == (200, 1)  # 500 tokens, capped bucket
+
+
 def test_mixture_sample_rates_and_reproducibility(spark):
     df = spark.createDataFrame(
         [(i, "a" if i % 2 == 0 else "b") for i in range(2000)],
@@ -337,6 +365,53 @@ def test_temperature_mixture_composition(spark):
     )
 
 
+def test_weighted_sample_parity_and_semantics(spark, oracle_sf_dir):
+    """Deterministic importance sampling: DuckDB reproduces the exact
+    sample (md5-uniform vs per-row weight), the keep rate tracks the
+    mean weight, weight 1/0 are always/never, and raising weights only
+    ever ADDS rows (monotone nesting -- the property that makes quality
+    thresholds sweepable without resampling)."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        _md5_hash60_sql,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    w = (F.col("doc_id") % 10) / 10.0
+    got = corpus.weighted_sample(docs, "doc_id", w, salt="q").select(
+        "doc_id"
+    )
+    h = _md5_hash60_sql("doc_id::VARCHAR || 'q'")
+    sql = f"""
+        SELECT doc_id FROM documents
+        WHERE (({h} >> 8) / 4503599627370496.0) < (doc_id % 10) / 10.0
+    """
+    errs = compare(got, duckdb_connect(oracle_sf_dir), sql)
+    assert not errs, errs[:5]
+
+    n = docs.count()
+    kept = got.count()
+    # mean weight is ~0.45 on doc_id % 10; binomial spread at n>=500
+    assert 0.35 * n < kept < 0.55 * n, (kept, n)
+
+    ones = corpus.weighted_sample(docs, "doc_id", F.lit(1.0)).count()
+    zeros = corpus.weighted_sample(docs, "doc_id", F.lit(0.0)).count()
+    nulls = corpus.weighted_sample(
+        docs, "doc_id", F.lit(None).cast("double")
+    ).count()
+    assert ones == n and zeros == 0 and nulls == 0
+
+    lower = {
+        r.doc_id
+        for r in corpus.weighted_sample(docs, "doc_id", w * 0.5, salt="q")
+        .select("doc_id")
+        .collect()
+    }
+    higher = {r.doc_id for r in got.collect()}
+    assert lower <= higher and len(lower) < len(higher)
+
+
 def test_weighted_take_k_bias_determinism_and_parity(spark, oracle_sf_dir):
     """Efraimidis-Spirakis exact-k weighted sampling: (1) DuckDB
     reproduces the exact selected set from the same md5 coin and
@@ -480,10 +555,9 @@ def test_leakage_safe_split_group_atomic_and_parity(spark, oracle_sf_dir):
 def test_unigram_surprisal_quality_scoring(spark, oracle_sf_dir):
     """CCNet-style LM quality proxy: (1) gibberish scores strictly
     higher surprisal than reference-like text, (2) empty docs yield NULL
-    with n_tokens=0 and a reordered doc scores the same, (3) the whole
-    fit+score pipeline is recomputed value-for-value in DuckDB (top-V cut,
-    add-alpha smoothing, OOV fallback, mean -logp), (4) parameter
-    validation."""
+    with n_tokens=0, (3) the whole fit+score pipeline is recomputed
+    value-for-value in DuckDB (top-V cut, add-alpha smoothing, OOV
+    fallback, mean -logp), (4) parameter validation."""
     import pytest
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
@@ -511,8 +585,6 @@ def test_unigram_surprisal_quality_scoring(spark, oracle_sf_dir):
             (1, " ".join([top_tok] * 20)),
             (2, "zzqx9v7k qqv8zzt xq9zzv wvzz7q " * 5),
             (3, ""),
-            (4, "the cat sat on the mat"),
-            (5, "mat the on sat cat the"),  # same multiset, broken order
         ],
         "doc_id LONG, text STRING",
     )
@@ -523,8 +595,6 @@ def test_unigram_surprisal_quality_scoring(spark, oracle_sf_dir):
     assert got[1].surprisal < got[2].surprisal
     assert got[3].surprisal is None and got[3].n_tokens == 0
     assert got[1].n_tokens == 20
-    # a unigram model is order-blind
-    assert got[4].surprisal == pytest.approx(got[5].surprisal, abs=1e-9)
 
     # cross-engine parity over the real corpus (vocab cut exercises OOV)
     scored = corpus.unigram_surprisal(docs, lm).select(
@@ -571,6 +641,194 @@ def test_unigram_surprisal_quality_scoring(spark, oracle_sf_dir):
         corpus.unigram_logprob_table(docs, vocab_size=0)
     with pytest.raises(ValueError, match="alpha"):
         corpus.unigram_logprob_table(docs, alpha=0.0)
+
+
+def test_split_leakage_audit_finds_cross_split_twins(spark):
+    """Near-dup pairs straddling the split boundary are reported; pairs
+    inside one split are not -- the audit that catches what group-atomic
+    splitting cannot (near-copies under DIFFERENT group keys)."""
+    docs = spark.createDataFrame(
+        [
+            (1, "srcA", "the quick brown fox jumps over the lazy dog"),
+            (2, "srcB", "the quick brown fox jumps over the lazy dog!"),
+            (3, "srcA", "a completely different document about spark"),
+            (4, "srcA", "a completely different document about spark"),
+        ],
+        "doc_id LONG, source STRING, text STRING",
+    )
+    # force the interesting layout: srcA -> train, srcB -> test
+    labeled = docs.withColumn(
+        "split", F.when(F.col("source") == "srcB", "test").otherwise("train")
+    )
+    from bigdata_storage_and_proccess_job_data_spark.operators import neardup
+
+    pairs = neardup.minhash_dedup_pairs(
+        docs, "doc_id", "text", ngram=2, threshold=0.6,
+        num_hashes=64, bands=16,
+    )
+    leaks = corpus.split_leakage_audit(labeled, pairs).collect()
+    # (1,2) straddles train/test; (3,4) is train-internal -> absent
+    assert {(min(r.id_a, r.id_b), max(r.id_a, r.id_b)) for r in leaks} == {
+        (1, 2)
+    }
+    assert all({r.split_a, r.split_b} == {"train", "test"} for r in leaks)
+
+
+def test_duplication_density_flags_recycled_docs(spark):
+    """Per-doc duplicated-n-gram fraction: a doc that is mostly a
+    verbatim copy of another scores near 1, a unique doc scores 0, a
+    too-short doc gets NULL -- the Lee-et-al doc-level drop signal on
+    top of duplicate_ngram_spans' span locator."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [
+            (1, base + " lambda mu"),
+            (2, base + " nu xi"),  # shares base's 8-grams with doc 1
+            (3, "one two three four five six seven eight nine ten"),
+            (4, "short text"),  # < 8 tokens: no grams
+        ],
+        "doc_id LONG, text STRING",
+    )
+    got = {
+        r.doc_id: r
+        for r in corpus.duplication_density(docs, n=8, min_docs=2).collect()
+    }
+    assert got[1].dup_frac > 0.5 and got[2].dup_frac > 0.5
+    assert got[3].dup_frac == 0.0 and got[3].n_grams == 3
+    assert got[4].n_grams == 0 and got[4].dup_frac is None
+    # exact: docs 1/2 share exactly the 3 8-grams inside `base`
+    assert got[1].dup_grams == 3 and got[1].n_grams == 5
+
+    import pytest
+
+    with pytest.raises(ValueError, match="min_docs"):
+        corpus.duplication_density(docs, min_docs=1)
+
+
+def test_bigram_surprisal_order_sensitivity_and_parity(spark, oracle_sf_dir):
+    """Interpolated bigram LM: (1) a document using reference word ORDER
+    scores strictly lower than the same multiset shuffled (the fluency
+    signal unigrams can't see -- their unigram scores are identical),
+    (2) one-token docs score unigram-only, empty docs NULL, (3) the
+    whole fit+score (bigram ML fit with min_count prune, JM
+    interpolation, OOV fallback, first-token convention) is recomputed
+    value-for-value in DuckDB, (4) validation."""
+    import pytest
+
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        sql_round,
+        stable_round,
+    )
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        SQL_TOKENS_LOWER,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    # --- order sensitivity on a controlled reference
+    ref = spark.createDataFrame(
+        [(i, "the cat sat on the mat") for i in range(20)],
+        "doc_id LONG, text STRING",
+    )
+    uni = corpus.unigram_logprob_table(ref, vocab_size=100, alpha=1.0)
+    bi = corpus.bigram_prob_table(ref, min_count=2)
+    probe = spark.createDataFrame(
+        [
+            (1, "the cat sat on the mat"),
+            (2, "mat the on sat cat the"),  # same multiset, broken order
+            (3, "the"),
+            (4, ""),
+        ],
+        "doc_id LONG, text STRING",
+    )
+    got = {
+        r.doc_id: r
+        for r in corpus.bigram_surprisal(probe, uni, bi, lam=0.5).collect()
+    }
+    assert got[1].surprisal < got[2].surprisal
+    u = {
+        r.doc_id: r.surprisal
+        for r in corpus.unigram_surprisal(probe, uni).collect()
+    }
+    assert u[1] == pytest.approx(u[2], abs=1e-9)  # unigram is order-blind
+    assert got[3].n_tokens == 1 and got[3].surprisal is not None
+    assert got[4].n_tokens == 0 and got[4].surprisal is None
+
+    # retained conditional probs are true ML fractions: sum <= 1 per ctx
+    mass = bi.groupBy("prev").agg(F.sum("p_cond").alias("m")).collect()
+    assert all(r.m <= 1.0 + 1e-9 for r in mass)
+
+    # --- cross-engine parity over the real corpus
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    uni_r = corpus.unigram_logprob_table(docs, vocab_size=500, alpha=1.0)
+    bi_r = corpus.bigram_prob_table(docs, min_count=2)
+    scored = corpus.bigram_surprisal(docs, uni_r, bi_r, lam=0.5).select(
+        "doc_id",
+        "n_tokens",
+        stable_round(F.col("surprisal"), 4).alias("surprisal"),
+    )
+    sql = f"""
+        WITH base AS (SELECT doc_id, {SQL_TOKENS_LOWER} AS l FROM documents),
+        toks AS (SELECT unnest(l) AS t FROM base),
+        counts AS (SELECT t, COUNT(*) AS c FROM toks GROUP BY t),
+        top AS (SELECT t, c FROM counts ORDER BY c DESC, t ASC LIMIT 500),
+        scal AS (
+          SELECT (SELECT SUM(c) FROM counts)::DOUBLE AS n,
+                 (SELECT COUNT(*) FROM top)::DOUBLE AS v
+        ),
+        lm AS (
+          SELECT t, ln(c + 1.0) - ln(n + 1.0 * (v + 1)) AS logp
+          FROM top, scal
+        ),
+        oov AS (SELECT ln(1.0) - ln(n + 1.0 * (v + 1)) AS logp FROM scal),
+        zips AS (
+          SELECT doc_id, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z
+          FROM base WHERE len(l) > 1
+        ),
+        bc AS (
+          SELECT z[1] AS prev, z[2] AS token, COUNT(*) AS c
+          FROM zips GROUP BY 1, 2
+        ),
+        ctx AS (SELECT prev, SUM(c) AS ctxc FROM bc GROUP BY prev),
+        bi AS (
+          SELECT bc.prev, bc.token, c / ctxc AS p_cond
+          FROM bc JOIN ctx USING (prev) WHERE c >= 2
+        ),
+        allt AS (
+          SELECT doc_id, NULL::VARCHAR AS prev, l[1] AS token
+          FROM base WHERE len(l) >= 1
+          UNION ALL
+          SELECT doc_id, z[1] AS prev, z[2] AS token FROM zips
+        ),
+        ju AS (
+          SELECT a.doc_id, a.prev, a.token,
+                 exp(COALESCE(lm.logp, (SELECT logp FROM oov))) AS pu
+          FROM allt a LEFT JOIN lm ON a.token = lm.t
+        ),
+        jb AS (
+          SELECT ju.*, bi.p_cond
+          FROM ju LEFT JOIN bi
+            ON ju.prev = bi.prev AND ju.token = bi.token
+        ),
+        perdoc AS (
+          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+                 -AVG(ln(CASE WHEN prev IS NULL THEN pu
+                              ELSE 0.5 * COALESCE(p_cond, 0) + 0.5 * pu
+                         END)) AS s
+          FROM jb GROUP BY doc_id
+        )
+        SELECT b.doc_id, COALESCE(p.n_tokens, 0) AS n_tokens,
+               {sql_round("p.s", 4)} AS surprisal
+        FROM (SELECT DISTINCT doc_id FROM documents) b
+        LEFT JOIN perdoc p USING (doc_id)
+    """
+    errs = compare(scored, duckdb_connect(oracle_sf_dir), sql)
+    assert not errs, errs[:5]
+
+    with pytest.raises(ValueError, match="min_count"):
+        corpus.bigram_prob_table(ref, min_count=0)
+    with pytest.raises(ValueError, match="lam"):
+        corpus.bigram_surprisal(probe, uni, bi, lam=1.0)
 
 
 def test_line_dedup_boilerplate_strip(spark):
@@ -642,6 +900,149 @@ def test_line_dedup_duckdb_parity(spark, oracle_sf_dir):
     LEFT JOIN reb r USING (doc_id)
     """
     assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
+
+
+def test_keywords_tfidf_ranking_and_parity(spark, oracle_sf_dir):
+    """(1) A term concentrated in one doc outranks corpus-wide terms;
+    (2) deterministic lexicographic tiebreak; (3) full cross-engine
+    DuckDB parity of the per-doc top-3 on the real documents table;
+    (4) validation."""
+    import pytest
+
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        sql_round,
+        stable_round,
+    )
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        SQL_TOKENS_LOWER,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    probe = spark.createDataFrame(
+        [
+            (1, "common common zebra zebra zebra"),
+            (2, "common aardvark aardvark"),
+            (3, "common"),
+        ],
+        "doc_id LONG, text STRING",
+    )
+    got = corpus.keywords_tfidf(probe, k=2).collect()
+    top = {r.doc_id: r.term for r in got if r.rank == 1}
+    # 'zebra'/'aardvark' are df=1 -> high idf; 'common' is in all docs
+    assert top[1] == "zebra" and top[2] == "aardvark"
+    assert top[3] == "common"  # only term left
+    second = {r.doc_id: r.term for r in got if r.rank == 2}
+    assert second[1] == "common" and second[2] == "common"
+
+    with pytest.raises(ValueError):
+        corpus.keywords_tfidf(probe, k=0)
+    with pytest.raises(ValueError):
+        corpus.keywords_tfidf(probe, min_df=0)
+
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    out = corpus.keywords_tfidf(docs, k=3, min_df=2).select(
+        "doc_id",
+        "term",
+        "tf",
+        "df",
+        stable_round(F.col("score"), 6).alias("score"),
+        "rank",
+    )
+    con = duckdb_connect(oracle_sf_dir)
+    problems = compare(
+        out,
+        con,
+        f"""
+        WITH pairs AS (
+          SELECT doc_id, unnest({SQL_TOKENS_LOWER}) AS term
+          FROM documents
+        ),
+        tf AS (
+          SELECT doc_id, term, COUNT(*) AS tf
+          FROM pairs GROUP BY doc_id, term
+        ),
+        df AS (
+          SELECT term, COUNT(*) AS df FROM tf GROUP BY term
+        ),
+        n AS (SELECT COUNT(*)::DOUBLE AS n FROM documents),
+        scored AS (
+          SELECT tf.doc_id, tf.term, tf.tf, df.df,
+                 tf.tf * (ln((1.0 + n.n) / (1.0 + df.df)) + 1.0)
+                   AS score
+          FROM tf JOIN df USING (term), n
+          WHERE df.df >= 2
+        ),
+        ranked AS (
+          SELECT *, ROW_NUMBER() OVER (
+                   PARTITION BY doc_id
+                   ORDER BY score DESC, term ASC) AS rank
+          FROM scored
+        )
+        SELECT doc_id, term, tf, df,
+               {sql_round('score', 6)} AS score, rank
+        FROM ranked WHERE rank <= 3
+        """,
+    )
+    assert problems == [], problems
+
+
+def test_kfold_assign_group_atomic_and_parity(spark, oracle_sf_dir):
+    """Every group lands whole in one fold; folds cover 0..k-1 about
+    evenly; assignment is stable under corpus growth and exactly
+    reproducible in DuckDB from the same md5 coin."""
+    import pytest
+
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from tests.parity import compare, duckdb_connect
+
+    li = load_table(spark, oracle_sf_dir, "lineitem")
+    out = corpus.kfold_assign(li, "l_orderkey", k=5)
+    per_group = out.groupBy("l_orderkey").agg(
+        F.count_distinct("fold").alias("nf")
+    )
+    assert per_group.filter(F.col("nf") != 1).count() == 0
+
+    sizes = {
+        r.fold: r["count"]
+        for r in out.groupBy("fold").count().collect()
+    }
+    assert set(sizes) == {0, 1, 2, 3, 4}
+    assert max(sizes.values()) < 2 * min(sizes.values())
+
+    # subset stability: restricting the corpus never moves a group
+    sub = corpus.kfold_assign(
+        li.filter(F.col("l_orderkey") % 3 == 0), "l_orderkey", k=5
+    )
+    a = {r.l_orderkey: r.fold for r in sub.select("l_orderkey", "fold").distinct().collect()}
+    b = {
+        r.l_orderkey: r.fold
+        for r in out.select("l_orderkey", "fold")
+        .distinct()
+        .filter(F.col("l_orderkey") % 3 == 0)
+        .collect()
+    }
+    assert a == b
+
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        _md5_hash60_sql,
+    )
+
+    h = _md5_hash60_sql("l_orderkey::VARCHAR || ''")
+    con = duckdb_connect(oracle_sf_dir)
+    problems = compare(
+        out.select("l_orderkey", "l_linenumber", "fold"),
+        con,
+        f"""
+        SELECT l_orderkey, l_linenumber,
+               CAST((({h} >> 8) % 5) AS INT) AS fold
+        FROM lineitem
+        """,
+    )
+    assert problems == [], problems
+
+    with pytest.raises(ValueError):
+        corpus.kfold_assign(li, "l_orderkey", k=1)
 
 
 def test_nb_quality_filter_fit_score_parity(spark, oracle_sf_dir):
@@ -861,6 +1262,397 @@ def test_dsir_importance_weights_parity(spark, oracle_sf_dir):
     assert compare(scored, con, sql) == []
 
 
+def test_excise_duplicate_spans_planted(spark):
+    """Planted semantics: a 4-gram shared by two docs excises from both
+    (unioned at token granularity when spans overlap), untouched docs
+    keep their ORIGINAL bytes, an all-covered doc returns '', and
+    original case survives excision (detection lowercases, the rebuild
+    does not)."""
+    df = spark.createDataFrame(
+        [
+            # docs 1+2 share "A b c d" (case-insensitively); doc 1 also
+            # has the shifted copy "b c d e" -> union covers tokens 0..4
+            (1, "A b c d e tail1 tail2 tail3"),
+            (2, "x1 x2 a B c d e x3 x4"),
+            (3, "nothing shared   here at all"),
+            (4, "a b c d"),  # all four tokens covered -> ''
+        ],
+        "doc_id LONG, text STRING",
+    )
+    out = {
+        r.doc_id: r
+        for r in corpus.excise_duplicate_spans(
+            df, "doc_id", "text", n=4, min_docs=2
+        ).collect()
+    }
+    assert out[1].text == "tail1 tail2 tail3" and out[1].n_removed == 5
+    assert out[2].text == "x1 x2 x3 x4" and out[2].n_removed == 5
+    # untouched: original whitespace preserved, not re-tokenized
+    assert out[3].text == "nothing shared   here at all"
+    assert out[3].n_removed == 0 and out[3].n_tokens == 5
+    assert out[4].text == "" and out[4].n_removed == 4
+    assert out[1].n_tokens == 8  # original count, pre-excision
+
+    with pytest.raises(ValueError, match="n must"):
+        corpus.excise_duplicate_spans(df, "doc_id", "text", n=0)
+    with pytest.raises(ValueError, match="min_docs"):
+        corpus.excise_duplicate_spans(df, "doc_id", "text", min_docs=0)
+
+
+def test_excise_duplicate_spans_duckdb_parity(spark, oracle_sf_dir):
+    """Cross-engine value parity on the real documents table (sf0.01
+    carries ~1k duplicated 5-grams): rewritten text, token and removal
+    counts all recomputed in DuckDB."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from tests.parity import compare, duckdb_connect
+
+    n = 5
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    out = corpus.excise_duplicate_spans(docs, "doc_id", "text", n=n, min_docs=2)
+    sql = rf"""
+        WITH tl AS (
+          SELECT doc_id, text,
+                 CASE WHEN trim(text) = '' THEN []::VARCHAR[]
+                      ELSE string_split_regex(lower(trim(text)), '\s+')
+                 END AS lt,
+                 CASE WHEN trim(text) = '' THEN []::VARCHAR[]
+                      ELSE string_split_regex(trim(text), '\s+')
+                 END AS ot
+          FROM documents
+        ),
+        grams AS (
+          SELECT doc_id, i - 1 AS pos,
+                 array_to_string(lt[i:i+{n - 1}], ' ') AS gram
+          FROM tl, unnest(generate_series(1, len(lt) - {n} + 1)) AS g(i)
+          WHERE len(lt) >= {n}
+        ),
+        dup AS (
+          SELECT gram FROM grams
+          GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
+        ),
+        covered AS (
+          SELECT DISTINCT doc_id, idx FROM (
+            SELECT s.doc_id, unnest(generate_series(s.pos, s.pos + {n - 1})) AS idx
+            FROM (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)) s
+          )
+        ),
+        toks AS (
+          SELECT tl.doc_id, i - 1 AS idx, ot[i] AS tok
+          FROM tl, unnest(generate_series(1, len(ot))) AS t(i)
+          WHERE EXISTS (SELECT 1 FROM covered c WHERE c.doc_id = tl.doc_id)
+        ),
+        rebuilt AS (
+          SELECT t.doc_id,
+                 COALESCE(string_agg(CASE WHEN c.doc_id IS NULL THEN t.tok END,
+                                     ' ' ORDER BY t.idx), '') AS newt,
+                 CAST(SUM(CASE WHEN c.doc_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
+                   AS removed
+          FROM toks t
+          LEFT JOIN covered c ON t.doc_id = c.doc_id AND t.idx = c.idx
+          GROUP BY t.doc_id
+        )
+        SELECT tl.doc_id,
+               CASE WHEN r.doc_id IS NULL THEN tl.text ELSE r.newt END AS text,
+               CAST(len(ot) AS BIGINT) AS n_tokens,
+               COALESCE(r.removed, 0) AS n_removed
+        FROM tl LEFT JOIN rebuilt r USING (doc_id)
+    """
+    con = duckdb_connect(oracle_sf_dir)
+    assert compare(out, con, sql) == []
+    # the fixture genuinely exercises the excision path
+    assert out.filter(F.col("n_removed") > 0).count() > 0
+
+
+def test_contamination_fraction_planted(spark):
+    """Planted overlap: doc sharing its only 3-gram with the benchmark
+    scores 1.0; a clean doc scores 0; a too-short doc has 0 grams."""
+    train = spark.createDataFrame(
+        [
+            (1, "the quick brown fox"),  # grams: 2, one shared
+            (2, "totally novel text here"),
+            (3, "ab"),  # < n tokens
+        ],
+        "doc_id LONG, text STRING",
+    )
+    bench = spark.createDataFrame(
+        [(100, "the quick brown cat jumps")], "doc_id LONG, text STRING"
+    )
+    out = {
+        r.doc_id: r
+        for r in corpus.contamination_fraction(
+            train, bench, "doc_id", "text", ngram=3
+        ).collect()
+    }
+    assert out[1].n_grams == 2 and out[1].n_contaminated == 1
+    assert out[1].contaminated_frac == 0.5
+    assert out[2].n_contaminated == 0 and out[2].contaminated_frac == 0.0
+    assert out[3].n_grams == 0 and out[3].contaminated_frac == 0.0
+    with pytest.raises(ValueError, match="ngram"):
+        corpus.contamination_fraction(train, bench, "doc_id", "text", ngram=0)
+
+
+def test_contamination_fraction_duckdb_parity(spark, oracle_sf_dir):
+    """Cross-engine parity on the real documents table: train/bench by
+    doc_id % 20, 5-gram overlap fraction recomputed in DuckDB."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        sql_round,
+    )
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        SQL_TOKENS_LOWER,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    out = corpus.contamination_fraction(
+        docs.filter(F.col("doc_id") % 20 != 0),
+        docs.filter(F.col("doc_id") % 20 == 0),
+        "doc_id",
+        "text",
+        ngram=5,
+    )
+    gram5 = (
+        "t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || "
+        "t[i+3] || ' ' || t[i+4]"
+    )
+    sql = f"""
+        WITH toks AS (
+          SELECT doc_id, {SQL_TOKENS_LOWER} AS t FROM documents
+        ),
+        sh AS (
+          SELECT doc_id,
+                 CASE WHEN len(t) >= 5 THEN
+                   list_distinct(list_transform(range(1, len(t) - 3),
+                                 i -> {gram5}))
+                 ELSE []::VARCHAR[] END AS shingles
+          FROM toks
+        ),
+        inv AS (SELECT doc_id, unnest(shingles) AS g FROM sh),
+        bench AS (
+          SELECT DISTINCT g FROM inv WHERE doc_id % 20 = 0
+        ),
+        per_doc AS (
+          SELECT i.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
+                 CAST(SUM(CASE WHEN b.g IS NULL THEN 0 ELSE 1 END) AS BIGINT)
+                   AS n_contaminated
+          FROM inv i LEFT JOIN bench b USING (g)
+          WHERE i.doc_id % 20 <> 0
+          GROUP BY i.doc_id
+        )
+        SELECT d.doc_id,
+               COALESCE(p.n_grams, 0) AS n_grams,
+               COALESCE(p.n_contaminated, 0) AS n_contaminated,
+               {sql_round(
+                   'CASE WHEN COALESCE(p.n_grams, 0) > 0 THEN '
+                   'COALESCE(p.n_contaminated, 0)::DOUBLE / p.n_grams '
+                   'ELSE 0.0 END', 4)} AS contaminated_frac
+        FROM (SELECT doc_id FROM documents WHERE doc_id % 20 <> 0) d
+        LEFT JOIN per_doc p USING (doc_id)
+    """
+    con = duckdb_connect(oracle_sf_dir)
+    assert compare(out, con, sql) == []
+    assert out.filter(F.col("n_contaminated") > 0).count() > 0
+
+
+def test_gopher_quality_flags_planted(spark):
+    """Planted rule hits: bullet-heavy and ellipsis-heavy docs fail
+    their line rules, symbol soup fails the ratio, a normal doc with
+    enough words passes, empty doc fails on word count only."""
+    good = " ".join(["sentence"] * 60)
+    df = spark.createDataFrame(
+        [
+            (1, good),
+            (2, "- a\n- b\n- c"),  # 100% bullet lines
+            (3, "wait...\nmore...\nok fine\nhm...\nyes...\nstill..."),
+            (4, "# # # # words here"),
+            (5, ""),
+        ],
+        "doc_id LONG, text STRING",
+    )
+    out = {
+        r.doc_id: r for r in corpus.gopher_quality_flags(df, "doc_id", "text").collect()
+    }
+    assert out[1]["pass"] is True and out[1].n_words == 60
+    assert out[2].bullet_line_frac == 1.0 and out[2]["pass"] is False
+    assert out[3].ellipsis_line_frac == round(5 / 6, 4)
+    assert out[4].symbol_ratio == round(4 / 6, 4) and out[4]["pass"] is False
+    assert out[5].n_words == 0 and out[5]["pass"] is False
+    assert out[1].mean_word_len == 8.0
+
+
+def test_gopher_quality_flags_duckdb_parity(spark, oracle_sf_dir):
+    """Every measure and the combined verdict recomputed in DuckDB on
+    the real documents table."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        sql_round,
+    )
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        SQL_TOKENS,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    out = corpus.gopher_quality_flags(docs, "doc_id", "text")
+    sql = f"""
+        WITH base AS (
+          SELECT doc_id, text, {SQL_TOKENS} AS t,
+                 list_filter(string_split(text, chr(10)),
+                             l -> trim(l) <> '') AS lines
+          FROM documents
+        ),
+        m AS (
+          SELECT doc_id,
+                 CAST(len(t) AS BIGINT) AS n_words,
+                 CASE WHEN len(t) > 0 THEN
+                   list_sum(list_transform(t, x -> length(x)))::DOUBLE / len(t)
+                 ELSE 0.0 END AS mean_wl,
+                 CASE WHEN len(t) > 0 THEN
+                   ((length(text) - length(replace(text, '#', '')))
+                    + (length(text) - length(replace(text, '...', ''))) / 3
+                   )::DOUBLE / len(t)
+                 ELSE 0.0 END AS sym,
+                 CASE WHEN len(lines) > 0 THEN
+                   len(list_filter(lines,
+                       l -> regexp_matches(trim(l), '\\.\\.\\.$')))::DOUBLE
+                   / len(lines)
+                 ELSE 0.0 END AS ell,
+                 CASE WHEN len(lines) > 0 THEN
+                   len(list_filter(lines,
+                       l -> regexp_matches(trim(l), '^([-*•‣◦])')))::DOUBLE
+                   / len(lines)
+                 ELSE 0.0 END AS bul,
+                 CASE WHEN len(t) > 0 THEN
+                   len(list_filter(t,
+                       x -> regexp_matches(x, '[A-Za-z]')))::DOUBLE / len(t)
+                 ELSE 0.0 END AS alp
+          FROM base
+        ),
+        r AS (
+          SELECT doc_id, n_words,
+                 {sql_round('mean_wl', 4)} AS mean_word_len,
+                 {sql_round('sym', 4)} AS symbol_ratio,
+                 {sql_round('ell', 4)} AS ellipsis_line_frac,
+                 {sql_round('bul', 4)} AS bullet_line_frac,
+                 {sql_round('alp', 4)} AS alpha_word_frac
+          FROM m
+        )
+        SELECT *,
+               (n_words >= 50 AND n_words <= 100000
+                AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+                AND symbol_ratio <= 0.1
+                AND ellipsis_line_frac <= 0.3
+                AND bullet_line_frac <= 0.9
+                AND alpha_word_frac >= 0.8) AS pass
+        FROM r
+    """
+    con = duckdb_connect(oracle_sf_dir)
+    assert compare(out, con, sql) == []
+    got = out.agg(
+        F.sum(F.when(F.col("pass"), 1).otherwise(0)).alias("p"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    assert 0 < got.p  # fixture docs exercise both outcomes
+
+
+def test_surprisal_buckets_planted(spark):
+    """Global terciles on a hand-checkable corpus: 3 docs with clearly
+    ordered surprisal land head/middle/tail; an empty doc buckets NULL;
+    bad cuts raise."""
+    docs = spark.createDataFrame(
+        [
+            (1, "common common common common"),
+            (2, "common common rare1 rare2"),
+            (3, "zz1 zz2 zz3 zz4"),
+            (4, ""),
+        ],
+        "doc_id LONG, text STRING",
+    )
+    lm = corpus.unigram_logprob_table(docs, vocab_size=2)
+    out = {
+        r.doc_id: r
+        for r in corpus.surprisal_buckets(docs, lm, "doc_id", "text").collect()
+    }
+    assert out[1].bucket == "head"
+    assert out[2].bucket == "middle"
+    assert out[3].bucket == "tail"
+    assert out[4].bucket is None and out[4].n_tokens == 0
+    assert out[1].surprisal < out[2].surprisal < out[3].surprisal
+    with pytest.raises(ValueError, match="cuts"):
+        corpus.surprisal_buckets(docs, lm, cuts=(0.5, 0.4))
+
+
+def test_surprisal_buckets_duckdb_parity(spark, oracle_sf_dir):
+    """Per-source head/middle/tail on the real documents table, the
+    whole fit+score+cut+label path recomputed in DuckDB (quantile_cont
+    mirrors F.percentile's linear interpolation over the same rounded
+    scores)."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        sql_round,
+    )
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        SQL_TOKENS_LOWER,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    lm = corpus.unigram_logprob_table(docs, vocab_size=500, alpha=1.0)
+    out = corpus.surprisal_buckets(
+        docs, lm, "doc_id", "text", group_col="source"
+    )
+    sql = f"""
+        WITH toks AS (
+          SELECT unnest({SQL_TOKENS_LOWER}) AS t FROM documents
+        ),
+        counts AS (SELECT t, COUNT(*) AS c FROM toks GROUP BY t),
+        top AS (SELECT t, c FROM counts ORDER BY c DESC, t ASC LIMIT 500),
+        scal AS (
+          SELECT (SELECT SUM(c) FROM counts)::DOUBLE AS n,
+                 (SELECT COUNT(*) FROM top)::DOUBLE AS v
+        ),
+        lm AS (
+          SELECT t, ln(c + 1.0) - ln(n + 1.0 * (v + 1)) AS logp
+          FROM top, scal
+        ),
+        oov AS (SELECT ln(1.0) - ln(n + 1.0 * (v + 1)) AS logp FROM scal),
+        dtoks AS (
+          SELECT doc_id, unnest({SQL_TOKENS_LOWER}) AS t FROM documents
+        ),
+        per_doc AS (
+          SELECT d.doc_id,
+                 CAST(COUNT(*) AS BIGINT) AS n_tokens,
+                 -AVG(COALESCE(lm.logp, (SELECT logp FROM oov))) AS s_raw
+          FROM dtoks d LEFT JOIN lm ON d.t = lm.t
+          GROUP BY d.doc_id
+        ),
+        scored AS (
+          SELECT b.doc_id, b.source,
+                 COALESCE(p.n_tokens, 0) AS n_tokens,
+                 {sql_round("p.s_raw", 4)} AS surprisal
+          FROM (SELECT doc_id, source FROM documents) b
+          LEFT JOIN per_doc p USING (doc_id)
+        ),
+        cut AS (
+          SELECT source,
+                 quantile_cont(surprisal, 1.0/3.0) AS c1,
+                 quantile_cont(surprisal, 2.0/3.0) AS c2
+          FROM scored WHERE surprisal IS NOT NULL
+          GROUP BY source
+        )
+        SELECT s.doc_id, s.source, s.n_tokens, s.surprisal,
+               CASE WHEN s.surprisal IS NULL THEN NULL
+                    WHEN s.surprisal <= c.c1 THEN 'head'
+                    WHEN s.surprisal <= c.c2 THEN 'middle'
+                    ELSE 'tail' END AS bucket
+        FROM scored s LEFT JOIN cut c USING (source)
+    """
+    con = duckdb_connect(oracle_sf_dir)
+    assert compare(out, con, sql) == []
+    dist = {r.bucket: r.c for r in out.groupBy("bucket").agg(F.count(F.lit(1)).alias("c")).collect()}
+    assert dist.get("head", 0) > 0 and dist.get("tail", 0) > 0
+
+
 def test_negative_samples_semantics_and_parity(spark, oracle_sf_dir):
     """Deterministic negative sampling: (1) hand frame -- no sampled
     negative is a positive or the anchor itself, ranks are 1..k dense,
@@ -967,6 +1759,255 @@ def test_negative_samples_semantics_and_parity(spark, oracle_sf_dir):
     """
     con = duckdb_connect(oracle_sf_dir)
     assert compare(out_r, con, sql) == []
+
+
+def test_ngram_repetition_semantics(spark):
+    """Hand-computed Gopher repetition signals at n=2: full-repetition
+    doc (top gram covers everything), all-unique doc (deterministic
+    lexicographic tie-break, zero dup coverage), empty and
+    shorter-than-n docs (no grams: null top, 0.0 fractions)."""
+    df = spark.createDataFrame(
+        [
+            (1, "a b a b a b"),
+            (2, "x y z w"),
+            (3, ""),
+            (4, "hello"),
+        ],
+        "doc_id LONG, text STRING",
+    )
+    out = {
+        r.doc_id: r
+        for r in corpus.ngram_repetition(df, "doc_id", "text", n=2).collect()
+    }
+    assert out[1].n_chars == 6
+    assert out[1].top_ngram == "a b"
+    # "a b" occurs 3x, 2 chars each, over 6 token chars
+    assert out[1].top_ngram_char_frac == 1.0
+    # union of duplicated-gram spans covers every position
+    assert out[1].dup_ngram_char_frac == 1.0
+    assert out[2].top_ngram == "x y"  # count/char tie -> lexicographic
+    assert out[2].top_ngram_char_frac == 0.5
+    assert out[2].dup_ngram_char_frac == 0.0
+    for d in (3, 4):
+        assert out[d].top_ngram is None
+        assert out[d].top_ngram_char_frac == 0.0
+        assert out[d].dup_ngram_char_frac == 0.0
+    assert out[4].n_chars == 5
+
+
+def test_ngram_repetition_duckdb_replay_parity(spark, oracle_sf_dir):
+    """Full DuckDB replay at n=3 over the sf0.01 documents table: the
+    same tokenization, gram construction, deterministic top-gram rank,
+    and overlap-safe duplicate coverage -- value-hash parity on every
+    document (the promotable-oracle grade)."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        sql_round,
+    )
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        SQL_TOKENS_LOWER,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    n = 3
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    got = corpus.ngram_repetition(docs, "doc_id", "text", n=n)
+    fr = lambda c: (  # noqa: E731
+        "CASE WHEN n_chars > 0 THEN "
+        + sql_round(f"COALESCE({c}, 0)::DOUBLE / n_chars", 4)
+        + " ELSE 0.0 END"
+    )
+    sql = f"""
+        WITH base AS (
+          SELECT doc_id,
+                 CAST(COALESCE(list_sum(list_transform(ts, t -> length(t))), 0) AS BIGINT) AS n_chars,
+                 list_transform(range(1, len(ts) - {n} + 2),
+                                i -> array_to_string(list_slice(ts, i, i + {n - 1}), ' ')) AS gs
+          FROM (SELECT doc_id, {SQL_TOKENS_LOWER} AS ts FROM documents)
+        ),
+        occ AS (
+          SELECT doc_id, generate_subscripts(gs, 1) - 1 AS s, unnest(gs) AS g
+          FROM base
+        ),
+        counts AS (
+          SELECT doc_id, g, COUNT(*) AS cnt, list(s) AS starts
+          FROM occ GROUP BY doc_id, g
+        ),
+        top AS (
+          SELECT doc_id, g AS top_ngram,
+                 cnt * (length(g) - {n - 1}) AS top_chars
+          FROM (SELECT *, ROW_NUMBER() OVER (
+                  PARTITION BY doc_id
+                  ORDER BY cnt DESC, length(g) DESC, g ASC) AS rn
+                FROM counts)
+          WHERE rn = 1
+        ),
+        dup_pos AS (
+          SELECT DISTINCT doc_id, s + x AS p
+          FROM (SELECT doc_id, unnest(starts) AS s
+                FROM counts WHERE cnt >= 2),
+               (SELECT unnest(range({n})) AS x)
+        ),
+        pos AS (
+          SELECT doc_id, p, length(tok) AS tok_len
+          FROM (SELECT doc_id, generate_subscripts(ts, 1) - 1 AS p,
+                       unnest(ts) AS tok
+                FROM (SELECT doc_id, {SQL_TOKENS_LOWER} AS ts FROM documents))
+        ),
+        dup_chars AS (
+          SELECT d.doc_id, SUM(p.tok_len) AS dc
+          FROM dup_pos d JOIN pos p ON d.doc_id = p.doc_id AND d.p = p.p
+          GROUP BY d.doc_id
+        )
+        SELECT b.doc_id, b.n_chars, t.top_ngram,
+               {fr("t.top_chars")} AS top_ngram_char_frac,
+               {fr("dc.dc")} AS dup_ngram_char_frac
+        FROM base b
+        LEFT JOIN top t ON b.doc_id = t.doc_id
+        LEFT JOIN dup_chars dc ON b.doc_id = dc.doc_id
+    """
+    errs = compare(got, duckdb_connect(oracle_sf_dir), sql)
+    assert not errs, errs[:5]
+
+
+def test_ngram_repetition_plan_scale_safe(spark, sf_dir):
+    """Registry-sweep discipline for the library op: no cartesian, no
+    row-Python, no BNLJ -- grams and integer positions shuffle, text
+    bodies never do."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.plans import lint
+
+    docs = load_table(spark, sf_dir, "documents")
+    df = corpus.ngram_repetition(docs, "doc_id", "text", n=2)
+    df.write.format("noop").mode("overwrite").save()
+    assert lint.lint_plan(df) == []
+
+
+def test_winnow_fingerprints_replica_guarantee_and_parity(spark, oracle_sf_dir):
+    """Winnowing (MOSS): (1) exact pure-Python replica equality on a
+    hand corpus (leftmost-min tie-break, degenerate short docs);
+    (2) the paper's guarantee -- two docs sharing a substring of
+    window + k - 1 tokens share >= 1 fingerprint, surfaced by
+    winnow_matches; (3) density is ~2/(window+1) of the gram count on
+    real text; (4) sub-k docs emit nothing; (5) full DuckDB replay on
+    the documents table via the engine's md5_hash60 bridge."""
+    import hashlib
+
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from tests.parity import compare, duckdb_connect
+
+    k, w = 3, 4
+
+    def h60(gram: str) -> int:
+        return int(hashlib.md5(gram.encode()).hexdigest()[:15], 16)
+
+    def py_winnow(txt: str, k: int, w: int) -> set:
+        toks = txt.lower().split()
+        grams = [
+            " ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)
+        ]
+        hs = [h60(g) for g in grams]
+        if not hs:
+            return set()
+        if len(hs) < w:
+            m = min(range(len(hs)), key=lambda i: (hs[i], i))
+            return {(m, hs[m])}
+        out = set()
+        for s in range(len(hs) - w + 1):
+            m = min(range(s, s + w), key=lambda i: (hs[i], i))
+            out.add((m, hs[m]))
+        return out
+
+    docs = [
+        (1, "the quick brown fox jumps over the lazy dog again and again"),
+        (2, "pack my box with five dozen liquor jugs"),
+        (3, "a b"),          # < k tokens: no grams
+        (4, "a b c"),        # exactly one gram: degenerate window
+        (5, "x y z x y z"),  # repeated grams: dedup via distinct
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        d: set()
+        for d in (1, 2, 4, 5)
+    }
+    for r in corpus.winnow_fingerprints(df, "doc_id", "text", k, w).collect():
+        got.setdefault(r.doc_id, set()).add((r.pos, r.fp))
+    for did, txt in docs:
+        assert got.get(did, set()) == py_winnow(txt, k, w), did
+
+    # guarantee: planted shared run of w + k - 1 = 6 tokens
+    shared = "alpha beta gamma delta epsilon zeta"
+    pair = spark.createDataFrame(
+        [
+            (10, "one two three " + shared + " four five six"),
+            (20, "seven eight " + shared + " nine ten eleven twelve"),
+        ],
+        "doc_id long, text string",
+    )
+    fps = corpus.winnow_fingerprints(pair, "doc_id", "text", k, w)
+    m = corpus.winnow_matches(fps, fps, min_shared=1).filter(
+        F.col("id_a") < F.col("id_b")
+    )
+    assert m.count() == 1 and m.first().n_shared >= 1
+
+    with pytest.raises(ValueError, match=">= 1"):
+        corpus.winnow_fingerprints(df, "doc_id", "text", 0, w)
+
+    # density + DuckDB replay on real documents
+    real = load_table(spark, oracle_sf_dir, "documents")
+    fps_r = corpus.winnow_fingerprints(real, "doc_id", "text", 5, 8)
+    n_fp = fps_r.count()
+    from bigdata_storage_and_proccess_job_data_spark.functions import text
+
+    n_grams = real.select(F.explode(text.word_ngrams("text", 5))).count()
+    assert 0.1 < n_fp / (n_grams * 2 / 9) < 2.5  # ~2/(w+1) density
+
+    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
+        _md5_hash60_sql,
+    )
+
+    got_r = fps_r.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_fp"),
+        F.sum(F.col("fp") % 1000003).alias("fp_sum"),
+        F.sum("pos").alias("pos_sum"),
+    )
+    sql = f"""
+        WITH toks AS (
+          SELECT doc_id,
+                 string_split_regex(trim(lower(text)), '\\s+') AS t
+          FROM documents WHERE trim(text) <> ''
+        ),
+        grams AS (
+          SELECT doc_id, i - 1 AS pos,
+                 array_to_string(t[i:i+4], ' ') AS g
+          FROM toks, UNNEST(range(1, len(t) - 3)) AS u(i)
+          WHERE len(t) >= 5
+        ),
+        hashed AS (
+          SELECT doc_id, pos, {_md5_hash60_sql('g')} AS h,
+                 COUNT(*) OVER (PARTITION BY doc_id) AS n
+          FROM grams
+        ),
+        sel AS (
+          SELECT doc_id,
+                 COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos
+                   ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS wcnt,
+                 min({{'h': h, 'p': pos}}) OVER (PARTITION BY doc_id
+                   ORDER BY pos
+                   ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS m,
+                 pos, n
+          FROM hashed
+        ),
+        fps AS (
+          SELECT DISTINCT doc_id, m.p AS pos, m.h AS fp
+          FROM sel WHERE wcnt = 8 OR (n < 8 AND pos = 0)
+        )
+        SELECT doc_id, COUNT(*) AS n_fp,
+               CAST(SUM(fp % 1000003) AS BIGINT) AS fp_sum,
+               CAST(SUM(pos) AS BIGINT) AS pos_sum
+        FROM fps GROUP BY doc_id
+    """
+    assert compare(got_r, duckdb_connect(oracle_sf_dir), sql) == []
 
 
 def test_mask_tokens_twin_rate_and_duckdb_parity(spark, oracle_sf_dir):
@@ -1417,6 +2458,59 @@ def test_kn_surprisal_continuation_pin_and_parity(spark, oracle_sf_dir):
     assert not errs, errs[:5]
 
 
+def test_compression_ratio_replica_and_signal(spark, oracle_sf_dir):
+    """zlib redundancy signal: bit-exact against a pure-Python replica
+    on real documents (fixed level => deterministic DEFLATE), ordered
+    as expected across text classes (repeated boilerplate << prose <<
+    high-entropy noise), and NULL on empty/NULL text."""
+    import zlib
+
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+
+    docs = load_table(spark, oracle_sf_dir, "documents").filter(
+        F.col("doc_id") < 80
+    )
+    got = {
+        r.doc_id: r.compression_ratio
+        for r in corpus.compression_ratio(docs).collect()
+    }
+    for r in docs.select("doc_id", "text").collect():
+        raw = r.text.encode("utf-8")
+        want = (
+            len(zlib.compress(raw, 6)) / len(raw) if raw else None
+        )
+        assert got[r.doc_id] == want  # bit-exact
+
+    probe = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog " * 40),
+            (2, "spam " * 400),
+            (
+                3,
+                "".join(  # chained md5 hex: genuinely incompressible
+                    __import__("hashlib").md5(str(i).encode()).hexdigest()
+                    for i in range(60)
+                ),
+            ),
+            (4, ""),
+            (5, None),
+        ],
+        "doc_id long, text string",
+    )
+    p = {
+        r.doc_id: r.compression_ratio
+        for r in corpus.compression_ratio(probe).collect()
+    }
+    # both repetitive classes compress away; high-entropy noise doesn't
+    assert max(p[1], p[2]) < 0.1 < p[3] and p[3] > 0.5
+    assert p[4] is None and p[5] is None
+
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError, match="level"):
+        corpus.compression_ratio(probe, level=0)
+
+
 def test_consensus_labels_and_rater_quality(spark, oracle_sf_dir):
     """Label aggregation: (1) hand pins -- plurality winner,
     deterministic tie-break on label order, weighted votes flip the
@@ -1550,6 +2644,120 @@ def test_consensus_labels_and_rater_quality(spark, oracle_sf_dir):
         GROUP BY b.rater
     """
     assert compare(gotq, duckdb_connect(oracle_sf_dir), sqlq) == []
+
+
+def test_ngram_overlap_clipping_and_parity(spark, oracle_sf_dir):
+    """ROUGE/BLEU overlap: (1) hand math with a repeated gram -- the
+    clip means stuffing 'the cat' twice earns credit only for the
+    reference's counts; (2) identical texts score 1/1/1; (3) a side
+    shorter than the gram order reads NULL, not 0; (4) NULL texts are
+    excluded; (5) full DuckDB unigram replay on documents against a
+    prefix-slice reference."""
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        sql_round,
+        stable_round,
+    )
+    from tests.parity import compare, duckdb_connect
+
+    df = spark.createDataFrame(
+        [
+            (1, "the cat the cat sat", "the cat sat on the mat"),
+            (2, "same text", "same text"),
+            (3, "a", "b c"),          # cand has zero bigrams
+            (4, None, "x y"),         # excluded
+        ],
+        "id long, cand string, ref string",
+    )
+    got = {
+        r.id: r for r in corpus.ngram_overlap(df, "id", "cand", "ref").collect()
+    }
+    assert 4 not in got
+    # cand unigrams: the:2 cat:2 sat:1 (5); ref: the:2 cat:1 sat:1 on:1
+    # mat:1 (6); clipped = 2 + 1 + 1 = 4
+    assert (got[1].n_cand, got[1].n_ref, got[1].n_match) == (5, 6, 4)
+    assert got[1].precision == pytest.approx(4 / 5)
+    assert got[1].recall == pytest.approx(4 / 6)
+    p, r_ = 4 / 5, 4 / 6
+    assert got[1].f1 == pytest.approx(2 * p * r_ / (p + r_))
+    assert (
+        got[2].precision == got[2].recall == got[2].f1 == 1.0
+    )
+    bi = {
+        r.id: r
+        for r in corpus.ngram_overlap(df, "id", "cand", "ref", ngram=2)
+        .collect()
+    }
+    assert bi[3].n_cand == 0
+    assert bi[3].precision is None and bi[3].f1 is None
+    assert bi[3].recall == 0.0  # ref has one bigram, nothing matched
+    import pytest as _pt
+
+    with _pt.raises(ValueError, match="ngram"):
+        corpus.ngram_overlap(df, "id", "cand", "ref", ngram=0)
+
+    docs = load_table(spark, oracle_sf_dir, "documents").filter(
+        F.trim(F.col("text")) != ""
+    ).select(
+        "doc_id",
+        F.col("text").alias("cand"),
+        F.substring(F.col("text"), 1, 100).alias("ref"),
+    )
+    out = corpus.ngram_overlap(docs, "doc_id", "cand", "ref").select(
+        "doc_id",
+        "n_cand",
+        "n_ref",
+        "n_match",
+        stable_round(F.col("precision"), 8).alias("precision"),
+        stable_round(F.col("recall"), 8).alias("recall"),
+        stable_round(F.col("f1"), 8).alias("f1"),
+    )
+    sql = rf"""
+        WITH base AS (
+          SELECT doc_id,
+                 string_split_regex(lower(trim(text)), '\s+') AS ct,
+                 CASE WHEN trim(substr(text, 1, 100)) = '' THEN []
+                      ELSE string_split_regex(
+                        lower(trim(substr(text, 1, 100))), '\s+')
+                 END AS rt
+          FROM documents WHERE trim(text) <> '' AND text IS NOT NULL
+        ),
+        c AS (
+          SELECT doc_id, unnest(ct) AS g FROM base
+        ),
+        cc AS (SELECT doc_id, g, COUNT(*) AS cc FROM c GROUP BY 1, 2),
+        r AS (
+          SELECT doc_id, unnest(rt) AS g FROM base
+        ),
+        rc AS (SELECT doc_id, g, COUNT(*) AS rc FROM r GROUP BY 1, 2),
+        m AS (
+          SELECT cc.doc_id, SUM(LEAST(cc.cc, rc.rc)) AS n_match
+          FROM cc JOIN rc ON cc.doc_id = rc.doc_id AND cc.g = rc.g
+          GROUP BY 1
+        ),
+        s AS (
+          SELECT b.doc_id,
+                 CAST(len(ct) AS BIGINT) AS n_cand,
+                 CAST(len(rt) AS BIGINT) AS n_ref,
+                 CAST(COALESCE(m.n_match, 0) AS BIGINT) AS n_match
+          FROM base b LEFT JOIN m ON b.doc_id = m.doc_id
+        ),
+        pr AS (
+          SELECT doc_id, n_cand, n_ref, n_match,
+                 CASE WHEN n_cand > 0 THEN n_match * 1.0 / n_cand END AS p,
+                 CASE WHEN n_ref > 0 THEN n_match * 1.0 / n_ref END AS r
+          FROM s
+        )
+        SELECT doc_id, n_cand, n_ref, n_match,
+               {sql_round('p', 8)} AS precision,
+               {sql_round('r', 8)} AS recall,
+               {sql_round(
+                   'CASE WHEN p IS NOT NULL AND r IS NOT NULL AND p + r > 0 '
+                   'THEN 2 * p * r / (p + r) END', 8
+               )} AS f1
+        FROM pr
+    """
+    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
 
 
 def test_balanced_shards_serpentine_and_parity(spark, oracle_sf_dir):

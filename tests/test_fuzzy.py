@@ -1,9 +1,19 @@
-"""Character q-gram tokenization (the blocking key of edit-distance
-matching): gram shapes on short, empty and NULL strings."""
+"""Blocked fuzzy (edit-distance) joins: hand-built edge cases, exact
+completeness parity against a DuckDB brute-force cross join, the
+recall-knob subset property, and the scale-plan lint."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
+from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
 from bigdata_storage_and_proccess_job_data_spark.functions import text
+from bigdata_storage_and_proccess_job_data_spark.operators import fuzzy
+from bigdata_storage_and_proccess_job_data_spark.plans.lint import (
+    assert_scalable,
+)
+from tests.parity import compare, duckdb_connect
 
 
 def test_char_qgrams_shapes(spark):
@@ -18,3 +28,162 @@ def test_char_qgrams_shapes(spark):
     assert got[1] == ([], [])
     assert got[2] == ([], [])
     assert got[3] == (None, None)
+
+
+def test_fuzzy_self_pairs_edge_cases(spark):
+    """The blocking construction's danger zones, hand-built: a typo in
+    the FIRST character (prefix blocking would lose it), an insertion,
+    two substitutions at distance exactly d, a pair at d+1 (excluded),
+    short strings below the q*(d+1) cutoff (gram bound void -- band
+    path), an exact duplicate, and NULLs (never match)."""
+    rows = [
+        (1, "jonathan"),
+        (2, "bonathan"),  # first-char substitution, dist 1
+        (3, "jonathann"),  # insertion, dist 1
+        (4, "xyzzy"),  # unrelated
+        (5, "ab"),  # short: len 2 < q*(d+1) = 6
+        (6, "ba"),  # transposition = 2 substitutions, dist 2
+        (7, "ab"),  # exact dup of 5
+        (8, None),
+        (9, "jxnathxn"),  # two substitutions, dist exactly 2
+        (10, "jxnxthxn"),  # three substitutions, dist 3 -> excluded
+    ]
+    df = spark.createDataFrame(rows, ["id", "name"])
+    got = {
+        (r.id_a, r.id_b): r.dist
+        for r in fuzzy.fuzzy_self_pairs(df, "id", "name", max_dist=2).collect()
+    }
+    assert got == {
+        (1, 2): 1,
+        (1, 3): 1,
+        (1, 9): 2,
+        (2, 3): 2,
+        (5, 6): 2,
+        (5, 7): 0,
+        (6, 7): 2,
+        (9, 10): 1,
+    }
+
+
+def test_fuzzy_self_pairs_brute_force_parity(spark, sf_dir):
+    """Completeness on real data: the blocked join reproduces the DuckDB
+    brute-force cross join EXACTLY (every pair, every distance) at two
+    radii that exercise both candidate paths -- p_name lengths are 7-12,
+    so d=2 (cutoff 6) is all-gram-path and d=4 (cutoff 10) routes most
+    strings through the short band too."""
+    part = load_table(spark, sf_dir, "part")
+    con = duckdb_connect(sf_dir)
+    for d in (2, 4):
+        out = fuzzy.fuzzy_self_pairs(
+            part, "p_partkey", "p_name", max_dist=d
+        ).select(
+            F.col("id_a").alias("id_a"),
+            F.col("id_b").alias("id_b"),
+            F.col("dist").cast("long").alias("dist"),
+        )
+        sql = f"""
+        SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
+               levenshtein(a.p_name, b.p_name)::BIGINT AS dist
+        FROM part a JOIN part b ON a.p_partkey < b.p_partkey
+        WHERE levenshtein(a.p_name, b.p_name) <= {d}
+        """
+        assert compare(out, con, sql) == []
+
+
+def test_fuzzy_join_two_sided(spark, sf_dir):
+    """Two-table form: part names against a mutated copy (one char
+    flipped) must match each original to its mutant at dist <= 1, and
+    the column contract is (left_id, right_id, dist)."""
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 50)
+    mutated = part.select(
+        (F.col("p_partkey") + 100000).alias("m_key"),
+        F.concat(
+            F.lit("z"), F.substring("p_name", 2, 10000)
+        ).alias("m_name"),
+    )
+    out = fuzzy.fuzzy_join(
+        part, mutated, "p_partkey", "p_name", "m_key", "m_name", max_dist=1
+    )
+    assert out.columns == ["p_partkey", "m_key", "dist"]
+    hits = {(r.p_partkey, r.m_key) for r in out.collect()}
+    # every original finds its own mutant (dist exactly 1, or 0 if the
+    # name already started with z)
+    assert {
+        (r.p_partkey, r.p_partkey + 100000)
+        for r in part.select("p_partkey").collect()
+    } <= hits
+
+
+def test_fuzzy_gram_freq_knob_is_subset(spark, sf_dir):
+    """max_gram_freq trades recall, never precision: its output is a
+    subset of the exact join's, and every surviving row is a true pair."""
+    part = load_table(spark, sf_dir, "part")
+    exact = {
+        (r.id_a, r.id_b)
+        for r in fuzzy.fuzzy_self_pairs(
+            part, "p_partkey", "p_name", max_dist=2
+        ).collect()
+    }
+    capped = {
+        (r.id_a, r.id_b)
+        for r in fuzzy.fuzzy_self_pairs(
+            part, "p_partkey", "p_name", max_dist=2, max_gram_freq=20
+        ).collect()
+    }
+    assert capped <= exact
+
+
+def test_fuzzy_plan_scalable(spark, sf_dir):
+    """No cartesian / nested-loop anywhere in the blocked plan -- the
+    whole point of the construction."""
+    part = load_table(spark, sf_dir, "part")
+    assert_scalable(fuzzy.fuzzy_self_pairs(part, "p_partkey", "p_name", 2))
+
+
+def test_fuzzy_validation():
+    with pytest.raises(ValueError, match="max_dist"):
+        fuzzy.fuzzy_join(None, None, "a", "x", "b", "y", max_dist=-1)
+    with pytest.raises(ValueError, match="q must"):
+        fuzzy.fuzzy_join(None, None, "a", "x", "b", "y", q=0)
+    with pytest.raises(ValueError, match="max_gram_freq"):
+        fuzzy.fuzzy_join(None, None, "a", "x", "b", "y", max_gram_freq=0)
+    with pytest.raises(ValueError, match="must differ"):
+        fuzzy.fuzzy_join(None, None, "k", "x", "k", "y")
+
+
+def test_resolve_entities_typo_families(spark):
+    """Two typo families (one linked only through a CHAIN of 1-edit
+    steps), a singleton, and a NULL: min-id canonicals, chain collapse,
+    singletons self-resolved."""
+    rows = [
+        (10, "acme corp"),
+        (11, "acme c0rp"),   # 1 edit from 10
+        (12, "acme c0rpx"),  # 1 edit from 11, 2 from 10 (chain)
+        (20, "globex"),
+        (21, "globexx"),
+        (30, "initech"),     # singleton
+        (40, None),
+    ]
+    df = spark.createDataFrame(rows, ["id", "name"])
+    out = {
+        r.id: (r.entity_id, r.canonical)
+        for r in fuzzy.resolve_entities(df, "id", "name", max_dist=1).collect()
+    }
+    assert out[10] == (10, "acme corp")
+    assert out[11] == (10, "acme corp")
+    assert out[12] == (10, "acme corp")  # joined through the chain
+    assert out[20] == (20, "globex")
+    assert out[21] == (20, "globex")
+    assert out[30] == (30, "initech")
+    assert out[40] == (40, None)
+    assert len(out) == 7
+
+
+def test_resolve_entities_all_unique(spark):
+    """No matches anywhere -> every row is its own entity."""
+    df = spark.createDataFrame(
+        [(1, "alpha-one"), (2, "betabetab"), (3, "gamma-xyz")], ["id", "name"]
+    )
+    out = {r.id: r.entity_id
+           for r in fuzzy.resolve_entities(df, "id", "name", 1).collect()}
+    assert out == {1: 1, 2: 2, 3: 3}

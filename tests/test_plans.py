@@ -322,20 +322,26 @@ def test_windows_partition_registry():
 def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
     """Plan lint over library operators that are not registry queries
     (the sweep above only covers registered plans): spatial blocking
-    must resolve to an equi-join (never a cartesian/BNLJ), and
-    incremental agg maintenance, sessionize and the SCD2 fold and
-    point-in-time join stay clean."""
+    must resolve to an equi-join (never a cartesian/BNLJ), incremental
+    agg maintenance, sessionize, item-item co-occurrence, period-over-
+    period, AUC, running distinct and the SCD2 fold and point-in-time
+    join stay clean, and keywords_tfidf's single BroadcastNestedLoopJoin
+    is exactly the one-row corpus-size scalar broadcast -- the
+    documented exemption class (probe-scoped bounded frames)."""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         aggregates,
+        baskets,
+        corpus,
         funnel,
         spatial,
     )
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
     from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
+    docs = load_table(spark, sf_dir, "documents")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -362,7 +368,15 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
         df.write.format("noop").mode("overwrite").save()
         assert lint.lint_plan(df) == [], name
 
+    kw = corpus.keywords_tfidf(docs, k=3)
+    kw.write.format("noop").mode("overwrite").save()
+    assert lint.lint_plan(kw, allow_bnlj=True) == []
+    # and the BNLJ really is the scalar broadcast, nothing larger
+    plan = lint.plan_string(kw)
+    assert plan.count("BroadcastNestedLoopJoin") <= 1
+
     events = load_table(spark, sf_dir, "events")
+    li = load_table(spark, sf_dir, "lineitem")
     s0 = orders
     s1 = orders.filter(F.col("o_orderkey") % 5 != 0)
     feed2 = versioned.change_feed(s0, s1, "o_orderkey")
@@ -373,6 +387,26 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
             feed2,
             "o_orderkey",
             "2024-02-01",
+        ),
+        "period_over_period": aggregates.period_over_period(
+            s0.withColumn("m", F.col("o_orderkey") % 12),
+            "m",
+            {"rev": F.sum("o_totalprice")},
+            keys=["o_orderpriority"],
+        ),
+        "binary_auc": aggregates.binary_auc(
+            s0.select(
+                "o_orderpriority",
+                (F.col("o_orderkey") % 3 == 0).alias("y"),
+                (F.col("o_totalprice") / 600000.0).alias("s"),
+            ),
+            "y",
+            "s",
+            keys=["o_orderpriority"],
+        ),
+        "running_distinct": aggregates.running_distinct(
+            events, "user_id", "ts",
+            keys=["event_type"], tiebreak_cols=["event_id"],
         ),
         "scd2_join": versioned.scd2_join(
             # facts drop the dimension-owned column: scd2_join REFUSES
@@ -393,6 +427,20 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
     for name, df in clean2.items():
         df.write.format("noop").mode("overwrite").save()
         assert lint.lint_plan(df) == [], name
+
+    # cooccurrence builds on frequent_pairs(with_lift=False), so the
+    # symmetric union duplicates NO scalar subtree: zero BNLJ
+    cf = baskets.cooccurrence_similarity(
+        li.join(s0, li.l_orderkey == s0.o_orderkey, "inner").select(
+            "o_orderkey", "l_partkey"
+        ),
+        "o_orderkey",
+        "l_partkey",
+        min_count=2,
+        top_k=3,
+    )
+    cf.write.format("noop").mode("overwrite").save()
+    assert lint.lint_plan(cf) == []
 
 
 def test_scan_report_surfaces_pushdown_and_rows(spark, sf_dir):
@@ -452,7 +500,8 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     late-r8 library operators get the same hygiene check here: no
     CartesianProduct, no row-at-a-time Python, BNLJ only where the
     operator's contract documents it (hard_negatives' bounded broadcast
-    query set -- the brute_force_topk precedent)."""
+    query set -- the brute_force_topk precedent), and a Python Arrow
+    node only in ewma (the documented applyInPandas exception)."""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
@@ -464,6 +513,7 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
 
     orders = load_table(spark, oracle_sf_dir, "orders")
+    events = load_table(spark, oracle_sf_dir, "events")
     docs = load_table(spark, oracle_sf_dir, "documents")
     emb = load_table(spark, oracle_sf_dir, "embeddings")
 
@@ -478,6 +528,27 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
             ),
             docs.select(F.col("doc_id").alias("item_id")),
             k=3,
+        ),
+        "seasonal_decompose": aggregates.seasonal_decompose(
+            orders.groupBy(
+                F.col("o_orderpriority").alias("g"),
+                F.date_trunc("month", "o_orderdate").alias("m"),
+            ).agg(F.sum("o_totalprice").alias("v")),
+            ["g"], "m", "v", period=4,
+        ),
+        "survival_curve": aggregates.survival_curve(
+            orders.select(
+                F.col("o_orderpriority").alias("g"),
+                (F.col("o_orderkey") % 50).alias("dur"),
+                (F.col("o_orderkey") % 3 != 0).cast("int").alias("ev"),
+            ),
+            ["g"], "dur", "ev",
+        ),
+        "rate_anomalies": aggregates.rate_anomalies(
+            events, ["event_type"], "ts"
+        ),
+        "gini_coefficient": aggregates.gini_coefficient(
+            orders, ["o_orderpriority"], "o_totalprice"
         ),
         "bootstrap_ci": aggregates.bootstrap_ci(
             orders, ["o_orderpriority"], "o_totalprice", "o_orderkey",
@@ -499,11 +570,31 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     )
     assert lint.lint_plan(hn, allow_bnlj=True) == []
 
+    ew = aggregates.ewma(
+        orders.select(
+            F.col("o_orderpriority").alias("k"),
+            F.col("o_orderkey").alias("t"),
+            F.col("o_totalprice").alias("v"),
+        ),
+        ["k"], "t", "v", 0.3,
+    )
+    findings = lint.lint_plan(ew)
+    # the ONLY finding may be the Arrow map node (never CartesianProduct)
+    assert all("Cartesian" not in f and "NestedLoop" not in f for f in findings)
+
     from bigdata_storage_and_proccess_job_data_spark.operators import bpe
 
     enc = bpe.bpe_encode(docs.limit(5), "text", [("t", "h"), ("th", "e")])
     findings = lint.lint_plan(enc)
     assert all("Cartesian" not in f and "NestedLoop" not in f for f in findings)
+
+
+def __winnow_fps(spark, sf_dir):
+    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+    from bigdata_storage_and_proccess_job_data_spark.operators import corpus
+
+    docs = load_table(spark, sf_dir, "documents")
+    return corpus.winnow_fingerprints(docs, "doc_id", "text", 5, 8)
 
 
 def test_r9_experiment_ops_pass_the_plan_lint(spark, oracle_sf_dir):
@@ -552,6 +643,7 @@ def test_r9_experiment_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         "srm_check": aggregates.srm_check(
             pre, "arm", {"even": 1, "odd": 1}, ["o_orderpriority"]
         ),
+        "winnow_fingerprints": __winnow_fps(spark, oracle_sf_dir),
         "cusum_changepoints": aggregates.cusum_changepoints(
             pre.select(
                 "o_orderpriority",
@@ -619,9 +711,10 @@ def test_restart_wave_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     """Query-composable library operators ride the same registry
     hygiene sweep: no CartesianProduct, no row-at-a-time Python, no
     unwaived nested-loop joins. (Arrow/iterative-by-design paths --
-    unigram_fit, mips of the brute kind uses an explicit broadcast
-    cross join waived at the registry level like knn_brute_force --
-    are replica-tested instead.)"""
+    unigram_fit, compression_ratio, mips of the brute kind uses an
+    explicit broadcast cross join waived at the registry level like
+    knn_brute_force -- are replica-tested instead; abc_classes bounds
+    its collect by contract.)"""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
@@ -671,6 +764,9 @@ def test_restart_wave_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         "anova_oneway": aggregates.anova_oneway(
             orders, "o_orderpriority", "o_totalprice"
         ),
+        "abc_classes": aggregates.abc_classes(
+            orders, "o_custkey", "o_totalprice"
+        ),
         "target_encode_apply": features.target_encode_apply(
             orders, te, ["o_orderpriority"], loo_target="o_totalprice"
         ),
@@ -680,6 +776,7 @@ def test_restart_wave_ops_pass_the_plan_lint(spark, oracle_sf_dir):
     # registry's standing waiver; everything else must be BNLJ-free
     scalar_waived = {
         "kn_surprisal",          # one-row OOV continuation mass
+        "abc_classes",           # one-row grand total
         "curriculum_order",      # one-row n for the exact ntile
         "target_encode_apply",   # one-row prior/smoothing stats
     }
@@ -724,6 +821,18 @@ def test_r11_eval_ops_pass_the_plan_lint(spark, oracle_sf_dir):
         ),
         "lift_table": aggregates.lift_table(
             orders, "s", "y", "id", n_buckets=10
+        ),
+        # ngram_overlap's (id, gram)-keyed clip join must be an
+        # equi-join, never a nested loop over documents
+        "ngram_overlap": corpus.ngram_overlap(
+            docs.select(
+                "doc_id",
+                F.col("text").alias("cand"),
+                F.substring("text", 1, 100).alias("ref"),
+            ),
+            "doc_id",
+            "cand",
+            "ref",
         ),
         # serpentine shard dealing rides the two-phase global rank --
         # no single-task window may appear

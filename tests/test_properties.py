@@ -1049,6 +1049,61 @@ def test_classification_report_replica_on_generated_confusions(spark):
         assert (rp.tp, rp.fp, rp.fn, rp.tn) == (tp, fp, fn, tn)
 
 
+def test_ngram_overlap_invariants_on_generated_texts(spark):
+    """ngram_overlap on generated token sequences: swapping candidate
+    and reference swaps precision and recall exactly (the clip is
+    symmetric), all ratios live in [0, 1], self-overlap is identically
+    1, and n_match never exceeds either side's gram count."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as hst
+
+    from bigdata_storage_and_proccess_job_data_spark.operators import corpus
+
+    vocab = ["aa", "bb", "cc", "dd"]
+    pairs: list[tuple[str, str]] = []
+
+    @settings(
+        max_examples=15,
+        database=None,
+        derandomize=True,
+        suppress_health_check=list(HealthCheck),
+    )
+    @given(
+        hst.lists(hst.sampled_from(vocab), min_size=1, max_size=12),
+        hst.lists(hst.sampled_from(vocab), min_size=1, max_size=12),
+    )
+    def grab(a, b):
+        pairs.append((" ".join(a), " ".join(b)))
+
+    grab()
+
+    df = spark.createDataFrame(
+        [(i, c, r) for i, (c, r) in enumerate(pairs)],
+        "id int, cand string, ref string",
+    )
+    fwd = {
+        r.id: r
+        for r in corpus.ngram_overlap(df, "id", "cand", "ref").collect()
+    }
+    rev = {
+        r.id: r
+        for r in corpus.ngram_overlap(df, "id", "ref", "cand").collect()
+    }
+    selfo = {
+        r.id: r
+        for r in corpus.ngram_overlap(df, "id", "cand", "cand").collect()
+    }
+    for i in range(len(pairs)):
+        f, b, s = fwd[i], rev[i], selfo[i]
+        assert f.n_match == b.n_match
+        assert f.n_match <= min(f.n_cand, f.n_ref)
+        assert f.precision == pytest.approx(b.recall)
+        assert f.recall == pytest.approx(b.precision)
+        for v in (f.precision, f.recall, f.f1):
+            assert v is None or 0.0 <= v <= 1.0
+        assert s.precision == s.recall == s.f1 == 1.0
+
+
 def test_sq8_invariants_on_generated_vectors(spark):
     """Property: for ANY finite vector (components spanning 12 orders
     of magnitude, negatives, exact zeros) SQ8 encoding satisfies its
