@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
+
 
 def conditional_count(pred: Column) -> Column:
     """count of rows where pred -- the reference's sum(when(p,1).otherwise(0))
@@ -2542,9 +2544,8 @@ def global_row_number(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    off_df = df.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()],
-        "_gpid INT, _goff LONG",
+    off_df = local_frame(
+        df.sparkSession, list(offsets.items()), "_gpid INT, _goff LONG"
     )
     w = Window.partitionBy("_gpid").orderBy(*order_cols)
     return (

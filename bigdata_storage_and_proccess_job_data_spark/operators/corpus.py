@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.functions import text
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
 
 # Shared PII patterns (dialect-portable: plain char classes, no
 # lookaround, so Java regex and DuckDB's RE2 agree).
@@ -2840,7 +2841,8 @@ def bradley_terry_fit(
         comparisons.select(w.alias("item")).schema.add("strength", "double")
         .add("n_wins", "long").add("n_losses", "long").add("n_games", "long")
     )
-    return comparisons.sparkSession.createDataFrame(
+    return local_frame(
+        comparisons.sparkSession,
         [
             (
                 i,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.functions import text
 from bigdata_storage_and_proccess_job_data_spark.functions.numeric import stable_round
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
 
 
 def bm25_topk(
@@ -141,7 +142,7 @@ def bm25_topk(
     finally:
         if materialize:
             hits.unpersist()
-    return docs.sparkSession.createDataFrame(rows, schema)
+    return local_frame(docs.sparkSession, rows, schema)
 
 
 def mmr_rerank(

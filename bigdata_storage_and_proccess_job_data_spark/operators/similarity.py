@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.functions import vectors
 from bigdata_storage_and_proccess_job_data_spark.functions.numeric import stable_round
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -1233,7 +1234,8 @@ def ivfpq_topk_from_index(
     cents = np.asarray(centroids, dtype=np.float64)
     qdots = qm @ cents.T
     order = np.argsort(-qdots, axis=1)[:, :n_probe]
-    probe = spark.createDataFrame(
+    probe = local_frame(
+        spark,
         [
             (
                 int(qids[i]),

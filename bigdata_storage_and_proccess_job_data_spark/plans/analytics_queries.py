@@ -17,6 +17,7 @@ from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
     stable_round,
 )
 from bigdata_storage_and_proccess_job_data_spark.plans.registry import register
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -1383,7 +1384,8 @@ def table_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("o_totalprice")),
         )
         .unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(10_000_001, "O", 1.0), (10_000_002, "F", 2.0)],
                 "o_orderkey long, o_orderstatus string, o_totalprice double",
             )

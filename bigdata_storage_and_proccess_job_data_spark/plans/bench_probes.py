@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
 from bigdata_storage_and_proccess_job_data_spark.sources import lake
 
 # per-process memo: (sf_dir -> probe key); the max-key lookup is a
@@ -131,7 +132,7 @@ def point_lookup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _KEY_CACHE[sf_dir] = k
     return (
-        spark.read.parquet(dest)
+        lake.read_parquet(spark, dest)
         .filter(F.col("l_orderkey") == F.lit(k))
         .select(
             "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
@@ -335,7 +336,8 @@ def _cow_delete_band(spark: SparkSession, sf_dir: str, version):
         rep = versioned.delete_where(
             spark, clone_dir, "o_orderkey", lo, hi
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (
                     rep["files_rewritten"],
@@ -491,8 +493,8 @@ def incr_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 
     dest = ensure_ivm_state(spark, sf_dir)
-    state = spark.read.parquet(os.path.join(dest, "state"))
-    feed = spark.read.parquet(os.path.join(dest, "feed"))
+    state = lake.read_parquet(spark, os.path.join(dest, "state"))
+    feed = lake.read_parquet(spark, os.path.join(dest, "feed"))
     return aggregates.agg_state_result(
         aggregates.agg_state_apply(state, feed, _IVM_KEYS, _IVM_MEASURES),
         _IVM_KEYS,
@@ -507,7 +509,7 @@ def full_agg_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 
     dest = ensure_ivm_state(spark, sf_dir)
-    new = spark.read.parquet(os.path.join(dest, "new"))
+    new = lake.read_parquet(spark, os.path.join(dest, "new"))
     return aggregates.agg_state_result(
         aggregates.agg_state_init(new, _IVM_KEYS, _IVM_MEASURES),
         _IVM_KEYS,

@@ -13,6 +13,7 @@ from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
     stable_round,
 )
 from bigdata_storage_and_proccess_job_data_spark.plans.registry import register
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
 
 # SQL mirrors of functions/text.py expressions (DuckDB dialect).
 # The CASE guard mirrors text.tokens' empty-string rule: Spark maps ''
@@ -917,7 +918,7 @@ def media_features_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = out.schema
     finally:
         feats.unpersist()
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1706,8 +1707,8 @@ def consensus_labels_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fleiss_kappa_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fleiss' kappa per order status (operators/aggregates.py:
     fleiss_kappa): each customer is an 'item' rated once per order with
-    the order's priority, raters anonymous -- the multi-annotator
-    agreement gate beside cohen_kappa, with the classic equal-ratings
+    the order's priority, raters anonymous -- chance-corrected
+    agreement among many anonymous raters, with the classic equal-ratings
     design enforced by the modal-count filter and the excluded share
     reported as coverage (ragged by construction here, so the filter
     and the coverage readout are live at the driver). Scale shape: one
@@ -1889,7 +1890,8 @@ def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not qrow:
         id_field = next(f for f in cands.schema.fields if f.name == "doc_id")
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 [

@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -93,3 +94,32 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # trees must not OOM the driver rendering debug text
     spark.conf.set("spark.sql.maxPlanStringLength", str(1024 * 1024))
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (a list of tuples or Rows, in
+    ``schema`` order; ``schema`` a StructType or a DDL string) that
+    runs no Spark job. ``createDataFrame(<list>, schema)`` plans an
+    RDD scan over ``parallelize``, so every action on it -- collect,
+    or a broadcast of it -- launches a job through a Python worker;
+    built from a pyarrow Table the same rows become a LocalRelation
+    that Spark answers in the driver. Same schema and rows as
+    ``createDataFrame(rows, schema)`` for the types the package builds
+    this way (numbers, strings, decimals, dates, NULLs); timestamps
+    would be read as UTC wall time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -18,9 +18,76 @@ pruning -- tests/test_lake.py asserts the pruned-scan plan.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+# the footer key Spark's parquet writer stores the written schema under
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(spark: SparkSession, paths: tuple) -> StructType | None:
+    """The schema Spark's schema inference would settle on for
+    ``paths``, answered from the driver: Spark infers a non-merging
+    parquet read from the first data file in path order and, when that
+    footer carries Spark's row metadata, takes the schema from it. None
+    when that shortcut does not apply -- mergeSchema on, a path that is
+    not a local file or a flat dir of ``*.parquet`` files (partition
+    discovery must run), or a footer without the key (pyarrow- or other-
+    written files)."""
+    import pyarrow.parquet as pq
+
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    if merge.lower() == "true":
+        return None
+    files = []
+    for path in paths:
+        if os.path.isfile(path):
+            files.append(os.path.abspath(path))
+        elif os.path.isdir(path):
+            entries = [
+                e for e in os.scandir(path) if not e.name.startswith(("_", "."))
+            ]
+            flat = [
+                os.path.abspath(e.path)
+                for e in entries
+                if e.name.endswith(".parquet")
+            ]
+            if not flat or any(e.is_dir() for e in entries):
+                return None
+            files.extend(flat)
+        else:
+            return None
+    if not files:
+        return None
+    try:
+        footer = pq.read_metadata(min(files)).metadata or {}
+    except (OSError, ValueError):  # unreadable footer: Spark reports it
+        return None
+    raw = footer.get(_SPARK_ROW_METADATA.encode())
+    if raw is None:
+        return None
+    try:
+        return StructType.fromJson(json.loads(raw))
+    except ValueError:  # a pre-JSON legacy schema string: let Spark parse it
+        return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job
+    when the files are Spark-written: the schema comes from the first
+    data file's footer row metadata (_footer_schema) and is handed to
+    the reader, so building the frame launches no Spark job. The file
+    source makes every field nullable, exactly as it does for an
+    inferred schema, so the frame's schema equals the inferred one.
+    Falls back to plain inference for pyarrow-written files,
+    hive-partitioned dirs and mergeSchema sessions."""
+    schema = _footer_schema(spark, paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def write_partitioned(
@@ -101,12 +168,10 @@ def upsert_by_key(
     Schema is enforced on write (like any real table format): an append
     whose column names/types differ from the existing log is rejected
     with SchemaMismatchError instead of silently corrupting reads."""
-    import os
-
     if os.path.isdir(path) and any(
         n.endswith(".parquet") for n in os.listdir(path)
     ):
-        existing = spark.read.parquet(path).schema
+        existing = read_parquet(spark, path).schema
         incoming = df.schema
         want = {f.name: f.dataType for f in existing}
         got = {f.name: f.dataType for f in incoming}
@@ -130,7 +195,7 @@ def read_upserted(
     dedup as operators/dedup.py."""
     from bigdata_storage_and_proccess_job_data_spark.operators import dedup
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return dedup.dedup_by_key(
         df, [key], order_by=[F.col(version_col).desc(), F.col(key).asc()]
     )
@@ -266,7 +331,6 @@ def local_dir_stats(path: str) -> tuple[int, int] | None:
     trust the scan's own file-split planning). Shared by
     catalog._spread's narrowness estimate and compact_small_files."""
     import glob
-    import os
 
     if os.path.isfile(path):
         return 1, os.path.getsize(path)
@@ -324,7 +388,7 @@ def compact_small_files(
         raise ValueError(f"{path}: not a local path; compute stats lake-side")
     n_files, total = stats
     n_out = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if preserve_order_by:
         df = df.repartitionByRange(n_out, *preserve_order_by).sortWithinPartitions(
             *preserve_order_by
@@ -357,8 +421,6 @@ def evolve_append(
     the middle ground between upsert_by_key's strict mode and silent
     drift. Readers must use read_evolved (mergeSchema) to see the union
     schema."""
-    import os
-
     if os.path.isdir(path) and any(
         n.endswith(".parquet") for n in os.listdir(path)
     ):
@@ -458,7 +520,7 @@ def write_training_shards(
         .parquet(path)
     )
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

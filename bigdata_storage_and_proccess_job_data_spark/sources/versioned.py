@@ -33,6 +33,12 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_storage_and_proccess_job_data_spark.session import local_frame
+from bigdata_storage_and_proccess_job_data_spark.sources.lake import (
+    read_parquet,
+    read_upserted,
+)
+
 _POINTER = "_latest"
 _META = "_commit_meta.json"
 
@@ -261,7 +267,7 @@ def read_version(
         raise FileNotFoundError(f"{table_dir} has no committed version")
     snap = os.path.join(table_dir, f"v={v}")
     if prune is None and prune_eq is None:
-        return spark.read.parquet(snap)
+        return read_parquet(spark, snap)
     preds = (
         []
         if prune is None
@@ -293,8 +299,8 @@ def read_version(
     if not files:
         # every file excluded by stats: an empty frame with the real
         # schema (read the snapshot's schema without scanning data)
-        return spark.read.parquet(snap).filter(F.lit(False))
-    return spark.read.parquet(*sorted(files)).filter(cond)
+        return read_parquet(spark, snap).filter(F.lit(False))
+    return read_parquet(spark, *sorted(files)).filter(cond)
 
 
 def commit_meta(table_dir: str, version: int | None = None) -> dict | None:
@@ -528,9 +534,8 @@ def _bloom_words(spark: SparkSession, pairs: DataFrame, m_by_file: dict, k: int)
             mexpr[F.col("_b")].alias("_m"),
         )
     else:
-        sizes = spark.createDataFrame(
-            [(f, mm) for f, mm in m_by_file.items()],
-            "_b string, _m long",
+        sizes = local_frame(
+            spark, list(m_by_file.items()), "_b string, _m long"
         )
         sized = pairs.join(F.broadcast(sizes), "_b").select(
             "_b",
@@ -655,7 +660,7 @@ def _bloom_rebuild_spliced(
             os.path.basename(p): _pq.ParquetFile(p).metadata.num_rows
             for p in new_paths
         }
-        df = spark.read.parquet(*new_paths)
+        df = read_parquet(spark, *new_paths)
         for col in cols:
             cap = cap_by_col[col]
             d_by_file = {
@@ -742,7 +747,7 @@ def write_bloom_manifest(
         raise ValueError("k must be >= 1")
     if not 0.0 < target_fpp < 1.0:
         raise ValueError("target_fpp must be in (0, 1)")
-    df = spark.read.parquet(snapshot_dir)
+    df = read_parquet(spark, snapshot_dir)
     out: dict[str, dict] = {}
     for col in cols:
         pairs = (
@@ -1139,14 +1144,11 @@ def apply_changes(
 def compact_log_versioned(
     spark: SparkSession, log_path: str, table_dir: str, key: str, version_col: str
 ) -> int:
-    """Versioned twin of operators/joins.py:compact_upserts: fold the
-    append-only upsert log into a latest-wins snapshot COMMITTED under
-    ``table_dir`` -- readers of the previous snapshot are unaffected at
-    every instant of the rewrite."""
-    from bigdata_storage_and_proccess_job_data_spark.sources.lake import (
-        read_upserted,
-    )
-
+    """Fold an upsert_by_key log into its latest-wins view (one row per
+    ``key``, the highest ``version_col`` winning; lake.read_upserted)
+    and COMMIT it as the next snapshot of ``table_dir`` -- readers of
+    the previous snapshot are unaffected at every instant of the
+    rewrite. Returns the committed version."""
     return commit_version(read_upserted(spark, log_path, key, version_col), table_dir)
 
 
@@ -1274,7 +1276,7 @@ def compact_small_files(
     small_total = sum(os.path.getsize(p) for p in small)
     n_out = max(1, math.ceil(small_total / target_file_bytes))
     nxt, new_snap = _stage(table_dir, expected)
-    spark.read.parquet(*small).coalesce(n_out).write.mode("error").parquet(
+    read_parquet(spark, *small).coalesce(n_out).write.mode("error").parquet(
         new_snap
     )
     for p in large:
@@ -1610,12 +1612,12 @@ def _cow_rewrite(
     if hi is not None:
         pred = pred & (c <= F.lit(hi))
     if affected:
-        aff = spark.read.parquet(*affected)
+        aff = read_parquet(spark, *affected)
     else:
         # no file intersects (e.g. a pure-insert merge band beyond
         # every range): an empty, schema-correct frame keeps the
         # rewrite callback uniform
-        aff = spark.read.parquet(all_files[0]).filter(F.lit(False))
+        aff = read_parquet(spark, all_files[0]).filter(F.lit(False))
     # the match count rides the rewrite job as an observed metric
     # (CollectMetrics above the affected-file scan) instead of a
     # separate count pass -- the affected files are scanned ONCE per
@@ -1913,7 +1915,7 @@ def verify_absent(
         )
         if not has_data:
             continue  # orphaned claim: zero rows by construction
-        df = spark.read.parquet(snap)
+        df = read_parquet(spark, snap)
         if col not in df.columns:
             continue  # column never existed in this snapshot
         if df.filter(F.col(col) == F.lit(value)).count() > 0:

@@ -596,3 +596,85 @@ def test_spread_floor_skips_tiny_tables_only(spark, sf_dir):
         .toString()
     )
     assert "RoundRobinPartitioning" in big, big
+
+
+def _all_types_frame(spark):
+    """One row per type family a snapshot can carry, plus a NULL row."""
+    return spark.range(3).selectExpr(
+        "id AS big",
+        "CAST(id AS INT) AS i",
+        "id * 1.5 AS d",
+        "CAST(id AS DECIMAL(12, 3)) AS dec",
+        "DATE_ADD(DATE'2024-01-01', CAST(id AS INT)) AS dt",
+        "TIMESTAMP'2024-01-01 00:00:00' + MAKE_INTERVAL(0, 0, 0, 0, 0, 0, id) AS ts",
+        "CAST(TIMESTAMP'2024-01-01 00:00:00' AS TIMESTAMP_NTZ) AS ntz",
+        "ARRAY(id, id + 1) AS arr",
+        "MAP('k', id) AS m",
+        "NAMED_STRUCT('x', id, 'y', ARRAY(NAMED_STRUCT('z', CAST(id AS STRING)))) AS s",
+        "NULL AS n",
+    ).union(spark.sql(
+        "SELECT NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL"
+    ))
+
+
+def test_read_parquet_footer_schema_matches_inference(spark, tmp_path):
+    """read_parquet's footer schema equals what Spark's inference job
+    settles on, for every column type family, and the rows read under
+    it are the same."""
+    path = str(tmp_path / "all")
+    _all_types_frame(spark).repartition(3).write.parquet(path)
+
+    assert lake._footer_schema(spark, (path,)) is not None
+    got = lake.read_parquet(spark, path)
+    want = spark.read.parquet(path)
+    assert got.schema == want.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
+    files = sorted(str(p) for p in tmp_path.glob("all/*.parquet"))
+    assert lake.read_parquet(spark, *files).schema == want.schema
+
+
+def test_read_parquet_falls_back_to_inference(spark, tmp_path):
+    """The three reads the footer shortcut leaves to Spark: files with
+    no Spark row metadata, hive-partitioned dirs (partition columns
+    kept) and mergeSchema sessions (the union schema)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
+
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    pq.write_table(
+        pa.table({"k": [1, 2], "v": ["a", None]}), str(foreign / "f.parquet")
+    )
+    assert lake._footer_schema(spark, (str(foreign),)) is None
+    assert (
+        lake.read_parquet(spark, str(foreign)).schema
+        == spark.read.parquet(str(foreign)).schema
+    )
+
+    table = str(tmp_path / "parted")
+    versioned.commit_version(
+        spark.range(6).selectExpr("id", "id % 2 AS part"),
+        table,
+        partition_by=["part"],
+    )
+    snap = f"{table}/v=1"
+    assert lake._footer_schema(spark, (snap,)) is None
+    got = versioned.read_version(spark, table)
+    assert got.schema == spark.read.parquet(snap).schema
+    assert "part" in got.columns and got.count() == 6
+
+    merged = str(tmp_path / "merged")
+    spark.range(2).selectExpr("id").write.parquet(merged)
+    spark.range(2).selectExpr("id", "id AS extra").write.mode(
+        "append"
+    ).parquet(merged)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert lake._footer_schema(spark, (merged,)) is None
+        got = lake.read_parquet(spark, merged).schema
+        assert got == spark.read.parquet(merged).schema
+        assert set(got.fieldNames()) == {"id", "extra"}
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")

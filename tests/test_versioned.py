@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import ast
+import datetime
+from decimal import Decimal
+
 from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
@@ -2221,33 +2225,260 @@ def test_bloom_splice_legacy_manifest_without_bounds_is_uncapped(
     )
 
 
+def _calls_outside(subdir: str, match, allowed) -> list[str]:
+    """``module:line`` of every call in the package's ``subdir`` ("" for
+    all of it) that ``match`` accepts, outside the functions named in
+    ``allowed`` (as ``<module>.<function>``, the module dotted from the
+    package root)."""
+    import os
+
+    pkg = os.path.dirname(os.path.dirname(versioned.__file__))
+    offenders = []
+    for root, _dirs, names in sorted(os.walk(os.path.join(pkg, subdir))):
+        for name in sorted(n for n in names if n.endswith(".py")):
+            path = os.path.join(root, name)
+            mod = os.path.relpath(path, pkg)[:-3].replace(os.sep, ".")
+            tree = ast.parse(open(path).read())
+            exempt = {
+                id(n)
+                for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef)
+                and f"{mod}.{fn.name}" in allowed
+                for n in ast.walk(fn)
+            }
+            offenders += [
+                f"{mod}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and match(node.func, node.args)
+                and id(node) not in exempt
+            ]
+    return offenders
+
+
+def _is_attr(func, owner: str, attr: str) -> bool:
+    """``func`` is ``<owner>.<attr>`` with ``owner`` a plain name."""
+    return (
+        isinstance(func, ast.Attribute)
+        and func.attr == attr
+        and isinstance(func.value, ast.Name)
+        and func.value.id == owner
+    )
+
+
 def test_atomic_write_is_the_only_rename_in_sources():
     """The snapshot commit protocol has one home: every pointer swap,
     manifest write and meta sidecar goes through
     versioned._atomic_write, so ``tempfile.mkstemp`` and ``os.replace``
     may be called nowhere else under sources/ (a hand-rolled copy is
     how a protocol fix misses a writer)."""
-    import ast
-    import os
-
-    root = os.path.dirname(versioned.__file__)
-    offenders = []
-    for name in sorted(os.listdir(root)):
-        if not name.endswith(".py"):
-            continue
-        tree = ast.parse(open(os.path.join(root, name)).read())
-        allowed = set()
-        for fn in ast.walk(tree):
-            if isinstance(fn, ast.FunctionDef) and fn.name == "_atomic_write":
-                allowed |= {id(n) for n in ast.walk(fn)}
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and isinstance(node.func.value, ast.Name)
-                and (node.func.value.id, node.func.attr)
-                in {("tempfile", "mkstemp"), ("os", "replace")}
-                and id(node) not in allowed
-            ):
-                offenders.append(f"{name}:{node.lineno}")
+    offenders = _calls_outside(
+        "sources",
+        lambda f, _args: _is_attr(f, "tempfile", "mkstemp")
+        or _is_attr(f, "os", "replace"),
+        {"sources.versioned._atomic_write"},
+    )
     assert offenders == []
+
+
+# readers that must infer: mergeSchema unions every footer, and the
+# corrupt-file-skipping reader goes through format(...).load
+INFERRING_READERS = {
+    "sources.lake.read_parquet": "the footer-schema reader itself",
+    "sources.lake.read_evolved": "mergeSchema union of every footer",
+    "sources.lake.evolve_append": "guards against the mergeSchema union",
+    "sources.lake.read_resilient": "ignoreCorruptFiles scan",
+}
+# createDataFrame(<list>, ...) sites kept on the parallelize path
+RDD_LOCAL_FRAMES = {
+    "operators.aggregates.benford_report": "deletion deferred "
+    "(tools/op_index.py:DEFERRED_UNREACHED)",
+    "operators.aggregates.global_running_sum": "deletion deferred "
+    "(tools/op_index.py:DEFERRED_UNREACHED)",
+    "plans.scale_queries.temperature_mixture": "registered query whose "
+    "whole plan is the driver-built frame: a LocalTableScan would fail "
+    "plans.lint's sourceless-plan check",
+}
+
+
+def test_no_inference_reads_or_rdd_local_frames():
+    """Two job-launching patterns stay out of the package: a schema-less
+    ``spark.read.parquet(`` under sources/ (a schema-inference job per
+    call -- sources.lake.read_parquet reads the schema from the footer)
+    and ``createDataFrame(<list or comprehension>, ...)`` (a
+    parallelize scan that runs a job per action -- session.local_frame
+    builds a LocalRelation), except at the named sites."""
+    import importlib
+
+    inferring = _calls_outside(
+        "sources",
+        lambda f, _args: isinstance(f, ast.Attribute)
+        and f.attr == "parquet"
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "read",
+        INFERRING_READERS,
+    )
+    assert inferring == []
+    rdd_frames = _calls_outside(
+        "",
+        lambda f, args: isinstance(f, ast.Attribute)
+        and f.attr == "createDataFrame"
+        and bool(args)
+        and isinstance(args[0], (ast.List, ast.ListComp)),
+        RDD_LOCAL_FRAMES,
+    )
+    assert rdd_frames == []
+    for qual in [*INFERRING_READERS, *RDD_LOCAL_FRAMES]:
+        mod, fn = qual.rsplit(".", 1)
+        module = importlib.import_module(
+            f"bigdata_storage_and_proccess_job_data_spark.{mod}"
+        )
+        assert hasattr(module, fn), f"stale exception {qual}"
+
+
+def _count_jobs(spark, fn):
+    """(fn(), Spark jobs fn launched), counted by job tag the way
+    perfbench/harness.SparkStats does."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"jobs-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return out, len(list(jsc.statusTracker().getJobIdsForTag(tag)))
+
+
+def _keyed_frame(spark, n=400):
+    return spark.range(n).selectExpr(
+        "id AS k",
+        "CAST(id AS DECIMAL(12, 2)) AS amount",
+        "DATE_ADD(DATE'2024-01-01', CAST(id % 30 AS INT)) AS day",
+        "IF(id % 7 = 0, NULL, CAST(id AS STRING)) AS tag",
+    )
+
+
+def test_snapshot_schemas_come_from_the_footer(spark, tmp_path):
+    """Every versioned writer's snapshot reads back under its footer
+    schema, equal to Spark's inferred one: commit_version,
+    optimize_table, delete_where / update_where output, a clone and an
+    upsert_by_key log."""
+    table = str(tmp_path / "t")
+    versioned.commit_version(
+        _keyed_frame(spark).repartition(4), table, stats_cols=["k"]
+    )
+    versioned.optimize_table(
+        spark, table, cluster_by="k", target_files=3, stats_cols=["k"]
+    )
+    versioned.delete_where(spark, table, "k", 10, 20)
+    versioned.update_where(
+        spark, table, "k", 100, 110, set_exprs={"tag": F.lit("x")}
+    )
+    clone = str(tmp_path / "clone")
+    versioned.clone_table(table, clone)
+    log = str(tmp_path / "log")
+    lake.upsert_by_key(spark, _keyed_frame(spark, 50), log, "k", "day")
+    lake.upsert_by_key(spark, _keyed_frame(spark, 60), log, "k", "day")
+
+    dirs = [f"{table}/v={v}" for v in versioned.versions(table)]
+    dirs += [f"{clone}/v=1", log]
+    assert len(dirs) == 6
+    for d in dirs:
+        assert lake._footer_schema(spark, (d,)) is not None, d
+        assert lake.read_parquet(spark, d).schema == spark.read.parquet(d).schema, d
+
+
+def test_snapshot_reads_launch_no_spark_job(spark, tmp_path):
+    """Building a snapshot read -- plain, zone-map pruned, bloom pruned,
+    a pruned read that keeps no file, and the upsert log's latest-wins
+    view -- launches no Spark job: the schema is the footer's."""
+    table = str(tmp_path / "t")
+    versioned.commit_version(
+        _keyed_frame(spark).repartitionByRange(4, "k"), table, stats_cols=["k"]
+    )
+    versioned.write_bloom_manifest(
+        spark, f"{table}/v=1", ["k"]
+    )
+    log = str(tmp_path / "log")
+    lake.upsert_by_key(spark, _keyed_frame(spark, 50), log, "k", "day")
+
+    builds = {
+        "plain": lambda: versioned.read_version(spark, table),
+        "prune": lambda: versioned.read_version(
+            spark, table, prune=("k", 10, 20)
+        ),
+        "prune_eq": lambda: versioned.read_version(
+            spark, table, prune_eq=("k", 42)
+        ),
+        "prune_none": lambda: versioned.read_version(
+            spark, table, prune=("k", 10_000, None)
+        ),
+        "read_upserted": lambda: lake.read_upserted(spark, log, "k", "day"),
+    }
+    for name, build in builds.items():
+        df, jobs = _count_jobs(spark, build)
+        assert jobs == 0, name
+    assert versioned.read_version(spark, table, prune=("k", 10, 20)).count() == 11
+
+
+def test_cow_delete_runs_only_the_rewrite_job(spark, tmp_path):
+    """delete_where on a stats-manifested snapshot without a bloom runs
+    one Spark job: the rewrite (its match count rides that job as an
+    observed metric; schemas and manifests come from footers)."""
+    table = str(tmp_path / "t")
+    versioned.commit_version(
+        _keyed_frame(spark).repartitionByRange(4, "k"), table, stats_cols=["k"]
+    )
+    rep, jobs = _count_jobs(
+        spark, lambda: versioned.delete_where(spark, table, "k", 10, 20)
+    )
+    assert rep["rows_deleted"] == 11 and rep["files_rewritten"] == 1
+    assert jobs == 1
+
+
+LOCAL_FRAME_CASES = {
+    # the package's local_frame sites, by schema
+    "cow report": (
+        "files_rewritten int, files_linked int, rows_deleted long",
+        [(1, 6, 60)],
+    ),
+    "bloom sizes": ("_b string, _m long", [("part-0.parquet", 640), ("p1", 64)]),
+    "row offsets": ("_gpid INT, _goff LONG", [(0, 0), (1, 17)]),
+    "ivfpq probe": ("query_id LONG, cell INT, base DOUBLE", [(3, 1, 0.5)]),
+    "diff rows": (
+        "o_orderkey long, o_orderstatus string, o_totalprice double",
+        [(10_000_001, "O", 1.0), (10_000_002, "F", 2.0)],
+    ),
+    "nulls, dates, decimals": (
+        "d date, x decimal(12,2), s string, n long",
+        [
+            (datetime.date(2024, 2, 29), Decimal("12.50"), None, None),
+            (None, None, "x", 7),
+        ],
+    ),
+    "empty": ("doc_id long, score double, rank long", []),
+}
+
+
+def test_local_frame_matches_create_dataframe_without_jobs(spark):
+    """local_frame gives the schema and rows createDataFrame(rows, ddl)
+    gives, and collecting it runs no Spark job."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from bigdata_storage_and_proccess_job_data_spark.session import local_frame
+
+    strict = StructType(
+        [StructField("id", LongType(), False), StructField("v", LongType())]
+    )
+    cases = dict(LOCAL_FRAME_CASES, strict=(strict, [(1, None), (2, 3)]))
+    for name, (schema, rows) in cases.items():
+        want = spark.createDataFrame(rows, schema)
+        got = local_frame(spark, rows, schema)
+        assert got.schema == want.schema, name
+        collected, jobs = _count_jobs(spark, got.collect)
+        assert jobs == 0, name
+        assert collected == want.collect(), name

@@ -3,7 +3,10 @@ audit): builds each query's DataFrame at a small SF and greps the
 physical plan for shapes the bench review hunted -- SortAggregate
 (usually a first(array)/dropDuplicates-with-payload), CartesianProduct,
 BatchEvalPython/ArrowEvalPython (Python boundary in a query path),
-RoundRobinPartitioning (the _spread class), and the exchange count.
+RoundRobinPartitioning (the _spread class), ExistingRDD (a driver-built
+frame still scanned through parallelize and a Python worker, where
+session.local_frame gives a job-free LocalRelation), and the exchange
+count.
 The hard antipatterns are already lint-enforced per query
 (tests/test_plans.py:test_no_scale_antipatterns_anywhere); this tool
 is the broader advisory sweep that feeds OPTIMIZATION_r{N}.md.
@@ -38,6 +41,7 @@ SMELLS = (
     "BatchEvalPython",
     "ArrowEvalPython",
     "RoundRobinPartitioning",
+    "ExistingRDD",
 )
 
 
