@@ -8,7 +8,7 @@ driver materialization) -- the same way a sink-bound production job would
 run, so timings reflect scan+shuffle+agg, not collect overhead.
 
 Machine noise on this box is +-40% run-to-run, so each query runs
-SPARK_GRAFT_BENCH_ITERS times (default 3) round-robin (a full pass over
+SPARK_GRAFT_BENCH_ITERS times (default 5) round-robin (a full pass over
 all queries, then the next pass -- so a transient slowdown hits one
 iteration of every query, not every iteration of one query). Reported
 per-query value = median; "value" = sum of medians; "spread" = mean over
@@ -31,9 +31,8 @@ from bigdata_storage_and_proccess_job_data_spark.session import get_spark  # noq
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # 5 iterations (was 3): this box's +-40% noise makes a 3-sample
-    # median swing ~10% between runs (r4 verdict read a +8.6% total as
-    # noise); 5 samples tighten the median at ~90s extra wall
+    # 5 iterations: under +-40% noise a 3-sample median swings ~10%
+    # between runs; 5 samples tighten it at ~90s extra wall
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -111,12 +110,12 @@ def main() -> None:
     samples: dict[str, list[float]] = {name: [] for name in runnable}
     for _ in range(max(1, iters)):
         for name, fn in runnable.items():
-            # the timed region INCLUDES plan construction (r8): eager
+            # the timed region INCLUDES plan construction: eager
             # operators (triangle counting, connected components --
             # anything that localCheckpoints for lineage control) do
             # their real work inside fn(); timing only the noop save
             # would credit them with reading a checkpoint. Lazy queries
-            # add only catalyst analysis (~ms), so round-over-round
+            # add only catalyst analysis (~ms), so run-over-run
             # comparability holds within spread.
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -127,12 +126,12 @@ def main() -> None:
         """Execute the DataFrame's OWN physical plan without materializing
         rows on the driver: toRdd().count() runs the exact executedPlan
         (so its scan metrics populate) and ships back one long, where
-        collect() would ship every result row (ADVICE r2). Fallback to
+        collect() would ship every result row. Fallback to
         collect only if the internal API moves."""
         try:
             df._jdf.queryExecution().toRdd().count()
         except Exception as exc:
-            # loud fallback (ADVICE r4): a Spark upgrade that moves the
+            # loud fallback: a Spark upgrade that moves the
             # internal API must be visible, because collect() ships every
             # result row to the driver -- exactly what this helper exists
             # to avoid
@@ -185,14 +184,12 @@ def main() -> None:
         "iters": max(1, iters),
         "spread": round(statistics.mean(spreads) if spreads else 0.0, 3),
     }
-    # The driver's BENCH_r{N}.json keeps only the LAST 2,000 chars of
-    # stdout (r10 verdict #2: the full three-map line overflowed that
-    # tail, cutting queries' head and leaving parsed: null). Two-part
-    # fix: (1) the WHOLE summary goes to a sidecar file next to this
-    # script, committed with the round, so every map survives verbatim;
-    # (2) the stdout line drops rows_read and queries_min (sidecar-only
-    # -- they are diagnostics, not the headline) so the one JSON line
-    # the driver parses stays well under the tail budget.
+    # A harness that keeps only the LAST 2,000 chars of stdout would cut
+    # the head off a full three-map line. So (1) the WHOLE summary goes
+    # to a sidecar file next to this script, so every map survives
+    # verbatim; (2) the stdout line drops rows_read and queries_min
+    # (sidecar-only -- they are diagnostics, not the headline) so the
+    # one JSON line stays well under that tail budget.
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_summary.json"
     )

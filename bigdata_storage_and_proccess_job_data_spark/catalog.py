@@ -40,20 +40,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # skip the memo (no cheap stat) and infer as before.
 _SCHEMA_CACHE: dict = {}
 
-# Floor under which _spread never repartitions (r14): for a frame this
-# small the round-robin exchange -- a full shuffle stage plus its tasks
-# -- costs more wall-clock than ANY single-core pass over the bytes
-# (even a regex-heavy projection streams 256 KiB in single-digit ms),
-# and such frames are dim-table-shaped (nation/region/supplier/part):
-# consumed via a broadcast that a 16-way spread only delays. Bytes-
-# based, so the guard is scale-adaptive by itself -- the same table at
-# a bigger scale factor crosses the floor and spreads as before. Env-
-# tunable for deployments whose small frames feed unusually CPU-heavy
-# per-row work (the sf0.1 documents/embeddings tables sit above the
-# default precisely because theirs -- tokenization, vector math -- do).
-_SPREAD_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(256 * 1024))
-)
+# Floor under which _spread never repartitions: for a frame this small
+# the round-robin exchange -- a full shuffle stage plus its tasks --
+# costs more wall-clock than ANY single-core pass over the bytes (even
+# a regex-heavy projection streams 256 KiB in single-digit ms), and such
+# frames are dim-table-shaped (nation/region/supplier/part): consumed
+# via a broadcast that a 16-way spread only delays. Bytes-based, so the
+# guard is scale-adaptive by itself -- the same table at a bigger scale
+# factor crosses the floor and spreads as before (the sf0.1
+# documents/embeddings tables, whose per-row work is tokenization and
+# vector math, sit above it).
+_SPREAD_MIN_BYTES = 256 * 1024
 
 
 def _read_parquet_cached(spark: SparkSession, path: str):
@@ -87,7 +84,7 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     Narrowness is estimated from filesystem metadata the same way
     FilePartition planning does (file count + bytes/maxPartitionBytes) --
     no ``df.rdd`` probe, which would be a per-load plan-to-RDD conversion
-    on the driver (VERDICT r1 minor #2). Non-local paths (s3://, ...)
+    on the driver. Non-local paths (s3://, ...)
     are left alone: the lake's own file splits provide scan parallelism
     there, and an unconditional repartition would add a full shuffle."""
     from bigdata_storage_and_proccess_job_data_spark.sources.lake import (
@@ -107,9 +104,9 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     )
     # mirror FilePartition packing: each file also costs openCostInBytes,
     # so many small files split across more partitions than raw bytes
-    # alone suggest (ADVICE r2 — without it the estimate under-counts
-    # splits for small-file dirs and repartitions when the scan would
-    # already be wide enough)
+    # alone suggest (without it the estimate under-counts splits for
+    # small-file dirs and repartitions when the scan is already wide
+    # enough)
     open_cost = parse_byte_conf(
         spark.conf.get("spark.sql.files.openCostInBytes", "4194304b"),
         default=4 * 1024 * 1024,

@@ -10,9 +10,9 @@ DuckDB oracle (which reads the same parquet as naive timestamps) stays
 in agreement; output edges that surface timestamps re-pin them to NTZ
 (streaming/windows.py flatten) so collected values remain tz-naive.
 
-This is the ONE seam for the fix (VERDICT r3 "What's wrong"): batch
-loads normalize in catalog.load_table, streaming/watermark builders
-normalize their event-time column here before withWatermark.
+This is the ONE seam for the fix: batch loads normalize in
+catalog.load_table, streaming/watermark builders normalize their
+event-time column here before withWatermark.
 """
 
 from __future__ import annotations

@@ -128,27 +128,6 @@ def word_ngrams(col: Column | str, n: int = 2) -> Column:
     return acc
 
 
-def char_qgrams(col: Column | str, q: int = 2) -> Column:
-    """Character q-gram array: contiguous q-char windows of the raw
-    string (no lowering -- callers decide case policy). Strings shorter
-    than q characters -> empty array.
-
-    Same zip-fold construction as word_ngrams (and for the same reason:
-    the transform(sequence(...), i -> substring(s, i, q)) form
-    re-evaluates the source subtree per window after projection
-    collapse). Character split via split(s, '') keeps everything in
-    native array expressions."""
-    c = F.col(col) if isinstance(col, str) else col
-    chars = F.split(c, "")
-    k = F.greatest(F.length(c) - (q - 1), F.lit(0))
-    acc = F.slice(chars, 1, k)
-    for i in range(1, q):
-        acc = F.zip_with(
-            acc, F.slice(chars, 1 + i, k), lambda a, b: F.concat(a, b)
-        )
-    return acc
-
-
 def hashed_doc_vector(
     col: Column | str, dim: int = 64, seed: int = 0
 ) -> Column:
@@ -221,7 +200,7 @@ def normalize_unicode(col: Column | str, form: str = "NFC") -> Column:
     paths. NFC matches DuckDB's nfc_normalize, which is what lets
     normalized pipelines keep exact cross-engine oracles.
 
-    The four form-variant UDFs are module-memoized (VERDICT r6 #5):
+    The four form-variant UDFs are module-memoized:
     repeated calls reuse ONE registered function object per form
     instead of re-creating the Arrow serializer at every call site."""
     if form not in ("NFC", "NFD", "NFKC", "NFKD"):

@@ -104,9 +104,9 @@ def sql_of(col: Column | str) -> str:
     internal API entirely). Composed-SQL builders accept
     `Column | str` via this seam.
 
-    Names colliding with the builders' lambda variables are rejected
-    (ADVICE r8): inside a higher-order-function lambda the parameter
-    shadows any same-named column, silently producing wrong values.
+    Names colliding with the builders' lambda variables are rejected:
+    inside a higher-order-function lambda the parameter shadows any
+    same-named column, silently producing wrong values.
     Alias such columns first (df.select(F.col(c).alias("_vec")))."""
     if isinstance(col, str):
         if col in _RESERVED_LAMBDA_VARS:

@@ -430,72 +430,6 @@ def dd_quantile(
     )
 
 
-def decayed_agg(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    value_col: str,
-    half_life_s: float,
-    ref_ts=None,
-    digits: int = 4,
-) -> DataFrame:
-    """Exponentially time-decayed aggregates per key: each row weighs
-    2^(-age / half_life) where age = ref - ts in seconds (microsecond
-    precision), so a row exactly one half-life old counts half as much
-    as a fresh one -- the freshness-weighted score behind trending
-    metrics and recency-weighted sampling (pair decayed_weight with
-    corpus.weighted_sample / weighted_take_k for "sample recent data
-    harder" mixtures).
-
-    ``ref_ts`` anchors the decay: a Column/literal timestamp, or None
-    to use max(ts) over ``df`` (deterministic -- never wall-clock; rows
-    newer than an explicit ref weigh > 1, which is the correct algebra
-    for a stale anchor). Computed as one hash agg plus, for the default
-    ref, a one-row broadcast crossJoin -- the established scalar
-    pattern; no second scan of the data.
-
-    NULL ts rows carry NULL weight and drop out of every measure; NULL
-    values drop out of decayed_sum/avg but still count toward
-    decayed_weight (they exist, they're just unvalued).
-
-    Returns keys + (decayed_sum, decayed_weight, decayed_avg), all
-    stable-rounded for cross-engine parity."""
-    if half_life_s <= 0:
-        raise ValueError("half_life_s must be > 0")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    if ref_ts is None:
-        ref = df.agg(F.max(ts_col).alias("_ref"))
-        base = df.crossJoin(F.broadcast(ref))
-        ref_col = F.col("_ref")
-    else:
-        base = df
-        ref_col = ref_ts if isinstance(ref_ts, Column) else F.lit(ref_ts)
-    age_s = (
-        F.unix_micros(ref_col) - F.unix_micros(F.col(ts_col))
-    ) / F.lit(1e6)
-    w = F.pow(F.lit(2.0), -age_s / F.lit(float(half_life_s)))
-    return (
-        base.withColumn("_w", w)
-        .groupBy(*keys)
-        .agg(
-            stable_round(F.sum(F.col("_w") * F.col(value_col)), digits).alias(
-                "decayed_sum"
-            ),
-            stable_round(F.sum("_w"), digits).alias("decayed_weight"),
-            stable_round(
-                F.sum(F.col("_w") * F.col(value_col))
-                / F.sum(
-                    F.when(F.col(value_col).isNotNull(), F.col("_w"))
-                ),
-                digits,
-            ).alias("decayed_avg"),
-        )
-    )
-
-
 def psi_bins(
     ref: DataFrame,
     cur: DataFrame,
@@ -587,151 +521,6 @@ def psi_bins(
     )
 
 
-def autocorr(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    value_col: str,
-    lags: Sequence[int] = (1,),
-    digits: int = 4,
-) -> DataFrame:
-    """Per-key serial correlation at the given lags -- the "is this
-    series momentum-driven or mean-reverting (or is my residual still
-    structured)" diagnostic. For each lag L, Pearson corr between the
-    series and itself shifted by L positions in ``order_col`` order,
-    Pearson-over-pairs convention (moments from the overlapping pairs,
-    not the full series).
-
-    One window pass builds ALL requested lag columns (shared sort --
-    lag(L) over the same ordered window reuses one shuffle+sort), one
-    hash agg computes every lag's corr as sibling expressions, and the
-    wide row unpivots via inline. Ties in ``order_col`` make lag
-    nondeterministic (Spark sorts are not stable) -- pass a composite
-    ordering via a struct-ordered column upstream if ties exist.
-
-    Returns keys + (lag, n_pairs, acf)."""
-    if not lags or any(
-        (not isinstance(lg, int)) or lg < 1 for lg in lags
-    ):
-        raise ValueError("lags must be positive integers")
-    if len(set(lags)) != len(lags):
-        raise ValueError("duplicate lags")
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(order_col)
-    lagged = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        *[
-            F.lag(value_col, lg).over(w).alias(f"_l{lg}")
-            for lg in lags
-        ],
-    )
-    aggs = []
-    for lg in lags:
-        lcol = F.col(f"_l{lg}")
-        both = F.col("_v").isNotNull() & lcol.isNotNull()
-        aggs.append(
-            F.struct(
-                F.lit(lg).alias("lag"),
-                F.sum(both.cast("long")).alias("n_pairs"),
-                stable_round(F.corr("_v", f"_l{lg}"), digits).alias(
-                    "acf"
-                ),
-            ).alias(f"_a{lg}")
-        )
-    wide = lagged.groupBy(*keys).agg(*aggs)
-    return wide.select(
-        *keys,
-        F.inline(F.array(*[F.col(f"_a{lg}") for lg in lags])),
-    )
-
-
-def chi_square(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    digits: int = 4,
-) -> DataFrame:
-    """Chi-square test of independence between two categorical columns,
-    with Cramer's V effect size -- the "are these features related"
-    statistic (feature selection, drift detection between a column and
-    a partition label). Unlike DataFrame.crosstab (which materializes
-    the full contingency MATRIX on the driver), everything here stays
-    distributed in long form: one hash agg for observed cell counts,
-    two marginal aggs, an equi-join to attach expected counts, one
-    final fold -- category cardinality never touches the driver.
-
-    chi2 = sum over observed cells (obs - exp)^2 / exp plus the
-    correction for structurally-empty cells (a cell with obs = 0 still
-    contributes exp; summing only observed cells would understate, so
-    the missing mass n - sum(exp_observed) is added back -- algebra:
-    sum_all exp = n). dof = (R-1)(C-1); cramers_v = sqrt(chi2 / (n *
-    min(R-1, C-1))). Rows with a NULL in either column are excluded
-    (they form no category pair). Returns one row:
-    (n, r_levels, c_levels, dof, chi2, cramers_v)."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    base = df.filter(
-        F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
-    ).select(F.col(col_a).alias("_a"), F.col(col_b).alias("_b"))
-    obs = base.groupBy("_a", "_b").agg(F.count(F.lit(1)).alias("_o"))
-    ra = base.groupBy("_a").agg(F.count(F.lit(1)).alias("_ra"))
-    cb = base.groupBy("_b").agg(F.count(F.lit(1)).alias("_cb"))
-    joined = obs.join(ra, "_a").join(cb, "_b")
-    return (
-        joined.agg(
-            F.sum("_o").cast("double").alias("_n"),
-            F.count_distinct("_a").alias("r_levels"),
-            F.count_distinct("_b").alias("c_levels"),
-            F.sum(
-                F.col("_o")
-                * F.col("_o")
-                / (F.col("_ra") * F.col("_cb"))
-            ).alias("_s"),
-        )
-        # identity: sum (o-e)^2/e over ALL cells = n * (sum o^2/(ra*cb) - 1)
-        # (expected e = ra*cb/n; empty cells contribute exactly their e,
-        # which the algebra absorbs -- no driver-side matrix needed)
-        .select(
-            F.col("_n").cast("long").alias("n"),
-            "r_levels",
-            "c_levels",
-            (
-                (F.col("r_levels") - 1) * (F.col("c_levels") - 1)
-            ).alias("dof"),
-            stable_round(
-                F.col("_n") * (F.col("_s") - 1), digits
-            ).alias("chi2"),
-            stable_round(
-                F.sqrt(
-                    F.when(
-                        F.least(
-                            F.col("r_levels") - 1, F.col("c_levels") - 1
-                        )
-                        > 0,
-                        (F.col("_n") * (F.col("_s") - 1))
-                        / (
-                            F.col("_n")
-                            * F.least(
-                                F.col("r_levels") - 1,
-                                F.col("c_levels") - 1,
-                            )
-                        ),
-                    )
-                ),
-                digits,
-            ).alias("cramers_v"),
-        )
-    )
-
-
 def profile_table(
     df: DataFrame,
     cols: Sequence[str] | None = None,
@@ -815,119 +604,6 @@ def profile_table(
         "max",
         "mean",
         "stddev",
-    )
-
-
-def corr_matrix(
-    df: DataFrame,
-    cols: Sequence[str],
-    keys: Sequence[str] | None = None,
-    digits: int = 4,
-) -> DataFrame:
-    """Pairwise Pearson correlation + sample covariance over ``cols``,
-    optionally per group, in ONE aggregation pass: every pair's corr /
-    covar_samp / pairwise row count are sibling aggregate expressions in
-    a single hash agg (no per-pair scans, no driver loop over columns),
-    then the wide row unpivots to long (col_a, col_b, n_pairs, cov,
-    corr) with col_a <= col_b via an inline of literal-keyed structs --
-    pure projection, no shuffle.
-
-    Pairwise NULL deletion (both engines' corr/covar semantics): a row
-    contributes to a pair iff both columns are non-NULL. Constant
-    columns yield NULL corr (zero variance), matching SQL. The column
-    list is the unpivot width -- O(|cols|^2) expressions, fine for the
-    tens-of-columns feature-matrix case this serves; it is NOT a
-    key-cardinality blowup (still one pass over the data)."""
-    if len(cols) < 2:
-        raise ValueError("need at least 2 columns")
-    if len(set(cols)) != len(cols):
-        raise ValueError("duplicate columns")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    keys = list(keys or [])
-    pairs = [
-        (a, b) for i, a in enumerate(cols) for b in list(cols)[i:]
-    ]
-    aggs = []
-    for idx, (a, b) in enumerate(pairs):
-        both = F.col(a).isNotNull() & F.col(b).isNotNull()
-        aggs.append(
-            F.struct(
-                F.lit(a).alias("col_a"),
-                F.lit(b).alias("col_b"),
-                F.sum(both.cast("long")).alias("n_pairs"),
-                stable_round(F.covar_samp(a, b), digits).alias("cov"),
-                stable_round(F.corr(a, b), digits).alias("corr"),
-            ).alias(f"_p_{idx}")
-        )
-    wide = df.groupBy(*keys).agg(*aggs)
-    pair_cols = [c for c in wide.columns if c.startswith("_p_")]
-    return wide.select(
-        *keys, F.inline(F.array(*[F.col(c) for c in pair_cols]))
-    )
-
-
-def robust_outliers(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    k: float = 3.5,
-    digits: int = 4,
-) -> DataFrame:
-    """Per-group robust outlier annotation via median/MAD (the
-    Iglewicz-Hoaglin modified z-score): robust_z = (x - median) /
-    (1.4826 * MAD), flagged when |robust_z| > k. Unlike mean/stddev
-    z-scores, the breakdown point is 50% -- the outliers themselves
-    can't mask the fence, which is what makes it usable as an automated
-    data-quality gate over arbitrary partner feeds.
-
-    Exact medians (F.percentile, interpolated -- matches DuckDB
-    quantile_cont bit-for-bit on doubles), two hash aggs + two
-    equi-joins on the group keys; no window over the whole group, no
-    broadcast assumption on group count. Degenerate groups (MAD = 0,
-    i.e. >= half the group sits AT the median) get NULL robust_z and
-    flag any value != median.
-
-    NULL values are dropped (they're a completeness problem, not an
-    outlier problem -- expectation_report covers them). Returns keys +
-    (value_col, med, mad, robust_z, is_outlier) for every non-NULL
-    input row; filter is_outlier for the violations feed. ``keys`` must
-    be non-empty (the fences join back on them); for a global fence
-    pass a constant key column."""
-    if k <= 0:
-        raise ValueError("k must be > 0")
-    if not keys:
-        raise ValueError("keys must be non-empty (join-back columns)")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    v = F.col(value_col)
-    rows = df.filter(v.isNotNull()).select(*keys, value_col)
-    med = rows.groupBy(*keys).agg(
-        F.percentile(v, F.lit(0.5)).alias("_med")
-    )
-    j = rows.join(med, list(keys))
-    mad = j.groupBy(*keys).agg(
-        F.percentile(F.abs(v - F.col("_med")), F.lit(0.5)).alias("_mad")
-    )
-    z = (v - F.col("_med")) / (F.lit(1.4826) * F.col("_mad"))
-    return (
-        j.join(mad, list(keys))
-        .select(
-            *keys,
-            value_col,
-            stable_round(F.col("_med"), digits).alias("med"),
-            stable_round(F.col("_mad"), digits).alias("mad"),
-            F.when(
-                F.col("_mad") > 0, stable_round(z, digits)
-            ).alias("robust_z"),
-            F.when(F.col("_mad") > 0, F.abs(z) > k)
-            .otherwise(v != F.col("_med"))
-            .alias("is_outlier"),
-        )
     )
 
 
@@ -1272,118 +948,6 @@ def agg_state_merge(
     return u.groupBy(*keys).agg(*aggs).filter(F.col("cnt") > 0)
 
 
-def period_over_period(
-    df,
-    period_col: str,
-    value_exprs: dict,
-    keys: list[str] | None = None,
-    lag_periods: int = 1,
-):
-    """Period-over-period comparison per key: aggregate ``value_exprs``
-    by (keys, period), then attach each period's value ``lag_periods``
-    back and the absolute/percent change -- the MoM/YoY report shape.
-    Periods compare by sort order of ``period_col`` (use a date or a
-    sortable period string); gaps mean the Nth PRECEDING period, not
-    calendar arithmetic (document your period grain upstream). First
-    periods report NULL changes; a zero prior value yields NULL pct
-    (never an infinity).
-
-    One hash agg + one per-key window over the (small) aggregated
-    frame -- fact volume shuffles once."""
-    from pyspark.sql import Window
-
-    if not value_exprs:
-        raise ValueError("value_exprs must be non-empty")
-    if lag_periods < 1:
-        raise ValueError("lag_periods must be >= 1")
-    keys = keys or []
-    agg = df.groupBy(*keys, period_col).agg(
-        *[e.alias(n) for n, e in value_exprs.items()]
-    )
-    w = Window.partitionBy(*keys).orderBy(period_col)
-    out = agg
-    for name in value_exprs:
-        prev = F.lag(F.col(name), lag_periods).over(w)
-        out = out.withColumn(f"{name}_prev", prev)
-        out = out.withColumn(
-            f"{name}_change", F.col(name) - prev
-        ).withColumn(
-            f"{name}_pct_change",
-            F.when(
-                prev.isNotNull() & (prev != 0),
-                (F.col(name) - prev) / prev,
-            ),
-        )
-    return out
-
-
-def binary_auc(
-    df,
-    label_col: str,
-    score_col: str,
-    bins: int | None = None,
-    keys: list[str] | None = None,
-):
-    """ROC-AUC via the Mann-Whitney rank statistic with EXACT tie
-    handling: AUC = (sum of positive ranks - npos(npos+1)/2) /
-    (npos * nneg), ranks averaged over tied scores. One row per key
-    group: (keys..., n_pos, n_neg, auc); degenerate groups (single
-    class) report NULL.
-
-    Scale shape (the mllib BinaryClassificationMetrics design): rows
-    aggregate per DISTINCT score first -- the only pass over the data
-    is one hash agg -- and the ordered prefix-sum runs over that
-    per-score frame. With continuous scores its cardinality can reach
-    n; pass ``bins`` to quantize scores onto a fixed grid (floor to
-    1/bins steps) and the ordered pass touches <= bins rows per group
-    -- the documented exactness/size trade every at-scale AUC makes.
-    NULL labels/scores drop; labels are evaluated as booleans."""
-    from pyspark.sql import Window
-
-    if bins is not None and bins < 2:
-        raise ValueError("bins must be >= 2 (or None for exact)")
-    keys = keys or []
-    lab = F.col(label_col).cast("boolean")
-    s = F.col(score_col).cast("double")
-    if bins is not None:
-        s = F.floor(s * bins) / F.lit(float(bins))
-    base = df.filter(lab.isNotNull() & s.isNotNull()).select(
-        *keys, lab.alias("_y"), s.alias("_s")
-    )
-    per_score = base.groupBy(*keys, "_s").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.count(F.when(F.col("_y"), 1)).alias("_np"),
-    )
-    w = (
-        Window.partitionBy(*keys).orderBy("_s")
-        if keys
-        else Window.orderBy("_s")
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    # average rank of a tied block = rows before it + (size + 1) / 2
-    ranked = per_score.withColumn(
-        "_before", F.sum("_n").over(w) - F.col("_n")
-    ).withColumn(
-        "_avg_rank", F.col("_before") + (F.col("_n") + 1) / 2.0
-    )
-    g = ranked.groupBy(*keys).agg(
-        F.sum("_np").alias("n_pos"),
-        (F.sum("_n") - F.sum("_np")).alias("n_neg"),
-        F.sum(F.col("_np") * F.col("_avg_rank")).alias("_rank_sum"),
-    )
-    auc = (
-        F.col("_rank_sum")
-        - F.col("n_pos") * (F.col("n_pos") + 1) / 2.0
-    ) / (F.col("n_pos") * F.col("n_neg"))
-    return g.select(
-        *keys,
-        "n_pos",
-        "n_neg",
-        F.when((F.col("n_pos") > 0) & (F.col("n_neg") > 0), auc).alias(
-            "auc"
-        ),
-    )
-
-
 def calibration_bins(
     df,
     label_col: str,
@@ -1438,49 +1002,6 @@ def calibration_bins(
         .withColumn("brier", F.sum("_se").over(w) / tot)
         .drop("_se")
     )
-
-
-def running_distinct(
-    df,
-    value_col: str,
-    ts_col: str,
-    keys: list[str] | None = None,
-    out_col: str = "n_distinct_so_far",
-    tiebreak_cols: list[str] | None = None,
-):
-    """Cumulative distinct count per key over time: each row reports
-    how many distinct ``value_col`` values its key has seen up to and
-    including that row -- the new-vs-returning readout (unique users
-    so far, vocabulary growth). Spark has no DISTINCT over a running
-    window; the scalable formulation is the first-occurrence flag:
-    row_number over (key, value) marks each value's first row, and a
-    running SUM of flags over the time order counts them --
-    two window passes, both partitioned by the key, no per-row sets.
-    NULL values don't count (COUNT DISTINCT semantics); rows with
-    NULL timestamps drop. Deterministic under timestamp ties via
-    ``tiebreak_cols`` (which also pin WHICH tied row is 'first')."""
-    from pyspark.sql import Window
-
-    keys = keys or []
-    order = [ts_col, *(tiebreak_cols or [])]
-    w_first = Window.partitionBy(*keys, value_col).orderBy(*order)
-    w_run = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    base = df.filter(F.col(ts_col).isNotNull())
-    flagged = base.withColumn(
-        "_first",
-        F.when(
-            F.col(value_col).isNotNull()
-            & (F.row_number().over(w_first) == 1),
-            1,
-        ).otherwise(0),
-    )
-    return flagged.withColumn(
-        out_col, F.sum("_first").over(w_run)
-    ).drop("_first")
 
 
 # ---------------------------------------------------------------------------
@@ -1665,356 +1186,6 @@ def kmv_set_ops(
     )
 
 
-def seasonal_decompose(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    value_col: str,
-    period: int,
-    digits: int = 4,
-) -> DataFrame:
-    """Classical additive decomposition of a regularly-spaced series
-    into trend + seasonal + remainder, per key group -- the step that
-    turns period_over_period's ratios and autocorr's diagnostics into
-    components you can actually subtract (deseasonalized KPIs, anomaly
-    detection on the remainder instead of the raw spiky series).
-
-    Method (the textbook moving-average decomposition, stated so the
-    oracle can replay it): ``trend`` is the centered moving average
-    over exactly ``period`` consecutive positions (NULL wherever the
-    centered frame is incomplete -- series edges); ``seasonal`` is the
-    per-(key, phase) mean of the detrended values, with phase =
-    0-based position mod period, centered so seasonal components sum
-    to ~0 per key; ``remainder`` = value - trend - seasonal where the
-    trend exists. Rounded to ``digits`` (stable_round, cross-engine).
-
-    ONE sorted window exchange per key serves the position index, the
-    centered mean and its completeness count; the per-(key, phase)
-    seasonal means and the per-key centering are two bounded hash aggs
-    broadcast back. Ties in ``order_col`` make positions
-    nondeterministic -- pre-compose a tiebreaker like autocorr.
-
-    Returns keys + (order_col, value_col, phase, trend, seasonal,
-    remainder)."""
-    if period < 2:
-        raise ValueError("period must be >= 2")
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    lo, hi = -(period // 2), (period - 1) // 2
-    w_ord = Window.partitionBy(*keys).orderBy(order_col)
-    w_frame = w_ord.rowsBetween(lo, hi)
-    v = F.col(value_col).cast("double")
-    base = df.select(
-        *keys,
-        order_col,
-        v.alias("_v"),
-        ((F.row_number().over(w_ord) - 1) % period).alias("phase"),
-        F.when(
-            F.count(F.lit(1)).over(w_frame) == period,
-            F.avg(v).over(w_frame),
-        ).alias("_trend"),
-    )
-    season_raw = (
-        base.filter(F.col("_trend").isNotNull())
-        .groupBy(*keys, "phase")
-        .agg(F.avg(F.col("_v") - F.col("_trend")).alias("_s_raw"))
-    )
-    centering = season_raw.groupBy(*keys).agg(
-        F.avg("_s_raw").alias("_s_mean")
-    )
-    season = season_raw.join(centering, list(keys)).select(
-        *keys,
-        "phase",
-        (F.col("_s_raw") - F.col("_s_mean")).alias("_seasonal"),
-    )
-    out = base.join(F.broadcast(season), [*keys, "phase"], "left")
-    return out.select(
-        *keys,
-        order_col,
-        F.col("_v").alias(value_col),
-        "phase",
-        stable_round(F.col("_trend"), digits).alias("trend"),
-        stable_round(F.col("_seasonal"), digits).alias("seasonal"),
-        stable_round(
-            F.col("_v") - F.col("_trend") - F.col("_seasonal"), digits
-        ).alias("remainder"),
-    )
-
-
-def survival_curve(
-    df: DataFrame,
-    keys: list[str],
-    duration_col: str,
-    event_col: str,
-    digits: int = 6,
-) -> DataFrame:
-    """Kaplan-Meier survival estimate per key group -- the
-    right-censoring-aware retention curve (subscription churn, time-to-
-    conversion, device lifetime) that cohort_retention's raw ratios
-    cannot give when observation windows differ per subject. Input is
-    one row per subject: ``duration_col`` (time observed, any ordered
-    numeric) and ``event_col`` (1 = the event happened AT duration,
-    0 = censored at duration -- still alive when we stopped looking).
-
-    S(t) = prod over event times u <= t of (1 - d_u / n_u), with d_u =
-    events at u and n_u = subjects still at risk (duration >= u). The
-    product is computed in LOG space as exp(running sum of
-    ln(1 - d/n)) over ONE ordered window per key, so the whole curve
-    costs one hash agg to the per-(key, time) table (tiny: distinct
-    event times, not subjects) plus one sorted exchange of that table.
-    Output rows are event times only; censoring times shape n_t but
-    emit no step, per the estimator. The d=n terminal case (everyone
-    at risk dies) is handled by an explicit flag -- Spark's ln(0) is
-    NULL, not -inf, so the zero survival is pinned rather than floated.
-    Stable-rounded to ``digits`` for cross-engine replay.
-
-    Returns keys + (t, n_at_risk, events, survival)."""
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    ev = F.col(event_col).cast("double")
-    per_t = (
-        df.filter(
-            F.col(duration_col).isNotNull() & F.col(event_col).isNotNull()
-        )
-        .groupBy(*keys, F.col(duration_col).alias("t"))
-        .agg(
-            F.sum(ev).alias("_d"),
-            F.count(F.lit(1)).alias("_m"),
-        )
-    )
-    w_ord = Window.partitionBy(*keys).orderBy("t")
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    w_prior = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.partitionBy(*keys)
-    stepped = per_t.select(
-        *keys,
-        "t",
-        "_d",
-        (
-            F.sum("_m").over(w_all)
-            - F.coalesce(F.sum("_m").over(w_prior), F.lit(0))
-        ).alias("_n"),
-    ).withColumns(
-        {
-            "_logS": F.sum(
-                F.when(
-                    (F.col("_d") > 0) & (F.col("_d") < F.col("_n")),
-                    F.log(
-                        F.lit(1.0)
-                        - F.col("_d") / F.col("_n").cast("double")
-                    ),
-                ).otherwise(F.lit(0.0))
-            ).over(w_cum),
-            "_died": F.max(
-                (F.col("_d") == F.col("_n")).cast("int")
-            ).over(w_cum),
-        }
-    )
-    return stepped.filter(F.col("_d") > 0).select(
-        *keys,
-        "t",
-        F.col("_n").alias("n_at_risk"),
-        F.col("_d").cast("long").alias("events"),
-        stable_round(
-            F.when(F.col("_died") == 1, F.lit(0.0)).otherwise(
-                F.exp("_logS")
-            ),
-            digits,
-        ).alias("survival"),
-    )
-
-
-def rate_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    bucket: str = "1 hour",
-    trailing: int = 24,
-    min_history: int = 6,
-    digits: int = 4,
-) -> DataFrame:
-    """Event-rate anomaly report: per key, bucket the stream into
-    fixed windows, and score each bucket's count against the TRAILING
-    ``trailing``-bucket baseline (mean/stddev over the preceding
-    OBSERVED buckets only -- the bucket being scored never leaks into
-    its own baseline). The observability primitive for "did error
-    volume spike" / "did ingest stall" over a 100 TB event stream:
-    one hash agg to the per-(key, bucket) table, one sorted window
-    over THAT table (bucket counts, not events), nothing else.
-
-    z = (count - trailing_mean) / trailing_std, NULL while fewer than
-    ``min_history`` prior buckets exist or when the baseline is
-    constant (std = 0) -- a constant-rate history cannot be z-scored,
-    it can only be eyeballed via the also-emitted mean. Gaps: buckets
-    with zero events do NOT materialize rows (nothing to aggregate);
-    the baseline is over observed buckets, which UNDERSTATES spikes
-    after quiet gaps -- callers wanting dense zero-filled buckets
-    should interval-join a calendar first (documented trade, keeps
-    this operator join-free).
-
-    Returns keys + (bucket_start, n, trailing_mean, trailing_std, z).
-    """
-    if trailing < 2:
-        raise ValueError("trailing must be >= 2")
-    if min_history < 2:
-        raise ValueError("min_history must be >= 2")
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    per_b = df.groupBy(
-        *keys,
-        F.window(F.col(ts_col), bucket)["start"].alias("bucket_start"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("bucket_start")
-        .rowsBetween(-trailing, -1)
-    )
-    nn = F.col("n").cast("double")
-    scored = per_b.select(
-        *keys,
-        F.col("bucket_start").cast("timestamp_ntz"),
-        "n",
-        F.count(F.lit(1)).over(w).alias("_h"),
-        F.avg(nn).over(w).alias("_mu"),
-        F.stddev_samp(nn).over(w).alias("_sd"),
-    )
-    ok = (F.col("_h") >= min_history) & (F.col("_sd") > 0)
-    return scored.select(
-        *keys,
-        "bucket_start",
-        "n",
-        stable_round(
-            F.when(F.col("_h") >= min_history, F.col("_mu")), digits
-        ).alias("trailing_mean"),
-        stable_round(
-            F.when(F.col("_h") >= min_history, F.col("_sd")), digits
-        ).alias("trailing_std"),
-        stable_round(
-            F.when(ok, (nn - F.col("_mu")) / F.col("_sd")), digits
-        ).alias("z"),
-    )
-
-
-def ewma(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    value_col: str,
-    alpha: float,
-    adjust: bool = False,
-    out_col: str = "ewma",
-) -> DataFrame:
-    """Per-key exponentially weighted moving average -- the recursive
-    smoother (s_t = alpha*x_t + (1-alpha)*s_{t-1}) that rounds out the
-    time-series set: seasonal_decompose isolates structure, autocorr
-    diagnoses it, ewma tracks level with O(1) state per step. The
-    recursion is ORDER-SEQUENTIAL and has no closed window form, so
-    this is one of the engine's few justified Arrow paths: ONE
-    applyInPandas per key group (vectorized pandas ewm inside), after
-    one shuffle on the keys. Per-key series must fit an executor --
-    the same per-group bound every applyInPandas op carries; at 100 TB
-    that means keys like (device, day), not one global key.
-
-    ``adjust=False`` (default) is the recursive form above;
-    ``adjust=True`` is the bias-corrected weighted mean over all
-    history (pandas semantics, stated so the replica test pins the
-    convention). A NULL value emits the carried-forward smoothed
-    value and the weights keep decaying across the gap (pandas
-    ignore_na=False). Rows keep their input columns; output adds
-    ``out_col``."""
-    if not 0 < alpha <= 1:
-        raise ValueError("alpha must be in (0, 1]")
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        df.schema.fields + [StructField(out_col, DoubleType())]
-    )
-
-    def smooth(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        pdf[out_col] = (
-            pdf[value_col]
-            .astype("float64")
-            .ewm(alpha=alpha, adjust=adjust, ignore_na=False)
-            .mean()
-        )
-        return pdf
-
-    return df.groupBy(*keys).applyInPandas(smooth, schema=schema)
-
-
-def gini_coefficient(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    digits: int = 6,
-) -> DataFrame:
-    """Gini concentration per key group -- "how unevenly is revenue /
-    token count / engagement spread across its members", the
-    concentration complement of key_skew_report's hot-key diagnostics
-    (skew reports find WHICH keys are heavy; Gini scores HOW unequal a
-    group's distribution is on one 0..1 scale). Standard rank formula
-    on ascending-sorted non-negative values:
-
-        G = 2 * sum(i * x_(i)) / (n * sum(x)) - (n + 1) / n
-
-    One ordered window per key for the ranks (value, then a stable
-    arbitrary tiebreak has no effect -- equal values commute in the
-    formula), one hash agg for the two sums. NULLs drop; negative
-    values raise (Gini is undefined); all-zero groups emit NULL.
-    Returns keys + (n, total, gini), stable-rounded."""
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    v = F.col(value_col).cast("double")
-    base = df.filter(v.isNotNull()).select(*keys, v.alias("_v"))
-    w = Window.partitionBy(*keys).orderBy("_v")
-    ranked = base.withColumn("_i", F.row_number().over(w))
-    agg = ranked.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_v").alias("_tot"),
-        F.sum(F.col("_i") * F.col("_v")).alias("_iw"),
-        F.min("_v").alias("_min"),
-    )
-    n = F.col("n").cast("double")
-    # runtime guard, lazily inside the used expression tree (an eager
-    # driver check would cost a construction-time job): assert_true
-    # yields NULL when the guard holds, so the when() routes to the
-    # formula; a negative value fails the whole job with the message
-    guard = F.assert_true(
-        F.col("_min") >= 0,
-        F.lit(f"gini_coefficient: negative values in {value_col}"),
-    )
-    return agg.select(
-        *keys,
-        "n",
-        stable_round(F.col("_tot"), digits).alias("total"),
-        stable_round(
-            F.when(
-                guard.isNull() & (F.col("_tot") > 0),
-                F.lit(2.0) * F.col("_iw") / (n * F.col("_tot"))
-                - (n + 1.0) / n,
-            ),
-            digits,
-        ).alias("gini"),
-    )
-
-
 # Poisson(1) CDF thresholds for the bootstrap weights: hard-coded
 # literals so Spark and DuckDB make bit-identical comparisons. The
 # tail is truncated at weight 7 (P(X >= 7) ~ 8.3e-5 -- statistically
@@ -2164,100 +1335,6 @@ def bootstrap_ci(
         stable_round(
             F.element_at(sorted_means, hi_i), digits
         ).alias("ci_hi"),
-    )
-
-
-def bootstrap_ratio_ci(
-    df: DataFrame,
-    keys: list[str],
-    num_col: str,
-    den_col: str,
-    id_col: str,
-    n_boot: int = 100,
-    level: float = 0.95,
-    salt: str = "",
-    digits: int = 6,
-) -> DataFrame:
-    """Bootstrap CI for a per-key RATIO OF SUMS -- the shape most A/B
-    metrics actually take (CTR = clicks/impressions, revenue per user,
-    tokens per document), where the delta method's normality is shaky
-    and a row-level mean CI answers the wrong question. Same Poisson
-    machinery as bootstrap_ci: every row draws an md5-deterministic
-    Poisson(1) weight per replicate and each replicate's ratio is
-    sum(w*num)/sum(w*den) -- all B of them siblings in ONE hash
-    aggregate, exactly replayable cross-engine. Rows need BOTH columns
-    non-NULL (a ratio metric's unit contributes numerator and
-    denominator together or not at all); replicates with a zero
-    denominator drop from the rank pick.
-
-    Returns keys + (n, ratio, ci_lo, ci_hi)."""
-    if not 0 < level < 1:
-        raise ValueError("level must be in (0, 1)")
-    if n_boot < 10:
-        raise ValueError("n_boot must be >= 10")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    num = F.col(num_col).cast("double")
-    den = F.col(den_col).cast("double")
-    base = df.filter(
-        num.isNotNull() & den.isNotNull() & F.col(id_col).isNotNull()
-    ).select(
-        *keys,
-        num.alias("_num"),
-        den.alias("_den"),
-        F.col(id_col).cast("string").alias("_id"),
-    )
-    base = base.select(
-        "*",
-        *[
-            F.expr(_bootstrap_u_sql("_id", salt, r)).alias(f"_u{r}")
-            for r in range(n_boot)
-        ],
-    ).select(
-        *keys,
-        "_num",
-        "_den",
-        *[
-            F.expr(_pois1_case_sql(f"_u{r}")).alias(f"_wt{r}")
-            for r in range(n_boot)
-        ],
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_num").alias("_sn"),
-        F.sum("_den").alias("_sd"),
-    ]
-    for r in range(n_boot):
-        aggs.append(F.expr(f"sum(_wt{r} * _num)").alias(f"_n{r}"))
-        aggs.append(F.expr(f"sum(_wt{r} * _den)").alias(f"_d{r}"))
-    agg = base.groupBy(*keys).agg(*aggs)
-    ratios = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    F.col(f"_d{r}") != 0,
-                    F.col(f"_n{r}") / F.col(f"_d{r}"),
-                )
-                for r in range(n_boot)
-            ]
-        )
-    )
-    alpha = 1.0 - level
-    sr = F.array_sort(ratios)
-    b = F.size(sr)
-    lo_i = F.greatest(F.lit(1), F.round(b * F.lit(alpha / 2)).cast("int"))
-    hi_i = F.least(b, F.round(b * F.lit(1 - alpha / 2)).cast("int"))
-    return agg.select(
-        *keys,
-        "n",
-        stable_round(
-            F.when(F.col("_sd") != 0, F.col("_sn") / F.col("_sd")),
-            digits,
-        ).alias("ratio"),
-        stable_round(F.element_at(sr, lo_i), digits).alias("ci_lo"),
-        stable_round(F.element_at(sr, hi_i), digits).alias("ci_hi"),
     )
 
 
@@ -3233,145 +2310,6 @@ def anova_oneway(
     )
 
 
-def global_running_sum(
-    df,
-    order_cols: list[str],
-    val_col: str,
-    out_col: str = "running_sum",
-    num_partitions: int | None = None,
-    rn_col: str | None = None,
-) -> DataFrame:
-    """Global prefix sum under a TOTAL order, without the single-task
-    sort an unpartitioned Window.orderBy would plan -- the cumulative
-    twin of global_row_number (same two-phase shape): range-partition
-    on the order columns, per-partition running sum, per-partition
-    TOTALS collect to the driver (bounded by the partition count, the
-    documented collect class) and fold into offsets broadcast back.
-    running_sum(row) = offset(partition) + partition-local prefix sum.
-
-    ``order_cols`` must be a total order (append a unique tiebreak) --
-    prefix sums under ties are layout-dependent in any engine. NULL
-    values in ``val_col`` contribute 0 (SUM semantics). DOUBLE values
-    fold in partition order, so two different input layouts can differ
-    in the last ulp (range boundaries re-sample); integer/decimal
-    inputs are exact. Round before comparing across engines.
-
-    ``rn_col``: also emit the global ROW NUMBER under the same order,
-    from the same ranged pass, window and offsets collect -- callers
-    needing both (abc_classes) pay one range shuffle and one
-    checkpoint instead of running global_row_number separately (the
-    unfused pair doubles the operator's dominant cost). The primitive
-    under ranked cumulative distributions: Pareto/ABC concentration,
-    Lorenz curves, cumulative-share cutoffs -- all at key cardinality,
-    all skew-free."""
-    if not order_cols:
-        raise ValueError("order_cols must be non-empty")
-    from pyspark.sql import Window
-
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"
-    )
-    ranged = df.repartitionByRange(int(parts), *order_cols).withColumn(
-        "_gpid", F.spark_partition_id()
-    )
-    # cache so the totals pass and the summed pass see the SAME range
-    # boundaries (the global_row_number argument)
-    ranged = ranged.localCheckpoint()
-    v = F.coalesce(F.col(val_col).cast("double"), F.lit(0.0))
-    stats = {
-        r._gpid: (r.t, r.c)
-        for r in ranged.groupBy("_gpid")
-        .agg(F.sum(v).alias("t"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    rows = []
-    s_acc, c_acc = 0.0, 0
-    for pid in sorted(stats):
-        rows.append((pid, s_acc, c_acc))
-        t, c = stats[pid]
-        s_acc += t or 0.0
-        c_acc += c
-    off_df = df.sparkSession.createDataFrame(
-        rows, "_gpid INT, _gsoff DOUBLE, _gcoff LONG"
-    )
-    w = (
-        Window.partitionBy("_gpid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranged.join(F.broadcast(off_df), "_gpid").withColumn(
-        out_col, F.sum(v).over(w) + F.col("_gsoff")
-    )
-    if rn_col is not None:
-        wr = Window.partitionBy("_gpid").orderBy(*order_cols)
-        out = out.withColumn(
-            rn_col,
-            (F.row_number().over(wr) + F.col("_gcoff")).cast("long"),
-        )
-    return out.drop("_gpid", "_gsoff", "_gcoff")
-
-
-def abc_classes(
-    df,
-    key_col: str,
-    value_col: str,
-    a_share: float = 0.8,
-    b_share: float = 0.95,
-) -> DataFrame:
-    """Pareto/ABC concentration analysis: per-key value totals ranked
-    descending, cumulative share of the grand total, and the classic
-    class split -- 'A' while cumulative share <= ``a_share``, 'B' up to
-    ``b_share``, 'C' beyond (the first key always classes 'A' even if
-    it alone exceeds the cut: classes are by the PRIOR cumulative
-    share, so every key belongs to the class its prefix enters).
-    Returns (key, total, rank, cum_share, abc).
-
-    Scale shape: one hash agg to key grain, then the two-phase
-    global_running_sum + global_row_number machinery over the
-    key-cardinality frame (both skew-free, no single-task sort); the
-    grand total arrives as a one-row broadcast scalar. NULL keys are
-    excluded; a zero/negative grand total raises (shares undefined)."""
-    if not 0 < a_share < b_share <= 1:
-        raise ValueError(
-            f"need 0 < a_share < b_share <= 1: {a_share}, {b_share}"
-        )
-    per_key = (
-        df.filter(F.col(key_col).isNotNull())
-        .groupBy(key_col)
-        .agg(F.sum(F.col(value_col).cast("double")).alias("total"))
-    )
-    order = [F.col("total").desc(), F.col(key_col)]
-    # ONE fused two-phase pass yields both the rank and the prefix sum
-    summed = global_running_sum(
-        per_key.select(key_col, "total"), order, "total",
-        out_col="_cum", rn_col="rank",
-    )
-    grand = summed.agg(F.sum("total").alias("_g"))
-    out = summed.crossJoin(F.broadcast(grand))
-    gt = F.col("_g")
-    # the positivity guard lives inside EVERY derived column (share AND
-    # class), because a caller selecting only `abc` lets Catalyst prune
-    # cum_share -- a guard in one column alone vanishes with it
-    err = F.raise_error(
-        F.lit("abc_classes: grand total must be positive")
-    )
-    share = F.when(gt > 0, F.col("_cum") / gt).otherwise(err)
-    prior = (F.col("_cum") - F.col("total")) / gt
-    cls = F.when(
-        gt > 0,
-        F.when(prior < F.lit(a_share), F.lit("A"))
-        .when(prior < F.lit(b_share), F.lit("B"))
-        .otherwise(F.lit("C")),
-    ).otherwise(err.cast("string"))
-    return out.select(
-        key_col,
-        "total",
-        "rank",
-        share.alias("cum_share"),
-        cls.alias("abc"),
-    )
-
-
 def rfm_scores(
     df,
     user_col: str,
@@ -3506,305 +2444,6 @@ def weighted_quantile(
         hit.groupBy(*keys)
         .agg(F.min("_v").alias(out))
         .filter(F.col(out).isNotNull())
-    )
-
-
-def logrank_test(
-    df,
-    group_col: str,
-    duration_col: str,
-    event_col: str,
-    group_a,
-    group_b,
-    keys: "list[str] | None" = None,
-) -> DataFrame:
-    """Two-sample log-rank test per key slice -- "do these two arms
-    have the same survival curve?", the hypothesis test completing the
-    Kaplan-Meier readout (survival_curve draws the curves; this says
-    whether their difference is signal). Input rows are subjects
-    (duration, event 1/0-censored, arm label); output one row per key
-    with per-arm subject/event counts, the observed-minus-expected sum
-    O_a - E_a, its hypergeometric variance, and ``z_stat`` =
-    (O_a - E_a) / sqrt(V) (chi2 = z^2 at 1 dof). Stops at the
-    statistic -- no chi2 CDF in Spark SQL, the welch_ttest rationale.
-
-    At each distinct event time t: E_a += d_t * nA_t / n_t and
-    V += d_t * (nA_t/n_t) * (1 - nA_t/n_t) * (n_t - d_t)/(n_t - 1)
-    (V term 0 when n_t = 1), with at-risk counts nA_t/n_t = subjects
-    of duration >= t -- computed as a REVERSE running sum over the
-    per-(key, time) frame (bounded: distinct times, not subjects), so
-    the whole test is one hash agg + one ordered window per key + one
-    final agg. NULL durations/events, rows in neither arm, and NULL
-    key values (the counts-stats join would otherwise silently drop
-    the slice) are excluded. A slice whose rows are ALL censored
-    has no event times at all -- it still emits its subject counts,
-    with o_minus_e = variance = 0.0 (sums over an empty set) and NULL
-    z_stat (the test is undefined at zero variance) rather than
-    vanishing from an inner counts-stats join."""
-    keys = keys or []
-    from pyspark.sql import Window
-
-    g = F.col(group_col)
-    in_a, in_b = g == F.lit(group_a), g == F.lit(group_b)
-    ev = F.col(event_col).cast("double")
-    nn = F.lit(True)
-    for k in keys:
-        nn = nn & F.col(k).isNotNull()
-    base = df.filter(
-        nn
-        & (in_a | in_b)
-        & F.col(duration_col).isNotNull()
-        & F.col(event_col).isNotNull()
-    )
-    per_t = base.groupBy(*keys, F.col(duration_col).alias("t")).agg(
-        F.sum(F.when(in_a, ev).otherwise(0.0)).alias("_d_a"),
-        F.sum(ev).alias("_d"),
-        F.sum(F.when(in_a, 1).otherwise(0)).cast("double").alias("_m_a"),
-        F.count(F.lit(1)).cast("double").alias("_m"),
-    )
-    w_rev = (
-        Window.partitionBy(*[F.col(k) for k in keys])
-        .orderBy(F.col("t").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    risked = per_t.withColumn("_n_a", F.sum("_m_a").over(w_rev)).withColumn(
-        "_n", F.sum("_m").over(w_rev)
-    )
-    p = F.col("_n_a") / F.col("_n")
-    vterm = F.when(
-        F.col("_n") > 1,
-        F.col("_d")
-        * p
-        * (1 - p)
-        * (F.col("_n") - F.col("_d"))
-        / (F.col("_n") - 1),
-    ).otherwise(F.lit(0.0))
-    terms = risked.filter(F.col("_d") > 0).select(
-        *keys,
-        (F.col("_d_a") - F.col("_d") * p).alias("_ome"),
-        vterm.alias("_v"),
-    )
-    stats = terms.groupBy(*keys).agg(
-        F.sum("_ome").alias("o_minus_e"), F.sum("_v").alias("variance")
-    )
-    counts = base.groupBy(*keys).agg(
-        F.sum(in_a.cast("long")).alias("n_a"),
-        F.sum(in_b.cast("long")).alias("n_b"),
-        F.sum(F.when(in_a, ev).otherwise(0.0)).cast("long").alias("events_a"),
-        F.sum(F.when(in_b, ev).otherwise(0.0)).cast("long").alias("events_b"),
-    )
-    # LEFT join so an all-censored slice (stats has no row for it --
-    # every per-time row was filtered by _d > 0) still emits its
-    # counts; keyless uses a single-row broadcast left join for the
-    # same reason (crossJoin against an EMPTY stats frame drops the
-    # counts row outright).
-    if keys:
-        joined = counts.join(stats, keys, "left")
-    else:
-        joined = counts.join(F.broadcast(stats), F.lit(True), "left")
-    ome = F.coalesce(F.col("o_minus_e"), F.lit(0.0))
-    var = F.coalesce(F.col("variance"), F.lit(0.0))
-    z = F.when(var > 0, ome / F.sqrt(var))
-    return joined.select(
-        *keys,
-        "n_a",
-        "n_b",
-        "events_a",
-        "events_b",
-        ome.alias("o_minus_e"),
-        var.alias("variance"),
-        z.alias("z_stat"),
-    )
-
-
-def backtest_forecast(
-    df,
-    keys: Sequence[str],
-    order_col: str,
-    value_col: str,
-    horizon: int = 3,
-    folds: int = 3,
-    alpha: float = 0.5,
-    beta: float = 0.3,
-) -> DataFrame:
-    """Rolling-origin backtest for the Holt forecaster -- the
-    evaluation harness forecasting needs the way ranking_metrics
-    evaluates rankers: ``folds`` cut points per key, each fitting on
-    the series PREFIX and scoring the next ``horizon`` actuals.
-    Returns one row per key with mae/rmse/n_scored over ALL scored
-    (fold, h) pairs, and mape averaged over the NON-DEGENERATE folds:
-    a fold containing a zero actual is excluded from mape (undefined
-    there, not infinite -- a per-key blanket NULL would be coarser
-    than this per-fold exclusion), and mape is
-    NULL only when every fold is degenerate.
-
-    Origins are the last ``folds`` positions that leave a full horizon
-    AND at least 2 prefix points (Holt needs level+trend); series too
-    short for any origin emit no row. Iterative by design (one
-    holt_smooth pass per fold -- each a keyed Arrow pass; folds is a
-    small constant), the kmeans/holt precedent: replica-tested rather
-    than SQL-oracled, with the forecast join itself pure DataFrame
-    composition. Cost: folds x (one sorted keyed pass + one broadcast-
-    sized forecast join); the series is never collected."""
-    if horizon < 1 or folds < 1:
-        raise ValueError("horizon and folds must be >= 1")
-    from pyspark.sql import Window
-
-    keys = list(keys)
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(order_col)
-    wn = Window.partitionBy(*[F.col(k) for k in keys])
-    nn = F.lit(True)
-    for k in keys:
-        nn = nn & F.col(k).isNotNull()
-    # NULL key values are excluded (the forecast-to-actual join would
-    # otherwise silently omit the series from every fold)
-    indexed = (
-        df.filter(
-            nn & F.col(order_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        .withColumn("_i", F.row_number().over(w))
-        .withColumn("_n", F.count(F.lit(1)).over(wn))
-        .localCheckpoint()  # every fold reads the SAME indexed frame
-    )
-    per_fold = []
-    for f in range(folds):
-        # origin: prefix length n - horizon - f (latest folds first)
-        cut = F.col("_n") - F.lit(horizon + f)
-        train = indexed.filter((F.col("_i") <= cut) & (cut >= 2))
-        if train.isEmpty():
-            continue
-        sm = holt_smooth(
-            train, keys, order_col, value_col, alpha=alpha, beta=beta
-        )
-        fc = holt_forecast(sm, keys, order_col, horizon).withColumn(
-            "_fold", F.lit(f)
-        )
-        actual = indexed.select(
-            *keys,
-            (F.col("_i") - cut).cast("int").alias("h"),
-            F.col(value_col).cast("double").alias("_y"),
-        ).filter((F.col("h") >= 1) & (F.col("h") <= horizon))
-        per_fold.append(
-            fc.join(actual, keys + ["h"]).select(
-                *keys,
-                "_fold",
-                "h",
-                (F.col("forecast") - F.col("_y")).alias("_err"),
-                F.col("_y").alias("_actual"),
-            )
-        )
-    if not per_fold:
-        raise ValueError(
-            "no fold has >= 2 prefix points plus a full horizon"
-        )
-    allf = per_fold[0]
-    for x in per_fold[1:]:
-        allf = allf.unionByName(x)
-    allf = allf.localCheckpoint()  # two aggs below read the same frame
-    flat = allf.groupBy(*keys).agg(
-        F.avg(F.abs(F.col("_err"))).alias("mae"),
-        F.sqrt(F.avg(F.col("_err") * F.col("_err"))).alias("rmse"),
-        F.count(F.lit(1)).alias("n_scored"),
-    )
-    # mape per FOLD (NULL for a fold containing a zero actual), then
-    # averaged over the non-degenerate folds -- avg skips NULLs, so
-    # mape is NULL only when every fold is degenerate
-    # try_divide: ANSI mode would otherwise throw DIVIDE_BY_ZERO on the
-    # zero-actual rows BEFORE the when() guard can null the fold out
-    per_fold_mape = allf.groupBy(*keys, "_fold").agg(
-        F.when(
-            F.sum((F.col("_actual") == 0).cast("int")) == 0,
-            F.avg(F.abs(F.try_divide(F.col("_err"), F.col("_actual")))),
-        ).alias("_mape_f")
-    )
-    mape = per_fold_mape.groupBy(*keys).agg(
-        F.avg("_mape_f").alias("mape")
-    )
-    if keys:
-        joined = flat.join(mape, keys)
-    else:
-        joined = flat.join(F.broadcast(mape), F.lit(True), "left")
-    return joined.select(*keys, "mae", "mape", "rmse", "n_scored")
-
-
-def benford_report(
-    df,
-    col: str,
-    keys: "list[str] | None" = None,
-) -> DataFrame:
-    """Benford first-digit audit per key slice -- the classic
-    fabricated-numbers screen (Benford 1938; Nigrini's forensic
-    accounting use): naturally-occurring multi-scale positive amounts
-    have first-digit frequencies log10(1 + 1/d), while invented or
-    constrained numbers usually don't. Returns one row per (key,
-    digit 1..9) with observed count, observed share, the Benford
-    expected share, plus the per-key chi2 statistic (8 dof) repeated on
-    each row for thresholding -- stops at the statistic, the
-    welch_ttest rationale. Only strictly-positive finite values are
-    audited (n excludes the rest); digits a slice never produced
-    still emit a row with zero count, so the chi2 is over all 9 cells.
-    NULL key values are excluded up front (the NULL-is-missingness
-    convention; the grid join would otherwise silently drop the slice
-    instead of auditing it).
-
-    Scale shape: first digit = floor(v / 10^floor(log10 v)) in pure
-    expressions, ONE hash agg to (keys, digit), a broadcast join of
-    the 9-row digit table to fill absent digits, one windowless re-agg
-    for the per-key totals (broadcast back). Not a skew concern at any
-    size: the digit frame is keys x 9."""
-    import math as _math
-
-    keys = keys or []
-    v = F.col(col).cast("double")
-    digit = F.floor(
-        v / F.pow(F.lit(10.0), F.floor(F.log10(v)))
-    ).cast("int")
-    nn = F.lit(True)
-    for k in keys:
-        nn = nn & F.col(k).isNotNull()
-    counted = (
-        df.filter(nn & v.isNotNull() & (v > 0) & ~F.isnan(v))
-        .groupBy(*keys, digit.alias("digit"))
-        .agg(F.count(F.lit(1)).alias("n_digit"))
-    )
-    spark = df.sparkSession
-    digits = spark.createDataFrame(
-        [(d, _math.log10(1 + 1 / d)) for d in range(1, 10)],
-        "digit INT, expected_share DOUBLE",
-    )
-    key_slices = counted.select(*keys).distinct() if keys else None
-    grid = (
-        key_slices.crossJoin(F.broadcast(digits))
-        if keys
-        else digits
-    )
-    full = grid.join(counted, [*keys, "digit"], "left").withColumn(
-        "n_digit", F.coalesce(F.col("n_digit"), F.lit(0))
-    )
-    totals = full.groupBy(*keys).agg(F.sum("n_digit").alias("_n"))
-    out = (
-        full.join(F.broadcast(totals), keys)
-        if keys
-        else full.crossJoin(F.broadcast(totals))
-    )
-    from pyspark.sql import Window
-
-    obs = F.col("n_digit") / F.col("_n")
-    cell = F.pow(
-        F.col("n_digit") - F.col("_n") * F.col("expected_share"), 2
-    ) / (F.col("_n") * F.col("expected_share"))
-    # window over the DIGIT frame: exactly 9 rows per key (keyless: 9
-    # rows total), so even the unpartitioned case is bounded
-    chi_w = F.sum(cell).over(
-        Window.partitionBy(*[F.col(k) for k in keys])
-    )
-    return out.select(
-        *keys,
-        "digit",
-        "n_digit",
-        F.when(F.col("_n") > 0, obs).alias("observed_share"),
-        "expected_share",
-        F.when(F.col("_n") > 0, chi_w).alias("chi2"),
     )
 
 

@@ -1,7 +1,6 @@
 """Corpus-preparation operators for training-data pipelines: chunking,
 PII scrubbing, benchmark-contamination checks, deterministic sampling,
-length histograms, splits and mixtures, LM quality scoring, labeling
-aggregation.
+splits and mixtures, LM quality scoring, labeling aggregation.
 
 These are the steps between "raw documents in a lake" and "training
 mixture" that the dedup/similarity suite (operators/neardup.py,
@@ -157,177 +156,6 @@ def contamination_pairs(
     )
 
 
-def contamination_fraction(
-    train: DataFrame,
-    bench: DataFrame,
-    id_col: str,
-    text_col: str,
-    ngram: int = 13,
-    keep_frac: bool = True,
-) -> DataFrame:
-    """Per-train-document benchmark-overlap fraction (the GPT-3 paper's
-    13-gram decontamination statistic): the share of a document's
-    DISTINCT word n-grams that occur ANYWHERE in the benchmark corpus.
-    contamination_pairs answers "which train/bench pairs overlap"; this
-    answers "how dirty is each train doc overall", the number pipelines
-    threshold on (and report distributions of) when the benchmark is a
-    union of many small eval sets. Documents with fewer than ``ngram``
-    tokens have no n-grams and score 0 over 0 grams.
-
-    Scale shape: both sides explode to distinct shingles; the benchmark
-    side collapses to a DISTINCT gram set (small -- eval suites are
-    MBs, broadcastable) and a left-semi-flag join marks hits; one
-    hash-agg back to doc grain. Only (id, gram) tuples shuffle. At
-    100 TB hash grams to 64-bit before the join (the
-    duplicate_ngram_spans note); strings are kept so the DuckDB twin
-    recomputes verbatim.
-
-    Returns (id_col, n_grams, n_contaminated, contaminated_frac)."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    if ngram < 1:
-        raise ValueError("ngram must be >= 1")
-    t = train.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(text.word_ngrams(text_col, ngram))
-        ).alias("_g"),
-    )
-    bg = (
-        bench.select(
-            F.explode(
-                F.array_distinct(text.word_ngrams(text_col, ngram))
-            ).alias("_g")
-        )
-        .distinct()
-        .withColumn("_hit", F.lit(True))
-    )
-    per_doc = (
-        t.join(F.broadcast(bg), "_g", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_grams"),
-            F.sum(F.when(F.col("_hit"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_contaminated"),
-        )
-    )
-    out = (
-        train.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
-            F.coalesce("n_contaminated", F.lit(0))
-            .cast("long")
-            .alias("n_contaminated"),
-        )
-    )
-    if not keep_frac:
-        return out
-    return out.withColumn(
-        "contaminated_frac",
-        stable_round(
-            F.when(
-                F.col("n_grams") > 0,
-                F.col("n_contaminated") / F.col("n_grams").cast("double"),
-            ).otherwise(0.0),
-            4,
-        ),
-    )
-
-
-def gopher_quality_flags(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_ellipsis_line_frac: float = 0.3,
-    max_bullet_line_frac: float = 0.9,
-    min_alpha_word_frac: float = 0.8,
-) -> DataFrame:
-    """Gopher-rule document filter (Rae et al. 2021, Appendix A): the
-    repetition-free subset of the rules as per-rule measurements plus
-    one combined ``pass`` verdict (repetition itself is
-    token_repetition's job; stopword/language gating is lang_id's).
-    Pure Column expressions over one row -- no shuffle at all, the
-    whole thing runs inside codegen at scan speed, and every measure is
-    emitted so downstream can re-threshold without recomputing.
-
-    Rules measured: word count in [min_words, max_words]; mean word
-    length in [min, max]; '#'-or-'...' symbol-to-word ratio <= max;
-    fraction of lines ending in an ellipsis <= max; fraction of lines
-    starting with a bullet <= max; fraction of words containing at
-    least one alphabetic character >= min.
-
-    Returns (id_col, n_words, mean_word_len, symbol_ratio,
-    ellipsis_line_frac, bullet_line_frac, alpha_word_frac, pass)."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    toks = text.tokens(F.col(text_col))
-    n_words = F.size(toks).cast("long")
-    nw_d = n_words.cast("double")
-    mean_wl = F.when(
-        n_words > 0,
-        F.aggregate(
-            toks, F.lit(0.0), lambda a, t: a + F.length(t)
-        )
-        / nw_d,
-    ).otherwise(0.0)
-    n_hash = F.size(F.split(F.col(text_col), "#", -1)) - 1
-    n_ellipsis = F.size(F.split(F.col(text_col), r"\.\.\.", -1)) - 1
-    symbol_ratio = F.when(
-        n_words > 0, (n_hash + n_ellipsis) / nw_d
-    ).otherwise(0.0)
-    lines = F.filter(
-        F.split(F.col(text_col), "\n", -1), lambda l: F.trim(l) != ""
-    )
-    n_lines = F.size(lines).cast("double")
-    line_frac = lambda pred: F.when(  # noqa: E731
-        n_lines > 0,
-        F.size(F.filter(lines, pred)).cast("double") / n_lines,
-    ).otherwise(0.0)
-    ellipsis_frac = line_frac(lambda l: F.trim(l).rlike(r"\.\.\.$"))
-    bullet_frac = line_frac(
-        lambda l: F.trim(l).rlike(r"^([-*•‣◦])")
-    )
-    alpha_frac = F.when(
-        n_words > 0,
-        F.size(F.filter(toks, lambda t: t.rlike("[A-Za-z]"))).cast(
-            "double"
-        )
-        / nw_d,
-    ).otherwise(0.0)
-    out = df.select(
-        F.col(id_col),
-        n_words.alias("n_words"),
-        stable_round(mean_wl, 4).alias("mean_word_len"),
-        stable_round(symbol_ratio, 4).alias("symbol_ratio"),
-        stable_round(ellipsis_frac, 4).alias("ellipsis_line_frac"),
-        stable_round(bullet_frac, 4).alias("bullet_line_frac"),
-        stable_round(alpha_frac, 4).alias("alpha_word_frac"),
-    )
-    return out.withColumn(
-        "pass",
-        (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
-        & (F.col("mean_word_len") >= min_mean_word_len)
-        & (F.col("mean_word_len") <= max_mean_word_len)
-        & (F.col("symbol_ratio") <= max_symbol_ratio)
-        & (F.col("ellipsis_line_frac") <= max_ellipsis_line_frac)
-        & (F.col("bullet_line_frac") <= max_bullet_line_frac)
-        & (F.col("alpha_word_frac") >= min_alpha_word_frac),
-    )
-
-
 def hash_bucket(key: Column, salt: str = "", buckets: int = 100) -> Column:
     """Deterministic engine-portable bucket in [0, buckets): md5 of the
     stringified key (+salt), first 8 hex digits as an integer, mod
@@ -393,22 +221,6 @@ def leakage_safe_split(
     return df.withColumn(label_col, expr)
 
 
-def deterministic_sample(
-    df: DataFrame,
-    id_col: str,
-    rate_pct: int,
-    salt: str = "",
-) -> DataFrame:
-    """Keep ~rate_pct% of rows by hash of the id -- reproducible across
-    runs, engines, and partitionings (none of which holds for
-    df.sample), and stable under data growth: a row's membership never
-    changes when other rows appear. The filter is a plain expression, so
-    it pushes toward the scan."""
-    if not 0 <= rate_pct <= 100:
-        raise ValueError("rate_pct must be in [0, 100]")
-    return df.filter(hash_bucket(F.col(id_col), salt) < rate_pct)
-
-
 def mixture_sample(
     df: DataFrame,
     id_col: str,
@@ -431,36 +243,6 @@ def mixture_sample(
     for v, p in sorted(rates.items()):
         rate = F.when(F.col(group_col) == v, F.lit(p)).otherwise(rate)
     return df.filter(hash_bucket(F.col(id_col), salt) < rate)
-
-
-def weighted_sample(
-    df: DataFrame, id_col: str, weight_col: str | Column, salt: str = ""
-) -> DataFrame:
-    """Row-level deterministic importance sampling: keep each row with
-    probability equal to its weight in [0, 1] -- the quality-weighted
-    corpus selection pattern (keep high-quality docs surely, low-quality
-    ones proportionally). The coin is an md5-derived uniform from
-    (id, salt), so the sample is reproducible across runs, engines and
-    partitionings, and MONOTONE in the weight: raising a row's weight
-    can only ever ADD it to the sample (same u, bigger threshold),
-    which makes threshold sweeps nested like deterministic_sample's
-    rate sweeps.
-
-    u = first 13 md5 nibbles / 2^52 -- 52 bits fit a double exactly and
-    the scale is a power of two, so u is bit-identical on any engine
-    with md5 (DuckDB twin: md5_hash60-style value >> 8, same grid).
-    Weights > 1 just always keep; weights < 0 never; a NULL weight
-    drops the row (null comparison), matching filter semantics.
-    One codegen'd filter pass; nothing shuffles."""
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))), 1, 13
-        ),
-        16,
-        10,
-    ).cast("long")
-    return df.filter((h / F.lit(float(2**52))) < w)
 
 
 def source_availability(
@@ -614,126 +396,6 @@ def token_repetition(
     )
 
 
-def ngram_repetition(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-) -> DataFrame:
-    """Gopher's intra-document n-gram repetition rules (Rae et al.
-    2021, Appendix A1) -- the two signals token_repetition's unigram
-    view cannot see: the character fraction of the single most frequent
-    word ``n``-gram, and the character fraction covered by ANY ``n``-gram
-    occurring more than once (overlap-safe: a token position covered by
-    several duplicated grams counts once). Gopher drops docs above
-    thresholds like top-2-gram > 0.20 or dup-5-gram coverage > 0.15;
-    call once per n of interest.
-
-    Conventions (documented because the paper's public text leaves them
-    open, and the DuckDB replay pins them): tokens are the engine's
-    lowercased whitespace tokens; "characters" are token characters
-    (separators excluded), so a gram's char weight is
-    length(gram) - (n-1) and per-occurrence coverage is the sum of its
-    distinct covered token lengths. Top-gram tie-break is deterministic:
-    highest count, then most characters, then lexicographically
-    smallest gram.
-
-    Scale shape: ONE hash aggregation builds per-(doc, gram) counts
-    with their start offsets (collect_list bounded by the doc's own
-    token count -- document grain, not corpus grain); the top-gram rank
-    is a per-doc window over gram-grain rows; duplicate coverage
-    explodes ONLY duplicated occurrences into integer token positions
-    and joins them back to per-position token lengths. Integer ids,
-    grams and positions shuffle -- document bodies never do. No
-    collects, no Python in the row path.
-
-    Returns (id_col, n_chars, top_ngram [null if no grams],
-    top_ngram_char_frac, dup_ngram_char_frac), fractions stable-rounded
-    to 4 digits."""
-    if n < 2:
-        raise ValueError("need n >= 2 (unigrams are token_repetition)")
-    from pyspark.sql import Window
-
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    toks = text.tokens(F.lower(F.col(text_col)))
-    base = df.select(
-        F.col(id_col),
-        F.aggregate(
-            toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t)
-        ).alias("n_chars"),
-        text.word_ngrams(F.col(text_col), n).alias("_grams"),
-        toks.alias("_toks"),
-    )
-    occ = base.select(
-        F.col(id_col), F.posexplode("_grams").alias("_start", "_g")
-    )
-    counts = occ.groupBy(id_col, "_g").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.collect_list("_start").alias("_starts"),
-    )
-    gram_chars = (F.length("_g") - (n - 1)).cast("long")
-    top = (
-        counts.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy(
-                    F.col("_cnt").desc(),
-                    gram_chars.desc(),
-                    F.col("_g").asc(),
-                )
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col(id_col),
-            F.col("_g").alias("top_ngram"),
-            (F.col("_cnt") * gram_chars).alias("_top_chars"),
-        )
-    )
-    dup_pos = (
-        counts.filter(F.col("_cnt") >= 2)
-        .select(F.col(id_col), F.explode("_starts").alias("_start"))
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.sequence(F.col("_start"), F.col("_start") + (n - 1))
-            ).alias("_p"),
-        )
-        .distinct()
-    )
-    pos_lens = base.select(
-        F.col(id_col), F.posexplode("_toks").alias("_p", "_tok")
-    ).select(F.col(id_col), "_p", F.length("_tok").alias("_len"))
-    dup_chars = (
-        dup_pos.join(pos_lens, [id_col, "_p"])
-        .groupBy(id_col)
-        .agg(F.sum("_len").alias("_dup_chars"))
-    )
-    frac = lambda c: F.when(  # noqa: E731
-        F.col("n_chars") > 0,
-        stable_round(
-            F.coalesce(c, F.lit(0)).cast("double")
-            / F.col("n_chars").cast("double"),
-            4,
-        ),
-    ).otherwise(0.0)
-    return (
-        base.select(id_col, "n_chars")
-        .join(top, [id_col], "left")
-        .join(dup_chars, [id_col], "left")
-        .select(
-            F.col(id_col),
-            "n_chars",
-            "top_ngram",
-            frac(F.col("_top_chars")).alias("top_ngram_char_frac"),
-            frac(F.col("_dup_chars")).alias("dup_ngram_char_frac"),
-        )
-    )
-
-
 def stratified_take_k(
     df: DataFrame,
     id_col: str,
@@ -865,113 +527,6 @@ def duplicate_ngram_spans(
     return grams.join(dup, "gram", "left_semi").select(id_col, "pos", "gram")
 
 
-def excise_duplicate_spans(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
-    """The removal half of exact-substring training-data dedup (Lee et
-    al.-style): cut every token covered by a duplicated positional
-    n-gram (one occurring in >= ``min_docs`` DISTINCT documents, the
-    duplicate_ngram_spans detection rule) and reassemble the survivors.
-    Overlapping spans union at token granularity, so runs of duplicated
-    shingles excise as one maximal interval without any interval-merge
-    step.
-
-    Untouched documents pass through with their ORIGINAL text (bytes
-    preserved -- they are never re-tokenized on the output side);
-    touched documents come back as the space-join of their kept tokens
-    in order, case preserved (detection lowercases, excision does not).
-    A document whose every token is covered returns ''.
-
-    Scale shape: the positional-gram pass is the duplicate_ngram_spans
-    plan (tokenize once, explode, hash-agg, semi-join back -- bodies
-    never shuffle, and the gram frame is deliberately NOT persisted: it
-    is larger than the corpus, so re-deriving beats caching). The
-    rebuild explodes tokens ONLY for documents that own at least one
-    duplicated span (left-semi gate), so the expensive
-    collect_list-and-reorder group-by is proportional to the duplicated
-    slice of the corpus, not its full size. Covered indexes expand from
-    span starts (explode(sequence(pos, pos+n-1)) + distinct), bounded
-    by n x dup_positions.
-
-    Returns (id_col, text_col [rewritten], n_tokens [original count],
-    n_removed)."""
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    if min_docs < 1:
-        raise ValueError("min_docs must be >= 1")
-    toks_l = text.tokens(F.lower(F.col(text_col)))
-    grams = df.filter(F.size(toks_l) >= n).select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks_l) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks_l, i + 1, n)),
-            )
-        ).alias("pos", "gram"),
-    )
-    dup = (
-        grams.groupBy("gram")
-        .agg(F.count_distinct(id_col).alias("_docs"))
-        .filter(F.col("_docs") >= min_docs)
-        .select("gram")
-    )
-    covered = (
-        grams.join(dup, "gram", "left_semi")
-        .select(
-            id_col,
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))
-            ).alias("idx"),
-        )
-        .distinct()
-    )
-    touched = covered.select(id_col).distinct()
-    # original-case token rows, touched docs only; LEFT join the covered
-    # set (not anti) so an all-covered doc still aggregates to one row
-    # with an empty kept list -- collect_list drops the NULL structs
-    tok_rows = df.join(touched, id_col, "left_semi").select(
-        F.col(id_col),
-        F.posexplode(text.tokens(F.col(text_col))).alias("idx", "tok"),
-    )
-    flagged = tok_rows.join(
-        covered.withColumn("_cov", F.lit(True)), [id_col, "idx"], "left"
-    )
-    rebuilt = flagged.groupBy(id_col).agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("_cov").isNull(), F.struct("idx", "tok")
-                        )
-                    )
-                ),
-                lambda s: s["tok"],
-            ),
-        ).alias("_new"),
-        F.sum(F.when(F.col("_cov").isNotNull(), 1).otherwise(0)).alias(
-            "_removed"
-        ),
-    )
-    return (
-        df.select(id_col, text_col)
-        .join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("_new"), F.col(text_col)).alias(text_col),
-            text.token_count(text_col).alias("n_tokens"),
-            F.coalesce(F.col("_removed"), F.lit(0)).cast("long").alias(
-                "n_removed"
-            ),
-        )
-    )
-
-
 def pack_sequences(
     df: DataFrame,
     id_col: str,
@@ -1024,33 +579,6 @@ def pack_sequences(
         .alias("seq_id"),
         "n_tokens",
         F.col("_prev").cast("long").alias("offset_tokens"),
-    )
-
-
-def length_histogram(
-    df: DataFrame,
-    text_col: str,
-    bucket_width: int = 10,
-    max_bucket: int = 20,
-) -> DataFrame:
-    """Token-length histogram: bucket = min(floor(tokens/width), max) --
-    the corpus-shape diagnostic run before choosing chunk sizes. Output:
-    (bucket, lo_tokens, doc_count) sorted by bucket."""
-    n = text.token_count(text_col)
-    bucket = F.least(
-        F.floor(n / F.lit(float(bucket_width))).cast("long"),
-        F.lit(max_bucket).cast("long"),
-    )
-    return (
-        df.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .select(
-            "bucket",
-            (F.col("bucket") * bucket_width).alias("lo_tokens"),
-            "doc_count",
-        )
-        .orderBy("bucket")
     )
 
 
@@ -1136,116 +664,6 @@ def _bigram_pairs(toks: Column) -> Column:
         F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
         lambda a, b: F.struct(a.alias("prev"), b.alias("token")),
-    )
-
-
-def bigram_prob_table(
-    ref: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
-    """Maximum-likelihood conditional bigram probabilities fit on a
-    reference corpus: (prev, token, p_cond) with p_cond = c(prev,token)
-    / c(prev, *) for bigrams seen >= ``min_count`` times -- the
-    second-order companion to unigram_logprob_table. Context totals
-    include PRUNED bigrams, so retained probs are true ML fractions
-    (they sum to <= 1 per context); the missing mass is exactly what
-    interpolation backs off to. One explode + two hash aggs + one
-    equi-join; the result is a stored artifact like the unigram table."""
-    if min_count < 1:
-        raise ValueError("min_count must be >= 1")
-    pairs = ref.select(
-        F.explode(
-            _bigram_pairs(text.tokens(F.lower(F.col(text_col))))
-        ).alias("_z")
-    ).select(F.col("_z.prev").alias("prev"), F.col("_z.token").alias("token"))
-    bc = pairs.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("_c"))
-    ctx = bc.groupBy("prev").agg(F.sum("_c").alias("_ctx"))
-    return (
-        bc.filter(F.col("_c") >= min_count)
-        .join(ctx, "prev")
-        .select(
-            "prev",
-            "token",
-            (F.col("_c") / F.col("_ctx")).alias("p_cond"),
-        )
-    )
-
-
-def bigram_surprisal(
-    docs: DataFrame,
-    uni_lm: DataFrame,
-    bi_lm: DataFrame,
-    lam: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Mean token surprisal under a Jelinek-Mercer interpolated bigram
-    model: p(w_i | w_{i-1}) = lam * p_bigram + (1 - lam) * p_unigram,
-    with the unigram term carrying add-alpha smoothing + OOV mass (so p
-    is never zero), and each document's FIRST token scored
-    unigram-only (no context -- the no-BOS convention, documented
-    rather than synthesized). Word order now matters: a shuffled
-    document keeps its unigram score but loses its bigram mass, which
-    is exactly the fluency signal the unigram filter can't see.
-
-    Scale shape: one explode to (doc, prev, token) rows, a broadcast
-    join against the bounded unigram table, a SHUFFLE equi-join against
-    the bigram table (unbounded artifact -- AQE broadcasts it when it
-    fits), one hash agg to doc grain. Returns (id_col, n_tokens,
-    surprisal); empty docs NULL."""
-    if not 0 < lam < 1:
-        raise ValueError("lam must be in (0, 1)")
-    toks = docs.select(
-        F.col(id_col), text.tokens(F.lower(F.col(text_col))).alias("_tk")
-    )
-    first = toks.filter(F.size("_tk") >= 1).select(
-        id_col,
-        F.lit(None).cast("string").alias("prev"),
-        F.element_at("_tk", 1).alias("token"),
-    )
-    rest = toks.filter(F.size("_tk") > 1).select(
-        id_col, F.explode(_bigram_pairs(F.col("_tk"))).alias("_z")
-    ).select(
-        id_col,
-        F.col("_z.prev").alias("prev"),
-        F.col("_z.token").alias("token"),
-    )
-    oov = uni_lm.filter(F.col("token").isNull()).select(
-        F.col("logp").alias("_oov_logp")
-    )
-    scored = (
-        first.unionByName(rest)
-        .join(
-            F.broadcast(uni_lm.filter(F.col("token").isNotNull())),
-            "token",
-            "left",
-        )
-        .crossJoin(F.broadcast(oov))
-        .withColumn(
-            "_pu", F.exp(F.coalesce(F.col("logp"), F.col("_oov_logp")))
-        )
-        .join(bi_lm, ["prev", "token"], "left")
-        .withColumn(
-            "_p",
-            F.when(F.col("prev").isNull(), F.col("_pu")).otherwise(
-                F.lit(lam) * F.coalesce(F.col("p_cond"), F.lit(0.0))
-                + F.lit(1.0 - lam) * F.col("_pu")
-            ),
-        )
-    )
-    per_doc = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        (-F.avg(F.log("_p"))).alias("surprisal"),
-    )
-    return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
-            "surprisal",
-        )
     )
 
 
@@ -1356,251 +774,6 @@ def unigram_surprisal(
             "surprisal",
         )
     )
-
-
-def surprisal_buckets(
-    docs: DataFrame,
-    lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str | None = None,
-    cuts: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-) -> DataFrame:
-    """CCNet's head/middle/tail partitioning: score every document's
-    mean surprisal under the LM (unigram_surprisal), cut the
-    distribution at the ``cuts`` quantiles -- per ``group_col`` (CCNet
-    buckets per language; per source works the same way) or globally --
-    and label each doc 'head' (most reference-like), 'middle', or
-    'tail'. Downstream mixes sample bucket-aware (e.g. all of head,
-    half of middle, a tail sliver) instead of hard-thresholding.
-
-    Determinism: bucketing compares the ROUNDED surprisal (4 decimals,
-    stable_round) against EXACT linear-interpolation percentiles of
-    those rounded scores, so the boundary rule is reproducible
-    cross-engine (DuckDB twin: quantile_cont over the same rounded
-    values -- same interpolation). Docs with NULL surprisal (empty)
-    get a NULL bucket.
-
-    Scale shape: the unigram_surprisal plan (explode, broadcast LM
-    join, hash agg) plus ONE tiny per-group percentile aggregate
-    broadcast-joined back -- the group cut table has one row per group,
-    never more. Returns (id_col[, group_col], n_tokens, surprisal,
-    bucket)."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    lo, hi = cuts
-    if not 0.0 < lo < hi < 1.0:
-        raise ValueError("cuts must satisfy 0 < lo < hi < 1")
-    keys = [id_col] + ([group_col] if group_col else [])
-    scored = (
-        docs.select(*keys)
-        .join(unigram_surprisal(docs, lm, id_col, text_col), id_col)
-        .withColumn("surprisal", stable_round(F.col("surprisal"), 4))
-    )
-    grouping = (
-        scored.filter(F.col("surprisal").isNotNull()).groupBy(
-            *( [group_col] if group_col else [] )
-        )
-    )
-    cut_tbl = grouping.agg(
-        F.percentile("surprisal", F.lit(lo)).alias("_c1"),
-        F.percentile("surprisal", F.lit(hi)).alias("_c2"),
-    )
-    # left join: a group whose docs are ALL empty has no cut row, but
-    # its rows must survive (they bucket to NULL via NULL surprisal)
-    joined = (
-        scored.join(F.broadcast(cut_tbl), group_col, "left")
-        if group_col
-        else scored.crossJoin(F.broadcast(cut_tbl))
-    )
-    return joined.select(
-        *keys,
-        "n_tokens",
-        "surprisal",
-        F.when(F.col("surprisal").isNull(), F.lit(None).cast("string"))
-        .when(F.col("surprisal") <= F.col("_c1"), F.lit("head"))
-        .when(F.col("surprisal") <= F.col("_c2"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
-
-
-def split_leakage_audit(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    label_col: str = "split",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-) -> DataFrame:
-    """Cross-split leakage report: near-duplicate PAIRS whose endpoints
-    landed in different splits. leakage_safe_split keeps one ORIGIN
-    together, but near-copies living under different group keys (the
-    same article on two domains, a quote recycled across sources) still
-    straddle the boundary -- exactly the rows that inflate eval scores.
-    Feed it any pair frame (minhash_dedup_pairs, simhash_pairs,
-    embedding near-dups) plus the split-labeled corpus; audit before
-    training, then either drop the eval-side twin or re-split.
-
-    Two broadcast-friendly equi-joins on the pair endpoints + one
-    filter; output is the pair frame's columns + split_a / split_b,
-    only rows with split_a != split_b."""
-    a = docs.select(
-        F.col(id_col).alias(a_col), F.col(label_col).alias("split_a")
-    )
-    b = docs.select(
-        F.col(id_col).alias(b_col), F.col(label_col).alias("split_b")
-    )
-    return (
-        pairs.join(a, a_col)
-        .join(b, b_col)
-        .filter(F.col("split_a") != F.col("split_b"))
-    )
-
-
-def duplication_density(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Per-document duplication score: the fraction of a doc's distinct
-    word ``n``-grams that also appear in at least ``min_docs - 1`` OTHER
-    documents -- the doc-level filter signal behind Lee et al. 2022's
-    "Deduplicating Training Data Makes Language Models Better":
-    duplicate_ngram_spans locates WHERE the verbatim overlap is, this
-    says WHICH documents are mostly recycled text (drop above a
-    threshold, e.g. dup_frac > 0.8 boilerplate mirrors).
-
-    Shape: one inverted index of (gram, doc) distinct pairs; the
-    per-gram distinct-doc count is a hash agg on the gram; the verdict
-    joins back and re-aggregates to doc grain -- only (doc, gram) pairs
-    ever shuffle, never text. Docs shorter than ``n`` tokens have no
-    grams: dup_frac NULL, n_grams 0.
-
-    Returns (id_col, n_grams, dup_grams, dup_frac)."""
-    if n < 1 or min_docs < 2:
-        raise ValueError("need n >= 1 and min_docs >= 2")
-    inv = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(text.word_ngrams(F.lower(F.col(text_col)), n))
-        ).alias("_g"),
-    )
-    gram_df = inv.groupBy("_g").agg(
-        F.count(F.lit(1)).alias("_docs")  # inv is distinct per (doc, gram)
-    )
-    per_doc = (
-        inv.join(gram_df, "_g")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(
-                F.when(F.col("_docs") >= min_docs, 1).otherwise(0)
-            ).cast("long").alias("dup_grams"),
-        )
-        .withColumn(
-            "dup_frac", F.col("dup_grams") / F.col("n_grams")
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_grams"), F.lit(0)).alias("n_grams"),
-            F.coalesce(F.col("dup_grams"), F.lit(0)).alias("dup_grams"),
-            "dup_frac",
-        )
-    )
-
-
-def keywords_tfidf(
-    docs: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 1,
-) -> DataFrame:
-    """Top-``k`` characteristic terms per document by TF-IDF -- the
-    classic per-doc keyword extractor (topic labeling, dedup-cluster
-    naming, index summaries). Smoothed idf = ln((1+N)/(1+df)) + 1
-    (the sklearn formulation: never negative, never divides by zero);
-    score = tf * idf; ties break lexicographically so the cut is
-    deterministic.
-
-    Scale shape: one explode + (doc, term) hash agg for tf, one term
-    hash agg for df, the corpus size rides a one-row broadcast, and
-    the top-k cut is a row_number window partitioned by doc_id --
-    per-document state only, no global sort, nothing wider than the
-    (doc, term) pairs ever shuffles. ``min_df`` prunes hapax noise
-    before the window.
-
-    Output: (id, term, tf, df, score, rank in 1..k)."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    if min_df < 1:
-        raise ValueError("min_df must be >= 1")
-    pairs = docs.select(
-        F.col(id_col),
-        F.explode(text.tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    tf = pairs.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = docs.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    scored = (
-        tf.join(df_.filter(F.col("df") >= min_df), "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "score",
-            F.col("tf")
-            * (
-                F.log((1.0 + F.col("_n")) / (1.0 + F.col("df")))
-                + F.lit(1.0)
-            ),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tf", "df", "score", "rank")
-    )
-
-
-def kfold_assign(
-    df: DataFrame,
-    group_col: str,
-    k: int,
-    salt: str = "",
-    label_col: str = "fold",
-) -> DataFrame:
-    """Deterministic k-fold assignment, ATOMIC per group -- the
-    cross-validation counterpart of leakage_safe_split (same md5 coin
-    of the group key + salt, same guarantees: reproducible across
-    engines and partitionings, stable under corpus growth, NULL groups
-    share one fold, zero shuffles). Fold ids are 0..k-1, uniform in
-    expectation over groups. Train/eval for fold i is
-    ``fold != i`` / ``fold == i``; the salt yields independent
-    replications."""
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    key_str = F.coalesce(
-        F.col(group_col).cast("string"), F.lit("\x00fold_null")
-    )
-    h = F.conv(
-        F.substring(F.md5(F.concat(key_str, F.lit(salt))), 1, 13), 16, 10
-    ).cast("long")
-    return df.withColumn(label_col, (h % F.lit(k)).cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -2014,104 +1187,6 @@ def negative_samples(
     )
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
-    """MOSS winnowing fingerprints (Schleimer, Wilkerson, Aiken --
-    "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
-    2003): from each document's word ``k``-gram stream, keep the
-    MINIMUM gram hash of every ``window`` consecutive grams (leftmost
-    position on ties). The selected set is ~2/(window+1) of all grams
-    yet carries the paper's guarantee: any shared substring of at
-    least window + k - 1 tokens yields at least one shared
-    fingerprint. That density factor is the scale story -- a
-    contamination index over fingerprints stores and joins 20-30x
-    fewer rows than the full shingle inverted index
-    (contamination_pairs), at the cost of only detecting matches
-    longer than the guarantee threshold.
-
-    Returns (id, pos, fp) -- gram position (0-based) and the 60-bit
-    md5 gram hash (the engine's cross-engine hash bridge), one row per
-    SELECTED (position, hash), consecutive windows that pick the same
-    gram collapsing to one row. Documents shorter than
-    ``window + k - 1`` tokens emit their single global minimum (one
-    degenerate window), and documents shorter than ``k`` tokens emit
-    nothing (no grams).
-
-    Scale shape: grams never leave their document -- one ordered
-    window per doc over the (pos, hash) stream (each task sorts only
-    its own documents' grams), then a distinct on the selected rows.
-    The fingerprint frame is the artifact to persist; matching is an
-    equi-join on fp (see winnow_matches)."""
-    from pyspark.sql import Window as W
-
-    if k < 1 or window < 1:
-        raise ValueError("k and window must be >= 1")
-    grams = df.select(
-        F.col(id_col),
-        F.posexplode(
-            text.word_ngrams(text_col, k)
-        ).alias("_pos", "_gram"),
-    ).select(
-        id_col,
-        "_pos",
-        F.conv(F.substring(F.md5("_gram"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("_h"),
-    )
-    w_doc = W.partitionBy(id_col)
-    w_fwd = (
-        W.partitionBy(id_col)
-        .orderBy("_pos")
-        .rowsBetween(W.currentRow, window - 1)
-    )
-    sel = grams.select(
-        id_col,
-        F.count(F.lit(1)).over(w_doc).alias("_n"),
-        F.count(F.lit(1)).over(w_fwd).alias("_w"),
-        F.min(F.struct("_h", "_pos")).over(w_fwd).alias("_m"),
-        "_pos",
-    ).filter(
-        (F.col("_w") == window)
-        | ((F.col("_n") < window) & (F.col("_pos") == 0))
-    )
-    return sel.select(
-        id_col,
-        F.col("_m._pos").alias("pos"),
-        F.col("_m._h").alias("fp"),
-    ).distinct()
-
-
-def winnow_matches(
-    fps_a: DataFrame,
-    fps_b: DataFrame,
-    min_shared: int = 2,
-) -> DataFrame:
-    """Document pairs sharing >= ``min_shared`` distinct winnowing
-    fingerprints, from two winnow_fingerprints frames (columns
-    (id, pos, fp); sides may be train/benchmark, new-batch/index, or
-    the same frame). Output: (id_a, id_b, n_shared) -- for same-frame
-    self-matching, filter id_a < id_b downstream to drop mirrors.
-
-    Inverted-index equi-join on fp (the contamination_pairs shape, at
-    winnowed density): only fingerprint-sharing pairs ever meet, and
-    the per-pair distinct count applies the threshold. At 100 TB the
-    fp frame is the stored index; a new batch joins against it at
-    O(batch x collisions), never O(corpus^2)."""
-    a = fps_a.select(F.col(fps_a.columns[0]).alias("id_a"), "fp").distinct()
-    b = fps_b.select(F.col(fps_b.columns[0]).alias("id_b"), "fp").distinct()
-    return (
-        a.join(b, "fp")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= int(min_shared))
-    )
-
-
 def mask_tokens(
     df: DataFrame,
     id_col: str,
@@ -2489,52 +1564,6 @@ def kn_surprisal(
             F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
             "surprisal",
         )
-    )
-
-
-def compression_ratio(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "compression_ratio",
-    level: int = 6,
-) -> DataFrame:
-    """Per-document zlib compression ratio (compressed bytes / UTF-8
-    bytes) -- the cheap holistic redundancy signal web-corpus filters
-    use beside the structured Gopher rules: machine-generated or
-    boilerplate-heavy text compresses far below prose, and a near-1
-    ratio flags high-entropy noise (base64 blobs, minified code).
-    Complements ngram_repetition (which sees REPEATED n-grams but not
-    low-entropy structure) -- threshold both. Empty/NULL text yields
-    NULL.
-
-    Arrow path (pandas_udf): DEFLATE is an inherently sequential
-    bit-stream with no expression form -- the ewma/bpe_encode
-    justification; zlib at a fixed level is deterministic across
-    platforms, so the pure-Python replica test is bit-exact. One batch
-    pass, no shuffle. Test-only by design (DuckDB has no zlib)."""
-    if not 1 <= level <= 9:
-        raise ValueError(f"level must be 1..9: {level}")
-    from pyspark.sql.functions import pandas_udf
-
-    # annotations are strings under `from __future__ import annotations`
-    # and pandas is imported lazily here, so the hint names the builtin
-    # pandas path explicitly (resolvable from module globals)
-    def _ratio(col):
-        import zlib
-
-        def one(t):
-            if t is None or t == "":
-                return None
-            raw = t.encode("utf-8")
-            return len(zlib.compress(raw, level)) / len(raw)
-
-        return col.map(one)
-
-    ratio = pandas_udf(_ratio, "double")
-
-    return docs.select(
-        F.col(id_col), ratio(F.col(text_col)).alias(out_col)
     )
 
 
@@ -2943,89 +1972,6 @@ def win_rate_pairs(
         p.alias("win_rate_a"),
         (center - half).alias("wilson_lo"),
         (center + half).alias("wilson_hi"),
-    )
-
-
-def ngram_overlap(
-    df: DataFrame,
-    id_col: str,
-    cand_col: str,
-    ref_col: str,
-    ngram: int = 1,
-) -> DataFrame:
-    """Clipped n-gram overlap between a candidate and a reference text
-    column, per row -- the ROUGE-N / BLEU-precision building block an
-    eval pipeline runs over (generation, reference) pairs at corpus
-    scale: precision = clipped matches / candidate grams (BLEU's
-    modified n-gram precision for one order, Papineni et al. 2002),
-    recall = clipped matches / reference grams (ROUGE-N, Lin 2004),
-    plus their harmonic mean. "Clipped" means multiset intersection:
-    a candidate that repeats a reference gram five times gets credit
-    min(5, reference count), so keyword-stuffing can't inflate the
-    score. Returns (id, n_cand, n_ref, n_match, precision, recall,
-    f1); a side shorter than ``ngram`` tokens has zero grams and its
-    ratio stays NULL (nothing to score -- not a flattering 0), f1 NULL
-    whenever either input is (or both are 0). Rows with a NULL text on
-    either side are excluded (unscored is not wrong -- the
-    classification_report convention). ``id_col`` must be unique per
-    row (the table_diff keys convention): a duplicated id would merge
-    its rows' gram counts and fan the final size join out -- dedup
-    first if that is not guaranteed.
-
-    Scale shape: two explode -> (id, gram) hash aggs (each bounded by
-    one document's grams per key -- no corpus-wide hot key is
-    possible), one equi-join on (id, gram) for the clipped minimum,
-    one hash agg back to the id, one join onto the per-row gram sizes.
-    Nothing collects; nothing is quadratic in documents."""
-    if ngram < 1:
-        raise ValueError(f"ngram must be >= 1: {ngram}")
-    i = F.col(id_col)
-    base = df.filter(
-        i.isNotNull()
-        & F.col(cand_col).isNotNull()
-        & F.col(ref_col).isNotNull()
-    )
-
-    def grams(col):
-        return text.word_ngrams(F.col(col), ngram)
-
-    def side_counts(col, out):
-        return (
-            base.select(i.alias("_oid"), F.explode(grams(col)).alias("_g"))
-            .groupBy("_oid", "_g")
-            .agg(F.count(F.lit(1)).alias(out))
-        )
-
-    c = side_counts(cand_col, "_cc")
-    r = side_counts(ref_col, "_rc")
-    shared = (
-        c.join(r, ["_oid", "_g"])
-        .groupBy("_oid")
-        .agg(F.sum(F.least("_cc", "_rc")).alias("n_match"))
-    )
-    sizes = base.select(
-        i.alias("_oid"),
-        F.size(grams(cand_col)).cast("long").alias("n_cand"),
-        F.size(grams(ref_col)).cast("long").alias("n_ref"),
-    )
-    j = sizes.join(shared, "_oid", "left").withColumn(
-        "n_match", F.coalesce(F.col("n_match"), F.lit(0).cast("long"))
-    )
-    precision = F.when(F.col("n_cand") > 0, F.col("n_match") / F.col("n_cand"))
-    recall = F.when(F.col("n_ref") > 0, F.col("n_match") / F.col("n_ref"))
-    return j.select(
-        F.col("_oid").alias(id_col),
-        "n_cand",
-        "n_ref",
-        "n_match",
-        precision.alias("precision"),
-        recall.alias("recall"),
-        F.when(
-            precision.isNotNull()
-            & recall.isNotNull()
-            & ((precision + recall) > 0),
-            2 * precision * recall / (precision + recall),
-        ).alias("f1"),
     )
 
 

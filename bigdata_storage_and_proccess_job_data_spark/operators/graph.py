@@ -28,8 +28,6 @@ the documented scalar collects elsewhere in the engine.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -348,10 +346,7 @@ def _tri_broadcast_budget(driver_memory: str) -> int:
     """Byte budget under which the triangle adjacency is broadcast:
     1/32 of the driver heap (32 MiB at Spark's 1g default, 256 MiB at
     8g), since the driver holds the whole adjacency while building the
-    broadcast. SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES overrides it."""
-    override = os.environ.get("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES")
-    if override is not None:
-        return int(override)
+    broadcast."""
     return parse_byte_conf(driver_memory, default=1 << 30) // 32
 
 

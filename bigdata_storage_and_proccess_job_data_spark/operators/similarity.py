@@ -428,6 +428,12 @@ def _plan_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
+# lsh_topk's single-pass byte budget: an order of magnitude past the
+# largest measured single-pass win, conservative toward the scale-safe
+# two-pass shape.
+_LSH_SINGLE_PASS_MAX_BYTES = 1 << 30
+
+
 def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -504,21 +510,12 @@ def lsh_topk(
     # more bytes (75 vs 7 MB) -- local exchange is cheaper than a
     # second parquet array decode. The gate reads Catalyst's no-job
     # size estimate for the corpus (the statistic the broadcast
-    # planner uses) times n_tables: single-pass below the budget
-    # (default 1 GiB -- an order of magnitude past the largest
-    # measured single-pass WIN, conservative toward the scale-safe
-    # shape; SPARK_GRAFT_LSH_SINGLE_PASS_MAX_BYTES tunes it),
-    # two-pass above. Same pairs, same cosines, same output either
-    # way -- the dedup keeps one row per (query_id, neighbor_id) and
-    # both vectors are functionally determined by the ids.
-    import os as _os
-
-    max_single = int(
-        _os.environ.get(
-            "SPARK_GRAFT_LSH_SINGLE_PASS_MAX_BYTES", str(1 << 30)
-        )
-    )
-    if n_tables * _plan_bytes(c) <= max_single:
+    # planner uses) times n_tables: single-pass below
+    # _LSH_SINGLE_PASS_MAX_BYTES, two-pass above. Same pairs, same
+    # cosines, same output either way -- the dedup keeps one row per
+    # (query_id, neighbor_id) and both vectors are functionally
+    # determined by the ids.
+    if n_tables * _plan_bytes(c) <= _LSH_SINGLE_PASS_MAX_BYTES:
         qb = q.select(
             "query_id", "_qv", F.explode(q_buckets).alias("b")
         ).select("query_id", "_qv", "b.table", "b.bucket")

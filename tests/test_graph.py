@@ -693,25 +693,19 @@ def test_triangle_broadcast_gate_paths_identical(spark, monkeypatch):
         [(rnd.randrange(60), rnd.randrange(60)) for _ in range(600)],
         "src long, dst long",
     )
-    monkeypatch.setenv("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES", "1")
-    shuffled = {
+    bcast = {
         (r.node, r.triangles) for r in graph.triangle_counts(edges).collect()
     }
-    monkeypatch.delenv("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES")
-    bcast = {
+    monkeypatch.setattr(graph, "_tri_broadcast_budget", lambda _mem: 1)
+    shuffled = {
         (r.node, r.triangles) for r in graph.triangle_counts(edges).collect()
     }
     assert shuffled == bcast
     assert sum(t for _, t in bcast) > 0  # the planted graph has triangles
 
 
-def test_triangle_broadcast_budget_scales_with_driver_heap(monkeypatch):
-    """The default budget is 1/32 of the driver heap: 32 MiB at Spark's
-    1g default, 256 MiB at the engine session's 8g; the env override
-    wins over both."""
-    monkeypatch.delenv("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES", raising=False)
+def test_triangle_broadcast_budget_scales_with_driver_heap():
+    """The budget is 1/32 of the driver heap: 32 MiB at Spark's 1g
+    default, 256 MiB at the engine session's 8g."""
     assert graph._tri_broadcast_budget("1g") == 32 << 20
     assert graph._tri_broadcast_budget("8g") == 256 << 20
-    monkeypatch.setenv("SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES", "12345")
-    assert graph._tri_broadcast_budget("1g") == 12345
-    assert graph._tri_broadcast_budget("8g") == 12345

@@ -1,6 +1,5 @@
-"""The statistical-aggregate family: time-decayed aggregates, robust
-median/MAD outliers, one-pass correlation matrix, table profiler,
-chi-square independence, autocorrelation, and PSI drift bins -- each
+"""The statistical-aggregate family: table profiler, PSI drift bins,
+hypothesis tests, experiment statistics and model-eval reports -- each
 with hand-math micro pins plus full-value DuckDB parity on the driver
 tables (numpy cross-checks where a dense reference is clearer)."""
 
@@ -22,172 +21,6 @@ def sql_round_col(c, digits):
     return stable_round(F.col(c), digits).alias(c)
 from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 from tests.parity import compare, duckdb_connect
-
-T0 = datetime.datetime(2024, 1, 2, 12, 0, 0)
-
-
-def test_decayed_agg_hand_math(spark):
-    """Fresh row weighs 1, a row exactly one half-life old weighs 0.5,
-    NULL value rows count toward weight but not sum/avg, NULL ts rows
-    vanish entirely."""
-    hl = 3600.0
-    rows = [
-        ("a", T0, 10.0),
-        ("a", T0 - datetime.timedelta(seconds=hl), 10.0),
-        ("a", T0, None),  # valueless but present
-        ("a", None, 99.0),  # no timestamp -> no weight
-    ]
-    df = spark.createDataFrame(rows, ["k", "ts", "v"])
-    out = aggregates.decayed_agg(df, ["k"], "ts", "v", hl).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r.decayed_sum == pytest.approx(15.0, abs=1e-2)
-    assert r.decayed_weight == pytest.approx(2.5, abs=1e-2)
-    assert r.decayed_avg == pytest.approx(10.0, abs=1e-2)
-
-
-def test_decayed_agg_explicit_ref(spark):
-    """An explicit ref one half-life after the data halves every weight
-    (relative mix unchanged, absolute level halved)."""
-    hl = 3600.0
-    df = spark.createDataFrame([("a", T0, 8.0)], ["k", "ts", "v"])
-    ref = T0 + datetime.timedelta(seconds=hl)
-    r = aggregates.decayed_agg(df, ["k"], "ts", "v", hl, ref_ts=ref).collect()[0]
-    assert r.decayed_weight == pytest.approx(0.5, abs=1e-3)
-    assert r.decayed_sum == pytest.approx(4.0, abs=1e-3)
-    with pytest.raises(ValueError, match="half_life_s"):
-        aggregates.decayed_agg(df, ["k"], "ts", "v", 0)
-
-
-def test_decayed_agg_duckdb_parity(spark, oracle_sf_dir):
-    """Cross-engine value parity on orders: the decay weight is pure
-    IEEE double arithmetic (epoch_us difference -> pow), so DuckDB
-    recomputes the identical measures from the same parquet."""
-    hl = 30 * 86400.0
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    out = aggregates.decayed_agg(
-        orders, ["o_orderpriority"], "o_orderdate", "o_totalprice", hl
-    )
-    w = f"pow(2.0, -((epoch_us(r) - epoch_us(o_orderdate)) / 1e6) / {hl!r})"
-    sql = f"""
-    WITH ref AS (SELECT max(o_orderdate) AS r FROM orders)
-    SELECT o_orderpriority,
-      {sql_round(f'sum({w} * o_totalprice)', 4)} AS decayed_sum,
-      {sql_round(f'sum({w})', 4)} AS decayed_weight,
-      {sql_round(
-          f'sum({w} * o_totalprice) / '
-          f'sum(CASE WHEN o_totalprice IS NOT NULL THEN {w} END)', 4
-      )} AS decayed_avg
-    FROM orders, ref
-    GROUP BY o_orderpriority
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_robust_outliers_hand_math(spark):
-    """[1,2,3,4,100]: med 3, MAD 1 -> only 100 breaches |z| > 3.5.
-    Degenerate [5,5,5,9]: MAD 0 -> 9 flagged with NULL z, the 5s clean.
-    NULL values dropped."""
-    rows = [("g1", float(x)) for x in (1, 2, 3, 4, 100)]
-    rows += [("g2", 5.0), ("g2", 5.0), ("g2", 5.0), ("g2", 9.0)]
-    rows += [("g1", None)]
-    df = spark.createDataFrame(rows, ["g", "v"])
-    out = aggregates.robust_outliers(df, ["g"], "v", k=3.5)
-    got = {(r.g, r.v): (r.med, r.mad, r.robust_z, r.is_outlier)
-           for r in out.collect()}
-    assert len(got) == 7  # NULL row dropped, 5.0 dupes collapse in dict
-    assert got[("g1", 100.0)][3] is True
-    assert got[("g1", 100.0)][2] == pytest.approx(97 / 1.4826, abs=1e-2)
-    for x in (1.0, 2.0, 3.0, 4.0):
-        assert got[("g1", x)][3] is False
-    assert got[("g2", 9.0)][1] == 0.0
-    assert got[("g2", 9.0)][2] is None
-    assert got[("g2", 9.0)][3] is True
-    assert got[("g2", 5.0)][3] is False
-    with pytest.raises(ValueError, match="k must"):
-        aggregates.robust_outliers(df, ["g"], "v", k=0)
-    with pytest.raises(ValueError, match="non-empty"):
-        aggregates.robust_outliers(df, [], "v")
-
-
-def test_robust_outliers_duckdb_parity(spark, oracle_sf_dir):
-    """Row-level annotated output matches DuckDB quantile_cont-based
-    recomputation exactly (F.percentile and quantile_cont are both
-    interpolated medians over doubles)."""
-    li = load_table(spark, oracle_sf_dir, "lineitem")
-    out = aggregates.robust_outliers(
-        li, ["l_returnflag"], "l_extendedprice", k=3.0
-    )
-    z = "(l_extendedprice - _med) / (1.4826 * _mad)"
-    sql = f"""
-    WITH rows_ AS (
-      SELECT l_returnflag, l_extendedprice FROM lineitem
-      WHERE l_extendedprice IS NOT NULL
-    ), med AS (
-      SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5) AS _med
-      FROM rows_ GROUP BY l_returnflag
-    ), j AS (
-      SELECT rows_.*, _med FROM rows_ JOIN med USING (l_returnflag)
-    ), mad AS (
-      SELECT l_returnflag,
-             quantile_cont(abs(l_extendedprice - _med), 0.5) AS _mad
-      FROM j GROUP BY l_returnflag
-    )
-    SELECT j.l_returnflag, j.l_extendedprice,
-      {sql_round('_med', 4)} AS med,
-      {sql_round('_mad', 4)} AS mad,
-      CASE WHEN _mad > 0 THEN {sql_round(z, 4)} END AS robust_z,
-      CASE WHEN _mad > 0 THEN abs({z}) > 3.0
-           ELSE l_extendedprice != _med END AS is_outlier
-    FROM j JOIN mad USING (l_returnflag)
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_corr_matrix_hand_math(spark):
-    """y = 2x -> corr 1; z = -x -> corr -1; NULL rows pairwise-delete
-    (n_pairs tracks each pair separately); single-pair count check."""
-    rows = [
-        (1.0, 2.0, -1.0),
-        (2.0, 4.0, -2.0),
-        (3.0, 6.0, -3.0),
-        (4.0, None, -4.0),
-    ]
-    df = spark.createDataFrame(rows, ["x", "y", "z"])
-    out = {
-        (r.col_a, r.col_b): (r.n_pairs, r.corr)
-        for r in aggregates.corr_matrix(df, ["x", "y", "z"]).collect()
-    }
-    assert len(out) == 6  # upper triangle incl. diagonal
-    assert out[("x", "y")][0] == 3
-    assert out[("x", "y")][1] == pytest.approx(1.0, abs=1e-3)
-    assert out[("x", "z")][0] == 4
-    assert out[("x", "z")][1] == pytest.approx(-1.0, abs=1e-3)
-    assert out[("x", "x")][1] == pytest.approx(1.0, abs=1e-3)
-    with pytest.raises(ValueError, match="at least 2"):
-        aggregates.corr_matrix(df, ["x"])
-    with pytest.raises(ValueError, match="duplicate"):
-        aggregates.corr_matrix(df, ["x", "x"])
-
-
-def test_corr_matrix_duckdb_parity(spark, oracle_sf_dir):
-    """Grouped correlation matrix over the lineitem measure columns
-    matches DuckDB's corr/covar_samp exactly under stable rounding."""
-    li = load_table(spark, oracle_sf_dir, "lineitem")
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    out = aggregates.corr_matrix(li, cols, keys=["l_returnflag"])
-    selects = []
-    for i, a in enumerate(cols):
-        for b in cols[i:]:
-            selects.append(f"""
-            SELECT l_returnflag, '{a}' AS col_a, '{b}' AS col_b,
-              count(CASE WHEN {a} IS NOT NULL AND {b} IS NOT NULL THEN 1 END)
-                AS n_pairs,
-              {sql_round(f'covar_samp({a}, {b})', 4)} AS cov,
-              {sql_round(f'corr({a}, {b})', 4)} AS corr
-            FROM lineitem GROUP BY l_returnflag""")
-    sql = " UNION ALL ".join(selects)
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
 
 
 def test_profile_table_hand_math(spark):
@@ -236,144 +69,6 @@ def test_profile_table_duckdb_parity(spark, oracle_sf_dir):
           {mean} AS mean, {std} AS stddev
         FROM orders""")
     sql = " UNION ALL ".join(selects)
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_chi_square_hand_math(spark):
-    """Perfect association -> Cramer's V = 1; an exactly-independent
-    2x2 -> chi2 = 0; a single-level column -> dof 0, V NULL; NULL rows
-    excluded."""
-    perfect = spark.createDataFrame(
-        [("x", "p")] * 5 + [("y", "q")] * 5, ["a", "b"]
-    )
-    r = aggregates.chi_square(perfect, "a", "b").collect()[0]
-    assert (r.n, r.r_levels, r.c_levels, r.dof) == (10, 2, 2, 1)
-    assert r.chi2 == pytest.approx(10.0, abs=1e-3)  # chi2 = n for 2x2 perfect
-    assert r.cramers_v == pytest.approx(1.0, abs=1e-3)
-
-    indep = spark.createDataFrame(
-        [("x", "p")] * 4 + [("x", "q")] * 4 + [("y", "p")] * 2
-        + [("y", "q")] * 2 + [(None, "p"), ("x", None)],
-        ["a", "b"],
-    )
-    r = aggregates.chi_square(indep, "a", "b").collect()[0]
-    assert r.n == 12  # NULL rows excluded
-    assert r.chi2 == pytest.approx(0.0, abs=1e-6)
-
-    one = spark.createDataFrame([("x", "p"), ("x", "q")], ["a", "b"])
-    r = aggregates.chi_square(one, "a", "b").collect()[0]
-    assert r.dof == 0 and r.cramers_v is None
-
-
-def test_chi_square_matches_numpy_and_duckdb(spark, oracle_sf_dir):
-    """Dense numpy contingency recomputation (classic sum-over-all-cells
-    form, including empty cells) agrees with the distributed algebraic
-    identity; DuckDB recomputes the identical value."""
-    import numpy as np
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    out = aggregates.chi_square(orders, "o_orderstatus", "o_orderpriority")
-    r = out.collect()[0]
-
-    rows = orders.select("o_orderstatus", "o_orderpriority").collect()
-    pairs = [(x.o_orderstatus, x.o_orderpriority) for x in rows
-             if x.o_orderstatus is not None and x.o_orderpriority is not None]
-    avals = sorted({a for a, _ in pairs})
-    bvals = sorted({b for _, b in pairs})
-    m = np.zeros((len(avals), len(bvals)))
-    for a, b in pairs:
-        m[avals.index(a), bvals.index(b)] += 1
-    n = m.sum()
-    exp = np.outer(m.sum(1), m.sum(0)) / n
-    chi2 = ((m - exp) ** 2 / exp).sum()
-    assert r.chi2 == pytest.approx(chi2, abs=1e-2)
-    assert r.cramers_v == pytest.approx(
-        float(np.sqrt(chi2 / (n * (min(m.shape) - 1)))), abs=1e-3
-    )
-
-    sql = f"""
-    WITH base AS (
-      SELECT o_orderstatus AS a, o_orderpriority AS b FROM orders
-      WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL
-    ), obs AS (
-      SELECT a, b, count(*)::DOUBLE AS o FROM base GROUP BY a, b
-    ), ra AS (SELECT a, count(*)::DOUBLE AS ra FROM base GROUP BY a),
-    cb AS (SELECT b, count(*)::DOUBLE AS cb FROM base GROUP BY b),
-    agg AS (
-      SELECT sum(o) AS n,
-             count(DISTINCT obs.a) AS r_levels,
-             count(DISTINCT obs.b) AS c_levels,
-             sum(o * o / (ra.ra * cb.cb)) AS s
-      FROM obs JOIN ra USING (a) JOIN cb USING (b)
-    )
-    SELECT CAST(n AS BIGINT) AS n, r_levels, c_levels,
-           (r_levels - 1) * (c_levels - 1) AS dof,
-           {sql_round('n * (s - 1)', 4)} AS chi2,
-           {sql_round(
-               'sqrt((n * (s - 1)) / (n * least(r_levels - 1, c_levels - 1)))',
-               4,
-           )} AS cramers_v
-    FROM agg
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_autocorr_hand_math(spark):
-    """A strictly increasing series has lag-1 ACF 1 (pairs convention);
-    an alternating series has lag-1 ACF -1 but lag-2 ACF 1; pair counts
-    shrink by the lag; validation."""
-    inc = [("a", i, float(i)) for i in range(10)]
-    alt = [("b", i, float(1 if i % 2 else -1)) for i in range(10)]
-    df = spark.createDataFrame(inc + alt, ["k", "t", "v"])
-    out = {
-        (r.k, r.lag): (r.n_pairs, r.acf)
-        for r in aggregates.autocorr(df, ["k"], "t", "v", lags=[1, 2]).collect()
-    }
-    assert out[("a", 1)][0] == 9 and out[("a", 1)][1] == pytest.approx(1.0, 1e-6)
-    assert out[("a", 2)][0] == 8
-    assert out[("b", 1)][1] == pytest.approx(-1.0, abs=1e-6)
-    assert out[("b", 2)][1] == pytest.approx(1.0, abs=1e-6)
-    with pytest.raises(ValueError, match="positive"):
-        aggregates.autocorr(df, ["k"], "t", "v", lags=[0])
-    with pytest.raises(ValueError, match="duplicate"):
-        aggregates.autocorr(df, ["k"], "t", "v", lags=[1, 1])
-
-
-def test_autocorr_duckdb_parity(spark, oracle_sf_dir):
-    """Daily order totals per priority: lag-1/2 serial correlation
-    matches a DuckDB lag+corr recomputation exactly."""
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    daily = orders.groupBy(
-        "o_orderpriority", F.to_date("o_orderdate").alias("d")
-    ).agg(F.sum("o_totalprice").alias("rev"))
-    out = aggregates.autocorr(
-        daily, ["o_orderpriority"], "d", "rev", lags=[1, 2]
-    )
-    sql = f"""
-    WITH daily AS (
-      SELECT o_orderpriority, CAST(o_orderdate AS DATE) AS d,
-             sum(o_totalprice) AS rev
-      FROM orders GROUP BY 1, 2
-    ), lagged AS (
-      SELECT o_orderpriority, rev,
-             lag(rev, 1) OVER (PARTITION BY o_orderpriority ORDER BY d)
-               AS l1,
-             lag(rev, 2) OVER (PARTITION BY o_orderpriority ORDER BY d)
-               AS l2
-      FROM daily
-    )
-    SELECT o_orderpriority, 1 AS lag,
-           count(CASE WHEN rev IS NOT NULL AND l1 IS NOT NULL THEN 1 END)
-             AS n_pairs,
-           {sql_round('corr(rev, l1)', 4)} AS acf
-    FROM lagged GROUP BY o_orderpriority
-    UNION ALL
-    SELECT o_orderpriority, 2 AS lag,
-           count(CASE WHEN rev IS NOT NULL AND l2 IS NOT NULL THEN 1 END)
-             AS n_pairs,
-           {sql_round('corr(rev, l2)', 4)} AS acf
-    FROM lagged GROUP BY o_orderpriority
-    """
     assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
 
 
@@ -613,179 +308,6 @@ def test_group_linear_fit_pins_and_parity(spark, oracle_sf_dir):
     assert problems == [], problems
 
 
-def test_period_over_period_pins_and_parity(spark, oracle_sf_dir):
-    """MoM revenue per priority: first-period NULLs, zero-prior NULL
-    pct, exact DuckDB parity of the whole report."""
-    import pytest
-
-    from tests.parity import compare, duckdb_connect
-
-    df = spark.createDataFrame(
-        [("a", 1, 10.0), ("a", 2, 0.0), ("a", 3, 5.0), ("b", 1, 2.0)],
-        "k string, p long, v double",
-    )
-    got = {
-        (r.k, r.p): (r.rev_prev, r.rev_change, r.rev_pct_change)
-        for r in aggregates.period_over_period(
-            df, "p", {"rev": F.sum("v")}, keys=["k"]
-        ).collect()
-    }
-    assert got[("a", 1)] == (None, None, None)
-    assert got[("a", 2)] == (10.0, -10.0, -1.0)
-    assert got[("a", 3)] == (0.0, 5.0, None)  # zero prior: NULL pct
-    assert got[("b", 1)] == (None, None, None)
-
-    with pytest.raises(ValueError):
-        aggregates.period_over_period(df, "p", {})
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    out = aggregates.period_over_period(
-        orders.withColumn(
-            "month", F.date_trunc("month", "o_orderdate").cast("date")
-        ),
-        "month",
-        {"rev": F.sum("o_totalprice"), "n": F.count(F.lit(1))},
-        keys=["o_orderpriority"],
-    ).select(
-        "o_orderpriority", "month", "n",
-        *[
-            sql_round_col(c, 4)
-            for c in ("rev", "rev_prev", "rev_change", "rev_pct_change")
-        ],
-        "n_prev", "n_change",
-        sql_round_col("n_pct_change", 6),
-    )
-    con = duckdb_connect(oracle_sf_dir)
-    problems = compare(
-        out,
-        con,
-        f"""
-        WITH agg AS (
-          SELECT o_orderpriority,
-                 date_trunc('month', o_orderdate)::DATE AS month,
-                 SUM(o_totalprice) AS rev, COUNT(*) AS n
-          FROM orders GROUP BY 1, 2
-        ),
-        lagged AS (
-          SELECT *,
-                 LAG(rev) OVER w AS rev_prev,
-                 LAG(n) OVER w AS n_prev
-          FROM agg
-          WINDOW w AS (PARTITION BY o_orderpriority ORDER BY month)
-        )
-        SELECT o_orderpriority, month, n,
-               {sql_round('rev', 4)} AS rev,
-               {sql_round('rev_prev', 4)} AS rev_prev,
-               {sql_round('rev - rev_prev', 4)} AS rev_change,
-               {sql_round('CASE WHEN rev_prev IS NOT NULL AND rev_prev <> 0 THEN (rev - rev_prev) / rev_prev END', 4)} AS rev_pct_change,
-               n_prev, n - n_prev AS n_change,
-               {sql_round('CASE WHEN n_prev IS NOT NULL AND n_prev <> 0 THEN (n - n_prev) / n_prev::DOUBLE END', 6)} AS n_pct_change
-        FROM lagged
-        """,
-    )
-    assert problems == [], problems
-
-
-def test_binary_auc_hand_math_and_parity(spark, oracle_sf_dir):
-    """AUC: perfect separation = 1, inverted = 0, random-ish constant
-    score = 0.5 exactly via tie averaging; numpy rank cross-check on a
-    mixed case; single-class NULL; grouped DuckDB parity on orders;
-    bins monotone approximation."""
-    import numpy as np
-    import pytest
-
-    from tests.parity import compare, duckdb_connect
-
-    perfect = spark.createDataFrame(
-        [(True, 0.9), (True, 0.8), (False, 0.2), (False, 0.1)],
-        "y boolean, s double",
-    )
-    assert aggregates.binary_auc(perfect, "y", "s").collect()[0].auc == 1.0
-    inverted = spark.createDataFrame(
-        [(True, 0.1), (False, 0.9)], "y boolean, s double"
-    )
-    assert aggregates.binary_auc(inverted, "y", "s").collect()[0].auc == 0.0
-    const = spark.createDataFrame(
-        [(True, 0.5), (False, 0.5), (True, 0.5), (False, 0.5)],
-        "y boolean, s double",
-    )
-    assert aggregates.binary_auc(const, "y", "s").collect()[0].auc == 0.5
-    onecls = spark.createDataFrame([(True, 0.5)], "y boolean, s double")
-    assert aggregates.binary_auc(onecls, "y", "s").collect()[0].auc is None
-
-    # numpy cross-check with ties
-    rng = np.random.default_rng(5)
-    ys = rng.random(300) < 0.4
-    ss = np.round(rng.random(300) + ys * 0.3, 2)  # ties via rounding
-    df = spark.createDataFrame(
-        [(bool(y), float(x)) for y, x in zip(ys, ss)],
-        "y boolean, s double",
-    )
-    got = aggregates.binary_auc(df, "y", "s").collect()[0].auc
-    # reference: average ranks (scipy-free)
-    order = np.argsort(ss, kind="stable")
-    ranks = np.empty(len(ss))
-    sorted_s = ss[order]
-    i = 0
-    while i < len(ss):
-        j = i
-        while j + 1 < len(ss) and sorted_s[j + 1] == sorted_s[i]:
-            j += 1
-        ranks[order[i : j + 1]] = (i + j) / 2 + 1
-        i = j + 1
-    npos, nneg = ys.sum(), (~ys).sum()
-    want = (ranks[ys].sum() - npos * (npos + 1) / 2) / (npos * nneg)
-    assert abs(got - want) < 1e-12
-
-    with pytest.raises(ValueError):
-        aggregates.binary_auc(df, "y", "s", bins=1)
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    labeled = orders.select(
-        "o_orderpriority",
-        (F.col("o_orderkey") % 3 == 0).alias("y"),
-        (F.col("o_totalprice") / 600000.0).alias("s"),
-    )
-    out = aggregates.binary_auc(
-        labeled, "y", "s", keys=["o_orderpriority"]
-    ).select(
-        "o_orderpriority", "n_pos", "n_neg",
-        sql_round_col("auc", 6),
-    )
-    con = duckdb_connect(oracle_sf_dir)
-    problems = compare(
-        out,
-        con,
-        f"""
-        WITH base AS (
-          SELECT o_orderpriority AS k,
-                 o_orderkey % 3 = 0 AS y,
-                 o_totalprice / 600000.0 AS s
-          FROM orders
-        ),
-        ranked AS (
-          SELECT k, y,
-                 -- average rank over ties, per group
-                 RANK() OVER (PARTITION BY k ORDER BY s)
-                   + (COUNT(*) OVER (PARTITION BY k, s) - 1) / 2.0
-                   AS r
-          FROM base
-        ),
-        g AS (
-          SELECT k AS o_orderpriority,
-                 COUNT(CASE WHEN y THEN 1 END) AS n_pos,
-                 COUNT(CASE WHEN NOT y THEN 1 END) AS n_neg,
-                 SUM(CASE WHEN y THEN r END) AS rank_sum
-          FROM ranked GROUP BY k
-        )
-        SELECT o_orderpriority, n_pos, n_neg,
-               {sql_round('(rank_sum - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg)', 6)} AS auc
-        FROM g
-        """,
-    )
-    assert problems == [], problems
-
-
 def test_calibration_and_entropy_pins_and_parity(spark, oracle_sf_dir):
     """Calibration bins: perfect calibration gap ~0, top-bin clamp,
     DuckDB parity."""
@@ -841,394 +363,6 @@ def test_calibration_and_entropy_pins_and_parity(spark, oracle_sf_dir):
         """,
     )
     assert problems == [], problems
-
-
-def test_running_distinct_pins_and_parity(spark, oracle_sf_dir):
-    """New-value steps increment, repeats don't, NULL values never
-    count, keys independent; full row-level DuckDB parity on events
-    (distinct users seen per event_type over time)."""
-    from tests.parity import compare, duckdb_connect
-
-    rows = [
-        ("a", 1, "x"), ("a", 2, "y"), ("a", 3, "x"),
-        ("a", 4, None), ("a", 5, "z"),
-        ("b", 1, "x"),
-    ]
-    df = spark.createDataFrame(rows, "k string, ts long, v string")
-    got = {
-        (r.k, r.ts): r.n_distinct_so_far
-        for r in aggregates.running_distinct(
-            df, "v", "ts", keys=["k"]
-        ).collect()
-    }
-    assert got == {
-        ("a", 1): 1, ("a", 2): 2, ("a", 3): 2,
-        ("a", 4): 2, ("a", 5): 3,
-        ("b", 1): 1,
-    }
-
-    events = load_table(spark, oracle_sf_dir, "events")
-    out = aggregates.running_distinct(
-        events, "user_id", "ts",
-        keys=["event_type"], tiebreak_cols=["event_id"],
-    ).select("event_id", "n_distinct_so_far")
-    con = duckdb_connect(oracle_sf_dir)
-    problems = compare(
-        out,
-        con,
-        """
-        WITH flagged AS (
-          SELECT event_id, event_type, ts,
-                 CASE WHEN user_id IS NOT NULL
-                       AND ROW_NUMBER() OVER (
-                             PARTITION BY event_type, user_id
-                             ORDER BY ts, event_id) = 1
-                      THEN 1 ELSE 0 END AS f
-          FROM events WHERE ts IS NOT NULL
-        )
-        SELECT event_id,
-               SUM(f) OVER (PARTITION BY event_type
-                            ORDER BY ts, event_id
-                            ROWS UNBOUNDED PRECEDING)
-                 AS n_distinct_so_far
-        FROM flagged
-        """,
-    )
-    assert problems == [], problems
-
-
-def test_seasonal_decompose_pins_and_parity(spark, oracle_sf_dir):
-    """Classical additive decomposition: (1) a noise-free planted
-    series (linear trend + zero-sum period-4 season) recovers the
-    EXACT seasonal pattern, a linear trend, and a constant remainder
-    (the known half-step MA artifact of an even period); (2) centered-
-    frame edges have NULL trend; (3) full DuckDB replay parity on the
-    per-priority monthly orders revenue series; (4) period validation."""
-    season = {0: 3.0, 1: -1.0, 2: -4.0, 3: 2.0}  # sums to 0
-    rows = [
-        ("k", t, 10.0 + 0.5 * t + season[t % 4]) for t in range(16)
-    ]
-    df = spark.createDataFrame(rows, "g string, t int, v double")
-    out = aggregates.seasonal_decompose(df, ["g"], "t", "v", period=4)
-    got = {r.t: r for r in out.collect()}
-    assert len(got) == 16
-    # edges: centered frame rowsBetween(-2, 1) incomplete at t=0,1,15
-    for t in (0, 1, 15):
-        assert got[t].trend is None and got[t].remainder is None
-    for t in range(2, 15):
-        # trend of the linear+zero-sum-season series = linear at t-0.5
-        assert abs(got[t].trend - (10.0 + 0.5 * (t - 0.5))) < 1e-9, t
-        # seasonal recovered exactly; remainder = the constant 0.25
-        # half-step offset
-        assert abs(got[t].seasonal - season[t % 4]) < 1e-9, t
-        assert abs(got[t].remainder - 0.25) < 1e-9, t
-    # seasonal components centered per key
-    s_by_phase = {r.phase: r.seasonal for r in out.collect()}
-    assert abs(sum(s_by_phase.values())) < 1e-9
-
-    with pytest.raises(ValueError):
-        aggregates.seasonal_decompose(df, ["g"], "t", "v", period=1)
-
-    # DuckDB replay on the real monthly revenue series
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    series = orders.groupBy(
-        F.col("o_orderpriority").alias("prio"),
-        F.date_trunc("month", "o_orderdate").cast("date").alias("m"),
-    ).agg(stable_round(F.sum("o_totalprice"), 2).alias("v"))
-    got_r = aggregates.seasonal_decompose(
-        series, ["prio"], "m", "v", period=12
-    )
-    p, lo_p, hi_f = 12, 6, 5
-    sql = f"""
-        WITH series AS (
-          SELECT o_orderpriority AS prio,
-                 date_trunc('month', o_orderdate)::DATE AS m,
-                 {sql_round('SUM(o_totalprice)', 2)} AS v
-          FROM orders GROUP BY 1, 2
-        ),
-        base AS (
-          SELECT prio, m, v,
-                 (row_number() OVER w_ord - 1) % {p} AS phase,
-                 CASE WHEN count(*) OVER w_f = {p}
-                      THEN avg(v) OVER w_f END AS _trend
-          FROM series
-          WINDOW w_ord AS (PARTITION BY prio ORDER BY m),
-                 w_f AS (PARTITION BY prio ORDER BY m
-                         ROWS BETWEEN {lo_p} PRECEDING
-                                  AND {hi_f} FOLLOWING)
-        ),
-        sr AS (
-          SELECT prio, phase, avg(v - _trend) AS _s_raw
-          FROM base WHERE _trend IS NOT NULL GROUP BY prio, phase
-        ),
-        ctr AS (
-          SELECT prio, avg(_s_raw) AS _s_mean FROM sr GROUP BY prio
-        ),
-        season AS (
-          SELECT sr.prio, sr.phase, sr._s_raw - ctr._s_mean AS _seasonal
-          FROM sr JOIN ctr USING (prio)
-        )
-        SELECT b.prio, b.m, b.v, CAST(b.phase AS BIGINT) AS phase,
-               {sql_round('b._trend', 4)} AS trend,
-               {sql_round('s._seasonal', 4)} AS seasonal,
-               {sql_round('b.v - b._trend - s._seasonal', 4)} AS remainder
-        FROM base b LEFT JOIN season s
-          ON b.prio = s.prio AND b.phase = s.phase
-    """
-    assert compare(got_r, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_survival_curve_km_hand_math_and_parity(spark, oracle_sf_dir):
-    """Kaplan-Meier: (1) the classic Freireich 6-MP arm (21 subjects,
-    12 censored) reproduces the textbook curve to 6dp; censored-only
-    times emit no step but shape n_at_risk; (2) everyone-dies terminal
-    case pins survival exactly 0; (3) full DuckDB replay parity on a
-    derived orders cohort (duration/event from order keys)."""
-    times = [6, 6, 6, 7, 10, 13, 16, 22, 23]          # events
-    cens = [6, 9, 10, 11, 17, 19, 20, 25, 32, 32, 34, 35]  # censored
-    rows = [("a", t, 1) for t in times] + [("a", t, 0) for t in cens]
-    df = spark.createDataFrame(rows, "g string, dur int, ev int")
-    out = {
-        r.t: r
-        for r in aggregates.survival_curve(df, ["g"], "dur", "ev").collect()
-    }
-    expect = {
-        6: (21, 3, 0.857143),
-        7: (17, 1, 0.806723),
-        10: (15, 1, 0.752941),
-        13: (12, 1, 0.690196),
-        16: (11, 1, 0.627451),
-        22: (7, 1, 0.537815),
-        23: (6, 1, 0.448179),
-    }
-    assert set(out) == set(expect)
-    for t, (n, d, s) in expect.items():
-        assert out[t].n_at_risk == n, t
-        assert out[t].events == d, t
-        assert abs(out[t].survival - s) < 1e-6, t
-    assert 9 not in out  # censored-only time: no step
-
-    dead = spark.createDataFrame(
-        [("z", 5, 1), ("z", 5, 1)], "g string, dur int, ev int"
-    )
-    row = aggregates.survival_curve(dead, ["g"], "dur", "ev").collect()[0]
-    assert row.survival == 0.0 and row.n_at_risk == 2 and row.events == 2
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    subj = orders.select(
-        F.col("o_orderpriority").alias("prio"),
-        (F.col("o_orderkey") % 50 + 1).alias("dur"),
-        (F.col("o_orderkey") % 3 != 0).cast("int").alias("ev"),
-    )
-    got = aggregates.survival_curve(subj, ["prio"], "dur", "ev")
-    sql = f"""
-        WITH subj AS (
-          SELECT o_orderpriority AS prio,
-                 o_orderkey % 50 + 1 AS t,
-                 CASE WHEN o_orderkey % 3 <> 0 THEN 1 ELSE 0 END AS ev
-          FROM orders
-        ),
-        per_t AS (
-          SELECT prio, t, SUM(ev)::DOUBLE AS d, COUNT(*) AS m
-          FROM subj GROUP BY prio, t
-        ),
-        st AS (
-          SELECT prio, t, d,
-                 (SUM(m) OVER (PARTITION BY prio)
-                  - COALESCE(SUM(m) OVER (
-                      PARTITION BY prio ORDER BY t
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                    ), 0))::BIGINT AS n
-          FROM per_t
-        ),
-        cum AS (
-          SELECT prio, t, d, n,
-                 SUM(CASE WHEN d > 0 AND d < n
-                          THEN ln(1 - d / n) ELSE 0 END) OVER w AS logS,
-                 MAX(CASE WHEN d = n THEN 1 ELSE 0 END) OVER w AS died
-          FROM st
-          WINDOW w AS (PARTITION BY prio ORDER BY t
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        )
-        SELECT prio, t, n AS n_at_risk, d::BIGINT AS events,
-               {sql_round('CASE WHEN died = 1 THEN 0.0 ELSE exp(logS) END', 6)}
-                 AS survival
-        FROM cum WHERE d > 0
-    """
-    assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_rate_anomalies_pins_and_parity(spark, oracle_sf_dir):
-    """Trailing z-score rate anomalies: (1) a planted 10x spike over a
-    noisy-but-steady baseline scores a large positive z and the quiet
-    bucket after it a negative one; (2) warm-up buckets (< min_history
-    priors) and constant-baseline buckets emit NULL z; (3) full DuckDB
-    replay parity on hourly event_type counts."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    # steady alternating 3/4 events per hour for 11 hours, then a
-    # 30-event spike at hour 11, then 1 event at hour 12
-    for h in range(11):
-        for i in range(3 + (h % 2)):
-            rows.append(("svc", base + dt.timedelta(hours=h, minutes=i)))
-    for i in range(30):
-        rows.append(("svc", base + dt.timedelta(hours=11, minutes=i)))
-    rows.append(("svc", base + dt.timedelta(hours=12)))
-    # a constant-rate key: exactly 2 events every hour -> std 0 -> NULL z
-    for h in range(10):
-        for i in range(2):
-            rows.append(("flat", base + dt.timedelta(hours=h, minutes=i)))
-    df = spark.createDataFrame(rows, "k string, ts timestamp")
-    out = aggregates.rate_anomalies(
-        df, ["k"], "ts", bucket="1 hour", trailing=24, min_history=6
-    )
-    svc = {r.bucket_start.hour: r for r in out.filter(F.col("k") == "svc").collect()}
-    for h in range(6):  # warm-up: fewer than 6 prior buckets
-        assert svc[h].z is None and svc[h].trailing_mean is None
-    assert svc[11].z is not None and svc[11].z > 10
-    assert svc[12].z is not None and svc[12].z < 0
-    flat = {r.bucket_start.hour: r for r in out.filter(F.col("k") == "flat").collect()}
-    assert all(r.z is None for r in flat.values())
-    assert flat[9].trailing_mean == 2.0  # mean still emitted
-
-    events = load_table(spark, oracle_sf_dir, "events")
-    got = aggregates.rate_anomalies(
-        events, ["event_type"], "ts", bucket="1 hour",
-        trailing=24, min_history=6,
-    )
-    sql = f"""
-        WITH per_b AS (
-          SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-                 COUNT(*) AS n
-          FROM events GROUP BY 1, 2
-        ),
-        scored AS (
-          SELECT event_type, bucket_start, n,
-                 COUNT(*) OVER w AS h,
-                 AVG(n::DOUBLE) OVER w AS mu,
-                 STDDEV_SAMP(n::DOUBLE) OVER w AS sd
-          FROM per_b
-          WINDOW w AS (PARTITION BY event_type ORDER BY bucket_start
-                       ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
-        )
-        SELECT event_type, bucket_start, n,
-               {sql_round('CASE WHEN h >= 6 THEN mu END', 4)} AS trailing_mean,
-               {sql_round('CASE WHEN h >= 6 THEN sd END', 4)} AS trailing_std,
-               {sql_round('CASE WHEN h >= 6 AND sd > 0 THEN (n::DOUBLE - mu) / sd END', 4)} AS z
-        FROM scored
-    """
-    assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_ewma_matches_pandas_replica(spark, oracle_sf_dir):
-    """Per-key EWMA (the justified Arrow path -- order-sequential
-    recursion): (1) hand recursion pins for adjust=False; (2) exact
-    agreement with an independent pandas groupby-ewm replica on a
-    derived orders series for both adjust conventions; (3) NULLs emit
-    NULL without resetting state; (4) alpha validation."""
-    import pandas as pd
-
-    rows = [("a", 0, 2.0), ("a", 1, 4.0), ("a", 2, None), ("a", 3, 8.0)]
-    df = spark.createDataFrame(rows, "k string, t int, v double")
-    out = {
-        r.t: r.ewma
-        for r in aggregates.ewma(df, ["k"], "t", "v", alpha=0.5).collect()
-    }
-    # s0=2; s1=0.5*4+0.5*2=3; the NULL at t=2 carries s1 forward; the
-    # gap decays the carried state's weight to (1-a)^2, renormalized
-    # (pandas adjust=False, ignore_na=False):
-    # s3 = (a*8 + (1-a)^2*s1) / (a + (1-a)^2)
-    assert out[0] == 2.0 and out[1] == 3.0 and out[2] == 3.0
-    expect3 = (0.5 * 8 + 0.25 * 3.0) / (0.5 + 0.25)
-    assert abs(out[3] - expect3) < 1e-12
-
-    with pytest.raises(ValueError):
-        aggregates.ewma(df, ["k"], "t", "v", alpha=0.0)
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    series = orders.select(
-        F.col("o_orderpriority").alias("k"),
-        F.col("o_orderkey").alias("t"),
-        F.col("o_totalprice").alias("v"),
-    )
-    pdf = series.toPandas()
-    for adjust in (False, True):
-        got = (
-            aggregates.ewma(series, ["k"], "t", "v", 0.3, adjust=adjust)
-            .select("k", "t", "ewma")
-            .toPandas()
-            .sort_values(["k", "t"])
-            .reset_index(drop=True)
-        )
-        exp = pdf.sort_values(["k", "t"]).reset_index(drop=True)
-        exp["ewma"] = (
-            exp.groupby("k")["v"]
-            .transform(lambda s: s.ewm(alpha=0.3, adjust=adjust).mean())
-        )
-        pd.testing.assert_series_equal(
-            got["ewma"], exp["ewma"], check_exact=False, rtol=1e-12
-        )
-
-
-def test_gini_coefficient_pins_and_parity(spark, oracle_sf_dir):
-    """Concentration scoring: (1) perfect equality pins gini ~0 (the
-    finite-n rank formula gives exactly 0 for equal values), full
-    concentration (one member owns everything) pins (n-1)/n; (2)
-    all-zero groups emit NULL, negative values fail the job; (3) full
-    DuckDB replay parity of per-priority customer-spend concentration
-    on orders."""
-    eq = spark.createDataFrame(
-        [("a", 5.0)] * 8, "g string, v double"
-    )
-    row = aggregates.gini_coefficient(eq, ["g"], "v").collect()[0]
-    assert row.n == 8 and abs(row.gini) < 1e-12
-
-    conc = spark.createDataFrame(
-        [("a", 0.0)] * 9 + [("a", 100.0)], "g string, v double"
-    )
-    row = aggregates.gini_coefficient(conc, ["g"], "v").collect()[0]
-    assert abs(row.gini - 0.9) < 1e-9  # (n-1)/n with n=10
-
-    zeros = spark.createDataFrame(
-        [("z", 0.0), ("z", 0.0)], "g string, v double"
-    )
-    assert (
-        aggregates.gini_coefficient(zeros, ["g"], "v").collect()[0].gini
-        is None
-    )
-
-    neg = spark.createDataFrame([("g", -1.0)], "g string, v double")
-    with pytest.raises(Exception, match="negative values"):
-        aggregates.gini_coefficient(neg, ["g"], "v").collect()
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    spend = orders.groupBy(
-        F.col("o_orderpriority").alias("prio"),
-        F.col("o_custkey").alias("c"),
-    ).agg(stable_round(F.sum("o_totalprice"), 2).alias("v"))
-    got = aggregates.gini_coefficient(spend, ["prio"], "v", digits=4)
-    sql = f"""
-        WITH spend AS (
-          SELECT o_orderpriority AS prio, o_custkey AS c,
-                 {sql_round('SUM(o_totalprice)', 2)} AS v
-          FROM orders GROUP BY 1, 2
-        ),
-        ranked AS (
-          SELECT prio, v,
-                 row_number() OVER (PARTITION BY prio ORDER BY v) AS i
-          FROM spend
-        )
-        SELECT prio, COUNT(*) AS n,
-               {sql_round('SUM(v)', 4)} AS total,
-               {sql_round(
-                   'CASE WHEN SUM(v) > 0 THEN '
-                   '2.0 * SUM(i * v) / (COUNT(*) * SUM(v)) '
-                   '- (COUNT(*) + 1.0) / COUNT(*) END', 4)} AS gini
-        FROM ranked GROUP BY prio
-    """
-    assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []
 
 
 def test_bootstrap_ci_poisson_replay_and_sanity(spark, oracle_sf_dir):
@@ -1321,79 +455,6 @@ def test_bootstrap_ci_poisson_replay_and_sanity(spark, oracle_sf_dir):
     """
     got = aggregates.bootstrap_ci(orders, **args)
     assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_bootstrap_ratio_ci_replay_and_sanity(spark, oracle_sf_dir):
-    """Ratio-of-sums bootstrap (the A/B metric shape): (1) interval
-    brackets the point ratio, deterministic reruns; (2) EXACT DuckDB
-    replay of weights, replicate ratios and rank picks on a
-    value-per-event metric over events; (3) both-columns-required
-    NULL handling."""
-    from bigdata_storage_and_proccess_job_data_spark.plans.scale_queries import (
-        _md5_hash60_sql,
-    )
-
-    events = load_table(spark, oracle_sf_dir, "events")
-    args = dict(
-        keys=["event_type"], num_col="value",
-        den_col="user_id", id_col="event_id", n_boot=40, salt="rb",
-    )
-    # denominators: user_id as an arbitrary positive per-row weight
-    a = aggregates.bootstrap_ratio_ci(events, **args).collect()
-    b = aggregates.bootstrap_ratio_ci(events, **args).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    for r in a:
-        assert r.ci_lo <= r.ratio <= r.ci_hi
-
-    h = _md5_hash60_sql("event_id::VARCHAR || ':rb:' || r::VARCHAR")
-    cdf = aggregates._POIS1_CDF
-    case = " ".join(
-        f"WHEN u < {t!r} THEN {float(k)}" for k, t in enumerate(cdf)
-    )
-    sql = f"""
-        WITH base AS (
-          SELECT event_type AS k, value::DOUBLE AS num,
-                 user_id::DOUBLE AS den, event_id
-          FROM events
-          WHERE value IS NOT NULL AND user_id IS NOT NULL
-            AND event_id IS NOT NULL
-        ),
-        u AS (
-          SELECT k, num, den, r, ({h}) / 1152921504606846976.0 AS u
-          FROM base CROSS JOIN generate_series(0, 39) AS t(r)
-        ),
-        w AS (
-          SELECT k, num, den, r, (CASE {case} ELSE 7.0 END) AS wt FROM u
-        ),
-        reps AS (
-          SELECT k, r, SUM(wt * num) AS sn, SUM(wt * den) AS sd
-          FROM w GROUP BY k, r
-        ),
-        ratios AS (
-          SELECT k, sn / sd AS m FROM reps WHERE sd <> 0
-        ),
-        arrs AS (
-          SELECT k, list(m ORDER BY m) AS ms FROM ratios GROUP BY k
-        ),
-        pt AS (
-          SELECT k, COUNT(*) AS n, SUM(num) / SUM(den) AS ratio
-          FROM base GROUP BY k
-        )
-        SELECT pt.k AS event_type, pt.n,
-               {sql_round('pt.ratio', 6)} AS ratio,
-               {sql_round('ms[GREATEST(1, CAST(ROUND(len(ms) * 0.025) AS INT))]', 6)} AS ci_lo,
-               {sql_round('ms[LEAST(len(ms), CAST(ROUND(len(ms) * 0.975) AS INT))]', 6)} AS ci_hi
-        FROM pt JOIN arrs ON pt.k = arrs.k
-    """
-    got = aggregates.bootstrap_ratio_ci(events, **args)
-    assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []
-
-    rows = [("g", 1.0, None, "a"), ("g", 1.0, 2.0, "b")]
-    df = spark.createDataFrame(rows, "k string, num double, den double, id string")
-    out = aggregates.bootstrap_ratio_ci(
-        df, ["k"], "num", "den", "id", n_boot=10
-    ).collect()[0]
-    assert out.n == 1 and abs(out.ratio - 0.5) < 1e-12
 
 
 def test_cuped_adjust_variance_reduction_and_parity(spark, oracle_sf_dir):
@@ -2445,112 +1506,6 @@ def test_anova_oneway_hand_math_and_parity(spark, oracle_sf_dir):
     assert not errs, errs[:5]
 
 
-def test_global_running_sum_and_abc_classes(spark, oracle_sf_dir):
-    """Skew-free cumulative machinery: (1) global_running_sum equals the
-    single-window formulation exactly and is partition-invariant; (2)
-    abc_classes reproduces DuckDB's window formulation value-for-value
-    on customer revenue, with the documented prior-share class rule;
-    (3) plan carries no SinglePartition exchange; (4) validation."""
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from tests.parity import compare, duckdb_connect
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    rs = aggregates.global_running_sum(
-        orders.select("o_orderkey", "o_totalprice"),
-        ["o_orderkey"],
-        "o_totalprice",
-    )
-    got = {r.o_orderkey: r.running_sum for r in rs.collect()}
-    rows = sorted(
-        (r.o_orderkey, r.o_totalprice)
-        for r in orders.select("o_orderkey", "o_totalprice").collect()
-    )
-    acc = 0.0
-    for k, v in rows:
-        acc += v
-        assert abs(got[k] - acc) < 1e-6 * max(1.0, abs(acc))
-    again = {
-        r.o_orderkey: r.running_sum
-        for r in aggregates.global_running_sum(
-            orders.select("o_orderkey", "o_totalprice").repartition(13),
-            ["o_orderkey"],
-            "o_totalprice",
-        ).collect()
-    }
-    # partition-invariant up to float fold order: range boundaries
-    # re-sample under a new layout, so double sums differ in the last
-    # ulp (integers/decimals are exact); see the operator docstring
-    for k in got:
-        assert abs(got[k] - again[k]) <= 1e-9 * max(1.0, abs(got[k]))
-    plan = rs._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-
-    abc = aggregates.abc_classes(
-        orders, "o_custkey", "o_totalprice", a_share=0.5, b_share=0.8
-    )
-    out = abc.select(
-        "o_custkey",
-        stable_round(F.col("total"), 2).alias("total"),
-        "rank",
-        stable_round(F.col("cum_share"), 6).alias("cum_share"),
-        "abc",
-    )
-    sql = f"""
-        WITH per AS (
-          SELECT o_custkey, SUM(o_totalprice) AS total
-          FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1
-        ),
-        w AS (
-          SELECT o_custkey, total,
-                 ROW_NUMBER() OVER (ORDER BY total DESC, o_custkey)
-                   AS rank,
-                 SUM(total) OVER (ORDER BY total DESC, o_custkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS cum,
-                 SUM(total) OVER () AS g
-          FROM per
-        )
-        SELECT o_custkey, {sql_round('total', 2)} AS total,
-               CAST(rank AS BIGINT) AS rank,
-               {sql_round('cum / g', 6)} AS cum_share,
-               CASE WHEN (cum - total) / g < 0.5 THEN 'A'
-                    WHEN (cum - total) / g < 0.8 THEN 'B'
-                    ELSE 'C' END AS abc
-        FROM w
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-    # class rule sanity: ranks within a class are contiguous, A first
-    seq = [r.abc for r in abc.orderBy("rank").collect()]
-    assert seq[0] == "A" and "".join(sorted(set(seq))) == "ABC"
-    assert seq == sorted(seq)  # A block, then B block, then C block
-
-    with pytest.raises(ValueError, match="a_share"):
-        aggregates.abc_classes(orders, "o_custkey", "o_totalprice",
-                               a_share=0.9, b_share=0.5)
-    with pytest.raises(ValueError, match="order_cols"):
-        aggregates.global_running_sum(orders, [], "o_totalprice")
-
-
-def test_abc_classes_guard_survives_column_pruning(spark):
-    """Regression: selecting ONLY the class column must still
-    raise on a non-positive grand total -- the guard lives in every
-    derived column, so Catalyst cannot prune it away."""
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    neg = spark.createDataFrame(
-        [("a", -5.0), ("b", -1.0)], "k string, v double"
-    )
-    with pytest.raises((Py4JJavaError, Exception), match="grand total"):
-        aggregates.abc_classes(neg, "k", "v").select("k", "abc").collect()
-
-
 def test_rfm_scores_semantics_and_parity(spark, oracle_sf_dir):
     """RFM: (1) hand pins on a controlled frame -- recency scores read
     "higher = more recent", segment rules fire as documented, NULL
@@ -2707,344 +1662,6 @@ def test_weighted_quantile_hand_math_and_parity(spark, oracle_sf_dir):
         FROM c WHERE cw >= 0.9 * tw GROUP BY k
     """
     assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_logrank_test_textbook_and_parity(spark, oracle_sf_dir):
-    """Log-rank: (1) identical arms give O-E ~ 0; a planted hazard
-    difference gives |z| large with the sign of the worse arm; (2) a
-    small worked example matches a pure-Python hypergeometric
-    computation exactly; (3) full DuckDB replay on synthetic-durations
-    from orders."""
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from tests.parity import compare, duckdb_connect
-
-    rows = [
-        ("a", 1.0, 1), ("a", 2.0, 1), ("a", 3.0, 0),
-        ("b", 1.0, 0), ("b", 2.0, 1), ("b", 4.0, 1),
-    ]
-    df = spark.createDataFrame(rows, "arm string, dur double, e int")
-    r = aggregates.logrank_test(df, "arm", "dur", "e", "a", "b").collect()[0]
-    # pure-Python replica of the same formula
-    subs = [(g, d, e) for g, d, e in rows]
-    times = sorted({d for _, d, e in subs if e == 1})
-    ome = var = 0.0
-    for t in times:
-        at = [(g, d, e) for g, d, e in subs if d >= t]
-        n = len(at)
-        na = sum(1 for g, _, _ in at if g == "a")
-        d_t = sum(1 for _, d, e in at if d == t and e == 1)
-        da = sum(1 for g, d, e in at if g == "a" and d == t and e == 1)
-        ome += da - d_t * na / n
-        if n > 1:
-            var += d_t * (na / n) * (1 - na / n) * (n - d_t) / (n - 1)
-    assert r.o_minus_e == pytest.approx(ome, abs=1e-12)
-    assert r.variance == pytest.approx(var, abs=1e-12)
-    assert r.n_a == 3 and r.n_b == 3 and r.events_a == 2 and r.events_b == 2
-
-    # identical arms -> z ~ 0; planted hazard gap -> |z| large, a worse
-    import random
-
-    rng = random.Random(7)
-    same = [("a" if i % 2 == 0 else "b", float(rng.randint(1, 50)), 1)
-            for i in range(400)]
-    z0 = aggregates.logrank_test(
-        spark.createDataFrame(same, "arm string, dur double, e int"),
-        "arm", "dur", "e", "a", "b",
-    ).collect()[0].z_stat
-    assert abs(z0) < 2.5
-    gap = [("a", float(rng.randint(1, 20)), 1) for i in range(200)] + [
-        ("b", float(rng.randint(30, 80)), 1) for i in range(200)
-    ]
-    zg = aggregates.logrank_test(
-        spark.createDataFrame(gap, "arm string, dur double, e int"),
-        "arm", "dur", "e", "a", "b",
-    ).collect()[0].z_stat
-    assert zg > 8  # arm a dies first: observed >> expected
-
-    # an ALL-censored slice still reports its subject counts (an inner
-    # counts-stats join would silently drop it) -- with
-    # zero o_minus_e/variance (empty sums) and NULL z_stat, keyed and
-    # keyless both
-    cens = spark.createDataFrame(
-        [("a", 5.0, 0), ("a", 7.0, 0), ("b", 6.0, 0)],
-        "arm string, dur double, e int",
-    )
-    rc = aggregates.logrank_test(cens, "arm", "dur", "e", "a", "b").collect()
-    assert len(rc) == 1
-    assert (rc[0].n_a, rc[0].n_b, rc[0].events_a, rc[0].events_b) == (
-        2, 1, 0, 0,
-    )
-    assert rc[0].o_minus_e == 0.0 and rc[0].variance == 0.0
-    assert rc[0].z_stat is None
-    mixed = cens.withColumn("k", F.lit("dead")).unionByName(
-        df.withColumn("k", F.lit("live"))
-    )
-    by_k = {
-        r.k: r
-        for r in aggregates.logrank_test(
-            mixed, "arm", "dur", "e", "a", "b", keys=["k"]
-        ).collect()
-    }
-    assert set(by_k) == {"dead", "live"}
-    assert by_k["dead"].z_stat is None and by_k["dead"].variance == 0.0
-    assert by_k["live"].variance == pytest.approx(var, abs=1e-12)
-
-    orders = load_table(spark, oracle_sf_dir, "orders").select(
-        F.when(F.col("o_orderkey") % 2 == 0, "a").otherwise("b").alias("arm"),
-        (F.col("o_orderkey") % 37).cast("double").alias("dur"),
-        (F.col("o_custkey") % 3 != 0).cast("int").alias("e"),
-        "o_orderstatus",
-    )
-    got = aggregates.logrank_test(
-        orders, "arm", "dur", "e", "a", "b", keys=["o_orderstatus"]
-    ).select(
-        "o_orderstatus", "n_a", "n_b", "events_a", "events_b",
-        stable_round(F.col("o_minus_e"), 6).alias("o_minus_e"),
-        stable_round(F.col("variance"), 6).alias("variance"),
-        stable_round(F.col("z_stat"), 6).alias("z_stat"),
-    )
-    sql = f"""
-        WITH base AS (
-          SELECT o_orderstatus AS k,
-                 CASE WHEN o_orderkey % 2 = 0 THEN 'a' ELSE 'b' END AS arm,
-                 (o_orderkey % 37)::DOUBLE AS dur,
-                 CASE WHEN o_custkey % 3 <> 0 THEN 1 ELSE 0 END AS e
-          FROM orders
-        ),
-        per_t AS (
-          SELECT k, dur AS t,
-                 SUM(CASE WHEN arm = 'a' THEN e ELSE 0 END)::DOUBLE AS d_a,
-                 SUM(e)::DOUBLE AS d,
-                 SUM(CASE WHEN arm = 'a' THEN 1 ELSE 0 END)::DOUBLE AS m_a,
-                 COUNT(*)::DOUBLE AS m
-          FROM base GROUP BY 1, 2
-        ),
-        risked AS (
-          SELECT *, SUM(m_a) OVER (PARTITION BY k ORDER BY t DESC
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS n_a_t,
-                    SUM(m) OVER (PARTITION BY k ORDER BY t DESC
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS n_t
-          FROM per_t
-        ),
-        terms AS (
-          SELECT k, d_a - d * n_a_t / n_t AS ome,
-                 CASE WHEN n_t > 1 THEN
-                   d * (n_a_t / n_t) * (1 - n_a_t / n_t)
-                     * (n_t - d) / (n_t - 1)
-                 ELSE 0.0 END AS v
-          FROM risked WHERE d > 0
-        ),
-        stats AS (
-          SELECT k, SUM(ome) AS ome, SUM(v) AS v FROM terms GROUP BY k
-        ),
-        counts AS (
-          SELECT k,
-                 SUM(CASE WHEN arm = 'a' THEN 1 ELSE 0 END) AS n_a,
-                 SUM(CASE WHEN arm = 'b' THEN 1 ELSE 0 END) AS n_b,
-                 SUM(CASE WHEN arm = 'a' THEN e ELSE 0 END) AS events_a,
-                 SUM(CASE WHEN arm = 'b' THEN e ELSE 0 END) AS events_b
-          FROM base GROUP BY k
-        )
-        SELECT c.k AS o_orderstatus,
-               CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-               CAST(events_a AS BIGINT) AS events_a,
-               CAST(events_b AS BIGINT) AS events_b,
-               {sql_round('COALESCE(s.ome, 0.0)', 6)} AS o_minus_e,
-               {sql_round('COALESCE(s.v, 0.0)', 6)} AS variance,
-               CASE WHEN COALESCE(s.v, 0.0) > 0
-                    THEN {sql_round('s.ome / sqrt(s.v)', 6)}
-               END AS z_stat
-        FROM counts c LEFT JOIN stats s USING (k)
-    """
-    assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_backtest_forecast_linear_exact_and_replica(spark):
-    """Rolling-origin Holt backtest: (1) a perfectly linear series
-    forecasts exactly at every fold (Holt tracks ramps exactly), so all
-    errors are ~0 and n_scored = folds * horizon; (2) on a noisy series
-    the metrics equal an independent pure-Python rolling-origin replica
-    (same Holt recursion, same origins); (3) validation."""
-    import math
-
-    import pytest
-
-    lin = [("k", i, 10.0 + 3.0 * i) for i in range(1, 21)]
-    df = spark.createDataFrame(lin, "k string, t int, v double")
-    r = aggregates.backtest_forecast(
-        df, ["k"], "t", "v", horizon=3, folds=2, alpha=0.5, beta=0.3
-    ).collect()[0]
-    assert r.n_scored == 6
-    assert r.mae == pytest.approx(0.0, abs=1e-9)
-    assert r.rmse == pytest.approx(0.0, abs=1e-9)
-    assert r.mape == pytest.approx(0.0, abs=1e-12)
-
-    vals = [
-        float(v)
-        for v in [5, 7, 6, 9, 12, 11, 15, 14, 18, 21, 19, 24, 23, 27, 30]
-    ]
-    noisy = spark.createDataFrame(
-        [("k", i + 1, v) for i, v in enumerate(vals)],
-        "k string, t int, v double",
-    )
-    got = aggregates.backtest_forecast(
-        noisy, ["k"], "t", "v", horizon=2, folds=3, alpha=0.4, beta=0.2
-    ).collect()[0]
-
-    def holt_fit(series, alpha, beta):
-        l, b = series[0], series[1] - series[0]
-        for y in series[1:]:
-            l_new = alpha * y + (1 - alpha) * (l + b)
-            b = beta * (l_new - l) + (1 - beta) * b
-            l = l_new
-        return l, b
-
-    errs = []
-    n = len(vals)
-    for f in range(3):
-        cut = n - 2 - f
-        l, b = holt_fit(vals[:cut], 0.4, 0.2)
-        for h in (1, 2):
-            errs.append((l + h * b) - vals[cut + h - 1])
-    mae = sum(abs(e) for e in errs) / len(errs)
-    rmse = math.sqrt(sum(e * e for e in errs) / len(errs))
-    assert got.n_scored == 6
-    assert got.mae == pytest.approx(mae, rel=1e-9)
-    assert got.rmse == pytest.approx(rmse, rel=1e-9)
-
-    # mape excludes DEGENERATE folds per fold (not a blanket NULL for
-    # the key when ANY fold has a zero actual):
-    # horizon=1, folds=2 -> fold 0 scores vals2[-1]=0 (degenerate),
-    # fold 1 scores vals2[-2]=27 (fine) -- mape comes from fold 1 only
-    vals2 = vals[:-2] + [27.0, 0.0]
-    zero_tail = spark.createDataFrame(
-        [("k", i + 1, v) for i, v in enumerate(vals2)],
-        "k string, t int, v double",
-    )
-    gz = aggregates.backtest_forecast(
-        zero_tail, ["k"], "t", "v", horizon=1, folds=2, alpha=0.4, beta=0.2
-    ).collect()[0]
-    l1, b1 = holt_fit(vals2[:-2], 0.4, 0.2)
-    assert gz.mape == pytest.approx(abs((l1 + b1) - 27.0) / 27.0, rel=1e-9)
-    assert gz.n_scored == 2  # mae/rmse still cover both folds
-    # every fold degenerate -> NULL mape
-    allz = spark.createDataFrame(
-        [("k", i + 1, v) for i, v in enumerate([5.0, 6.0, 7.0, 0.0, 0.0])],
-        "k string, t int, v double",
-    )
-    ga = aggregates.backtest_forecast(
-        allz, ["k"], "t", "v", horizon=1, folds=2, alpha=0.4, beta=0.2
-    ).collect()[0]
-    assert ga.mape is None and ga.mae is not None
-
-    with pytest.raises(ValueError, match="horizon"):
-        aggregates.backtest_forecast(df, ["k"], "t", "v", horizon=0)
-    short = spark.createDataFrame(
-        [("k", 1, 1.0), ("k", 2, 2.0)], "k string, t int, v double"
-    )
-    with pytest.raises(ValueError, match="no fold"):
-        aggregates.backtest_forecast(
-            short, ["k"], "t", "v", horizon=3, folds=2
-        )
-
-
-def test_benford_report_semantics_and_parity(spark, oracle_sf_dir):
-    """Benford audit: (1) a perfectly Benford-distributed sample scores
-    chi2 ~ 0 while a uniform-first-digit sample scores high; (2) absent
-    digits emit zero-count rows (9 cells always); exclusions
-    (non-positive/NULL); (3) full DuckDB replay on order prices per
-    status."""
-    import math
-
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from tests.parity import compare, duckdb_connect
-
-    benford = []
-    for d in range(1, 10):
-        benford += [float(d)] * round(1000 * math.log10(1 + 1 / d))
-    uniform = [float(d) for d in range(1, 10)] * 111
-    df = spark.createDataFrame(
-        [("b", v) for v in benford] + [("u", v) for v in uniform]
-        + [("b", -5.0), ("b", 0.0), ("b", None)],
-        "k string, v double",
-    )
-    rep = aggregates.benford_report(df, "v", keys=["k"])
-    chi = {r.k: r.chi2 for r in rep.select("k", "chi2").distinct().collect()}
-    assert chi["b"] < 1.0  # rounding residue only
-    assert chi["u"] > 100.0
-    rows_b = {r.digit: r.n_digit for r in rep.filter(F.col("k") == "b").collect()}
-    assert set(rows_b) == set(range(1, 10))
-    assert sum(rows_b.values()) == len(benford)  # exclusions worked
-
-    # a slice missing digits still carries 9 cells with zero counts
-    sparse = spark.createDataFrame([("s", 1.0), ("s", 19.0)], "k string, v double")
-    srows = {
-        r.digit: r.n_digit
-        for r in aggregates.benford_report(sparse, "v", keys=["k"]).collect()
-    }
-    assert srows[1] == 2 and all(srows[d] == 0 for d in range(2, 10))
-
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    got = aggregates.benford_report(
-        orders, "o_totalprice", keys=["o_orderstatus"]
-    ).select(
-        "o_orderstatus",
-        "digit",
-        "n_digit",
-        stable_round(F.col("observed_share"), 6).alias("observed_share"),
-        stable_round(F.col("expected_share"), 6).alias("expected_share"),
-        stable_round(F.col("chi2"), 4).alias("chi2"),
-    )
-    sql = f"""
-        WITH base AS (
-          SELECT o_orderstatus AS k,
-                 FLOOR(o_totalprice
-                       / POWER(10, FLOOR(LOG10(o_totalprice))))::INT
-                   AS digit
-          FROM orders
-          WHERE o_totalprice IS NOT NULL AND o_totalprice > 0
-        ),
-        counted AS (
-          SELECT k, digit, COUNT(*)::BIGINT AS n_digit
-          FROM base GROUP BY 1, 2
-        ),
-        digits AS (
-          SELECT d AS digit, LOG10(1 + 1.0 / d) AS expected_share
-          FROM generate_series(1, 9) g(d)
-        ),
-        grid AS (
-          SELECT k, digit, expected_share
-          FROM (SELECT DISTINCT k FROM counted), digits
-        ),
-        full_g AS (
-          SELECT g.k, g.digit, g.expected_share,
-                 COALESCE(c.n_digit, 0) AS n_digit
-          FROM grid g LEFT JOIN counted c USING (k, digit)
-        ),
-        tot AS (SELECT k, SUM(n_digit) AS n FROM full_g GROUP BY k)
-        SELECT f.k AS o_orderstatus, f.digit, f.n_digit,
-               {sql_round('f.n_digit * 1.0 / t.n', 6)} AS observed_share,
-               {sql_round('f.expected_share', 6)} AS expected_share,
-               {sql_round('''SUM(POWER(f.n_digit - t.n * f.expected_share, 2)
-                    / (t.n * f.expected_share))
-                    OVER (PARTITION BY f.k)''', 4)} AS chi2
-        FROM full_g f JOIN tot t USING (k)
-    """
-    assert compare(got, duckdb_connect(oracle_sf_dir), sql) == []
 
 
 def test_freshness_report_sla_and_parity(spark, oracle_sf_dir):

@@ -948,13 +948,12 @@ def test_mips_topk_and_augment_reduction(spark, sf_dir):
 
 
 def test_lsh_topk_size_gate_paths_identical(spark, oracle_sf_dir, monkeypatch):
-    """r15 size gate (VERDICT r14 #8): lsh_topk picks the single-pass
-    candidate shape (vectors ride the bucket join, SortAggregate dedup,
-    ONE corpus scan) under the byte budget and the narrow two-pass
-    shape (bare-id HashAggregate dedup + re-attach joins) above it --
-    and the two paths are RESULT-IDENTICAL, because the dedup keys are
-    the id pair and both vectors are functionally determined by the
-    ids. Also pins that the gate reads plan statistics only (the
+    """Size gate: lsh_topk picks the single-pass candidate shape
+    (vectors ride the bucket join, SortAggregate dedup, ONE corpus scan)
+    under the byte budget and the narrow two-pass shape (bare-id
+    HashAggregate dedup + re-attach joins) above it -- and the two paths
+    are RESULT-IDENTICAL, because the dedup keys are the id pair and
+    both vectors are functionally determined by the ids. Also pins that the gate reads plan statistics only (the
     returned frame stays lazy -- building it runs no job)."""
     from pyspark.sql import functions as F
 
@@ -967,9 +966,8 @@ def test_lsh_topk_size_gate_paths_identical(spark, oracle_sf_dir, monkeypatch):
     tracker = spark.sparkContext.statusTracker()
     jobs_before = set(tracker.getJobIdsForGroup(None) or [])
 
-    monkeypatch.delenv("SPARK_GRAFT_LSH_SINGLE_PASS_MAX_BYTES", raising=False)
     single = similarity.lsh_topk(q, emb, k=5)
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SINGLE_PASS_MAX_BYTES", "1")
+    monkeypatch.setattr(similarity, "_LSH_SINGLE_PASS_MAX_BYTES", 1)
     double = similarity.lsh_topk(q, emb, k=5)
 
     # gate decision is statistics-only: no Spark job ran during build

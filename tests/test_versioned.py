@@ -2291,10 +2291,6 @@ INFERRING_READERS = {
 }
 # createDataFrame(<list>, ...) sites kept on the parallelize path
 RDD_LOCAL_FRAMES = {
-    "operators.aggregates.benford_report": "deletion deferred "
-    "(tools/op_index.py:DEFERRED_UNREACHED)",
-    "operators.aggregates.global_running_sum": "deletion deferred "
-    "(tools/op_index.py:DEFERRED_UNREACHED)",
     "plans.scale_queries.temperature_mixture": "registered query whose "
     "whole plan is the driver-built frame: a LocalTableScan would fail "
     "plans.lint's sourceless-plan check",

@@ -152,43 +152,6 @@ KEPT_UNREACHED: dict[str, str] = {
     "ivfpq_topk_from_index tests",
 }
 
-# Unreached operators whose deletion, together with the tests that check
-# only them, is the next step of ROADMAP open item 2 (module -> names;
-# each module's tests live in the named test file).
-DEFERRED_UNREACHED: dict[tuple[str, str], tuple[str, ...]] = {
-    ("aggregates", "tests/test_mining.py"): (
-        "abc_classes", "autocorr", "backtest_forecast", "benford_report",
-        "binary_auc", "bootstrap_ratio_ci", "chi_square", "corr_matrix",
-        "decayed_agg", "ewma", "gini_coefficient", "global_running_sum",
-        "logrank_test", "period_over_period", "rate_anomalies",
-        "robust_outliers", "running_distinct", "seasonal_decompose",
-        "survival_curve",
-    ),
-    ("corpus", "tests/test_corpus.py"): (
-        "bigram_prob_table", "bigram_surprisal", "compression_ratio",
-        "contamination_fraction", "deterministic_sample",
-        "duplication_density", "excise_duplicate_spans",
-        "gopher_quality_flags", "keywords_tfidf", "kfold_assign",
-        "length_histogram", "ngram_overlap", "ngram_repetition",
-        "split_leakage_audit", "surprisal_buckets", "weighted_sample",
-        "winnow_fingerprints", "winnow_matches",
-    ),
-    ("fuzzy", "tests/test_fuzzy.py"): (
-        "fuzzy_join", "fuzzy_self_pairs", "resolve_entities",
-    ),
-    ("baskets", "tests/test_baskets.py"): (
-        "cooccurrence_similarity", "frequent_pairs",
-    ),
-}
-KEPT_UNREACHED.update(
-    {
-        f"operators.{mod}.{name}": f"deletion deferred with its tests "
-        f"in {tests} (ROADMAP open item 2)"
-        for (mod, tests), names in DEFERRED_UNREACHED.items()
-        for name in names
-    }
-)
-
 
 def keywords(name: str, doc: str | None) -> frozenset:
     toks = {t for t in name.split("_") if len(t) > 2}
