@@ -430,6 +430,71 @@ def dd_quantile(
     )
 
 
+def decayed_agg(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    value_col: str,
+    half_life_s: float,
+    ref_ts=None,
+    digits: int = 4,
+) -> DataFrame:
+    """Exponentially time-decayed aggregates per key: each row weighs
+    2^(-age / half_life) where age = ref - ts in seconds (microsecond
+    precision), so a row exactly one half-life old counts half as much
+    as a fresh one -- the freshness-weighted score behind trending
+    metrics and recency-weighted sampling (pair decayed_weight with
+    corpus.weighted_take_k for "sample recent data harder" mixtures).
+
+    ``ref_ts`` anchors the decay: a Column/literal timestamp, or None
+    to use max(ts) over ``df`` (deterministic -- never wall-clock; rows
+    newer than an explicit ref weigh > 1, which is the correct algebra
+    for a stale anchor). Computed as one hash agg plus, for the default
+    ref, a one-row broadcast crossJoin -- the established scalar
+    pattern; no second scan of the data.
+
+    NULL ts rows carry NULL weight and drop out of every measure; NULL
+    values drop out of decayed_sum/avg but still count toward
+    decayed_weight (they exist, they're just unvalued).
+
+    Returns keys + (decayed_sum, decayed_weight, decayed_avg), all
+    stable-rounded for cross-engine parity."""
+    if half_life_s <= 0:
+        raise ValueError("half_life_s must be > 0")
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        stable_round,
+    )
+
+    if ref_ts is None:
+        ref = df.agg(F.max(ts_col).alias("_ref"))
+        base = df.crossJoin(F.broadcast(ref))
+        ref_col = F.col("_ref")
+    else:
+        base = df
+        ref_col = ref_ts if isinstance(ref_ts, Column) else F.lit(ref_ts)
+    age_s = (
+        F.unix_micros(ref_col) - F.unix_micros(F.col(ts_col))
+    ) / F.lit(1e6)
+    w = F.pow(F.lit(2.0), -age_s / F.lit(float(half_life_s)))
+    return (
+        base.withColumn("_w", w)
+        .groupBy(*keys)
+        .agg(
+            stable_round(F.sum(F.col("_w") * F.col(value_col)), digits).alias(
+                "decayed_sum"
+            ),
+            stable_round(F.sum("_w"), digits).alias("decayed_weight"),
+            stable_round(
+                F.sum(F.col("_w") * F.col(value_col))
+                / F.sum(
+                    F.when(F.col(value_col).isNotNull(), F.col("_w"))
+                ),
+                digits,
+            ).alias("decayed_avg"),
+        )
+    )
+
+
 def psi_bins(
     ref: DataFrame,
     cur: DataFrame,
@@ -621,6 +686,57 @@ def profile_table(
 # likewise) survive deletes exactly. Min/max are NOT maintainable under
 # deletes without per-group rescans -- deliberately out of scope,
 # documented here rather than approximated.
+
+
+def corr_matrix(
+    df: DataFrame,
+    cols: Sequence[str],
+    keys: Sequence[str] | None = None,
+    digits: int = 4,
+) -> DataFrame:
+    """Pairwise Pearson correlation + sample covariance over ``cols``,
+    optionally per group, in ONE aggregation pass: every pair's corr /
+    covar_samp / pairwise row count are sibling aggregate expressions in
+    a single hash agg (no per-pair scans, no driver loop over columns),
+    then the wide row unpivots to long (col_a, col_b, n_pairs, cov,
+    corr) with col_a <= col_b via an inline of literal-keyed structs --
+    pure projection, no shuffle.
+
+    Pairwise NULL deletion (both engines' corr/covar semantics): a row
+    contributes to a pair iff both columns are non-NULL. Constant
+    columns yield NULL corr (zero variance), matching SQL. The column
+    list is the unpivot width -- O(|cols|^2) expressions, fine for the
+    tens-of-columns feature-matrix case this serves; it is NOT a
+    key-cardinality blowup (still one pass over the data)."""
+    if len(cols) < 2:
+        raise ValueError("need at least 2 columns")
+    if len(set(cols)) != len(cols):
+        raise ValueError("duplicate columns")
+    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
+        stable_round,
+    )
+
+    keys = list(keys or [])
+    pairs = [
+        (a, b) for i, a in enumerate(cols) for b in list(cols)[i:]
+    ]
+    aggs = []
+    for idx, (a, b) in enumerate(pairs):
+        both = F.col(a).isNotNull() & F.col(b).isNotNull()
+        aggs.append(
+            F.struct(
+                F.lit(a).alias("col_a"),
+                F.lit(b).alias("col_b"),
+                F.sum(both.cast("long")).alias("n_pairs"),
+                stable_round(F.covar_samp(a, b), digits).alias("cov"),
+                stable_round(F.corr(a, b), digits).alias("corr"),
+            ).alias(f"_p_{idx}")
+        )
+    wide = df.groupBy(*keys).agg(*aggs)
+    pair_cols = [c for c in wide.columns if c.startswith("_p_")]
+    return wide.select(
+        *keys, F.inline(F.array(*[F.col(c) for c in pair_cols]))
+    )
 
 
 def agg_state_init(

@@ -130,6 +130,12 @@ KEPT_UNREACHED: dict[str, str] = {
     "operators.aggregates.kmv_merge": "merge step of the maintained "
     "sketch stream sink (streaming/pipeline.py)",
     "operators.aggregates.global_sum": "paper operator (COVERAGE row A8)",
+    "operators.aggregates.decayed_agg": "time-decayed aggregate pinned by "
+    "three hand-math and DuckDB parity tests; its deletion is the next "
+    "step of ROADMAP item 2",
+    "operators.aggregates.corr_matrix": "one-pass correlation matrix "
+    "pinned by two hand-math and DuckDB parity tests; its deletion is "
+    "the next step of ROADMAP item 2",
     "operators.neardup.jaccard_pairs": "exact reference for the MinHash "
     "and SimHash near-dup recall tests",
     "operators.graph.triangles": "triangle list behind triangle_counts, "
