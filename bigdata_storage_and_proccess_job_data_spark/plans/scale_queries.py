@@ -2008,78 +2008,13 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Similarity search: PQ/ADC top-k with md5-derived codebooks (exact oracle)
+# PQ codebooks, md5-derived (similarity.md5_codebooks): k-means-fit
+# codebooks are not SQL-reproducible, but md5-derived ones are, so the
+# IVF-PQ oracle below rebuilds the identical centroids from md5.
 # ---------------------------------------------------------------------------
-# The PQ counterpart of knn_lsh's md5 hyperplanes: k-means-fit
-# codebooks are not SQL-reproducible, but the ENCODE + ADC machinery is,
-# once the codebooks are md5-derived (similarity.md5_codebooks). The
-# oracle rebuilds the identical centroids from md5, re-runs nearest-code
-# assignment with encode_pq's exact formula (-2*dot + ||c||^2, ties to
-# the lowest code), re-sums the ADC lookups and re-ranks -- so the whole
-# PQ search path (normalize -> quantize -> LUT sum -> round -> rank) is
-# value-hashed cross-engine. Trained-PQ/IVF-PQ quality stays pinned by
-# tests/test_similarity.py recall floors (k-means is the one
-# SQL-inexpressible step, same status as knn_ivf).
 _PQ_CENT_COMPONENT = _md5_hash60_sql(
     "'pq:42:' || j::VARCHAR || ':' || c::VARCHAR || ':' || t::VARCHAR"
 )
-_PQ_TOPK_SQL = f"""
-        WITH e AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        ),
-        n AS (
-          SELECT vec_id,
-                 list_transform(
-                   v, x -> x / sqrt(list_dot_product(v, v))
-                 ) AS nv
-          FROM e WHERE sqrt(list_dot_product(v, v)) > 0
-        ),
-        cent AS (
-          SELECT j, c, t,
-                 (({_PQ_CENT_COMPONENT})::DOUBLE
-                   / 576460752303423488.0 - 1.0) * 0.35 AS val
-          FROM range(8) js(j), range(16) cs(c), range(8) ts(t)
-        ),
-        enc AS (
-          SELECT n.vec_id, ct.j, ct.c,
-                 -2.0 * SUM(n.nv[ct.j * 8 + ct.t + 1] * ct.val)
-                   + SUM(ct.val * ct.val) AS d2
-          FROM n CROSS JOIN cent ct
-          GROUP BY n.vec_id, ct.j, ct.c
-        ),
-        codes AS (
-          SELECT vec_id, j, c FROM (
-            SELECT vec_id, j, c,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY vec_id, j ORDER BY d2 ASC, c ASC
-                   ) AS rn
-            FROM enc
-          ) WHERE rn = 1
-        ),
-        adc AS (
-          SELECT q.vec_id AS query_id, cd.vec_id AS neighbor_id,
-                 SUM(q.nv[cd.j * 8 + ct.t + 1] * ct.val) AS sim_raw
-          FROM (SELECT vec_id, nv FROM n WHERE vec_id < 20) q
-          CROSS JOIN codes cd
-          JOIN cent ct ON ct.j = cd.j AND ct.c = cd.c
-          WHERE q.vec_id <> cd.vec_id
-          GROUP BY 1, 2
-        ),
-        scored AS (
-          SELECT query_id, neighbor_id,
-                 {sql_round("sim_raw", 4)} AS sim
-          FROM adc
-        )
-        SELECT query_id, neighbor_id, rank, sim
-        FROM (
-          SELECT query_id, neighbor_id, sim,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY query_id
-                   ORDER BY sim DESC, neighbor_id ASC
-                 ) AS rank
-          FROM scored
-        ) WHERE rank <= 5
-    """
 
 
 # ---------------------------------------------------------------------------

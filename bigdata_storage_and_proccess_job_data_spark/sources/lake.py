@@ -214,17 +214,16 @@ def archive_stream(
     processing-time trigger + partitionBy; checkpointing replaces the
     manual consumer-group offset management. ``processing_interval=None``
     runs one availableNow drain instead (backfill / tests)."""
+    from bigdata_storage_and_proccess_job_data_spark.streaming import pipeline
+
     w = (
         stream_df.writeStream.format(fmt)
         .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
         .partitionBy(*partition_by)
     )
-    if processing_interval is None:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=processing_interval)
-    return w.start()
+    return pipeline._start(
+        w, checkpoint_dir, processing_interval is None, processing_interval
+    )
 
 
 def write_clustered(

@@ -11,6 +11,7 @@ become deterministic partition overwrites keyed by the upsert id.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,6 +22,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 from bigdata_storage_and_proccess_job_data_spark.functions.eventtime import ensure_ltz
+from bigdata_storage_and_proccess_job_data_spark.sources.lake import parse_byte_conf
 
 
 def file_stream(
@@ -32,7 +34,16 @@ def file_stream(
 ) -> DataFrame:
     """File-based streaming source (test/backfill stand-in for Kafka;
     one file per micro-batch when max_files_per_trigger=1 -- that is how
-    the tests drive watermark semantics deterministically)."""
+    the tests drive watermark semantics deterministically).
+
+    ``max_files_per_trigger`` also sizes the stream's shuffle
+    partitions when a library sink starts it (``_start``): the cap times
+    the largest file already in ``path``, in advisory-sized
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) partitions,
+    at most ``spark.sql.shuffle.partitions``. Uncapped, or with
+    ``path`` still empty at start, the stream keeps the session count.
+    A restart from an existing checkpoint keeps the count recorded
+    there."""
     reader = spark.readStream.schema(schema).format(fmt)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -80,22 +91,108 @@ def kafka_stream(
     ).select("data.*")
 
 
+def _batch_bytes_bound(spark: SparkSession, leaf) -> int | None:
+    """Upper bound on the bytes one micro-batch reads from ``leaf``, a
+    leaf of an analyzed streaming plan: a file source's
+    ``maxBytesPerTrigger``, else its ``maxFilesPerTrigger`` times the
+    largest file already in its local directory. None for anything else:
+    Kafka, rate, an uncapped file source, an empty or non-local
+    directory, a static relation joined to the stream."""
+    if leaf.nodeName() != "StreamingRelation" or not leaf.sourceName().startswith(
+        "FileSource["
+    ):
+        return None
+    options = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        leaf.dataSource().options()
+    )
+    opts = {k.lower(): v for k, v in dict(options).items()}
+    if "maxbytespertrigger" in opts:
+        return parse_byte_conf(opts["maxbytespertrigger"])
+    path = opts.get("path", "")
+    if "maxfilespertrigger" not in opts or not os.path.isdir(path):
+        return None
+    sizes = []
+    for root, dirs, files in os.walk(path):
+        # the names the file source skips: hidden, _spark_metadata, ...
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        sizes += [
+            os.path.getsize(os.path.join(root, f))
+            for f in files
+            if not f.startswith((".", "_"))
+        ]
+    return int(opts["maxfilespertrigger"]) * max(sizes) if sizes else None
+
+
+def _stream_partitions(df: DataFrame) -> int:
+    """Shuffle partitions for a stream over ``df``: ceil(B /
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``) clamped to
+    [1, ``spark.sql.shuffle.partitions``], where B sums
+    ``_batch_bytes_bound`` over the leaves of the analyzed plan (where
+    non-file sources are resolved); the session count when any leaf has
+    no bound."""
+    spark = df.sparkSession
+    session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    total, stack = 0, [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        if children.size():
+            stack += [children.apply(i) for i in range(children.size())]
+            continue
+        bound = _batch_bytes_bound(spark, node)
+        if bound is None:
+            return session_n
+        total += bound
+    advisory = parse_byte_conf(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return max(1, min(session_n, -(-total // advisory)))
+
+
 def _start(
     writer: DataStreamWriter,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None,
     available_now: bool,
     processing_time: str | None = None,
+    sink_reads_tables: bool = False,
 ) -> StreamingQuery:
-    """Start a sink: checkpoint at ``checkpoint_dir``, then the
+    """Start a library stream: checkpoint at ``checkpoint_dir`` (None
+    leaves Spark's temporary one, as the memory sink wants), then the
     availableNow trigger (drain what is there, stop), else a
     ``processing_time`` trigger, else Spark's default micro-batch
-    cadence."""
-    writer = writer.option("checkpointLocation", checkpoint_dir)
+    cadence.
+
+    Partitions: the query starts with ``_stream_partitions`` shuffle
+    partitions, one per advisory-sized slice of its largest micro-batch
+    rather than one per core. That count sizes its state store, its
+    shuffles and the shuffles its foreachBatch callbacks run on the
+    batch; Spark plans a stream's stateful stage without AQE, so nothing
+    coalesces them later, and every state partition commits its own
+    delta and checksum files per batch. The count is set on the session
+    only around ``writer.start()`` (which returns after the query has
+    cloned the session) and then restored, so another thread planning
+    on the same session during the call sees it too. Spark records the
+    count in the offset log at batch 0: a restart from an existing
+    checkpoint keeps the recorded count, whatever the rule picks now,
+    and a directory whose files grow after the first start keeps the
+    count its first files gave. ``sink_reads_tables=True`` keeps the
+    session count: those sinks fold whole tables (state, MERGE target,
+    accepted corpus) through the batch's session, so the micro-batch
+    does not bound their shuffles."""
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     elif processing_time:
         writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    spark = writer._df.sparkSession
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    n = int(prev) if sink_reads_tables else _stream_partitions(writer._df)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def fan_out_foreach_batch(
@@ -113,6 +210,13 @@ def fan_out_foreach_batch(
     (S10) with: cache the micro-batch, write detail, compute each agg
     from the cache, write it, unpersist. Exactly one source read per
     batch regardless of sink count.
+
+    The callbacks' shuffles on the batch run at the stream's partition
+    count, which ``_start`` sizes to the largest micro-batch of a capped
+    file source (one partition per advisory size) instead of the core
+    count; a restart from an existing checkpoint keeps the count
+    recorded there. A callback that shuffles a whole table should read
+    it through its own session, not ``batch_df.sparkSession``.
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -145,9 +249,7 @@ def memory_sink(
         .queryName(query_name)
         .outputMode(output_mode)
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer, None, trigger_available_now)
 
 
 def stream_stream_interval_join(
@@ -290,7 +392,8 @@ def merge_stream(
             )
 
     return _start(
-        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now,
+        sink_reads_tables=True,
     )
 
 
@@ -419,7 +522,8 @@ def dedup_ingest_stream(
                 pass
 
     return _start(
-        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now,
+        sink_reads_tables=True,
     )
 
 
@@ -510,7 +614,8 @@ def maintain_view_stream(
         _apply_view_batch(batch_df, batch_id, table_dir, keys, measures)
 
     return _start(
-        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now,
+        sink_reads_tables=True,
     )
 
 
@@ -571,7 +676,8 @@ def maintain_sketch_stream(
         _apply_sketch_batch(batch_df, batch_id, table_dir, key, dims, k)
 
     return _start(
-        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now,
+        sink_reads_tables=True,
     )
 
 
@@ -631,7 +737,8 @@ def maintain_quantile_stream(
         _apply_dd_batch(batch_df, batch_id, table_dir, col, dims, gamma)
 
     return _start(
-        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now,
+        sink_reads_tables=True,
     )
 
 
@@ -686,5 +793,6 @@ def maintain_frequency_stream(
         )
 
     return _start(
-        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now
+        df.writeStream.foreachBatch(write_batch), checkpoint_dir, trigger_available_now,
+        sink_reads_tables=True,
     )

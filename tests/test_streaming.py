@@ -310,3 +310,142 @@ def test_observe_expectations_on_stream_progress(spark):
         assert violations == 0
     finally:
         q.stop()
+
+
+# --- shuffle partitions sized to the largest micro-batch (_start) --------
+
+
+@pytest.fixture()
+def four_shuffle_partitions(spark):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _posting_schema():
+    from pyspark.sql.types import StringType, StructField, StructType, TimestampType
+
+    return StructType(
+        [StructField("id", StringType()), StructField("ts", TimestampType())]
+    )
+
+
+def _write_postings(src, name, ids):
+    """One small parquet file of (id, ts) rows, all in the same minute."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(src, exist_ok=True)
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    table = pa.table(
+        {"id": list(ids), "ts": [ts] * len(ids)},
+        schema=pa.schema([("id", pa.string()), ("ts", pa.timestamp("us", tz="UTC"))]),
+    )
+    pq.write_table(table, os.path.join(src, f".{name}"))  # hidden until whole
+    os.rename(os.path.join(src, f".{name}"), os.path.join(src, name))
+
+
+def _state_partitions(query) -> list[int]:
+    return [
+        op["numShufflePartitions"]
+        for p in query.recentProgress
+        for op in p.get("stateOperators", [])
+    ]
+
+
+def test_stream_partitions_rule(spark, tmp_path, four_shuffle_partitions):
+    """Unit cases of the partition rule: ceil(B / advisory size) clamped
+    to [1, session count], where B bounds one micro-batch's bytes."""
+    schema = _posting_schema()
+    src = str(tmp_path / "small")
+    for i in range(3):
+        _write_postings(src, f"f{i}.parquet", [f"e{i}-{j}" for j in range(20)])
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    rule = pipeline._stream_partitions
+
+    # 40 files x ~1 KB is far below the 64 MB advisory size
+    assert rule(pipeline.file_stream(spark, src, schema, max_files_per_trigger=40)) == 1
+    # a byte cap far above the session count's worth of advisory slices
+    huge = spark.readStream.schema(schema).option("maxBytesPerTrigger", str(1 << 40))
+    assert rule(huge.parquet(src)) == 4
+    small = spark.readStream.schema(schema).option("maxBytesPerTrigger", "1000")
+    assert rule(small.parquet(src)) == 1
+    # no bound: uncapped file source, rate source, capped but empty dir
+    assert rule(pipeline.file_stream(spark, src, schema)) == 4
+    assert rule(spark.readStream.format("rate").load()) == 4
+    assert rule(pipeline.file_stream(spark, empty, schema, max_files_per_trigger=1)) == 4
+    # one unbounded leaf keeps the session count for the whole query
+    capped = pipeline.file_stream(spark, src, schema, max_files_per_trigger=1)
+    assert rule(capped.unionByName(pipeline.file_stream(spark, src, schema))) == 4
+
+
+def test_capped_stream_runs_one_state_partition(spark, tmp_path, four_shuffle_partitions):
+    """fan_out_foreach_batch over a capped file source starts with one
+    shuffle partition: one state partition, one detail file per
+    micro-batch, and the session's own count is left as it was."""
+    from bigdata_storage_and_proccess_job_data_spark.streaming import stateful
+
+    src, detail = str(tmp_path / "src"), str(tmp_path / "detail")
+    for i in range(3):
+        _write_postings(src, f"f{i}.parquet", [f"e{i}-{j}" for j in range(20)])
+    stream = stateful.dedup_within_watermark(
+        pipeline.file_stream(spark, src, _posting_schema(), max_files_per_trigger=1),
+        ["id"], "ts", "1 hour",
+    )
+    q = pipeline.fan_out_foreach_batch(
+        stream,
+        lambda df, _bid: df.write.mode("append").parquet(detail),
+        {}, {},
+        checkpoint_dir=str(tmp_path / "chk"),
+        trigger_available_now=True,
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    _await(q)
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 1
+    assert set(_state_partitions(q)) == {1}
+    live = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    files = [n for n in os.listdir(detail) if n.endswith(".parquet")]
+    assert len(live) == 3 and len(files) == 3
+    assert spark.read.parquet(detail).count() == 60
+
+
+def test_restart_keeps_recorded_partition_count(spark, tmp_path, four_shuffle_partitions):
+    """A checkpoint created at the session count keeps that count when
+    the stream restarts capped (where the rule alone would pick 1), and
+    the dedup state it carries still drops the re-sent events."""
+    from bigdata_storage_and_proccess_job_data_spark.streaming import stateful
+
+    src, detail = str(tmp_path / "src"), str(tmp_path / "detail")
+    chk = str(tmp_path / "chk")
+
+    def run(max_files):
+        stream = stateful.dedup_within_watermark(
+            pipeline.file_stream(
+                spark, src, _posting_schema(), max_files_per_trigger=max_files
+            ),
+            ["id"], "ts", "1 hour",
+        )
+        q = pipeline.fan_out_foreach_batch(
+            stream,
+            lambda df, _bid: df.write.mode("append").parquet(detail),
+            {}, {}, checkpoint_dir=chk, trigger_available_now=True,
+        )
+        _await(q)
+        return q
+
+    _write_postings(src, "f0.parquet", [f"a{j}" for j in range(20)])
+    first = run(None)  # uncapped: the session count
+    assert set(_state_partitions(first)) == {4}
+    # re-sends of every first-run event, plus 10 new ones
+    _write_postings(src, "f1.parquet", [f"a{j}" for j in range(20)] + [f"b{j}" for j in range(10)])
+    assert pipeline._stream_partitions(
+        pipeline.file_stream(spark, src, _posting_schema(), max_files_per_trigger=1)
+    ) == 1
+    second = run(1)
+    assert set(_state_partitions(second)) == {4}
+    ids = [r.id for r in spark.read.parquet(detail).collect()]
+    assert sorted(ids) == sorted([f"a{j}" for j in range(20)] + [f"b{j}" for j in range(10)])

@@ -2281,6 +2281,43 @@ def test_atomic_write_is_the_only_rename_in_sources():
     assert offenders == []
 
 
+def test_every_stream_starts_through_start():
+    """Every library stream gets its checkpoint, trigger and partition
+    count from streaming.pipeline._start, so no ``.start()`` of a
+    ``writeStream`` chain -- inline, or through a name bound to one --
+    may be called anywhere else in the package."""
+    import os
+
+    def write_stream(node) -> bool:
+        return any(
+            isinstance(n, ast.Attribute) and n.attr == "writeStream"
+            for n in ast.walk(node)
+        )
+
+    pkg = os.path.dirname(os.path.dirname(versioned.__file__))
+    writers = {
+        t.id
+        for root, _dirs, names in os.walk(pkg)
+        for name in names
+        if name.endswith(".py")
+        for node in ast.walk(ast.parse(open(os.path.join(root, name)).read()))
+        if isinstance(node, ast.Assign) and write_stream(node.value)
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+    offenders = _calls_outside(
+        "",
+        lambda f, _args: isinstance(f, ast.Attribute)
+        and f.attr == "start"
+        and (
+            write_stream(f.value)
+            or (isinstance(f.value, ast.Name) and f.value.id in writers)
+        ),
+        {"streaming.pipeline._start"},
+    )
+    assert offenders == []
+
+
 # readers that must infer: mergeSchema unions every footer, and the
 # corrupt-file-skipping reader goes through format(...).load
 INFERRING_READERS = {
