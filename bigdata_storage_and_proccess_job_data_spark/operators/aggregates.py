@@ -291,8 +291,8 @@ def cms_sketch(
     ONE partial+final hash aggregation (the explode ships depth tiny
     ints per input row, never the key).
 
-    Like hll_sketch, the artifact is storable and MERGEABLE: cell-wise
-    summation (cms_merge) of per-batch sketches equals the monolithic
+    Like hll_sketch, the artifact is storable and MERGEABLE: summing
+    per-batch sketches' ``cnt`` per (row, bucket) gives the monolithic
     sketch EXACTLY, so daily sketches answer "how often did key X
     appear this quarter" without rescanning -- with CMS's one-sided
     guarantee (estimate >= truth; overestimate bounded by
@@ -308,14 +308,6 @@ def cms_sketch(
         df.select(w.alias("_w"), rows)
         .groupBy(F.col("_c.row").alias("row"), F.col("_c.bucket").alias("bucket"))
         .agg(F.sum("_w").cast("long").alias("cnt"))
-    )
-
-
-def cms_merge(sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of unioned/appended cms_sketch outputs -- the
-    lossless incremental step (sums commute)."""
-    return sketches.groupBy("row", "bucket").agg(
-        F.sum("cnt").cast("long").alias("cnt")
     )
 
 
@@ -427,71 +419,6 @@ def dd_quantile(
         ranked.withColumn("_rn", F.row_number().over(first))
         .filter(F.col("_rn") == 1)
         .select(*keys, est.alias("quantile_estimate"))
-    )
-
-
-def decayed_agg(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    value_col: str,
-    half_life_s: float,
-    ref_ts=None,
-    digits: int = 4,
-) -> DataFrame:
-    """Exponentially time-decayed aggregates per key: each row weighs
-    2^(-age / half_life) where age = ref - ts in seconds (microsecond
-    precision), so a row exactly one half-life old counts half as much
-    as a fresh one -- the freshness-weighted score behind trending
-    metrics and recency-weighted sampling (pair decayed_weight with
-    corpus.weighted_take_k for "sample recent data harder" mixtures).
-
-    ``ref_ts`` anchors the decay: a Column/literal timestamp, or None
-    to use max(ts) over ``df`` (deterministic -- never wall-clock; rows
-    newer than an explicit ref weigh > 1, which is the correct algebra
-    for a stale anchor). Computed as one hash agg plus, for the default
-    ref, a one-row broadcast crossJoin -- the established scalar
-    pattern; no second scan of the data.
-
-    NULL ts rows carry NULL weight and drop out of every measure; NULL
-    values drop out of decayed_sum/avg but still count toward
-    decayed_weight (they exist, they're just unvalued).
-
-    Returns keys + (decayed_sum, decayed_weight, decayed_avg), all
-    stable-rounded for cross-engine parity."""
-    if half_life_s <= 0:
-        raise ValueError("half_life_s must be > 0")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    if ref_ts is None:
-        ref = df.agg(F.max(ts_col).alias("_ref"))
-        base = df.crossJoin(F.broadcast(ref))
-        ref_col = F.col("_ref")
-    else:
-        base = df
-        ref_col = ref_ts if isinstance(ref_ts, Column) else F.lit(ref_ts)
-    age_s = (
-        F.unix_micros(ref_col) - F.unix_micros(F.col(ts_col))
-    ) / F.lit(1e6)
-    w = F.pow(F.lit(2.0), -age_s / F.lit(float(half_life_s)))
-    return (
-        base.withColumn("_w", w)
-        .groupBy(*keys)
-        .agg(
-            stable_round(F.sum(F.col("_w") * F.col(value_col)), digits).alias(
-                "decayed_sum"
-            ),
-            stable_round(F.sum("_w"), digits).alias("decayed_weight"),
-            stable_round(
-                F.sum(F.col("_w") * F.col(value_col))
-                / F.sum(
-                    F.when(F.col(value_col).isNotNull(), F.col("_w"))
-                ),
-                digits,
-            ).alias("decayed_avg"),
-        )
     )
 
 
@@ -686,57 +613,6 @@ def profile_table(
 # likewise) survive deletes exactly. Min/max are NOT maintainable under
 # deletes without per-group rescans -- deliberately out of scope,
 # documented here rather than approximated.
-
-
-def corr_matrix(
-    df: DataFrame,
-    cols: Sequence[str],
-    keys: Sequence[str] | None = None,
-    digits: int = 4,
-) -> DataFrame:
-    """Pairwise Pearson correlation + sample covariance over ``cols``,
-    optionally per group, in ONE aggregation pass: every pair's corr /
-    covar_samp / pairwise row count are sibling aggregate expressions in
-    a single hash agg (no per-pair scans, no driver loop over columns),
-    then the wide row unpivots to long (col_a, col_b, n_pairs, cov,
-    corr) with col_a <= col_b via an inline of literal-keyed structs --
-    pure projection, no shuffle.
-
-    Pairwise NULL deletion (both engines' corr/covar semantics): a row
-    contributes to a pair iff both columns are non-NULL. Constant
-    columns yield NULL corr (zero variance), matching SQL. The column
-    list is the unpivot width -- O(|cols|^2) expressions, fine for the
-    tens-of-columns feature-matrix case this serves; it is NOT a
-    key-cardinality blowup (still one pass over the data)."""
-    if len(cols) < 2:
-        raise ValueError("need at least 2 columns")
-    if len(set(cols)) != len(cols):
-        raise ValueError("duplicate columns")
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        stable_round,
-    )
-
-    keys = list(keys or [])
-    pairs = [
-        (a, b) for i, a in enumerate(cols) for b in list(cols)[i:]
-    ]
-    aggs = []
-    for idx, (a, b) in enumerate(pairs):
-        both = F.col(a).isNotNull() & F.col(b).isNotNull()
-        aggs.append(
-            F.struct(
-                F.lit(a).alias("col_a"),
-                F.lit(b).alias("col_b"),
-                F.sum(both.cast("long")).alias("n_pairs"),
-                stable_round(F.covar_samp(a, b), digits).alias("cov"),
-                stable_round(F.corr(a, b), digits).alias("corr"),
-            ).alias(f"_p_{idx}")
-        )
-    wide = df.groupBy(*keys).agg(*aggs)
-    pair_cols = [c for c in wide.columns if c.startswith("_p_")]
-    return wide.select(
-        *keys, F.inline(F.array(*[F.col(c) for c in pair_cols]))
-    )
 
 
 def agg_state_init(
@@ -1026,44 +902,6 @@ def group_linear_fit(
     )
 
 
-def agg_state_merge(
-    a, b, keys: list[str], measures: list[str]
-):
-    """Merge two aggregate states (same keys/measures contract):
-    counts and non-null counts add, sums add with NULL preserved iff
-    both sides hold no values -- the MERGEABLE-summary property the
-    sketch trio (hll/cms/dd) uses, here for exact count/sum state.
-    agg_state_init(A union B) == merge(init(A), init(B)) (tested), so
-    partial states built per partition/day/stream-batch combine
-    without touching rows again. One union + one hash agg."""
-    if not keys or not measures:
-        raise ValueError("keys and measures must be non-empty")
-    track_var = any(f"ss_{m}" in a.columns for m in measures)
-    cols = [*keys, "cnt"]
-    for m in measures:
-        cols += [f"sum_{m}", f"nn_{m}"]
-        if track_var:
-            cols.append(f"ss_{m}")
-    u = a.select(*cols).unionByName(b.select(*cols))
-    aggs = [F.sum("cnt").alias("cnt")]
-    for m in measures:
-        nn = F.sum(F.col(f"nn_{m}")).alias(f"nn_{m}")
-        aggs.append(
-            F.when(
-                F.sum(F.col(f"nn_{m}")) > 0, F.sum(F.col(f"sum_{m}"))
-            ).alias(f"sum_{m}")
-        )
-        aggs.append(nn)
-        if track_var:
-            aggs.append(
-                F.when(
-                    F.sum(F.col(f"nn_{m}")) > 0,
-                    F.sum(F.col(f"ss_{m}")),
-                ).alias(f"ss_{m}")
-            )
-    return u.groupBy(*keys).agg(*aggs).filter(F.col("cnt") > 0)
-
-
 def calibration_bins(
     df,
     label_col: str,
@@ -1173,9 +1011,10 @@ def kmv_sketch(
     exact, but the dense_rank window sorts each group's full input in
     one task (the whole input when ``dims`` is None).
 
-    The artifact is mergeable EXACTLY (kmv_merge): per-day sketches
-    compose into any window's sketch bit-for-bit -- same incremental
-    contract as hll_sketch, plus set ops (kmv_set_ops)."""
+    The artifact is mergeable EXACTLY: the k smallest of the distinct
+    union of per-day sketch arrays is the sketch of all those days,
+    bit-for-bit by the same subset argument -- the incremental contract
+    of hll_sketch, plus set ops (kmv_set_ops)."""
     if k < 2:
         raise ValueError("k must be >= 2")
     from pyspark.sql import Window
@@ -1196,27 +1035,6 @@ def kmv_sketch(
     if dims:
         return cut.groupBy(*[F.col(d) for d in dims]).agg(sketch)
     return cut.agg(sketch)
-
-
-def kmv_merge(
-    sketches: DataFrame, dims: list[str] | None = None, k: int = 256
-) -> DataFrame:
-    """Union previously-built sketches (per group when ``dims`` given):
-    distinct-merge the arrays, keep the k smallest. Lossless by the
-    subset argument above -- merge(sketch(A), sketch(B)) equals
-    sketch(A UNION B) exactly, pinned in tests. Per-group work is
-    bounded by (#input sketches x k) longs: this is a metadata-scale
-    query over stored artifacts, never a rescan of raw data."""
-    merged = F.slice(
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("sketch")))
-        ),
-        1,
-        k,
-    ).alias("sketch")
-    if dims:
-        return sketches.groupBy(*[F.col(d) for d in dims]).agg(merged)
-    return sketches.agg(merged)
 
 
 def _kmv_estimate_expr(sketch: Column, k: int) -> Column:

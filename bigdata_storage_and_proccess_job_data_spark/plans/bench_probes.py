@@ -289,8 +289,9 @@ def kmv_zipf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     a high-cardinality value (~343k distinct uids in the hot group at
     sf0.1) whose full distinct hash set would all have funneled through
     ONE task's rank-window sort in the old build.
-    The skew-proof build (per-partition partials + exact kmv_merge
-    fold) spreads that state across every reducer; this probe is the
+    The skew-proof build (kmv_sketch's WindowGroupLimit pre-cut to each
+    scan partition's k smallest distinct hashes, then one exchange)
+    keeps that state to at most k rows per partition; this probe is the
     measured wall-time record of the shape, the skew_distinct_naive/
     spread precedent. Estimates land on the same frame so the whole
     sketch->estimate path executes."""

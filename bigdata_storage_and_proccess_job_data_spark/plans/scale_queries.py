@@ -2432,8 +2432,8 @@ def cms_point_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash/LSH precedent), so DuckDB rebuilds the identical sketch and
     lookups -- CMS's one-sided estimate>=truth guarantee rides along
     because both engines compute the same cells. At 100 TB the sketch
-    is the stored artifact: per-batch sketches merge cell-wise
-    (cms_merge) instead of rescanning history."""
+    is the stored artifact: per-batch sketches sum cell-wise by
+    (row, bucket) instead of rescanning history."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 
     orders = load_table(spark, sf_dir, "orders")

@@ -1214,11 +1214,11 @@ def optimize_table(
             stats_cols = [cluster_by]
     else:
         df = df.coalesce(target_files)
-    # carry the commit-meta sidecar forward: meta contents
-    # (e.g. maintain_view_stream's applied-batch-id replay marker) are
-    # layout-independent, and losing them across maintenance would
-    # reset exactly-once tracking -- a replayed micro-batch after an
-    # OPTIMIZE would double-fold into maintained aggregate state
+    # maintenance keeps caller metadata: the commit-meta sidecar
+    # describes the table's contents, not its file layout, so this
+    # commit, compact_small_files and every copy-on-write rewrite
+    # (delete_where, update_where, pruned apply_changes) carry the
+    # pinned snapshot's meta into the version they publish
     return commit_version(
         df,
         table_dir,
@@ -1283,7 +1283,7 @@ def compact_small_files(
         os.link(p, os.path.join(new_snap, os.path.basename(p)))
     if stats_cols:
         write_stats_manifest(new_snap, stats_cols)
-    # replay markers must survive maintenance commits (see optimize_table)
+    # maintenance keeps caller metadata (see optimize_table)
     _publish(table_dir, nxt, expected, commit_meta(table_dir, pinned))
     return nxt
 

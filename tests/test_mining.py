@@ -1,12 +1,9 @@
-"""The statistical-aggregate family: time-decayed aggregates, one-pass
-correlation matrix, table profiler, PSI drift bins, hypothesis tests,
-experiment statistics and model-eval reports -- each with hand-math
-micro pins plus full-value DuckDB parity on the driver tables (numpy
-cross-checks where a dense reference is clearer)."""
+"""The statistical-aggregate family: table profiler, PSI drift bins,
+hypothesis tests, experiment statistics and model-eval reports -- each
+with hand-math micro pins plus full-value DuckDB parity on the driver
+tables (numpy cross-checks where a dense reference is clearer)."""
 
 from __future__ import annotations
-
-import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,112 +19,6 @@ def sql_round_col(c, digits):
     return stable_round(F.col(c), digits).alias(c)
 from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
 from tests.parity import compare, duckdb_connect
-
-T0 = datetime.datetime(2024, 1, 2, 12, 0, 0)
-
-
-def test_decayed_agg_hand_math(spark):
-    """Fresh row weighs 1, a row exactly one half-life old weighs 0.5,
-    NULL value rows count toward weight but not sum/avg, NULL ts rows
-    vanish entirely."""
-    hl = 3600.0
-    rows = [
-        ("a", T0, 10.0),
-        ("a", T0 - datetime.timedelta(seconds=hl), 10.0),
-        ("a", T0, None),  # valueless but present
-        ("a", None, 99.0),  # no timestamp -> no weight
-    ]
-    df = spark.createDataFrame(rows, ["k", "ts", "v"])
-    out = aggregates.decayed_agg(df, ["k"], "ts", "v", hl).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r.decayed_sum == pytest.approx(15.0, abs=1e-2)
-    assert r.decayed_weight == pytest.approx(2.5, abs=1e-2)
-    assert r.decayed_avg == pytest.approx(10.0, abs=1e-2)
-
-
-def test_decayed_agg_explicit_ref(spark):
-    """An explicit ref one half-life after the data halves every weight
-    (relative mix unchanged, absolute level halved)."""
-    hl = 3600.0
-    df = spark.createDataFrame([("a", T0, 8.0)], ["k", "ts", "v"])
-    ref = T0 + datetime.timedelta(seconds=hl)
-    r = aggregates.decayed_agg(df, ["k"], "ts", "v", hl, ref_ts=ref).collect()[0]
-    assert r.decayed_weight == pytest.approx(0.5, abs=1e-3)
-    assert r.decayed_sum == pytest.approx(4.0, abs=1e-3)
-    with pytest.raises(ValueError, match="half_life_s"):
-        aggregates.decayed_agg(df, ["k"], "ts", "v", 0)
-
-
-def test_decayed_agg_duckdb_parity(spark, oracle_sf_dir):
-    """Cross-engine value parity on orders: the decay weight is pure
-    IEEE double arithmetic (epoch_us difference -> pow), so DuckDB
-    recomputes the identical measures from the same parquet."""
-    hl = 30 * 86400.0
-    orders = load_table(spark, oracle_sf_dir, "orders")
-    out = aggregates.decayed_agg(
-        orders, ["o_orderpriority"], "o_orderdate", "o_totalprice", hl
-    )
-    w = f"pow(2.0, -((epoch_us(r) - epoch_us(o_orderdate)) / 1e6) / {hl!r})"
-    sql = f"""
-    WITH ref AS (SELECT max(o_orderdate) AS r FROM orders)
-    SELECT o_orderpriority,
-      {sql_round(f'sum({w} * o_totalprice)', 4)} AS decayed_sum,
-      {sql_round(f'sum({w})', 4)} AS decayed_weight,
-      {sql_round(
-          f'sum({w} * o_totalprice) / '
-          f'sum(CASE WHEN o_totalprice IS NOT NULL THEN {w} END)', 4
-      )} AS decayed_avg
-    FROM orders, ref
-    GROUP BY o_orderpriority
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
-
-
-def test_corr_matrix_hand_math(spark):
-    """y = 2x -> corr 1; z = -x -> corr -1; NULL rows pairwise-delete
-    (n_pairs tracks each pair separately); single-pair count check."""
-    rows = [
-        (1.0, 2.0, -1.0),
-        (2.0, 4.0, -2.0),
-        (3.0, 6.0, -3.0),
-        (4.0, None, -4.0),
-    ]
-    df = spark.createDataFrame(rows, ["x", "y", "z"])
-    out = {
-        (r.col_a, r.col_b): (r.n_pairs, r.corr)
-        for r in aggregates.corr_matrix(df, ["x", "y", "z"]).collect()
-    }
-    assert len(out) == 6  # upper triangle incl. diagonal
-    assert out[("x", "y")][0] == 3
-    assert out[("x", "y")][1] == pytest.approx(1.0, abs=1e-3)
-    assert out[("x", "z")][0] == 4
-    assert out[("x", "z")][1] == pytest.approx(-1.0, abs=1e-3)
-    assert out[("x", "x")][1] == pytest.approx(1.0, abs=1e-3)
-    with pytest.raises(ValueError, match="at least 2"):
-        aggregates.corr_matrix(df, ["x"])
-    with pytest.raises(ValueError, match="duplicate"):
-        aggregates.corr_matrix(df, ["x", "x"])
-
-
-def test_corr_matrix_duckdb_parity(spark, oracle_sf_dir):
-    """Grouped correlation matrix over the lineitem measure columns
-    matches DuckDB's corr/covar_samp exactly under stable rounding."""
-    li = load_table(spark, oracle_sf_dir, "lineitem")
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    out = aggregates.corr_matrix(li, cols, keys=["l_returnflag"])
-    selects = []
-    for i, a in enumerate(cols):
-        for b in cols[i:]:
-            selects.append(f"""
-            SELECT l_returnflag, '{a}' AS col_a, '{b}' AS col_b,
-              count(CASE WHEN {a} IS NOT NULL AND {b} IS NOT NULL THEN 1 END)
-                AS n_pairs,
-              {sql_round(f'covar_samp({a}, {b})', 4)} AS cov,
-              {sql_round(f'corr({a}, {b})', 4)} AS corr
-            FROM lineitem GROUP BY l_returnflag""")
-    sql = " UNION ALL ".join(selects)
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
 
 
 def test_profile_table_hand_math(spark):

@@ -326,37 +326,6 @@ def test_sessionize_and_interpolate_invariants(spark):
         assert max(r.session_seq for r in by_user[uid]) == want_sessions
 
 
-def test_kmv_merge_law_on_generated_keys(spark):
-    """Property: for ANY key multiset (hypothesis text -- unicode,
-    dupes, near-collisions) and ANY partition into batches,
-    kmv_merge(per-batch sketches) == the monolithic sketch EXACTLY,
-    and below-k estimates are exact distinct counts. One Spark job per
-    frame, examples batched the module's usual way."""
-    from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-
-    keys = _examples(150)
-    rows = [(i % 3, k) for i, k in enumerate(keys)]
-    df = spark.createDataFrame(rows, "b int, k string")
-    k_param = 32
-
-    mono = aggregates.kmv_sketch(df, "k", k=k_param).collect()[0].sketch
-    parts = None
-    for b in range(3):
-        sk = aggregates.kmv_sketch(
-            df.filter(F.col("b") == b), "k", k=k_param
-        )
-        parts = sk if parts is None else parts.unionByName(sk)
-    merged = aggregates.kmv_merge(parts, k=k_param).collect()[0].sketch
-    assert merged == mono
-
-    n_distinct = len(set(keys))
-    est = aggregates.kmv_estimate(
-        aggregates.kmv_sketch(df, "k", k=max(n_distinct + 1, 4)),
-        k=max(n_distinct + 1, 4),
-    ).collect()[0].distinct_estimate
-    assert est == n_distinct
-
-
 def test_bootstrap_ci_partition_independent_on_generated_values(spark):
     """Property: the Poisson-bootstrap CI is a pure function of the row
     SET -- md5 weights depend on ids, not placement -- so any

@@ -528,129 +528,6 @@ def test_dedup_stream_batch_equivalence(spark, tmp_path):
     assert len(batch_dirs) >= 2
 
 
-def test_merge_stream_applies_cdc_batches_in_order(spark, tmp_path):
-    """Streaming MERGE into the versioned table: three micro-batches of
-    change rows (insert, update+delete, insert) must leave exactly the
-    net state, one snapshot commit per non-empty batch, and re-applying
-    the last change set must be content-idempotent (the replay-safety
-    claim)."""
-    import time as _t
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
-
-    schema = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("val", StringType()),
-            StructField("_op", StringType()),
-        ]
-    )
-    src = str(tmp_path / "changes")
-    table = str(tmp_path / "merged_table")
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    write([(1, "a1", "upsert"), (2, "b1", "upsert")])
-    _t.sleep(1.1)
-    write([(2, "b2", "upsert"), (1, None, "delete")])
-    _t.sleep(1.1)
-    write([(3, "c1", "upsert")])
-
-    stream = pipeline.file_stream(
-        spark, src, schema, max_files_per_trigger=1
-    )
-    q = pipeline.merge_stream(
-        stream, table, "k", str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r.k, r.val)
-        for r in versioned.read_version(spark, table).collect()
-    }
-    assert got == {(2, "b2"), (3, "c1")}
-    assert versioned.current_version(table) == 3
-
-    # replaying the last change set converges to the same content
-    last = spark.createDataFrame([(3, "c1", "upsert")], schema)
-    versioned.apply_changes(spark, table, last, "k")
-    again = {
-        (r.k, r.val)
-        for r in versioned.read_version(spark, table).collect()
-    }
-    assert again == got and versioned.current_version(table) == 4
-
-
-def test_merge_stream_inline_compaction(spark, tmp_path):
-    """merge_stream(compact_every=2): after every 2nd applied batch the
-    sink bin-packs the snapshot's small files inside the same
-    foreachBatch callback, so a long-running CDC stream does not
-    accrete one file set per batch. Content identical; the compaction
-    appears as its own snapshot version."""
-    import glob
-    import time as _t
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
-
-    schema = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("val", StringType()),
-            StructField("_op", StringType()),
-        ]
-    )
-    src = str(tmp_path / "changes")
-    table = str(tmp_path / "merged_table")
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    write([(i, f"a{i}", "upsert") for i in range(10)])
-    _t.sleep(1.1)
-    write([(i, f"b{i}", "upsert") for i in range(10, 20)])
-
-    stream = pipeline.file_stream(spark, src, schema, max_files_per_trigger=1)
-    q = pipeline.merge_stream(
-        stream,
-        table,
-        "k",
-        str(tmp_path / "ckpt"),
-        compact_every=2,
-        compact_small_bytes=64 * 1024 * 1024,
-    )
-    q.awaitTermination(120)
-
-    # 2 merge commits + 1 compaction commit after the 2nd batch
-    assert versioned.current_version(table) == 3
-    snap = f"{table}/v=3"
-    assert len(glob.glob(f"{snap}/*.parquet")) == 1
-    got = {
-        (r.k, r.val) for r in versioned.read_version(spark, table).collect()
-    }
-    assert got == {(i, f"a{i}") for i in range(10)} | {
-        (i, f"b{i}") for i in range(10, 20)
-    }
-
-
 def test_stream_stream_right_outer_join(spark, tmp_path):
     """RIGHT-OUTER completes the stream-stream outer matrix: an orphan
     click (no impression within the interval) must emit with NULL
@@ -752,52 +629,6 @@ def test_stream_stream_right_outer_join(spark, tmp_path):
         clk_b,
     )
     assert canon(batch.collect()) == got
-
-
-def test_merge_stream_skips_empty_batches(spark, tmp_path):
-    """An all-filtered (empty) micro-batch must NOT commit a snapshot:
-    version count reflects only batches that carried change rows."""
-    import time as _t
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
-
-    schema = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("val", StringType()),
-            StructField("_op", StringType()),
-        ]
-    )
-    src = str(tmp_path / "changes")
-    table = str(tmp_path / "tbl")
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    write([(1, "a", "upsert")])
-    _t.sleep(1.1)
-    write([(99, "zz", "upsert")])  # filtered out below -> empty batch
-    _t.sleep(1.1)
-    write([(2, "b", "upsert")])
-
-    stream = pipeline.file_stream(
-        spark, src, schema, max_files_per_trigger=1
-    ).filter(F.col("k") < 50)
-    q = pipeline.merge_stream(stream, table, "k", str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    assert versioned.current_version(table) == 2  # not 3
-    got = {r.k for r in versioned.read_version(spark, table).collect()}
-    assert got == {1, 2}
 
 
 def test_stream_stream_semi_join(spark, tmp_path):

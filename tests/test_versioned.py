@@ -772,6 +772,25 @@ def test_optimize_table_coalesce_path(spark, tmp_path):
     assert after == before
 
 
+def test_maintenance_keeps_commit_meta(spark, tmp_path):
+    """Maintenance keeps caller metadata: optimize_table,
+    compact_small_files and delete_where each publish a new version
+    that carries the pinned snapshot's commit-meta sidecar."""
+    table = str(tmp_path / "meta")
+    meta = {"last_batch": 7}
+    versioned.commit_version(
+        spark.range(0, 40).selectExpr("id AS k").repartition(4),
+        table,
+        meta=meta,
+    )
+    assert versioned.optimize_table(spark, table, target_files=2) == 2
+    assert versioned.commit_meta(table) == meta
+    assert versioned.compact_small_files(spark, table, small_bytes=1 << 30) == 3
+    assert versioned.commit_meta(table) == meta
+    assert versioned.delete_where(spark, table, "k", eq=3)["version"] == 4
+    assert versioned.commit_meta(table) == meta
+
+
 def test_bloom_manifest_equality_pruning(spark, tmp_path):
     """The point-lookup case range zones can't prune: a high-cardinality
     key written UNSORTED spans nearly every file's [min, max], so
@@ -1444,9 +1463,8 @@ def test_scd2_join_point_in_time(spark):
 
 def test_agg_state_variance_maintenance(spark):
     """track_var: variance survives inserts/deletes/updates through the
-    delta fold and through state MERGE, matching var_samp recompute;
-    singleton/empty groups degrade to NULL; plain state (no ss) keeps
-    its old result schema."""
+    delta fold, matching var_samp recompute; singleton/empty groups
+    degrade to NULL; plain state (no ss) keeps its old result schema."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates as A
 
     old = spark.createDataFrame(
@@ -1477,28 +1495,6 @@ def test_agg_state_variance_maintenance(spark):
             assert got[g].var_val is None, g
         else:
             assert abs(got[g].var_val - w) < 1e-9, g
-
-    # merge path: init(A) ++ init(B) == init(A union B), variance incl.
-    half1 = old.filter(F.col("id") <= 2)
-    half2 = old.filter(F.col("id") > 2)
-    merged = A.agg_state_result(
-        A.agg_state_merge(
-            A.agg_state_init(half1, keys, ms, track_var=True),
-            A.agg_state_init(half2, keys, ms, track_var=True),
-            keys,
-            ms,
-        ),
-        keys,
-        ms,
-    )
-    direct = A.agg_state_result(
-        A.agg_state_init(old, keys, ms, track_var=True), keys, ms
-    )
-    gm = {r.grp: r.var_val for r in merged.collect()}
-    gd = {r.grp: r.var_val for r in direct.collect()}
-    assert gm.keys() == gd.keys()
-    for g in gd:
-        assert abs(gm[g] - gd[g]) < 1e-9
 
     # no-ss state: result schema unchanged (no var columns)
     plain = A.agg_state_result(

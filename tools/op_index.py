@@ -91,13 +91,6 @@ WAIVERS: dict[frozenset, str] = {
     ): "deterministic md5 model builders: one flat centroid set (IVF) "
     "vs per-subspace codebooks (PQ) -- different model shapes",
     frozenset(
-        {
-            "streaming.pipeline.maintain_quantile_stream",
-            "streaming.pipeline.maintain_sketch_stream",
-        }
-    ): "maintained-sketch streaming twins: KLL-style quantile state vs "
-    "counting sketch state over the same foreachBatch seam",
-    frozenset(
         {"domain.pipeline.company_stats", "domain.pipeline.location_stats"}
     ): "reference-parity cube variants (spark_batch_v2 emits one agg "
     "per dimension set; each keeps its reference citation)",
@@ -123,19 +116,7 @@ WAIVERS: dict[frozenset, str] = {
 # the reason. tests/test_op_index.py fails on any other unreached public
 # function in operators/ and on entries that are no longer unreached.
 KEPT_UNREACHED: dict[str, str] = {
-    "operators.aggregates.agg_state_merge": "merge step of the "
-    "maintained view stream sink (streaming/pipeline.py)",
-    "operators.aggregates.cms_merge": "merge step of the maintained "
-    "frequency stream sink (streaming/pipeline.py)",
-    "operators.aggregates.kmv_merge": "merge step of the maintained "
-    "sketch stream sink (streaming/pipeline.py)",
     "operators.aggregates.global_sum": "paper operator (COVERAGE row A8)",
-    "operators.aggregates.decayed_agg": "time-decayed aggregate pinned by "
-    "three hand-math and DuckDB parity tests; its deletion is the next "
-    "step of ROADMAP item 2",
-    "operators.aggregates.corr_matrix": "one-pass correlation matrix "
-    "pinned by two hand-math and DuckDB parity tests; its deletion is "
-    "the next step of ROADMAP item 2",
     "operators.neardup.jaccard_pairs": "exact reference for the MinHash "
     "and SimHash near-dup recall tests",
     "operators.graph.triangles": "triangle list behind triangle_counts, "
