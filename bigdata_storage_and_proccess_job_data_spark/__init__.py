@@ -5,11 +5,12 @@ capabilities of the reference job-postings pipeline
 Layout:
     session.py    -- tuned SparkSession builder (AQE, shuffle sizing, Arrow)
     catalog.py    -- testdata table loading + temp-view registration
-    schemas.py    -- explicit StructTypes (raw / normalized / agg outputs)
+    domain/       -- the reference job-postings pipeline: explicit
+                     StructTypes (schemas.py), clean -> enrich -> cubes
     functions/    -- scalar expression library (clean, enrich, text, vectors)
     operators/    -- dataframe->dataframe operators (dedup, similarity,
-                     aggregates, normalize, impute, multimodal)
-    sources/      -- partitioned lake IO + Kafka (gated)
+                     aggregates, joins, graph, corpus, multimodal, ...)
+    sources/      -- partitioned lake IO + versioned tables + transactions
     streaming/    -- windowed-agg builders shared batch/stream + pipelines
     plans/        -- driver-facing query registry (queries + DuckDB oracles)
 """

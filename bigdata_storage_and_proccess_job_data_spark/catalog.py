@@ -160,35 +160,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for spark.sql use."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def analyze_table(
-    spark: SparkSession, table: str, cols: list[str] | None = None
-) -> None:
-    """Collect catalog statistics for a SAVED table (saveAsTable /
-    sources.lake.write_bucketed): table-level size + row count, plus
-    per-column NDV/min/max/null histograms for ``cols``. These feed the
-    cost-based optimizer (spark.sql.cbo.enabled + cbo.joinReorder.
-    enabled): with column stats, FilterEstimation shrinks a filtered
-    table's size estimate to its SELECTED rows, so a big-on-disk table
-    with a selective predicate broadcasts instead of shuffle-joining,
-    and multi-join plans reorder by estimated cardinality -- decisions
-    size-on-disk alone gets wrong at every scale
-    (tests/test_adaptive.py::test_cbo_column_stats_flip_join_strategy
-    pins the flip). Re-run after each batch append; stats staleness
-    only ever degrades plans back to size-based estimates.
-
-    Temp views have no catalog entry -- ANALYZE needs a saved table;
-    names pass through ``quotedString`` guards (no user-SQL splicing
-    beyond the identifier and column names, both validated)."""
-    if not table.replace(".", "").replace("_", "").isalnum():
-        raise ValueError(f"suspicious table identifier: {table!r}")
-    for c in cols or []:
-        if not c.replace("_", "").isalnum():
-            raise ValueError(f"suspicious column identifier: {c!r}")
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    if cols:
-        spark.sql(
-            f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS "
-            + ", ".join(cols)
-        )

@@ -57,12 +57,15 @@ def epoch_ms_to_date(col: Column | str) -> Column:
 
 
 def epoch_s_to_timestamp(col: Column | str) -> Column:
-    """Epoch seconds (double) -> timestamp.
+    """Epoch seconds (double) -> timestamp, keeping fractional seconds
+    and independent of the session time zone (no round trip through a
+    local-time string, which drops the fraction and shifts the repeated
+    hour of a DST fall-back).
 
     Reference: spark_streaming_v2.py:71-74.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.to_timestamp(F.from_unixtime(c))
+    return F.timestamp_seconds(c)
 
 
 def non_blank(col: Column | str) -> Column:

@@ -183,92 +183,3 @@ def hashed_doc_vector(
             ),
         ),
     )
-
-
-def normalize_unicode(col: Column | str, form: str = "NFC") -> Column:
-    """Unicode normalization (NFC/NFD/NFKC/NFKD) -- the corpus
-    canonicalization step that makes visually-identical strings
-    byte-identical (composed vs combining-mark sequences, fullwidth
-    compatibility forms), which exact dedup, fingerprinting, and
-    token hashing all silently depend on.
-
-    Spark SQL has no normalization builtin, so this is the sanctioned
-    Python path: an Arrow-vectorized pandas_udf (pandas
-    ``Series.str.normalize``) -- ArrowEvalPython in the plan, NOT the
-    row-at-a-time BatchEvalPython the plan lint forbids. Place it once
-    at the ingest edge (before hashing/dedup), not in per-query hot
-    paths. NFC matches DuckDB's nfc_normalize, which is what lets
-    normalized pipelines keep exact cross-engine oracles.
-
-    The four form-variant UDFs are module-memoized:
-    repeated calls reuse ONE registered function object per form
-    instead of re-creating the Arrow serializer at every call site."""
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form {form!r}")
-    c = F.col(col) if isinstance(col, str) else col
-    return _norm_udf(form)(c)
-
-
-def _norm_udf(form: str):
-    """One pandas_udf per normalization form, created lazily on first
-    use and cached for the life of the module."""
-    fn = _NORM_UDFS.get(form)
-    if fn is None:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("string")
-        def _norm(s):
-            return s.str.normalize(form)
-
-        fn = _NORM_UDFS[form] = _norm
-    return fn
-
-
-_NORM_UDFS: dict = {}
-
-
-# Unicode script classes for script_profile: name -> (Java regex char
-# class, DuckDB/RE2 char class). Java needs the Is- prefix for script
-# names; RE2 takes them bare. CJK folds the four East-Asian scripts.
-SCRIPT_CLASSES = {
-    "latin": (r"\p{IsLatin}", r"\p{Latin}"),
-    "cyrillic": (r"\p{IsCyrillic}", r"\p{Cyrillic}"),
-    "greek": (r"\p{IsGreek}", r"\p{Greek}"),
-    "arabic": (r"\p{IsArabic}", r"\p{Arabic}"),
-    "cjk": (
-        r"[\p{IsHan}\p{IsHiragana}\p{IsKatakana}\p{IsHangul}]",
-        r"[\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}]",
-    ),
-}
-
-
-def script_profile(col: Column | str) -> Column:
-    """Unicode script mix of a text column as ONE struct: per-script
-    character fractions (SCRIPT_CLASSES) over NON-whitespace chars,
-    plus ``n_chars`` and ``dominant`` (argmax script, ties to the
-    alphabetically-first, 'other' when nothing matches -- the lang_id
-    tiebreak convention). The routing signal multilingual corpus
-    pipelines split on BEFORE any stopword-based lang_id applies (lang
-    ID lists are per-script; a Cyrillic doc scores 'und' on Latin
-    stopword tables, while its script is unambiguous).
-
-    Pure codegen'd regexp_count expressions -- one pass, no UDF; empty/
-    whitespace-only text yields zero fractions and dominant 'other'."""
-    c = F.col(col) if isinstance(col, str) else col
-    body = F.regexp_replace(c, r"\s", "")
-    n = F.length(body)
-    safe_n = F.greatest(n, F.lit(1)).cast("double")
-    fracs = {
-        name: F.regexp_count(body, F.lit(java)) / safe_n
-        for name, (java, _) in sorted(SCRIPT_CLASSES.items())
-    }
-    best_name, best_frac = F.lit("other"), F.lit(0.0)
-    for name in sorted(fracs):
-        cond = fracs[name] > best_frac
-        best_name = F.when(cond, F.lit(name)).otherwise(best_name)
-        best_frac = F.when(cond, fracs[name]).otherwise(best_frac)
-    return F.struct(
-        n.cast("long").alias("n_chars"),
-        *[fracs[k].alias(f"{k}_frac") for k in sorted(fracs)],
-        best_name.alias("dominant"),
-    )

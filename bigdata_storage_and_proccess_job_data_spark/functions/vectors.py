@@ -166,36 +166,3 @@ def cube_sql(tables: "list[list[list[float]]]") -> str:
                 _finite_or_raise(x, "cube_sql")
     payload = json.dumps(tables, separators=(",", ":"))
     return f"from_json('{payload}', 'array<array<array<double>>>')"
-
-
-def vector_sql(xs: "list[float]") -> str:
-    """SQL text yielding an array<double> constant via ``from_json``
-    of one string literal (see matrix_sql for why not per-element
-    literals). Finite values only."""
-    import json
-
-    for x in xs:
-        _finite_or_raise(x, "vector_sql")
-    payload = json.dumps([float(x) for x in xs], separators=(",", ":"))
-    return f"from_json('{payload}', 'array<double>')"
-
-
-def lit_vector(xs: "list[float]") -> Column:
-    """array<double> parameter constant, one plan node (see
-    matrix_sql)."""
-    return F.expr(vector_sql(xs))
-
-
-def lit_matrix(rows: "list[list[float]]") -> Column:
-    """array<array<double>> parameter constant, one plan node (see
-    matrix_sql) -- F.lit(nested_list) constructs the literal element
-    by element over py4j (~136 ms for a 4x64 matrix, measured), and an
-    inlined array(array(...)) form re-pays analyzer traversal on every
-    derived DataFrame; this form costs neither."""
-    return F.expr(matrix_sql(rows))
-
-
-def lit_cube(tables: "list[list[list[float]]]") -> Column:
-    """array<array<array<double>>> parameter constant, one plan node
-    (see cube_sql)."""
-    return F.expr(cube_sql(tables))

@@ -1,13 +1,13 @@
 """Z-order (Morton) interleaving for multi-dimensional data skipping.
 
-Linear clustering (lake.write_clustered) sorts lexicographically: filters
-on the FIRST key skip row groups, filters on later keys don't -- their
-values are scattered across every file. Interleaving the bits of k
-normalized keys into one Morton code and range-clustering on THAT gives
-every participating column locality: a predicate on any of them maps to
-a bounded set of Z-ranges, so parquet min/max stats prune for each
-dimension (the Delta/Iceberg OPTIMIZE ZORDER idea as a plain column
-expression -- no table format required).
+Linear clustering (repartitionByRange + sortWithinPartitions on a key
+list) sorts lexicographically: filters on the FIRST key skip row groups,
+filters on later keys don't -- their values are scattered across every
+file. Interleaving the bits of k normalized keys into one Morton code
+and range-clustering on THAT gives every participating column locality:
+a predicate on any of them maps to a bounded set of Z-ranges, so parquet
+min/max stats prune for each dimension (the Delta/Iceberg OPTIMIZE
+ZORDER idea as a plain column expression -- no table format required).
 
 All pure bit arithmetic on longs, JVM-side, codegen-friendly.
 """

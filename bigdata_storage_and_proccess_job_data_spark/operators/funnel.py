@@ -87,105 +87,6 @@ def funnel_counts(
     )
 
 
-_INTERVAL_UNITS = {
-    "second": 1.0,
-    "seconds": 1.0,
-    "minute": 60.0,
-    "minutes": 60.0,
-    "hour": 3600.0,
-    "hours": 3600.0,
-    "day": 86400.0,
-    "days": 86400.0,
-}
-
-
-def _interval_seconds(gap: "str | float | int") -> float:
-    """'30 minutes' / '2 hours' / plain seconds -> float seconds (the
-    duration grammar streaming session_window uses, minus compound
-    forms)."""
-    if isinstance(gap, (int, float)):
-        s = float(gap)
-    else:
-        parts = gap.strip().split()
-        if len(parts) != 2 or parts[1].lower() not in _INTERVAL_UNITS:
-            raise ValueError(
-                f"gap must be '<n> <unit>' with unit in "
-                f"{sorted(set(_INTERVAL_UNITS))} or numeric seconds, "
-                f"got {gap!r}"
-            )
-        s = float(parts[0]) * _INTERVAL_UNITS[parts[1].lower()]
-    if s <= 0:
-        raise ValueError("gap must be positive")
-    return s
-
-
-def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    tiebreak_cols: list[str] | None = None,
-) -> DataFrame:
-    """Row-level session assignment: within each user's time-ordered
-    events, a gap larger than ``gap`` starts a new session. Adds
-    ``session_seq`` (1-based per user) and ``session_id``
-    (user||'#'||seq, globally unique). The batch counterpart of
-    streaming session_window aggregation (streaming/windows.py) -- that
-    one emits per-SESSION aggregates; this labels every ROW, which is
-    what path extraction and per-session joins need.
-
-    Classic lag + running-sum formulation: ONE shuffle+sort per user
-    drives both windows (Spark reuses the sorted exchange), no joins.
-    NULL users or timestamps drop (no order to assign). Deterministic
-    under equal timestamps via ``tiebreak_cols``."""
-    gap_s = _interval_seconds(gap)
-    order = [ts_col, *(tiebreak_cols or [])]
-    w = Window.partitionBy(user_col).orderBy(*order)
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    is_new = F.when(
-        prev_ts.isNull()
-        | (
-            F.col(ts_col).cast("double") - prev_ts.cast("double")
-            > F.lit(gap_s)
-        ),
-        1,
-    ).otherwise(0)
-    out = (
-        df.filter(
-            F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
-        )
-        .withColumn("session_seq", F.sum(is_new).over(run))
-        .withColumn(
-            "session_id",
-            F.concat_ws(
-                "#",
-                F.col(user_col).cast("string"),
-                F.col("session_seq").cast("string"),
-            ),
-        )
-    )
-    return out
-
-
-def session_stats(
-    sessions: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-session rollup over sessionize() output: event count,
-    start/end, duration seconds. One hash agg on the session id."""
-    return sessions.groupBy(user_col, "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        (
-            F.max(F.col(ts_col).cast("double"))
-            - F.min(F.col(ts_col).cast("double"))
-        ).alias("duration_s"),
-    )
-
-
 def retention_matrix(
     events: DataFrame,
     user_col: str = "user_id",
@@ -194,7 +95,7 @@ def retention_matrix(
 ) -> DataFrame:
     """Cohort retention matrix: users grouped by their FIRST-activity
     period, tracked across subsequent periods -- the standard
-    growth-analytics readout next to funnel_counts/sessionize. The
+    growth-analytics readout next to funnel_counts. The
     operator-library generalization of the former cohort_retention
     query (SIGNUP-anchored weekly counts, single-scan window form,
     merged into this operator's registered retention_matrix query):

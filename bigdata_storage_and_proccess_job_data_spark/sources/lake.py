@@ -125,27 +125,6 @@ def read_json_lake(
     return spark.read.schema(schema).json(path)
 
 
-def read_csv_lake(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = True,
-    bad_records_path: str | None = None,
-) -> DataFrame:
-    """CSV ingest, same contract as read_json_lake: explicit schema only
-    (CSV inference is another full pre-scan), PERMISSIVE parsing so a
-    malformed row nulls out instead of killing a 100 TB job; route
-    rejects to ``bad_records_path`` for replay instead of losing them."""
-    reader = (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-    )
-    if bad_records_path:
-        reader = reader.option("badRecordsPath", bad_records_path)
-    return reader.csv(path)
-
-
 class SchemaMismatchError(TypeError):
     """Raised when an append would mix incompatible file schemas in one
     log dir (parquet readers infer the table schema from a sample file,
@@ -226,33 +205,6 @@ def archive_stream(
     )
 
 
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Range-cluster the data on ``cluster_by`` before writing: global
-    range partitioning (sampled boundaries) gives each output file a
-    narrow, non-overlapping key range, and the in-file sort tightens
-    per-row-group min/max stats. Point/range filters on those columns
-    then skip whole row groups at scan time via the pushed parquet
-    predicates -- the data-skipping complement to partitionBy for
-    high-cardinality keys where one-dir-per-value is infeasible
-    (tests/test_lake.py asserts the scan reads a fraction of the rows).
-
-    Unlike partition pruning this is statistics-based: it needs no
-    catalog and composes with partitionBy (partition on the coarse key,
-    cluster on the fine one)."""
-    (
-        df.repartitionByRange(n_files, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def write_with_bloom(
     df: DataFrame,
     path: str,
@@ -264,9 +216,9 @@ def write_with_bloom(
     (``bloom_cols`` maps column name -> expected distinct values per
     file, which sizes the filter).
 
-    This is the POINT-LOOKUP complement to write_clustered /
-    write_zordered: min/max row-group stats only skip when the data is
-    range-clustered on the filter column, so an equality probe on a
+    This is the POINT-LOOKUP complement to zorder.write_zordered: min/max
+    row-group stats only skip when the data is range-clustered on the
+    filter column, so an equality probe on a
     high-cardinality UNSORTED key (doc ids, session ids, content
     hashes) reads every row group. A bloom filter gives each row group
     a probabilistic absence proof instead -- the reader (Spark's
@@ -327,8 +279,8 @@ def write_bucketed(
 def local_dir_stats(path: str) -> tuple[int, int] | None:
     """(n_parquet_files, total_bytes) for a LOCAL file or dir, or None
     when the path isn't local (s3://, hdfs:// -- callers should then
-    trust the scan's own file-split planning). Shared by
-    catalog._spread's narrowness estimate and compact_small_files."""
+    trust the scan's own file-split planning). Feeds catalog._spread's
+    narrowness estimate."""
     import glob
 
     if os.path.isfile(path):
@@ -359,125 +311,6 @@ def parse_byte_conf(raw: str | int, default: int = 128 * 1024 * 1024) -> int:
         return int(float(num) * mult)
     except ValueError:
         return default
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    table_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    preserve_order_by: list[str] | None = None,
-) -> tuple[int, int, int]:
-    """Small-file compaction: rewrite a parquet dir whose file count has
-    drifted (streaming appends, per-batch upserts -- the classic lake
-    disease: a 128 MB dataset in 4,000 x 32 KB files costs 4,000 scan
-    tasks and 4,000 footer reads) into ~target-sized files, COMMITTED as
-    a versioned snapshot so concurrent readers never see a half-rewritten
-    dir. Returns (files_before, files_after, committed_version).
-
-    File count is chosen from on-disk bytes / target (>= 1), a plain
-    ``coalesce`` (no shuffle) unless ``preserve_order_by`` asks for a
-    re-cluster, in which case the rewrite also restores range layout
-    (repartitionByRange + in-file sort -- one shuffle, same as
-    write_clustered)."""
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
-
-    stats = local_dir_stats(path)
-    if stats is None:
-        raise ValueError(f"{path}: not a local path; compute stats lake-side")
-    n_files, total = stats
-    n_out = max(1, -(-total // target_file_bytes))
-    df = read_parquet(spark, path)
-    if preserve_order_by:
-        df = df.repartitionByRange(n_out, *preserve_order_by).sortWithinPartitions(
-            *preserve_order_by
-        )
-    else:
-        df = df.coalesce(n_out)
-    v = versioned.commit_version(df, table_dir)
-    return n_files, n_out, v
-
-
-def read_resilient(
-    spark: SparkSession, path: str, fmt: str = "parquet"
-) -> DataFrame:
-    """Read a lake dir SKIPPING corrupt/truncated files instead of
-    failing the whole job -- at 100 TB some file is always half-written
-    by a crashed task or torn by an object-store race. Scope the option
-    to this read (DataFrameReader option, not the session-wide conf) so
-    correctness-critical reads elsewhere still fail loudly."""
-    return (
-        spark.read.option("ignoreCorruptFiles", "true").format(fmt).load(path)
-    )
-
-
-def evolve_append(
-    spark: SparkSession, df: DataFrame, path: str
-) -> None:
-    """Schema-EVOLVING append: additive, nullable-safe column changes are
-    allowed (new columns backfill as null on old rows; missing columns
-    write as null), anything else still raises SchemaMismatchError --
-    the middle ground between upsert_by_key's strict mode and silent
-    drift. Readers must use read_evolved (mergeSchema) to see the union
-    schema."""
-    if os.path.isdir(path) and any(
-        n.endswith(".parquet") for n in os.listdir(path)
-    ):
-        # guard against the UNION schema (mergeSchema), not one arbitrary
-        # file footer: after a prior evolution, a plain read may infer
-        # from an old file that lacks the evolved column, the conflict
-        # set would come up empty, and a retyping append would poison
-        # every subsequent mergeSchema read instead of being rejected
-        existing = {
-            f.name: f.dataType for f in read_evolved(spark, path).schema
-        }
-        incoming = {f.name: f.dataType for f in df.schema}
-        conflicts = sorted(
-            f"{n}: {existing[n]} -> {incoming[n]}"
-            for n in set(existing) & set(incoming)
-            if existing[n] != incoming[n]
-        )
-        if conflicts:
-            raise SchemaMismatchError(
-                f"append to {path} RETYPES existing columns: {conflicts}"
-            )
-    df.write.mode("append").option("mergeSchema", "true").parquet(path)
-
-
-def read_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Union-schema read over an evolved log (mergeSchema reconciles the
-    per-file footers; absent columns are null)."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def read_avro_lake(
-    spark: SparkSession, path: str, schema: "StructType | None" = None
-) -> DataFrame:
-    """Avro ingest (the remaining row-oriented lake format beside the
-    JSON/CSV readers; the Kafka-ecosystem interchange format the
-    reference's pipeline would meet first). Package-gated exactly like
-    kafka_stream (streaming/pipeline.py): the built-in external module
-    org.apache.spark:spark-avro_2.13:<spark-version> is not bundled
-    with pyspark, so absence fails fast with the exact --packages
-    coordinate instead of a deep NoClassDefFoundError mid-plan.
-    An explicit ``schema`` skips inference (the read_json_lake
-    rationale)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    try:
-        return reader.format("avro").load(path)
-    except Exception as exc:  # pragma: no cover - version-dependent type
-        if "AVRO" in str(exc).upper() or "avro" in str(exc):
-            ver = spark.version
-            raise RuntimeError(
-                "Avro support needs the external spark-avro module: "
-                "start the session with --packages "
-                f"org.apache.spark:spark-avro_2.13:{ver} "
-                "(not bundled with pyspark; the kafka_stream gate "
-                "precedent)"
-            ) from exc
-        raise
 
 
 def write_training_shards(

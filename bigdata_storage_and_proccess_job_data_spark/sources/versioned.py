@@ -34,10 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.session import local_frame
-from bigdata_storage_and_proccess_job_data_spark.sources.lake import (
-    read_parquet,
-    read_upserted,
-)
+from bigdata_storage_and_proccess_job_data_spark.sources.lake import read_parquet
 
 _POINTER = "_latest"
 _META = "_commit_meta.json"
@@ -368,8 +365,8 @@ def write_stats_manifest(
                 per_col[col] = [None, None]
             else:
                 per_col[col] = [min(mins), max(maxs)]
-        # file row count from the same footer: makes COUNT(*) (and
-        # file-level accounting) a metadata-only query via table_stats
+        # the file's row count from the same footer, stored beside the
+        # column bounds (not a column: readers of the bounds skip it)
         per_col["__nrows__"] = [md.num_rows]
         manifest[os.path.basename(path)] = per_col
     ser = {
@@ -605,9 +602,9 @@ def _bloom_rebuild_spliced(
     subset of the affected files' rows, so a column's new distinct set
     is a subset of the union of those files' old value sets (absent
     old entries are all-NULL files contributing zero values) -- UNLESS
-    the rewrite may have CHANGED the column's values (update_where
-    set_exprs; passed as ``changed_cols``), in which case only the
-    footer row count bounds it. Sizing from the row count alone would
+    the rewrite may have CHANGED the column's values (apply_changes'
+    upserted columns, passed as ``changed_cols``), in which case only
+    the footer row count bounds it. Sizing from the row count alone would
     inflate low-NDV columns' bitmaps ~rows/NDV-fold per rewrite; the
     cap keeps them near the exact build's size
     while the unique-key case stays bit-identical (bound == row count).
@@ -1141,17 +1138,6 @@ def apply_changes(
         changes.unpersist()
 
 
-def compact_log_versioned(
-    spark: SparkSession, log_path: str, table_dir: str, key: str, version_col: str
-) -> int:
-    """Fold an upsert_by_key log into its latest-wins view (one row per
-    ``key``, the highest ``version_col`` winning; lake.read_upserted)
-    and COMMIT it as the next snapshot of ``table_dir`` -- readers of
-    the previous snapshot are unaffected at every instant of the
-    rewrite. Returns the committed version."""
-    return commit_version(read_upserted(spark, log_path, key, version_col), table_dir)
-
-
 def optimize_table(
     spark: SparkSession,
     table_dir: str,
@@ -1217,8 +1203,8 @@ def optimize_table(
     # maintenance keeps caller metadata: the commit-meta sidecar
     # describes the table's contents, not its file layout, so this
     # commit, compact_small_files and every copy-on-write rewrite
-    # (delete_where, update_where, pruned apply_changes) carry the
-    # pinned snapshot's meta into the version they publish
+    # (delete_where, pruned apply_changes) carry the pinned snapshot's
+    # meta into the version they publish
     return commit_version(
         df,
         table_dir,
@@ -1337,178 +1323,6 @@ def clone_table(
     return 1
 
 
-def scd2_init(
-    snapshot: DataFrame, key: str, ts
-) -> DataFrame:
-    """Bootstrap a slowly-changing-dimension TYPE 2 history from a
-    snapshot: every row becomes current (valid_from = ``ts``,
-    valid_to = NULL, is_current = true). ``ts`` is the load timestamp
-    (pass a datetime or an ISO string); history rows carry it as
-    TIMESTAMP_NTZ so cross-engine comparisons stay wall-clock."""
-    t = F.lit(ts).cast("timestamp_ntz")
-    return snapshot.select(
-        "*",
-        t.alias("valid_from"),
-        F.lit(None).cast("timestamp_ntz").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-
-
-def scd2_apply(
-    history: DataFrame, feed: DataFrame, key: str, ts
-) -> DataFrame:
-    """Fold a change feed (change_feed/diff_versions shape) into a
-    TYPE 2 history: updated/deleted keys CLOSE their current row
-    (valid_to = ``ts``, is_current = false); inserted/updated keys OPEN
-    a new current row (valid_from = ``ts``). Closed rows are immutable
-    forever -- the audit-trail dimension table (Kimball SCD2), built on
-    the same feed the aggregate maintainers consume, so one
-    diff_versions pass can refresh metrics AND history.
-
-    Cost shape: the only work against HISTORY is one broadcast-sized
-    hash semi-lookup of changed keys to flip their current rows
-    (|changes| keys) plus a union of |changes| new rows; untouched
-    history streams through unchanged -- append-friendly at 100 TB.
-    as_of() below reads any point in time.
-
-    Contract: ``history`` rows for one key never overlap in
-    [valid_from, valid_to) and have at most one is_current row (the
-    invariant scd2_init establishes and this preserves -- tested)."""
-    t = F.lit(ts).cast("timestamp_ntz")
-    changed_keys = feed.filter(
-        F.col("change_type").isin("update", "delete", "insert")
-    ).select(F.col(key).alias("_ck")).distinct()
-    flip = F.col("_ck").isNotNull() & F.col("is_current")
-    cols = []
-    for c in history.columns:
-        if c == "valid_to":
-            cols.append(F.when(flip, t).otherwise(F.col(c)).alias(c))
-        elif c == "is_current":
-            cols.append(
-                F.when(flip, F.lit(False)).otherwise(F.col(c)).alias(c)
-            )
-        else:
-            cols.append(F.col(c))
-    closed = history.join(
-        changed_keys, history[key].eqNullSafe(F.col("_ck")), "left"
-    ).select(*cols)
-    opened_src = feed.filter(
-        F.col("change_type").isin("insert", "update")
-    ).select("after.*")
-    opened = scd2_init(opened_src, key, ts)
-    return closed.unionByName(opened)
-
-
-def scd2_as_of(history: DataFrame, ts) -> DataFrame:
-    """Rows valid at instant ``ts``: valid_from <= ts < valid_to (open
-    rows have NULL valid_to). Pure filter -- partition/cluster history
-    by valid_from and this prunes."""
-    t = F.lit(ts).cast("timestamp_ntz")
-    return history.filter(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    )
-
-
-def table_stats(table_dir: str, version: int | None = None) -> dict:
-    """Metadata-only table statistics from the snapshot's stats
-    manifest -- no Spark session, no data scan, no footer reads:
-    {n_files, n_rows, columns: {col: [min, max]}} for the committed
-    (or pinned) version. ``n_rows`` is None on manifests written
-    before row counts were recorded; column bounds fold per-file
-    bounds and ignore all-null files. The COUNT(*)/MIN/MAX answers a
-    catalog serves from metadata at any scale -- the same footer walk
-    the manifest already paid at commit time, never again."""
-    v = current_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"{table_dir} has no committed version")
-    snap = os.path.join(table_dir, f"v={v}")
-    manifest = read_stats_manifest(snap)
-    if manifest is None:
-        raise FileNotFoundError(
-            f"{snap} carries no stats manifest (commit with "
-            "stats_cols=[...] or write_stats_manifest)"
-        )
-    n_rows: int | None = 0
-    cols: dict[str, list] = {}
-    for _fname, cs in manifest.items():
-        nr = cs.get("__nrows__")
-        if nr is None:
-            n_rows = None
-        elif n_rows is not None:
-            n_rows += nr[0]
-        for col, bounds in cs.items():
-            if col == "__nrows__" or bounds[0] is None:
-                continue
-            cur = cols.get(col)
-            if cur is None:
-                cols[col] = [bounds[0], bounds[1]]
-            else:
-                cur[0] = min(cur[0], bounds[0])
-                cur[1] = max(cur[1], bounds[1])
-    return {
-        "n_files": len(manifest),
-        "n_rows": n_rows,
-        "columns": cols,
-    }
-
-
-def scd2_join(
-    facts: DataFrame,
-    history: DataFrame,
-    key: str,
-    fact_ts: str,
-    how: str = "left",
-) -> DataFrame:
-    """Point-in-time fact-to-dimension join: each fact row picks the
-    history version valid AT its own timestamp (valid_from <= ts <
-    valid_to, open rows unbounded) -- the lookup that makes SCD2 worth
-    storing, and the correctness difference between 'the customer's
-    segment TODAY' and 'the segment when the order happened'.
-
-    Scale shape: ONE equi-join on the dimension key; the validity
-    interval is a join-level filter, not a range cross join -- a key's
-    candidate set is its handful of history versions, so the join
-    stays hash/broadcast-shaped no matter how long the history grows.
-    Facts with no valid version (or NULL keys) keep NULL dimension
-    columns under the default left join.
-
-    Fact and non-key dimension column names must be disjoint (a
-    shared audit-ish column would otherwise produce DUPLICATE
-    output column names, breaking downstream selects ambiguously far
-    from the cause) -- collisions raise here, at the join; rename or
-    drop on the dimension side first."""
-    clash = sorted(
-        (set(history.columns) - {key}) & set(facts.columns)
-    )
-    if clash:
-        raise ValueError(
-            f"scd2_join: column name collision between facts and "
-            f"history (non-key): {clash} -- alias or drop them on one "
-            f"side (e.g. history.withColumnRenamed) before joining"
-        )
-    ts = F.col(f"_f.{fact_ts}")
-    cond = (
-        (F.col(f"_f.{key}") == F.col(f"_h.{key}"))
-        & (F.col("_h.valid_from") <= ts.cast("timestamp_ntz"))
-        & (
-            F.col("_h.valid_to").isNull()
-            | (F.col("_h.valid_to") > ts.cast("timestamp_ntz"))
-        )
-    )
-    dim_cols = [
-        c for c in history.columns if c != key
-    ]
-    return (
-        facts.alias("_f")
-        .join(history.alias("_h"), cond, how)
-        .select(
-            *[F.col(f"_f.{c}") for c in facts.columns],
-            *[F.col(f"_h.{c}").alias(c) for c in dim_cols],
-        )
-    )
-
-
 def _collect_metrics_count(df: DataFrame, name: str) -> int:
     """Number of CollectMetrics nodes named ``name`` in ``df``'s
     OPTIMIZED logical plan -- the enforcement walk for _cow_rewrite's
@@ -1550,7 +1364,7 @@ def _cow_rewrite(
     eq=None,
     changed_cols: "set | frozenset" = frozenset(),
 ) -> dict:
-    """Shared copy-on-write core for delete_where / update_where:
+    """Shared copy-on-write core for delete_where / apply_changes:
     stats-prune the affected files, hard-link the rest into the next
     snapshot, replace the affected files with ``rewrite(aff, pred)``,
     rebuild manifests, publish under the commit protocol. See
@@ -1792,132 +1606,3 @@ def delete_where(
         "rows_deleted",
         eq=eq,
     )
-
-
-def update_where(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    lo=None,
-    hi=None,
-    set_exprs: "dict[str, Column] | None" = None,
-    expected: int | str | None = "auto",
-    eq=None,
-) -> dict:
-    """Copy-on-write UPDATE: SET the ``set_exprs`` columns (name ->
-    Column expression, evaluated against the current row) on rows
-    where ``col`` BETWEEN lo AND hi, sharing delete_where's pruned
-    link-or-rewrite core -- only stats-intersecting files rewrite,
-    everything else hard-links; same manifests, concurrency, NULL and
-    zero-match semantics. The targeted-correction shape (backfill a
-    bad day's rate, redact a span of user rows to tombstone values)
-    at file-touch cost proportional to the predicate's spread, not
-    the table.
-
-    ``set_exprs`` may only assign EXISTING columns (a schema change is
-    a different operation -- every linked file must stay
-    schema-identical to the rewritten ones).
-
-    ``eq=value`` (mutually exclusive with lo/hi) updates by EQUALITY
-    with the same range+bloom double pruning as delete_where(eq=) --
-    the tombstone-redaction twin of equality erasure (SET the PII
-    columns to sentinels for ONE user id, touching only the files
-    whose bloom admits the key).
-
-    Returns {"version", "files_linked", "files_rewritten",
-    "rows_updated"} -- version None when nothing matched."""
-    if not set_exprs:
-        raise ValueError("set_exprs must assign at least one column")
-
-    def rewrite(aff: DataFrame, pred):
-        missing = [c for c in set_exprs if c not in aff.columns]
-        if missing:
-            raise ValueError(
-                f"update_where may only set existing columns; "
-                f"missing: {missing}"
-            )
-        cond = F.coalesce(pred, F.lit(False))
-        return aff.withColumns(
-            {
-                name: F.when(cond, expr).otherwise(F.col(name))
-                for name, expr in set_exprs.items()
-            }
-        )
-
-    return _cow_rewrite(
-        spark, table_dir, col, lo, hi, rewrite, expected,
-        "rows_updated", eq=eq,
-        # SET columns' values may change in rewritten files, so the
-        # bloom splice must not cap their bitmap sizes by the old
-        # entries' distinct bounds (untouched columns keep the cap)
-        changed_cols=frozenset(set_exprs),
-    )
-
-
-def forget_value(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    value,
-) -> dict:
-    """Right-to-be-forgotten erasure, end to end: COW-delete every row
-    where ``col`` equals ``value`` (delete_where's eq mode -- bloom-
-    pruned where a manifest exists), then vacuum ALL history (keep=1),
-    because a deletion that older snapshots can still time-travel to
-    is not an erasure. Returns the delete report plus
-    {"versions_purged": [...], "verified": bool} -- ``verified`` is
-    verify_absent's actual post-purge scan, not an assumption.
-
-    This is deliberately the one operation that breaks time travel:
-    every prior version dies, exactly like Delta's VACUUM-after-DELETE
-    erasure recipe. Callers wanting auditability should export
-    commit_meta / table_stats BEFORE calling. NULL never equals a
-    value; pass each value separately for multi-subject requests
-    (each is one COW commit -- batch subjects upstream when erasing
-    many at once)."""
-    if value is None:
-        raise ValueError("NULL never equals a value; nothing to forget")
-    report = delete_where(spark, table_dir, col, eq=value)
-    purged = vacuum(table_dir, keep=1)
-    report["versions_purged"] = purged
-    report["verified"] = verify_absent(spark, table_dir, col, value)
-    return report
-
-
-def verify_absent(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    value,
-) -> bool:
-    """Certify that NO retained snapshot of the table contains rows
-    where ``col`` equals ``value`` -- the erasure audit regulators ask
-    for, as an actual scan rather than a promise. Every version still
-    on disk (committed or not) is read and counted; manifests are NOT
-    trusted for the certification (a bloom can only prove absence
-    per-file, and the point of an audit is independence from the
-    structures the delete itself maintained). Cost: one filtered scan
-    per retained snapshot -- run it after vacuum, when one snapshot
-    remains.
-
-    Degenerate snapshots certify vacuously instead of crashing the
-    audit (forget_value would otherwise raise AFTER
-    the erasure already ran and lose its report): a claimed-but-empty
-    dir (writer crashed mid-write) holds no data files and therefore
-    no rows; a pre-schema-evolution snapshot that never HAD ``col``
-    cannot hold a value of it."""
-    for v in versions(table_dir):
-        snap = os.path.join(table_dir, f"v={v}")
-        has_data = any(
-            name.endswith(".parquet")
-            for _root, _dirs, files in os.walk(snap)
-            for name in files
-        )
-        if not has_data:
-            continue  # orphaned claim: zero rows by construction
-        df = read_parquet(spark, snap)
-        if col not in df.columns:
-            continue  # column never existed in this snapshot
-        if df.filter(F.col(col) == F.lit(value)).count() > 0:
-            return False
-    return True

@@ -1,6 +1,4 @@
 """Streaming operators (SURVEY.md §2.5 W1-W6): windowed aggregation
 builders shared between batch and streaming frames, pipeline wiring
-(file/Kafka source -> enrich -> multi-sink fan-out), stateful dedup /
-sessions / running totals, stream-stream joins, exactly-once MERGE and
-maintained-view/sketch sinks over the versioned table format, and
-continuous rollups."""
+(file/Kafka source -> enrich -> multi-sink fan-out), watermark-scoped
+dedup, and stream-stream interval joins."""

@@ -293,42 +293,3 @@ def stream_stream_interval_join(
         & (rw[right_ts] <= lw[left_ts] + interval_expr(within))
     )
     return lw.join(rw, cond, how)
-
-
-def exactly_once_append(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    delay: str,
-    path: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """Exactly-once keyed append sink: watermark-scoped dedup UPSTREAM
-    (dropDuplicatesWithinWatermark via stateful.dedup_within_watermark
-    -- duplicate deliveries from an at-least-once source collapse while
-    their key's state lives) + an IDEMPOTENT per-batch write downstream:
-    each micro-batch lands in its own ``batch_id=N`` hive-partition
-    directory with mode=overwrite, so a batch replayed after a failure
-    rewrites the same directory instead of appending a second copy.
-    Dedup handles source-side duplicates; the keyed overwrite handles
-    sink-side replays -- together, effectively-exactly-once on a plain
-    parquet lake, no transactional table format required. Read the sink
-    back with ``spark.read.parquet(path)`` (batch_id surfaces as a
-    partition column; drop it for consumer-facing views)."""
-    from bigdata_storage_and_proccess_job_data_spark.streaming.stateful import (
-        dedup_within_watermark,
-    )
-
-    deduped = dedup_within_watermark(df, keys, ts_col, delay)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{path}/batch_id={batch_id}"
-        )
-
-    return _start(
-        deduped.writeStream.foreachBatch(write_batch),
-        checkpoint_dir,
-        trigger_available_now,
-    )

@@ -1,132 +1,16 @@
-"""Custom stateful streaming operators via applyInPandasWithState.
+"""Stateful streaming dedup.
 
-The reference has no arbitrary stateful ops and no streaming dedup
-(SURVEY.md §2.5); these fill that gap with the Arrow-batched state API:
-
-- dedup_stream: exactly-once-per-key emission across micro-batches with
-  a processing-time TTL (bounded state -- unbounded keyed state is what
-  kills long-running streams at scale; dropDuplicates on a stream keeps
-  state forever unless watermark-scoped).
-- running_totals_stream: per-key cumulative counters emitted every
-  micro-batch (the stateful generalization of the reference's windowed
-  counts).
-
-State is per group key, stored as a tiny tuple; Arrow moves batches, so
-the Python hop is amortized. At 100 TB of stream history the state
-store only holds live keys x state-tuple, not data.
+The reference has no streaming dedup (SURVEY.md §2.5); plain
+dropDuplicates on a stream keeps its key state forever. The watermark-
+scoped form here evicts state as event time advances, so the state store
+holds live keys only, not stream history.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from bigdata_storage_and_proccess_job_data_spark.functions.eventtime import ensure_ltz
-
-
-def dedup_stream(
-    df: DataFrame, key_col: str, ttl_ms: int | None = 3_600_000
-) -> DataFrame:
-    """Emit only the FIRST row per key across the whole stream (state
-    remembers seen keys; optional TTL evicts state after ``ttl_ms`` of
-    processing-time inactivity, after which a key may be emitted again).
-
-    Output schema: (key, first_seen_count) -- count is how many rows
-    arrived in the batch that first contained the key (diagnostic).
-
-    NOTE: pass ``ttl_ms=None`` for bounded replays (Trigger.AvailableNow):
-    with ProcessingTimeTimeout, live state keeps the query scheduling
-    timeout-check micro-batches, so an availableNow query never stops.
-    TTL is for always-on streams where eviction bounds the state store.
-    """
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("first_seen_count", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("seen", LongType())])
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState  # noqa: F821
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        if not state.exists and n > 0:
-            state.update((1,))
-            if ttl_ms:
-                state.setTimeoutDuration(ttl_ms)
-            yield pd.DataFrame({"key": [str(key[0])], "first_seen_count": [n]})
-        else:
-            if ttl_ms and state.exists:
-                state.setTimeoutDuration(ttl_ms)
-
-    grouped = df.withColumn("key", df[key_col].cast("string")).groupBy("key")
-    return grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
-    )
-
-
-def running_totals_stream(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """Cumulative per-key (count, sum) emitted each micro-batch the key
-    appears in -- arbitrary stateful aggregation beyond windowed aggs."""
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("total_count", LongType()),
-            StructField("total_sum", StringType()),  # stringified double
-        ]
-    )
-    state_schema = StructType(
-        [StructField("cnt", LongType()), StructField("sm", StringType())]
-    )
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState  # noqa: F821
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        cnt, sm = (state.get if state.exists else (0, "0.0"))
-        sm = float(sm)
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-            sm += float(pdf[value_col].sum())
-        if n:
-            cnt += n
-            state.update((cnt, repr(sm)))
-            yield pd.DataFrame(
-                {
-                    "key": [str(key[0])],
-                    "total_count": [cnt],
-                    "total_sum": [repr(sm)],
-                }
-            )
-
-    grouped = df.withColumn("key", df[key_col].cast("string")).groupBy("key")
-    return grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
 
 
 def dedup_within_watermark(
@@ -134,230 +18,10 @@ def dedup_within_watermark(
 ) -> DataFrame:
     """Built-in watermark-scoped streaming dedup: one row per key within
     the watermark horizon, state evicted as event time advances (the
-    declarative counterpart of dedup_stream's processing-time TTL --
-    prefer this when an event-time column exists, since eviction then
-    follows the data clock, not the wall clock; plain dropDuplicates on
-    a stream retains state forever)."""
+    eviction follows the data clock, not the wall clock; plain
+    dropDuplicates on a stream retains state forever)."""
     return (
         ensure_ltz(df, ts_col)
         .withWatermark(ts_col, delay)
         .dropDuplicatesWithinWatermark(keys)
-    )
-
-
-def running_totals_tws(
-    df: DataFrame, key_col: str, value_col: str
-) -> DataFrame:
-    """Per-key cumulative (count, total) via transformWithStateInPandas
-    -- Spark 4's arbitrary-state API, the successor to
-    applyInPandasWithState used by running_totals_stream (kept side by
-    side deliberately: same semantics, both APIs covered). Differences
-    that matter at scale: typed state handles (ValueState/ListState/
-    MapState) instead of one opaque tuple, native state TTL, timers for
-    event/processing-time callbacks, and the RocksDB state store
-    requirement (set spark.sql.streaming.stateStore.providerClass to
-    RocksDBStateStoreProvider -- virtually free locally, and what you
-    would run at 100 TB anyway for incremental checkpointing).
-
-    Output per micro-batch (update mode): (key, count, total) with the
-    running values after that batch.
-
-    Environment gate: the TWS state-server protocol needs
-    ``google.protobuf`` (shipped with real Spark deployments; absent in
-    this sandbox), so like the Kafka builder this raises a clear
-    ImportError up front instead of crashing the Python driver worker
-    mid-query. Semantics are mirrored by running_totals_stream, which
-    the cross-batch tests pin; the TWS path gets the same test the
-    moment protobuf is present.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf runtime for "
-            "pyspark.sql.streaming.proto.StateMessage_pb2 (generated "
-            "with Protobuf 6.33.0, which enforces a matching runtime): "
-            "pip install 'protobuf>=6.33'. Absent in this sandbox; "
-            "running_totals_stream provides the same semantics on "
-            "applyInPandasWithState and carries the cross-batch tests"
-        ) from e
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import DoubleType
-
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("count", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("count", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(
-            self, key, rows, timer_values
-        ) -> Iterator["pd.DataFrame"]:
-            count, total = (
-                self._agg.get() if self._agg.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                count += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._agg.update((count, float(total)))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "count": [count], "total": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def session_stream(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_ms: int = 1_800_000,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Custom sessionization with EVENT-TIME state timeouts: per key,
-    events within ``gap_ms`` of each other extend the open session;
-    the session EMITS when the watermark passes its last event +
-    gap_ms (state.hasTimedOut -- the timeout-driven emission pattern
-    the other stateful ops here don't exercise). Output one row per
-    CLOSED session: (key, session_start, session_end, n_events) with
-    epoch-ms timestamps.
-
-    vs session_window aggregation (streaming/windows.py): the built-in
-    gives per-session built-in aggregates declaratively; this is the
-    escape hatch for session logic the built-in can't express (custom
-    state transitions, early triggers, per-event sequences), at the
-    cost of an Arrow hop per batch. vs batch sessionize
-    (operators/funnel.py): same gap rule, streaming state instead of a
-    sort.
-
-    Bounded state: one (start, end, n) tuple per OPEN session key;
-    eviction is driven by the event-time watermark, so state size
-    follows live keys, not history. Late events beyond the watermark
-    are dropped by the watermark itself (the standard contract).
-    Within a micro-batch, events gap-split exactly (sorted timestamps);
-    every segment but the newest emits immediately as closed, the
-    newest waits on its timeout. Out-of-order arrivals WITHIN the
-    watermark merge into the open session as an interval (state keeps
-    a summary, not events), so a straggler can extend but never
-    retroactively split an open session -- the documented
-    approximation interval-summary state makes."""
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("session_start", LongType()),
-            StructField("session_end", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start_ms", LongType()),
-            StructField("end_ms", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState  # noqa: F821
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        def emit(segs):
-            return pd.DataFrame(
-                {
-                    "key": [str(key[0])] * len(segs),
-                    "session_start": [s[0] for s in segs],
-                    "session_end": [s[1] for s in segs],
-                    "n_events": [s[2] for s in segs],
-                }
-            )
-
-        if state.hasTimedOut:
-            start_ms, end_ms, n = state.get
-            state.remove()
-            yield emit([(start_ms, end_ms, n)])
-            return
-        ts_all: list[int] = []
-        for pdf in pdfs:
-            if len(pdf):
-                ts_all.extend(int(x) for x in pdf["_ts_ms"])
-        if not ts_all:
-            return
-        ts_all.sort()
-        # gap-split the batch into session segments (start, end, n)
-        segs: list[tuple[int, int, int]] = []
-        s = e = ts_all[0]
-        n = 1
-        for x in ts_all[1:]:
-            if x - e > gap_ms:
-                segs.append((s, e, n))
-                s, e, n = x, x, 1
-            else:
-                e = x
-                n += 1
-        segs.append((s, e, n))
-        # fold the OPEN session (an interval summary) in, then
-        # interval-merge anything within gap of each other
-        if state.exists:
-            segs.append(state.get)
-            segs.sort()
-            merged: list[tuple[int, int, int]] = []
-            for seg in segs:
-                if merged and seg[0] - merged[-1][1] <= gap_ms:
-                    last = merged[-1]
-                    merged[-1] = (
-                        last[0],
-                        max(last[1], seg[1]),
-                        last[2] + seg[2],
-                    )
-                else:
-                    merged.append(seg)
-            segs = merged
-        # every segment but the newest is closed by construction;
-        # the newest stays open pending its event-time timeout
-        closed, open_seg = segs[:-1], segs[-1]
-        state.update(open_seg)
-        state.setTimeoutTimestamp(open_seg[1] + gap_ms)
-        if closed:
-            yield emit(closed)
-
-    src = ensure_ltz(df, ts_col).withWatermark(ts_col, watermark)
-    grouped = (
-        src.withColumn("key", src[key_col].cast("string"))
-        .withColumn(
-            "_ts_ms",
-            (src[ts_col].cast("double") * 1000).cast("long"),
-        )
-        .groupBy("key")
-    )
-    return grouped.applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )

@@ -130,67 +130,3 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark, sf_dir):
         F.col("o_orderpriority") == "1-URGENT"
     ).select("o_orderkey")
     assert rows == li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-
-
-def test_cbo_column_stats_flip_join_strategy(spark, sf_dir, tmp_path):
-    """Stats-driven planning: a dim table BIGGER on disk than the
-    broadcast threshold, filtered down to a handful of rows, shuffle-
-    joins without statistics (size-based estimate = file size) but
-    BROADCASTS once ANALYZE column stats + CBO let FilterEstimation see
-    the true post-filter cardinality. AQE is off for the pin so the
-    compile-time decision (what a 100 TB planner must get right before
-    runtime) is what's asserted."""
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.catalog import (
-        analyze_table,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    spark.sql("DROP TABLE IF EXISTS cbo_dim")
-    prev_wh = spark.conf.get("spark.sql.warehouse.dir", None)
-    orders.select("o_orderkey", "o_totalprice", "o_orderpriority").write.mode(
-        "overwrite"
-    ).saveAsTable("cbo_dim")
-
-    keys = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.cbo.enabled": "true",
-        "spark.sql.cbo.joinReorder.enabled": "true",
-        # threshold between the dim's ~full file size and its filtered
-        # row estimate: sf0.001 orders parquet is ~60-90 KiB on disk,
-        # the filter keeps ~5 rows (~a few hundred bytes estimated)
-        "spark.sql.autoBroadcastJoinThreshold": "8192",
-    }
-    prev = {k: spark.conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        def plan():
-            dim = spark.table("cbo_dim").filter(F.col("o_orderkey") < 40)
-            j = lineitem.join(
-                dim, lineitem.l_orderkey == dim.o_orderkey
-            ).groupBy("o_orderpriority").agg(F.sum("l_quantity").alias("q"))
-            return j._jdf.queryExecution().sparkPlan().toString()
-
-        before = plan()
-        assert "SortMergeJoin" in before or "ShuffledHashJoin" in before, before
-        assert "BroadcastHashJoin" not in before, before
-
-        analyze_table(spark, "cbo_dim", ["o_orderkey"])
-        after = plan()
-        assert "BroadcastHashJoin" in after, after
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
-        spark.sql("DROP TABLE IF EXISTS cbo_dim")
-        if prev_wh is None:
-            pass  # leave the session warehouse as-is
-
-    with pytest.raises(ValueError, match="suspicious table"):
-        analyze_table(spark, "x; drop table y")
-    with pytest.raises(ValueError, match="suspicious column"):
-        analyze_table(spark, "cbo_dim", ["a, b; --"])

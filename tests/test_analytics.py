@@ -331,59 +331,6 @@ def test_hll_sketch_incremental_distinct(spark, oracle_sf_dir, tmp_path):
     assert abs(g.distinct_estimate - total) <= max(2, 0.05 * total)
 
 
-def test_variant_extraction_parity_and_drift(spark, oracle_sf_dir, tmp_path):
-    """VARIANT semi-structured columns: (1) typed JSONPath extraction
-    over the events props column matches DuckDB's JSON operators
-    value-for-value, (2) the binary encoding round-trips through
-    parquet, (3) two producer generations with different shapes coexist
-    in one column -- new fields are preserved (where from_json's fixed
-    schema would drop them) and absent paths are NULL, never errors."""
-    from bigdata_storage_and_proccess_job_data_spark.functions import (
-        semistructured as sv,
-    )
-    from tests.parity import compare, duckdb_connect
-
-    events = load_table(spark, oracle_sf_dir, "events")
-    got = events.select(
-        "event_id",
-        sv.variant_field(sv.to_variant("props"), "$.k", "long").alias("k"),
-    )
-    sql = """
-        SELECT event_id, CAST(props->>'$.k' AS BIGINT) AS k FROM events
-    """
-    errs = compare(got, duckdb_connect(oracle_sf_dir), sql)
-    assert not errs, errs[:5]
-
-    # parquet roundtrip + schema drift across producer generations
-    drifted = spark.createDataFrame(
-        [
-            (1, '{"k": 1, "old_style": true}'),
-            (2, '{"k": 2, "meta": {"region": "eu", "tags": ["a", "b"]}}'),
-        ],
-        "id LONG, js STRING",
-    ).select("id", sv.to_variant("js").alias("v"))
-    path = str(tmp_path / "variants")
-    drifted.write.parquet(path)
-    back = spark.read.parquet(path)
-    assert back.schema["v"].dataType.typeName() == "variant"
-    rows = {
-        r.id: r
-        for r in back.select(
-            "id",
-            sv.variant_field("v", "$.k", "long").alias("k"),
-            sv.variant_field("v", "$.meta.region").alias("region"),
-            sv.variant_field("v", "$.meta.tags[1]").alias("tag1"),
-            sv.variant_field("v", "$.old_style", "boolean").alias("old"),
-            sv.variant_schema("v").alias("shape"),
-        ).collect()
-    }
-    assert rows[1].k == 1 and rows[1].old is True
-    assert rows[1].region is None and rows[1].tag1 is None  # absent: NULL
-    assert rows[2].region == "eu" and rows[2].tag1 == "b"
-    assert rows[2].old is None
-    assert "meta" in rows[2].shape and "old_style" in rows[1].shape
-
-
 def test_cms_sketch_bounds_and_mergeability(spark, oracle_sf_dir, tmp_path):
     """Count-min frequency sketch: (1) every estimate >= the true count
     (one-sided), (2) on the Zipf company key the hot key's estimate is
@@ -459,63 +406,6 @@ def test_cms_sketch_null_keys_counted(spark):
     }
     assert est["a"] >= 5 and est["b"] >= 2
     assert est[None] >= 7  # NULLs counted as one shared key
-
-
-def test_normalize_unicode_parity_and_plan(spark, oracle_sf_dir):
-    """NFC normalization: composed == normalized(decomposed), DuckDB's
-    nfc_normalize agrees value-for-value (inline frame + the whole
-    documents table), and the plan stays on the Arrow path
-    (ArrowEvalPython, never BatchEvalPython)."""
-    from bigdata_storage_and_proccess_job_data_spark.functions import text
-    from tests.parity import compare, duckdb_connect
-
-    rows = [
-        (1, "café"),              # composed
-        (2, "café"),             # decomposed -> same after NFC
-        (3, "ＡBC Å"),        # fullwidth A, angstrom (NFC keeps)
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, "id LONG, s STRING")
-    out = {r.id: r.n for r in df.select(
-        "id", text.normalize_unicode("s").alias("n")).collect()}
-    assert out[1] == out[2] == "café"
-    assert out[4] == ""
-
-    con = duckdb_connect(oracle_sf_dir)
-    vals = ", ".join(f"({i}, '{s}')" for i, s in rows if "'" not in s)
-    errs = compare(
-        df.select("id", text.normalize_unicode("s").alias("n")),
-        con,
-        f"SELECT id, nfc_normalize(s) AS n FROM (VALUES {vals}) t(id, s)",
-    )
-    assert not errs, errs
-
-    docs_norm = load_table(spark, oracle_sf_dir, "documents").select(
-        "doc_id", text.normalize_unicode("text").alias("n")
-    )
-    errs2 = compare(
-        docs_norm, con, "SELECT doc_id, nfc_normalize(text) AS n FROM documents"
-    )
-    assert not errs2, errs2[:3]
-
-    plan = docs_norm._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
-
-    import pytest
-
-    with pytest.raises(ValueError, match="normalization form"):
-        text.normalize_unicode("s", form="NFX")
-
-
-def test_normalize_unicode_udf_memoized():
-    """VERDICT r6 #5: repeated normalize_unicode calls must reuse the
-    SAME registered pandas_udf object per form -- no per-call Arrow
-    serializer re-creation in repeated pipeline use."""
-    from bigdata_storage_and_proccess_job_data_spark.functions.text import _norm_udf
-
-    assert _norm_udf("NFC") is _norm_udf("NFC")
-    assert _norm_udf("NFKD") is _norm_udf("NFKD")
-    assert _norm_udf("NFC") is not _norm_udf("NFD")
 
 
 def test_argmin_argmax_and_twap_parity(spark, oracle_sf_dir):
@@ -871,77 +761,6 @@ def test_kmv_set_ops_overlap_math(spark):
     assert row.jaccard == 0.0 and row.intersection_estimate == 0.0
     assert row.left_only_estimate == 0.0
     assert row.union_estimate == round(row.right_only_estimate)
-
-
-def test_script_profile_hand_pins_and_parity(spark, oracle_sf_dir):
-    """Unicode script mix: (1) hand-pinned fractions on controlled
-    multilingual strings incl. the dominant-script tiebreak and the
-    empty-text degenerate; (2) DuckDB replays the Latin fraction and
-    char counts on real documents via the RE2 script classes."""
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.functions import text
-    from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
-        sql_round,
-        stable_round,
-    )
-    from tests.parity import compare, duckdb_connect
-
-    rows = [
-        (1, "hello мир"),          # 5 latin + 3 cyrillic of 8
-        (2, "Ελληνικά κείμενο"),   # all greek
-        (3, "日本語 テキスト 한글"),  # all cjk (han+katakana+hangul)
-        (4, "مرحبا"),              # all arabic
-        (5, "12345 !!"),           # no script chars at all
-        (6, "   "),                # whitespace-only
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    got = {
-        r.id: r.p
-        for r in df.select(
-            "id", text.script_profile("text").alias("p")
-        ).collect()
-    }
-    assert got[1].n_chars == 8
-    assert abs(got[1].latin_frac - 5 / 8) < 1e-12
-    assert abs(got[1].cyrillic_frac - 3 / 8) < 1e-12
-    assert got[1].dominant == "latin"
-    assert got[2].dominant == "greek" and got[2].greek_frac == 1.0
-    assert got[3].dominant == "cjk" and got[3].cjk_frac == 1.0
-    assert got[4].dominant == "arabic" and got[4].arabic_frac == 1.0
-    assert got[5].dominant == "other" and got[5].latin_frac == 0.0
-    assert got[6].n_chars == 0 and got[6].dominant == "other"
-
-    docs = load_table(spark, oracle_sf_dir, "documents")
-    out = docs.select(
-        "doc_id", text.script_profile("text").alias("p")
-    ).select(
-        "doc_id",
-        F.col("p.n_chars").alias("n_chars"),
-        stable_round(F.col("p.latin_frac"), 6).alias("latin_frac"),
-        F.col("p.dominant").alias("dominant"),
-    )
-    sql = f"""
-        WITH b AS (
-          SELECT doc_id,
-                 regexp_replace(text, '\\s', '', 'g') AS body
-          FROM documents
-        ),
-        m AS (
-          SELECT doc_id,
-                 length(body) AS n_chars,
-                 length(body) - length(
-                   regexp_replace(body, '\\p{{Latin}}', '', 'g')
-                 ) AS n_latin
-          FROM b
-        )
-        SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-               {sql_round('n_latin * 1.0 / greatest(n_chars, 1)', 6)}
-                 AS latin_frac,
-               CASE WHEN n_latin > 0 THEN 'latin' ELSE 'other' END
-                 AS dominant
-        FROM m
-    """
-    assert compare(out, duckdb_connect(oracle_sf_dir), sql) == []
 
 
 def test_rank_family_window_parity(spark, oracle_sf_dir):

@@ -206,3 +206,23 @@ def test_stream_batch_share_enrichment(spark, tmp_path):
         ).drop("processed_at").collect()
     }
     assert got == batch
+
+
+def test_epoch_s_to_timestamp_keeps_fraction_and_session_tz_free(spark):
+    """F5 (spark_streaming_v2.py:71-74): epoch seconds map to the same
+    instant whatever the session time zone -- the fraction survives,
+    and the repeated 01:30 of the 2023 America/New_York fall-back
+    (1699165800, the second one) is not read back an hour early."""
+    from bigdata_storage_and_proccess_job_data_spark.functions import cleaning
+
+    df = spark.createDataFrame(
+        [(0, 1700000000.75), (1, 1699165800.0)], "i int, s double"
+    )
+    us = F.unix_micros(cleaning.epoch_s_to_timestamp("s")).alias("us")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        got = [r.us for r in df.orderBy("i").select(us).collect()]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert got == [1_700_000_000_750_000, 1_699_165_800_000_000]

@@ -169,29 +169,6 @@ def _scan_rows_read(df) -> int:
     return total
 
 
-def test_clustered_write_skips_row_groups(spark, sf_dir, tmp_path):
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_extendedprice"
-    )
-    plain = str(tmp_path / "plain")
-    clustered = str(tmp_path / "clustered")
-    # force multiple row groups per layout: small pages via many files
-    lineitem.write.parquet(plain)
-    lake.write_clustered(lineitem, clustered, ["l_partkey"], n_files=16)
-
-    lo, hi = 100, 120
-    pred = (F.col("l_partkey") >= lo) & (F.col("l_partkey") <= hi)
-    want = lineitem.filter(pred).count()
-
-    read_plain = _scan_rows_read(spark.read.parquet(plain).filter(pred))
-    read_clustered = _scan_rows_read(spark.read.parquet(clustered).filter(pred))
-
-    assert spark.read.parquet(clustered).filter(pred).count() == want
-    # plain layout: the narrow range is scattered -> scan reads ~everything;
-    # clustered: all matches live in one file's tight row groups
-    assert read_clustered * 4 <= read_plain, (read_clustered, read_plain)
-
-
 def test_zorder_skips_on_both_dims(spark, sf_dir, tmp_path):
     """Linear clustering on (a, b) skips on a but not b; Z-order on
     (a, b) skips on either dimension alone."""
@@ -202,7 +179,9 @@ def test_zorder_skips_on_both_dims(spark, sf_dir, tmp_path):
     )
     linear = str(tmp_path / "linear")
     zpath = str(tmp_path / "zorder")
-    lake.write_clustered(li, linear, ["l_partkey", "l_suppkey"], n_files=16)
+    li.repartitionByRange(16, "l_partkey", "l_suppkey").sortWithinPartitions(
+        "l_partkey", "l_suppkey"
+    ).write.parquet(linear)
     zorder.write_zordered(li, zpath, ["l_partkey", "l_suppkey"], n_files=16)
 
     hi = li.agg(F.max("l_suppkey")).first()[0]
@@ -244,9 +223,10 @@ def test_zorder_three_dims_and_timestamp(spark, sf_dir, tmp_path):
     zorder.write_zordered(
         li, zpath, ["l_partkey", "l_suppkey", "l_shipdate"], n_files=32
     )
-    lake.write_clustered(
-        li, linear, ["l_partkey", "l_suppkey", "l_shipdate"], n_files=32
-    )
+    linear_cols = ["l_partkey", "l_suppkey", "l_shipdate"]
+    li.repartitionByRange(32, *linear_cols).sortWithinPartitions(
+        *linear_cols
+    ).write.parquet(linear)
 
     lo, hi = li.agg(F.min("l_shipdate"), F.max("l_shipdate")).first()
     cutoff = lo + (hi - lo) * 0.08
@@ -290,128 +270,12 @@ def test_zorder_degenerate_inputs(spark, tmp_path):
     assert got.count() == 100 and got.filter(F.col("a").isNull()).count() == 100
 
 
-def test_csv_ingest_explicit_schema_and_pushdown(spark, sf_dir, tmp_path):
-    nation = load_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "csv")
-    nation.write.option("header", "true").csv(path)
-
-    df = lake.read_csv_lake(spark, path, nation.schema)
-    assert df.count() == nation.count()
-    assert df.schema == nation.schema
-
-    filtered = df.filter(F.col("n_regionkey") == 2).select("n_name")
-    got = {r.n_name for r in filtered.collect()}
-    want = {r.n_name for r in nation.filter(F.col("n_regionkey") == 2).collect()}
-    assert got == want
-    # filter is pushed to the CSV scan (row-level pushdown; CSV has no
-    # row-group stats, but the scan still applies it before materializing)
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "n_regionkey" in plan.split(
-        "PushedFilters"
-    )[1].split("]")[0]
-
-
-def test_compact_small_files(spark, sf_dir, tmp_path):
-    """4000-file disease -> a handful of target-sized files, committed as
-    a versioned snapshot with identical content."""
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
-
-    src = str(tmp_path / "fragmented")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    orders.repartition(64).write.parquet(src)  # 64 tiny files
-    import glob
-
-    assert len(glob.glob(f"{src}/*.parquet")) >= 32
-
-    table = str(tmp_path / "compacted")
-    before, after, v = lake.compact_small_files(
-        spark, src, table, target_file_bytes=512 * 1024
-    )
-    assert before >= 32 and after < before and v == 1
-
-    got = versioned.read_version(spark, table)
-    import pathlib
-
-    n_files = len(list(pathlib.Path(table, "v=1").glob("*.parquet")))
-    assert n_files == after
-    assert got.count() == orders.count()
-    assert {r.o_orderkey for r in got.collect()} == {
-        r.o_orderkey for r in orders.collect()
-    }
-
-
-def test_read_resilient_skips_corrupt_files(spark, sf_dir, tmp_path):
-    """A half-written/garbage file in the dir must not kill the read --
-    and the strict read must still fail loudly."""
-    import pytest
-
-    path = str(tmp_path / "lake_with_garbage")
-    nation = load_table(spark, sf_dir, "nation")
-    nation.coalesce(1).write.parquet(path)
-    with open(f"{path}/part-corrupt.parquet", "wb") as f:
-        f.write(b"PAR1 this is not really parquet")
-
-    with pytest.raises(Exception):
-        spark.read.parquet(path).count()  # strict read fails
-    got = lake.read_resilient(spark, path)
-    assert got.count() == nation.count()
-
-
-def test_evolve_append_additive_only(spark, tmp_path):
-    import pytest
-
-    path = str(tmp_path / "evolving")
-    v1 = spark.createDataFrame([(1, "a")], "id LONG, val STRING")
-    lake.evolve_append(spark, v1, path)
-    # additive: new column ok, old rows read as null
-    v2 = spark.createDataFrame(
-        [(2, "b", 9.5)], "id LONG, val STRING, score DOUBLE"
-    )
-    lake.evolve_append(spark, v2, path)
-    got = {r.id: (r.val, r.score) for r in lake.read_evolved(spark, path).collect()}
-    assert got == {1: ("a", None), 2: ("b", 9.5)}
-    # missing column also ok (writes null)
-    v3 = spark.createDataFrame([(3, "c")], "id LONG, val STRING")
-    lake.evolve_append(spark, v3, path)
-    assert lake.read_evolved(spark, path).count() == 3
-    # retype is still rejected
-    bad = spark.createDataFrame([(4, 7)], "id LONG, val LONG")
-    with pytest.raises(lake.SchemaMismatchError, match="RETYPES"):
-        lake.evolve_append(spark, bad, path)
-
-
-def test_evolve_append_guards_union_schema(spark, tmp_path):
-    """The retype guard must compare against the UNION (mergeSchema)
-    schema: retyping a column added in a PRIOR evolution is rejected even
-    if some old file footer lacks it."""
-    import pytest
-
-    path = str(tmp_path / "evolve_union_guard")
-    lake.evolve_append(
-        spark, spark.createDataFrame([(1, "a")], "id LONG, val STRING"), path
-    )
-    lake.evolve_append(
-        spark,
-        spark.createDataFrame([(2, "b", 1.5)], "id LONG, val STRING, score DOUBLE"),
-        path,
-    )
-    retyped = spark.createDataFrame(
-        [(3, "c", "oops")], "id LONG, val STRING, score STRING"
-    )
-    with pytest.raises(lake.SchemaMismatchError, match="score"):
-        lake.evolve_append(spark, retyped, path)
-    # the dir is still readable (the poison write never landed)
-    assert lake.read_evolved(spark, path).count() == 2
-
-
 def test_bloom_filter_skips_point_lookup(spark, tmp_path):
     """Equality probe on a high-cardinality SCATTERED key: min/max stats
     can't skip (every file spans the full hash range), but per-column
     parquet bloom filters let the reader drop every file/row-group that
     provably lacks the value -- the point-lookup complement to
-    write_clustered/write_zordered, no re-layout needed."""
+    range clustering and write_zordered, no re-layout needed."""
     df = spark.range(400_000).select(
         F.xxhash64("id").cast("string").alias("k"),
         F.col("id").alias("v"),
@@ -472,9 +336,7 @@ def test_point_lookup_probe_matches_plain_scan_and_skips(spark, oracle_sf_dir):
 def test_orc_lake_roundtrip_prune_and_pushdown(spark, sf_dir, tmp_path):
     """The generic fmt seam covers ORC end to end: partitioned write,
     partition pruning AND predicate pushdown both reach the ORC scan,
-    and values match the parquet-sourced frame exactly. (Avro needs the
-    external spark-avro package -- the kafka/protobuf gate pattern;
-    ORC is in-box and is the columnar alternative worth proving.)"""
+    and values match the parquet-sourced frame exactly."""
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
@@ -503,17 +365,6 @@ def test_orc_lake_roundtrip_prune_and_pushdown(spark, sf_dir, tmp_path):
     assert "PushedFilters" in plan and "o_totalprice" in plan.split(
         "PushedFilters"
     )[1].split("]")[0], plan
-
-
-def test_avro_reader_fails_clearly_without_package(spark, tmp_path):
-    """The sandbox has no spark-avro module: the gate must fail fast
-    naming the exact --packages coordinate (the kafka_stream gate
-    precedent), never a deep NoClassDefFoundError mid-plan."""
-    import pytest
-
-    with pytest.raises(Exception) as ei:
-        lake.read_avro_lake(spark, str(tmp_path / "nothing.avro"))
-    assert "spark-avro" in str(ei.value)
 
 
 def test_write_training_shards_ordered_files_and_manifest(

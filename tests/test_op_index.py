@@ -1,8 +1,9 @@
 """The operator-inventory guards: OP_INDEX.md must be fresh, no two
 public functions may share a keyword set above the threshold without a
 recorded waiver (the grep-first rule's mechanical backstop against an
-existing operator re-added under a different name), and every public
-operator must be reached by a workload or kept with a reason."""
+existing operator re-added under a different name), every public
+function outside plans/ must be reached by a workload or kept with a
+reason, and no two of them may share a bare name."""
 
 from __future__ import annotations
 
@@ -46,24 +47,36 @@ def test_no_duplicate_operator_semantics():
 
 
 def test_every_operator_is_reached():
-    """Each public function in operators/ is reached by a non-test root
-    (registry, bench, examples, perfbench) or listed in KEPT_UNREACHED
-    with a reason; an entry that is reached, or no longer exists, is
-    stale and fails too."""
+    """Each public function outside plans/ is reached by a non-test root
+    (registry, entry, bench, examples, perfbench) or listed in
+    KEPT_UNREACHED with a reason; an entry that is reached, or no longer
+    exists, is stale and fails too."""
     reach = op_index.reachability()
     unreached = {
         f"{m}.{n}"
         for m, n, _, _ in op_index.discover()
-        if m.startswith("operators.")
-        and not reach.get((f"{op_index.PKG}.{m}", n))
+        if not reach.get((f"{op_index.PKG}.{m}", n))
     }
     kept = set(op_index.KEPT_UNREACHED)
-    assert unreached - kept == set(), "unreached operators (delete them, "
+    assert unreached - kept == set(), "unreached functions (delete them, "
     "or add a reason to KEPT_UNREACHED): " + ", ".join(
         sorted(unreached - kept)
     )
     assert kept - unreached == set(), "stale KEPT_UNREACHED entries: " + (
         ", ".join(sorted(kept - unreached))
+    )
+
+
+def test_public_names_are_unique():
+    """No two public functions outside plans/ share a bare name. The
+    reachability walk resolves by name, so a shared name lets an
+    unreached function count as reached through its namesake."""
+    by_name: dict[str, list[str]] = {}
+    for m, n, _, _ in op_index.discover():
+        by_name.setdefault(n, []).append(f"{m}.{n}")
+    shared = {n: ms for n, ms in by_name.items() if len(ms) > 1}
+    assert shared == {}, "public functions sharing a name: " + "; ".join(
+        ", ".join(ms) for ms in shared.values()
     )
 
 

@@ -333,14 +333,12 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
     """Plan lint over library operators that are not registry queries
     (the sweep above only covers registered plans): spatial blocking
     must resolve to an equi-join (never a cartesian/BNLJ), and
-    incremental agg maintenance, sessionize and the SCD2 fold and
-    point-in-time join stay clean."""
+    incremental agg maintenance stays clean."""
     from pyspark.sql import functions as F
 
     from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         aggregates,
-        funnel,
         spatial,
     )
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
@@ -369,38 +367,6 @@ def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
         ),
     }
     for name, df in clean.items():
-        df.write.format("noop").mode("overwrite").save()
-        assert lint.lint_plan(df) == [], name
-
-    events = load_table(spark, sf_dir, "events")
-    s0 = orders
-    s1 = orders.filter(F.col("o_orderkey") % 5 != 0)
-    feed2 = versioned.change_feed(s0, s1, "o_orderkey")
-    clean2 = {
-        "sessionize": funnel.sessionize(events, gap="45 minutes"),
-        "scd2_apply": versioned.scd2_apply(
-            versioned.scd2_init(s0, "o_orderkey", "2024-01-01"),
-            feed2,
-            "o_orderkey",
-            "2024-02-01",
-        ),
-        "scd2_join": versioned.scd2_join(
-            # facts drop the dimension-owned column: scd2_join REFUSES
-            # fact/dimension name collisions instead of emitting
-            # ambiguous duplicate columns
-            s0.drop("o_orderpriority").withColumn(
-                "ts2", F.current_timestamp()
-            ),
-            versioned.scd2_init(
-                s1.select("o_orderkey", "o_orderpriority"),
-                "o_orderkey",
-                "2024-01-01",
-            ),
-            "o_orderkey",
-            "ts2",
-        ),
-    }
-    for name, df in clean2.items():
         df.write.format("noop").mode("overwrite").save()
         assert lint.lint_plan(df) == [], name
 

@@ -281,51 +281,6 @@ def test_agg_state_random_feeds_equal_recompute(spark):
         assert got == want, f"count/sum diverged (round {round_})"
 
 
-def test_sessionize_and_interpolate_invariants(spark):
-    """Generated per-key event series: sessionize's session count
-    equals 1 + number of over-gap steps, sessions partition each key's
-    rows, ids are contiguous from 1."""
-    import random
-
-    from bigdata_storage_and_proccess_job_data_spark.operators import funnel
-
-    rng = random.Random(77)
-    rows = []
-    for uid in range(1, 25):
-        t = 0
-        for _ in range(rng.randint(1, 30)):
-            t += rng.choice([1, 5, 40, 120, 3000, 7200])
-            rows.append(
-                (uid, t, rng.choice([None, float(rng.randint(0, 50))]))
-            )
-    df = spark.createDataFrame(rows, "user_id long, ts long, v double")
-
-    gap_s = 1800
-    out = funnel.sessionize(
-        df.withColumn("ts", F.col("ts").cast("timestamp")),
-        gap=gap_s,
-        tiebreak_cols=["v"],
-    ).collect()
-    by_user: dict[int, list] = {}
-    for r in out:
-        by_user.setdefault(r.user_id, []).append(r)
-    from collections import defaultdict
-
-    series = defaultdict(list)
-    for uid, t, v in rows:
-        series[uid].append(t)
-    for uid, ts_list in series.items():
-        ts_list.sort()
-        want_sessions = 1 + sum(
-            1 for a, b in zip(ts_list, ts_list[1:]) if b - a > gap_s
-        )
-        got_sessions = len({r.session_seq for r in by_user[uid]})
-        assert got_sessions == want_sessions, uid
-        assert len(by_user[uid]) == len(ts_list)  # partition property
-        assert min(r.session_seq for r in by_user[uid]) == 1
-        assert max(r.session_seq for r in by_user[uid]) == want_sessions
-
-
 def test_bootstrap_ci_partition_independent_on_generated_values(spark):
     """Property: the Poisson-bootstrap CI is a pure function of the row
     SET -- md5 weights depend on ids, not placement -- so any
@@ -498,8 +453,7 @@ def test_cow_dml_content_equals_plain_filter_on_generated_bands(
     """Property: for arbitrary delete bands (interior, boundary,
     beyond-range, inverted-empty) over arbitrary cluster widths,
     delete_where's surviving content EXACTLY equals the plain
-    filter's, the file accounting sums, and update_where preserves
-    row count while transforming exactly the band."""
+    filter's and the deleted-row count matches."""
     from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
     texts = _examples(40)
@@ -529,24 +483,6 @@ def test_cow_dml_content_equals_plain_filter_on_generated_bands(
         )
         assert got == expect, (lo, hi)
         assert rep["rows_deleted"] == n - len(expect)
-    # update: band transform only, count preserved
-    table = str(tmp_path / "cow_prop_upd")
-    df = spark.createDataFrame(base_rows, "k long, v double")
-    versioned.commit_version(
-        df.repartitionByRange(5, "k").sortWithinPartitions("k"),
-        table,
-        stats_cols=["k"],
-    )
-    rep = versioned.update_where(
-        spark, table, "k", 500, 700, {"v": F.col("v") + 1000.0}
-    )
-    got = dict(versioned.read_version(spark, table).collect())
-    for k, v in base_rows:
-        if 500 <= k <= 700:
-            assert got[k] == v + 1000.0
-        else:
-            assert got[k] == v
-    assert rep["rows_updated"] == 201
 
 
 def test_hot_key_split_join_equals_plain_join_on_generated_skew(spark):

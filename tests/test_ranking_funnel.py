@@ -255,101 +255,6 @@ def test_mmr_rerank_composes_with_knn_and_is_per_query(spark, oracle_sf_dir):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-def test_sessionize_hand_math_and_validation(spark):
-    """Gap rule, per-user isolation, NULL drops, 1-based seq, unit
-    parsing."""
-    import datetime as dt
-
-    import pytest
-
-    from bigdata_storage_and_proccess_job_data_spark.operators import funnel
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def at(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    rows = [
-        (1, at(0)), (1, at(10)), (1, at(50)),   # 40-min gap: new session
-        (1, at(55)),
-        (2, at(0)),                              # other user independent
-        (None, at(0)), (3, None),                # dropped
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    out = funnel.sessionize(df, gap="30 minutes")
-    got = {
-        (r.user_id, r.ts): (r.session_seq, r.session_id)
-        for r in out.collect()
-    }
-    assert len(got) == 5
-    assert got[(1, at(0))] == (1, "1#1")
-    assert got[(1, at(10))] == (1, "1#1")
-    assert got[(1, at(50))] == (2, "1#2")
-    assert got[(1, at(55))] == (2, "1#2")
-    assert got[(2, at(0))] == (1, "2#1")
-
-    # exactly-at-gap stays in session (strict > starts a new one)
-    df2 = spark.createDataFrame(
-        [(1, at(0)), (1, at(30))], "user_id long, ts timestamp"
-    )
-    s2 = funnel.sessionize(df2, gap="30 minutes").collect()
-    assert {r.session_seq for r in s2} == {1}
-
-    stats = funnel.session_stats(funnel.sessionize(df)).collect()
-    by_id = {r.session_id: r for r in stats}
-    assert by_id["1#1"].n_events == 2
-    assert by_id["1#1"].duration_s == 600.0
-
-    with pytest.raises(ValueError):
-        funnel.sessionize(df, gap="30 fortnights")
-    with pytest.raises(ValueError):
-        funnel.sessionize(df, gap=-5)
-
-
-def test_sessionize_duckdb_parity(spark, sf_dir):
-    """Full row-level session labels on the events table match DuckDB
-    computing the same lag + running-sum formulation."""
-    from bigdata_storage_and_proccess_job_data_spark.catalog import load_table
-    from bigdata_storage_and_proccess_job_data_spark.operators import funnel
-    from tests.parity import compare, duckdb_connect
-
-    events = load_table(spark, sf_dir, "events")
-    out = funnel.sessionize(
-        events, gap="45 minutes", tiebreak_cols=["event_id"]
-    ).select("event_id", "session_seq", "session_id")
-    con = duckdb_connect(sf_dir)
-    problems = compare(
-        out,
-        con,
-        """
-        WITH base AS (
-          SELECT event_id, user_id, ts,
-                 LAG(ts) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_ts
-          FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        ),
-        flagged AS (
-          SELECT *, CASE WHEN prev_ts IS NULL
-                           OR epoch(ts) - epoch(prev_ts) > 2700
-                         THEN 1 ELSE 0 END AS is_new
-          FROM base
-        )
-        SELECT event_id,
-               SUM(is_new) OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS session_seq,
-               user_id::VARCHAR || '#' ||
-                 (SUM(is_new) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING))::VARCHAR
-                 AS session_id
-        FROM flagged
-        """,
-    )
-    assert problems == [], problems
-
-
 def test_ranking_metrics_pins_and_parity(spark, oracle_sf_dir):
     """Retrieval eval: (1) hand-computable precision/recall/MRR/NDCG
     pins incl. the empty-truth NULL and unanswered-query zero
@@ -569,5 +474,3 @@ def test_retention_matrix_hand_pins_and_parity(spark, oracle_sf_dir):
     """
     errs = compare(out_m, duckdb_connect(oracle_sf_dir), sql_m)
     assert not errs, errs[:5]
-
-

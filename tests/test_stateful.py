@@ -1,5 +1,5 @@
-"""applyInPandasWithState operators: cross-batch streaming dedup and
-running totals (two micro-batches via mtime-ordered single files)."""
+"""Watermark-scoped streaming dedup across two micro-batches (mtime-
+ordered single files)."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import time
 import uuid
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -18,34 +15,15 @@ from pyspark.sql.types import (
 
 from bigdata_storage_and_proccess_job_data_spark.streaming import pipeline, stateful
 
-SCHEMA = StructType(
-    [
-        StructField("user", StringType()),
-        StructField("amount", DoubleType()),
-        StructField("seq", LongType()),
-    ]
-)
-
 
 @pytest.fixture(autouse=True)
 def few_shuffle_partitions(spark):
-    # each micro-batch spins a Python state worker per shuffle partition;
-    # 32 partitions for 6 rows is pure overhead in these tests
+    # each micro-batch runs a state-store task per shuffle partition;
+    # 32 partitions for 5 rows is pure overhead in these tests
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     yield
     spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-@pytest.fixture()
-def two_batch_src(spark, tmp_path):
-    src = str(tmp_path / "src")
-    b1 = [("alice", 10.0, 1), ("bob", 5.0, 2), ("alice", 1.0, 3)]
-    b2 = [("alice", 2.0, 4), ("carol", 7.0, 5), ("bob", 3.0, 6)]
-    spark.createDataFrame(b1, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(b2, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    return src
 
 
 def _run(df, name, mode):
@@ -56,45 +34,11 @@ def _run(df, name, mode):
         .trigger(availableNow=True)
         .start()
     )
-    # state ops spin Python workers per shuffle partition per batch --
-    # slow to warm up on a cold JVM, hence the generous bound
+    # stateful batches are slow to warm up on a cold JVM, hence the
+    # generous bound
     q.awaitTermination(240)
     assert not q.isActive
     return q
-
-
-def test_dedup_stream_cross_batch(spark, two_batch_src):
-    stream = pipeline.file_stream(
-        spark, two_batch_src, SCHEMA, max_files_per_trigger=1
-    )
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    # ttl_ms=None: with ProcessingTimeTimeout live state keeps scheduling
-    # timeout-check batches, so an availableNow query never terminates --
-    # TTL is for always-on streams, NoTimeout for bounded replays
-    _run(stateful.dedup_stream(stream, "user", ttl_ms=None), name, "append")
-    rows = {r.key: r.first_seen_count for r in spark.sql(f"SELECT * FROM {name}").collect()}
-    # alice/bob first seen in batch 1 (alice twice there), carol in batch 2;
-    # batch-2 re-occurrences of alice/bob suppressed by state
-    assert rows == {"alice": 2, "bob": 1, "carol": 1}
-
-
-def test_running_totals_cumulative(spark, two_batch_src):
-    stream = pipeline.file_stream(
-        spark, two_batch_src, SCHEMA, max_files_per_trigger=1
-    )
-    name = f"run_{uuid.uuid4().hex[:8]}"
-    _run(
-        stateful.running_totals_stream(stream, "user", "amount"), name, "update"
-    )
-    # update mode emits once per batch the key appears in; the LAST
-    # emission per key is the cumulative total
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    final: dict[str, tuple] = {}
-    for r in rows:
-        final[r.key] = (r.total_count, float(r.total_sum))
-    assert final["alice"] == (3, 13.0)
-    assert final["bob"] == (2, 8.0)
-    assert final["carol"] == (1, 7.0)
 
 
 def test_dedup_within_watermark(spark, tmp_path):
@@ -125,152 +69,3 @@ def test_dedup_within_watermark(spark, tmp_path):
     rows = spark.sql(f"SELECT user FROM {name}").collect()
     # every duplicate lands inside the 10-min horizon -> one row per user
     assert sorted(r.user for r in rows) == ["alice", "bob", "carol"]
-
-
-def test_running_totals_tws_cross_batch(spark, two_batch_src):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): same
-    cumulative semantics as running_totals_stream, typed ValueState,
-    RocksDB state store. The sandbox lacks protobuf (required by the
-    TWS state protocol), so this asserts the documented clear-failure
-    gate there and runs the full cross-batch check where protobuf
-    exists -- the kafka_stream testing pattern."""
-    try:
-        import google.protobuf  # noqa: F401
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    stream = pipeline.file_stream(
-        spark, two_batch_src, SCHEMA, max_files_per_trigger=1
-    )
-    if not have_protobuf:
-        with pytest.raises(ImportError, match="protobuf"):
-            stateful.running_totals_tws(stream, "user", "amount")
-        return
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        _run(
-            stateful.running_totals_tws(stream, "user", "amount"),
-            name,
-            "update",
-        )
-        rows = spark.sql(f"SELECT * FROM {name}").collect()
-        final = {}
-        for r in rows:
-            # bracket access: Row.count is the tuple method, not the field
-            if r.user not in final or r["count"] > final[r.user][0]:
-                final[r.user] = (r["count"], r["total"])
-        assert final == {
-            "alice": (3, 13.0),
-            "bob": (2, 8.0),
-            "carol": (1, 7.0),
-        }
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_session_stream_event_time_timeout(spark, tmp_path):
-    """Custom stateful sessionization: two sessions of one user split
-    by a gap, a second user interleaved, emission ONLY after the
-    watermark passes last-event + gap (state timeout), sentinel's own
-    open session never emits. Totals match the batch sessionizer on
-    the same data."""
-    import datetime as dt
-    import time as _t
-    import uuid
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from bigdata_storage_and_proccess_job_data_spark.operators import funnel
-    from bigdata_storage_and_proccess_job_data_spark.streaming import (
-        pipeline,
-        stateful,
-    )
-
-    schema = StructType(
-        [
-            StructField("user", StringType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    in_dir = str(tmp_path / "in_sess")
-    t = dt.datetime(2024, 5, 1, 10, 0, 0)
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-
-    m = dt.timedelta(minutes=1)
-    # u1: session A (10:00-10:05, 3 events), gap 40m, session B (10:45)
-    # u2: one session (10:02-10:03)
-    write(
-        [
-            ("u1", t), ("u1", t + 2 * m), ("u1", t + 5 * m),
-            ("u2", t + 2 * m), ("u2", t + 3 * m),
-            ("u1", t + 45 * m),
-        ]
-    )
-    _t.sleep(1.1)
-    far = t + dt.timedelta(hours=6)
-    write([("zz", far)])
-    _t.sleep(1.1)
-    write([("zz", far + 30 * m)])
-
-    stream = pipeline.file_stream(
-        spark, in_dir, schema, max_files_per_trigger=1
-    )
-    sessions = stateful.session_stream(
-        stream, "user", "ts", gap_ms=30 * 60 * 1000, watermark="5 minutes"
-    )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = pipeline.memory_sink(sessions, name, output_mode="append")
-    q.awaitTermination(120)
-    rows = [
-        r
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-        if r.key != "zz"
-    ]
-    got = {
-        (r.key, r.session_start, r.session_end, r.n_events) for r in rows
-    }
-
-    def ms(x):
-        return int(x.timestamp() * 1000)
-
-    assert got == {
-        ("u1", ms(t), ms(t + 5 * m), 3),
-        ("u1", ms(t + 45 * m), ms(t + 45 * m), 1),
-        ("u2", ms(t + 2 * m), ms(t + 3 * m), 2),
-    }
-
-    # batch cross-check: same gap rule over the same closed events
-    batch = funnel.session_stats(
-        funnel.sessionize(
-            spark.read.parquet(in_dir).filter(F.col("user") != "zz")
-            .withColumnRenamed("user", "user_id"),
-            gap="30 minutes",
-        )
-    )
-    batch_got = {
-        (r.user_id, r.n_events) for r in batch.collect()
-    }
-    assert batch_got == {("u1", 3), ("u1", 1), ("u2", 2)}

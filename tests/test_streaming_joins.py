@@ -456,13 +456,12 @@ def test_stream_stream_full_outer_join(spark, tmp_path):
 
 
 def test_dedup_stream_batch_equivalence(spark, tmp_path):
-    """dropDuplicatesWithinWatermark through the exactly-once sink must
-    keep exactly the burst openers that the batch analogue
+    """dropDuplicatesWithinWatermark (stateful.dedup_within_watermark)
+    must keep exactly the burst openers that the batch analogue
     (operators/dedup.py:first_of_burst) keeps: duplicates inside a
     burst collapse while the key's state lives; the state evicts as the
     watermark passes (filler batches advance it), so the next burst's
-    opener is kept again. Also proves the sink mechanics: each batch in
-    its own batch_id=N dir (idempotent overwrite on replay)."""
+    opener is kept again."""
     import datetime as dt
     import time as _t
 
@@ -474,6 +473,7 @@ def test_dedup_stream_batch_equivalence(spark, tmp_path):
     )
 
     from bigdata_storage_and_proccess_job_data_spark.operators import dedup
+    from bigdata_storage_and_proccess_job_data_spark.streaming import stateful
 
     schema = StructType(
         [StructField("user", StringType()), StructField("ts", TimestampType())]
@@ -502,16 +502,16 @@ def test_dedup_stream_batch_equivalence(spark, tmp_path):
     stream = pipeline.file_stream(
         spark, src, schema, max_files_per_trigger=1
     )
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = pipeline.exactly_once_append(
-        stream, ["user"], "ts", "30 minutes", sink, ckpt
+    name = f"wmdedup_{uuid.uuid4().hex[:8]}"
+    q = pipeline.memory_sink(
+        stateful.dedup_within_watermark(stream, ["user"], "ts", "30 minutes"),
+        name,
     )
     q.awaitTermination(120)
 
     got = {
         (r.user, str(r.ts))
-        for r in spark.read.parquet(sink).select("user", "ts").collect()
+        for r in spark.sql(f"SELECT user, ts FROM {name}").collect()
     }
     expected_batch = dedup.first_of_burst(
         spark.read.parquet(src), ["user"], "ts", "30 minutes"
@@ -519,13 +519,6 @@ def test_dedup_stream_batch_equivalence(spark, tmp_path):
     want = {(r.user, str(r.ts)) for r in expected_batch.collect()}
     assert got == want, f"stream={sorted(got)} batch={sorted(want)}"
     assert len(got) == 6  # A,B openers x2 bursts + C + D
-
-    # exactly-once mechanics: per-batch hive dirs, so a replayed batch
-    # overwrites its own directory instead of double-appending
-    import os
-
-    batch_dirs = [d for d in os.listdir(sink) if d.startswith("batch_id=")]
-    assert len(batch_dirs) >= 2
 
 
 def test_stream_stream_right_outer_join(spark, tmp_path):

@@ -43,28 +43,6 @@ def test_reader_pinned_to_snapshot_while_writer_commits(spark, sf_dir, tmp_path)
     assert versioned.read_version(spark, table).count() == 1  # fresh resolve
 
 
-def test_compact_log_versioned_latest_wins(spark, sf_dir, tmp_path):
-    log = str(tmp_path / "log")
-    table = str(tmp_path / "t")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    ).limit(50)
-    bumped = orders.withColumn("o_totalprice", F.col("o_totalprice") + 5)
-    lake.upsert_by_key(spark, orders, log, "o_orderkey", "o_orderdate")
-    lake.upsert_by_key(spark, bumped, log, "o_orderkey", "o_orderdate")
-
-    want = {
-        r.o_orderkey: r.o_totalprice
-        for r in lake.read_upserted(spark, log, "o_orderkey", "o_orderdate").collect()
-    }
-    versioned.compact_log_versioned(spark, log, table, "o_orderkey", "o_orderdate")
-    got = {
-        r.o_orderkey: r.o_totalprice
-        for r in versioned.read_version(spark, table).collect()
-    }
-    assert got == want and len(got) == 50
-
-
 def test_optimistic_commit_detects_concurrent_writer(spark, sf_dir, tmp_path):
     import pytest
 
@@ -1260,207 +1238,6 @@ def test_clone_table_zero_copy_independent(spark, sf_dir, tmp_path):
         versioned.clone_table(str(tmp_path / "nope"), str(tmp_path / "x"))
 
 
-def test_scd2_history_lifecycle_and_parity(spark):
-    """Type-2 dimension history: bootstrap -> two feed applications.
-    Invariants: at most one current row per key, closed rows immutable,
-    as_of reconstructs every intermediate snapshot exactly, and the
-    full history matches a DuckDB recomputation of the same fold."""
-    import datetime as dt
-
-    from tests.parity import compare, duckdb_connect
-
-    t0 = dt.datetime(2024, 1, 1)
-    t1 = dt.datetime(2024, 2, 1)
-    t2 = dt.datetime(2024, 3, 1)
-
-    s0 = spark.createDataFrame(
-        [(1, "alice", "NYC"), (2, "bob", "SF"), (3, "carol", "LA")],
-        "id long, name string, city string",
-    )
-    s1 = spark.createDataFrame(
-        [(1, "alice", "BOSTON"), (2, "bob", "SF"), (4, "dan", "SEA")],
-        "id long, name string, city string",  # 1 moves, 3 deleted, 4 new
-    )
-    s2 = spark.createDataFrame(
-        [(1, "alice", "BOSTON"), (2, "bob", "CHI"), (4, "dan", "SEA")],
-        "id long, name string, city string",  # 2 moves
-    )
-
-    h = versioned.scd2_init(s0, "id", t0)
-    h = versioned.scd2_apply(h, versioned.change_feed(s0, s1, "id"), "id", t1)
-    h = versioned.scd2_apply(h, versioned.change_feed(s1, s2, "id"), "id", t2)
-    rows = h.collect()
-
-    # one current row per live key; closed rows carry valid_to
-    current = [r for r in rows if r.is_current]
-    assert {r.id for r in current} == {1, 2, 4}
-    assert all(r.valid_to is None for r in current)
-    closed = [r for r in rows if not r.is_current]
-    assert all(r.valid_to is not None for r in closed)
-    # key 3 (deleted at t1): one closed row, no current row
-    k3 = [r for r in rows if r.id == 3]
-    assert len(k3) == 1 and k3[0].valid_to == t1
-
-    # as_of reconstructs each snapshot exactly
-    for ts, snap in [(t0, s0), (t1, s1), (t2, s2)]:
-        got = sorted(
-            (r.id, r.name, r.city)
-            for r in versioned.scd2_as_of(h, ts).collect()
-        )
-        want = sorted((r.id, r.name, r.city) for r in snap.collect())
-        assert got == want, ts
-    # and between loads the older snapshot still reads
-    mid = sorted(
-        (r.id, r.city)
-        for r in versioned.scd2_as_of(
-            h, dt.datetime(2024, 1, 15)
-        ).collect()
-    )
-    assert mid == [(1, "NYC"), (2, "SF"), (3, "LA")]
-
-    # cross-engine: DuckDB folds the same three loads into the same
-    # history (full value parity, timestamps included)
-    con = duckdb_connect("/root/testdata/sf0.001")
-    con.execute(
-        "CREATE TABLE s0 AS SELECT * FROM (VALUES "
-        "(1,'alice','NYC'),(2,'bob','SF'),(3,'carol','LA')"
-        ") t(id, name, city)"
-    )
-    con.execute(
-        "CREATE TABLE s1 AS SELECT * FROM (VALUES "
-        "(1,'alice','BOSTON'),(2,'bob','SF'),(4,'dan','SEA')"
-        ") t(id, name, city)"
-    )
-    con.execute(
-        "CREATE TABLE s2 AS SELECT * FROM (VALUES "
-        "(1,'alice','BOSTON'),(2,'bob','CHI'),(4,'dan','SEA')"
-        ") t(id, name, city)"
-    )
-    problems = compare(
-        h.select(
-            "id", "name", "city", "valid_from", "valid_to", "is_current"
-        ),
-        con,
-        """
-        WITH loads AS (
-          SELECT *, TIMESTAMP '2024-01-01' AS ld FROM s0
-          UNION ALL SELECT *, TIMESTAMP '2024-02-01' FROM s1
-          UNION ALL SELECT *, TIMESTAMP '2024-03-01' FROM s2
-        ),
-        versions AS (  -- collapse consecutive identical loads per key
-          SELECT id, name, city, ld,
-                 LAG(name || '|' || city) OVER w AS prev_val,
-                 name || '|' || city AS val
-          FROM loads WINDOW w AS (PARTITION BY id ORDER BY ld)
-        ),
-        opens AS (
-          SELECT id, name, city, ld AS valid_from
-          FROM versions WHERE prev_val IS NULL OR prev_val <> val
-        ),
-        ends AS (  -- a key absent from the NEXT load closes at that load
-          SELECT o.id, o.name, o.city, o.valid_from,
-                 LEAD(o.valid_from) OVER (PARTITION BY o.id
-                                          ORDER BY o.valid_from)
-                   AS next_open,
-                 (SELECT MIN(l2.ld) FROM (
-                    SELECT DISTINCT ld FROM loads) l2
-                  WHERE l2.ld > o.valid_from
-                    AND NOT EXISTS (SELECT 1 FROM loads l3
-                                    WHERE l3.ld = l2.ld
-                                      AND l3.id = o.id)) AS deleted_at
-          FROM opens o
-        )
-        SELECT id, name, city, valid_from,
-               CASE WHEN next_open IS NOT NULL
-                      AND (deleted_at IS NULL OR next_open < deleted_at)
-                    THEN next_open ELSE deleted_at END AS valid_to,
-               (next_open IS NULL AND deleted_at IS NULL) AS is_current
-        FROM ends
-        """,
-    )
-    assert problems == [], problems
-
-
-def test_table_stats_metadata_only(spark, sf_dir, tmp_path):
-    """COUNT(*)/MIN/MAX served from the manifest with no scan: matches
-    the real data; clones inherit it; missing manifest raises."""
-    import pytest
-
-    orders = load_table(spark, sf_dir, "orders")
-    table = str(tmp_path / "orders_stats")
-    versioned.commit_version(
-        orders.repartitionByRange(4, "o_orderkey"),
-        table,
-        stats_cols=["o_orderkey", "o_totalprice"],
-    )
-    st = versioned.table_stats(table)
-    assert st["n_files"] == 4
-    assert st["n_rows"] == orders.count()
-    lo, hi = st["columns"]["o_orderkey"]
-    real_lo, real_hi = orders.agg(
-        F.min("o_orderkey"), F.max("o_orderkey")
-    ).collect()[0]
-    assert (lo, hi) == (real_lo, real_hi)
-
-    clone = str(tmp_path / "clone_stats")
-    versioned.clone_table(table, clone)
-    assert versioned.table_stats(clone)["n_rows"] == st["n_rows"]
-
-    bare = str(tmp_path / "bare")
-    versioned.commit_version(orders.limit(5), bare)
-    with pytest.raises(FileNotFoundError, match="manifest"):
-        versioned.table_stats(bare)
-
-
-def test_scd2_join_point_in_time(spark):
-    """Facts pick the dimension version valid at THEIR timestamp: the
-    order from January sees the January city, the March order the
-    March city; facts before the key existed (or with unknown keys)
-    keep NULLs; equality at a boundary belongs to the NEW version
-    (valid_to exclusive)."""
-    import datetime as dt
-
-    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
-    s0 = spark.createDataFrame(
-        [(1, "NYC"), (2, "SF")], "id long, city string"
-    )
-    s1 = spark.createDataFrame(
-        [(1, "BOSTON"), (2, "SF")], "id long, city string"
-    )
-    h = versioned.scd2_apply(
-        versioned.scd2_init(s0, "id", t0),
-        versioned.change_feed(s0, s1, "id"),
-        "id",
-        t1,
-    )
-    facts = spark.createDataFrame(
-        [
-            (100, 1, dt.datetime(2024, 1, 15)),  # mid-january: NYC
-            (101, 1, dt.datetime(2024, 2, 1)),   # boundary: BOSTON
-            (102, 1, dt.datetime(2024, 3, 1)),   # current: BOSTON
-            (103, 2, dt.datetime(2024, 3, 1)),   # unchanged dim
-            (104, 9, dt.datetime(2024, 3, 1)),   # unknown key
-            (105, 1, dt.datetime(2023, 1, 1)),   # before history began
-        ],
-        "order_id long, id long, ts timestamp",
-    )
-    got = {
-        r.order_id: r.city
-        for r in versioned.scd2_join(facts, h, "id", "ts").collect()
-    }
-    assert got == {
-        100: "NYC",
-        101: "BOSTON",
-        102: "BOSTON",
-        103: "SF",
-        104: None,
-        105: None,
-    }
-    # every fact row survives exactly once (interval versions never
-    # fan a fact out)
-    assert versioned.scd2_join(facts, h, "id", "ts").count() == 6
-
-
 def test_agg_state_variance_maintenance(spark):
     """track_var: variance survives inserts/deletes/updates through the
     delta fold, matching var_samp recompute; singleton/empty groups
@@ -1720,58 +1497,6 @@ def test_delete_where_rebuilds_bloom(spark, tmp_path):
     ).count() == 0  # deleted key: bloom may keep files, filter is exact
 
 
-def test_update_where_targets_files_and_preserves_rest(spark, tmp_path):
-    """Copy-on-write UPDATE: matching rows get the SET expressions
-    (evaluated against the current row), non-matching rows -- in both
-    rewritten and linked files -- are byte-identical; schema changes
-    are rejected; zero-match updates commit nothing."""
-    import glob
-
-    import pytest
-
-    table = str(tmp_path / "upd_table")
-    df = spark.range(0, 6000).selectExpr(
-        "id AS k", "CAST(id % 100 AS DOUBLE) AS price", "id % 5 AS grp"
-    )
-    v1 = versioned.commit_version(
-        df.repartitionByRange(6, "k").sortWithinPartitions("k"),
-        table,
-        stats_cols=["k"],
-    )
-    n_files = len(glob.glob(f"{table}/v={v1}/*.parquet"))
-    report = versioned.update_where(
-        spark, table, "k", 1000, 1499,
-        {"price": F.col("price") * 2 + F.col("grp")},
-    )
-    assert report["rows_updated"] == 500
-    assert 0 < report["files_rewritten"] < n_files
-    assert report["files_linked"] + report["files_rewritten"] == n_files
-    now = versioned.read_version(spark, table)
-    hit = now.filter(F.col("k").between(1000, 1499))
-    assert hit.filter(
-        F.col("price") != (F.col("k") % 100) * 2 + F.col("k") % 5
-    ).count() == 0
-    untouched = now.filter(~F.col("k").between(1000, 1499))
-    assert untouched.filter(
-        F.col("price") != (F.col("k") % 100).cast("double")
-    ).count() == 0
-    assert now.count() == 6000  # updates never change row count
-    # old version unchanged (snapshot isolation)
-    old = versioned.read_version(spark, table, version=v1)
-    assert old.filter(
-        (F.col("k") == 1000) & (F.col("price") == 0.0)
-    ).count() == 1
-    with pytest.raises(ValueError, match="existing columns"):
-        versioned.update_where(
-            spark, table, "k", 0, 10, {"new_col": F.lit(1)}
-        )
-    r0 = versioned.update_where(
-        spark, table, "k", 10_000_000, 10_000_001,
-        {"price": F.lit(0.0)},
-    )
-    assert r0["version"] is None and r0["rows_updated"] == 0
-
-
 def test_cow_probe_pair_layout_accounting(spark, sf_dir):
     """The bench probe pair's scale claim, pinned at test scale: the
     SAME band delete rewrites a strict minority of files on the
@@ -1923,91 +1648,6 @@ def test_delete_eq_prunes_through_bloom(spark, tmp_path):
         versioned.delete_where(spark, table, "key", lo="1", eq="2")
 
 
-def test_update_eq_tombstones_one_key_via_bloom(spark, tmp_path):
-    """Equality redaction: SET sentinel values for ONE key on an
-    interleaved layout -- bloom-pruned file touch, every other row
-    byte-identical, count preserved."""
-    import glob
-
-    table = str(tmp_path / "eq_upd")
-    df = spark.range(0, 5000).selectExpr(
-        "id AS k", "CAST(id AS STRING) AS key",
-        "CAST(id AS STRING) AS email", "id % 9 AS p"
-    )
-    versioned.commit_version(df.repartition(6, "p"), table, stats_cols=["k"])
-    versioned.write_bloom_manifest(spark, f"{table}/v=1", ["key"])
-    n_files = len(glob.glob(f"{table}/v=1/*.parquet"))
-    rep = versioned.update_where(
-        spark, table, "key",
-        set_exprs={"email": F.lit("[REDACTED]")}, eq="777",
-    )
-    assert rep["rows_updated"] == 1
-    assert rep["files_rewritten"] < n_files
-    now = versioned.read_version(spark, table)
-    assert now.count() == 5000
-    assert now.filter(F.col("key") == "777").first().email == "[REDACTED]"
-    assert now.filter(F.col("email") == "[REDACTED]").count() == 1
-
-
-def test_forget_value_erases_history_and_verifies(spark, tmp_path):
-    """RTBF composition: after forget_value the subject's rows are gone
-    from EVERY retained snapshot (time travel to them is dead --
-    versions purged), the audit scan certifies it, other subjects'
-    rows survive, and a tampered table fails verification."""
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(i, f"user_{i % 5}", float(i)) for i in range(100)],
-        "id long, uid string, v double",
-    )
-    import os as _os
-
-    v1 = versioned.commit_version(df, path, stats_cols=["id"])
-    versioned.write_bloom_manifest(
-        spark, _os.path.join(path, f"v={v1}"), ["uid"]
-    )
-    # a second commit so there is real history to purge
-    versioned.commit_version(
-        df.withColumn("v", F.col("v") + 1), path, expected=v1,
-        stats_cols=["id"],
-    )
-    report = versioned.forget_value(spark, path, "uid", "user_3")
-    assert report["verified"] is True
-    assert report["versions_purged"]  # old snapshots really died
-    assert versioned.versions(path) == [versioned.current_version(path)]
-    remaining = versioned.read_version(spark, path)
-    assert remaining.filter(F.col("uid") == "user_3").count() == 0
-    assert remaining.count() == 80  # the other 4 subjects survive
-
-    # the audit is a real scan: plant a violating row in a new version
-    versioned.commit_version(
-        remaining.unionByName(
-            spark.createDataFrame(
-                [(999, "user_3", 0.0)], "id long, uid string, v double"
-            )
-        ),
-        path,
-    )
-    assert versioned.verify_absent(spark, path, "uid", "user_3") is False
-
-    # degenerate snapshots certify vacuously instead of crashing the
-    # audit: an orphaned empty claim dir and a pre-evolution snapshot
-    # without the column
-    _os.makedirs(_os.path.join(path, "v=999"), exist_ok=True)
-    assert versioned.verify_absent(spark, path, "uid", "user_3") is False
-    # (False because of the planted violation above, not a crash)
-    spark.createDataFrame([(1,)], "other long").write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(path, "v=1000"))
-    assert isinstance(
-        versioned.verify_absent(spark, path, "uid", "nobody"), bool
-    )
-
-    import pytest
-
-    with pytest.raises(ValueError, match="NULL"):
-        versioned.forget_value(spark, path, "uid", None)
-
-
 def test_cow_rewrite_rejects_misrouted_observation(spark, tmp_path):
     """Observe-contract enforcement: a rewrite callback that drops
     the observed affected-file frame (the match count could never
@@ -2124,10 +1764,10 @@ def test_bloom_splice_caps_low_ndv_columns(spark, tmp_path):
 
 
 def test_bloom_splice_does_not_cap_updated_columns(spark, tmp_path):
-    """update_where SET columns may take brand-new values in rewritten
-    files, so the splice sizes them from footer row counts (no cap) --
-    a tombstone update that INCREASES a column's distinct count must
-    not saturate its bitmap."""
+    """A pruned apply_changes MERGE may give rewritten files brand-new
+    column values, so the splice sizes them from footer row counts (no
+    cap) -- an upsert batch that INCREASES a column's distinct count
+    must not saturate its bitmap."""
     import json
     import os
 
@@ -2142,27 +1782,28 @@ def test_bloom_splice_does_not_cap_updated_columns(spark, tmp_path):
         stats_cols=["k"],
     )
     versioned.write_bloom_manifest(spark, f"{table}/v={v1}", ["status"])
-    # SET status to a per-row-unique value inside the band: the new
-    # file's distinct count far exceeds the old 5-value bound
-    report = versioned.update_where(
-        spark,
-        table,
-        "k",
-        100,
-        599,
-        set_exprs={
-            "status": F.concat(F.lit("u"), F.col("k").cast("string"))
-        },
+    # upsert a per-row-unique status inside the band: the new file's
+    # distinct count far exceeds the old 5-value bound
+    changes = spark.range(100, 600).selectExpr(
+        "id AS k",
+        "CONCAT('u', CAST(id AS STRING)) AS status",
+        "'upsert' AS _op",
     )
-    new_snap = f"{table}/v={report['version']}"
+    version = versioned.apply_changes(spark, table, changes, "k", prune=True)
+    new_snap = f"{table}/v={version}"
     with open(os.path.join(new_snap, "_bloom.json")) as fh:
         new = json.load(fh)
     rewritten = _rewritten_files(f"{table}/v={v1}", new_snap)
     assert rewritten
+    import pyarrow.parquet as pq
+
     for fname in rewritten:
         st = new["files"][fname]["status"]
-        # sized from footer rows (uncapped): room for the new uniques
-        assert st["d"] >= 500
+        # sized from footer rows (uncapped), not the old 5-value bound
+        rows = pq.ParquetFile(os.path.join(new_snap, fname)).metadata.num_rows
+        assert st["d"] == rows
+    # room for the 500 new uniques across the rewritten files
+    assert sum(new["files"][f]["status"]["d"] for f in rewritten) >= 500
     # the new unique values are findable through the bloom
     assert (
         versioned.read_version(
@@ -2314,13 +1955,10 @@ def test_every_stream_starts_through_start():
     assert offenders == []
 
 
-# readers that must infer: mergeSchema unions every footer, and the
-# corrupt-file-skipping reader goes through format(...).load
+# readers that may infer: read_parquet falls back to inference when the
+# footer carries no Spark schema
 INFERRING_READERS = {
     "sources.lake.read_parquet": "the footer-schema reader itself",
-    "sources.lake.read_evolved": "mergeSchema union of every footer",
-    "sources.lake.evolve_append": "guards against the mergeSchema union",
-    "sources.lake.read_resilient": "ignoreCorruptFiles scan",
 }
 # createDataFrame(<list>, ...) sites kept on the parallelize path
 RDD_LOCAL_FRAMES = {
@@ -2394,8 +2032,8 @@ def _keyed_frame(spark, n=400):
 def test_snapshot_schemas_come_from_the_footer(spark, tmp_path):
     """Every versioned writer's snapshot reads back under its footer
     schema, equal to Spark's inferred one: commit_version,
-    optimize_table, delete_where / update_where output, a clone and an
-    upsert_by_key log."""
+    optimize_table, delete_where output, a clone and an upsert_by_key
+    log."""
     table = str(tmp_path / "t")
     versioned.commit_version(
         _keyed_frame(spark).repartition(4), table, stats_cols=["k"]
@@ -2404,9 +2042,6 @@ def test_snapshot_schemas_come_from_the_footer(spark, tmp_path):
         spark, table, cluster_by="k", target_files=3, stats_cols=["k"]
     )
     versioned.delete_where(spark, table, "k", 10, 20)
-    versioned.update_where(
-        spark, table, "k", 100, 110, set_exprs={"tag": F.lit("x")}
-    )
     clone = str(tmp_path / "clone")
     versioned.clone_table(table, clone)
     log = str(tmp_path / "log")
@@ -2415,7 +2050,7 @@ def test_snapshot_schemas_come_from_the_footer(spark, tmp_path):
 
     dirs = [f"{table}/v={v}" for v in versioned.versions(table)]
     dirs += [f"{clone}/v=1", log]
-    assert len(dirs) == 6
+    assert len(dirs) == 5
     for d in dirs:
         assert lake._footer_schema(spark, (d,)) is not None, d
         assert lake.read_parquet(spark, d).schema == spark.read.parquet(d).schema, d

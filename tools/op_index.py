@@ -1,4 +1,5 @@
-"""Operator keyword index + duplicate-semantics and reachability guards.
+"""Public-function keyword index + duplicate-semantics and reachability
+guards.
 
 The grep-first rule ("before writing ANY operator, grep the package and
 COVERAGE.md for prior art") fails when names differ for the same
@@ -25,10 +26,11 @@ measures semantics, not house style.
 
 The reachability column records which non-test roots reach each public
 function through a name-based static walk (see ``reachability``): the query
-registry (registered queries and their plan probes), ``bench.py``,
-``examples/`` and ``perfbench/``. Every public function in ``operators/``
-must be reached or listed in ``KEPT_UNREACHED`` with its reason
-(``tests/test_op_index.py``).
+registry (registered queries and their plan probes), the driver contract
+``__spark_entry__.py``, ``bench.py``, ``examples/`` and ``perfbench/``.
+Every public function outside ``plans/`` must be reached or listed in
+``KEPT_UNREACHED`` with its reason, and no two of them may share a bare
+name, since the walk resolves by name (``tests/test_op_index.py``).
 """
 
 from __future__ import annotations
@@ -46,6 +48,7 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 # non-test roots of the reachability walk: name -> script glob (the
 # registry root is the registered query functions themselves)
 SCRIPT_ROOTS = {
+    "entry": "__spark_entry__.py",
     "bench": "bench.py",
     "examples": "examples/*.py",
     "perfbench": "perfbench/*.py",
@@ -77,13 +80,6 @@ STOPWORDS = frozenset(
 THRESHOLD = 0.5
 WAIVERS: dict[frozenset, str] = {
     frozenset(
-        {"functions.vectors.lit_vector", "functions.vectors.lit_cube"}
-    ): "literal-builder twins: same embedding-literal plumbing for a "
-    "vector vs a rank-3 cube of test fixtures",
-    frozenset(
-        {"functions.vectors.vector_sql", "functions.vectors.cube_sql"}
-    ): "DuckDB-literal renderers mirroring the lit_* twins",
-    frozenset(
         {
             "operators.similarity.md5_centroids",
             "operators.similarity.md5_codebooks",
@@ -112,9 +108,9 @@ WAIVERS: dict[frozenset, str] = {
 }
 
 
-# Public operators no non-test root reaches that stay anyway, each with
+# Public functions no non-test root reaches that stay anyway, each with
 # the reason. tests/test_op_index.py fails on any other unreached public
-# function in operators/ and on entries that are no longer unreached.
+# function outside plans/ and on entries that are no longer unreached.
 KEPT_UNREACHED: dict[str, str] = {
     "operators.aggregates.global_sum": "paper operator (COVERAGE row A8)",
     "operators.neardup.jaccard_pairs": "exact reference for the MinHash "
@@ -131,12 +127,29 @@ KEPT_UNREACHED: dict[str, str] = {
     "recommendations in the ALS tests",
     "operators.dedup.duplicate_groups": "fixture of "
     "test_connected_components_on_minhash_pairs",
-    "operators.funnel.sessionize": "batch oracle of "
-    "test_session_stream_event_time_timeout",
-    "operators.funnel.session_stats": "batch oracle of "
-    "test_session_stream_event_time_timeout",
     "operators.similarity.ivfpq_build": "builds the index for the "
     "ivfpq_topk_from_index tests",
+    "streaming.pipeline.kafka_stream": "the reference's Kafka source and "
+    "JSON parse (COVERAGE rows S3/S4); needs the spark-sql-kafka package, "
+    "so no local workload can start it",
+    "sources.lake.archive_stream": "the reference's Kafka-to-lake "
+    "archiver (COVERAGE row S11)",
+    "sources.lake.read_json_lake": "the reference's JSON lake ingest "
+    "with an explicit schema (COVERAGE row S1)",
+    "sources.lake.read_partition": "partition-pruned lake read that "
+    "replaces the reference's path globs (COVERAGE row S1)",
+    "streaming.windows.upsert_key": "the reference's per-window upsert "
+    "doc id (COVERAGE row S8)",
+    "streaming.pipeline.memory_sink": "the in-memory sink the stream "
+    "tests read (the reference's console sink, COVERAGE row S9)",
+    "functions.cleaning.epoch_s_to_timestamp": "the reference's "
+    "epoch-seconds conversion (COVERAGE row F5)",
+    "domain.pipeline.union_sources": "the reference's multi-source "
+    "merge point (COVERAGE row X1)",
+    "sources.versioned.vacuum": "the only retention for table "
+    "snapshots",
+    "sources.transactions.txn_vacuum": "the only retention for "
+    "transaction manifests",
 }
 
 
@@ -203,7 +216,7 @@ def _names(tree: ast.AST) -> set[str]:
 
 def reachability() -> dict[Node, tuple[str, ...]]:
     """Top-level package definition -> the non-test roots (registry,
-    bench, examples, perfbench) that reach it. The walk is by name: a
+    entry, bench, examples, perfbench) that reach it. The walk is by name: a
     definition is reached when a reached body names it, so a shared name
     over-approximates reach and ``unreached`` errs on the safe side."""
     from bigdata_storage_and_proccess_job_data_spark.plans import registry
@@ -301,11 +314,12 @@ def render(entries: list[tuple[str, str, str, frozenset]]) -> str:
         "",
         "The bracketed column names the non-test roots that reach each",
         "function through a name-based static walk: `registry` (registered",
-        "queries and plan probes), `bench` (bench.py), `examples`,",
-        "`perfbench`; `unreached` means none does (tests may still call",
-        "it). tests/test_op_index.py fails when a public function in",
-        "operators/ is unreached and not listed in",
-        "tools/op_index.py:KEPT_UNREACHED.",
+        "queries and plan probes), `entry` (__spark_entry__.py), `bench`",
+        "(bench.py), `examples`, `perfbench`; `unreached` means none does",
+        "(tests may still call it). tests/test_op_index.py fails when a",
+        "public function outside plans/ is unreached and not listed in",
+        "tools/op_index.py:KEPT_UNREACHED, or shares its bare name with",
+        "another one.",
         "",
         f"{len(entries)} public functions; {len(unreached)} unreached "
         f"({unreached_lines} source lines).",
