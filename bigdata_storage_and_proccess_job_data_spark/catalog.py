@@ -30,8 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Schema memo: a real lake serves table schemas from its metastore /
 # table-format metadata; re-running parquet footer inference on every
 # load_table call is a test-fixture artifact that costs a driver round

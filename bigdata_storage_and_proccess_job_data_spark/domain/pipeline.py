@@ -82,7 +82,7 @@ def normalize_raw(raw: DataFrame, source: str = "linkedin") -> DataFrame:
         F.col("description"),
         loc.alias("location"),
         F.lit(None).cast("string").alias("location_country"),
-        cleaning.truncate_at(loc, ",").alias("location_city"),
+        cleaning.truncate_at(loc).alias("location_city"),
         F.lit(None).cast("string").alias("location_state"),
         cleaning.clean_numeric_string(F.col("min_salary")).alias("salary_min"),
         cleaning.clean_numeric_string(F.col("max_salary")).alias("salary_max"),
@@ -189,12 +189,13 @@ def enrich_postings(df: DataFrame, event_date: str) -> DataFrame:
     return out
 
 
-def company_stats(df: DataFrame) -> DataFrame:
-    """A2 (spark_batch_v2.py:261-270)."""
-    return aggregates.cube(
-        df,
+# The six reference aggregation cubes: name -> (dims, measures). The
+# measures are built per call (Columns need a live session).
+ALL_CUBES = {
+    # A2 (spark_batch_v2.py:261-270)
+    "company_stats": (
         ["company_name_clean"],
-        {
+        lambda: {
             "job_count": F.count("job_id"),
             "avg_salary": F.avg("salary_avg"),
             "min_salary": F.min("salary_min_usd"),
@@ -206,84 +207,55 @@ def company_stats(df: DataFrame) -> DataFrame:
                 F.col("remote_allowed") == True  # noqa: E712 (:269)
             ),
         },
-    )
-
-
-def location_stats(df: DataFrame) -> DataFrame:
-    """A3 (spark_batch_v2.py:279-283)."""
-    return aggregates.cube(
-        df,
+    ),
+    # A3 (spark_batch_v2.py:279-283)
+    "location_stats": (
         ["location_country_clean", "location_city", "region"],
-        {
+        lambda: {
             "job_count": F.count("job_id"),
             "avg_salary": F.avg("salary_avg"),
             "remote_count": aggregates.conditional_count(
                 F.col("remote_allowed") == True  # noqa: E712
             ),
         },
-    )
-
-
-def category_experience_stats(df: DataFrame) -> DataFrame:
-    """A4 (spark_batch_v2.py:292-298) -- percentile_approx {0.25,.5,.75},
-    approximate by design (the 100 TB default; exact variant available
-    via F.percentile for small outputs)."""
-    return aggregates.cube(
-        df,
+    ),
+    # A4 (spark_batch_v2.py:292-298) -- percentile_approx {0.25,.5,.75},
+    # approximate by design (the 100 TB default; exact variant available
+    # via F.percentile for small outputs)
+    "category_experience_stats": (
         ["job_category", "experience_level_final"],
-        {
+        lambda: {
             "job_count": F.count("job_id"),
             "avg_salary": F.avg("salary_avg"),
             "salary_p25": F.percentile_approx("salary_avg", 0.25),
             "salary_p50": F.percentile_approx("salary_avg", 0.50),
             "salary_p75": F.percentile_approx("salary_avg", 0.75),
         },
-    )
-
-
-def worktype_stats(df: DataFrame) -> DataFrame:
-    """A5 (spark_batch_v2.py:307-311)."""
-    return aggregates.cube(
-        df,
+    ),
+    # A5 (spark_batch_v2.py:307-311)
+    "worktype_stats": (
         ["work_type_clean"],
-        {
+        lambda: {
             "job_count": F.count("job_id"),
             "avg_salary": F.avg("salary_avg"),
             "with_salary_count": aggregates.conditional_count(
                 F.col("salary_avg").isNotNull()
             ),
         },
-    )
-
-
-def temporal_stats(df: DataFrame) -> DataFrame:
-    """A6 (spark_batch_v2.py:321-324)."""
-    return aggregates.cube(
-        df,
+    ),
+    # A6 (spark_batch_v2.py:321-324)
+    "temporal_stats": (
         ["posted_day_of_week", "posted_month"],
-        {
+        lambda: {
             "job_count": F.count("job_id"),
             "avg_salary": F.avg("salary_avg"),
         },
-    )
-
-
-def salary_distribution(df: DataFrame) -> DataFrame:
-    """A7 (spark_batch_v2.py:333-335)."""
-    return aggregates.cube(
-        df,
+    ),
+    # A7 (spark_batch_v2.py:333-335)
+    "salary_distribution": (
         ["salary_category", "job_category"],
-        {"job_count": F.count("job_id")},
-    )
-
-
-ALL_CUBES = {
-    "company_stats": company_stats,
-    "location_stats": location_stats,
-    "category_experience_stats": category_experience_stats,
-    "worktype_stats": worktype_stats,
-    "temporal_stats": temporal_stats,
-    "salary_distribution": salary_distribution,
+        lambda: {"job_count": F.count("job_id")},
+    ),
 }
 
 DETAIL_COLUMNS = [
@@ -306,8 +278,8 @@ def batch_job(postings: DataFrame, event_date: str) -> dict[str, DataFrame]:
     outputs: dict[str, DataFrame] = {
         "jobs_detail": enriched.select(*DETAIL_COLUMNS)
     }
-    for name, build in ALL_CUBES.items():
-        outputs[name] = build(enriched).withColumn(
+    for name, (dims, measures) in ALL_CUBES.items():
+        outputs[name] = aggregates.cube(enriched, dims, measures()).withColumn(
             "report_date", F.lit(event_date).cast("date")
         )
     return outputs

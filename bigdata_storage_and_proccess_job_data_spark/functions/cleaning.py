@@ -32,13 +32,13 @@ def clean_numeric_string(col: Column | str) -> Column:
     return F.when(stripped == "", None).otherwise(stripped).cast("double")
 
 
-def truncate_at(col: Column | str, sep: str = ",") -> Column:
+def truncate_at(col: Column | str) -> Column:
     """Keep text before the first separator: ``"Austin, TX"`` -> ``"Austin"``.
 
     Reference: spark_job.py:50 (location truncation at comma).
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, f"{sep}.*$", "")
+    return F.regexp_replace(c, ",.*$", "")
 
 
 def canonicalize(col: Column | str) -> Column:

@@ -30,17 +30,16 @@ def convert_currency(
     amount: Column | str,
     currency: Column | str,
     rates: dict[str, float],
-    default_rate: float = 1.0,
 ) -> Column:
     """Multiply by a per-currency rate (reference: GBP*1.27,
-    spark_batch_v2.py:83-89). Table-driven when-chain; unknown -> default."""
+    spark_batch_v2.py:83-89). Table-driven when-chain; unknown -> unchanged."""
     a = F.col(amount) if isinstance(amount, str) else amount
     c = F.col(currency) if isinstance(currency, str) else currency
     expr: Column | None = None
     for code, rate in rates.items():
         cond = c == code
         expr = F.when(cond, a * rate) if expr is None else expr.when(cond, a * rate)
-    return a * default_rate if expr is None else expr.otherwise(a * default_rate)
+    return a * 1.0 if expr is None else expr.otherwise(a * 1.0)
 
 
 def midpoint_coalesce(lo: Column | str, hi: Column | str) -> Column:
@@ -62,24 +61,24 @@ def value_range(lo: Column | str, hi: Column | str) -> Column:
     return hi_c - lo_c
 
 
-def safe_ratio(num: Column | str, den: Column | str, scale: float = 100.0) -> Column:
-    """(num/den)*scale with null (not error/inf) when den is 0 or null.
+def safe_ratio(num: Column | str, den: Column | str) -> Column:
+    """(num/den)*100 with null (not error/inf) when den is 0 or null.
 
     Reference: competition score (applies/views)*100,
     spark_batch_v2.py:191-195.
     """
     n = F.col(num) if isinstance(num, str) else num
     d = F.col(den) if isinstance(den, str) else den
-    return F.when(d > 0, (n / d) * scale)
+    return F.when(d > 0, (n / d) * 100.0)
 
 
 def regex_classify(
     col: Column | str,
     rules: Sequence[tuple[str, str]],
     default: str = "Other",
-    case_insensitive: bool = True,
 ) -> Column:
-    """First-match-wins regex classifier as one CASE expression.
+    """First-match-wins case-insensitive regex classifier as one CASE
+    expression.
 
     ``rules`` is an ordered [(pattern, label), ...]; order matters exactly
     as in the reference's when-chains (spark_batch_v2.py:124-148 checks
@@ -88,8 +87,7 @@ def regex_classify(
     c = F.col(col) if isinstance(col, str) else col
     expr: Column | None = None
     for pattern, label in rules:
-        pat = f"(?i){pattern}" if case_insensitive else pattern
-        cond = c.rlike(pat)
+        cond = c.rlike(f"(?i){pattern}")
         expr = F.when(cond, label) if expr is None else expr.when(cond, label)
     return F.lit(default) if expr is None else expr.otherwise(default)
 

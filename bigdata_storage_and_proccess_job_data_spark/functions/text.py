@@ -128,9 +128,7 @@ def word_ngrams(col: Column | str, n: int = 2) -> Column:
     return acc
 
 
-def hashed_doc_vector(
-    col: Column | str, dim: int = 64, seed: int = 0
-) -> Column:
+def hashed_doc_vector(col: Column | str, dim: int = 64) -> Column:
     """Feature-hashed document vector (the hashing trick, Weinberger et
     al., ICML 2009): each lowercased whitespace token hashes to one of
     ``dim`` cells with a +-1 sign, and the vector is the signed count
@@ -157,7 +155,7 @@ def hashed_doc_vector(
 
     def enc(tok: Column) -> Column:
         h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"hv:{seed}:"), tok)), 1, 15),
+            F.substring(F.md5(F.concat(F.lit("hv:0:"), tok)), 1, 15),
             16,
             10,
         ).cast("long")

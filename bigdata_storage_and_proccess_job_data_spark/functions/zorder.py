@@ -38,18 +38,18 @@ def normalize_to_bits(
     return F.floor(clamped * top).cast("long")
 
 
-def z_value(normalized: list[Column], bits: int = 16) -> Column:
-    """Morton code of k pre-normalized [0, 2^bits) longs: bit i of
-    column j lands at position i*k + j. k*bits must be <= 63."""
+def z_value(normalized: list[Column]) -> Column:
+    """Morton code of k pre-normalized [0, 2^16) longs: bit i of column
+    j lands at position i*k + j. k*16 must be <= 63 (at most 3 columns)."""
     k = len(normalized)
-    if k * bits > 63:
-        raise ValueError(f"{k} cols x {bits} bits exceeds a signed long")
+    if k * 16 > 63:
+        raise ValueError(f"{k} cols x 16 bits exceeds a signed long")
     terms = [
         F.shiftleft(
             F.shiftright(c, i).bitwiseAND(F.lit(1).cast("long")), i * k + j
         )
         for j, c in enumerate(normalized)
-        for i in range(bits)
+        for i in range(16)
     ]
     return reduce(lambda a, b: a.bitwiseOR(b), terms)
 
@@ -77,11 +77,9 @@ def write_zordered(
     df: DataFrame,
     path: str,
     cols: list[str],
-    bits: int = 16,
     n_files: int = 16,
-    mode: str = "overwrite",
 ) -> None:
-    """Z-order-cluster ``df`` on ``cols`` (any count with k*bits <= 63;
+    """Z-order-cluster ``df`` on ``cols`` (at most 3, 16 bits each;
     numeric, timestamp, or date typed) and write parquet: one tiny
     min/max agg (2k scalars to the driver -- bounds, not data), Morton
     code as a derived column, global range partitioning + in-file sort
@@ -91,8 +89,8 @@ def write_zordered(
     ::test_zorder_three_dims_and_timestamp). Empty input or an all-null
     column degrades gracefully (constant code for that column)."""
     (
-        zorder_cluster(df, cols, bits=bits, n_files=n_files)
-        .write.mode(mode)
+        zorder_cluster(df, cols, n_files=n_files)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -100,7 +98,6 @@ def write_zordered(
 def zorder_cluster(
     df: DataFrame,
     cols: list[str],
-    bits: int = 16,
     n_files: int = 16,
 ) -> DataFrame:
     """The clustering half of write_zordered, reusable by any sink that
@@ -114,11 +111,11 @@ def zorder_cluster(
         *[F.max(exprs[c]).alias(f"_hi_{c}") for c in cols],
     ).first()
     normalized = [
-        normalize_to_bits(exprs[c], bounds[f"_lo_{c}"], bounds[f"_hi_{c}"], bits)
+        normalize_to_bits(exprs[c], bounds[f"_lo_{c}"], bounds[f"_hi_{c}"], 16)
         for c in cols
     ]
     return (
-        df.withColumn("_z", z_value(normalized, bits))
+        df.withColumn("_z", z_value(normalized))
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")

@@ -59,16 +59,15 @@ def salted_two_phase(
     df: DataFrame,
     key: str | Column,
     measures: dict[str, tuple[str, str | None]],
-    buckets: int = 16,
     key_name: str = "key",
 ) -> DataFrame:
     """Aggregation over a PATHOLOGICALLY skewed key, salted end-to-end:
-    phase 1 groups by (key, salt) so a hot key's rows spread over
-    ``buckets`` reducers instead of melting one; phase 2 re-aggregates
-    the <= buckets partial rows per key. AQE's skew handling only splits
+    phase 1 groups by (key, salt) so a hot key's rows spread over 16
+    reducers instead of melting one; phase 2 re-aggregates the <= 16
+    partial rows per key. AQE's skew handling only splits
     skewed JOIN partitions -- a skewed aggregation key needs this
     two-phase shape (or no fix at all, since the final shuffle moves
-    only partial rows: key_cardinality x buckets, not the fact table).
+    only partial rows: key_cardinality x 16, not the fact table).
 
     ``measures``: name -> (agg, col) with agg in count/sum/min/max --
     the re-aggregatable measures (count re-aggregates as sum of partial
@@ -76,7 +75,7 @@ def salted_two_phase(
     expression Column (aliased to ``key_name``)."""
     key_col = F.col(key) if isinstance(key, str) else key
     salted = df.withColumn(key_name, key_col).withColumn(
-        "_salt", _row_salt(buckets)
+        "_salt", _row_salt(16)
     )
     partial_aggs, final_aggs = [], []
     for name, (agg, col) in measures.items():
@@ -137,10 +136,10 @@ def count_distinct_spread(
     )
 
 
-def global_sum(df: DataFrame, col: str, alias: str = "total") -> DataFrame:
+def global_sum(df: DataFrame, col: str) -> DataFrame:
     """Whole-table sum -- the DataFrame form of the reference's RDD
     map/reduce demo (k8s/job.py:24-35, SURVEY.md A8)."""
-    return df.agg(F.sum(col).alias(alias))
+    return df.agg(F.sum(col).alias("total"))
 
 
 def observe_expectations(
@@ -191,7 +190,6 @@ def hll_sketch(
     df: DataFrame,
     key: str,
     dims: list[str] | None = None,
-    lgk: int = 12,
 ) -> DataFrame:
     """Mergeable distinct-count sketch per dimension group: one
     Datasketches HLL register set (a few KB at lgk=12, ~1.6% relative
@@ -208,7 +206,7 @@ def hll_sketch(
     tests -- so daily incremental accumulation gives the identical
     estimate a monolithic scan would."""
     keys = [F.col(d) for d in (dims or [])]
-    agg = F.hll_sketch_agg(F.col(key), F.lit(lgk)).alias("sketch")
+    agg = F.hll_sketch_agg(F.col(key), F.lit(12)).alias("sketch")
     if keys:
         return df.groupBy(*keys).agg(agg)
     return df.agg(agg)
@@ -281,11 +279,10 @@ def cms_sketch(
     key: str,
     width: int = 2048,
     depth: int = 5,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan 2005) as a DataFrame:
     ``depth`` independent md5-derived hash rows x ``width`` buckets,
-    each cell the sum of row weights (default 1) hashing into it. The
+    each cell the count of rows hashing into it. The
     result is at most depth*width rows of (row, bucket, cnt) -- a
     fixed-size frequency summary of an unbounded key space, built by
     ONE partial+final hash aggregation (the explode ships depth tiny
@@ -296,18 +293,17 @@ def cms_sketch(
     sketch EXACTLY, so daily sketches answer "how often did key X
     appear this quarter" without rescanning -- with CMS's one-sided
     guarantee (estimate >= truth; overestimate bounded by
-    e * total_weight / width per row, driven down by the min over
+    e * total_rows / width per row, driven down by the min over
     depth rows). NULL keys count under a shared sentinel bucket set
     (all NULLs are one key, as in GROUP BY). Point lookups:
     cms_lookup."""
     if width < 1 or depth < 1:
         raise ValueError("width and depth must be positive")
-    w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     rows = F.explode(_cms_cells(F.col(key), width, depth)).alias("_c")
     return (
-        df.select(w.alias("_w"), rows)
+        df.select(rows)
         .groupBy(F.col("_c.row").alias("row"), F.col("_c.bucket").alias("bucket"))
-        .agg(F.sum("_w").cast("long").alias("cnt"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -427,7 +423,6 @@ def psi_bins(
     cur: DataFrame,
     value_col: str,
     bins: int = 10,
-    digits: int = 4,
 ) -> DataFrame:
     """Population Stability Index bins: has a numeric column's
     distribution DRIFTED between a reference snapshot and a current one
@@ -501,12 +496,12 @@ def psi_bins(
             "bin",
             "ref_n",
             "cur_n",
-            stable_round(F.col("_rs"), digits).alias("ref_share"),
-            stable_round(F.col("_cs"), digits).alias("cur_share"),
+            stable_round(F.col("_rs"), 4).alias("ref_share"),
+            stable_round(F.col("_cs"), 4).alias("cur_share"),
             stable_round(
                 (F.col("_rs") - F.col("_cs"))
                 * F.log(F.col("_rs") / F.col("_cs")),
-                digits,
+                4,
             ).alias("contrib"),
         )
         .orderBy("bin")
@@ -517,8 +512,6 @@ def profile_table(
     df: DataFrame,
     cols: Sequence[str] | None = None,
     distinct: str = "approx",
-    rsd: float = 0.05,
-    digits: int = 4,
 ) -> DataFrame:
     """Schema-driven table profile in ONE aggregation pass: one output
     row per column with (dtype, n_rows, n_nulls, null_frac, n_distinct,
@@ -528,8 +521,8 @@ def profile_table(
     wide row unpivots via inline; min/max cast to string for a uniform
     schema, mean/stddev populated for numeric columns only.
 
-    ``distinct='approx'`` (default) uses approx_count_distinct (HLL,
-    ``rsd`` relative error) -- the 100 TB path, since EXACT multi-column
+    ``distinct='approx'`` (default) uses approx_count_distinct (HLL, 5%
+    relative error) -- the 100 TB path, since EXACT multi-column
     count_distinct plans an Expand that multiplies every input row by
     the number of distinct aggregates. ``distinct='exact'`` accepts that
     cost for audit runs (and is what the cross-engine parity test uses);
@@ -555,7 +548,7 @@ def profile_table(
         if distinct == "exact":
             nd = F.count_distinct(col).cast("long")
         elif distinct == "approx":
-            nd = F.approx_count_distinct(col, rsd).cast("long")
+            nd = F.approx_count_distinct(col, 0.05).cast("long")
         else:
             nd = F.lit(None).cast("long")
         null_double = F.lit(None).cast("double")
@@ -569,12 +562,12 @@ def profile_table(
                 F.min(col).cast("string").alias("min"),
                 F.max(col).cast("string").alias("max"),
                 (
-                    stable_round(F.avg(col), digits)
+                    stable_round(F.avg(col), 4)
                     if numeric
                     else null_double
                 ).alias("mean"),
                 (
-                    stable_round(F.stddev_samp(col), digits)
+                    stable_round(F.stddev_samp(col), 4)
                     if numeric
                     else null_double
                 ).alias("stddev"),
@@ -588,9 +581,7 @@ def profile_table(
         "dtype",
         "n_rows",
         "n_nulls",
-        stable_round(
-            F.col("n_nulls") / F.col("n_rows"), digits
-        ).alias("null_frac"),
+        stable_round(F.col("n_nulls") / F.col("n_rows"), 4).alias("null_frac"),
         "n_distinct",
         "min",
         "max",
@@ -1063,13 +1054,9 @@ def kmv_estimate(sketches: DataFrame, k: int = 256) -> DataFrame:
     )
 
 
-def kmv_set_ops(
-    pairs: DataFrame,
-    left: str = "sketch_a",
-    right: str = "sketch_b",
-    k: int = 256,
-) -> DataFrame:
-    """Set-operation estimates for two sketch columns side by side
+def kmv_set_ops(pairs: DataFrame, k: int = 256) -> DataFrame:
+    """Set-operation estimates for the two sketch columns ``sketch_a``
+    and ``sketch_b`` side by side
     (join your per-segment sketch frames however the question demands,
     then call this): appends ``union_estimate``, ``jaccard``,
     ``intersection_estimate``, ``left_only_estimate`` and
@@ -1080,7 +1067,7 @@ def kmv_set_ops(
     values present in BOTH inputs is an unbiased Jaccard estimate, and
     intersection = jaccard * |union|. Pure array expressions -- codegen,
     no shuffle, no UDF; both empty -> jaccard NULL, estimates 0."""
-    a, b = F.col(left), F.col(right)
+    a, b = F.col("sketch_a"), F.col("sketch_b")
     u = F.slice(F.array_sort(F.array_distinct(F.concat(a, b))), 1, k)
     out = pairs.withColumn("_u", u)
     union_est = _kmv_estimate_expr(F.col("_u"), k)
@@ -1277,7 +1264,6 @@ def cuped_adjust(
     keys: list[str],
     metric_col: str,
     covariate_col: str,
-    out_col: str = "metric_cuped",
 ) -> DataFrame:
     """CUPED variance reduction (Deng et al., WSDM 2013): adjust an
     experiment metric by a PRE-PERIOD covariate so welch_ttest /
@@ -1289,10 +1275,10 @@ def cuped_adjust(
 
     One hash agg fits (theta, mean_x) per group, broadcast-joined back;
     rows with a NULL covariate or metric pass through unadjusted (NULL
-    out_col -- the caller decides whether unadjusted units enter the
-    readout). Degenerate groups (var(x) = 0 or < 2 pairs) adjust by
-    theta = 0, i.e. out_col = metric unchanged -- never a silent drop.
-    Returns the input plus ``out_col``."""
+    metric_cuped -- the caller decides whether unadjusted units enter
+    the readout). Degenerate groups (var(x) = 0 or < 2 pairs) adjust by
+    theta = 0, i.e. metric_cuped = metric unchanged -- never a silent
+    drop. Returns the input plus ``metric_cuped``."""
     from pyspark.sql import Window  # noqa: F401  (parity with siblings)
 
     y = F.col(metric_col).cast("double")
@@ -1322,7 +1308,7 @@ def cuped_adjust(
     )
     out = df.join(F.broadcast(fit), list(keys), "left")
     return out.withColumn(
-        out_col,
+        "metric_cuped",
         F.when(
             both & F.col("_theta").isNotNull(),
             y - F.col("_theta") * (x - F.col("_mx")),
@@ -1737,8 +1723,6 @@ def minimum_detectable_effect(
     group_a,
     group_b,
     keys: list[str] | None = None,
-    z_alpha: float = 1.959964,
-    z_power: float = 0.841621,
 ) -> DataFrame:
     """Experiment power readout per key group: given the traffic an
     experiment ACTUALLY collected, the smallest true mean difference
@@ -1749,9 +1733,9 @@ def minimum_detectable_effect(
     ``mde_abs`` = (z_alpha + z_power) * se, and ``mde_rel`` = mde_abs
     / |mean_a| (NULL when the baseline mean is 0).
 
-    Defaults are the conventional two-sided alpha=0.05 (z=1.96),
-    power=0.80 (z=0.84); both z's are PARAMETERS (no homegrown CDF --
-    the welch_ttest discipline). Degenerate groups (an empty arm, or
+    The z's are the conventional two-sided alpha=0.05 (z=1.959964) and
+    power=0.80 (z=0.841621), as constants (no homegrown CDF -- the
+    welch_ttest discipline). Degenerate groups (an empty arm, or
     zero variance) report NULL mde.
 
     Scale shape: ONE hash aggregate with conditional sibling
@@ -1778,7 +1762,7 @@ def minimum_detectable_effect(
         (na - 1) * F.col("_var_a") + (nb - 1) * F.col("_var_b")
     ) / (na + nb - 2)
     se = F.sqrt(s2 * (1 / na + 1 / nb))
-    mde = F.lit(float(z_alpha) + float(z_power)) * se
+    mde = F.lit(1.959964 + 0.841621) * se
     ok = (na > 1) & (nb > 1) & (se > 0)
     return g.select(
         *keys,
@@ -1861,8 +1845,6 @@ def conformal_apply(
     fit: DataFrame,
     pred_col: str,
     keys: list[str] | None = None,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
 ) -> DataFrame:
     """Attach split-conformal bands from ``conformal_interval``'s fit
     frame: lo/hi = pred -+ qhat, NULL when the key's calibration was
@@ -1877,8 +1859,8 @@ def conformal_apply(
         else df.crossJoin(F.broadcast(sel))
     )
     p = F.col(pred_col).cast("double")
-    return j.withColumn(lo_col, p - F.col("qhat")).withColumn(
-        hi_col, p + F.col("qhat")
+    return j.withColumn("lo", p - F.col("qhat")).withColumn(
+        "hi", p + F.col("qhat")
     ).drop("qhat")
 
 
@@ -2334,7 +2316,6 @@ def weighted_quantile(
     val_col: str,
     weight_col: str,
     q: float,
-    out: str = "wq",
 ) -> DataFrame:
     """EXACT weighted q-quantile per key group -- the weighted
     percentile Spark SQL lacks (percentile/percentile_approx weight
@@ -2350,7 +2331,7 @@ def weighted_quantile(
     the engine (a single pathological key wants a two-phase global
     rank like global_row_number instead). Rows with NULL value or NULL/
     non-positive weight are excluded; a group with no surviving rows
-    emits no row."""
+    emits no row. The quantile is the ``wq`` column."""
     if not 0 < q <= 1:
         raise ValueError(f"q must be in (0, 1]: {q}")
     keys = keys or []
@@ -2376,8 +2357,8 @@ def weighted_quantile(
     # NULL row (review), and no legitimate group can yield a NULL min
     return (
         hit.groupBy(*keys)
-        .agg(F.min("_v").alias(out))
-        .filter(F.col(out).isNotNull())
+        .agg(F.min("_v").alias("wq"))
+        .filter(F.col("wq").isNotNull())
     )
 
 
@@ -2433,8 +2414,6 @@ def bh_adjust(
     p_col: str,
     alpha: float = 0.05,
     keys: "list[str] | None" = None,
-    q_out: str = "q_value",
-    reject_out: str = "reject",
 ) -> DataFrame:
     """Benjamini-Hochberg FDR adjustment per key family -- the
     multiple-testing control an experiment platform runs over its
@@ -2499,8 +2478,8 @@ def bh_adjust(
         F.lit(1.0),
     )
     return (
-        ranked.withColumn(q_out, q)
-        .withColumn(reject_out, F.col(q_out) <= F.lit(alpha))
+        ranked.withColumn("q_value", q)
+        .withColumn("reject", F.col("q_value") <= F.lit(alpha))
         .drop("_p", "_rn", "_m")
     )
 
@@ -3014,18 +2993,17 @@ def disparity_report(
     group_col: str,
     label_col: str,
     pred_col: str,
-    keys: "list[str] | None" = None,
 ) -> DataFrame:
     """Per-group fairness slices for a binary classifier -- the
     disaggregated readout a responsible pipeline checks before shipping
     a filter or ranker trained on its labels: does the model's positive
     rate / true-positive rate / false-positive rate differ across
-    segments? Returns one row per (keys, group): n, positive_rate
+    segments? Returns one row per group: n, positive_rate
     (P(pred=1) -- the demographic-parity quantity), tpr (P(pred=1 |
     label=1) -- equal opportunity), fpr (P(pred=1 | label=0)), each
     group's POOLED counterpart repeated on the row (the benford/woe
     convention: positive_rate_overall / tpr_overall / fpr_overall from
-    the pooled counts over all groups in the key slice), and the gaps
+    the pooled counts over all groups), and the gaps
     dp_gap / eo_gap / fpr_gap = group rate minus pooled rate. A group
     with no positives (or no negatives) has an undefined tpr (fpr) and
     the gap stays NULL -- absence of evidence, not zero disparity.
@@ -3033,13 +3011,12 @@ def disparity_report(
     the segment attribute is itself a segment); NULL labels/preds are
     excluded; out-of-domain labels fail loud via _binary01.
 
-    Scale shape: ONE conditional-count hash agg to the (keys, group)
-    frame; the pooled rates fold over that POST-AGG frame as window
-    sums partitioned by the keys -- bounded by the GROUP alphabet, the
+    Scale shape: ONE conditional-count hash agg to the group frame; the
+    pooled rates fold over that POST-AGG frame as unpartitioned window
+    sums -- bounded by the GROUP alphabet, the
     ks_test honesty standard: an id-like group_col (one group per row)
     makes the frame row-sized and the window a single-task sort; bin
     or hash such columns first."""
-    keys = keys or []
     from pyspark.sql import Window
 
     y = _binary01(F.col(label_col), "disparity_report", label_col)
@@ -3047,19 +3024,18 @@ def disparity_report(
     base = df.filter(
         F.col(label_col).isNotNull() & F.col(pred_col).isNotNull()
     ).select(
-        *keys,
         F.col(group_col).alias("_g"),
         (y == 1).alias("_y"),
         (p == 1).alias("_p"),
     )
-    agg = base.groupBy(*keys, "_g").agg(
+    agg = base.groupBy("_g").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("_p").cast("long")).alias("_n_pp"),
         F.sum(F.col("_y").cast("long")).alias("_n_pos"),
         F.sum((F.col("_y") & F.col("_p")).cast("long")).alias("_tp"),
         F.sum((~F.col("_y") & F.col("_p")).cast("long")).alias("_fp"),
     )
-    w = Window.partitionBy(*[F.col(k) for k in keys])
+    w = Window.partitionBy()
     t_n = F.sum("n").over(w)
     t_pp = F.sum("_n_pp").over(w)
     t_pos = F.sum("_n_pos").over(w)
@@ -3074,7 +3050,6 @@ def disparity_report(
     tpr_all = F.when(t_pos > 0, t_tp / t_pos)
     fpr_all = F.when(t_neg > 0, t_fp / t_neg)
     return agg.select(
-        *keys,
         F.col("_g").alias(group_col),
         "n",
         rate.alias("positive_rate"),
@@ -3346,12 +3321,8 @@ def mcnemar_test(
 def profile_diff(
     old,
     new,
-    cols: "Sequence[str] | None" = None,
     distinct: str = "approx",
     null_frac_tol: float = 0.01,
-    distinct_ratio_tol: float = 0.5,
-    mean_shift_tol: float = 0.25,
-    digits: int = 4,
 ) -> DataFrame:
     """Column-level diff of two snapshots' PROFILES -- the schema-drift
     alarm beside table_diff's row-level one: table_diff answers "which
@@ -3369,9 +3340,9 @@ def profile_diff(
                     table_diff changed_cols convention:
                     'null_frac'  |null_frac delta| > null_frac_tol
                     'n_distinct' cardinality ratio outside
-                                 [1/(1+tol), 1+tol] (both sides > 0)
-                    'mean'       |mean delta| > mean_shift_tol *
-                                 stddev_old (numeric, stddev_old > 0)
+                                 [1/1.5, 1.5] (both sides > 0)
+                    'mean'       |mean delta| > 0.25 * stddev_old
+                                 (numeric, stddev_old > 0)
       plus the per-side evidence columns (null_frac / n_distinct /
       mean / stddev, old and new) so the alarm is auditable in place.
 
@@ -3379,14 +3350,14 @@ def profile_diff(
     zero stddev, zero distincts) abstains rather than alarms -- absence
     of evidence is not drift (the disparity_report convention).
     ``distinct='approx'`` is the 100 TB default (HLL); remember approx
-    counts jitter run to run -- widen distinct_ratio_tol rather than
-    reading single-digit deltas. Scale shape: two one-pass profile
+    counts jitter run to run -- the 1.5x cardinality band absorbs that
+    rather than reading single-digit deltas. Scale shape: two one-pass profile
     aggs, then everything operates on the two O(columns) frames met in
     a broadcast full-outer join."""
-    if null_frac_tol < 0 or distinct_ratio_tol < 0 or mean_shift_tol < 0:
+    if null_frac_tol < 0:
         raise ValueError("tolerances must be >= 0")
-    o = profile_table(old, cols=cols, distinct=distinct, digits=digits)
-    n = profile_table(new, cols=cols, distinct=distinct, digits=digits)
+    o = profile_table(old, distinct=distinct)
+    n = profile_table(new, distinct=distinct)
     os_ = o.select(
         "column",
         *[F.col(c).alias(f"{c}_old") for c in (
@@ -3406,7 +3377,7 @@ def profile_diff(
         F.abs(F.col("null_frac_new") - F.col("null_frac_old"))
         > F.lit(null_frac_tol)
     )
-    ratio_hi = F.lit(1.0 + distinct_ratio_tol)
+    ratio_hi = F.lit(1.5)
     nd_old, nd_new = F.col("n_distinct_old"), F.col("n_distinct_new")
     nd_trip = (
         (nd_old > 0)
@@ -3422,7 +3393,7 @@ def profile_diff(
         & (F.col("stddev_old") > 0)
         & (
             F.abs(F.col("mean_new") - F.col("mean_old"))
-            > F.lit(mean_shift_tol) * F.col("stddev_old")
+            > F.lit(0.25) * F.col("stddev_old")
         )
     )
     flags = F.array_compact(

@@ -29,7 +29,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    suffix: str = "_asof",
     tolerance: str | None = None,
 ) -> DataFrame:
     """Backward (inclusive) as-of join. Right rows are deduplicated to
@@ -53,7 +52,7 @@ def asof_join(
     row's value -- per-column reach-back would let a value escape the
     tolerance bound its own supplying row violates.
 
-    Returns all left columns + ``<value_col><suffix>`` columns (null when
+    Returns all left columns + ``<value_col>_asof`` columns (null when
     no right row precedes the left row, or none within tolerance).
     """
     lcols = left.columns
@@ -104,7 +103,7 @@ def asof_join(
         *[
             F.when(fresh, F.col(f"_m.{c}"))
             .otherwise(F.lit(None))
-            .alias(f"{c}{suffix}")
+            .alias(f"{c}_asof")
             for c in value_cols
         ],
     )

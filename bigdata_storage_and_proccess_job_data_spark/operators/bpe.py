@@ -34,12 +34,13 @@ EOW = "</w>"
 _WORD_SPLIT = r"\s+"
 
 
-def _word_freqs(df: DataFrame, text_col: str) -> DataFrame:
-    """(word, freq) over the corpus -- the ONE corpus-sized pass."""
+def _word_freqs(df: DataFrame) -> DataFrame:
+    """(word, freq) over the corpus ``text`` -- the ONE corpus-sized
+    pass."""
     return (
         df.select(
             F.explode(
-                F.split(F.lower(F.col(text_col)), _WORD_SPLIT)
+                F.split(F.lower(F.col("text")), _WORD_SPLIT)
             ).alias("w")
         )
         .filter(F.col("w") != "")
@@ -94,7 +95,6 @@ def _merge_pass(tokens: Column, a: str, b: str) -> Column:
 
 def bpe_train(
     df: DataFrame,
-    text_col: str = "text",
     n_merges: int = 50,
     min_freq: int = 1,
 ) -> list[tuple[str, str]]:
@@ -115,7 +115,7 @@ def bpe_train(
         raise ValueError("n_merges must be >= 1")
     if min_freq < 1:
         raise ValueError("min_freq must be >= 1")
-    words = _word_freqs(df, text_col).select(
+    words = _word_freqs(df).select(
         _initial_tokens(F.col("w")).alias("toks"), "freq"
     ).localCheckpoint()
     merges: list[tuple[str, str]] = []
@@ -162,16 +162,14 @@ def bpe_train(
 
 def bpe_encode(
     df: DataFrame,
-    text_col: str = "text",
     merges: list[tuple[str, str]] | None = None,
-    out_col: str = "bpe_tokens",
 ) -> DataFrame:
-    """Tokenize ``text_col`` with a trained merge list: lowercase,
+    """Tokenize ``text`` with a trained merge list: lowercase,
     whitespace-split, char + end-of-word init, then the merges applied
     IN TRAINING ORDER per word (each a left-to-right greedy pass --
     identical to the trainer's fold, so encoding the training corpus
     reproduces the trainer's final segmentations exactly, pinned in
-    tests). Appends ``out_col`` (array<string>).
+    tests). Appends ``bpe_tokens`` (array<string>).
 
     Arrow path (mapInPandas-free: one applyInPandas-less pandas_udf):
     the merge list is a plain broadcast closure; per batch the encoder
@@ -244,4 +242,4 @@ def bpe_encode(
 
         return col.map(doc)
 
-    return df.withColumn(out_col, enc(F.col(text_col)))
+    return df.withColumn("bpe_tokens", enc(F.col("text")))

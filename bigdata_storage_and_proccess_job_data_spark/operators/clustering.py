@@ -31,13 +31,13 @@ from bigdata_storage_and_proccess_job_data_spark.operators.similarity import (
 )
 
 
-def _unit_vectors(corpus: DataFrame, vec_col: str) -> DataFrame:
-    """(_v): the corpus vectors L2-normalized row-side (zero/NULL
+def _unit_vectors(corpus: DataFrame) -> DataFrame:
+    """(_v): the corpus ``embedding`` vectors L2-normalized row-side (zero/NULL
     vectors drop), so assignment and update both see unit vectors —
     Dhillon-Modha spherical k-means exactly, and the same
     normalization train_centroids applies to its sample."""
     return (
-        corpus.select(vectors.as_double(vec_col).alias("_raw"))
+        corpus.select(vectors.as_double("embedding").alias("_raw"))
         .filter(F.col("_raw").isNotNull())
         .withColumn("_n", vectors.norm(F.col("_raw")))
         .filter(F.col("_n") > 0)
@@ -61,7 +61,6 @@ def _normalized(rows: "list[list[float]]"):
 def kmeans_refine(
     corpus: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
     n_iters: int = 5,
 ) -> list[list[float]]:
     """Full-corpus Lloyd refinement of ``centroids`` (spherical).
@@ -76,7 +75,7 @@ def kmeans_refine(
     if not centroids:
         raise ValueError("centroids must be non-empty")
     dim = len(centroids[0])
-    v = _unit_vectors(corpus, vec_col).persist()
+    v = _unit_vectors(corpus).persist()
     try:
         cent = _normalized(centroids)
         for _ in range(n_iters):
@@ -108,13 +107,9 @@ def kmeans_refine(
 
 def kmeans_fit(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     sample_size: int = 2048,
-    sample_iters: int = 5,
     refine_iters: int = 5,
-    seed: int = 42,
 ) -> list[list[float]]:
     """End-to-end distributed k-means: deterministic-sample init
     (train_centroids — xxhash64-ordered, partition-invariant) followed
@@ -122,30 +117,21 @@ def kmeans_fit(
     train_centroids is used today (ivf_topk / ivfpq_build accept any
     centroid list), with the fit quality of the whole corpus."""
     init = train_centroids(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        sample_size=sample_size,
-        n_iters=sample_iters,
-        seed=seed,
+        corpus, n_centroids=n_centroids, sample_size=sample_size
     )
-    return kmeans_refine(
-        corpus, init, vec_col=vec_col, n_iters=refine_iters
-    )
+    return kmeans_refine(corpus, init, n_iters=refine_iters)
 
 
 def kmeans_objective(
     corpus: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
 ) -> float:
     """Mean max-cosine of each vector to its nearest centroid — the
     spherical k-means objective (higher is tighter). One scan, one
     scalar to the driver."""
     cents = [[float(x) for x in row] for row in _normalized(centroids)]
     row = (
-        _unit_vectors(corpus, vec_col)
+        _unit_vectors(corpus)
         .select(
             F.array_max(_cell_sims("_v", cents))["sim"].alias(
                 "_s"
@@ -159,10 +145,7 @@ def kmeans_objective(
 
 def semantic_dedup(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_centroids: int = 16,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -173,7 +156,7 @@ def semantic_dedup(
     share no n-grams (invisible to minhash/simhash) while never
     materializing the all-pairs product.
 
-    Returns (``id_col``, cell, component, is_keeper): ``component`` is
+    Returns (vec_id, cell, component, is_keeper): ``component`` is
     the min id reachable through the within-cell pair graph
     (neardup.connected_components) and ``is_keeper`` marks the one
     surviving row per duplicate set (the min id -- deterministic,
@@ -184,8 +167,9 @@ def semantic_dedup(
     Scale shape: assignment is the IVF coarse-quantizer path
     (codegen'd argmax over k broadcast centroids, no shuffle of
     vectors); the quadratic term is bounded per cell at (n/k)^2 --
-    size ``n_centroids`` ~ n / target_cell_size so cells stay
-    partition-sized (SemDeDup's own trick for web-scale corpora).
+    pass ``centroids`` with k ~ n / target_cell_size (the default fit
+    is k = 16) so cells stay partition-sized (SemDeDup's own trick for
+    web-scale corpora).
     Known approximation, same as the paper's: a cross-CELL
     near-duplicate pair is never compared (quantization boundary), so
     recall is bounded by the clustering; raise n_probe-style coverage
@@ -199,10 +183,8 @@ def semantic_dedup(
     )
 
     if centroids is None:
-        centroids = kmeans_fit(
-            corpus, id_col, vec_col, n_centroids=n_centroids
-        )
-    assigned = assign_cells(corpus, centroids, id_col, vec_col).select(
+        centroids = kmeans_fit(corpus)
+    assigned = assign_cells(corpus, centroids).select(
         F.col("neighbor_id").alias("_id"), "_cv", "cell"
     )
     a = assigned.select(
@@ -222,24 +204,24 @@ def semantic_dedup(
     )
     comp = neardup.connected_components(pairs)
     return (
-        assigned.select(F.col("_id").alias(id_col), "cell")
+        assigned.select(F.col("_id").alias("vec_id"), "cell")
         .join(
             comp.select(
-                F.col("id").alias(id_col),
+                F.col("id").alias("vec_id"),
                 F.col("component"),
             ),
-            id_col,
+            "vec_id",
             "left",
         )
         .select(
-            id_col,
+            "vec_id",
             "cell",
-            F.coalesce(F.col("component"), F.col(id_col)).alias(
+            F.coalesce(F.col("component"), F.col("vec_id")).alias(
                 "component"
             ),
             (
-                F.coalesce(F.col("component"), F.col(id_col))
-                == F.col(id_col)
+                F.coalesce(F.col("component"), F.col("vec_id"))
+                == F.col("vec_id")
             ).alias("is_keeper"),
         )
     )
@@ -248,7 +230,6 @@ def semantic_dedup(
 def davies_bouldin(
     corpus: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
 ) -> float:
     """Davies-Bouldin index of a centroid set over the corpus: mean over
     clusters of max_{j!=i} (S_i + S_j) / M_ij, with S_i the mean
@@ -270,7 +251,7 @@ def davies_bouldin(
     cents = [[float(x) for x in row] for row in _normalized(centroids)]
     sims = F.array_max(_cell_sims("_v", cents))
     per = (
-        _unit_vectors(corpus, vec_col)
+        _unit_vectors(corpus)
         .select(
             sims["cell"].alias("_cell"),
             F.sqrt(

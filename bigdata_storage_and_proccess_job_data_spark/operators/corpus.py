@@ -125,12 +125,10 @@ def contamination_pairs(
     bench: DataFrame,
     id_col: str,
     text_col: str,
-    ngram: int = 5,
-    min_shared: int = 3,
 ) -> DataFrame:
-    """Benchmark-contamination check: train documents sharing >=
-    ``min_shared`` distinct word ``ngram``-shingles with any benchmark
-    document. Output: (train_id, bench_id, n_shared).
+    """Benchmark-contamination check: train documents sharing >= 3
+    distinct word 5-shingles with any benchmark document. Output:
+    (train_id, bench_id, n_shared).
 
     Inverted-index equi-join on the shingle string: each side explodes to
     (id, shingle) rows, the join meets only shingle-sharing pairs, and a
@@ -142,7 +140,7 @@ def contamination_pairs(
         return df.select(
             F.col(id_col).alias(out_id),
             F.explode(
-                F.array_distinct(text.word_ngrams(text_col, ngram))
+                F.array_distinct(text.word_ngrams(text_col, 5))
             ).alias("_shingle"),
         )
 
@@ -152,21 +150,21 @@ def contamination_pairs(
         t.join(b, "_shingle")
         .groupBy("train_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )
 
 
-def hash_bucket(key: Column, salt: str = "", buckets: int = 100) -> Column:
-    """Deterministic engine-portable bucket in [0, buckets): md5 of the
+def hash_bucket(key: Column, salt: str = "") -> Column:
+    """Deterministic engine-portable bucket in [0, 100): md5 of the
     stringified key (+salt), first 8 hex digits as an integer, mod
-    buckets. md5 is bit-identical everywhere (unlike xxhash64, which
+    100. md5 is bit-identical everywhere (unlike xxhash64, which
     DuckDB lacks), so oracle queries can reproduce the exact sample."""
     h = F.conv(
         F.substring(F.md5(F.concat(key.cast("string"), F.lit(salt))), 1, 8),
         16,
         10,
     ).cast("long")
-    return F.pmod(h, F.lit(buckets))
+    return F.pmod(h, F.lit(100))
 
 
 def leakage_safe_split(
@@ -174,7 +172,6 @@ def leakage_safe_split(
     group_col: str,
     weights: dict[str, float],
     salt: str = "",
-    label_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment that is ATOMIC per group:
     every row sharing ``group_col`` (url domain, source document,
@@ -218,7 +215,7 @@ def leakage_safe_split(
         )
     last = F.lit(ordered[-1])
     expr = last if expr is None else expr.otherwise(last)
-    return df.withColumn(label_col, expr)
+    return df.withColumn("split", expr)
 
 
 def mixture_sample(
@@ -584,8 +581,6 @@ def pack_sequences(
 
 def line_dedup(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_docs: int = 1,
 ) -> DataFrame:
     """Corpus-level line deduplication -- the CCNet/RefinedWeb
@@ -603,20 +598,21 @@ def line_dedup(
     are exactly the boilerplate -- AQE skew split's case), and the
     rebuild is a hash agg to doc grain via array_sort(collect_list(
     struct(pos, line))) -- deterministic order without a window sort.
-    Returns (id_col, text, n_lines, n_removed); NULL-text docs pass
+    Reads (doc_id, text) and returns (doc_id, text, n_lines,
+    n_removed); NULL-text docs pass
     through with NULL text and zero counts."""
     if max_docs < 1:
         raise ValueError("max_docs must be >= 1")
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n", -1)).alias(
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n", -1)).alias(
             "_pos", "_line"
         ),
     ).withColumn("_key", F.trim(F.col("_line")))
     counts = (
         lines.filter(F.col("_key") != "")
         .groupBy("_key")
-        .agg(F.count_distinct(id_col).alias("_docs"))
+        .agg(F.count_distinct("doc_id").alias("_docs"))
     )
     kept = (
         lines.join(counts, "_key", "left")
@@ -625,7 +621,7 @@ def line_dedup(
             (F.col("_key") == "") | (F.col("_docs") <= max_docs),
         )
     )
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum((~F.col("_keep")).cast("long")).alias("n_removed"),
         F.array_join(
@@ -641,14 +637,14 @@ def line_dedup(
                 lambda s: s["_line"],
             ),
             "\n",
-        ).alias(text_col),
+        ).alias("text"),
     )
     return (
-        docs.select(id_col)
-        .join(rebuilt, id_col, "left")
+        docs.select("doc_id")
+        .join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
-            text_col,
+            "doc_id",
+            "text",
             F.coalesce(F.col("n_lines"), F.lit(0)).alias("n_lines"),
             F.coalesce(F.col("n_removed"), F.lit(0)).alias("n_removed"),
         )
@@ -669,7 +665,6 @@ def _bigram_pairs(toks: Column) -> Column:
 
 def unigram_logprob_table(
     ref: DataFrame,
-    text_col: str = "text",
     vocab_size: int = 50_000,
     alpha: float = 1.0,
 ) -> DataFrame:
@@ -691,7 +686,7 @@ def unigram_logprob_table(
     if alpha <= 0:
         raise ValueError("alpha must be > 0 (smoothing mass)")
     counts = (
-        ref.select(F.explode(text.tokens(F.lower(F.col(text_col)))).alias("t"))
+        ref.select(F.explode(text.tokens(F.lower(F.col("text")))).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))
         # counts feeds the top-V cut AND the N scalar, top feeds the V
@@ -729,8 +724,6 @@ def unigram_logprob_table(
 def unigram_surprisal(
     docs: DataFrame,
     lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Mean token surprisal (-logp, nats) of every document under a
     unigram_logprob_table model -- the quality score: text that looks
@@ -744,32 +737,32 @@ def unigram_surprisal(
     one hash agg back to doc grain. No Python in the row path; at 100 TB
     the LM table is a stored artifact shared by every scoring run.
 
-    Returns (id_col, n_tokens, surprisal)."""
+    Reads (doc_id, text); returns (doc_id, n_tokens, surprisal)."""
     oov = lm.filter(F.col("token").isNull()).select(
         F.col("logp").alias("_oov_logp")
     )
     toks = docs.select(
-        F.col(id_col),
-        F.explode(text.tokens(F.lower(F.col(text_col)))).alias("token"),
+        F.col("doc_id"),
+        F.explode(text.tokens(F.lower(F.col("text")))).alias("token"),
     )
     scored = (
         toks.join(F.broadcast(lm.filter(F.col("token").isNotNull())), "token", "left")
         .crossJoin(F.broadcast(oov))
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("logp"), F.col("_oov_logp")).alias("_lp"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         (-F.avg("_lp")).alias("surprisal"),
     )
     # empty docs never reach the explode: re-attach them with NULL score
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
             "surprisal",
         )
@@ -784,7 +777,6 @@ def unigram_surprisal(
 def nb_token_odds_table(
     pos: DataFrame,
     neg: DataFrame,
-    text_col: str = "text",
     vocab_size: int = 50_000,
     alpha: float = 1.0,
 ) -> DataFrame:
@@ -819,7 +811,7 @@ def nb_token_odds_table(
     def counts(df: DataFrame, out: str) -> DataFrame:
         return (
             df.select(
-                F.explode(text.tokens(F.lower(F.col(text_col)))).alias("t")
+                F.explode(text.tokens(F.lower(F.col("text")))).alias("t")
             )
             .groupBy("t")
             .agg(F.count(F.lit(1)).alias(out))
@@ -870,8 +862,6 @@ def nb_token_odds_table(
 def nb_log_odds(
     docs: DataFrame,
     odds: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     prior_log_odds: float = 0.0,
 ) -> DataFrame:
     """Per-document classifier score under an nb_token_odds_table model:
@@ -885,13 +875,13 @@ def nb_log_odds(
     agg back to doc grain -- no Python in the row path. Documents with
     no tokens carry no evidence and score exactly the prior.
 
-    Returns (id_col, n_tokens, log_odds)."""
+    Reads (doc_id, text); returns (doc_id, n_tokens, log_odds)."""
     oov = odds.filter(F.col("token").isNull()).select(
         F.col("odds").alias("_oov_odds")
     )
     toks = docs.select(
-        F.col(id_col),
-        F.explode(text.tokens(F.lower(F.col(text_col)))).alias("token"),
+        F.col("doc_id"),
+        F.explode(text.tokens(F.lower(F.col("text")))).alias("token"),
     )
     scored = (
         toks.join(
@@ -901,19 +891,19 @@ def nb_log_odds(
         )
         .crossJoin(F.broadcast(oov))
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("odds"), F.col("_oov_odds")).alias("_o"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("_o").alias("_sum"),
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
             (F.lit(float(prior_log_odds)) + F.coalesce(F.col("_sum"), F.lit(0.0))).alias(
                 "log_odds"
@@ -939,7 +929,6 @@ def _hashed_ngram_buckets(text_expr: Column, ngram: int, buckets: int) -> Column
 def dsir_logratio_table(
     target: DataFrame,
     source: DataFrame,
-    text_col: str = "text",
     ngram: int = 2,
     buckets: int = 10_000,
     alpha: float = 1.0,
@@ -975,7 +964,7 @@ def dsir_logratio_table(
         return (
             df.select(
                 F.explode(
-                    _hashed_ngram_buckets(F.col(text_col), ngram, buckets)
+                    _hashed_ngram_buckets(F.col("text"), ngram, buckets)
                 ).alias("bucket")
             )
             .groupBy("bucket")
@@ -1019,30 +1008,28 @@ def dsir_logratio_table(
 def dsir_log_weights(
     docs: DataFrame,
     table: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 2,
     buckets: int = 10_000,
 ) -> DataFrame:
     """Per-document DSIR importance log-weight under a
     dsir_logratio_table model: sum of logratio over the document's
     hashed n-gram features (with multiplicity), unseen buckets falling
-    back to the model's NULL-bucket row. ``ngram``/``buckets`` MUST
-    match the fit call (the hash space is part of the model).
+    back to the model's NULL-bucket row. ``buckets`` MUST match the fit
+    call, and the fit MUST use its default ngram=2 (the hash space is
+    part of the model).
 
-    Documents with fewer than ``ngram`` tokens have no features and
+    Documents with fewer than 2 tokens have no features and
     weigh ln(1) = 0 -- equally likely under both distributions, by
     construction. Scale shape: explode hashed features, one broadcast
     left join against the bounded model, one hash agg to doc grain.
 
-    Returns (id_col, n_features, log_weight)."""
+    Reads (doc_id, text); returns (doc_id, n_features, log_weight)."""
     dflt = table.filter(F.col("bucket").isNull()).select(
         F.col("logratio").alias("_dflt")
     )
     feats = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            _hashed_ngram_buckets(F.col(text_col), ngram, buckets)
+            _hashed_ngram_buckets(F.col("text"), 2, buckets)
         ).alias("bucket"),
     )
     scored = (
@@ -1053,19 +1040,19 @@ def dsir_log_weights(
         )
         .crossJoin(F.broadcast(dflt))
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("logratio"), F.col("_dflt")).alias("_lr"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_features"),
         F.sum("_lr").alias("_sum"),
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_features"), F.lit(0)).alias("n_features"),
             F.coalesce(F.col("_sum"), F.lit(0.0)).alias("log_weight"),
         )
@@ -1076,17 +1063,13 @@ def negative_samples(
     positives: DataFrame,
     items: DataFrame,
     k: int = 5,
-    anchor_col: str = "anchor_id",
-    positive_col: str = "positive_id",
-    item_col: str = "item_id",
     salt: str = "",
     draws: int | None = None,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive / retrieval
-    training pairs: for each distinct anchor in ``positives``, up to
-    ``k`` items from ``items`` that are NOT that anchor's positives
-    (and not the anchor itself when ``exclude_self``), drawn uniformly
+    training pairs: for each distinct anchor_id in ``positives`` (with
+    its positive_id), up to ``k`` item_ids from ``items`` that are NOT
+    that anchor's positives and not the anchor itself, drawn uniformly
     and REPRODUCIBLY -- the md5 coin of (anchor, salt, draw slot) picks
     a dense item index, so the sample is bit-identical across runs,
     partitionings, and engines (the DuckDB twin replays it exactly;
@@ -1122,10 +1105,10 @@ def negative_samples(
     from .neardup import md5_hash60
 
     pos = positives.select(
-        F.col(anchor_col).alias("_a"), F.col(positive_col).alias("_item")
+        F.col("anchor_id").alias("_a"), F.col("positive_id").alias("_item")
     ).filter(F.col("_a").isNotNull() & F.col("_item").isNotNull())
     pool = (
-        items.select(F.col(item_col).alias("_item"))
+        items.select(F.col("item_id").alias("_item"))
         .filter(F.col("_item").isNotNull())
         .distinct()
     )
@@ -1167,11 +1150,9 @@ def negative_samples(
         ),
     )
     cand = drawn.join(idx, "_idx").select("_a", "_item", "_slot")
-    if exclude_self:
-        cand = cand.filter(
-            F.col("_item").cast("string") != F.col("_a").cast("string")
-        )
-    cand = cand.join(pos, ["_a", "_item"], "left_anti")
+    cand = cand.filter(
+        F.col("_item").cast("string") != F.col("_a").cast("string")
+    ).join(pos, ["_a", "_item"], "left_anti")
     # each slot maps to exactly one item, so per (anchor, item) the
     # min slot is unique per anchor -- draw order is a total order
     first = cand.groupBy("_a", "_item").agg(F.min("_slot").alias("_slot"))
@@ -1193,7 +1174,6 @@ def mask_tokens(
     text_col: str,
     rate: float = 0.15,
     salt: str = "mlm",
-    mask_token: str = "[MASK]",
 ) -> DataFrame:
     """Deterministic MLM-style token masking -- the denoising-objective
     data prep (BERT's 15% masking / the token half of T5 span
@@ -1231,7 +1211,7 @@ def mask_tokens(
     )
     masked_arr = F.expr(
         f"transform(_toks, (t, i) -> case when {coin_sql} < "
-        f"{threshold} then '{mask_token}' else t end)"
+        f"{threshold} then '[MASK]' else t end)"
     )
     targets = F.expr(
         f"filter(transform(_toks, (t, i) -> struct(i as pos, t as "
@@ -1262,7 +1242,6 @@ def epoch_shuffle(
     df: DataFrame,
     id_col: str,
     salt: str,
-    out_col: str = "shuffle_pos",
 ) -> DataFrame:
     """Deterministic global training-order shuffle: every row gets a
     1-based position under the total order md5(id, salt) -- the
@@ -1280,7 +1259,7 @@ def epoch_shuffle(
     breaks any 60-bit hash collision), so positions are
     bit-reproducible.
 
-    Returns input + (out_col: BIGINT, 1..n)."""
+    Returns input + (shuffle_pos: BIGINT, 1..n)."""
     from bigdata_storage_and_proccess_job_data_spark.operators.aggregates import (
         _safe_salt,
         global_row_number,
@@ -1295,7 +1274,7 @@ def epoch_shuffle(
         ).cast("long"),
     )
     return global_row_number(
-        coined, ["_shuffle_h", id_col], out_col=out_col
+        coined, ["_shuffle_h", id_col], out_col="shuffle_pos"
     ).drop("_shuffle_h")
 
 
@@ -1305,7 +1284,6 @@ def curriculum_order(
     difficulty_col: str,
     salt: str,
     n_stages: int = 4,
-    out_col: str = "curriculum_pos",
 ) -> DataFrame:
     """Deterministic curriculum training order: rows ramp easy -> hard
     across ``n_stages`` difficulty-quantile stages, shuffled WITHIN each
@@ -1322,8 +1300,9 @@ def curriculum_order(
          stage assignment (a pure function of difficulty) is salt-free.
 
     NULL difficulty sorts FIRST (Spark ASC semantics; oracles must say
-    NULLS FIRST). Returns input + (stage: INT 1..n_stages, out_col:
-    BIGINT 1..n), bit-reproducible across runs and partitionings."""
+    NULLS FIRST). Returns input + (stage: INT 1..n_stages,
+    curriculum_pos: BIGINT 1..n), bit-reproducible across runs and
+    partitionings."""
     from bigdata_storage_and_proccess_job_data_spark.operators.aggregates import (
         _safe_salt,
         global_row_number,
@@ -1354,20 +1333,18 @@ def curriculum_order(
         ).cast("long"),
     )
     return global_row_number(
-        coined, ["stage", "_cur_h", id_col], out_col=out_col
+        coined, ["stage", "_cur_h", id_col], out_col="curriculum_pos"
     ).drop("_cur_h")
 
 
 def vocab_coverage(
     docs: DataFrame,
     vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    word_col: str = "word",
 ) -> DataFrame:
-    """Per-document out-of-vocabulary readout against a vocabulary
-    TABLE: (id, n_tokens, n_oov, oov_rate). The tokenizer-health gate a
-    corpus pipeline runs before training -- a rising oov_rate means the
+    """Per-document out-of-vocabulary readout of (doc_id, text) against
+    a vocabulary TABLE of ``word``: (doc_id, n_tokens, n_oov,
+    oov_rate). The tokenizer-health gate a corpus pipeline runs before
+    training -- a rising oov_rate means the
     vocabulary (word list, or the word-level slice of a subword vocab)
     no longer fits the corpus mix. Tokens are lowercased whitespace
     words (text.tokens, the corpus-wide convention); the vocab side is
@@ -1383,18 +1360,18 @@ def vocab_coverage(
     from bigdata_storage_and_proccess_job_data_spark.functions import text
 
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode_outer(
-            text.tokens(F.lower(F.col(text_col)))
+            text.tokens(F.lower(F.col("text")))
         ).alias("_tok"),
     )
     v = vocab.select(
-        F.lower(F.col(word_col)).alias("_tok"),
+        F.lower(F.col("word")).alias("_tok"),
         F.lit(True).alias("_in_vocab"),
     ).distinct()
     return (
         toks.join(F.broadcast(v), "_tok", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("_tok").alias("n_tokens"),
             F.sum(
@@ -1415,7 +1392,7 @@ def vocab_coverage(
 
 
 def kn_bigram_tables(
-    ref: DataFrame, text_col: str = "text"
+    ref: DataFrame,
 ) -> "tuple[DataFrame, DataFrame, DataFrame, float]":
     """Interpolated Kneser-Ney bigram model fit on a reference corpus --
     the KenLM-lineage smoothing CCNet-style quality filters standardize
@@ -1445,7 +1422,7 @@ def kn_bigram_tables(
     frames like the other LM tables."""
     pairs = ref.select(
         F.explode(
-            _bigram_pairs(text.tokens(F.lower(F.col(text_col))))
+            _bigram_pairs(text.tokens(F.lower(F.col("text"))))
         ).alias("_z")
     ).select(
         F.col("_z.prev").alias("prev"), F.col("_z.token").alias("token")
@@ -1484,8 +1461,6 @@ def kn_surprisal(
     ctx: DataFrame,
     cont: DataFrame,
     discount: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Mean token surprisal under the interpolated Kneser-Ney bigram
     model: p(w | prev) = max(c - D, 0) / c_prev
@@ -1499,23 +1474,22 @@ def kn_surprisal(
     on the two bounded vocab-sized tables (cont AND ctx -- review
     caught ctx shuffling the full token frame a second time), one
     shuffle join against the bigram artifact, one hash agg to doc
-    grain. Returns (id_col,
-    n_tokens, surprisal = -mean ln p); empty docs n_tokens 0 with NULL
-    surprisal."""
+    grain. Reads (doc_id, text); returns (doc_id, n_tokens, surprisal =
+    -mean ln p); empty docs n_tokens 0 with NULL surprisal."""
     if not 0 < discount < 1:
         raise ValueError(f"discount must be in (0, 1): {discount}")
     toks = docs.select(
-        F.col(id_col), text.tokens(F.lower(F.col(text_col))).alias("_tk")
+        F.col("doc_id"), text.tokens(F.lower(F.col("text"))).alias("_tk")
     )
     first = toks.filter(F.size("_tk") >= 1).select(
-        id_col,
+        "doc_id",
         F.lit(None).cast("string").alias("prev"),
         F.element_at("_tk", 1).alias("token"),
     )
     rest = toks.filter(F.size("_tk") > 1).select(
-        id_col, F.explode(_bigram_pairs(F.col("_tk"))).alias("_z")
+        "doc_id", F.explode(_bigram_pairs(F.col("_tk"))).alias("_z")
     ).select(
-        id_col,
+        "doc_id",
         F.col("_z.prev").alias("prev"),
         F.col("_z.token").alias("token"),
     )
@@ -1552,15 +1526,15 @@ def kn_surprisal(
             ),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         (-F.avg(F.log("_p"))).alias("surprisal"),
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
             "surprisal",
         )
@@ -1569,8 +1543,6 @@ def kn_surprisal(
 
 def consensus_labels(
     ratings: DataFrame,
-    item_col: str = "doc_id",
-    label_col: str = "label",
     weight_col: "str | None" = None,
     min_ratings: int = 1,
 ) -> DataFrame:
@@ -1579,10 +1551,10 @@ def consensus_labels(
     production half of the labeling story whose QA half is
     aggregates.fleiss_kappa: kappa says whether raters
     agree enough to trust; this produces the label once they do).
-    Input rows are (item, label) ratings, one per rating; output one
+    Input rows are (doc_id, label) ratings, one per rating; output one
     row per item with >= ``min_ratings`` ratings:
 
-      (item, label, n_ratings, n_for, share, unanimous)
+      (doc_id, label, n_ratings, n_for, share, unanimous)
 
     where label is the (optionally ``weight_col``-weighted) plurality
     winner with ties broken deterministically on the label's sort
@@ -1602,7 +1574,7 @@ def consensus_labels(
         raise ValueError(f"min_ratings must be >= 1: {min_ratings}")
     from pyspark.sql import Window
 
-    it, lb = F.col(item_col), F.col(label_col)
+    it, lb = F.col("doc_id"), F.col("label")
     base = ratings.filter(it.isNotNull() & lb.isNotNull())
     if weight_col is not None:
         w = F.col(weight_col).cast("double")
@@ -1633,8 +1605,8 @@ def consensus_labels(
     )
     share = F.col("_v") / F.col("_tot")
     return winners.select(
-        F.col("_item").alias(item_col),
-        F.col("_label").alias(label_col),
+        F.col("_item").alias("doc_id"),
+        F.col("_label").alias("label"),
         "n_ratings",
         F.col("_n").alias("n_for"),
         share.alias("share"),
@@ -1644,16 +1616,13 @@ def consensus_labels(
 
 def rater_quality(
     ratings: DataFrame,
-    item_col: str = "doc_id",
-    rater_col: str = "rater",
-    label_col: str = "label",
-    min_ratings: int = 1,
 ) -> DataFrame:
     """Per-rater agreement against the majority consensus -- the
     proxy-accuracy readout that finds weak or adversarial annotators
     without any gold labels (the Dawid-Skene intuition, kept at its
     one-iteration closed form: consensus first, then each rater scored
-    against it). Returns one row per rater:
+    against it). Input rows are (doc_id, rater, label) ratings; returns
+    one row per rater:
 
       (rater, n_rated, n_agree, agree_rate)
 
@@ -1668,15 +1637,13 @@ def rater_quality(
     Scale shape: consensus_labels' two bounded aggs, then ONE
     broadcast-or-shuffle equi-join of ratings to the per-item winner
     and one rater hash agg."""
-    r = F.col(rater_col)
+    r = F.col("rater")
     base = ratings.filter(r.isNotNull())
-    consensus = consensus_labels(
-        base, item_col, label_col, min_ratings=min_ratings
-    ).select(
-        F.col(item_col).alias("_item"),
-        F.col(label_col).alias("_win"),
+    consensus = consensus_labels(base).select(
+        F.col("doc_id").alias("_item"),
+        F.col("label").alias("_win"),
     )
-    it, lb = F.col(item_col), F.col(label_col)
+    it, lb = F.col("doc_id"), F.col("label")
     joined = base.filter(it.isNotNull() & lb.isNotNull()).join(
         consensus, it == F.col("_item")
     )
@@ -1689,11 +1656,7 @@ def rater_quality(
 
 def bradley_terry_fit(
     comparisons: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
     max_items: int = 10_000,
-    max_iter: int = 500,
-    tol: float = 1e-10,
     alpha: float = 0.0,
 ) -> DataFrame:
     """Bradley-Terry strength fit over pairwise preference data -- the
@@ -1711,9 +1674,9 @@ def bradley_terry_fit(
     normalized to geometric mean 1 (scale is non-identifiable; the
     ratio is the model). Fitted by Zermelo/MM iteration (Hunter 2004,
     "MM algorithms for generalized Bradley-Terry models"):
-    s_i <- W_i / sum_j n_ij / (s_i + s_j), iterated to ``tol`` on the
-    max relative change, items processed in sorted order so the fit is
-    bit-deterministic and partition-independent.
+    s_i <- W_i / sum_j n_ij / (s_i + s_j), iterated to 1e-10 on the
+    max relative change (at most 500 sweeps), items processed in sorted
+    order so the fit is bit-deterministic and partition-independent.
 
     Identifiability fails loud, never silently: a comparison graph
     split into disconnected components has no common scale (raises --
@@ -1746,7 +1709,7 @@ def bradley_terry_fit(
         raise ValueError(f"max_items must be >= 2: {max_items}")
     if alpha < 0:
         raise ValueError(f"alpha must be >= 0: {alpha}")
-    w, l = F.col(winner_col), F.col(loser_col)
+    w, l = F.col("winner"), F.col("loser")
     valid = comparisons.filter(w.isNotNull() & l.isNotNull())
     # ONE scan: fold to pair counts and pin the result on the
     # executors; the guard probe and the collect both read the
@@ -1843,7 +1806,7 @@ def bradley_terry_fit(
         opp[a].append((b, n))
         opp[b].append((a, n))
     s = {i: 1.0 for i in items}
-    for _ in range(max_iter):
+    for _ in range(500):
         worst = 0.0
         for i in items:
             denom = sum(n / (s[i] + s[j]) for j, n in opp[i])
@@ -1854,11 +1817,11 @@ def bradley_terry_fit(
         # from drifting; pure relabeling, never changes ratios)
         g = math.exp(sum(math.log(v) for v in s.values()) / len(s))
         s = {i: v / g for i, v in s.items()}
-        if worst <= tol:
+        if worst <= 1e-10:
             break
     else:
         raise ValueError(
-            f"bradley_terry_fit: not converged after {max_iter} MM "
+            "bradley_terry_fit: not converged after 500 MM "
             f"sweeps (worst relative change {worst:.3g})"
         )
     raw_wins: dict = {i: 0 for i in items}
@@ -1888,8 +1851,6 @@ def bradley_terry_fit(
 
 def win_rate_pairs(
     comparisons: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
     z: float = 1.959963984540054,
 ) -> DataFrame:
     """Per-pair win rates with Wilson score intervals -- the leaderboard
@@ -1899,7 +1860,8 @@ def win_rate_pairs(
     report prints, with uncertainty that stays honest at small n --
     Wilson never leaves [0, 1] and never collapses to a zero-width
     interval the way the normal approximation does at p-hat of 0 or 1).
-    One row per unordered observed pair, sides canonicalized so
+    Input rows are (winner, loser). One row per unordered observed
+    pair, sides canonicalized so
     ``item_a`` < ``item_b`` by string order:
 
       (item_a, item_b, n_games, wins_a, win_rate_a, wilson_lo,
@@ -1925,7 +1887,7 @@ def win_rate_pairs(
     items^2-bounded."""
     if z <= 0:
         raise ValueError(f"win_rate_pairs: z must be > 0: {z}")
-    w, l = F.col(winner_col), F.col(loser_col)
+    w, l = F.col("winner"), F.col("loser")
     ws, ls = w.cast("string"), l.cast("string")
     # self-comparison guard folded into the CONSUMED item_a column
     # (a free-standing guard column would be pruned and never evaluate)

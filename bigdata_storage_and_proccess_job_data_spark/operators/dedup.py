@@ -87,15 +87,14 @@ def duplicate_groups(
     df: DataFrame,
     content_col: str,
     id_col: str,
-    normalize: bool = True,
 ) -> DataFrame:
     """Summary of exact-duplicate clusters: one row per distinct content
-    hash with the cluster size and the surviving (minimum) id."""
-    c = F.col(content_col)
-    if normalize:
-        c = F.lower(F.trim(c))
+    hash (of the trimmed, lowercased content) with the cluster size and
+    the surviving (minimum) id."""
     return (
-        df.withColumn("content_hash", F.md5(c))
+        df.withColumn(
+            "content_hash", F.md5(F.lower(F.trim(F.col(content_col))))
+        )
         .groupBy("content_hash")
         .agg(
             F.count(F.lit(1)).alias("dup_count"),

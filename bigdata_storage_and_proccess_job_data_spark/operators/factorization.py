@@ -118,7 +118,6 @@ def _solve_side(
     rating_col: str,
     rank: int,
     reg: float,
-    broadcast_fixed: bool,
 ) -> DataFrame:
     """One ALS half-step: solve ``solve_col``'s factors with
     ``fixed_col``'s held constant. Join ratings to the fixed factor
@@ -133,7 +132,7 @@ def _solve_side(
     f = fixed.select(
         F.col("id").alias(fixed_col), F.col("factors").alias("_ff")
     )
-    j = ratings.join(F.broadcast(f) if broadcast_fixed else f, fixed_col)
+    j = ratings.join(f, fixed_col)
     out_schema = StructType(
         [
             j.schema[solve_col],
@@ -172,8 +171,6 @@ def als_fit(
     rank: int = 8,
     iters: int = 10,
     reg: float = 0.1,
-    salt: str = "als",
-    broadcast_items: bool = False,
 ) -> dict:
     """Alternating least squares: returns {"user_factors": DF(id,
     factors), "item_factors": DF(id, factors), "rank": rank}. Each of
@@ -181,9 +178,7 @@ def als_fit(
     items against the new user factors (see module docstring for the
     per-half-step cost shape). ``reg`` is the plain L2 ridge on every
     solve (the ALS-WR per-count scaling is a caller-side variant:
-    pre-scale ratings). ``broadcast_items=True`` broadcasts the item
-    factor frame into both half-steps' joins -- right when items are
-    dimension-sized (catalogs), wrong when both sides are huge."""
+    pre-scale ratings)."""
     if rank < 1:
         raise ValueError("rank must be >= 1")
     if iters < 1:
@@ -201,14 +196,14 @@ def als_fit(
     )
     r = r.persist()
     try:
-        items = init_factors(r, "_i", rank, salt).localCheckpoint()
+        items = init_factors(r, "_i", rank, "als").localCheckpoint()
         users = None
         for _ in range(iters):
             users = _solve_side(
-                r, items, "_u", "_i", "_r", rank, reg, broadcast_items
+                r, items, "_u", "_i", "_r", rank, reg
             ).localCheckpoint()
             items = _solve_side(
-                r, users, "_i", "_u", "_r", rank, reg, False
+                r, users, "_i", "_u", "_r", rank, reg
             ).localCheckpoint()
         return {
             "user_factors": users,
@@ -224,7 +219,6 @@ def predict(
     model: dict,
     user_col: str,
     item_col: str,
-    out_col: str = "pred",
 ) -> DataFrame:
     """Score (user, item) pairs with a fitted model: two equi-joins +
     the sequential-fold dot product (bit-reproducible; the
@@ -243,7 +237,7 @@ def predict(
         ratings.join(uf, user_col, "left")
         .join(itf, item_col, "left")
         .withColumn(
-            out_col,
+            "pred",
             F.when(
                 F.col("_uf").isNotNull() & F.col("_if").isNotNull(),
                 vectors.dot(F.col("_uf"), F.col("_if")),
@@ -308,7 +302,6 @@ def recommend_topk(
         model["item_factors"].select("id", F.col("factors").alias("embedding")),
         query_id="id",
         corpus_id="id",
-        vec_col="embedding",
         k=fetch,
     ).select(
         F.col("query_id").alias(user_col),

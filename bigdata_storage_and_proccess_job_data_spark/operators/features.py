@@ -56,7 +56,6 @@ def standardize_apply(
     fit: DataFrame,
     cols: list[str],
     keys: list[str] | None = None,
-    suffix: str = "_z",
 ) -> DataFrame:
     """Z-score ``cols`` against a stored fit: (x - mean) / std, NULL
     where std is NULL/zero (constant training group) or the row's
@@ -68,7 +67,7 @@ def standardize_apply(
     for c in cols:
         std = F.col(f"std_{c}")
         out = out.withColumn(
-            c + suffix,
+            c + "_z",
             F.when(
                 std.isNotNull() & (std != 0),
                 (F.col(c) - F.col(f"mean_{c}")) / std,
@@ -110,19 +109,17 @@ def quantile_bins_apply(
     fit: DataFrame,
     col: str,
     keys: list[str] | None = None,
-    out_col: str | None = None,
 ) -> DataFrame:
-    """Bin index in [0, n_bins): the count of stored edges at or below
-    the value (right-closed bins, the width_bucket convention). NULL
-    values and unseen groups yield NULL. One broadcast join + one
-    codegen'd array fold per row."""
-    out_col = out_col or col + "_bin"
+    """Bin index in [0, n_bins) as ``<col>_bin``: the count of stored
+    edges at or below the value (right-closed bins, the width_bucket
+    convention). NULL values and unseen groups yield NULL. One
+    broadcast join + one codegen'd array fold per row."""
     d, ks = _with_key(df, keys)
     v = F.col(col)
     idx = F.size(F.filter(F.col("edges"), lambda e: v >= e))
     joined = d.join(F.broadcast(fit), ks, "left")
     out = joined.withColumn(
-        out_col,
+        col + "_bin",
         F.when(v.isNotNull() & F.col("edges").isNotNull(), idx),
     ).drop("edges")
     if keys is None:
@@ -162,7 +159,6 @@ def target_encode_apply(
     df: DataFrame,
     artifact: DataFrame,
     keys: list[str],
-    out_col: str = "te",
     loo_target: str | None = None,
 ) -> DataFrame:
     """Apply a target_encode_fit artifact: broadcast join on the keys,
@@ -192,7 +188,7 @@ def target_encode_apply(
     enc = F.when(
         F.col("_te_cnt").isNull() | (F.col("_te_cnt") == 0), prior
     ).otherwise((s + m * prior) / (c + m))
-    return joined.withColumn(out_col, enc).drop(
+    return joined.withColumn("te", enc).drop(
         "_te_sum", "_te_cnt", "_te_prior", "_m"
     )
 

@@ -26,9 +26,6 @@ from pyspark.sql import functions as F
 def funnel_times(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Per-user earliest completion time of each funnel step, strictly
     ordered: step k counts only at timestamps strictly after the user's
@@ -37,20 +34,20 @@ def funnel_times(
     step onward."""
     if not steps:
         raise ValueError("steps must be non-empty")
-    w = Window.partitionBy(user_col)
-    cur = events.select(user_col, ts_col, type_col)
+    w = Window.partitionBy("user_id")
+    cur = events.select("user_id", "ts", "event_type")
     prev_t: str | None = None
     for step in steps:
-        cond = F.col(type_col) == step
+        cond = F.col("event_type") == step
         if prev_t is not None:
-            cond = cond & (F.col(ts_col) > F.col(prev_t))
+            cond = cond & (F.col("ts") > F.col(prev_t))
         cur = cur.withColumn(
-            f"t_{step}", F.min(F.when(cond, F.col(ts_col))).over(w)
+            f"t_{step}", F.min(F.when(cond, F.col("ts"))).over(w)
         )
         prev_t = f"t_{step}"
     return (
         cur.filter(F.col(f"t_{steps[0]}").isNotNull())
-        .groupBy(user_col)
+        .groupBy("user_id")
         .agg(*[F.first(f"t_{s}").alias(f"t_{s}") for s in steps])
     )
 
@@ -58,14 +55,11 @@ def funnel_times(
 def funnel_counts(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Funnel summary: one row per step with the number of users who
     reached it in order -- counts are non-increasing by construction.
     Output: (step_index, step, users)."""
-    times = funnel_times(events, steps, user_col, ts_col, type_col)
+    times = funnel_times(events, steps)
     counts = times.agg(
         *[
             F.count(f"t_{s}").cast("long").alias(f"_c_{i}")
@@ -89,8 +83,6 @@ def funnel_counts(
 
 def retention_matrix(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     period: str = "week",
 ) -> DataFrame:
     """Cohort retention matrix: users grouped by their FIRST-activity
@@ -118,7 +110,7 @@ def retention_matrix(
     cohort-size table. NULL users/timestamps are excluded."""
     if period not in ("day", "week", "month"):
         raise ValueError(f"period must be day|week|month: {period!r}")
-    u, t = F.col(user_col), F.col(ts_col)
+    u, t = F.col("user_id"), F.col("ts")
     active = (
         events.filter(u.isNotNull() & t.isNotNull())
         .select(

@@ -40,8 +40,6 @@ _CHECKPOINT_EVERY = 3
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     damping: float = 0.85,
     iters: int = 15,
     weight_col: str | None = None,
@@ -69,7 +67,7 @@ def pagerank(
         raise ValueError("damping must be in (0, 1)")
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    sel = [F.col(src).alias("_s"), F.col(dst).alias("_d")]
+    sel = [F.col("src").alias("_s"), F.col("dst").alias("_d")]
     if weight_col is not None:
         sel.append(F.col(weight_col).cast("double").alias("_w"))
     e0 = edges.select(*sel).filter(
@@ -189,16 +187,14 @@ def pagerank(
         tele.unpersist()
 
 
-def undirected_edges(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def undirected_edges(edges: DataFrame) -> DataFrame:
     """Canonical undirected edge set: distinct (a, b) with a < b.
     Self-loops and NULL endpoints drop; (u, v) and (v, u) collapse.
     The normalization every undirected graph op here builds on."""
-    a = F.least(F.col(src), F.col(dst))
-    b = F.greatest(F.col(src), F.col(dst))
+    a = F.least(F.col("src"), F.col("dst"))
+    b = F.greatest(F.col("src"), F.col("dst"))
     return (
-        edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
+        edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .select(a.alias("a"), b.alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -386,31 +382,14 @@ def _per_node_counts(hits: DataFrame) -> DataFrame:
     )
 
 
-def triangles(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    assume_undirected: bool = False,
-) -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """Every triangle of the undirected graph, once: (x, y, z) with
     x < y < z. Edge-iterator over the degree-ordered orientation's
     sorted adjacency arrays (see _triangle_parts -- the skew-proof
     formulation): each oriented edge intersects its endpoints'
     out-sets, so triangles emerge directly, no wedge materialization
-    and no closure join. Vertices never fan out by raw degree.
-
-    ``assume_undirected=True`` declares the input ALREADY canonical
-    (distinct, src < dst -- i.e. undirected_edges output) and skips
-    re-canonicalizing: callers that normalize once and fan out pass it
-    so the full edge set is distinct-shuffled exactly once per
-    pipeline."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        if assume_undirected
-        else undirected_edges(edges, src, dst)
-    )
-    tri, _hits, deg, adj = _triangle_parts(und)
+    and no closure join. Vertices never fan out by raw degree."""
+    tri, _hits, deg, adj = _triangle_parts(undirected_edges(edges))
     try:
         # Materialize before releasing the oriented frame.
         return tri.localCheckpoint()
@@ -419,13 +398,7 @@ def triangles(
         deg.unpersist()
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    assume_undirected: bool = False,
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """(node, triangles) for every node of the undirected graph --
     nodes on no triangle report 0. One canonicalization, one shared
     degree frame (doubling as the node universe -- no second
@@ -436,11 +409,7 @@ def triangle_counts(
     fold straight off the per-edge intersect arrays
     (_per_node_counts) -- the (x,y,z) list is never materialized here
     at all."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        if assume_undirected
-        else undirected_edges(edges, src, dst).persist()
-    )
+    und = undirected_edges(edges).persist()
     try:
         _tri, hits, deg, adj = _triangle_parts(und)
         try:
@@ -458,14 +427,11 @@ def triangle_counts(
             adj.unpersist()
             deg.unpersist()
     finally:
-        if not assume_undirected:
-            und.unpersist()
+        und.unpersist()
 
 
 def label_propagation(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iters: int = 10,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -486,15 +452,15 @@ def label_propagation(
     edges collapse (unweighted) or their weights sum."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    und = undirected_edges(edges, src, dst)
+    und = undirected_edges(edges)
     if weight_col is not None:
         w = (
             edges.filter(
-                F.col(src).isNotNull() & F.col(dst).isNotNull()
+                F.col("src").isNotNull() & F.col("dst").isNotNull()
             )
             .select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
+                F.least(F.col("src"), F.col("dst")).alias("a"),
+                F.greatest(F.col("src"), F.col("dst")).alias("b"),
                 F.col(weight_col).cast("double").alias("_w"),
             )
             .filter((F.col("a") != F.col("b")) & (F.col("_w") > 0))
@@ -565,8 +531,6 @@ def label_propagation(
 def shortest_paths(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_hops: int = 20,
     directed: bool = True,
 ) -> DataFrame:
@@ -587,7 +551,7 @@ def shortest_paths(
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
     e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
+        F.col("src").alias("_s"), F.col("dst").alias("_d")
     ).filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
     if not directed:
         e = e.union(
@@ -624,21 +588,18 @@ def shortest_paths(
 
 def _walk_adjacency(
     edges: DataFrame,
-    src: str,
-    dst: str,
-    salt: str,
     max_neighbors: "int | None",
     directed: bool,
 ) -> DataFrame:
     """Sorted neighbor-array adjacency shared by the walk generators
     (one hash agg), with the optional deterministic md5 hub downsample
-    (rank neighbors by md5(node:nbr:salt), keep the smallest
+    (rank neighbors by md5(node:nbr:walk), keep the smallest
     max_neighbors, re-sorted so the index coin stays
     position-independent)."""
     if max_neighbors is not None and max_neighbors < 1:
         raise ValueError("max_neighbors must be >= 1")
     e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
+        F.col("src").alias("_s"), F.col("dst").alias("_d")
     ).filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
     if not directed:
         e = e.union(
@@ -653,7 +614,7 @@ def _walk_adjacency(
         coin = (
             "cast(conv(substring(md5(concat_ws(':', "
             "cast(node as string), "
-            f"cast(nb as string), '{salt}')), 1, 15), 16, 10) as bigint)"
+            "cast(nb as string), 'walk')), 1, 15), 16, 10) as bigint)"
         )
         adj = adj.select(
             "node",
@@ -673,9 +634,6 @@ def random_walks(
     edges: DataFrame,
     walk_len: int,
     walks_per_node: int = 1,
-    src: str = "src",
-    dst: str = "dst",
-    salt: str = "walk",
     max_neighbors: int | None = None,
     directed: bool = True,
 ) -> DataFrame:
@@ -689,8 +647,8 @@ def random_walks(
     (nodes with no out-edges).
 
     Determinism is the repo's md5 coin: step t of walk (node, w) picks
-    neighbor index md5(start:w:t:salt) mod degree within the node's
-    SORTED neighbor array -- a pure function of (start, w, t, salt),
+    neighbor index md5(start:w:t:walk) mod degree within the node's
+    SORTED neighbor array -- a pure function of (start, w, t),
     reproducible across sessions, partitionings, and engines with no
     RNG state (pure-Python replica equality is the test).
 
@@ -713,9 +671,7 @@ def random_walks(
         raise ValueError("walk_len must be >= 1")
     if walks_per_node < 1:
         raise ValueError("walks_per_node must be >= 1")
-    adj = _walk_adjacency(
-        edges, src, dst, salt, max_neighbors, directed
-    ).persist()
+    adj = _walk_adjacency(edges, max_neighbors, directed).persist()
     try:
         starts = adj.select("node").crossJoin(
             F.broadcast(
@@ -748,7 +704,7 @@ def random_walks(
                                 "conv(substring(md5(concat_ws(':', "
                                 "cast(start as string), "
                                 "cast(walk as string), "
-                                f"'{t}', '{salt}')), 1, 15), 16, 10)"
+                                f"'{t}', 'walk')), 1, 15), 16, 10)"
                             ).cast("long")
                             % F.size("_nbrs")
                             + 1
@@ -785,7 +741,6 @@ def random_walks(
 def walk_skipgram_pairs(
     walks: DataFrame,
     window: int,
-    seq_col: str = "seq",
 ) -> DataFrame:
     """Skip-gram (center, context) pair extraction from walk
     sequences -- the step that turns ``random_walks`` output into
@@ -804,8 +759,8 @@ def walk_skipgram_pairs(
     offs = [o for o in range(-window, window + 1) if o != 0]
     return (
         walks.select(
-            F.posexplode(F.col(seq_col)).alias("_i", "center"),
-            F.col(seq_col).alias("_seq"),
+            F.posexplode(F.col("seq")).alias("_i", "center"),
+            F.col("seq").alias("_seq"),
         )
         .select(
             "center",
@@ -832,11 +787,7 @@ def walk_skipgram_pairs(
 
 def pmi_pairs(
     pairs: DataFrame,
-    center_col: str = "center",
-    context_col: str = "context",
-    n_col: str = "n",
     shift: float = 1.0,
-    digits: int = 6,
 ) -> DataFrame:
     """(Shifted positive) pointwise mutual information over co-occurrence
     pair counts: pmi = ln(n * total / (n_center * n_context)) - ln(shift),
@@ -864,14 +815,14 @@ def pmi_pairs(
         stable_round,
     )
 
-    n = F.col(n_col).cast("double")
-    cm = pairs.groupBy(center_col).agg(
-        F.sum(n_col).alias("_nc")
+    n = F.col("n").cast("double")
+    cm = pairs.groupBy("center").agg(
+        F.sum("n").alias("_nc")
     )
-    xm = pairs.groupBy(context_col).agg(
-        F.sum(n_col).alias("_nx")
+    xm = pairs.groupBy("context").agg(
+        F.sum("n").alias("_nx")
     )
-    tot = pairs.agg(F.sum(n_col).alias("_tot"))
+    tot = pairs.agg(F.sum("n").alias("_tot"))
     pmi = (
         F.log(
             n
@@ -881,14 +832,14 @@ def pmi_pairs(
         - F.log(F.lit(float(shift)))
     )
     return (
-        pairs.join(F.broadcast(cm), center_col)
-        .join(F.broadcast(xm), context_col)
+        pairs.join(F.broadcast(cm), "center")
+        .join(F.broadcast(xm), "context")
         .crossJoin(F.broadcast(tot))
         .select(
-            center_col,
-            context_col,
-            F.col(n_col).alias("n"),
-            stable_round(pmi, digits).alias("sppmi"),
+            "center",
+            "context",
+            "n",
+            stable_round(pmi, 6).alias("sppmi"),
         )
         .filter(F.col("sppmi") > 0)
     )

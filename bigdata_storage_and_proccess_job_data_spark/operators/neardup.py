@@ -167,7 +167,6 @@ def minhash_candidates(
     seed: int = 42,
     shingle_frame: DataFrame | None = None,
     caches_out: list[DataFrame] | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b) from banded minhash signatures.
     ``shingle_frame`` (columns _id, _sh) lets callers reuse an already
@@ -185,11 +184,9 @@ def minhash_candidates(
 
     Cache ownership: lazy by default -- the banded cache lives until
     session teardown (one-shot jobs; registered queries keep the full
-    lazy plan visible to the plan-hygiene gate). Pass
-    ``materialize=True`` to get the eager executor-materialized result
-    with every internal cache released before returning (repeated-batch
-    sessions), or ``caches_out`` to hand cache ownership to a composing
-    caller (minhash_dedup_pairs does this)."""
+    lazy plan visible to the plan-hygiene gate). Pass ``caches_out``
+    to hand cache ownership to a composing caller (minhash_dedup_pairs
+    does this)."""
     banded = minhash_index(
         df, id_col, content_col, ngram, num_hashes, bands, seed,
         shingle_frame=shingle_frame,
@@ -198,7 +195,7 @@ def minhash_candidates(
         caches_out.append(banded)
     left = banded.alias("l")
     right = banded.alias("r")
-    cands = (
+    return (
         left.join(
             right,
             (F.col("l.band") == F.col("r.band"))
@@ -210,18 +207,12 @@ def minhash_candidates(
         )
         .distinct()
     )
-    if not materialize:
-        return cands
-    return _materialized_release(
-        cands, [banded] if caches_out is None else []
-    )
 
 
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
     content_col: str,
-    ngram: int = 2,
     threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT n-gram Jaccard >= threshold pairs with prefix filtering
@@ -241,7 +232,7 @@ def jaccard_pairs(
     hash joins to re-attach full shingle arrays to the (small) candidate
     set. No driver collects.
     """
-    sized = sized_shingles(df, id_col, content_col, ngram)
+    sized = sized_shingles(df, id_col, content_col, 2)
 
     exploded = sized.select("_id", "_n", F.explode("_sh").alias("shingle"))
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
@@ -476,19 +467,17 @@ def simhash_candidates(
     df: DataFrame,
     id_col: str,
     content_col: str,
-    max_hamming: int = 8,
-    bands: int = 4,
     token_hash: Callable[[Column], Column] | None = None,
 ) -> DataFrame:
-    """SimHash near-dup candidates: band the 64-bit simhash into ``bands``
-    16-bit chunks (pigeonhole: hamming <= bands-1 guarantees a shared
-    band; higher max_hamming trades recall), bucket-join on equal chunks,
+    """SimHash near-dup candidates: band the 64-bit simhash into 4
+    16-bit chunks (pigeonhole: hamming <= 3 guarantees a shared band;
+    the hamming <= 8 filter trades recall), bucket-join on equal chunks,
     then filter by exact hamming distance via bit_count(xor).
 
     ``token_hash`` maps a token Column to a BIGINT hash Column; default
     xxhash64 (the scale path -- cheapest JVM hash). Pass md5_hash60 when
     the run must be reproducible against a non-Spark engine."""
-    width = 64 // bands
+    width = 16
     th = token_hash or F.xxhash64
     hashed = df.select(
         F.col(id_col).alias("_id"),
@@ -511,7 +500,7 @@ def simhash_candidates(
                         .bitwiseAND(F.lit((1 << width) - 1))
                         .alias("chunk"),
                     )
-                    for b in range(bands)
+                    for b in range(4)
                 ]
             )
         ).alias("b"),
@@ -536,14 +525,11 @@ def simhash_candidates(
     return pairs.withColumn(
         "hamming",
         F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int"),
-    ).filter(F.col("hamming") <= max_hamming).select("id_a", "id_b", "hamming")
+    ).filter(F.col("hamming") <= 8).select("id_a", "id_b", "hamming")
 
 
 def connected_components(
     pairs: DataFrame,
-    left: str = "id_a",
-    right: str = "id_b",
-    max_iters: int = 20,
 ) -> DataFrame:
     """Transitive closure of a near-dup pair list: (id, component) where
     component = min id reachable through any chain of pairs. Pair ops
@@ -563,7 +549,7 @@ def connected_components(
     distance to the component min doubles per round, so convergence is
     O(log diameter). Quasi-clique banding clusters still terminate in
     2-3 rounds; chains of length L need ~log2(L). Each round is checked
-    by an exact changed-row count; raises if max_iters rounds don't
+    by an exact changed-row count; raises if 20 rounds don't
     converge. Invariant: a vertex's label is always the id of some
     vertex in its own component (neighbor-min picks a neighbor's label,
     the jump picks that vertex's label), and at fixpoint adjacent
@@ -590,8 +576,10 @@ def connected_components(
     the output (join back against the corpus for singletons).
     """
     edges = (
-        pairs.select(F.col(left).alias("src"), F.col(right).alias("dst"))
-        .union(pairs.select(F.col(right).alias("src"), F.col(left).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
         .distinct()
         .persist()
     )
@@ -604,7 +592,7 @@ def connected_components(
     _CHECKPOINT_EVERY = 3
     persisted_prev: DataFrame | None = None
     try:
-        for i in range(max_iters):
+        for i in range(20):
             neighbor_min = (
                 edges.join(labels, edges.dst == labels.id)
                 .groupBy("src")
@@ -655,7 +643,7 @@ def connected_components(
             if changed == 0:
                 return labels.select("id", "component")
         raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds"
+            "connected_components did not converge in 20 rounds"
         )
     finally:
         edges.unpersist()

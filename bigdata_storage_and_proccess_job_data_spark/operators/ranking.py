@@ -32,15 +32,12 @@ from bigdata_storage_and_proccess_job_data_spark.session import local_frame
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
     materialize: bool = True,
 ) -> DataFrame:
-    """Okapi BM25 top-k: (id, score, rank) for the ``k`` highest-scoring
-    documents against ``query_terms`` (matched case-insensitively,
+    """Okapi BM25 top-k (k1 = 1.2, b = 0.75) over (doc_id, text):
+    (doc_id, score, rank) for the ``k`` highest-scoring documents
+    against ``query_terms`` (matched case-insensitively,
     whitespace tokenization -- the corpus suite's shared tokenizer).
     idf uses the +1 ("Lucene") form, ln(1 + (N - df + .5)/(df + .5)),
     so scores stay positive for terms in most documents. Score rounded
@@ -55,12 +52,12 @@ def bm25_topk(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     terms = [t.lower() for t in query_terms]
-    toks = text.tokens(F.lower(F.col(text_col)))
+    toks = text.tokens(F.lower(F.col("text")))
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_toks"),
     ).select(
-        id_col,
+        "doc_id",
         F.size("_toks").cast("long").alias("_dl"),
         "_toks",
     )
@@ -80,7 +77,7 @@ def bm25_topk(
     # in the finally -- no storage survives the call.
     hits = (
         base.select(
-            id_col,
+            "doc_id",
             "_dl",
             F.explode(
                 F.filter(
@@ -88,7 +85,7 @@ def bm25_topk(
                 )
             ).alias("_term"),
         )
-        .groupBy(id_col, "_dl", "_term")
+        .groupBy("doc_id", "_dl", "_term")
         .agg(F.count(F.lit(1)).cast("long").alias("_tf"))
     )
     if materialize:
@@ -102,22 +99,22 @@ def bm25_topk(
             hits.join(F.broadcast(df_by_term), "_term")
             .crossJoin(F.broadcast(scalars))
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 (
                     F.log(
                         F.lit(1.0)
                         + (F.col("_n_docs") - F.col("_df") + 0.5)
                         / (F.col("_df") + 0.5)
                     )
-                    * (F.col("_tf") * (k1 + 1))
+                    * (F.col("_tf") * (1.2 + 1))
                     / (
                         F.col("_tf")
-                        + k1
-                        * (1 - b + b * F.col("_dl") / F.col("_avgdl"))
+                        + 1.2
+                        * (1 - 0.75 + 0.75 * F.col("_dl") / F.col("_avgdl"))
                     )
                 ).alias("_part"),
             )
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(stable_round(F.sum("_part"), 4).alias("score"))
         )
         # TakeOrderedAndProject first (distributed partial top-k per
@@ -125,12 +122,14 @@ def bm25_topk(
         # window over only those k rows -- never a single-partition
         # window over the whole scored corpus
         topk = scored.orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
+            F.col("score").desc(), F.col("doc_id").asc()
         ).limit(k)
-        w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
+        w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         ranked = (
             topk.withColumn("rank", F.row_number().over(w))
-            .select(id_col, "score", F.col("rank").cast("long").alias("rank"))
+            .select(
+                "doc_id", "score", F.col("rank").cast("long").alias("rank")
+            )
         )
         if not materialize:
             return ranked
@@ -147,17 +146,13 @@ def bm25_topk(
 
 def mmr_rerank(
     candidates: DataFrame,
-    query_col: str = "query_id",
-    id_col: str = "neighbor_id",
-    vec_col: str = "embedding",
-    score_col: str = "sim",
     k: int = 10,
     lam: float = 0.7,
     max_candidates: int = 1000,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-rank (Carbonell & Goldstein, SIGIR
-    1998) over per-query candidate sets: greedily select k candidates
-    maximizing
+    1998) over per-query candidate sets of (query_id, neighbor_id,
+    sim, embedding) rows: greedily select k candidates maximizing
 
         lam * relevance  -  (1 - lam) * max cosine(candidate, selected)
 
@@ -168,7 +163,7 @@ def mmr_rerank(
 
     Scale shape: greedy MMR is inherently sequential WITHIN a query but
     independent ACROSS queries, so this is one applyInPandas over
-    query_col groups -- each group is a candidate set some upstream
+    query_id groups -- each group is a candidate set some upstream
     top-k already bounded (the hybrid_search/brute_force_topk contract),
     enforced per group by ``max_candidates`` (a group above it raises:
     an unbounded candidate set means the upstream search is missing its
@@ -177,7 +172,7 @@ def mmr_rerank(
     dropped (undefined cosine). Ties break on (score desc, id asc) --
     deterministic across runs and partitionings.
 
-    Returns (query_col, id_col, mmr_rank, relevance, mmr_score), k rows
+    Returns (query_id, neighbor_id, mmr_rank, relevance, mmr_score), k rows
     per query (fewer when the candidate set is smaller).
     """
     if not 0.0 <= lam <= 1.0:
@@ -238,10 +233,10 @@ def mmr_rerank(
         )
 
     prepared = candidates.select(
-        F.col(query_col).alias("_q"),
-        F.col(id_col).alias("_id"),
-        F.col(score_col).cast("double").alias("_rel"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("query_id").alias("_q"),
+        F.col("neighbor_id").alias("_id"),
+        F.col("sim").cast("double").alias("_rel"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     )
     q_t = prepared.schema["_q"].dataType.simpleString()
     id_t = prepared.schema["_id"].dataType.simpleString()
@@ -251,8 +246,8 @@ def mmr_rerank(
         "relevance DOUBLE, mmr_score DOUBLE",
     )
     return out.select(
-        F.col("_q").alias(query_col),
-        F.col("_id").alias(id_col),
+        F.col("_q").alias("query_id"),
+        F.col("_id").alias("neighbor_id"),
         "mmr_rank",
         "relevance",
         "mmr_score",
@@ -267,7 +262,6 @@ def ranking_metrics(
     k: int = 10,
     rank_col: str | None = None,
     score_col: str | None = None,
-    digits: int = 6,
 ) -> DataFrame:
     """Retrieval evaluation per query: precision@k, recall@k, MRR@k,
     and NDCG@k (binary relevance) -- the offline quality readout for
@@ -297,7 +291,7 @@ def ranking_metrics(
     rows, never item catalogs.
 
     Returns (query, n_rel, hits, precision_at_k, recall_at_k, mrr,
-    ndcg), rounded with stable_round."""
+    ndcg), rounded to 6 digits with stable_round."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if (rank_col is None) == (score_col is None):
@@ -355,22 +349,22 @@ def ranking_metrics(
         "n_rel",
         "hits",
         stable_round(
-            F.col("hits").cast("double") / F.lit(float(k)), digits
+            F.col("hits").cast("double") / F.lit(float(k)), 6
         ).alias("precision_at_k"),
         stable_round(
             F.when(
                 F.col("n_rel") > 0,
                 F.col("hits").cast("double") / F.col("n_rel"),
             ),
-            digits,
+            6,
         ).alias("recall_at_k"),
         stable_round(
             F.coalesce(
                 F.lit(1.0) / F.col("_first").cast("double"), F.lit(0.0)
             ),
-            digits,
+            6,
         ).alias("mrr"),
         stable_round(
-            F.when(F.col("n_rel") > 0, F.col("_dcg") / idcg), digits
+            F.when(F.col("n_rel") > 0, F.col("_dcg") / idcg), 6
         ).alias("ndcg"),
     )

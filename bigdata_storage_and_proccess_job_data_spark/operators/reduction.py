@@ -140,13 +140,11 @@ def pca_apply(
     df: DataFrame,
     vec_col: str,
     model: dict,
-    out_col: str = "proj",
     whiten: bool = False,
     digits: int | None = None,
-    eps: float = 1e-9,
 ) -> DataFrame:
     """Project ``vec_col`` onto a fitted PCA model: out[j] =
-    (v - mean) . component_j, optionally / sqrt(eigval_j + eps)
+    (v - mean) . component_j, optionally / sqrt(eigval_j + 1e-9)
     (whitening -- unit variance per component, the SemDeDup/cosine
     preprocessing). Pure Column expressions (model as literal arrays,
     sequential fold == DuckDB list_dot_product), zero shuffle, scan
@@ -163,13 +161,13 @@ def pca_apply(
     for j, comp in enumerate(model["components"]):
         c = vectors.dot(F.col("_centered"), _lit_vec(comp))
         if whiten:
-            c = c / math.sqrt(model["eigvals"][j] + eps)
+            c = c / math.sqrt(model["eigvals"][j] + 1e-9)
         if digits is not None:
             c = stable_round(c, digits)
         cols.append(c)
     return (
         df.withColumn("_centered", centered)
-        .withColumn(out_col, F.array(*cols))
+        .withColumn("proj", F.array(*cols))
         .drop("_centered")
     )
 
@@ -196,7 +194,6 @@ def jl_project(
     in_dim: int,
     out_dim: int,
     salt: str = "jl",
-    out_col: str = "proj",
     digits: int | None = None,
 ) -> DataFrame:
     """Johnson-Lindenstrauss compression of an embedding column via the
@@ -218,7 +215,7 @@ def jl_project(
         if digits is not None:
             c = stable_round(c, digits)
         cols.append(c)
-    return df.withColumn(out_col, F.array(*cols))
+    return df.withColumn("proj", F.array(*cols))
 
 
 def mahalanobis_fit(df: DataFrame, vec_col: str, ridge: float = 1e-9) -> dict:
@@ -253,7 +250,6 @@ def mahalanobis_apply(
     df: DataFrame,
     model: dict,
     vec_col: str,
-    out_col: str = "maha_dist",
 ) -> DataFrame:
     """Squared-root Mahalanobis distance sqrt((x-m)^T S^-1 (x-m)) per
     row under a FIXED model -- pure codegen'd higher-order-function
@@ -290,7 +286,7 @@ def mahalanobis_apply(
         lambda acc, x: acc + x,
     )
     return out.withColumn(
-        out_col, F.sqrt(F.greatest(d2, F.lit(0.0)))
+        "maha_dist", F.sqrt(F.greatest(d2, F.lit(0.0)))
     ).drop("_mh_c")
 
 

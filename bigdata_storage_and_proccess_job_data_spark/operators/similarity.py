@@ -45,7 +45,6 @@ def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, join against every
@@ -56,11 +55,11 @@ def brute_force_topk(
     """
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        vectors.as_double(vec_col).alias("_qv"),
+        vectors.as_double("embedding").alias("_qv"),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        vectors.as_double(vec_col).alias("_cv"),
+        vectors.as_double("embedding").alias("_cv"),
     )
     scored = (
         F.broadcast(q)
@@ -80,10 +79,7 @@ def brute_force_topk(
 def brute_force_topk_arrow(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    max_queries: int = 10_000,
 ) -> DataFrame:
     """Exact cosine top-k, Arrow-vectorized: the wide-vector counterpart
     of brute_force_topk. The JVM zip_with/aggregate fold costs O(dim)
@@ -112,18 +108,19 @@ def brute_force_topk_arrow(
     q_rows = [
         (r.query_id, r._qv)
         for r in queries.select(
-            F.col(id_col).alias("query_id"), vectors.as_double(vec_col).alias("_qv")
+            F.col("vec_id").alias("query_id"),
+            vectors.as_double("embedding").alias("_qv"),
         )
         .filter(F.col("_qv").isNotNull())
-        .limit(max_queries + 1)
+        .limit(10_001)
         .collect()
     ]
-    if len(q_rows) > max_queries:
+    if len(q_rows) > 10_000:
         # the docstring's "small, broadcast query set" promise, enforced:
         # a larger Q belongs in the bucketed paths (lsh_topk / ivf_topk)
         raise ValueError(
-            f"query set exceeds max_queries={max_queries}; use lsh_topk/"
-            "ivf_topk (or raise the cap) for large query fan-out"
+            "query set exceeds 10,000 queries; use lsh_topk/ivf_topk "
+            "for large query fan-out"
         )
     qids = np.asarray([q[0] for q in q_rows], dtype=np.int64)
     qm = np.asarray([q[1] for q in q_rows], dtype=np.float64)
@@ -161,7 +158,8 @@ def brute_force_topk_arrow(
             )
 
     candidates = corpus.select(
-        F.col(id_col).alias("neighbor_id"), vectors.as_double(vec_col).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.as_double("embedding").alias("_cv"),
     ).mapInPandas(score, "query_id long, neighbor_id long, sim double")
     return _rank_topk(candidates, k)
 
@@ -266,18 +264,15 @@ def md5_codebooks(
 
 
 def md5_centroids(
-    n_centroids: int, dim: int, seed: int = 7, scale: float = 1.0
+    n_centroids: int, dim: int, seed: int = 7
 ) -> list[list[float]]:
     """IVF coarse-quantizer centroids with md5-derived components --
     md5_codebooks' generator applied to the cell layer: component (i, d) of
     centroid i is the first 15 md5 hex nibbles of ``"ivf:{seed}:{i}:{d}"``
-    scaled by 2^-59, shifted to [-1, 1), times ``scale`` -- one IEEE
-    multiply, bit-identical on any engine with md5 (DuckDB twin in
-    plans/scale_queries' knn_ivf oracle).
+    scaled by 2^-59 and shifted to [-1, 1) -- bit-identical on any
+    engine with md5 (DuckDB twin in plans/scale_queries' knn_ivf
+    oracle).
 
-    ``scale`` is ranking-irrelevant for cell ASSIGNMENT (argmax of dot
-    is invariant under one common positive factor); it exists only to
-    keep magnitudes sane if the centroids are reused for scoring.
     Random centroids partition the sphere into random Voronoi cells --
     generally worse recall per probe than k-means-fit ones
     (train_centroids stays the production fit, recall floor pinned in
@@ -297,7 +292,6 @@ def md5_centroids(
                 / 2**59
                 - 1.0
             )
-            * scale
             for d in range(dim)
         ]
         for i in range(n_centroids)
@@ -567,46 +561,40 @@ def lsh_topk(
 
 def cosine_neardup_pairs(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.85,
-    dim: int = 64,
-    n_planes: int = 6,
-    n_tables: int = 24,
-    seed: int = 42,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, sim >=
-    threshold) WITHOUT the all-pairs product: multi-table hyperplane-LSH
-    bucketing generates candidates, exact cosine verifies them.
+    """Embedding-cosine near-duplicate pairs of the 64-dim ``embedding``
+    column keyed by ``vec_id`` (id_a < id_b, sim >= 0.85) WITHOUT the
+    all-pairs product: multi-table hyperplane-LSH bucketing (24 tables
+    of 6 planes) generates candidates, exact cosine verifies them.
 
     Scale shape:
 
-    1. each vector hashes to ``n_tables`` sign-bit buckets -- the ONLY
+    1. each vector hashes to 24 sign-bit buckets -- the ONLY
        thing that shuffles in the candidate stage is (id, table, bucket),
        ~20 bytes/row, never the vector;
     2. the self-equi-join on (table, bucket) meets candidate ids where
        they collide; ``id_a < id_b`` halves, dropDuplicates collapses
        multi-table hits;
     3. vectors re-attach by id (two narrow equi-joins) ONLY for
-       surviving candidates, and exact cosine verifies >= threshold --
+       surviving candidates, and exact cosine verifies >= 0.85 --
        so false positives cost one dot product, never an output row.
 
     Recall: a true pair at cosine >= t survives a table with
-    p = (1-acos(t)/pi)^n_planes, so miss probability is
-    (1-p)^n_tables -- at the defaults (t=.85 -> p~=.46 per... per-plane
-    .823, p=.31 per table) a true pair is missed with prob .69^24 ~=
-    1.4e-4. Hyperplanes are seed-deterministic, so observed recall is
-    REPRODUCIBLE: tests/test_similarity.py pins recall == 1.0 vs the
-    exact twin on the test corpora, and the driver oracle hash-match
-    holds because of it. At higher corpus scale, raise n_planes (bucket
-    selectivity) and n_tables (recall) together.
+    p = (1-acos(t)/pi)^6, so miss probability is (1-p)^24 -- at
+    t=.85 (per-plane .823, p=.31 per table) a true pair is missed with
+    prob .69^24 ~= 1.4e-4. Hyperplanes are seed-deterministic, so
+    observed recall is REPRODUCIBLE: tests/test_similarity.py pins
+    recall == 1.0 vs the exact twin on the test corpora, and the driver
+    oracle hash-match holds because of it. At higher corpus scale, more
+    planes (bucket selectivity) and more tables (recall) go together.
     """
     # dim mismatch raises per-row inside _bucket_array (_dim_guard_sql)
     tables = [
-        hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
+        hyperplanes(64, 6, 42 + 1000 * t) for t in range(24)
     ]
     v = corpus.select(
-        F.col(id_col).alias("_id"), vectors.as_double(vec_col).alias("_v")
+        F.col("vec_id").alias("_id"),
+        vectors.as_double("embedding").alias("_v"),
     ).filter(F.col("_v").isNotNull())
     buckets = v.select(
         "_id", F.explode(_bucket_array("_v", tables)).alias("b")
@@ -628,7 +616,7 @@ def cosine_neardup_pairs(
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", sim_raw.alias("_sim"))
-        .filter(F.col("_sim") >= threshold)
+        .filter(F.col("_sim") >= 0.85)
         .select(
             "id_a", "id_b", stable_round(F.col("_sim"), 4).alias("sim")
         )
@@ -638,11 +626,9 @@ def cosine_neardup_pairs(
 def train_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     sample_size: int = 2048,
     n_iters: int = 5,
-    seed: int = 42,
 ) -> list[list[float]]:
     """Spherical k-means coarse quantizer, trained on a deterministic
     sample (xxhash64-ordered, so the same rows are picked regardless of
@@ -656,10 +642,11 @@ def train_centroids(
 
     sample = (
         corpus.select(
-            F.col(id_col).alias("_id"), vectors.as_double(vec_col).alias("_v")
+            F.col(id_col).alias("_id"),
+            vectors.as_double("embedding").alias("_v"),
         )
         .filter(F.col("_v").isNotNull())
-        .orderBy(F.xxhash64(F.col("_id"), F.lit(seed)))
+        .orderBy(F.xxhash64(F.col("_id"), F.lit(42)))
         .limit(sample_size)
         .collect()
     )
@@ -706,7 +693,6 @@ def assign_cells(
     corpus: DataFrame,
     centroids: list[list[float]],
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, vector, cell): each corpus vector labeled with its nearest
     centroid. This is the IVF build step made storable: write the result
@@ -716,7 +702,7 @@ def assign_cells(
     (tests/test_similarity.py asserts the pruned plan)."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        vectors.as_double(vec_col).alias("_cv"),
+        vectors.as_double("embedding").alias("_cv"),
     )
     return c.withColumn(
         "cell", F.array_max(_cell_sims("_cv", centroids))["cell"]
@@ -725,13 +711,9 @@ def assign_cells(
 
 def train_pq(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     n_codes: int = 32,
     sample_size: int = 2048,
-    n_iters: int = 8,
-    seed: int = 42,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks (Jegou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): vectors are
@@ -750,28 +732,18 @@ def train_pq(
     codes. Accuracy is bounded by quantization distortion; recall pins
     live in tests/test_similarity.py.
     """
-    import numpy as np
-
-    x = _sample_matrix(corpus, id_col, vec_col, sample_size, seed, m)
-    return _fit_pq(x, m, n_codes, n_iters, seed)
+    return _fit_pq(_sample_matrix(corpus, sample_size, m), m, n_codes)
 
 
-def _sample_matrix(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    sample_size: int,
-    seed: int,
-    m: int,
-):
+def _sample_matrix(corpus: DataFrame, sample_size: int, m: int):
     """Deterministic training sample as a unit-normalized numpy matrix
     (zero-norm rows dropped); validates dim % m."""
     import numpy as np
 
     sample = (
-        corpus.select(vectors.as_double(vec_col).alias("_v"))
+        corpus.select(vectors.as_double("embedding").alias("_v"))
         .filter(F.col("_v").isNotNull())
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(42)))
         .limit(sample_size)
         .collect()
     )
@@ -783,22 +755,20 @@ def _sample_matrix(
     return x[norms[:, 0] > 0] / norms[norms[:, 0] > 0]
 
 
-def _fit_pq(
-    x, m: int, n_codes: int, n_iters: int, seed: int
-) -> list[list[list[float]]]:
-    """Per-subspace Lloyd k-means over a (n, dim) matrix -- the shared
-    fitting loop of train_pq (raw vectors) and the residual path of
-    ivfpq_build (vector minus assigned centroid)."""
+def _fit_pq(x, m: int, n_codes: int) -> list[list[list[float]]]:
+    """Per-subspace Lloyd k-means (8 iterations) over a (n, dim) matrix
+    -- the shared fitting loop of train_pq (raw vectors) and the
+    residual path of ivfpq_build (vector minus assigned centroid)."""
     import numpy as np
 
     dsub = x.shape[1] // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     books = []
     for j in range(m):
         xs = x[:, j * dsub : (j + 1) * dsub]
         k0 = min(n_codes, len(xs))
         cent = xs[rng.permutation(len(xs))[:k0]].copy()
-        for _ in range(n_iters):
+        for _ in range(8):
             d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)
             for c in range(k0):
@@ -809,11 +779,88 @@ def _fit_pq(
     return books
 
 
+def _pq_encode_batches(batches, books, cents=None, residual=False):
+    """The batch loop shared by encode_pq and encode_ivfpq: per Arrow
+    batch of (neighbor_id, _cv), L2-normalize (zero-norm rows dropped),
+    with ``cents`` assign each row its nearest centroid (subtracted
+    first when ``residual``), and quantize every subspace to its
+    nearest codeword. Yields (ids, cells or None, codes)."""
+    import numpy as np
+
+    m, dsub = len(books), books[0].shape[1]
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        xm = np.stack(pdf["_cv"].to_numpy()).astype(np.float64)
+        if xm.shape[1] != m * dsub:
+            raise ValueError(
+                f"embedding has dimension {xm.shape[1]}, codebooks "
+                f"built for {m * dsub}; retrain with matching m/dim"
+            )
+        nrm = np.linalg.norm(xm, axis=1)
+        valid = nrm > 0
+        nids, xm = nids[valid], xm[valid] / nrm[valid, None]
+        if not len(nids):
+            continue
+        cell = None
+        if cents is not None:
+            cell = np.argmax(xm @ cents.T, axis=1)
+            if residual:
+                xm = xm - cents[cell]
+        codes = np.empty((len(xm), m), dtype=np.int32)
+        for j in range(m):
+            xs = xm[:, j * dsub : (j + 1) * dsub]
+            # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2; drop the x term
+            d2 = -2.0 * (xs @ books[j].T) + (books[j] ** 2).sum(axis=1)
+            codes[:, j] = np.argmin(d2, axis=1)
+        yield nids, cell, codes
+
+
+def _query_luts(queries: DataFrame, books: list) -> tuple:
+    """The query side shared by pq_topk_from_codes and
+    ivfpq_topk_from_index: collect at most 10,000 queries (more raise
+    -- the LUT set must stay broadcastable), check their dimension
+    against the codebooks, L2-normalize (zero-norm queries dropped) and
+    build LUT[q, j, c] = q_sub_j . codebook_j[c], so approx dot =
+    sum_j LUT. Returns (query ids, unit query matrix, LUT)."""
+    import numpy as np
+
+    m, dsub = len(books), books[0].shape[1]
+    q_rows = (
+        queries.select(
+            F.col("vec_id").alias("query_id"),
+            vectors.as_double("embedding").alias("_qv"),
+        )
+        .filter(F.col("_qv").isNotNull())
+        .limit(10_001)
+        .collect()
+    )
+    if len(q_rows) > 10_000:
+        raise ValueError(
+            "query set exceeds 10,000 queries; batch the queries (the "
+            "LUT set must stay broadcastable)"
+        )
+    qids = np.asarray([r.query_id for r in q_rows], dtype=np.int64)
+    qm = np.asarray([r._qv for r in q_rows], dtype=np.float64)
+    if qm.ndim != 2 or qm.shape[1] != m * dsub:
+        dim = qm.shape[1] if qm.ndim == 2 else "?"
+        raise ValueError(
+            f"embedding has dimension {dim}, codebooks built for {m * dsub}"
+        )
+    qnorm = np.linalg.norm(qm, axis=1)
+    keep = qnorm > 0
+    qids, qm = qids[keep], qm[keep] / qnorm[keep, None]
+    lut = np.stack(
+        [qm[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)],
+        axis=1,
+    )
+    return qids, qm, lut
+
+
 def encode_pq(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(neighbor_id, codes): each corpus vector L2-normalized and
     quantized to its nearest centroid per subspace -- the PQ build step
@@ -828,43 +875,17 @@ def encode_pq(
     import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(
+    bc = corpus.sparkSession.sparkContext.broadcast(
         [np.asarray(b, dtype=np.float64) for b in codebooks]
     )
 
     def encode(batches):
-        books = bc.value
-        dsub = books[0].shape[1]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            xm = np.stack(pdf["_cv"].to_numpy()).astype(np.float64)
-            if xm.shape[1] != m * dsub:
-                raise ValueError(
-                    f"{vec_col} has dimension {xm.shape[1]}, codebooks "
-                    f"built for {m * dsub}; retrain with matching m/dim"
-                )
-            nrm = np.linalg.norm(xm, axis=1)
-            valid = nrm > 0
-            nids, xm = nids[valid], xm[valid] / nrm[valid, None]
-            if not len(nids):
-                continue
-            codes = np.empty((len(xm), m), dtype=np.int32)
-            for j in range(m):
-                xs = xm[:, j * dsub : (j + 1) * dsub]
-                # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2; drop the x term
-                d2 = -2.0 * (xs @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {"neighbor_id": nids, "codes": list(codes)}
-            )
+        for nids, _, codes in _pq_encode_batches(batches, bc.value):
+            yield pd.DataFrame({"neighbor_id": nids, "codes": list(codes)})
 
     return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.as_double(vec_col).alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.as_double("embedding").alias("_cv"),
     ).mapInPandas(encode, "neighbor_id long, codes array<int>")
 
 
@@ -873,9 +894,6 @@ def pq_topk_from_codes(
     codes: DataFrame,
     codebooks: list[list[list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 10_000,
 ) -> DataFrame:
     """Approximate cosine top-k by asymmetric distance computation (ADC)
     over a stored PQ-code index: each query builds an (m x n_codes)
@@ -894,39 +912,10 @@ def pq_topk_from_codes(
 
     from bigdata_storage_and_proccess_job_data_spark.functions.numeric import DELTA
 
-    spark = codes.sparkSession
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m, dsub = len(books), books[0].shape[1]
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            vectors.as_double(vec_col).alias("_qv"),
-        )
-        .filter(F.col("_qv").isNotNull())
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}; batch the "
-            "queries (the LUT set must stay broadcastable)"
-        )
-    qids = np.asarray([r.query_id for r in q_rows], dtype=np.int64)
-    qm = np.asarray([r._qv for r in q_rows], dtype=np.float64)
-    if qm.ndim != 2 or qm.shape[1] != m * dsub:
-        dim = qm.shape[1] if qm.ndim == 2 else "?"
-        raise ValueError(
-            f"{vec_col} has dimension {dim}, codebooks built for {m * dsub}"
-        )
-    qnorm = np.linalg.norm(qm, axis=1)
-    keep = qnorm > 0
-    qids, qm = qids[keep], qm[keep] / qnorm[keep, None]
-    # LUT[q, j, c] = q_sub_j . codebook_j[c]  -> approx dot = sum_j LUT
-    lut = np.stack(
-        [qm[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)],
-        axis=1,
-    )
-    bc = spark.sparkContext.broadcast((qids, lut))
+    m = len(books)
+    qids, _, lut = _query_luts(queries, books)
+    bc = codes.sparkSession.sparkContext.broadcast((qids, lut))
     scale = 10**4
 
     def score(batches):
@@ -962,8 +951,6 @@ def pq_topk_from_codes(
 
 def sq8_encode(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-vector symmetric int8 scalar quantization of the NORMALIZED
     embedding (the FAISS ScalarQuantizer / llama.cpp Q8 storage idea,
@@ -987,9 +974,9 @@ def sq8_encode(
     column's <= 255 distinct values dictionary-encode to ~1 byte each
     in parquet. Encode once, write beside the id, and the raw vector
     column never needs to be scanned again at query time."""
-    v_sql = vectors.sql_of(vectors.as_double(vec_col))
+    v_sql = vectors.sql_of(vectors.as_double("embedding"))
     normed = corpus.filter(F.expr(vectors.norm_sql(v_sql)) > 0).select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.expr(
             f"transform({v_sql}, x -> x / {vectors.norm_sql(v_sql)})"
         ).alias("_nv"),
@@ -1010,11 +997,8 @@ def sq8_encode(
 def sq8_topk(
     queries: DataFrame,
     index: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate cosine top-k over an SQ8 store (sq8_encode output):
+    """Approximate cosine top-5 over an SQ8 store (sq8_encode output):
     broadcast the exact query set and score every index row by the
     cosine against the DEQUANTIZED vector (codes[d] * scale) -- the
     compressed brute-force scan, reading ~1 byte per component where
@@ -1026,8 +1010,8 @@ def sq8_topk(
     self-matches excluded, ranking key (rounded sim DESC, neighbor id
     ASC) -- deterministic across engines."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        vectors.as_double(vec_col).alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        vectors.as_double("embedding").alias("_qv"),
     )
     dec = "transform(codes, c -> c * scale)"
     scored = (
@@ -1042,24 +1026,20 @@ def sq8_topk(
             ).alias("sim"),
         )
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, 5)
 
 
 def ivfpq_build(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
-    m: int = 8,
     n_codes: int = 32,
     sample_size: int = 2048,
-    seed: int = 42,
     residual: bool = True,
 ) -> tuple[list[list[float]], list[list[list[float]]], DataFrame]:
     """IVF-PQ index build (the FAISS IVFPQ composition, Jegou et al.
     2011 sect. V): a spherical-k-means coarse quantizer assigns every
     vector to a cell (IVF -- the probe prunes WHICH rows are scored)
-    and per-subspace PQ codebooks compress each vector to ``m`` ints
+    and per-subspace PQ codebooks compress each vector to 8 ints
     (PQ -- HOW the survivors are scored). Returns (centroids,
     codebooks, index) where index = (neighbor_id, cell, codes).
 
@@ -1074,7 +1054,7 @@ def ivfpq_build(
 
     At 100 TB: write the index partitioned by ``cell``
     (sources/lake.py:write_partitioned) -- a probe reads n_probe
-    partitions of an m-byte-per-row table, so query cost is
+    partitions of an 8-byte-per-row table, so query cost is
     (n_probe/n_centroids) x (compressed corpus), while the raw vectors
     are never read after the build. Both models train on one
     deterministic sample; assignment and encoding are distributed in
@@ -1082,16 +1062,14 @@ def ivfpq_build(
     import numpy as np
 
     centroids = train_centroids(
-        corpus, id_col, vec_col, n_centroids, sample_size, seed=seed
+        corpus, n_centroids=n_centroids, sample_size=sample_size
     )
-    x = _sample_matrix(corpus, id_col, vec_col, sample_size, seed, m)
+    x = _sample_matrix(corpus, sample_size, 8)
     if residual:
         cents = np.asarray(centroids, dtype=np.float64)
         x = x - cents[np.argmax(x @ cents.T, axis=1)]
-    codebooks = _fit_pq(x, m, n_codes, n_iters=8, seed=seed)
-    index = encode_ivfpq(
-        corpus, centroids, codebooks, id_col, vec_col, residual=residual
-    )
+    codebooks = _fit_pq(x, 8, n_codes)
+    index = encode_ivfpq(corpus, centroids, codebooks, residual=residual)
     return centroids, codebooks, index
 
 
@@ -1099,8 +1077,6 @@ def encode_ivfpq(
     corpus: DataFrame,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     residual: bool = True,
 ) -> DataFrame:
     """(neighbor_id, cell, codes) in ONE distributed pass: normalize,
@@ -1111,9 +1087,7 @@ def encode_ivfpq(
     import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(
+    bc = corpus.sparkSession.sparkContext.broadcast(
         (
             np.asarray(centroids, dtype=np.float64),
             [np.asarray(b, dtype=np.float64) for b in codebooks],
@@ -1122,30 +1096,9 @@ def encode_ivfpq(
 
     def encode(batches):
         cents, books = bc.value
-        dsub = books[0].shape[1]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            xm = np.stack(pdf["_cv"].to_numpy()).astype(np.float64)
-            if xm.shape[1] != m * dsub:
-                raise ValueError(
-                    f"{vec_col} has dimension {xm.shape[1]}, codebooks "
-                    f"built for {m * dsub}; retrain with matching m/dim"
-                )
-            nrm = np.linalg.norm(xm, axis=1)
-            valid = nrm > 0
-            nids, xm = nids[valid], xm[valid] / nrm[valid, None]
-            if not len(nids):
-                continue
-            cell = np.argmax(xm @ cents.T, axis=1)
-            if residual:
-                xm = xm - cents[cell]
-            codes = np.empty((len(xm), m), dtype=np.int32)
-            for j in range(m):
-                xs = xm[:, j * dsub : (j + 1) * dsub]
-                d2 = -2.0 * (xs @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d2, axis=1)
+        for nids, cell, codes in _pq_encode_batches(
+            batches, books, cents, residual
+        ):
             yield pd.DataFrame(
                 {
                     "neighbor_id": nids,
@@ -1155,8 +1108,8 @@ def encode_ivfpq(
             )
 
     return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.as_double(vec_col).alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.as_double("embedding").alias("_cv"),
     ).mapInPandas(encode, "neighbor_id long, cell int, codes array<int>")
 
 
@@ -1167,9 +1120,6 @@ def ivfpq_topk_from_index(
     codebooks: list[list[list[float]]],
     k: int = 5,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 10_000,
     residual: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k over a stored IVF-PQ index: each query
@@ -1196,35 +1146,8 @@ def ivfpq_topk_from_index(
 
     spark = index.sparkSession
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m, dsub = len(books), books[0].shape[1]
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            vectors.as_double(vec_col).alias("_qv"),
-        )
-        .filter(F.col("_qv").isNotNull())
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}; batch the "
-            "queries (the LUT set must stay broadcastable)"
-        )
-    qids = np.asarray([r.query_id for r in q_rows], dtype=np.int64)
-    qm = np.asarray([r._qv for r in q_rows], dtype=np.float64)
-    if qm.ndim != 2 or qm.shape[1] != m * dsub:
-        dim = qm.shape[1] if qm.ndim == 2 else "?"
-        raise ValueError(
-            f"{vec_col} has dimension {dim}, codebooks built for {m * dsub}"
-        )
-    qnorm = np.linalg.norm(qm, axis=1)
-    keep = qnorm > 0
-    qids, qm = qids[keep], qm[keep] / qnorm[keep, None]
-    lut = np.stack(
-        [qm[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)],
-        axis=1,
-    )
+    m = len(books)
+    qids, qm, lut = _query_luts(queries, books)
     # probe cells driver-side (|Q| x n_centroids dots -- the query set
     # is bounded by contract) and ship (query_id, cell) pairs; the LUTs
     # travel once by broadcast
@@ -1294,12 +1217,9 @@ def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    sample_size: int = 2048,
-    seed: int = 42,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index: a
@@ -1324,14 +1244,12 @@ def ivf_topk(
     incremental corpus keeps a stable cell layout).
     """
     if centroids is None:
-        centroids = train_centroids(
-            corpus, id_col, vec_col, n_centroids, sample_size, seed=seed
-        )
+        centroids = train_centroids(corpus, id_col, n_centroids)
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        vectors.as_double(vec_col).alias("_qv"),
+        vectors.as_double("embedding").alias("_qv"),
     )
-    cb = assign_cells(corpus, centroids, id_col, vec_col)
+    cb = assign_cells(corpus, centroids, id_col)
     qb = (
         q.withColumn(
             "_probe",
@@ -1363,10 +1281,6 @@ def hard_negatives(
     corpus: DataFrame,
     positives: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    anchor_col: str = "anchor_id",
-    positive_col: str = "positive_id",
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query anchor,
     the ``k`` MOST SIMILAR corpus items that are not that anchor's
@@ -1375,7 +1289,7 @@ def hard_negatives(
     hard negatives is what makes a bi-encoder discriminate lookalikes;
     uniform negatives alone saturate early.
 
-    ``positives`` maps (anchor_col, positive_col) pairs onto the
+    ``positives`` maps (anchor_id, positive_id) pairs onto the
     query/corpus id space. The anti-join happens BEFORE ranking, on the
     full scored frame, so the result is EXACT: no overfetch heuristic,
     no risk of positives crowding the window out of true negatives.
@@ -1389,12 +1303,12 @@ def hard_negatives(
     scorer for an ANN path when the anchor set itself is corpus-sized.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        vectors.as_double(vec_col).alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        vectors.as_double("embedding").alias("_qv"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.as_double(vec_col).alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.as_double("embedding").alias("_cv"),
     )
     scored = (
         F.broadcast(q)
@@ -1409,8 +1323,8 @@ def hard_negatives(
         )
     )
     pos = positives.select(
-        F.col(anchor_col).alias("query_id"),
-        F.col(positive_col).alias("neighbor_id"),
+        F.col("anchor_id").alias("query_id"),
+        F.col("positive_id").alias("neighbor_id"),
     )
     return _rank_topk(scored.join(pos, ["query_id", "neighbor_id"], "left_anti"), k)
 
@@ -1420,7 +1334,6 @@ def mips_topk(
     corpus: DataFrame,
     query_id: str = "vec_id",
     corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Exact MAXIMUM-INNER-PRODUCT top-k: the recommendation flavor of
@@ -1435,11 +1348,11 @@ def mips_topk(
     Exact and brute force: every query meets every corpus vector."""
     q = queries.select(
         F.col(query_id).alias("query_id"),
-        vectors.as_double(vec_col).alias("_qv"),
+        vectors.as_double("embedding").alias("_qv"),
     )
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
-        vectors.as_double(vec_col).alias("_cv"),
+        vectors.as_double("embedding").alias("_cv"),
     )
     scored = F.broadcast(q).crossJoin(c).select(
         "query_id",

@@ -105,12 +105,10 @@ def spatial_join_radius(
     radius_km: float,
     left_id: str = "l_id",
     right_id: str = "r_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """All (left_id, right_id, distance_km) pairs with haversine
     distance <= radius_km. ``left``/``right`` need an id column plus
-    ``lat_col`` (degrees, [-90, 90]) and ``lon_col`` ([-180, 180]);
+    ``lat`` (degrees, [-90, 90]) and ``lon`` ([-180, 180]);
     NULL coordinates drop. Ids should be unique per side (duplicate
     ids produce duplicate pair rows, like any join)."""
     r = _validated(radius_km)
@@ -118,8 +116,8 @@ def spatial_join_radius(
 
     rt = right.select(
         F.col(right_id).alias("_rid"),
-        F.col(lat_col).cast("double").alias("_rlat"),
-        F.col(lon_col).cast("double").alias("_rlon"),
+        F.col("lat").cast("double").alias("_rlat"),
+        F.col("lon").cast("double").alias("_rlon"),
     ).filter(F.col("_rlat").isNotNull() & F.col("_rlon").isNotNull())
     band_r = F.floor(F.col("_rlat") / F.lit(cell_deg))
     n_r = _n_cells(_cell_width(cell_deg, band_r))
@@ -133,8 +131,8 @@ def spatial_join_radius(
 
     lt = left.select(
         F.col(left_id).alias("_lid"),
-        F.col(lat_col).cast("double").alias("_llat"),
-        F.col(lon_col).cast("double").alias("_llon"),
+        F.col("lat").cast("double").alias("_llat"),
+        F.col("lon").cast("double").alias("_llon"),
     ).filter(F.col("_llat").isNotNull() & F.col("_llon").isNotNull())
     offsets = F.array(F.lit(-1), F.lit(0), F.lit(1))
     lt = lt.withColumn("_db", F.explode(offsets)).withColumn(
@@ -170,27 +168,20 @@ def spatial_join_radius(
 def spatial_self_pairs(
     df: DataFrame,
     radius_km: float,
-    id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
-    """Unordered pairs (id_a < id_b, distance_km) within ``df`` closer
-    than radius_km -- the geo-dedup shape (same venue scraped twice,
-    duplicate POIs). One blocked join, each pair reported once."""
-    rid = id_col + "__r"
+    """Unordered pairs (id_a < id_b, distance_km) of ``df``'s (id, lat,
+    lon) rows closer than radius_km -- the geo-dedup shape (same venue
+    scraped twice, duplicate POIs). One blocked join, each pair reported
+    once."""
     out = spatial_join_radius(
         df,
-        df.select(
-            F.col(id_col).alias(rid), F.col(lat_col), F.col(lon_col)
-        ),
+        df.select(F.col("id").alias("id__r"), F.col("lat"), F.col("lon")),
         radius_km,
-        left_id=id_col,
-        right_id=rid,
-        lat_col=lat_col,
-        lon_col=lon_col,
+        left_id="id",
+        right_id="id__r",
     )
-    return out.filter(F.col(id_col) < F.col(rid)).select(
-        F.col(id_col).alias("id_a"),
-        F.col(rid).alias("id_b"),
+    return out.filter(F.col("id") < F.col("id__r")).select(
+        F.col("id").alias("id_a"),
+        F.col("id__r").alias("id_b"),
         "distance_km",
     )

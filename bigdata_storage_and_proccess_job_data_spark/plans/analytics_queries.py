@@ -970,7 +970,6 @@ def skewed_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_qty": ("sum", "l_quantity"),
             "max_price": ("max", "l_extendedprice"),
         },
-        buckets=16,
         key_name="company",
     )
 

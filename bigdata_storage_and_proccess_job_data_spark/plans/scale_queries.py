@@ -323,8 +323,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return neardup.simhash_candidates(
-        docs, "doc_id", "text", max_hamming=8,
-        token_hash=neardup.md5_hash60,
+        docs, "doc_id", "text", token_hash=neardup.md5_hash60,
     )
 
 
@@ -572,7 +571,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         k=5,
         n_probe=6,
-        centroids=similarity.md5_centroids(16, 64, seed=9, scale=1.0),
+        centroids=similarity.md5_centroids(16, 64, seed=9),
     )
 
 
@@ -607,7 +606,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_storage_and_proccess_job_data_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_neardup_pairs(emb, threshold=0.85)
+    return similarity.cosine_neardup_pairs(emb)
 
 
 def embedding_neardup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,7 +760,7 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = neardup.minhash_dedup_pairs(
         docs, "doc_id", "text", threshold=0.9, num_hashes=64, bands=16
     )
-    return neardup.connected_components(pairs, "id_a", "id_b").orderBy("id")
+    return neardup.connected_components(pairs).orderBy("id")
 
 
 # ---------------------------------------------------------------------------
@@ -798,8 +797,7 @@ def _media_knn_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = multimodal.extract_features(_media_frame(spark, sf_dir), dim=16)
     return similarity.ivf_topk(
         feats.filter(F.col("media_id") < 10), feats,
-        id_col="media_id", vec_col="embedding",
-        k=3, n_centroids=8, n_probe=4,
+        id_col="media_id", k=3, n_centroids=8, n_probe=4,
     )
 
 
@@ -815,8 +813,7 @@ def _media_exact_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
         feature_fn=multimodal.md5_features,
     )
     return similarity.brute_force_topk(
-        feats.filter(F.col("media_id") < 10), feats,
-        id_col="media_id", vec_col="embedding", k=3,
+        feats.filter(F.col("media_id") < 10), feats, id_col="media_id", k=3
     )
 
 
@@ -912,7 +909,7 @@ def media_features_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         queries = feats.filter(F.col("media_id") < 10)
         out = similarity.brute_force_topk(
-            queries, feats, id_col="media_id", vec_col="embedding", k=3
+            queries, feats, id_col="media_id", k=3
         )
         rows = out.collect()
         schema = out.schema
@@ -1327,7 +1324,7 @@ def decontaminated_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     contaminated = (
         corpus.contamination_pairs(
-            train, bench, "doc_id", "text", ngram=5, min_shared=3
+            train, bench, "doc_id", "text"
         )
         .select(F.col("train_id").alias("doc_id"))
         .distinct()
@@ -1416,8 +1413,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return ranking.bm25_topk(
-        docs, ["spark", "window", "fast"], id_col="doc_id",
-        text_col="text", k=20,
+        docs, ["spark", "window", "fast"], k=20
     )
 
 
@@ -2139,7 +2135,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_storage_and_proccess_job_data_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = similarity.md5_centroids(16, 64, seed=9, scale=1.0)
+    cents = similarity.md5_centroids(16, 64, seed=9)
     books = similarity.md5_codebooks(
         m=8, n_codes=16, dsub=8, seed=42, scale=0.35
     )
@@ -2233,7 +2229,7 @@ def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.sq8_topk(
-        emb.filter(F.col("vec_id") < 20), similarity.sq8_encode(emb), k=5
+        emb.filter(F.col("vec_id") < 20), similarity.sq8_encode(emb)
     )
 
 
@@ -2760,6 +2756,4 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = similarity.md5_centroids(8, 64, seed=3)
-    return clustering.semantic_dedup(
-        emb, "vec_id", "embedding", threshold=0.35, centroids=cents
-    )
+    return clustering.semantic_dedup(emb, threshold=0.35, centroids=cents)

@@ -22,9 +22,7 @@ def sample_with_replacement(
     return pool.sample(withReplacement=True, fraction=fraction, seed=seed)
 
 
-def mutate_counters(
-    df: DataFrame, cols: list[str], max_increment: int = 5, seed: int = 42
-) -> DataFrame:
+def mutate_counters(df: DataFrame, cols: list[str]) -> DataFrame:
     """Seeded counter mutation (X3, JobService.java:112-142: views/applies
     += randint(0,5)): deterministic per-row increments derived from
     xxhash64 of the row key columns -- reproducible across retries,
@@ -32,8 +30,8 @@ def mutate_counters(
     out = df
     for i, c in enumerate(cols):
         inc = F.pmod(
-            F.xxhash64(*[F.col(k) for k in df.columns[:1]], F.lit(seed + i)),
-            F.lit(max_increment + 1),
+            F.xxhash64(*[F.col(k) for k in df.columns[:1]], F.lit(42 + i)),
+            F.lit(6),
         ).cast("int")
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)) + inc)
     return out

@@ -186,7 +186,6 @@ def archive_stream(
     checkpoint_dir: str,
     partition_by: list[str],
     processing_interval: str | None = "60 seconds",
-    fmt: str = "parquet",
 ):
     """The Kafka->lake archiver (reference S11/X4, kafka_to_minio.py:47-80):
     its hand-rolled count-or-time micro-batcher collapses to a
@@ -196,7 +195,7 @@ def archive_stream(
     from bigdata_storage_and_proccess_job_data_spark.streaming import pipeline
 
     w = (
-        stream_df.writeStream.format(fmt)
+        stream_df.writeStream.format("parquet")
         .option("path", path)
         .partitionBy(*partition_by)
     )
@@ -209,8 +208,6 @@ def write_with_bloom(
     df: DataFrame,
     path: str,
     bloom_cols: dict[str, int],
-    fpp: float = 0.01,
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet with per-column BLOOM FILTERS for the given columns
     (``bloom_cols`` maps column name -> expected distinct values per
@@ -233,12 +230,12 @@ def write_with_bloom(
     reads stay CORRECT (bloom hits fall back to reading the group).
     tests/test_lake.py:test_bloom_filter_skips_point_lookup measures
     the skip on a scattered key."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     for col, ndv in bloom_cols.items():
         w = (
             w.option(f"parquet.bloom.filter.enabled#{col}", "true")
             .option(f"parquet.bloom.filter.expected.ndv#{col}", str(int(ndv)))
-            .option(f"parquet.bloom.filter.fpp#{col}", str(float(fpp)))
+            .option(f"parquet.bloom.filter.fpp#{col}", "0.01")
         )
     w.parquet(path)
 
@@ -250,7 +247,6 @@ def write_bucketed(
     n_buckets: int = 32,
     path: str | None = None,
     sort_key: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed parquet table (hash-partitioned ON DISK by ``bucket_key``
     into ``n_buckets`` files per write task, catalog-registered so the
@@ -266,7 +262,7 @@ def write_bucketed(
     """
     w = (
         df.write.format("parquet")
-        .mode(mode)
+        .mode("overwrite")
         .bucketBy(n_buckets, bucket_key)
     )
     if sort_key:

@@ -365,9 +365,6 @@ def write_stats_manifest(
                 per_col[col] = [None, None]
             else:
                 per_col[col] = [min(mins), max(maxs)]
-        # the file's row count from the same footer, stored beside the
-        # column bounds (not a column: readers of the bounds skip it)
-        per_col["__nrows__"] = [md.num_rows]
         manifest[os.path.basename(path)] = per_col
     ser = {
         f: {c: _stats_ser(v) for c, v in cs.items()}
@@ -1018,14 +1015,13 @@ def apply_changes(
     table_dir: str,
     changes: DataFrame,
     key: str,
-    op_col: str = "_op",
     expected: int | None = None,
     stats_cols: list[str] | None = None,
     merge_schema: bool = False,
     prune: bool = False,
 ) -> int:
     """MERGE-style change application onto a versioned table: ``changes``
-    carries the table's columns plus ``op_col`` in {'upsert','delete'}.
+    carries the table's columns plus ``_op`` in {'upsert','delete'}.
     Every key present in the batch is first removed from the current
     snapshot (left-anti on the touched-key set -- one narrow join), then
     the batch's upsert rows are appended; the result commits as the next
@@ -1065,11 +1061,11 @@ def apply_changes(
     # per use; a change batch is small relative to the table by nature
     changes = changes.persist()
     try:
-        ops = {r[0] for r in changes.select(op_col).distinct().collect()}
+        ops = {r[0] for r in changes.select("_op").distinct().collect()}
         bad = ops - {"upsert", "delete"}
         if bad:
-            raise ValueError(f"unknown {op_col} values: {sorted(bad)}")
-        upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
+            raise ValueError(f"unknown _op values: {sorted(bad)}")
+        upserts = changes.filter(F.col("_op") == "upsert").drop("_op")
         if current_version(table_dir) is None:
             return commit_version(
                 upserts, table_dir, expected=expected, stats_cols=stats_cols
@@ -1218,7 +1214,6 @@ def compact_small_files(
     spark: SparkSession,
     table_dir: str,
     small_bytes: int = 8 * 1024 * 1024,
-    target_file_bytes: int = 128 * 1024 * 1024,
     stats_cols: list[str] | None = None,
     expected: int | str | None = "auto",
 ) -> int:
@@ -1236,7 +1231,7 @@ def compact_small_files(
     unlink in one dir never touches the other's entry.)
 
     Small files are read once and re-written as
-    ceil(small_total / target_file_bytes) files. Returns the new
+    ceil(small_total / 128 MiB) files. Returns the new
     version, or the CURRENT version unchanged when fewer than two small
     files exist (nothing to bin-pack -- no empty commit).
 
@@ -1260,7 +1255,7 @@ def compact_small_files(
     if len(small) < 2:
         return pinned
     small_total = sum(os.path.getsize(p) for p in small)
-    n_out = max(1, math.ceil(small_total / target_file_bytes))
+    n_out = max(1, math.ceil(small_total / (128 * 1024 * 1024)))
     nxt, new_snap = _stage(table_dir, expected)
     read_parquet(spark, *small).coalesce(n_out).write.mode("error").parquet(
         new_snap
@@ -1500,14 +1495,7 @@ def _cow_rewrite(
     if stats_cols_override is not None:
         write_stats_manifest(new_snap, list(stats_cols_override))
     elif old_stats is not None:
-        stats_cols = sorted(
-            {
-                cname
-                for per in old_stats.values()
-                for cname in per
-                if cname != "__nrows__"
-            }
-        )
+        stats_cols = sorted({c for per in old_stats.values() for c in per})
         write_stats_manifest(new_snap, stats_cols)
     bloom_path = os.path.join(snap, _BLOOM)
     if os.path.exists(bloom_path):

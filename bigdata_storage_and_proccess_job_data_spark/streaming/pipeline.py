@@ -30,7 +30,6 @@ def file_stream(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-based streaming source (test/backfill stand-in for Kafka;
@@ -45,7 +44,7 @@ def file_stream(
     ``path`` still empty at start, the stream keeps the session count.
     A restart from an existing checkpoint keeps the count recorded
     there."""
-    reader = spark.readStream.schema(schema).format(fmt)
+    reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)
@@ -200,7 +199,6 @@ def fan_out_foreach_batch(
     agg_writers: dict[str, Callable[[DataFrame, int], None]],
     checkpoint_dir: str,
     trigger_available_now: bool = False,
-    processing_time: str | None = None,
 ) -> StreamingQuery:
     """ONE streaming query fanning out to N sinks per micro-batch.
 
@@ -231,7 +229,6 @@ def fan_out_foreach_batch(
         stream_df.writeStream.foreachBatch(process),
         checkpoint_dir,
         trigger_available_now,
-        processing_time,
     )
 
 

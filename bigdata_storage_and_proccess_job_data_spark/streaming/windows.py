@@ -27,14 +27,13 @@ def windowed_agg(
     slide: str | None = None,
     dims: list[str] | None = None,
     watermark: str | None = None,
-    flatten: bool = True,
 ) -> DataFrame:
-    """window(ts, duration[, slide]) x dims -> agg(measures).
+    """window(ts, duration[, slide]) x dims -> agg(measures), with
+    window.start/window.end projected to window_start / window_end
+    (timestamp_ntz, so values are tz-stable) -- reference W4.
 
-    - ``watermark``: applied only on streaming frames (a static frame
-      ignores withWatermark, but we skip it entirely for clarity).
-    - ``flatten``: project window.start/window.end to window_start /
-      window_end (timestamp_ntz, so values are tz-stable) -- reference W4.
+    ``watermark`` is applied only on streaming frames (a static frame
+    ignores withWatermark, but we skip it entirely for clarity).
     """
     # withWatermark requires TIMESTAMP event time; Spark 4.1 infers NTZ
     # from naive-datetime fixtures and NTZ-annotated parquet, so pin LTZ
@@ -47,16 +46,12 @@ def windowed_agg(
     )
     keys = [win.alias("window"), *(dims or [])]
     aggs = [expr.alias(name) for name, expr in measures.items()]
-    out = df.groupBy(*keys).agg(*aggs)
-    if flatten:
-        cols = [
-            F.col("window.start").cast("timestamp_ntz").alias("window_start"),
-            F.col("window.end").cast("timestamp_ntz").alias("window_end"),
-            *(dims or []),
-            *measures.keys(),
-        ]
-        out = out.select(*cols)
-    return out
+    return df.groupBy(*keys).agg(*aggs).select(
+        F.col("window.start").cast("timestamp_ntz").alias("window_start"),
+        F.col("window.end").cast("timestamp_ntz").alias("window_end"),
+        *(dims or []),
+        *measures.keys(),
+    )
 
 
 def session_agg(
@@ -65,16 +60,14 @@ def session_agg(
     gap: str,
     measures: dict[str, Column],
     dims: list[str] | None = None,
-    watermark: str | None = None,
 ) -> DataFrame:
     """Session windows (gap-based): F.session_window(ts, gap) x dims.
     Sessions close after ``gap`` of inactivity; session_end = last event
-    + gap. Works on static frames and (with a watermark) on streams --
-    beyond the reference surface (SURVEY.md §2.5: no session windows
-    there), standard for user-activity analytics."""
+    + gap. Works on static frames and on streams (a streaming caller
+    applies withWatermark upstream) -- beyond the reference surface
+    (SURVEY.md §2.5: no session windows there), standard for
+    user-activity analytics."""
     df = ensure_ltz(df, ts_col)
-    if watermark and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
     win = F.session_window(ts_col, gap)
     aggs = [expr.alias(name) for name, expr in measures.items()]
     out = df.groupBy(win.alias("session"), *(dims or [])).agg(*aggs)
@@ -86,10 +79,10 @@ def session_agg(
     )
 
 
-def upsert_key(dims: list[str], window_start: str = "window_start") -> Column:
+def upsert_key(dims: list[str]) -> Column:
     """Synthetic per-window upsert doc id: concat_ws('_', dims...,
     window_start-as-string) -- reference S8
     (spark_streaming_v2.py:243,279,313,350)."""
     return F.concat_ws(
-        "_", *[F.col(d) for d in dims], F.col(window_start).cast("string")
+        "_", *[F.col(d) for d in dims], F.col("window_start").cast("string")
     )

@@ -471,10 +471,9 @@ def main() -> None:
         .count()
     )
     cents = clustering.kmeans_fit(
-        emb, vec_col="embedding", n_centroids=8, sample_size=256,
-        refine_iters=3,
+        emb, n_centroids=8, sample_size=256, refine_iters=3
     )
-    dbi = clustering.davies_bouldin(emb, cents, "embedding")
+    dbi = clustering.davies_bouldin(emb, cents)
     print(
         f"== embedding hygiene == top outliers: {outliers}; "
         f"davies-bouldin at k=8: {dbi:.3f}"

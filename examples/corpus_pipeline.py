@@ -68,7 +68,7 @@ def main() -> None:
     # 2.5 boilerplate strip: lines shared across documents (nav bars,
     # footers) go BEFORE dedup, so two docs differing only in chrome
     # become exact duplicates and collapse in step 3
-    stripped = corpus.line_dedup(docs, "doc_id", "text", max_docs=2)
+    stripped = corpus.line_dedup(docs, max_docs=2)
     n_boiler = stripped.agg(F.sum("n_removed")).first()[0]
     docs = docs.select("doc_id", "lang", "source").join(
         stripped.select("doc_id", "text"), "doc_id"
@@ -89,7 +89,7 @@ def main() -> None:
     pairs = neardup.minhash_dedup_pairs(
         docs, "doc_id", "text", threshold=0.8, num_hashes=64, bands=16
     )
-    clusters = neardup.connected_components(pairs, "id_a", "id_b")
+    clusters = neardup.connected_components(pairs)
     losers = clusters.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("doc_id")
     )
@@ -101,7 +101,7 @@ def main() -> None:
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     contaminated = (
         corpus.contamination_pairs(
-            train, bench, "doc_id", "text", ngram=5, min_shared=3
+            train, bench, "doc_id", "text"
         )
         .select(F.col("train_id").alias("doc_id"))
         .distinct()
@@ -321,7 +321,7 @@ def main() -> None:
         cand_ids, "neighbor_id", "left_semi"
     )
     n_rerank = similarity.sq8_topk(
-        emb.filter(F.col("vec_id") < 5), rerank_pool, k=5
+        emb.filter(F.col("vec_id") < 5), rerank_pool
     ).count()
 
     # 12b. compress vectors BEFORE they index or shuffle: exact
@@ -393,9 +393,9 @@ def main() -> None:
     # words), then encode with the learned artifact
     from bigdata_storage_and_proccess_job_data_spark.operators import bpe
 
-    merges = bpe.bpe_train(docs, "text", n_merges=10)
+    merges = bpe.bpe_train(docs, n_merges=10)
     n_bpe_tokens = (
-        bpe.bpe_encode(docs.limit(50), "text", merges)
+        bpe.bpe_encode(docs.limit(50), merges)
         .select(F.sum(F.size("bpe_tokens")).alias("n"))
         .first()
         .n

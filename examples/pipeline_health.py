@@ -222,13 +222,11 @@ def main() -> None:
         )
         ratings = part if ratings is None else ratings.unionByName(part)
     fk_r = aggregates.fleiss_kappa(ratings, "doc_id", "label").collect()[0]
-    cons = corpus.consensus_labels(ratings, "doc_id", "label")
+    cons = corpus.consensus_labels(ratings)
     n_unanimous = cons.filter(F.col("unanimous")).count()
     quality = {
         r.rater: r.agree_rate
-        for r in corpus.rater_quality(
-            ratings, "doc_id", "rater", "label"
-        ).collect()
+        for r in corpus.rater_quality(ratings).collect()
     }
     print("== labeling QA (rater r3 adversarial on 1/3 of docs) ==")
     print(f"  fleiss kappa={fk_r.kappa:.3f} over {fk_r.n_items} docs")

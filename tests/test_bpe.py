@@ -58,7 +58,7 @@ def test_bpe_train_hand_corpus_and_replica(spark, oracle_sf_dir):
     min_freq stops early; (4) validation."""
     texts = ["low low low", "lower lower", "newest"]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    merges = bpe.bpe_train(df, "text", n_merges=4)
+    merges = bpe.bpe_train(df, n_merges=4)
     rep, _ = _replica_train(texts, 4)
     assert merges == rep
     # (l,o) and (o,w) tie at 5; lexicographic tiebreak picks (l,o),
@@ -71,16 +71,16 @@ def test_bpe_train_hand_corpus_and_replica(spark, oracle_sf_dir):
         .select("text")
     )
     sample = [r.text for r in docs.collect()]
-    got = bpe.bpe_train(docs, "text", n_merges=12)
+    got = bpe.bpe_train(docs, n_merges=12)
     want, _ = _replica_train(sample, 12)
     assert got == want and len(got) == 12
 
     # min_freq early stop: every pair occurs once
     tiny = spark.createDataFrame([("ab",), ("cd",)], "text string")
-    assert bpe.bpe_train(tiny, "text", n_merges=5, min_freq=2) == []
+    assert bpe.bpe_train(tiny, n_merges=5, min_freq=2) == []
 
     with pytest.raises(ValueError):
-        bpe.bpe_train(df, "text", n_merges=0)
+        bpe.bpe_train(df, n_merges=0)
 
 
 def test_bpe_encode_reproduces_training_segmentation(spark):
@@ -91,7 +91,7 @@ def test_bpe_encode_reproduces_training_segmentation(spark):
     empty merge list yields character tokens."""
     texts = ["low low low", "lower lower", "newest", "lowest newest"]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    merges = bpe.bpe_train(df, "text", n_merges=8)
+    merges = bpe.bpe_train(df, n_merges=8)
     _, vocab = _replica_train(texts, 8)
     def word_of(toks):
         s = "".join(toks)
@@ -104,17 +104,17 @@ def test_bpe_encode_reproduces_training_segmentation(spark):
     wdf = spark.createDataFrame([(w,) for w in words], "text string")
     enc = {
         r.text: r.bpe_tokens
-        for r in bpe.bpe_encode(wdf, "text", merges).collect()
+        for r in bpe.bpe_encode(wdf, merges).collect()
     }
     for w in words:
         assert enc[w] == seg[w], w
 
     row = bpe.bpe_encode(
-        spark.createDataFrame([(None,)], "text string"), "text", merges
+        spark.createDataFrame([(None,)], "text string"), merges
     ).collect()[0]
     assert row.bpe_tokens is None
 
     plain = bpe.bpe_encode(
-        spark.createDataFrame([("ab",)], "text string"), "text", []
+        spark.createDataFrame([("ab",)], "text string"), []
     ).collect()[0]
     assert plain.bpe_tokens == ["a", "b", bpe.EOW]

@@ -204,7 +204,7 @@ def test_semantic_dedup_duckdb_parity(spark, oracle_sf_dir):
     cents = similarity.md5_centroids(8, 64, seed=3)
     # the fixture has no 0.95 pairs; 0.35 exercises multi-node clusters
     out = clustering.semantic_dedup(
-        emb, "vec_id", "embedding", threshold=0.35, centroids=cents
+        emb, threshold=0.35, centroids=cents
     )
     comp = _md5_hash60_sql("'ivf:3:' || i::VARCHAR || ':' || d::VARCHAR")
     sql = f"""
@@ -273,10 +273,10 @@ def test_davies_bouldin_numpy_replica_and_separation(spark):
         "vec_id long, embedding array<double>",
     )
     cents = clustering.kmeans_fit(
-        df, vec_col="embedding", n_centroids=3, sample_size=120,
+        df, n_centroids=3, sample_size=120,
         refine_iters=4,
     )
-    got = clustering.davies_bouldin(df, cents, "embedding")
+    got = clustering.davies_bouldin(df, cents)
 
     xn = x / np.linalg.norm(x, axis=1, keepdims=True)
     c = np.asarray(cents, dtype=np.float64)
@@ -303,8 +303,8 @@ def test_davies_bouldin_numpy_replica_and_separation(spark):
 
     # collapsed centroids (two nearly identical) score WORSE (higher)
     bad = [cents[0], list(np.asarray(cents[0]) + 1e-3), cents[2]]
-    assert clustering.davies_bouldin(df, bad, "embedding") > got
+    assert clustering.davies_bouldin(df, bad) > got
 
     # a single populated cell has no separation story: 0.0
-    one = clustering.davies_bouldin(df, [cents[0]], "embedding")
+    one = clustering.davies_bouldin(df, [cents[0]])
     assert one == 0.0

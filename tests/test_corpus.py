@@ -67,7 +67,7 @@ def test_contamination_pairs_finds_planted_overlap(spark):
         [(100, f"benchmark prompt: {shared}")], "doc_id LONG, text STRING"
     )
     out = corpus.contamination_pairs(
-        train, bench, "doc_id", "text", ngram=5, min_shared=3
+        train, bench, "doc_id", "text"
     ).collect()
     assert {(r.train_id, r.bench_id) for r in out} == {(1, 100)}
     assert out[0].n_shared >= 3  # the shared sentence yields 6 5-grams

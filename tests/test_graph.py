@@ -232,7 +232,7 @@ def test_triangle_edge_iterator_avoids_wedge_blowup(spark, oracle_sf_dir):
         (F.col("l_orderkey") % 2003).alias("src"),
         (F.col("l_partkey") % 2003).alias("dst"),
     )
-    und = graph.undirected_edges(edges, "src", "dst")
+    und = graph.undirected_edges(edges)
     tri, _hits, deg, adj = graph._triangle_parts(und)
     try:
         # execute tri's OWN physical plan (df.count() builds a different

@@ -71,7 +71,7 @@ def test_media_features_knn_query_recall(spark, sf_dir):
     feats = multimodal.extract_features(media, dim=16)
     exact = similarity.brute_force_topk(
         feats.filter(F.col("media_id") < 10), feats,
-        id_col="media_id", vec_col="embedding", k=3,
+        id_col="media_id", k=3,
     ).collect()
     got = {(r.query_id, r.neighbor_id) for r in rows}
     want = {(r.query_id, r.neighbor_id) for r in exact}

@@ -14,7 +14,7 @@ def test_minhash_lsh_recall(spark, oracle_sf_dir):
     exact = {
         (r.id_a, r.id_b)
         for r in neardup.jaccard_pairs(
-            docs, "doc_id", "text", ngram=2, threshold=0.8
+            docs, "doc_id", "text", threshold=0.8
         ).collect()
     }
     cands = {
@@ -42,7 +42,7 @@ def test_minhash_dedup_pairs_equals_exact(spark, oracle_sf_dir):
     exact = {
         (r.id_a, r.id_b, r.n_inter, r.jaccard)
         for r in neardup.jaccard_pairs(
-            docs, "doc_id", "text", ngram=2, threshold=0.8
+            docs, "doc_id", "text", threshold=0.8
         ).collect()
     }
     mh = {
@@ -62,7 +62,7 @@ def test_minhash_dedup_pairs_equals_exact(spark, oracle_sf_dir):
     )
     assert (
         neardup.jaccard_pairs(
-            quoted, "doc_id", "text", ngram=2, threshold=0.8
+            quoted, "doc_id", "text", threshold=0.8
         ).count()
         == 0
     )
@@ -73,13 +73,13 @@ def test_simhash_finds_neardups(spark, oracle_sf_dir):
     exact = {
         (r.id_a, r.id_b)
         for r in neardup.jaccard_pairs(
-            docs, "doc_id", "text", ngram=2, threshold=0.9
+            docs, "doc_id", "text", threshold=0.9
         ).collect()
     }
     sim = {
         (r.id_a, r.id_b)
         for r in neardup.simhash_candidates(
-            docs, "doc_id", "text", max_hamming=8
+            docs, "doc_id", "text"
         ).collect()
     }
     assert exact
@@ -148,7 +148,7 @@ def test_connected_components_on_minhash_pairs(spark, oracle_sf_dir):
     must land in one component of the minhash pair graph."""
     docs = load_table(spark, oracle_sf_dir, "documents")
     pairs = neardup.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.9)
-    comp = neardup.connected_components(pairs, "id_a", "id_b")
+    comp = neardup.connected_components(pairs)
     # exact duplicates (jaccard 1.0 > any threshold) are a subset of pairs:
     # every exact-dup group with >1 member must be fully merged
     from bigdata_storage_and_proccess_job_data_spark.operators import dedup
@@ -325,7 +325,7 @@ def test_recursive_cte_closure_matches_connected_components(spark, oracle_sf_dir
     pairs = spark.createDataFrame(undirected, "id_a INT, id_b INT")
     cc = {
         r.id: r.component
-        for r in neardup.connected_components(pairs, "id_a", "id_b").collect()
+        for r in neardup.connected_components(pairs).collect()
     }
     assert cc == {k: v for k, v in want.items() if k != 20}
 

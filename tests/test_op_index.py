@@ -3,7 +3,8 @@ public functions may share a keyword set above the threshold without a
 recorded waiver (the grep-first rule's mechanical backstop against an
 existing operator re-added under a different name), every public
 function outside plans/ must be reached by a workload or kept with a
-reason, and no two of them may share a bare name."""
+reason, no two of them may share a bare name, and every optional
+parameter of one must be set by some call or kept with a reason."""
 
 from __future__ import annotations
 
@@ -64,6 +65,24 @@ def test_every_operator_is_reached():
     )
     assert kept - unreached == set(), "stale KEPT_UNREACHED entries: " + (
         ", ".join(sorted(kept - unreached))
+    )
+
+
+def test_every_parameter_is_set():
+    """Each optional parameter of a public function outside plans/ is
+    passed a non-default value by some call in the package, tests/,
+    tools/ or a script root, or is listed in KEPT_UNSET with a reason;
+    an entry that is set, or no longer exists, is stale and fails too.
+    A parameter every caller leaves at its default is one settable
+    value with one value in use: inline the default instead."""
+    _, unset = op_index.unset_parameters()
+    kept = set(op_index.KEPT_UNSET)
+    assert set(unset) - kept == set(), "unset parameters (inline the "
+    "default, or add a reason to KEPT_UNSET): " + ", ".join(
+        sorted(set(unset) - kept)
+    )
+    assert kept - set(unset) == set(), "stale KEPT_UNSET entries: " + (
+        ", ".join(sorted(kept - set(unset)))
     )
 
 

@@ -477,7 +477,7 @@ def test_late_r8_library_ops_pass_the_plan_lint(spark, oracle_sf_dir):
 
     from bigdata_storage_and_proccess_job_data_spark.operators import bpe
 
-    enc = bpe.bpe_encode(docs.limit(5), "text", [("t", "h"), ("th", "e")])
+    enc = bpe.bpe_encode(docs.limit(5), [("t", "h"), ("th", "e")])
     findings = lint.lint_plan(enc)
     assert all("Cartesian" not in f and "NestedLoop" not in f for f in findings)
 

@@ -47,7 +47,7 @@ def test_cosine_neardup_pairs_planted_dups_recall(spark):
     )
     got = {
         (r.id_a, r.id_b): r.sim
-        for r in similarity.cosine_neardup_pairs(df, threshold=0.85).collect()
+        for r in similarity.cosine_neardup_pairs(df).collect()
     }
 
     sims = x @ x.T
@@ -189,7 +189,7 @@ def test_lsh_paths_reject_dim_mismatch(spark):
     # plan-construction time, so the error surfaces on the first
     # executed row
     with pytest.raises(Exception, match="dimension 128"):
-        similarity.cosine_neardup_pairs(df, dim=64).collect()
+        similarity.cosine_neardup_pairs(df).collect()
     with pytest.raises(Exception, match="dimension 128"):
         similarity.lsh_topk(df, df, dim=64).collect()
 
@@ -298,7 +298,7 @@ def test_ivfpq_full_probe_equals_pq(spark, oracle_sf_dir):
     emb = load_table(spark, oracle_sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
     cents, books, index = similarity.ivfpq_build(
-        emb, n_centroids=8, m=8, n_codes=16, sample_size=512,
+        emb, n_centroids=8, n_codes=16, sample_size=512,
         residual=False,
     )
     full = similarity.ivfpq_topk_from_index(
@@ -327,7 +327,7 @@ def test_ivfpq_residual_codes_are_more_accurate(spark):
 
     def pair_sims(residual):
         cents, books, index = similarity.ivfpq_build(
-            df, n_centroids=8, m=8, n_codes=32, sample_size=1024,
+            df, n_centroids=8, n_codes=32, sample_size=1024,
             residual=residual,
         )
         rows = similarity.ivfpq_topk_from_index(
@@ -360,7 +360,7 @@ def test_ivfpq_finds_planted_neighbors(spark):
     n_base = 300
     queries = df.filter(F.col("vec_id") >= n_base)
     cents, books, index = similarity.ivfpq_build(
-        df, n_centroids=8, m=8, n_codes=32, sample_size=1024
+        df, n_centroids=8, n_codes=32, sample_size=1024
     )
     got = similarity.ivfpq_topk_from_index(
         queries, index, cents, books, k=5, n_probe=3
@@ -387,7 +387,7 @@ def test_ivfpq_incremental_append(spark, tmp_path):
     day1 = df.filter(F.col("vec_id") >= n_base)  # the dup batch arrives
 
     cents, books, index0 = similarity.ivfpq_build(
-        day0, n_centroids=8, m=8, n_codes=32, sample_size=1024
+        day0, n_centroids=8, n_codes=32, sample_size=1024
     )
     path = str(tmp_path / "ivfpq_index")
     index0.write.parquet(path)
@@ -437,7 +437,7 @@ def test_knn_ivfpq_oracle_parity(spark, oracle_sf_dir):
     from tests.parity import compare, duckdb_connect
 
     emb = load_table(spark, oracle_sf_dir, "embeddings")
-    cents = similarity.md5_centroids(16, 64, seed=9, scale=1.0)
+    cents = similarity.md5_centroids(16, 64, seed=9)
     books = similarity.md5_codebooks(m=8, n_codes=16, dsub=8, seed=42, scale=0.35)
     index = similarity.encode_ivfpq(emb, cents, books, residual=False)
     got = similarity.ivfpq_topk_from_index(
@@ -573,7 +573,7 @@ def test_sq8_topk_recall_and_sim_error(spark, oracle_sf_dir):
     emb = load_table(spark, oracle_sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     index = similarity.sq8_encode(emb)
-    approx = similarity.sq8_topk(queries, index, k=5).collect()
+    approx = similarity.sq8_topk(queries, index).collect()
     exact = similarity.brute_force_topk(queries, emb, k=5).collect()
     exact_set = {(r.query_id, r.neighbor_id) for r in exact}
     approx_set = {(r.query_id, r.neighbor_id) for r in approx}
@@ -598,7 +598,7 @@ def test_sq8_duckdb_replay_parity(spark, oracle_sf_dir):
 
     emb = load_table(spark, oracle_sf_dir, "embeddings")
     got = similarity.sq8_topk(
-        emb.filter(F.col("vec_id") < 20), similarity.sq8_encode(emb), k=5
+        emb.filter(F.col("vec_id") < 20), similarity.sq8_encode(emb)
     )
     cos = (
         "CASE WHEN sqrt(list_dot_product(q.v, q.v)) > 0 "

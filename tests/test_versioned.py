@@ -509,10 +509,8 @@ def test_prune_is_conservative_without_stats(spark, tmp_path):
     )
     snap2 = f"{table}/v={v2}"
     m = versioned.read_stats_manifest(snap2)
-    # only the row-count bookkeeping is recorded -- no column stats
-    assert m is not None and all(
-        set(cs) == {"__nrows__"} for cs in m.values()
-    )
+    # each file entry records no column
+    assert m is not None and all(cs == {} for cs in m.values())
     files2 = versioned.prune_files(snap2, "k", 0, 10)
     assert len(files2) == 4
     assert versioned.read_version(

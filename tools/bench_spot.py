@@ -1,7 +1,7 @@
 """Spot-bench named queries at an arbitrary fixture dir, recording
-wall time AND per-query shuffle read/write bytes (VERDICT r14 next
-round #1) -- the measurement the sf0.1 headline bench can't provide
-because every entry there is job-overhead-bound (8 cores beats 32).
+wall time AND per-query shuffle read/write bytes -- the measurement
+the sf0.1 headline bench can't provide because every entry there is
+job-overhead-bound (8 cores beats 32).
 
 NOT part of the driver contract: bench.py is untouched; this is a
 read-only sidecar tool. Methodology mirrors bench.py (noop sink,

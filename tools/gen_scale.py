@@ -1,6 +1,6 @@
 """Deterministic scale-up of the driver fixtures for SPOT-BENCHING at
-sf >= 1 (VERDICT r14 next-round #1) -- the committed sf dirs stop at
-0.1, where every bench entry is job-overhead-bound (8 cores beats 32),
+sf >= 1 -- the committed sf dirs stop at 0.1, where every bench entry
+is job-overhead-bound (8 cores beats 32),
 so shuffle-BYTE claims need a bigger input. NOT part of the driver
 contract: bench.py and the oracle never read these dirs; this tool
 exists so `tools/bench_spot.py` has a scale where bytes matter.

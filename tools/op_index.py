@@ -1,5 +1,5 @@
-"""Public-function keyword index + duplicate-semantics and reachability
-guards.
+"""Public-function keyword index + duplicate-semantics, reachability and
+parameter guards.
 
 The grep-first rule ("before writing ANY operator, grep the package and
 COVERAGE.md for prior art") fails when names differ for the same
@@ -31,6 +31,14 @@ registry (registered queries and their plan probes), the driver contract
 Every public function outside ``plans/`` must be reached or listed in
 ``KEPT_UNREACHED`` with its reason, and no two of them may share a bare
 name, since the walk resolves by name (``tests/test_op_index.py``).
+
+The parameter guard applies the same name-based walk to arguments: an
+optional parameter of a public function outside ``plans/`` earns its
+place only when some call -- in the package, ``tests/``, ``tools/`` or a
+script root -- passes it a value other than its default (see
+``unset_parameters``). Every other one is deleted or listed in
+``KEPT_UNSET`` with its reason; ``python -m tools.op_index`` prints the
+unset ones.
 """
 
 from __future__ import annotations
@@ -53,6 +61,8 @@ SCRIPT_ROOTS = {
     "examples": "examples/*.py",
     "perfbench": "perfbench/*.py",
 }
+# files outside the package whose calls count as setting a parameter
+CALL_SITES = (*SCRIPT_ROOTS.values(), "tests/*.py", "tools/*.py")
 
 # plans/ is the registry surface (driver queries over the operators),
 # not the operator inventory itself -- its duplicate guard is the
@@ -86,25 +96,6 @@ WAIVERS: dict[frozenset, str] = {
         }
     ): "deterministic md5 model builders: one flat centroid set (IVF) "
     "vs per-subspace codebooks (PQ) -- different model shapes",
-    frozenset(
-        {"domain.pipeline.company_stats", "domain.pipeline.location_stats"}
-    ): "reference-parity cube variants (spark_batch_v2 emits one agg "
-    "per dimension set; each keeps its reference citation)",
-    frozenset(
-        {"domain.pipeline.company_stats", "domain.pipeline.temporal_stats"}
-    ): "reference-parity cube variants (see company/location waiver)",
-    frozenset(
-        {"domain.pipeline.company_stats", "domain.pipeline.worktype_stats"}
-    ): "reference-parity cube variants (see company/location waiver)",
-    frozenset(
-        {"domain.pipeline.location_stats", "domain.pipeline.temporal_stats"}
-    ): "reference-parity cube variants (see company/location waiver)",
-    frozenset(
-        {"domain.pipeline.location_stats", "domain.pipeline.worktype_stats"}
-    ): "reference-parity cube variants (see company/location waiver)",
-    frozenset(
-        {"domain.pipeline.temporal_stats", "domain.pipeline.worktype_stats"}
-    ): "reference-parity cube variants (see company/location waiver)",
 }
 
 
@@ -150,6 +141,20 @@ KEPT_UNREACHED: dict[str, str] = {
     "snapshots",
     "sources.transactions.txn_vacuum": "the only retention for "
     "transaction manifests",
+}
+
+# Optional parameters (module.function.parameter) that no call sets but
+# stay anyway, each with the reason. tests/test_op_index.py fails on any
+# other unset parameter and on entries that are set or gone.
+KEPT_UNSET: dict[str, str] = {
+    "streaming.pipeline.kafka_stream.starting_offsets": "Kafka deployment "
+    "setting of the reference's source (COVERAGE rows S3/S4)",
+    "streaming.pipeline.kafka_stream.fail_on_data_loss": "Kafka deployment "
+    "setting of the reference's source (COVERAGE rows S3/S4)",
+    "sources.versioned.vacuum.keep": "the retention policy of the only "
+    "snapshot retention",
+    "domain.pipeline.normalize_raw.source": "the per-source label the "
+    "reference merges through union_sources (COVERAGE row X1)",
 }
 
 
@@ -214,6 +219,15 @@ def _names(tree: ast.AST) -> set[str]:
     return out
 
 
+def _module_trees() -> list[tuple[str, ast.Module]]:
+    """(dotted module name, parsed source) of every package module."""
+    pkg = importlib.import_module(PKG)
+    return [
+        (mi.name, ast.parse(inspect.getsource(importlib.import_module(mi.name))))
+        for mi in pkgutil.walk_packages(pkg.__path__, PKG + ".")
+    ]
+
+
 def reachability() -> dict[Node, tuple[str, ...]]:
     """Top-level package definition -> the non-test roots (registry,
     entry, bench, examples, perfbench) that reach it. The walk is by name: a
@@ -223,9 +237,7 @@ def reachability() -> dict[Node, tuple[str, ...]]:
 
     by_name: dict[str, set[Node]] = {}
     refs: dict[Node, set[str]] = {}
-    pkg = importlib.import_module(PKG)
-    for mi in pkgutil.walk_packages(pkg.__path__, PKG + "."):
-        tree = ast.parse(inspect.getsource(importlib.import_module(mi.name)))
+    for mod, tree in _module_trees():
         for stmt in tree.body:
             if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
                 defined = [stmt.name]
@@ -238,8 +250,8 @@ def reachability() -> dict[Node, tuple[str, ...]]:
             else:
                 continue
             for name in defined:
-                by_name.setdefault(name, set()).add((mi.name, name))
-                refs[mi.name, name] = _names(stmt)
+                by_name.setdefault(name, set()).add((mod, name))
+                refs[mod, name] = _names(stmt)
     roots = {
         "registry": {
             (fn.__module__, fn.__name__)
@@ -263,6 +275,63 @@ def reachability() -> dict[Node, tuple[str, ...]]:
         for node in seen:
             reached.setdefault(node, []).append(root)
     return {node: tuple(rs) for node, rs in reached.items()}
+
+
+def _optional(fn: ast.FunctionDef) -> list[tuple[str, str, int | None]]:
+    """(name, default source, position or None if keyword-only) of each
+    parameter with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [
+        (arg.arg, ast.unparse(d), first + i)
+        for i, (arg, d) in enumerate(zip(pos[first:], a.defaults))
+    ]
+    out += [
+        (arg.arg, ast.unparse(d), None)
+        for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def unset_parameters() -> tuple[int, list[str]]:
+    """(optional parameter count, unset ones) over the public functions
+    outside plans/. A parameter is set when some call in the package,
+    ``tests/``, ``tools/`` or a script root passes it a value whose
+    source differs from the default's, by keyword or by position; calls
+    resolve by bare name like ``reachability``, and a ``*``/``**`` splat
+    sets every parameter."""
+    public = {(f"{PKG}.{m}", n) for m, n, _, _ in discover()}
+    params: dict[str, tuple[str, list[tuple[str, str, int | None]]]] = {}
+    trees = []
+    for mod, tree in _module_trees():
+        trees.append(tree)
+        for stmt in tree.body:
+            if isinstance(stmt, ast.FunctionDef) and (mod, stmt.name) in public:
+                rel = mod[len(PKG) + 1 :]
+                params[stmt.name] = (f"{rel}.{stmt.name}", _optional(stmt))
+    for pattern in CALL_SITES:
+        trees += [ast.parse(p.read_text()) for p in sorted(REPO.glob(pattern))]
+    unset = {f"{q}.{p}" for q, ps in params.values() for p, _, _ in ps}
+    total = len(unset)
+    calls = (n for t in trees for n in ast.walk(t) if isinstance(n, ast.Call))
+    for call in calls:
+        f = call.func
+        name = getattr(f, "id", None) or getattr(f, "attr", None)
+        if name not in params:
+            continue
+        qual, ps = params[name]
+        splat = any(isinstance(a, ast.Starred) for a in call.args) or any(
+            k.arg is None for k in call.keywords
+        )
+        for p, default, pos in ps:
+            vals = [k.value for k in call.keywords if k.arg == p]
+            if pos is not None and pos < len(call.args):
+                vals.append(call.args[pos])
+            if splat or any(ast.unparse(v) != default for v in vals):
+                unset.discard(f"{qual}.{p}")
+    return total, sorted(unset)
 
 
 def jaccard(a: frozenset, b: frozenset) -> float:
@@ -319,7 +388,9 @@ def render(entries: list[tuple[str, str, str, frozenset]]) -> str:
         "(tests may still call it). tests/test_op_index.py fails when a",
         "public function outside plans/ is unreached and not listed in",
         "tools/op_index.py:KEPT_UNREACHED, or shares its bare name with",
-        "another one.",
+        "another one, and when an optional parameter of one is never set",
+        "to a non-default value by any call and is not listed in",
+        "tools/op_index.py:KEPT_UNSET.",
         "",
         f"{len(entries)} public functions; {len(unreached)} unreached "
         f"({unreached_lines} source lines).",
@@ -338,6 +409,10 @@ def main() -> None:
     print(f"wrote {path} ({len(entries)} functions)")
     for j, a, b in bad:
         print(f"UNWAIVED OVERLAP {j:.3f}: {a} <-> {b}")
+    total, unset = unset_parameters()
+    print(f"{total} optional parameters; {len(unset)} unset:")
+    for name in unset:
+        print(f"UNSET {name}" + (" (kept)" if name in KEPT_UNSET else ""))
     if bad:
         raise SystemExit(1)
 

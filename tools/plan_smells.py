@@ -1,5 +1,5 @@
-"""Plan-smell sweep over EVERY registered query (r14 optimization
-audit): builds each query's DataFrame at a small SF and greps the
+"""Plan-smell sweep over EVERY registered query, the advisory audit of
+physical plans: builds each query's DataFrame at a small SF and greps the
 physical plan for shapes the bench review hunted -- SortAggregate
 (usually a first(array)/dropDuplicates-with-payload), CartesianProduct,
 BatchEvalPython/ArrowEvalPython (Python boundary in a query path),
