@@ -389,8 +389,6 @@ def dd_quantile(
     excluded. ``gamma`` must match the build."""
     if not 0 < q < 1:
         raise ValueError("q must be in (0, 1)")
-    import math
-
     from pyspark.sql import Window
 
     pos = sketch.filter(F.col("bin") != -(2**31))
@@ -1279,8 +1277,6 @@ def cuped_adjust(
     the readout). Degenerate groups (var(x) = 0 or < 2 pairs) adjust by
     theta = 0, i.e. metric_cuped = metric unchanged -- never a silent
     drop. Returns the input plus ``metric_cuped``."""
-    from pyspark.sql import Window  # noqa: F401  (parity with siblings)
-
     y = F.col(metric_col).cast("double")
     x = F.col(covariate_col).cast("double")
     both = x.isNotNull() & y.isNotNull()

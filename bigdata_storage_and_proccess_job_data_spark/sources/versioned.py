@@ -581,7 +581,6 @@ def _bloom_rebuild_spliced(
     new_snap: str,
     old_payload: dict,
     linked_names: set,
-    changed_cols: "set | frozenset" = frozenset(),
 ) -> None:
     """Rebuild a per-file-sized bloom manifest after a COW commit
     WITHOUT rescanning linked files: a hard-linked file is byte-
@@ -596,15 +595,13 @@ def _bloom_rebuild_spliced(
           sum of the rewritten-away files' recorded bounds for the col)
 
     The second term is sound because a COW rewrite's output rows are a
-    subset of the affected files' rows, so a column's new distinct set
-    is a subset of the union of those files' old value sets (absent
-    old entries are all-NULL files contributing zero values) -- UNLESS
-    the rewrite may have CHANGED the column's values (apply_changes'
-    upserted columns, passed as ``changed_cols``), in which case only
-    the footer row count bounds it. Sizing from the row count alone would
-    inflate low-NDV columns' bitmaps ~rows/NDV-fold per rewrite; the
-    cap keeps them near the exact build's size
-    while the unique-key case stays bit-identical (bound == row count).
+    subset of the rewritten-away files' rows (a delete drops rows, a
+    compaction moves them), so a column's new distinct set is a subset
+    of the union of those files' old value sets (absent old entries are
+    all-NULL files contributing zero values). Sizing from the row count
+    alone would inflate low-NDV columns' bitmaps ~rows/NDV-fold per
+    rewrite; the cap keeps them near the exact build's size while the
+    unique-key case stays bit-identical (bound == row count).
     FP rate only ever improves vs target; pruning correctness is
     m-independent because every entry stores its own ``m``. The sizing
     target_fpp comes from the manifest payload when recorded (older
@@ -627,15 +624,13 @@ def _bloom_rebuild_spliced(
     }
     # distinct-count budget per column: what the rewritten-away files'
     # entries claimed, summed (absent entry == all-NULL col in that
-    # file == zero distinct values); None == uncapped (changed values,
-    # or an entry with no recoverable bound)
+    # file == zero distinct values); None == uncapped (an entry with no
+    # recoverable bound)
     rewritten_away = [
         per for fname, per in old_files.items() if fname not in linked_names
     ]
 
     def _cap(col: str) -> int | None:
-        if col in changed_cols:
-            return None
         bounds = [
             _bloom_entry_d_bound(per[col], k, recorded_fpp)
             for per in rewritten_away
@@ -695,7 +690,6 @@ def write_bloom_manifest(
     spark: SparkSession,
     snapshot_dir: str,
     cols: list[str],
-    m: int | None = None,
     k: int = 5,
     target_fpp: float = 0.01,
 ) -> dict:
@@ -721,22 +715,16 @@ def write_bloom_manifest(
     Sizing (one fixed size for every file saturates at scale): with d
     distinct keys in a file, FP rate = (1-e^(-k*d/m))^k,
     so ``m`` is derived PER FILE from that file's own distinct count
-    for ``target_fpp`` (_bloom_bits; ~9.9 bits/key at the 1% default)
-    and stored per (file, col) in the manifest. Passing an explicit
-    ``m`` forces one fixed size for every file (back-compat / testing);
-    a file whose fill factor then exceeds 0.5 -- past the optimal-fill
-    point, FP deteriorating toward "keeps everything" -- raises a
-    saturation warning naming the file and its fill. A false positive
+    for ``target_fpp`` (_bloom_bits; ~9.9 bits/key at the 1% default,
+    fill ~0.40, under the 0.5 optimal-fill point) and stored per
+    (file, col) in the manifest; the payload's ``m`` is None, which
+    tells this format from a legacy one-size manifest. A false positive
     only ever costs a kept file, never correctness.
 
     Every entry records the distinct-count bound ``d`` it was sized
     from and the payload records ``target_fpp`` -- COW splice rebuilds
     (_bloom_rebuild_spliced) reuse both to cap rewritten files' sizes
     and keep the original FP target."""
-    import warnings
-
-    if m is not None and (m < 64 or m % 64 != 0):
-        raise ValueError("m must be a positive multiple of 64")
     if k < 1:
         raise ValueError("k must be >= 1")
     if not 0.0 < target_fpp < 1.0:
@@ -761,8 +749,7 @@ def write_bloom_manifest(
                 .collect()
             }
             m_by_file = {
-                f: (m if m is not None else _bloom_bits(d, k, target_fpp))
-                for f, d in counts.items()
+                f: _bloom_bits(d, k, target_fpp) for f, d in counts.items()
             }
             if m_by_file:
                 words = _bloom_words(
@@ -781,21 +768,12 @@ def write_bloom_manifest(
         for r in words:
             per_file_words.setdefault(r._b, {})[str(r._w)] = r._bits
         for fname, wmap in per_file_words.items():
-            mf = m_by_file[fname]
-            fill = sum(bin(v & ((1 << 64) - 1)).count("1") for v in wmap.values()) / mf
-            if fill > 0.5:
-                warnings.warn(
-                    f"bloom manifest saturated: {fname} col {col!r} fill "
-                    f"{fill:.2f} > 0.5 at m={mf} over ~{counts.get(fname)} "
-                    f"distinct keys -- pass m=None for per-file sizing",
-                    stacklevel=2,
-                )
             out.setdefault(fname, {})[col] = {
-                "m": mf,
+                "m": m_by_file[fname],
                 "d": counts[fname],
                 "words": wmap,
             }
-    payload = {"m": m, "k": k, "target_fpp": target_fpp, "files": out}
+    payload = {"m": None, "k": k, "target_fpp": target_fpp, "files": out}
     _atomic_write(os.path.join(snapshot_dir, _BLOOM), json.dumps(payload))
     return payload
 
@@ -864,7 +842,7 @@ def diff_versions(
 
     Contract: ``key`` is unique per snapshot (the upsert/MERGE writers
     here guarantee it) and both snapshots share a schema. A feed across
-    an additive evolution boundary (apply_changes(merge_schema=True))
+    an additive evolution boundary (a commit that added a column)
     raises by default; pass ``align_additive=True`` to NULL-fill the
     one-sided columns and diff across it (see change_feed).
 
@@ -915,7 +893,7 @@ def change_feed(
     tests.)
 
     ``align_additive=True`` lets the feed span an ADDITIVE schema
-    evolution (apply_changes(merge_schema=True)): a column present on
+    evolution (a commit that added a column): a column present on
     only one side is NULL-filled on the other before comparing, so a
     row unchanged except for the evolved column's NULL does not emit,
     while a row that gained a value there emits as a normal update. A
@@ -1017,8 +995,6 @@ def apply_changes(
     key: str,
     expected: int | None = None,
     stats_cols: list[str] | None = None,
-    merge_schema: bool = False,
-    prune: bool = False,
 ) -> int:
     """MERGE-style change application onto a versioned table: ``changes``
     carries the table's columns plus ``_op`` in {'upsert','delete'}.
@@ -1035,27 +1011,14 @@ def apply_changes(
     Readers stay on the old snapshot until the pointer swap; pass
     ``expected`` for optimistic concurrency. Works on an uninitialized
     table (pure-insert first commit; deletes to nothing are no-ops).
-
-    Schema evolution: by default a batch whose columns differ from the
-    table's raises (unionByName -- drift fails loudly, the safe default
-    for CDC). ``merge_schema=True`` opts into ADDITIVE evolution, the
-    Delta mergeSchema behavior: columns new in the batch are added to
-    the table (existing rows read NULL there), columns missing from the
-    batch are kept (batch rows get NULL) -- never a drop, never a
-    retype (a same-name type conflict still fails in the union).
+    A batch whose columns differ from the table's raises: schema drift
+    fails loudly, the safe default for CDC.
 
     This is the ES-style doc CRUD surface (reference S5,
     spark_job.py:78-80 upserts; deletes had no reference path at all)
     expressed as immutable snapshots + one anti-join -- the
     copy-on-write MERGE shape, which at 100 TB pairs with partition
-    pruning so only touched partitions rewrite.
-
-    ``prune=True`` (requires merge_schema=False) upgrades the commit
-    to the delete_where file-reuse core: files whose key stats are
-    disjoint from the batch's [min, max] key band HARD-LINK into the
-    new snapshot and only intersecting files rewrite -- the clustered-
-    table + banded-batch ingest shape touches a handful of files; a
-    scattered batch degrades gracefully to the full rewrite."""
+    pruning so only touched partitions rewrite."""
     # the batch is read three times (op validation, upsert slice,
     # touched-key set) -- persist once so the lineage isn't re-evaluated
     # per use; a change batch is small relative to the table by nature
@@ -1071,61 +1034,16 @@ def apply_changes(
                 upserts, table_dir, expected=expected, stats_cols=stats_cols
             )
         base = read_version(spark, table_dir)
-        if not merge_schema and set(upserts.columns) != set(base.columns):
+        if set(upserts.columns) != set(base.columns):
             raise ValueError(
                 "change batch columns "
                 f"{sorted(set(upserts.columns) ^ set(base.columns))} differ "
-                "from the table's; pass merge_schema=True for additive "
-                "evolution (new columns added, missing columns NULL-filled)"
+                "from the table's"
             )
         touched = changes.select(F.col(key)).distinct()
-        if prune:
-            if merge_schema:
-                raise ValueError(
-                    "prune=True cannot combine with merge_schema=True: "
-                    "hard-linked files keep the OLD schema, so an "
-                    "additive-evolution commit must rewrite every file"
-                )
-            # COW MERGE (the delete_where/_cow_rewrite core): only the
-            # files whose key stats intersect the batch's [min, max]
-            # key band can contain a touched key, so everything else
-            # hard-links. The win is the common ingest shape -- a
-            # key/time-clustered table receiving a banded batch (late
-            # data in a recent window) rewrites a handful of files; a
-            # scattered batch degrades to the full rewrite, never to a
-            # wrong answer. always_commit: pure inserts (no base row
-            # in the band) still need their commit.
-            bounds = changes.agg(
-                F.min(F.col(key)).alias("lo"), F.max(F.col(key)).alias("hi")
-            ).first()
-            if bounds.lo is None:
-                return commit_version(
-                    base, table_dir, expected=expected, stats_cols=stats_cols
-                )
-            report = _cow_rewrite(
-                spark,
-                table_dir,
-                key,
-                bounds.lo,
-                bounds.hi,
-                lambda aff, _pred: aff.join(
-                    touched, key, "left_anti"
-                ).unionByName(upserts),
-                expected,
-                "rows_in_band",
-                always_commit=True,
-                stats_cols_override=stats_cols,
-                # MERGE rewrites union NEW upsert rows into the
-                # rewritten files, so no column's value set is bounded
-                # by the old affected entries -- the bloom splice must
-                # size every column from footer row counts, never the
-                # old-entry distinct cap
-                changed_cols=frozenset(upserts.columns),
-            )
-            return report["version"]
         survivors = base.join(touched, key, "left_anti")
         return commit_version(
-            survivors.unionByName(upserts, allowMissingColumns=merge_schema),
+            survivors.unionByName(upserts),
             table_dir,
             expected=expected,
             stats_cols=stats_cols,
@@ -1198,9 +1116,8 @@ def optimize_table(
         df = df.coalesce(target_files)
     # maintenance keeps caller metadata: the commit-meta sidecar
     # describes the table's contents, not its file layout, so this
-    # commit, compact_small_files and every copy-on-write rewrite
-    # (delete_where, pruned apply_changes) carry the pinned snapshot's
-    # meta into the version they publish
+    # commit, compact_small_files and delete_where carry the pinned
+    # snapshot's meta into the version they publish
     return commit_version(
         df,
         table_dir,
@@ -1208,6 +1125,57 @@ def optimize_table(
         stats_cols=stats_cols,
         meta=commit_meta(table_dir, version=pinned),
     )
+
+
+def _rewrite_snapshot(
+    spark: SparkSession,
+    snap: str,
+    new_snap: str,
+    linked: list[str],
+    rewritten: DataFrame,
+    stats_cols: list[str] | None,
+) -> None:
+    """Fill the staged ``new_snap`` from the pinned snapshot ``snap``:
+    hard-link the ``linked`` data files unchanged, write ``rewritten``
+    as the new ones, then carry the manifests. The stats manifest is
+    rebuilt from footers over ``stats_cols``, else over the old
+    manifest's columns (none when ``snap`` had none). A per-file bloom
+    manifest is spliced (_bloom_rebuild_spliced: linked entries
+    verbatim, only the new files scanned); a legacy fixed-m one is
+    rebuilt in full with per-file sizing. The file-reuse step of
+    delete_where and compact_small_files, run between _stage and
+    _publish. (Hard links are the local-fs realization of manifest
+    reuse -- on an object store the new snapshot's manifest would
+    reference the kept objects; link counts keep vacuum() of either
+    snapshot safe, since an unlink in one dir never touches the
+    other's entry.)"""
+    os.makedirs(new_snap)
+    for path in linked:
+        os.link(path, os.path.join(new_snap, os.path.basename(path)))
+    rewritten.write.mode("append").parquet(new_snap)
+    if stats_cols is None:
+        old_stats = read_stats_manifest(snap)
+        if old_stats is not None:
+            stats_cols = sorted({c for per in old_stats.values() for c in per})
+    if stats_cols is not None:
+        write_stats_manifest(new_snap, stats_cols)
+    try:
+        with open(os.path.join(snap, _BLOOM)) as fh:
+            payload = json.load(fh)
+    except FileNotFoundError:
+        return
+    if payload.get("m") is None:
+        _bloom_rebuild_spliced(
+            spark, new_snap, payload, {os.path.basename(p) for p in linked}
+        )
+        return
+    bloom_cols = sorted(
+        {cname for per in payload.get("files", {}).values() for cname in per}
+    )
+    if bloom_cols:
+        write_bloom_manifest(
+            spark, new_snap, bloom_cols, k=payload.get("k", 5)
+        )
 
 
 def compact_small_files(
@@ -1224,11 +1192,7 @@ def compact_small_files(
     of trailing micro-batch files; this is the Delta OPTIMIZE
     bin-packing behavior instead: cost proportional to the small files
     only, which is what makes periodic compaction affordable on a
-    100 TB table that grows by small commits. (Hard links are the
-    local-fs realization of manifest reuse -- on an object store the
-    new snapshot's manifest would simply reference the kept objects;
-    link counts also keep vacuum() of either snapshot safe, since an
-    unlink in one dir never touches the other's entry.)
+    100 TB table that grows by small commits.
 
     Small files are read once and re-written as
     ceil(small_total / 128 MiB) files. Returns the new
@@ -1237,9 +1201,13 @@ def compact_small_files(
 
     Concurrency matches optimize_table: ``expected="auto"`` pins the
     compacted version and fails closed (ConcurrentCommitError) if an
-    ingest commits meanwhile. ``stats_cols`` refreshes the whole
-    snapshot's manifest (footer walk only -- linked files are not
-    re-read beyond their KB-sized footers)."""
+    ingest commits meanwhile. The new snapshot carries the old one's
+    manifests (_rewrite_snapshot): the stats manifest over
+    ``stats_cols`` when given, else over the old manifest's columns
+    (footer walk only -- linked files are not re-read beyond their
+    KB-sized footers), and the bloom manifest spliced, so linked files
+    keep their entries verbatim and only the compacted files are
+    scanned."""
     import glob
     import math
 
@@ -1257,13 +1225,14 @@ def compact_small_files(
     small_total = sum(os.path.getsize(p) for p in small)
     n_out = max(1, math.ceil(small_total / (128 * 1024 * 1024)))
     nxt, new_snap = _stage(table_dir, expected)
-    read_parquet(spark, *small).coalesce(n_out).write.mode("error").parquet(
-        new_snap
+    _rewrite_snapshot(
+        spark,
+        snap,
+        new_snap,
+        large,
+        read_parquet(spark, *small).coalesce(n_out),
+        stats_cols,
     )
-    for p in large:
-        os.link(p, os.path.join(new_snap, os.path.basename(p)))
-    if stats_cols:
-        write_stats_manifest(new_snap, stats_cols)
     # maintenance keeps caller metadata (see optimize_table)
     _publish(table_dir, nxt, expected, commit_meta(table_dir, pinned))
     return nxt
@@ -1318,222 +1287,6 @@ def clone_table(
     return 1
 
 
-def _collect_metrics_count(df: DataFrame, name: str) -> int:
-    """Number of CollectMetrics nodes named ``name`` in ``df``'s
-    OPTIMIZED logical plan -- the enforcement walk for _cow_rewrite's
-    observe-exactly-once contract. The optimized plan, not the analyzed
-    one, because that is what runs: a branch the optimizer prunes (a
-    union arm under ``filter(lit(False))``) loses its CollectMetrics,
-    and an observation that never fires cannot be read. Walks the JVM
-    tree directly (no plan-string grep, which maxPlanStringLength could
-    truncate)."""
-
-    def walk(jnode) -> int:
-        n = (
-            1
-            if (
-                jnode.nodeName() == "CollectMetrics"
-                and jnode.name() == name
-            )
-            else 0
-        )
-        ch = jnode.children()
-        for i in range(ch.size()):
-            n += walk(ch.apply(i))
-        return n
-
-    return walk(df._jdf.queryExecution().optimizedPlan())
-
-
-def _cow_rewrite(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    lo,
-    hi,
-    rewrite,
-    expected: int | str | None,
-    count_key: str,
-    always_commit: bool = False,
-    stats_cols_override: "list[str] | None" = None,
-    eq=None,
-    changed_cols: "set | frozenset" = frozenset(),
-) -> dict:
-    """Shared copy-on-write core for delete_where / apply_changes:
-    stats-prune the affected files, hard-link the rest into the next
-    snapshot, replace the affected files with ``rewrite(aff, pred)``,
-    rebuild manifests, publish under the commit protocol. See
-    delete_where for the full semantics discussion."""
-    import glob as _glob
-
-    if eq is not None and (lo is not None or hi is not None):
-        raise ValueError("eq is mutually exclusive with lo/hi")
-    if eq is None and lo is None and hi is None:
-        raise ValueError(
-            "unbounded predicate: give at least one bound (for a "
-            "whole-table rewrite, commit the transformed frame "
-            "explicitly)"
-        )
-    pinned = current_version(table_dir)
-    if pinned is None:
-        raise FileNotFoundError(f"{table_dir} has no committed version")
-    if expected == "auto":
-        expected = pinned
-    snap = os.path.join(table_dir, f"v={pinned}")
-    all_files = sorted(_glob.glob(os.path.join(snap, "*.parquet")))
-    if not all_files:
-        if _glob.glob(os.path.join(snap, "*", "")):
-            raise ValueError(
-                f"{snap} is a hive-partitioned snapshot: the COW "
-                "file-reuse core works on flat stats-manifested "
-                "layouts; rewrite the touched PARTITIONS instead "
-                "(read, transform, commit_version(partition_by=...))"
-            )
-        raise FileNotFoundError(f"{snap} holds no parquet files")
-    if eq is not None:
-        # both pruners are conservative keeps, so their INTERSECTION
-        # is safe: range stats exclude files whose [min, max] misses
-        # the value, the bloom (when present) excludes files whose
-        # bitmap proves absence -- the unsorted-high-cardinality-key
-        # erasure case where only the bloom bites
-        affected = sorted(
-            set(prune_files(snap, col, eq, eq))
-            & set(prune_files_bloom(snap, col, eq))
-        )
-    else:
-        affected = prune_files(snap, col, lo, hi)
-    survivors = sorted(set(all_files) - set(affected))
-    if not affected and not always_commit:
-        # no file's stats intersect the predicate: provably zero
-        # matches without running a single job
-        return {
-            "version": None,
-            "files_linked": 0,
-            "files_rewritten": 0,
-            count_key: 0,
-        }
-    c = F.col(col)
-    pred = F.lit(True)
-    if eq is not None:
-        pred = c == F.lit(eq)
-    if lo is not None:
-        pred = pred & (c >= F.lit(lo))
-    if hi is not None:
-        pred = pred & (c <= F.lit(hi))
-    if affected:
-        aff = read_parquet(spark, *affected)
-    else:
-        # no file intersects (e.g. a pure-insert merge band beyond
-        # every range): an empty, schema-correct frame keeps the
-        # rewrite callback uniform
-        aff = read_parquet(spark, all_files[0]).filter(F.lit(False))
-    # the match count rides the rewrite job as an observed metric
-    # (CollectMetrics above the affected-file scan) instead of a
-    # separate count pass -- the affected files are scanned ONCE per
-    # commit. CONTRACT (enforced below): the rewrite callback must
-    # route ``aff`` into its output EXACTLY ONCE -- zero routes (or a
-    # route the optimizer prunes) would leave the metric unfired and
-    # obs.get unreadable, two routes (a union / self-join of ``aff``)
-    # would double-count matches and silently corrupt rows_deleted /
-    # rows_updated and the zero-match rollback decision. The optimized
-    # plan of the callback's output is checked for exactly one
-    # CollectMetrics node carrying this commit's unique observation
-    # name BEFORE any side effect (no claim, no dir, no job), so a
-    # misbehaving callback raises instead of committing a wrong count.
-    import uuid
-
-    from pyspark.sql import Observation
-
-    obs_name = f"_cow_n_match_{uuid.uuid4().hex}"
-    obs = Observation(obs_name)
-    aff = aff.observe(obs, F.count(F.when(pred, True)).alias("n"))
-    out = rewrite(aff, pred)
-    n_obs = _collect_metrics_count(out, obs_name)
-    if n_obs != 1:
-        raise ValueError(
-            f"_cow_rewrite: the rewrite callback must route the "
-            f"observed affected-file frame into its output exactly "
-            f"once (found {n_obs} CollectMetrics node(s) for "
-            f"{obs_name!r} in the optimized plan); zero routes would "
-            f"leave the match-count observation unfired, multiple "
-            f"routes would double-count matches. Derive the output "
-            f"from ``aff`` by filter/withColumns/join -- a pure-insert "
-            f"callback must still reference it once, e.g. "
-            f"aff.join(inserts, key, 'left_anti').unionByName(inserts) "
-            f"(the apply_changes shape); a branch the optimizer prunes, "
-            f"such as aff.filter(lit(False)), does not count."
-        )
-    nxt, new_snap = _stage(table_dir, expected)
-    os.makedirs(new_snap)
-    for path in survivors:
-        os.link(
-            path, os.path.join(new_snap, os.path.basename(path))
-        )
-    out.write.mode("append").parquet(new_snap)
-    n_match = int(obs.get["n"] or 0)
-    if n_match == 0 and not always_commit:
-        # zero matches inside stats-intersecting files (a gap in the
-        # [min, max] band): the staged snapshot is discarded before the
-        # pointer ever moves -- readers never saw it (staged dirs are
-        # not readable until the pointer moves), and the claim marker
-        # is released so the version number is reusable. Net observable
-        # behavior matches the old pre-count: no commit. The rmtree is
-        # strict (no ignore_errors) and runs BEFORE the claim release:
-        # a half-deleted dir with the claim already gone would make the
-        # next claimant's os.makedirs raise FileExistsError.
-        import shutil
-
-        shutil.rmtree(new_snap)
-        _rm_quiet(os.path.join(table_dir, f"._claim_v{nxt}"))
-        return {
-            "version": None,
-            "files_linked": 0,
-            "files_rewritten": 0,
-            count_key: 0,
-        }
-    old_stats = read_stats_manifest(snap)
-    if stats_cols_override is not None:
-        write_stats_manifest(new_snap, list(stats_cols_override))
-    elif old_stats is not None:
-        stats_cols = sorted({c for per in old_stats.values() for c in per})
-        write_stats_manifest(new_snap, stats_cols)
-    bloom_path = os.path.join(snap, _BLOOM)
-    if os.path.exists(bloom_path):
-        with open(bloom_path) as fh:
-            payload = json.load(fh)
-        if payload.get("m") is None:
-            # per-file-sized manifest (the default): splice linked
-            # files' entries verbatim, rescan only the rewritten files
-            # (one job per column -- see _bloom_rebuild_spliced)
-            _bloom_rebuild_spliced(
-                spark,
-                new_snap,
-                payload,
-                {os.path.basename(p) for p in survivors},
-                changed_cols=changed_cols,
-            )
-        else:
-            # legacy fixed-m manifest: full rebuild, per-file sizing
-            bloom_cols = sorted(
-                {
-                    cname
-                    for per in payload.get("files", {}).values()
-                    for cname in per
-                }
-            )
-            if bloom_cols:
-                write_bloom_manifest(
-                    spark, new_snap, bloom_cols, k=payload.get("k", 5)
-                )
-    _publish(table_dir, nxt, expected, commit_meta(table_dir, pinned))
-    return {
-        "version": nxt,
-        "files_linked": len(survivors),
-        "files_rewritten": len(affected),
-        count_key: int(n_match),
-    }
-
-
 def delete_where(
     spark: SparkSession,
     table_dir: str,
@@ -1541,7 +1294,6 @@ def delete_where(
     lo=None,
     hi=None,
     expected: int | str | None = "auto",
-    eq=None,
 ) -> dict:
     """Copy-on-write DELETE with manifest-pruned file reuse: remove
     rows where ``col`` BETWEEN lo AND hi (inclusive; None = unbounded
@@ -1558,39 +1310,98 @@ def delete_where(
 
     Rows with NULL ``col`` never match a range and are always kept.
     Without a stats manifest every file is "affected" (conservative
-    full rewrite -- still correct). If NO row matches, no new version
-    is committed (report says so); when the stats manifest already
-    proves zero matches, not a single job runs, and when matches only
-    vanish inside a stats-intersecting band the staged snapshot is
-    discarded before the pointer moves (the match count rides
-    the rewrite job as an observed metric, so affected files are
-    scanned once, not twice). The new snapshot's stats manifest is
-    rebuilt from parquet footers (KB-priced metadata walk); a bloom
-    manifest, when present, is maintained by SPLICING linked files'
-    per-file entries verbatim and rescanning only the rewritten files
-    in one job (_bloom_rebuild_spliced; legacy fixed-m manifests fall
-    back to a full per-file-sized rebuild).
+    full rewrite -- still correct); a hive-partitioned snapshot is
+    refused. If NO row matches, no new version is committed (report
+    says so): when the stats manifest already proves zero matches, not
+    a single job runs, and when matches only vanish inside a
+    stats-intersecting band the staged snapshot is discarded before
+    the pointer moves. The match count rides the rewrite job as an
+    observed metric, so affected files are scanned once, in one job.
+    The new snapshot carries both manifests (_rewrite_snapshot: stats
+    rebuilt from footers, bloom spliced).
     ``expected`` follows optimize_table's optimistic-concurrency
     default ("auto" pins the version being read, so a racing ingest
     fails this commit closed instead of losing rows).
 
-    ``eq=value`` (mutually exclusive with lo/hi) deletes by EQUALITY
-    and prunes through BOTH manifests -- range stats plus, when
-    present, the bloom (prune_files_bloom): the GDPR user-id erasure
-    case, where an unsorted high-cardinality key spans every file's
-    [min, max] and only an absence-proving structure can skip.
-
     Returns {"version", "files_linked", "files_rewritten",
     "rows_deleted"} -- version is None when nothing matched."""
-    return _cow_rewrite(
-        spark,
-        table_dir,
-        col,
-        lo,
-        hi,
-        # predicate complement; NULL col is kept by coalesce(False)
-        lambda aff, pred: aff.filter(~F.coalesce(pred, F.lit(False))),
-        expected,
-        "rows_deleted",
-        eq=eq,
+    import glob
+    import shutil
+
+    from pyspark.sql import Observation
+
+    if lo is None and hi is None:
+        raise ValueError(
+            "unbounded predicate: give at least one bound (for a "
+            "whole-table rewrite, commit the transformed frame "
+            "explicitly)"
+        )
+    pinned = current_version(table_dir)
+    if pinned is None:
+        raise FileNotFoundError(f"{table_dir} has no committed version")
+    if expected == "auto":
+        expected = pinned
+    snap = os.path.join(table_dir, f"v={pinned}")
+    all_files = sorted(glob.glob(os.path.join(snap, "*.parquet")))
+    if not all_files:
+        if glob.glob(os.path.join(snap, "*", "")):
+            raise ValueError(
+                f"{snap} is a hive-partitioned snapshot: the COW "
+                "file-reuse core works on flat stats-manifested "
+                "layouts; rewrite the touched PARTITIONS instead "
+                "(read, transform, commit_version(partition_by=...))"
+            )
+        raise FileNotFoundError(f"{snap} holds no parquet files")
+    nothing = {
+        "version": None,
+        "files_linked": 0,
+        "files_rewritten": 0,
+        "rows_deleted": 0,
+    }
+    affected = prune_files(snap, col, lo, hi)
+    if not affected:
+        # no file's stats intersect the band: provably zero matches
+        # without running a single job
+        return nothing
+    survivors = sorted(set(all_files) - set(affected))
+    c = F.col(col)
+    pred = F.lit(True)
+    if lo is not None:
+        pred = pred & (c >= F.lit(lo))
+    if hi is not None:
+        pred = pred & (c <= F.lit(hi))
+    # the match count is observed above the affected-file scan, so it
+    # rides the rewrite job instead of a separate count pass
+    obs = Observation()
+    aff = read_parquet(spark, *affected).observe(
+        obs, F.count(F.when(pred, True)).alias("n")
     )
+    nxt, new_snap = _stage(table_dir, expected)
+    # predicate complement; NULL col is kept by coalesce(False)
+    _rewrite_snapshot(
+        spark,
+        snap,
+        new_snap,
+        survivors,
+        aff.filter(~F.coalesce(pred, F.lit(False))),
+        None,
+    )
+    n_match = int(obs.get["n"] or 0)
+    if n_match == 0:
+        # zero matches inside stats-intersecting files (a gap in the
+        # [min, max] band): the staged snapshot, manifests included, is
+        # discarded before the pointer ever moves, and the claim marker
+        # is released so the version number is reusable. The rmtree is
+        # strict (no ignore_errors) and runs BEFORE the claim release:
+        # a half-deleted dir with the claim already gone would make the
+        # next claimant's os.makedirs raise FileExistsError.
+        shutil.rmtree(new_snap)
+        _rm_quiet(os.path.join(table_dir, f"._claim_v{nxt}"))
+        return nothing
+    _publish(table_dir, nxt, expected, commit_meta(table_dir, pinned))
+    return {
+        "version": nxt,
+        "files_linked": len(survivors),
+        "files_rewritten": len(affected),
+        "rows_deleted": n_match,
+    }

@@ -214,7 +214,8 @@ def main() -> None:
     # incremental maintenance: daily MERGE commits leave small trailing
     # files; bin-pack ONLY those (right-sized files hard-link into the
     # new snapshot -- O(small files) I/O, not a full rewrite), stats
-    # manifest refreshed in the same commit so pruning keeps working
+    # manifest refreshed and bloom spliced in the same commit so both
+    # prunings keep working
     vc = versioned.compact_small_files(
         spark, table_dir, small_bytes=512 * 1024, stats_cols=["doc_id"]
     )

@@ -686,8 +686,6 @@ def test_triangle_broadcast_gate_paths_identical(spark, monkeypatch):
     is a join-strategy choice, never a semantics one."""
     import random
 
-    from pyspark.sql import functions as F
-
     rnd = random.Random(7)
     edges = spark.createDataFrame(
         [(rnd.randrange(60), rnd.randrange(60)) for _ in range(600)],

@@ -2850,7 +2850,6 @@ def test_krippendorff_alpha_pins_replica_and_parity(spark, oracle_sf_dir):
     is a pure function of the row SET; (4) full DuckDB replay on the
     same ragged per-customer order ratings fleiss_kappa's parity
     uses -- alpha sees ALL pairable items, not just the modal-n ones."""
-    import math
 
     def k(rows):
         df = spark.createDataFrame(rows, "item long, label string")

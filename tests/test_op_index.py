@@ -3,11 +3,14 @@ public functions may share a keyword set above the threshold without a
 recorded waiver (the grep-first rule's mechanical backstop against an
 existing operator re-added under a different name), every public
 function outside plans/ must be reached by a workload or kept with a
-reason, no two of them may share a bare name, and every optional
-parameter of one must be set by some call or kept with a reason."""
+reason, no two of them may share a bare name, every optional
+parameter of one must be set by some call or kept with a reason, and
+no function in tests/ or in the package outside plans/ imports a
+name it never uses."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 
 from tools import op_index
@@ -97,6 +100,45 @@ def test_public_names_are_unique():
     assert shared == {}, "public functions sharing a name: " + "; ".join(
         ", ".join(ms) for ms in shared.values()
     )
+
+
+def _unused_local_imports() -> list[str]:
+    """``path:line name`` of each import inside a function, in the
+    package outside plans/ (frozen with the registry) and in tests/,
+    binding a name that the function (nested functions included) never
+    reads."""
+    scopes = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
+    pkg = REPO / op_index.PKG
+    out = []
+    for path in [
+        p
+        for p in sorted(pkg.rglob("*.py"))
+        if p.relative_to(pkg).parts[0] not in op_index.EXCLUDE_SUBPACKAGES
+    ] + sorted((REPO / "tests").rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            used = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+            todo = list(fn.body)
+            while todo:
+                node = todo.pop()
+                if isinstance(node, (ast.Import, ast.ImportFrom)):
+                    out += [
+                        f"{path.relative_to(REPO)}:{node.lineno} {bound}"
+                        for a in node.names
+                        if (bound := a.asname or a.name.split(".")[0])
+                        not in used | {"*"}
+                    ]
+                elif not isinstance(node, scopes):
+                    todo += ast.iter_child_nodes(node)
+    return sorted(out)
+
+
+def test_no_unused_local_imports():
+    """An import inside a function must bind a name the function reads:
+    one it never reads is dead code that still costs an import and
+    misleads the reader about what the function depends on."""
+    assert _unused_local_imports() == []
 
 
 def test_guard_catches_near_duplicates():

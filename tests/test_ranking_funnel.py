@@ -192,8 +192,6 @@ def test_mmr_rerank_diversity_and_degenerate_lambda(spark):
     displaces the second twin (the whole point of MMR for training-set
     retrieval); (3) the per-group candidate bound raises; (4) zero-norm
     vectors are dropped."""
-    from pyspark.sql import functions as F
-
     # one query, 4 candidates: twins a/b (same direction, top scores),
     # c orthogonal (lower score), d zero-norm (must be dropped)
     rows = [

@@ -100,12 +100,12 @@ def test_apply_changes_merge_semantics(spark, tmp_path):
 
 
 def test_apply_changes_schema_evolution(spark, tmp_path):
-    """Additive schema evolution on MERGE (the Delta mergeSchema
-    behavior): default is fail-loud on ANY column drift (extra or
-    missing); merge_schema=True adds batch-new columns (existing rows
-    NULL there), keeps table columns the batch lacks (batch rows NULL
-    there), and never drops a column. Time travel still reads the old
-    schema's snapshot as written."""
+    """Schema drift on MERGE fails loudly: a batch with a column the
+    table lacks, or missing one it has, raises and commits nothing.
+    Additive evolution is an explicit commit of the widened table: time
+    travel keeps each snapshot's schema, and the change feed across the
+    boundary raises by default while align_additive=True NULL-fills the
+    one-sided column."""
     import pytest
 
     table = str(tmp_path / "evolving")
@@ -123,43 +123,30 @@ def test_apply_changes_schema_evolution(spark, tmp_path):
         [(2, "b2", 0.9, "upsert"), (3, "c", 0.5, "upsert")],
         "id LONG, val STRING, score DOUBLE, _op STRING",
     )
-    with pytest.raises(ValueError, match="merge_schema"):
+    with pytest.raises(ValueError, match="differ"):
         versioned.apply_changes(spark, table, widened, "id")
-    v2 = versioned.apply_changes(
-        spark, table, widened, "id", merge_schema=True
-    )
-    got = {
-        r.id: (r.val, r.score)
-        for r in versioned.read_version(spark, table).collect()
-    }
-    assert got == {1: ("a", None), 2: ("b2", 0.9), 3: ("c", 0.5)}
-
-    # a narrower later batch keeps the evolved column, NULL for its rows
-    narrow = spark.createDataFrame(
-        [(4, "d", "upsert")], "id LONG, val STRING, _op STRING"
-    )
-    with pytest.raises(ValueError, match="merge_schema"):
+    narrow = spark.createDataFrame([(4, "upsert")], "id LONG, _op STRING")
+    with pytest.raises(ValueError, match="differ"):
         versioned.apply_changes(spark, table, narrow, "id")
-    versioned.apply_changes(spark, table, narrow, "id", merge_schema=True)
-    got3 = {
-        r.id: (r.val, r.score)
-        for r in versioned.read_version(spark, table).collect()
-    }
-    assert got3 == {
-        1: ("a", None), 2: ("b2", 0.9), 3: ("c", 0.5), 4: ("d", None),
-    }
+    assert versioned.current_version(table) == 1
+    got = {r.id: r.val for r in versioned.read_version(spark, table).collect()}
+    assert got == {1: "a", 2: "b"}
 
-    # time travel: the pre-evolution snapshot keeps its original schema
+    rows = widened.drop("_op")
+    v2 = versioned.commit_version(
+        versioned.read_version(spark, table)
+        .withColumn("score", F.lit(None).cast("double"))
+        .join(rows.select("id"), "id", "left_anti")
+        .unionByName(rows),
+        table,
+    )
     assert versioned.read_version(spark, table, version=1).columns == [
         "id", "val",
     ]
     assert set(versioned.read_version(spark, table, version=v2).columns) == {
         "id", "val", "score",
     }
-
-    # change feed ACROSS the evolution boundary: raises by default,
-    # align_additive=True NULL-fills the one-sided column -- the row
-    # whose only difference is NULL score on both sides does not emit
+    # id=1 differs only by a NULL score on both sides, so it is absent
     with pytest.raises(ValueError, match="schema changed"):
         versioned.diff_versions(spark, table, 1, v2, "id")
     feed = {
@@ -170,9 +157,8 @@ def test_apply_changes_schema_evolution(spark, tmp_path):
     }
     assert {k: c.change_type for k, c in feed.items()} == {
         2: "update", 3: "insert",
-    }  # id=1 unchanged (val same, score NULL<->NULL) -> absent
+    }
     assert feed[2].before.score is None and feed[2].after.score == 0.9
-
 
 def test_diff_versions_change_feed(spark, tmp_path):
     """insert/update/delete between two snapshots, unchanged rows
@@ -721,6 +707,67 @@ def test_compact_small_files_links_large_rewrites_small(spark, tmp_path):
         )
 
 
+def test_compact_small_files_carries_manifests(spark, tmp_path):
+    """compact_small_files called without stats_cols publishes a
+    snapshot carrying both manifests: stats over the old manifest's
+    columns for every file, and the bloom spliced -- linked files keep
+    their entries verbatim, the compacted file gets its own -- so bloom
+    pruning on the new snapshot keeps only the admitting files."""
+    import glob
+    import json
+    import os
+
+    table = str(tmp_path / "bins_manifested")
+    frame = "id AS k", "CAST(id AS STRING) AS key"
+    big = spark.range(0, 20_000).selectExpr(*frame).repartitionByRange(2, "k")
+    tiny = spark.range(20_000, 20_030).selectExpr(*frame).repartitionByRange(3, "k")
+    versioned.commit_version(big.unionAll(tiny), table, stats_cols=["k"])
+    snap1 = f"{table}/v=1"
+    versioned.write_bloom_manifest(spark, snap1, ["key"])
+    parts1 = sorted(glob.glob(f"{snap1}/*.parquet"), key=os.path.getsize)
+    assert len(parts1) == 5
+    large = {os.path.basename(p) for p in parts1[-2:]}
+
+    v = versioned.compact_small_files(
+        spark, table, small_bytes=os.path.getsize(parts1[-2])
+    )
+    snap2 = f"{table}/v={v}"
+    names2 = {os.path.basename(p) for p in glob.glob(f"{snap2}/*.parquet")}
+    assert v == 2 and len(names2) == 3 and large < names2
+    (compacted,) = names2 - large
+
+    stats = versioned.read_stats_manifest(snap2)
+    assert stats is not None and set(stats) == names2
+    assert all("k" in per for per in stats.values())
+    assert versioned.prune_files(snap2, "k", 20_005, 20_010) == [
+        os.path.join(snap2, compacted)
+    ]
+
+    with open(f"{snap1}/_bloom.json") as fh:
+        old = json.load(fh)
+    with open(f"{snap2}/_bloom.json") as fh:
+        new = json.load(fh)
+    assert set(new["files"]) == names2
+    for fname in large:
+        assert new["files"][fname] == old["files"][fname]
+    assert new["files"][compacted]["key"]["d"] == 30
+    for value, holder in (("20007", compacted), ("123", None)):
+        truth = {
+            os.path.basename(r._f)
+            for r in versioned.read_version(spark, table)
+            .select(F.input_file_name().alias("_f"), "key")
+            .filter(F.col("key") == value)
+            .collect()
+        }
+        assert len(truth) == 1 and (holder is None or truth == {holder})
+        kept = versioned.prune_files_bloom(snap2, "key", value)
+        assert {os.path.basename(p) for p in kept} == truth
+        assert (
+            versioned.read_version(spark, table, prune_eq=("key", value)).count()
+            == 1
+        )
+
+
 def test_optimize_table_coalesce_path(spark, tmp_path):
     """optimize_table without cluster_by: pure compaction (coalesce to
     the target file count), content identical, no stats manifest
@@ -763,7 +810,7 @@ def test_maintenance_keeps_commit_meta(spark, tmp_path):
     assert versioned.commit_meta(table) == meta
     assert versioned.compact_small_files(spark, table, small_bytes=1 << 30) == 3
     assert versioned.commit_meta(table) == meta
-    assert versioned.delete_where(spark, table, "k", eq=3)["version"] == 4
+    assert versioned.delete_where(spark, table, "k", 3, 3)["version"] == 4
     assert versioned.commit_meta(table) == meta
 
 
@@ -849,8 +896,6 @@ def test_bloom_manifest_equality_pruning(spark, tmp_path):
 
     import pytest
 
-    with pytest.raises(ValueError, match="multiple of 64"):
-        versioned.write_bloom_manifest(spark, snap, ["k"], m=100)
     with pytest.raises(ValueError, match="k must"):
         versioned.write_bloom_manifest(spark, snap, ["k"], k=0)
     with pytest.raises(ValueError, match="non-NULL"):
@@ -858,13 +903,9 @@ def test_bloom_manifest_equality_pruning(spark, tmp_path):
 
 
 def test_bloom_sizing_holds_at_probe_scale(spark, tmp_path):
-    """The r7 failure mode, pinned at its own scale: ~5,000 distinct
-    keys per file (the sf0.1 fragmented-orders shape) saturates a fixed
-    4 Kib bitmap (fill ~0.998 -> FP ~99%, bloom keeps everything and
-    warns), while per-file auto-sizing keeps fill ~0.40 and prunes to
-    the true file."""
-    import warnings
-
+    """The r7 failure mode's scale, pinned: at ~5,000 distinct keys per
+    file (the sf0.1 fragmented-orders shape) per-file auto-sizing keeps
+    fill ~0.40 and prunes to the true file."""
     import os as _os
 
     table = str(tmp_path / "bloomscale")
@@ -873,18 +914,7 @@ def test_bloom_sizing_holds_at_probe_scale(spark, tmp_path):
     v = versioned.commit_version(df, table, stats_cols=["k"])
     snap = _os.path.join(table, f"v={v}")
 
-    # fixed r7 default at this scale: saturation warning + no pruning
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        versioned.write_bloom_manifest(spark, snap, ["k"], m=4096)
-    assert any("saturated" in str(w.message) for w in caught)
-    assert len(versioned.prune_files_bloom(snap, "k", "k001234")) == 2
-
-    # auto-sized (default): healthy fill, prunes to the true file
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        payload = versioned.write_bloom_manifest(spark, snap, ["k"])
-    assert not any("saturated" in str(w.message) for w in caught)
+    payload = versioned.write_bloom_manifest(spark, snap, ["k"])
     for cols_ in payload["files"].values():
         entry = cols_["k"]
         fill = sum(
@@ -1512,70 +1542,6 @@ def test_cow_probe_pair_layout_accounting(spark, sf_dir):
     assert clustered.files_rewritten < fragmented.files_rewritten
 
 
-def test_apply_changes_pruned_equals_full_and_links(spark, tmp_path):
-    """prune=True MERGE: identical table content to the unpruned
-    apply_changes on a twin table, with the majority of files
-    hard-linked for a banded batch (inode-verified); a pure-insert
-    batch beyond every key range links everything and still commits;
-    merge_schema combination is rejected."""
-    import glob
-    import os
-
-    import pytest
-
-    def build(where):
-        t = str(tmp_path / where)
-        df = spark.range(0, 6000).selectExpr(
-            "id AS k", "id % 13 AS p"
-        )
-        versioned.commit_version(
-            df.repartitionByRange(8, "k").sortWithinPartitions("k"),
-            t,
-            stats_cols=["k"],
-        )
-        return t
-
-    a, b = build("pruned"), build("full")
-    batch = spark.range(1000, 1100).selectExpr(
-        "id AS k", "id AS p", "'upsert' AS _op"
-    ).union(
-        spark.range(1100, 1150).selectExpr(
-            "id AS k", "CAST(NULL AS BIGINT) AS p", "'delete' AS _op"
-        )
-    )
-    old_files = glob.glob(f"{a}/v=1/*.parquet")
-    va = versioned.apply_changes(spark, a, batch, "k", prune=True)
-    vb = versioned.apply_changes(spark, b, batch, "k")
-    got_a = sorted(
-        map(tuple, versioned.read_version(spark, a).collect())
-    )
-    got_b = sorted(
-        map(tuple, versioned.read_version(spark, b).collect())
-    )
-    assert got_a == got_b
-    assert len(got_a) == 6000 - 50
-    # banded batch -> most files linked
-    old_inodes = {os.stat(p).st_ino for p in old_files}
-    new_files = glob.glob(f"{a}/v={va}/*.parquet")
-    linked = [
-        p for p in new_files if os.stat(p).st_ino in old_inodes
-    ]
-    assert len(linked) >= len(old_files) - 2 > 0
-    # pure inserts beyond every range: all files link, rows appear
-    ins = spark.range(50_000, 50_010).selectExpr(
-        "id AS k", "id AS p", "'upsert' AS _op"
-    )
-    v2 = versioned.apply_changes(spark, a, ins, "k", prune=True)
-    assert v2 == va + 1
-    now = versioned.read_version(spark, a)
-    assert now.filter(F.col("k") >= 50_000).count() == 10
-    assert now.count() == len(got_a) + 10
-    with pytest.raises(ValueError, match="merge_schema"):
-        versioned.apply_changes(
-            spark, a, ins, "k", prune=True, merge_schema=True
-        )
-
-
 def test_delete_where_partitioned_rejected_and_vacuum_safe(spark, tmp_path):
     """(1) COW DML on a hive-partitioned snapshot fails with a clear
     redirect (flat layouts only); (2) vacuuming the pre-delete version
@@ -1605,85 +1571,6 @@ def test_delete_where_partitioned_rejected_and_vacuum_safe(spark, tmp_path):
     assert now.agg(F.sum("k")).first()[0] == sum(
         k for k in range(4000) if not 500 <= k <= 599
     )
-
-
-def test_delete_eq_prunes_through_bloom(spark, tmp_path):
-    """Equality erasure (the GDPR shape): on a FRAGMENTED layout where
-    every file's [min, max] spans the key range, range stats keep all
-    files but the bloom manifest proves absence -- the delete rewrites
-    only the bloom-admitting file(s), links the rest, and the content
-    equals the plain filter."""
-    import glob
-
-    table = str(tmp_path / "eq_table")
-    # interleaved layout: key i goes to file i % 6 -> every file spans
-    # nearly the full range
-    df = spark.range(0, 6000).selectExpr(
-        "id AS k", "CAST(id AS STRING) AS key", "id % 9 AS p"
-    )
-    versioned.commit_version(
-        df.repartition(6, "p"), table, stats_cols=["k"]
-    )
-    snap = f"{table}/v=1"
-    versioned.write_bloom_manifest(spark, snap, ["key"])
-    n_files = len(glob.glob(f"{snap}/*.parquet"))
-    # sanity: range stats alone keep (nearly) all files on this
-    # interleaved layout -- the key spans every file's [min, max]
-    range_keep = len(versioned.prune_files(snap, "k", 3333, 3333))
-    assert range_keep >= n_files - 1
-
-    rep = versioned.delete_where(spark, table, "key", eq="3333")
-    assert rep["rows_deleted"] == 1
-    assert rep["files_rewritten"] < range_keep  # the bloom bit
-    assert rep["files_linked"] + rep["files_rewritten"] == n_files
-    now = versioned.read_version(spark, table)
-    assert now.count() == 5999
-    assert now.filter(F.col("key") == "3333").count() == 0
-    # eq and range bounds are mutually exclusive; eq + lo raises
-    import pytest
-
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        versioned.delete_where(spark, table, "key", lo="1", eq="2")
-
-
-def test_cow_rewrite_rejects_misrouted_observation(spark, tmp_path):
-    """Observe-contract enforcement: a rewrite callback that drops
-    the observed affected-file frame (the match count could never
-    fire), routes it through a branch the optimizer prunes (same, but
-    the analyzed plan still shows the node), or routes it twice (the
-    count would double) raises BEFORE any side effect: no new version
-    dir, no claim marker, pointer unchanged."""
-    import os
-
-    table = str(tmp_path / "obs_contract")
-    df = spark.range(0, 1000).selectExpr("id AS k", "id % 5 AS p")
-    v1 = versioned.commit_version(df.coalesce(2), table, stats_cols=["k"])
-
-    fresh = df.selectExpr("k", "p")  # not derived from aff
-
-    import pytest
-
-    for bad in (
-        lambda aff, pred: fresh.filter(F.lit(True)),  # zero routes
-        lambda aff, pred: aff.unionByName(aff),  # double route
-        # pruned route: PruneFilters drops the branch's CollectMetrics
-        lambda aff, pred: aff.filter(F.lit(False)).unionByName(fresh),
-    ):
-        with pytest.raises(ValueError, match="exactly once"):
-            versioned._cow_rewrite(
-                spark, table, "k", 10, 20, bad, None, "rows_deleted"
-            )
-        assert versioned.current_version(table) == v1
-        assert versioned.versions(table) == [v1]
-        claims = [
-            n for n in os.listdir(table) if n.startswith("._claim")
-        ]
-        # no claim for a staged v2: the rejection fired pre-side-effect
-        assert f"._claim_v{v1 + 1}" not in claims
-    # the well-behaved path still works after the rejections
-    rep = versioned.delete_where(spark, table, "k", 10, 20)
-    assert rep["rows_deleted"] == 11
-    assert versioned.read_version(spark, table).count() == 989
 
 
 def _rewritten_files(old_snap: str, new_snap: str) -> list[str]:
@@ -1761,56 +1648,6 @@ def test_bloom_splice_caps_low_ndv_columns(spark, tmp_path):
     )
 
 
-def test_bloom_splice_does_not_cap_updated_columns(spark, tmp_path):
-    """A pruned apply_changes MERGE may give rewritten files brand-new
-    column values, so the splice sizes them from footer row counts (no
-    cap) -- an upsert batch that INCREASES a column's distinct count
-    must not saturate its bitmap."""
-    import json
-    import os
-
-    table = str(tmp_path / "upd_bloom")
-    df = spark.range(0, 4000).selectExpr(
-        "id AS k",
-        "CONCAT('s', CAST(id % 5 AS STRING)) AS status",
-    )
-    v1 = versioned.commit_version(
-        df.repartitionByRange(6, "k").sortWithinPartitions("k"),
-        table,
-        stats_cols=["k"],
-    )
-    versioned.write_bloom_manifest(spark, f"{table}/v={v1}", ["status"])
-    # upsert a per-row-unique status inside the band: the new file's
-    # distinct count far exceeds the old 5-value bound
-    changes = spark.range(100, 600).selectExpr(
-        "id AS k",
-        "CONCAT('u', CAST(id AS STRING)) AS status",
-        "'upsert' AS _op",
-    )
-    version = versioned.apply_changes(spark, table, changes, "k", prune=True)
-    new_snap = f"{table}/v={version}"
-    with open(os.path.join(new_snap, "_bloom.json")) as fh:
-        new = json.load(fh)
-    rewritten = _rewritten_files(f"{table}/v={v1}", new_snap)
-    assert rewritten
-    import pyarrow.parquet as pq
-
-    for fname in rewritten:
-        st = new["files"][fname]["status"]
-        # sized from footer rows (uncapped), not the old 5-value bound
-        rows = pq.ParquetFile(os.path.join(new_snap, fname)).metadata.num_rows
-        assert st["d"] == rows
-    # room for the 500 new uniques across the rewritten files
-    assert sum(new["files"][f]["status"]["d"] for f in rewritten) >= 500
-    # the new unique values are findable through the bloom
-    assert (
-        versioned.read_version(
-            spark, table, prune_eq=("status", "u150")
-        ).count()
-        == 1
-    )
-
-
 def test_bloom_splice_legacy_manifest_without_bounds_is_uncapped(
     spark, tmp_path
 ):
@@ -1858,6 +1695,49 @@ def test_bloom_splice_legacy_manifest_without_bounds_is_uncapped(
         .count()
         == 1
     )
+
+
+def test_cow_delete_rebuilds_legacy_fixed_m_bloom(spark, tmp_path):
+    """A legacy bloom manifest (flat word maps under one payload-wide
+    ``m``) still prunes, and a COW delete replaces it with a full
+    per-file-sized rebuild that prunes the same way."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "legacy_flat_bloom")
+    df = spark.range(0, 3000).selectExpr("id AS k", "CAST(id AS STRING) AS key")
+    v1 = versioned.commit_version(
+        df.repartitionByRange(4, "k").sortWithinPartitions("k"),
+        table,
+        stats_cols=["k"],
+    )
+    snap = f"{table}/v={v1}"
+    files = {}
+    for path in glob.glob(f"{snap}/*.parquet"):
+        words: dict[str, int] = {}
+        for value in pq.read_table(path, columns=["key"]).column(0).to_pylist():
+            for i in range(5):
+                pos = versioned._bloom_pos(i, value, 16384)
+                w = str(pos // 64)
+                words[w] = words.get(w, 0) | 1 << pos % 64
+        files[os.path.basename(path)] = {"key": words}
+    with open(f"{snap}/_bloom.json", "w") as fh:
+        json.dump({"m": 16384, "k": 5, "files": files}, fh)
+    assert len(versioned.prune_files_bloom(snap, "key", "2500")) == 1
+
+    report = versioned.delete_where(spark, table, "k", 100, 199)
+    new_snap = f"{table}/v={report['version']}"
+    with open(f"{new_snap}/_bloom.json") as fh:
+        new = json.load(fh)
+    assert new["m"] is None
+    assert set(new["files"]) == {
+        os.path.basename(p) for p in glob.glob(f"{new_snap}/*.parquet")
+    }
+    assert len(versioned.prune_files_bloom(new_snap, "key", "2500")) == 1
+    assert versioned.read_version(spark, table, prune_eq=("key", "150")).count() == 0
 
 
 def _calls_outside(subdir: str, match, allowed) -> list[str]:
